@@ -1,10 +1,14 @@
 package graft
 import java.nio.file.{Files, Paths}
 
-/** Dump the formatted physical plans of the headline queries to a markdown
-  * file — the plan-shape evidence (pushdown, broadcasts, codegen spans) a
-  * reviewer would otherwise collect by hand with `.explain("formatted")`.
-  * Usage: `runMain graft.PlanDump [sfDir] [outFile]`. */
+/** Dump formatted physical plans — the plan-shape evidence (pushdown,
+  * broadcasts, codegen spans) that would otherwise be collected by hand
+  * with `.explain("formatted")`. Two output modes over one loop:
+  *  - `runMain graft.PlanDump [sfDir] [outFile]`: every headline query into
+  *    one markdown file (default `PLANS.md`);
+  *  - `runMain graft.PlanDump <sfDir> <outDir> <suffix> <q1,q2,...>`: one
+  *    `<outDir>/<query>_<suffix>.txt` per named query — the before/after
+  *    evidence trail of an optimization (`plans/r20/`). */
 object PlanDump {
   private val Headline = Seq(
     "s2_window_scan", "a5_window_reload", "a4_upsert", "q3_shipping_priority",
@@ -36,23 +40,42 @@ object PlanDump {
     "sim_cluster_keywords", "events_retention_cohorts", "o19_jdbc_roundtrip",
     "graph_triangles", "pipeline_hard_negatives")
 
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit = if (args.length == 4) perQuery(args) else headlines(args)
+
+  private def headlines(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val out = if (args.length > 1) args(1) else "PLANS.md"
-    val spark = io.Sessions.builder("local[8]", 8).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
     val sb = new StringBuilder(
       s"# Physical plans — generated by `runMain graft.PlanDump $sfDir`\n\n" +
         "Formatted `.explain` of the headline queries; regenerate after plan-affecting changes.\n")
-    Headline.foreach { n =>
-      val df = SparkEntry.queries(n)(spark, sfDir)
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-      sb.append(s"\n## $n\n\n```\n$plan```\n")
-      graft.ext.Dedup.unpersistAll()
-    }
+    forEachPlan(sfDir, Headline)((n, plan) => sb.append(s"\n## $n\n\n```\n$plan```\n"))
     Files.writeString(Paths.get(out), sb.toString)
     println(s"[plandump] wrote $out")
+  }
+
+  private def perQuery(args: Array[String]): Unit = {
+    val Array(sfDir, outDir, suffix, namesCsv) = args
+    val names = namesCsv.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    Files.createDirectories(Paths.get(outDir))
+    forEachPlan(sfDir, names) { (n, plan) =>
+      Files.writeString(Paths.get(outDir, s"${n}_$suffix.txt"), plan)
+      System.err.println(s"[plandump] wrote $outDir/${n}_$suffix.txt")
+    }
+  }
+
+  /** Plan each named query on `sfDir` in one session and hand its formatted
+    * physical plan to `emit`. */
+  private def forEachPlan(sfDir: String, names: Seq[String])(emit: (String, String) => Unit): Unit = {
+    val spark = io.Sessions.builder("local[8]", 8).getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    names.foreach { n =>
+      val df = SparkEntry.queries(n)(spark, sfDir)
+      emit(n, df.queryExecution.explainString(
+        org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
+      graft.ext.Dedup.unpersistAll()
+    }
     spark.stop()
   }
 }

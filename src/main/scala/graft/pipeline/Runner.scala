@@ -13,6 +13,7 @@ import graft.proc.SqlStepRegistry
 import graft.store.TableStore
 import graft.time.Windows
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.CommandResult
 
 /** Outcome of one table's processing (per-table error isolation, O5). */
 final case class TableResult(table: String, process: String, rows: Option[Long], error: Option[Throwable]) {
@@ -103,14 +104,21 @@ final class Runner(
   }
 
   /** Phase-1 SQL step: window may be overridden at dispatch time by the
-    * midnight re-check (`BulkCopyManager.cs:116-126`). Failures rethrow. */
+    * midnight re-check (`BulkCopyManager.cs:116-126`). The step runs to
+    * completion here: `spark.sql` executes a command (INSERT, DDL) eagerly,
+    * and a query step is drained through the `noop` sink, so a SELECT-only
+    * step executes too instead of only being analysed. Failures rethrow. */
   private def runStep(spec: TableSpec, window: (LocalDate, LocalDate)): TableResult = {
     val (from, to) = Windows.sprocOverride(window, clock())
     val tlog = runLogs.map(_.forTable(spec.tableName))
     tlog.foreach(_.info(s"Sproc started window=$from..$to"))
     val rec = ledger.start(spec.tableName, "Sproc",
       Some((from.toString, to.toString)))
-    Try(steps.run(spark, spec.tableName, from, to)) match {
+    Try {
+      val df = steps.run(spark, spec.tableName, from, to)
+      if (!df.queryExecution.commandExecuted.isInstanceOf[CommandResult])
+        df.write.format("noop").mode("overwrite").save()
+    } match {
       case Success(_) =>
         ledger.finish(rec, "Completed", None)
         tlog.foreach(_.info("Sproc completed"))

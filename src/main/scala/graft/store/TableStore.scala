@@ -2,6 +2,8 @@ package graft.store
 
 import java.io.IOException
 
+import scala.util.control.NonFatal
+
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -144,9 +146,12 @@ final class TableStore(spark: SparkSession, root: String,
   // ---------------------------------------------------------------------
 
   private val MarkerPrefix = "_commit."
-  private val ManifestHeader = "graft-manifest v1"
   /** Manifest entry name meaning "the whole table lives in this gen dir". */
   private val WholeTable = "*"
+
+  /** A commit marker's content: (entry name, generation dir) pairs, where the
+    * name is [[WholeTable]] or a `col=value` partition. */
+  private type Manifest = Seq[(String, String)]
 
   private def markerIndex(name: String): Option[Long] =
     if (name.startsWith(MarkerPrefix)) name.stripPrefix(MarkerPrefix).toLongOption else None
@@ -160,30 +165,61 @@ final class TableStore(spark: SparkSession, root: String,
       .sortBy(-_._1)
   }
 
+  /** Write one sidecar. Every sidecar this store keeps — commit manifests,
+    * run snapshots, `_stats`, commit meta, `_bucketspec` and `_idem.*`
+    * markers — shares this plain-text layout: a `graft-<kind> v1` header,
+    * then one tab-separated row per line, no trailing newline. `counted`
+    * kinds append their row count to the header, so a torn write reads as
+    * torn instead of as a shorter file. `exclusive` creates through
+    * [[createAtomically]] (the commit CAS) and returns false when `p`
+    * already exists; a failed content write then removes the half-written
+    * file before rethrowing. */
+  private def writeSidecar(p: Path, kind: String, rows: Seq[Seq[String]],
+      counted: Boolean = false, exclusive: Boolean = false): Boolean = {
+    val header = s"graft-$kind v1" + (if (counted) s" ${rows.size}" else "")
+    val bytes = (header +: rows.map(_.mkString("\t"))).mkString("\n").getBytes("UTF-8")
+    val out =
+      if (!exclusive) fs.create(p, true)
+      else try createAtomically(p) catch { case _: IOException => return false }
+    try { try out.write(bytes) finally out.close() } catch {
+      case e: IOException => if (exclusive) fs.delete(p, false); throw e
+    }
+    true
+  }
+
+  /** Read a [[writeSidecar]] file: its rows, each split into `width` fields
+    * (lines of another arity are dropped). `None` when the file is missing
+    * or unreadable, its header names another kind, or a counted kind's
+    * declared count disagrees with its rows (a torn write). */
+  private def readSidecar(p: Path, kind: String, width: Int = 2,
+      counted: Boolean = false): Option[Seq[Array[String]]] = {
+    val text = try {
+      val in = fs.open(p)
+      try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    } catch { case _: IOException => return None }
+    val lines = text.split("\n").toSeq.filter(_.nonEmpty)
+    val header = s"graft-$kind v1"
+    lines.headOption.filter(_.startsWith(header)).flatMap { h =>
+      val rows = lines.tail.map(_.split("\t", width)).filter(_.length == width)
+      if (!counted || h.stripPrefix(header).trim.toIntOption.contains(rows.size)) Some(rows)
+      else None
+    }
+  }
+
   /** Parse a marker's manifest. `None` for a partially-written marker (the
     * header carries the entry count, so a truncated read is detectable —
     * readers then fall back to the previous generation instead of silently
     * seeing a subset of partitions). */
-  private def parseManifest(p: Path): Option[Seq[(String, String)]] = {
-    val text = try {
-      val in = fs.open(p)
-      try {
-        val buf = new java.io.ByteArrayOutputStream()
-        val chunk = new Array[Byte](8192)
-        Iterator.continually(in.read(chunk)).takeWhile(_ >= 0).foreach(n => buf.write(chunk, 0, n))
-        new String(buf.toByteArray, "UTF-8")
-      } finally in.close()
-    } catch { case _: IOException => return None }
-    val lines = text.split("\n", -1).toSeq.filter(_.nonEmpty)
-    lines.headOption match {
-      case Some(h) if h.startsWith(ManifestHeader) =>
-        val declared = h.stripPrefix(ManifestHeader).trim.toIntOption
-        val entries = lines.tail.flatMap { l =>
-          l.split("\t", 2) match { case Array(n, d) => Some(n -> d); case _ => None }
-        }
-        if (declared.contains(entries.size)) Some(entries) else None
-      case _ => None
-    }
+  private def parseManifest(p: Path): Option[Manifest] =
+    readSidecar(p, "manifest", counted = true).map(_.map(r => r(0) -> r(1)))
+
+  /** The directories a manifest's entries name that exist: a whole
+    * generation dir, or one partition dir inside it. */
+  private def entryDirs(table: String, entries: Manifest): Seq[Path] = {
+    val dir = new Path(tablePath(table))
+    entries.map { case (name, g) =>
+      if (name == WholeTable) new Path(dir, g) else new Path(dir, s"$g/$name")
+    }.distinct.filter(fs.exists(_))
   }
 
   /** Every distinct generation dir a manifest references exists. A complete
@@ -195,16 +231,21 @@ final class TableStore(spark: SparkSession, root: String,
     * entry — a partition-scoped manifest has one entry per day but only a
     * handful of generation dirs, so this stays O(generations) metadata
     * calls at 100 TB. */
-  private def manifestDirsExist(table: String, entries: Seq[(String, String)]): Boolean = {
+  private def manifestDirsExist(table: String, entries: Manifest): Boolean = {
     val dir = new Path(tablePath(table))
     entries.map(_._2).distinct.forall(g => fs.exists(new Path(dir, g)))
   }
 
   /** Highest fully-committed manifest whose generation dirs all exist. */
-  private def currentManifest(table: String): Option[(Long, Seq[(String, String)])] =
+  private def currentManifest(table: String): Option[(Long, Manifest)] =
     listMarkers(table).iterator
       .flatMap { case (n, p) => parseManifest(p).map(n -> _) }
       .find { case (_, entries) => manifestDirsExist(table, entries) }
+
+  /** [[currentManifest]]'s entries, or raise: `op` found no state to read. */
+  private def committedEntries(table: String, op: String): Manifest =
+    currentManifest(table).map(_._2).getOrElse(throw new IOException(
+      s"$op('$table'): no fully-committed generation marker found"))
 
   /** TRUE atomic create-if-absent — the CAS every lock/marker arbiter in
     * this store leans on. On HDFS-like filesystems `create(f, overwrite =
@@ -235,10 +276,12 @@ final class TableStore(spark: SparkSession, root: String,
   /** Publish `entries` as the table's next generation: atomic
     * create-if-absent of `_commit.<n>`. The marker create is the commit
     * arbiter — even if the writer lock was wrongly broken, at most one
-    * racing writer's marker lands and the loser fails loudly here. */
-  private def commitPointer(table: String, entries: Seq[(String, String)], op: String): Unit = {
+    * racing writer's marker lands and the loser fails loudly here. Returns
+    * normally iff the marker is published: every earlier failure leaves
+    * nothing published, and the audit and retention steps after it never
+    * throw. Reached only through [[publishPointer]]. */
+  private def commitPointer(table: String, entries: Manifest, op: String): Unit = {
     val dir = new Path(tablePath(table))
-    if (!fs.exists(dir)) fs.mkdirs(dir)
     // a broken-lock recover() may have deleted an in-flight writer's gen dir;
     // refuse to publish a manifest naming a missing directory
     entries.map(_._2).distinct.foreach { g =>
@@ -251,16 +294,11 @@ final class TableStore(spark: SparkSession, root: String,
     // concurrent writer mid-marker-write is never overwritten
     val next = (0L +: listMarkers(table).map(_._1)).max + 1
     val marker = new Path(dir, s"$MarkerPrefix$next")
-    val content = (s"$ManifestHeader ${entries.size}" +:
-      entries.map { case (n, g) => s"$n\t$g" }).mkString("\n")
-    val out = try createAtomically(marker) catch {
-      case e: IOException => throw new ConcurrentWriteException(
+    if (!writeSidecar(marker, "manifest", entries.map { case (n, g) => Seq(n, g) },
+        counted = true, exclusive = true))
+      throw new ConcurrentWriteException(
         s"$op('$table'): commit marker ${marker.getName} already exists — lost the publish " +
-          "race to another writer; this writer's generation was not published", e)
-    }
-    try { out.write(content.getBytes("UTF-8")); out.close() } catch {
-      case e: IOException => fs.delete(marker, false); throw e
-    }
+          "race to another writer; this writer's generation was not published")
     // the pre-create existence check above is check-then-act: a competing
     // writer that TTL-broke our lock can recover() away a gen dir between
     // the check and the marker create, leaving a well-formed marker naming
@@ -287,21 +325,17 @@ final class TableStore(spark: SparkSession, root: String,
     // generation's history row to the recomputation path.
     try {
       val metrics = try {
-        val files = entries.map { case (name, g) =>
-          if (name == WholeTable) new Path(dir, g) else new Path(dir, s"$g/$name")
-        }.distinct.filter(fs.exists(_)).flatMap(listDataFiles)
+        val files = entryDirs(table, entries).flatMap(listDataFiles)
         val rows = inParallel(files.map(_.getPath))(footerRowCount).sum
-        s"\nrows\t$rows\nfiles\t${files.size}\nbytes\t${files.map(_.getLen).sum}"
-      } catch { case scala.util.control.NonFatal(e) =>
-        log.warn(s"commit metrics for $table/$next failed — sidecar records op only: $e"); ""
+        Seq(Seq("rows", s"$rows"), Seq("files", s"${files.size}"),
+          Seq("bytes", s"${files.map(_.getLen).sum}"))
+      } catch { case NonFatal(e) =>
+        log.warn(s"commit metrics for $table/$next failed — sidecar records op only: $e"); Nil
       }
-      val meta = fs.create(new Path(dir, s"$MarkerPrefix$next.meta"), true)
-      try meta.write(s"$MetaHeader\nop\t$op$metrics".getBytes("UTF-8")) finally meta.close()
-    } catch { case e: IOException => log.warn(s"commit meta for $table/$next failed: $e") }
+      writeSidecar(new Path(dir, s"$MarkerPrefix$next.meta"), "commitmeta", Seq("op", op) +: metrics)
+    } catch { case NonFatal(e) => log.warn(s"commit meta for $table/$next failed: $e") }
     cleanupGenerations(table)
   }
-
-  private val MetaHeader = "graft-commitmeta v1"
 
   /** All data files under `p`, recursively (one level of parallel fan-out
     * over subdirs — the partitioned-generation shape). */
@@ -353,19 +387,9 @@ final class TableStore(spark: SparkSession, root: String,
   /** The audit sidecar recorded at commit time for marker `n`, as a key →
     * value map (`op`, and on metrics-bearing commits `rows`/`files`/`bytes`).
     * Empty when the sidecar is missing or unreadable. */
-  private def markerMeta(table: String, n: Long): Map[String, String] = {
-    val p = new Path(tablePath(table), s"$MarkerPrefix$n.meta")
-    if (!fs.exists(p)) return Map.empty
-    try {
-      val in = fs.open(p)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-      val lines = text.split("\n", -1).toSeq
-      if (!lines.headOption.exists(_.startsWith(MetaHeader))) Map.empty
-      else lines.tail.flatMap(_.split("\t", 2) match {
-        case Array(k, v) => Some(k -> v); case _ => None
-      }).toMap
-    } catch { case _: IOException => Map.empty }
-  }
+  private def markerMeta(table: String, n: Long): Map[String, String] =
+    readSidecar(new Path(tablePath(table), s"$MarkerPrefix$n.meta"), "commitmeta")
+      .fold(Map.empty[String, String])(_.map(r => r(0) -> r(1)).toMap)
 
   /** Best-effort retention: keep the `keepGenerations` highest-indexed
     * COMMITTED markers (≥ current + previous, so a reader that resolved just
@@ -386,7 +410,7 @@ final class TableStore(spark: SparkSession, root: String,
       val (dropMarkers, dropDirs) = vacuumPlan(table, keepGenerations, orphanGraceMs)
       dropMarkers.foreach(deleteMarker)
       dropDirs.foreach(fs.delete(_, true))
-    } catch { case e: IOException => log.warn(s"cleanupGenerations('$table') failed: $e") }
+    } catch { case NonFatal(e) => log.warn(s"cleanupGenerations('$table') failed: $e") }
 
   /** What retention at `keep` would delete: (markers to drop, gen dirs to
     * drop). Shared by publish-time [[cleanupGenerations]] and operator
@@ -437,11 +461,7 @@ final class TableStore(spark: SparkSession, root: String,
     if (listMarkers(table).isEmpty) {
       val reader = if (mergeSchemas) spark.read.option("mergeSchema", "true") else spark.read
       reader.parquet(tablePath(table))
-    } else currentManifest(table) match {
-      case None =>
-        throw new IOException(s"read('$table'): no fully-committed generation marker found")
-      case Some((_, entries)) => readEntries(table, entries, mergeSchemas)
-    }
+    } else readEntries(table, committedEntries(table, "read"), mergeSchemas)
 
   /** Read exactly the directories one manifest names. An EMPTY manifest is
     * a legitimate committed state (a windowed delete can cover every
@@ -449,7 +469,7 @@ final class TableStore(spark: SparkSession, root: String,
     * the most recent prior generation, instead of exploding inside
     * `spark.read.parquet()` with a zero-path AnalysisException far from
     * the cause. */
-  private def readEntries(table: String, entries: Seq[(String, String)],
+  private def readEntries(table: String, entries: Manifest,
       mergeSchemas: Boolean): DataFrame = {
     import org.apache.spark.sql.functions.col
     if (entries.isEmpty) {
@@ -504,21 +524,14 @@ final class TableStore(spark: SparkSession, root: String,
     * `keepGenerations` newest; size it at construction) are vacuumed and
     * raise. The reproducible-training-run / audit path: pin the generation
     * a job read, re-read it bit-identically later. */
-  def readGeneration(table: String, gen: Long): DataFrame = {
-    val entries = listMarkers(table)
-      .collectFirst { case (n, p) if n == gen => parseManifest(p) }.flatten
-      .getOrElse(throw new IllegalArgumentException(
-        s"readGeneration('$table', $gen): no committed marker _commit.$gen — available: " +
-          s"[${generations(table).mkString(", ")}] (retention keeps the $keepGenerations newest)"))
-    readEntries(table, entries, mergeSchemas = false)
-  }
+  def readGeneration(table: String, gen: Long): DataFrame =
+    readEntries(table, manifestAt(table, gen, "readGeneration"), mergeSchemas = false)
 
   // ---------------------------------------------------------------------
   // Data skipping (per-file min/max stats in the generation dir)
   // ---------------------------------------------------------------------
 
   private val StatsFile = "_stats"
-  private val StatsHeader = "graft-stats v1"
 
   /** Types whose min/max round-trip through a string and compare safely. */
   private def statsOrderable(dt: org.apache.spark.sql.types.DataType): Boolean = {
@@ -550,11 +563,11 @@ final class TableStore(spark: SparkSession, root: String,
       if (cols.isEmpty) return
       val aggs = cols.flatMap(c => Seq(
         min(col(c)).cast("string").as(s"__mn_$c"), max(col(c)).cast("string").as(s"__mx_$c")))
-      val rows = df.select(input_file_name().as("__f") +: cols.map(col): _*)
+      val aggRows = df.select(input_file_name().as("__f") +: cols.map(col): _*)
         .groupBy("__f").agg(aggs.head, aggs.tail: _*).collect()
       val prefix = genDir.getName + "/"
       def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
-      val lines = rows.toSeq.flatMap { r =>
+      val rows = aggRows.toSeq.flatMap { r =>
         val full = r.getString(0)
         val rel = full.substring(full.lastIndexOf(prefix) + prefix.length)
         cols.flatMap { c =>
@@ -562,15 +575,12 @@ final class TableStore(spark: SparkSession, root: String,
           // all-NULL file: no line; the reader keeps unknown files (and a
           // range predicate never matches NULL anyway)
           if (mn == null || mx == null) None
-          else Some(Seq(enc(rel), enc(c), df.schema(c).dataType.catalogString,
-            enc(mn), enc(mx)).mkString("\t"))
+          else Some(Seq(enc(rel), enc(c), df.schema(c).dataType.catalogString, enc(mn), enc(mx)))
         }
       }
-      val out = fs.create(new Path(genDir, StatsFile), true)
-      try out.write((s"$StatsHeader ${lines.size}" +: lines).mkString("\n").getBytes("UTF-8"))
-      finally out.close()
+      writeSidecar(new Path(genDir, StatsFile), "stats", rows, counted = true)
     } catch {
-      case scala.util.control.NonFatal(e) =>
+      case NonFatal(e) =>
         log.warn(s"stats collection for $genDir failed — generation publishes without " +
           s"data-skipping stats: $e")
     }
@@ -579,23 +589,10 @@ final class TableStore(spark: SparkSession, root: String,
   /** Parse `<genDir>/_stats`: (relativeFile, column) → (dtype, min, max).
     * `None` when absent or torn (header carries the line count). */
   private def loadStats(genDir: Path): Option[Map[(String, String), (String, String, String)]] = {
-    val p = new Path(genDir, StatsFile)
-    if (!fs.exists(p)) return None
-    val text = try {
-      val in = fs.open(p)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    } catch { case _: IOException => return None }
     def dec(s: String) = java.net.URLDecoder.decode(s, "UTF-8")
-    val lines = text.split("\n", -1).toSeq.filter(_.nonEmpty)
-    lines.headOption match {
-      case Some(h) if h.startsWith(StatsHeader) &&
-          h.stripPrefix(StatsHeader).trim.toIntOption.contains(lines.size - 1) =>
-        Some(lines.tail.flatMap(_.split("\t", 5) match {
-          case Array(f, c, dt, mn, mx) => Some((dec(f), dec(c)) -> ((dt, dec(mn), dec(mx))))
-          case _ => None
-        }).toMap)
-      case _ => None
-    }
+    readSidecar(new Path(genDir, StatsFile), "stats", width = 5, counted = true).map(_.map {
+      case Array(f, c, dt, mn, mx) => (dec(f), dec(c)) -> ((dt, dec(mn), dec(mx)))
+    }.toMap)
   }
 
   /** A caller-supplied read bound is usable for pruning under the column's
@@ -774,18 +771,7 @@ final class TableStore(spark: SparkSession, root: String,
   private def prunePlan(table: String, bounds: Seq[(String, Any, Any)],
       asOf: Option[Long] = None, exhaustive: Boolean = false): Option[(Seq[PruneUnit], Int, Int)] = {
     if (!pointerMode || listMarkers(table).isEmpty) return None
-    val entries = asOf match {
-      case Some(gen) =>
-        listMarkers(table).collectFirst { case (n, p) if n == gen => parseManifest(p) }.flatten
-          .getOrElse(throw new IllegalArgumentException(
-            s"readWhere('$table', asOf=$gen): no committed marker _commit.$gen — available: " +
-              s"[${generations(table).mkString(", ")}]"))
-      case None => currentManifest(table) match {
-        case None => throw new IOException(
-          s"readWhere('$table'): no fully-committed generation marker found")
-        case Some((_, e)) => e
-      }
-    }
+    val entries = asOf.fold(committedEntries(table, "readWhere"))(manifestAt(table, _, "readWhere"))
     val dir = tablePath(table)
     val (whole, parts) = entries.partition(_._1 == WholeTable)
     val units =
@@ -889,7 +875,6 @@ final class TableStore(spark: SparkSession, root: String,
   // ---------------------------------------------------------------------
 
   private val SnapshotPrefix = "_run."
-  private val SnapshotHeader = "graft-snapshot v1"
 
   /** Whether this store can publish run-level snapshots ([[publishSnapshot]]
     * is pointer-mode only: rename-layout tables keep no generation history
@@ -911,22 +896,11 @@ final class TableStore(spark: SparkSession, root: String,
 
   /** Parse one snapshot marker: table → pinned generation index. `None` for
     * a torn write (header carries the entry count, like table manifests). */
-  private def parseSnapshot(p: Path): Option[Map[String, Long]] = {
-    val text = try {
-      val in = fs.open(p)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    } catch { case _: IOException => return None }
-    val lines = text.split("\n", -1).toSeq.filter(_.nonEmpty)
-    lines.headOption match {
-      case Some(h) if h.startsWith(SnapshotHeader) =>
-        val declared = h.stripPrefix(SnapshotHeader).trim.toIntOption
-        val entries = lines.tail.flatMap(_.split("\t", 2) match {
-          case Array(t, g) => g.toLongOption.map(t -> _); case _ => None
-        })
-        if (declared.contains(entries.size)) Some(entries.toMap) else None
-      case _ => None
+  private def parseSnapshot(p: Path): Option[Map[String, Long]] =
+    readSidecar(p, "snapshot", counted = true).flatMap { rows =>
+      val pins = rows.flatMap(r => r(1).toLongOption.map(r(0) -> _))
+      Option.when(pins.size == rows.size)(pins.toMap)
     }
-  }
 
   /** Generations of `table` pinned by any RETAINED snapshot — [[cleanupGenerations]]
     * must not vacuum these even when they fall outside the per-table
@@ -964,24 +938,18 @@ final class TableStore(spark: SparkSession, root: String,
     }
     val next = (0L +: listSnapshotMarkers().map(_._1)).max + 1
     val marker = new Path(root, s"$SnapshotPrefix$next")
-    val content = (s"$SnapshotHeader ${pins.size}" +:
-      pins.map { case (t, g) => s"$t\t$g" }).mkString("\n")
-    val out = try createAtomically(marker) catch {
-      case e: IOException => throw new ConcurrentWriteException(
+    if (!writeSidecar(marker, "snapshot", pins.map { case (t, g) => Seq(t, s"$g") },
+        counted = true, exclusive = true))
+      throw new ConcurrentWriteException(
         s"publishSnapshot: marker ${marker.getName} already exists — lost the race to a " +
-          "concurrent snapshot publisher", e)
-    }
-    try { out.write(content.getBytes("UTF-8")); out.close() } catch {
-      case e: IOException => fs.delete(marker, false); throw e
-    }
+          "concurrent snapshot publisher")
     // the pins were resolved BEFORE the marker existed, so a concurrent
     // publish's retention pass could have vacuumed a to-be-pinned generation
     // in that window (it cannot see an uncreated snapshot marker). Re-verify
     // each pin AFTER the marker is durable and retract on failure —
     // mirroring commitPointer's post-create re-check.
     val broken = pins.filterNot { case (t, g) =>
-      listMarkers(t).collectFirst { case (n, p) if n == g => parseManifest(p) }.flatten
-        .exists(es => manifestDirsExist(t, es))
+      scala.util.Try(manifestAt(t, g, "publishSnapshot")).toOption.exists(manifestDirsExist(t, _))
     }
     if (broken.nonEmpty) {
       fs.delete(marker, false)
@@ -1020,7 +988,7 @@ final class TableStore(spark: SparkSession, root: String,
 
   /** The committed manifest of marker `gen`, or raise with the available
     * window. */
-  private def manifestAt(table: String, gen: Long, op: String): Seq[(String, String)] =
+  private def manifestAt(table: String, gen: Long, op: String): Manifest =
     listMarkers(table).collectFirst { case (n, p) if n == gen => parseManifest(p) }.flatten
       .getOrElse(throw new IllegalArgumentException(
         s"$op('$table', $gen): no committed marker _commit.$gen — available: " +
@@ -1033,7 +1001,7 @@ final class TableStore(spark: SparkSession, root: String,
     * needs to be scanned. This is what makes [[generationDiff]] incremental:
     * a one-partition change on a 2.4 k-partition table diffs one partition. */
   private def diffEntries(table: String, fromGen: Long, toGen: Long)
-      : (Seq[(String, String)], Seq[(String, String)]) = {
+      : (Manifest, Manifest) = {
     val fromE = manifestAt(table, fromGen, "generationDiff")
     val toE = manifestAt(table, toGen, "generationDiff")
     val shared = fromE.toSet.intersect(toE.toSet)
@@ -1104,13 +1072,8 @@ final class TableStore(spark: SparkSession, root: String,
     * the diff path, mirroring [[pruneEvidence]]. A one-partition change on
     * an N-partition table must report scanned ≪ total. */
   def generationDiffEvidence(table: String, fromGen: Long, toGen: Long): (Int, Int) = {
-    def files(es: Seq[(String, String)]): Int = {
-      val paths = es.map { case (name, g) =>
-        if (name == WholeTable) new Path(tablePath(table), g)
-        else new Path(s"${tablePath(table)}/$g/$name")
-      }.distinct.filter(fs.exists(_))
-      inParallel(paths)(p => listDataFiles(p).size).sum
-    }
+    def files(es: Manifest): Int =
+      inParallel(entryDirs(table, es))(p => listDataFiles(p).size).sum
     // totals come from the commit audit sidecars — recorded once at publish,
     // O(1) to read back — so the evidence call no longer walks every file of
     // both manifests (it exists to PROVE the diff scan is a sliver of the
@@ -1163,14 +1126,10 @@ final class TableStore(spark: SparkSession, root: String,
           b <- meta.get("bytes").flatMap(_.toLongOption)
         } yield (f, b, r)
         val (nFiles, nBytes, nRows) = recorded.getOrElse {
-          val paths = entries.map { case (name, g) =>
-            if (name == WholeTable) new Path(tablePath(table), g)
-            else new Path(s"${tablePath(table)}/$g/$name")
-          }.distinct
-          val (f, b) = paths.filter(fs.exists(_)).map(duData)
+          val (f, b) = entryDirs(table, entries).map(duData)
             .foldLeft((0L, 0L)) { case ((f1, b1), (f2, b2)) => (f1 + f2, b1 + b2) }
           val r = try readEntries(table, entries, mergeSchemas = false).count()
-            catch { case scala.util.control.NonFatal(_) => -1L }
+            catch { case NonFatal(_) => -1L }
           (f, b, r)
         }
         (n, meta.getOrElse("op", "unknown"),
@@ -1221,15 +1180,6 @@ final class TableStore(spark: SparkSession, root: String,
   // Writes
   // ---------------------------------------------------------------------
 
-  /** Append rows (the reference's plain `SqlBulkCopy` append path,
-    * `TableCopyService.cs:121,144-170`); used for the ledger and pure-append
-    * facts. Takes the writer lock (waiting up to `appendLockWaitMs` — appends
-    * serialize fine, unlike rewrites where failing fast is the right call):
-    * an unlocked append racing a rewrite can land its files in a retired
-    * directory and be silently lost, and two concurrent append jobs race on
-    * the shared `_temporary` staging dir. In pointer mode each append is its
-    * own atomically-published generation (the manifest accumulates dirs;
-    * [[compact]] folds them). */
   /** `dt` with every nullable/containsNull/valueContainsNull flag forced
     * permissive, recursively. Nullability is metadata, not a value type: a
     * freshly-computed frame carries tighter flags than the parquet
@@ -1251,31 +1201,24 @@ final class TableStore(spark: SparkSession, root: String,
     }
   }
 
+  /** Append rows (the reference's plain `SqlBulkCopy` append path,
+    * `TableCopyService.cs:121,144-170`); used for the ledger and pure-append
+    * facts. Takes the writer lock (waiting up to `appendLockWaitMs` — appends
+    * serialize fine, unlike rewrites where failing fast is the right call):
+    * an unlocked append racing a rewrite can land its files in a retired
+    * directory and be silently lost, and two concurrent append jobs race on
+    * the shared `_temporary` staging dir. In pointer mode each append is its
+    * own atomically-published generation (the manifest accumulates dirs;
+    * [[compact]] folds them). */
   def append(table: String, df: DataFrame): Unit = {
     refuseIfCatalogBucketed(table, "append")
-    // ADDITIVE schema evolution only: a new column reads as NULL for old
-    // rows through readEvolved, but a TYPE CHANGE on an existing column
-    // would poison the table with irreconcilable footers that explode at
-    // READ time (mergeSchema failure), far from the write that caused it.
-    // Fail here, at the cause, instead. The baseline is the EVOLVED (union)
-    // schema, not one arbitrary footer's: on a multi-generation table a
-    // column added by an earlier evolved append may be absent from the
-    // footer a plain read happens to infer from, and a later append with
-    // that column at a different type would slip past a single-footer
-    // check — exactly the poisoning this guard exists to stop. Skipped for
-    // a first append (no current state to drift from).
-    // nullability is NOT drift: a freshly-computed frame often carries
-    // tighter containsNull/nullable flags than the parquet round-trip of
-    // the same data, and mixed-nullability footers merge cleanly — only a
-    // VALUE-type change poisons the table
-    def checkDrift(lenient: Boolean = false): Unit = checkAppendDrift(table, df, lenient)
     if (!pointerMode) {
       val lock = acquireWriteLock(table, "append", waitMs = appendLockWaitMs)
       try {
-        checkDrift()
+        checkAppendDrift(table, df)
         df.write.mode("append").parquet(tablePath(table))
       } finally fs.delete(lock, false)
-    } else {
+    } else
       // Pointer-mode appends hold the writer lock only around the O(1)
       // manifest commit, NOT around the data write: each append's files go
       // to a private immutable `_gen-*` dir no reader or other writer
@@ -1287,53 +1230,30 @@ final class TableStore(spark: SparkSession, root: String,
       // if a racing rewrite replaces the table before our commit, the
       // append lands ON TOP of the new state (the manifest is re-read under
       // the lock), which is the append-after-rewrite linearization.
-      checkDrift(lenient = true) // advisory pre-check: fail BEFORE the expensive data write
-      val dir = new Path(tablePath(table))
-      if (!fs.exists(dir)) fs.mkdirs(dir)
-      val gen = new Path(dir, s"_gen-${nonce()}")
-      df.write.mode("overwrite").parquet(gen.toString)
-      writeStats(gen)
-      beforeAppendCommit(table)
-      val lock = acquireWriteLock(table, "append", waitMs = appendLockWaitMs)
-      try {
-        val prev = currentManifest(table).map(_._2).getOrElse(Nil)
-        if (prev.exists(_._1 != WholeTable)) {
-          fs.delete(gen, true)
-          throw new IllegalStateException(
-            s"append('$table'): table has partition-scoped generations; append through " +
-              "overwriteDatePartitions (or compact first)")
-        }
-        // re-validate drift INSIDE the lock: a type-changing rewrite can land
-        // between the advisory pre-check and this commit, and publishing
-        // anyway would poison the table with irreconcilable footers. Under
-        // the lock the state can no longer move, so this check is decisive;
-        // the refused append's gen dir is reclaimed, nothing was published.
-        try checkDrift() catch { case e: Throwable => fs.delete(gen, true); throw e }
-        commitPointer(table, prev :+ (WholeTable -> gen.getName), "append")
-      } finally fs.delete(lock, false)
-    }
+      publishPointer(table, "append", append = true)(writeGeneration(df)) { (current, fresh) =>
+        Some(appendBase(table, "append", df, current) ++ fresh)
+      }
   }
 
-  /** ADDITIVE-only schema guard shared by the append paths (see the
-    * [[append]] comment block for the full rationale): a new column reads
-    * as NULL for old rows, a VALUE-type change poisons the table.
-    *
-    * `lenient` is for the pointer-mode ADVISORY pre-lock invocations only:
-    * a CONCURRENT writer's mkdirs/in-flight write can make the table
-    * momentarily "exist" as an empty or markers-pending dir that no read
-    * resolves (observed: the advisory pre-lock check racing a first
-    * pointer-mode append). There — and only there — an unreadable
-    * transient state skips the check, because a DECISIVE re-check runs
-    * under the writer lock right after. The decisive invocations (rename
-    * mode, and pointer mode under the lock) must PROPAGATE read failures:
-    * they have no second check behind them, and appending into a table
-    * whose state cannot be read deepens whatever is wrong before the
-    * failure finally surfaces at some distant read. */
-  private def checkAppendDrift(table: String, df: DataFrame,
-      lenient: Boolean = false): Unit = if (exists(table)) {
-    val current = try readEvolved(table).schema catch {
-      case scala.util.control.NonFatal(_) if lenient => return
-    }
+  /** ADDITIVE-only schema guard shared by the append paths, run under the
+    * writer lock where the table state can no longer move — so it decides:
+    * its read failures propagate, since appending into a table whose state
+    * cannot be read deepens whatever is wrong before it surfaces at some
+    * distant read. A new column reads as NULL for old rows through
+    * [[readEvolved]], but a TYPE CHANGE on an existing column would poison
+    * the table with irreconcilable footers that explode at READ time
+    * (mergeSchema failure), far from the write that caused it; fail here,
+    * at the cause, instead. The baseline is the EVOLVED (union) schema, not
+    * one arbitrary footer's: on a multi-generation table a column added by
+    * an earlier evolved append may be absent from the footer a plain read
+    * happens to infer from, and a later append with that column at a
+    * different type would slip past a single-footer check. Nullability is
+    * NOT drift ([[stripNullability]]). Skipped for a first append (no
+    * current state to drift from). Pointer appends write their data before
+    * the lock, so a refused append has paid for its write — the price of
+    * one mergeSchema read per append instead of two. */
+  private def checkAppendDrift(table: String, df: DataFrame): Unit = if (exists(table)) {
+    val current = readEvolved(table).schema
     val drifted = df.schema.flatMap { f =>
       current.find(_.name == f.name).collect {
         case c if stripNullability(c.dataType) != stripNullability(f.dataType) =>
@@ -1343,6 +1263,16 @@ final class TableStore(spark: SparkSession, root: String,
     if (drifted.nonEmpty) throw new IllegalArgumentException(
       s"append('$table'): column type drift is not appendable — ${drifted.mkString("; ")}; " +
         "cast the batch to the table's types (new columns are fine, type changes are not)")
+  }
+
+  /** The manifest a pointer append extends, validated under the writer
+    * lock: whole-table generations only, and no column type drift. */
+  private def appendBase(table: String, op: String, df: DataFrame, current: Manifest): Manifest = {
+    if (current.exists(_._1 != WholeTable)) throw new IllegalStateException(
+      s"$op('$table'): table has partition-scoped generations; append through " +
+        "overwriteDatePartitions (or compact first)")
+    checkAppendDrift(table, df)
+    current
   }
 
   private def sanitizeIdemKey(key: String): String = {
@@ -1409,38 +1339,19 @@ final class TableStore(spark: SparkSession, root: String,
     refuseIfCatalogBucketed(table, "appendIdempotent")
     val k = sanitizeIdemKey(key)
     if (idempotentKeyCommitted(table, k)) return false
-    if (pointerMode) {
-      checkAppendDrift(table, df, lenient = true) // advisory: fail before the data write
-      val dir = new Path(tablePath(table))
-      if (!fs.exists(dir)) fs.mkdirs(dir)
-      val gen = new Path(dir, s"_gen-idem-$k.${nonce()}")
-      df.write.mode("overwrite").parquet(gen.toString)
-      writeStats(gen)
-      beforeAppendCommit(table) // test seam: the pre-check -> lock window
-      val lock = acquireWriteLock(table, "appendIdempotent", waitMs = appendLockWaitMs)
-      try {
-        val prev = currentManifest(table).map(_._2).getOrElse(Nil)
+    if (pointerMode)
+      publishPointer(table, "appendIdempotent", append = true, genName = s"_gen-idem-$k.${nonce()}")(
+          writeGeneration(df)) { (current, fresh) =>
         // decisive under-lock re-check must see BOTH key records: the
         // manifest's keyed gen dirs AND the `_idem.<k>` markers — a
         // concurrent same-key commit followed by a compaction (which
         // retires keyed gen dirs into markers) between our fast pre-check
         // and this lock acquisition would otherwise slip a duplicate in
-        if (prev.exists(_._2.startsWith(s"_gen-idem-$k.")) ||
-            fs.exists(new Path(tablePath(table), s"_idem.$k"))) {
-          fs.delete(gen, true) // lost the key race — the batch is already in
-          return false
-        }
-        if (prev.exists(_._1 != WholeTable)) {
-          fs.delete(gen, true)
-          throw new IllegalStateException(
-            s"appendIdempotent('$table'): table has partition-scoped generations; append " +
-              "through overwriteDatePartitions (or compact first)")
-        }
-        try checkAppendDrift(table, df) catch { case e: Throwable => fs.delete(gen, true); throw e }
-        commitPointer(table, prev :+ (WholeTable -> gen.getName), "appendIdempotent")
-      } finally fs.delete(lock, false)
-      true
-    } else {
+        if (current.exists(_._2.startsWith(s"_gen-idem-$k.")) ||
+            fs.exists(new Path(tablePath(table), s"_idem.$k"))) None // lost the key race
+        else Some(appendBase(table, "appendIdempotent", df, current) ++ fresh)
+      }
+    else {
       val dir = new Path(tablePath(table))
       val marker = new Path(dir, s"_idem.$k")
       val lock = acquireWriteLock(table, "appendIdempotent", waitMs = appendLockWaitMs)
@@ -1458,8 +1369,9 @@ final class TableStore(spark: SparkSession, root: String,
             throw new IOException(s"appendIdempotent('$table'): rename of ${s.getPath} failed")
         }
         fs.delete(stage, true)
-        val out = createAtomically(marker)
-        try out.write(s"graft-idem v1\nkey\t$k".getBytes("UTF-8")) finally out.close()
+        if (!writeSidecar(marker, "idem", Seq(Seq("key", k)), exclusive = true))
+          throw new ConcurrentWriteException(
+            s"appendIdempotent('$table'): key $k was committed concurrently")
         true
       } finally fs.delete(lock, false)
     }
@@ -1467,9 +1379,9 @@ final class TableStore(spark: SparkSession, root: String,
 
   private def nonce(): String = java.util.UUID.randomUUID.toString.take(8)
 
-  /** Test seam: invoked by pointer-mode [[append]] after its data write but
-    * before it takes the writer lock — the window where a concurrent rewrite
-    * can invalidate the advisory drift pre-check. Production no-op. */
+  /** Test seam: invoked by pointer-mode appends after their data write but
+    * before they take the writer lock — the window where a concurrent
+    * rewrite can change the state the append lands on. Production no-op. */
   private[store] var beforeAppendCommit: String => Unit = _ => ()
 
   /** Writer mutual exclusion: atomically create `<table>.lock`
@@ -1554,42 +1466,32 @@ final class TableStore(spark: SparkSession, root: String,
   private def atomicOverwriteAs(table: String, df: DataFrame, partitionBy: Seq[String],
       op: String, carryIdemKeys: Boolean = false): Unit = {
     refuseIfCatalogBucketed(table, op)
-    val lock = acquireWriteLock(table, op)
-    try {
-      if (pointerMode) {
-        val dir = new Path(tablePath(table))
-        if (!fs.exists(dir)) fs.mkdirs(dir)
-        // compaction (carryIdemKeys) retires keyed `_gen-idem-*` dirs from
-        // the manifest; materialize their keys as `_idem.*` markers FIRST —
-        // the markers assert an already-true fact, so writing them before
-        // the commit leaves every crash window consistent
-        if (carryIdemKeys) committedIdemKeys(table).foreach { k =>
-          val m = new Path(dir, s"_idem.$k")
-          if (!fs.exists(m)) {
-            val out = fs.create(m, true)
-            try out.write(s"graft-idem v1\nkey\t$k".getBytes("UTF-8")) finally out.close()
-          }
-        }
-        val gen = new Path(dir, s"_gen-${nonce()}")
-        val writer = if (partitionBy.nonEmpty) df.write.partitionBy(partitionBy: _*) else df.write
-        writer.mode("overwrite").parquet(gen.toString)
-        writeStats(gen)
-        commitPointer(table, Seq(WholeTable -> gen.getName), op)
-      } else {
+    if (pointerMode) publishPointer(table, op) { gen =>
+      // compaction (carryIdemKeys) retires keyed `_gen-idem-*` dirs from
+      // the manifest; materialize their keys as `_idem.*` markers FIRST —
+      // the markers assert an already-true fact, so writing them before
+      // the commit leaves every crash window consistent
+      if (carryIdemKeys) committedIdemKeys(table).foreach { k =>
+        val m = new Path(gen.getParent, s"_idem.$k")
+        if (!fs.exists(m)) writeSidecar(m, "idem", Seq(Seq("key", k)))
+      }
+      writeGeneration(df, partitionBy)(gen)
+    } { (_, fresh) => Some(fresh) }
+    else {
+      val lock = acquireWriteLock(table, op)
+      try {
         val nn = nonce()
         val live = new Path(tablePath(table))
         val tmp = new Path(tablePath(table) + s".tmp-$nn")
         val old = new Path(tablePath(table) + s".old-$nn")
-        val writer = if (partitionBy.nonEmpty) df.write.partitionBy(partitionBy: _*) else df.write
-        writer.mode("overwrite").parquet(tmp.toString)
+        writeGeneration(df, partitionBy)(tmp)
         // compaction must not forget exactly-once keys: copy the `_idem.*`
         // markers into the about-to-publish dir BEFORE the swap, so both
         // crash outcomes (old state, new state) retain every key
         if (carryIdemKeys && fs.exists(live))
           fs.globStatus(new Path(live, "_idem.*")).foreach { s =>
-            val out = fs.create(new Path(tmp, s.getPath.getName), true)
-            try out.write(s"graft-idem v1\nkey\t${s.getPath.getName.drop(6)}".getBytes("UTF-8"))
-            finally out.close()
+            val name = s.getPath.getName
+            writeSidecar(new Path(tmp, name), "idem", Seq(Seq("key", name.drop(6))))
           }
         val hadLive = fs.exists(live)
         if (hadLive && !fs.rename(live, old))
@@ -1600,8 +1502,65 @@ final class TableStore(spark: SparkSession, root: String,
           throw new IOException(s"atomicOverwrite: could not publish $tmp as $live")
         }
         if (hadLive) fs.delete(old, true)
+      } finally fs.delete(lock, false)
+    }
+  }
+
+  /** Write `df` as one whole-table generation into `dir` — the data step of
+    * every pointer rewrite and append (and of a rename-mode rewrite's temp
+    * dir). Returns the manifest entry the generation provides. */
+  private def writeGeneration(df: DataFrame, partitionBy: Seq[String] = Nil)(
+      dir: Path): Seq[String] = {
+    (if (partitionBy.nonEmpty) df.write.partitionBy(partitionBy: _*) else df.write)
+      .mode("overwrite").parquet(dir.toString)
+    Seq(WholeTable)
+  }
+
+  /** The one pointer-mode publish path: every pointer writer reaches
+    * [[commitPointer]] through here. Its steps are the commit boundaries a
+    * crash can fall between, in order:
+    *  1. write gen: `write` fills a fresh `_gen-*` dir and names the
+    *     manifest entries it provides; then its `_stats`,
+    *  2. lock: the writer lock is held around the write for rewrites, and
+    *     only around steps 3-4 for appends (`append`, see [[append]]),
+    *  3. validate or merge: `next` maps the current manifest (passed by
+    *     name, so a rewrite that ignores it reads no marker) and the fresh
+    *     entries to the manifest to publish; it refuses by throwing and
+    *     skips by returning `None`,
+    *  4. marker CAS, then commit meta and retention ([[commitPointer]]).
+    * Every exit that does not publish — failed write, refusal, skip, lost
+    * race — reclaims the generation dir (and a table dir this call
+    * created). Returns whether it published. */
+  private def publishPointer(table: String, op: String, append: Boolean = false,
+      genName: String = s"_gen-${nonce()}")(write: Path => Seq[String])(
+      next: (=> Manifest, Manifest) => Option[Manifest]): Boolean = {
+    def locked[A](body: => A): A = {
+      val lock = acquireWriteLock(table, op, waitMs = if (append) appendLockWaitMs else 0L)
+      try body finally fs.delete(lock, false)
+    }
+    def publish(): Boolean = {
+      val dir = new Path(tablePath(table))
+      val created = !fs.exists(dir)
+      if (created) fs.mkdirs(dir)
+      val gen = new Path(dir, genName)
+      var published = false
+      try {
+        val fresh = write(gen).map(_ -> genName)
+        writeStats(gen)
+        def commit(): Unit = {
+          lazy val current = currentManifest(table).map(_._2).getOrElse(Nil)
+          next(current, fresh).foreach { m => commitPointer(table, m, op); published = true }
+        }
+        if (append) { beforeAppendCommit(table); locked(commit()) } else commit()
+      } finally if (!published) {
+        fs.delete(gen, true)
+        // a failed first publish leaves no empty dir for exists() to take
+        // as a table; a racing writer's files keep it (non-recursive)
+        if (created) try fs.delete(dir, false) catch { case _: IOException => () }
       }
-    } finally fs.delete(lock, false)
+      published
+    }
+    if (append) publish() else locked(publish())
   }
 
   /**
@@ -1629,11 +1588,11 @@ final class TableStore(spark: SparkSession, root: String,
   def overwriteDatePartitions(table: String, df: DataFrame, partCol: String,
       days: Seq[java.time.LocalDate]): Unit = {
     refuseIfCatalogBucketed(table, "overwriteDatePartitions")
-    val lock = acquireWriteLock(table, "overwriteDatePartitions")
-    try {
-      if (pointerMode) overwriteDatePartitionsPointer(table, df, partCol, days)
-      else overwriteDatePartitionsLocked(table, df, partCol, days)
-    } finally fs.delete(lock, false)
+    if (pointerMode) overwriteDatePartitionsPointer(table, df, partCol, days)
+    else {
+      val lock = acquireWriteLock(table, "overwriteDatePartitions")
+      try overwriteDatePartitionsLocked(table, df, partCol, days) finally fs.delete(lock, false)
+    }
   }
 
   private def overwriteDatePartitionsLocked(table: String, df: DataFrame, partCol: String,
@@ -1677,34 +1636,28 @@ final class TableStore(spark: SparkSession, root: String,
 
   private def overwriteDatePartitionsPointer(table: String, df: DataFrame, partCol: String,
       days: Seq[java.time.LocalDate]): Unit = {
-    val dir = new Path(tablePath(table))
-    if (!fs.exists(dir)) fs.mkdirs(dir)
-    val gen = new Path(dir, s"_gen-${nonce()}")
-    df.write.partitionBy(partCol).mode("overwrite").parquet(gen.toString)
     val declared = days.map(d => s"$partCol=$d").toSet
-    val freshParts = fs.listStatus(gen).map(_.getPath.getName)
-      .filter(_.startsWith(s"$partCol=")).toSeq
-    val undeclared = freshParts.filterNot(declared.contains)
-    if (undeclared.nonEmpty) {
-      fs.delete(gen, true)
-      throw new IOException(
-        s"overwriteDatePartitions: fresh data for ${undeclared.mkString(", ")} " +
-          "not covered by the declared day list — nothing was modified")
-    }
-    // per-file stats with `partCol=day/file` keys: composes partition-dir
-    // pruning with file-level skipping in readWhere — the 100 TB fact-table
-    // shape (date-partitioned AND pointer-committed) gets both axes
-    writeStats(gen)
-    // expand the previous manifest to per-partition entries so untouched
-    // partitions keep pointing at the generation dirs that already hold them
-    val prev: Seq[(String, String)] = currentManifest(table) match {
-      case None => Nil
-      case Some((_, entries)) =>
-        val (whole, parts) = entries.partition(_._1 == WholeTable)
+    publishPointer(table, "overwriteDatePartitions") { gen =>
+      df.write.partitionBy(partCol).mode("overwrite").parquet(gen.toString)
+      val freshParts = fs.listStatus(gen).map(_.getPath.getName)
+        .filter(_.startsWith(s"$partCol=")).toSeq
+      val undeclared = freshParts.filterNot(declared.contains)
+      if (undeclared.nonEmpty)
+        throw new IOException(
+          s"overwriteDatePartitions: fresh data for ${undeclared.mkString(", ")} " +
+            "not covered by the declared day list — nothing was modified")
+      // [[publishPointer]]'s `_stats` then keys files `partCol=day/file`:
+      // partition-dir pruning composes with file-level skipping in readWhere
+      freshParts
+    } { (current, fresh) =>
+      // expand the previous manifest to per-partition entries so untouched
+      // partitions keep pointing at the generation dirs that already hold them
+      val (whole, parts) = current.partition(_._1 == WholeTable)
+      val prev =
         if (whole.isEmpty) parts
         else if (parts.isEmpty && whole.size == 1) {
-          val base = new Path(dir, whole.head._2)
-          val subs = fs.listStatus(base).map(_.getPath.getName).toSeq
+          val subs = fs.listStatus(new Path(tablePath(table), whole.head._2))
+            .map(_.getPath.getName).toSeq
           val stray = subs.filter(s => !s.startsWith(s"$partCol=") &&
             !s.startsWith("_") && !s.startsWith("."))
           if (stray.nonEmpty) throw new IllegalStateException(
@@ -1714,10 +1667,8 @@ final class TableStore(spark: SparkSession, root: String,
         } else throw new IllegalStateException(
           s"overwriteDatePartitions('$table'): table has accumulated append generations; " +
             "compact it before a partition-scoped overwrite")
+      Some(prev.filterNot { case (p, _) => declared.contains(p) } ++ fresh)
     }
-    val next = prev.filterNot { case (p, _) => declared.contains(p) } ++
-      freshParts.map(_ -> gen.getName)
-    commitPointer(table, next, "overwriteDatePartitions")
   }
 
   /**
@@ -1726,6 +1677,18 @@ final class TableStore(spark: SparkSession, root: String,
    * is catalog metadata — readers must come back through [[readBucketed]],
    * not a bare path read, to see it). Data lives under this store's root as
    * an external table, so the directory layout stays ours.
+   *
+   * Pointer mode keeps the layout WITHOUT a durable catalog (an
+   * object-store deployment has none): the spec is persisted INSIDE the
+   * immutable generation as a `_bucketspec` sidecar and the files go
+   * through the same lock + atomic-marker protocol as any rewrite. Spark's
+   * bucketed writer only runs through `saveAsTable`, so the write detours
+   * through a throwaway session-catalog entry pointed at the generation dir
+   * (external ⇒ dropping it keeps the files, which carry their bucket ids
+   * in their names); the entry is gone before the commit marker lands.
+   * Readers rebuild an equivalent catalog shim from the sidecar
+   * ([[readBucketed]]), so the zero-Exchange join layout round-trips
+   * through a fresh session with no catalog state at all.
    *
    * This is the 100 TB co-location primitive: two tables bucketed on the
    * same key with the same bucket count join with NO shuffle on either side
@@ -1743,75 +1706,35 @@ final class TableStore(spark: SparkSession, root: String,
   def writeBucketed(table: String, df: DataFrame, bucketCol: String, numBuckets: Int,
       sortCols: Seq[String] = Nil): Unit = {
     require(numBuckets > 0, s"numBuckets must be positive: $numBuckets")
-    if (pointerMode) { writeBucketedPointer(table, df, bucketCol, numBuckets, sortCols); return }
-    val w = df.write.mode("overwrite").format("parquet")
-      .option("path", tablePath(table))
-      .bucketBy(numBuckets, bucketCol)
-    (if (sortCols.nonEmpty) w.sortBy(sortCols.head, sortCols.tail: _*) else w)
-      .saveAsTable(table)
-  }
-
-  // ---------------------------------------------------------------------
-  // Catalog-free bucketed layout (pointer mode)
-  // ---------------------------------------------------------------------
-
-  private val BucketSpecFile = "_bucketspec"
-  private val BucketSpecHeader = "graft-bucketspec v1"
-
-  /** Pointer-mode bucketed publish: the bucket layout must survive WITHOUT a
-    * durable catalog (an object-store deployment has none), so the spec is
-    * persisted INSIDE the immutable generation as a `_bucketspec` sidecar
-    * and the files go through the same lock + atomic-marker protocol as any
-    * rewrite. Spark's bucketed writer only runs through `saveAsTable`, so
-    * the write detours through a throwaway session-catalog entry pointed at
-    * the generation dir (external ⇒ dropping it keeps the files, which
-    * carry their bucket ids in their names); the entry is gone before the
-    * commit marker lands. Readers rebuild an equivalent catalog shim from
-    * the sidecar ([[readBucketed]]) — the zero-Exchange join layout now
-    * round-trips through a fresh session with no catalog state at all. */
-  private def writeBucketedPointer(table: String, df: DataFrame, bucketCol: String,
-      numBuckets: Int, sortCols: Seq[String]): Unit = {
-    val lock = acquireWriteLock(table, "writeBucketed")
-    try {
-      val dir = new Path(tablePath(table))
-      if (!fs.exists(dir)) fs.mkdirs(dir)
-      val gen = new Path(dir, s"_gen-${nonce()}")
+    def save(path: String, ident: String): Unit = {
+      val w = df.write.mode("overwrite").format("parquet").option("path", path)
+        .bucketBy(numBuckets, bucketCol)
+      (if (sortCols.nonEmpty) w.sortBy(sortCols.head, sortCols.tail: _*) else w).saveAsTable(ident)
+    }
+    if (!pointerMode) save(tablePath(table), table)
+    else publishPointer(table, "writeBucketed") { gen =>
       val tmpIdent = s"graft_bktwrite_${nonce()}"
-      try {
-        val w = df.write.mode("overwrite").format("parquet")
-          .option("path", gen.toString).bucketBy(numBuckets, bucketCol)
-        (if (sortCols.nonEmpty) w.sortBy(sortCols.head, sortCols.tail: _*) else w)
-          .saveAsTable(tmpIdent)
-      } finally // external: bucket-named files remain; a failed write must
+      try save(gen.toString, tmpIdent)
+      finally // external: bucket-named files remain; a failed write must
         spark.sql(s"DROP TABLE IF EXISTS `$tmpIdent`") // not leak the entry
       def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
-      val content = Seq(BucketSpecHeader, s"numBuckets\t$numBuckets",
-        s"bucketCol\t${enc(bucketCol)}",
-        s"sortCols\t${sortCols.map(enc).mkString(",")}").mkString("\n")
-      val out = fs.create(new Path(gen, BucketSpecFile), true)
-      try out.write(content.getBytes("UTF-8")) finally out.close()
-      writeStats(gen)
-      commitPointer(table, Seq(WholeTable -> gen.getName), "writeBucketed")
-    } finally fs.delete(lock, false)
+      writeSidecar(new Path(gen, BucketSpecFile), "bucketspec", Seq(
+        Seq("numBuckets", s"$numBuckets"), Seq("bucketCol", enc(bucketCol)),
+        Seq("sortCols", sortCols.map(enc).mkString(","))))
+      Seq(WholeTable)
+    } { (_, fresh) => Some(fresh) }
   }
+
+  private val BucketSpecFile = "_bucketspec"
 
   /** Parse a generation's `_bucketspec`: (numBuckets, bucketCol, sortCols). */
   private def loadBucketSpec(genDir: Path): Option[(Int, String, Seq[String])] = {
-    val p = new Path(genDir, BucketSpecFile)
-    if (!fs.exists(p)) return None
-    val text = try {
-      val in = fs.open(p)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    } catch { case _: IOException => return None }
     def dec(s: String) = java.net.URLDecoder.decode(s, "UTF-8")
-    val lines = text.split("\n", -1).toSeq
-    if (!lines.headOption.exists(_.startsWith(BucketSpecHeader))) return None
-    val kv = lines.tail.flatMap(_.split("\t", 2) match {
-      case Array(k, v) => Some(k -> v); case _ => None
-    }).toMap
-    for { n <- kv.get("numBuckets").flatMap(_.toIntOption); c <- kv.get("bucketCol") }
-      yield (n, dec(c), kv.getOrElse("sortCols", "").split(",").toSeq
-        .filter(_.nonEmpty).map(dec))
+    readSidecar(new Path(genDir, BucketSpecFile), "bucketspec").flatMap { rows =>
+      val kv = rows.map(r => r(0) -> r(1)).toMap
+      for { n <- kv.get("numBuckets").flatMap(_.toIntOption); c <- kv.get("bucketCol") }
+        yield (n, dec(c), kv.getOrElse("sortCols", "").split(",").toSeq.filter(_.nonEmpty).map(dec))
+    }
   }
 
   /**
@@ -2069,10 +1992,7 @@ final class TableStore(spark: SparkSession, root: String,
   def readBucketed(table: String): DataFrame =
     if (!pointerMode) spark.table(table)
     else {
-      val entries = currentManifest(table) match {
-        case None => throw new IOException(s"readBucketed('$table'): no committed generation")
-        case Some((_, e)) => e
-      }
+      val entries = committedEntries(table, "readBucketed")
       val gens = entries.map(_._2).distinct
       if (entries.exists(_._1 != WholeTable) || gens.size != 1)
         throw new IllegalStateException(

@@ -113,6 +113,20 @@ class RunnerSpec extends AnyFunSuite {
     assert(!tgt.exists("dim_color"))
   }
 
+  test("a SELECT-only SQL step executes: one that raises at run time aborts the run") {
+    val (src, tgt, led) = setup()
+    // analyses cleanly; only executing the query raises
+    val steps = new SqlStepRegistry(Map("boom" -> "SELECT raise_error('boom')"))
+    val runner = new Runner(spark, src, tgt, led, steps, clock)
+    val e = intercept[Exception] {
+      runner.run(cfg(TableSpec("boom", "sproc"), TableSpec("dim_color", "dim")))
+    }
+    assert(e.toString.contains("boom"), e.toString)
+    assert(!tgt.exists("dim_color"), "the dims phase must not run after a failed step")
+    assert(led.latest.select("tableName", "status").as[(String, String)].collect().toSeq ==
+      Seq(("boom", "Failed")))
+  }
+
   test("per-table log files written under logs/yyyy-MM/<table>/ (S10)") {
     val (src, tgt, led) = setup()
     val logRoot = Files.createTempDirectory("graft-logs").toString

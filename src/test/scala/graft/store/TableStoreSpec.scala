@@ -1448,6 +1448,102 @@ class TableStoreSpec extends AnyFunSuite {
     assert(store.read("t").as[(Int, String)].collect().toSet == Set((1, "a"), (2, "b")))
     assert(store.read("t").count() == 2, "replay after a mid-move crash must not duplicate")
   }
+
+  test("a failed pointer publish reclaims its generation dir and publishes nothing") {
+    val store = pointerStore()
+    store.atomicOverwrite("t", Seq(1).toDF("k"))
+    def markers = new java.io.File(store.tablePath("t")).listFiles().map(_.getName)
+      .filter(_.startsWith("_commit.")).toSet
+    val (gensBefore, markersBefore) = (genDirs(store, "t"), markers)
+    // raises inside a task, after Spark has created the output dir
+    val boom = spark.range(0, 1, 1, 1).selectExpr("CAST(raise_error('boom') AS INT) AS k")
+    intercept[Exception](store.atomicOverwrite("t", boom))
+    intercept[Exception](store.append("t", boom))
+    assert(genDirs(store, "t") == gensBefore, s"leftover generation dirs: ${genDirs(store, "t")}")
+    assert(markers == markersBefore, markers.toString)
+    assert(store.read("t").as[Int].collect().toSeq == Seq(1))
+    // a failed FIRST publish leaves no table behind either
+    intercept[Exception](store.atomicOverwrite("n", boom))
+    assert(!store.exists("n") && genDirs(store, "n").isEmpty, genDirs(store, "n").toString)
+  }
+
+  test("sidecar formats are pinned byte for byte and hand-written sidecars parse") {
+    val root = Files.createTempDirectory("graft-sidecars").toString
+    val store = new TableStore(spark, root, CommitMode.Pointer, keepGenerations = 8,
+      statsColumns = Seq("k"))
+    def text(p: String): String = new String(Files.readAllBytes(java.nio.file.Paths.get(p)), "UTF-8")
+    def write(p: String, s: String): Unit = {
+      val f = java.nio.file.Paths.get(p)
+      // drop the checksum of the file being replaced, or the local fs rejects the read
+      Files.deleteIfExists(f.resolveSibling(s".${f.getFileName}.crc"))
+      Files.write(f, s.getBytes("UTF-8"))
+    }
+    // the generation dir an operation adds
+    def newGen(table: String)(op: => Any): String = {
+      val before = genDirs(store, table)
+      op
+      val added = genDirs(store, table) -- before
+      assert(added.size == 1, added.toString)
+      added.head
+    }
+    val t = store.tablePath("t")
+    val g1 = newGen("t")(store.atomicOverwrite("t", Seq((1, "a"), (2, "b")).toDF("k", "v").coalesce(1)))
+    val g2 = newGen("t")(store.append("t", Seq((3, "c")).toDF("k", "v").coalesce(1)))
+    val g3 = newGen("t")(store.appendIdempotent("t", Seq((4, "d")).toDF("k", "v"), "b0"))
+    assert(g3.startsWith("_gen-idem-b0."), g3)
+    // manifests: header with entry count, one `name<TAB>gen` line per entry
+    assert(text(s"$t/_commit.1") == s"graft-manifest v1 1\n*\t$g1")
+    assert(text(s"$t/_commit.2") == s"graft-manifest v1 2\n*\t$g1\n*\t$g2")
+    assert(text(s"$t/_commit.3") == s"graft-manifest v1 3\n*\t$g1\n*\t$g2\n*\t$g3")
+    // commit meta: op, then the post-commit table's rows/files/bytes
+    val meta = text(s"$t/_commit.2.meta").split("\n", -1).toSeq
+    assert(meta.take(4) == Seq("graft-commitmeta v1", "op\tappend", "rows\t3", "files\t2"), meta)
+    assert(meta.size == 5 && meta(4).matches("bytes\t[0-9]+"), meta)
+    // stats: header with line count; url-encoded file, column, type, min, max
+    val file = new java.io.File(s"$t/$g1").list().filter(_.endsWith(".parquet")).head
+    assert(text(s"$t/$g1/_stats") ==
+      s"graft-stats v1 1\n${java.net.URLEncoder.encode(file, "UTF-8")}\tk\tint\t1\t2")
+    // compaction retires the keyed gen dir into an idem marker
+    store.compact("t", 1)
+    assert(text(s"$t/_idem.b0") == "graft-idem v1\nkey\tb0")
+    assert(text(s"$root/_run.${store.publishSnapshot(Seq("t"))}") == "graft-snapshot v1 1\nt\t4")
+    val b = store.tablePath("b")
+    val gb = newGen("b")(store.writeBucketed("b", Seq((1, "x")).toDF("k", "v"), "k", 2, Seq("v")))
+    assert(text(s"$b/$gb/_bucketspec") == "graft-bucketspec v1\nnumBuckets\t2\nbucketCol\tk\nsortCols\tv")
+    val d = store.tablePath("d")
+    val gd = newGen("d")(store.overwriteDatePartitions("d",
+      Seq((1, "2024-01-01")).toDF("v", "day").selectExpr("v", "CAST(day AS DATE) AS day"),
+      "day", Seq(java.time.LocalDate.of(2024, 1, 1))))
+    assert(text(s"$d/_commit.1") == s"graft-manifest v1 1\nday=2024-01-01\t$gd")
+    val plain = freshStore()
+    plain.appendIdempotent("r", Seq(1).toDF("k"), "r0")
+    assert(text(s"${plain.tablePath("r")}/_idem.r0") == "graft-idem v1\nkey\tr0")
+
+    // hand-written sidecars of every kind parse
+    write(s"$t/_commit.9", s"graft-manifest v1 1\n*\t$g2")
+    assert(store.generations("t").head == 9L)
+    assert(store.read("t").as[(Int, String)].collect().toSeq == Seq((3, "c")))
+    write(s"$t/_commit.9.meta", "graft-commitmeta v1\nop\thandmade\nrows\t42\nfiles\t7\nbytes\t99")
+    val h9 = store.history("t").filter("generation = 9")
+      .select("op", "n_rows", "n_files", "size_bytes").as[(String, Long, Long, Long)].collect()
+    assert(h9.toSeq == Seq(("handmade", 42L, 7L, 99L)), h9.toSeq)
+    write(s"$root/_run.7", "graft-snapshot v1 1\nt\t1")
+    assert(store.snapshotEntries(7L) == Map("t" -> 1L))
+    assert(store.readSnapshot(7L, "t").count() == 2)
+    // stats claiming g2's only file holds k in [10, 20]: a read of [3, 3] skips it
+    val f2 = new java.io.File(s"$t/$g2").list().filter(_.endsWith(".parquet")).head
+    write(s"$t/$g2/_stats", s"graft-stats v1 1\n$f2\tk\tint\t10\t20")
+    assert(store.pruneEvidence("t", "k", 3, 3) == ((0, 1)))
+    write(s"$b/$gb/_bucketspec", "graft-bucketspec v1\nnumBuckets\t2\nbucketCol\tk\nsortCols\t")
+    assert(store.readBucketed("b").count() == 1)
+    val shim = spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier(s"graft_bkt_b_${gb.stripPrefix("_gen-")}"))
+    assert(shim.bucketSpec.map(s => (s.numBuckets, s.bucketColumnNames, s.sortColumnNames)) ==
+      Some((2, Seq("k"), Nil)), shim.bucketSpec.toString)
+    write(s"$t/_idem.hk", "graft-idem v1\nkey\thk")
+    assert(store.idempotentKeyCommitted("t", "hk"))
+    assert(!store.idempotentKeyCommitted("t", "none"))
+  }
 }
 
 /** Latches for the racing-writer test (top-level so executor-side lambda
