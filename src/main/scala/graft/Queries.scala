@@ -2,18 +2,22 @@ package graft
 
 import java.time.LocalDate
 
-import graft.ext.{Classifier, Dedup, Eval, Graphs, Multimodal, Privacy, Sampling, Similarity, TextAnalysis}
+import graft.ext.Dedup
+import graft.gates.Fixture
 import graft.io.Tables
-import graft.ops.Ops
 import graft.proc.SqlStepRegistry
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /**
  * The verification query surface: one named query per operator (SURVEY.md §2
  * inventory + §2.12 extension ops), each paired with equivalent ANSI SQL the
  * driver executes in DuckDB over the same parquet tables (`SparkEntry`).
+ *
+ * Each pair is one [[gates.Gate]] record in its family's file under
+ * `graft.gates`; this object holds the literal windows, loaders and SQL
+ * twins more than one family shares, and the `SparkEntry` views over the
+ * gate registry.
  *
  * Determinism rules (SURVEY.md §5.2): fixed literal windows inside fixture
  * date ranges, no wall-clock, exact integer/decimal math wherever a value is
@@ -26,81 +30,24 @@ object Queries {
   /** lineitem reload window (raw-datetime BETWEEN path, P3). */
   val LiFrom: LocalDate = LocalDate.of(1998, 1, 1)
   val LiTo: LocalDate = LocalDate.of(1998, 1, 7)
-  private val liStartLit = "TIMESTAMP '1998-01-01 00:00:00.000'"
-  private val liEndLit = "TIMESTAMP '1998-01-07 23:59:59.997'"
-  private val evStartLit = "TIMESTAMP '2024-01-05 00:00:00.000'"
-  private val evEndLit = "TIMESTAMP '2024-01-09 23:59:59.997'"
+
   /** orders window (CAST-AS-DATE path, P4). */
   val OrdFrom: LocalDate = LocalDate.of(1998, 3, 1)
   val OrdTo: LocalDate = LocalDate.of(1998, 3, 31)
+
   /** events incremental-update window. */
   val EvFrom: LocalDate = LocalDate.of(2024, 1, 5)
   val EvTo: LocalDate = LocalDate.of(2024, 1, 9)
 
-  private def li(s: SparkSession, d: String) = Tables.load(s, d, "lineitem")
-  private def orders(s: SparkSession, d: String) = Tables.load(s, d, "orders")
-  private def customer(s: SparkSession, d: String) = Tables.load(s, d, "customer")
-  private def part(s: SparkSession, d: String) = Tables.load(s, d, "part")
-  private def events(s: SparkSession, d: String) = Tables.load(s, d, "events")
-
-  /** The part co-occurrence graph shared by the `graph_*` structure gates
-    * (`graph_triangles`, `graph_link_prediction`, `graph_kcore`,
-    * `graph_assortativity`) AND mirrored as one constant CTE prefix in
-    * their oracles: parts appearing together on >= 2 orders, weighted by
-    * co-order count. Cached because the self-join consumes the distinct
-    * projection twice; one builder so the gates cannot fork the fixture. */
-  private def partCoOccurrence(s: SparkSession, d: String): DataFrame = {
-    // one groupBy(order) + in-row pair expansion, NOT a distinct + self-join
-    // on the order key: collect_set dedups (order, part) for free, so the
-    // whole derivation is TWO keyed shuffles (order groupBy, pair groupBy)
-    // instead of four exchanges, and the per-order fan-out is visible for a
-    // pair-budget check BEFORE the expansion shuffles anything — the r17
-    // verdict's mover for the shared triangles/link-prediction/assortativity
-    // fixture (the pair groupBy dominated the 30x marathon at 9.9x)
-    val grouped = graft.ext.Caches.track(
-      li(s, d).groupBy(col("l_orderkey").as("ok"))
-        .agg(array_sort(collect_set(col("l_partkey"))).as("ids"))
-        .filter(size(col("ids")) > 1))
-    val sz = size(col("ids")).cast("long")
-    val est = grouped.agg(
-      coalesce(sum(sz * (sz - 1L)), lit(0L)).as("twice"),
-      coalesce(max(sz), lit(0L)).as("hot")).head()
-    // guard the PER-BASKET fan-out, not the aggregate pair total: with
-    // bounded baskets total pairs grow linearly with the corpus (that is
-    // the operator working as designed — r18 review fix: a fixed total cap
-    // would hard-fail a healthy linear computation past ~100× gate scale),
-    // while one pathological basket (a misjoined key, a collapsed order id)
-    // is the quadratic hazard worth refusing loudly
-    val hot = est.getLong(1)
-    require(hot * (hot - 1L) / 2L <= graft.ext.Dedup.DefaultPairBudget,
-      s"partCoOccurrence: the hottest order carries $hot distinct parts " +
-        s"(~${hot * (hot - 1L) / 2L} pairs from ONE basket; budget " +
-        s"${graft.ext.Dedup.DefaultPairBudget}; ~${est.getLong(0) / 2} total) — " +
-        "a basket this hot is a key-collapse symptom, not shopping behavior")
-    // ascending array_sort ⇒ every expanded struct already has pa < pb
-    grouped
-      .select(explode(flatten(transform(col("ids"), (x, i) =>
-        transform(slice(col("ids"), i + lit(2), size(col("ids"))),
-          y => struct(x.as("pa"), y.as("pb")))))).as("p"))
-      .select(col("p.pa").as("pa"), col("p.pb").as("pb"))
-      .groupBy("pa", "pb").agg(count(lit(1)).as("w"))
-      .filter(col("w") >= 2)
-  }
-
-  /** Per-user event-type transition digraph, weights = transition counts —
-    * the fixture's natural graph, shared by the `graph_*` gates. */
-  private def eventTransitions(s: SparkSession, d: String): DataFrame = {
-    val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-    events(s, d)
-      .select(col("event_type"), lead("event_type", 1).over(w).as("__next"))
-      .filter(col("__next").isNotNull)
-      .groupBy(col("event_type").as("src"), col("__next").as("dst"))
-      .agg(count(lit(1)).cast("double").as("w"))
-  }
+  private[graft] def li(s: SparkSession, d: String) = Tables.load(s, d, "lineitem")
+  private[graft] def orders(s: SparkSession, d: String) = Tables.load(s, d, "orders")
+  private[graft] def customer(s: SparkSession, d: String) = Tables.load(s, d, "customer")
+  private[graft] def part(s: SparkSession, d: String) = Tables.load(s, d, "part")
+  private[graft] def events(s: SparkSession, d: String) = Tables.load(s, d, "events")
 
   /** SQL twin of [[synthUrls]] (a CTE named `u`), used by both
     * `text_url_*` oracles. */
-  private val synthUrlSql =
+  private[graft] val synthUrlSql =
     """u AS (SELECT doc_id,
       |  CASE doc_id % 8
       |    WHEN 0 THEN 'HTTPS://Example.COM:443/Path/' || doc_id ||
@@ -120,7 +67,7 @@ object Queries {
     * (the blocklist-bypass shape ADVICE r16 flagged) and an IPv6 bracket
     * literal with a default port (shared by the Spark gates and —
     * re-derived in SQL — their oracles). */
-  private def synthUrls(s: SparkSession, d: String): DataFrame = {
+  private[graft] def synthUrls(s: SparkSession, d: String): DataFrame = {
     val id = col("doc_id").cast("string")
     Tables.load(s, d, "documents").select(col("doc_id"),
       when(pmod(col("doc_id"), lit(8)) === 0,
@@ -140,12 +87,12 @@ object Queries {
         concat(lit("https://[2001:DB8::1]:443/v6/"), id))
       .otherwise(concat(lit("not a url "), id)).as("url"))
   }
-  private def docs(s: SparkSession, d: String) = Tables.load(s, d, "documents")
-  private def emb(s: SparkSession, d: String) = Tables.load(s, d, "embeddings")
+  private[graft] def docs(s: SparkSession, d: String) = Tables.load(s, d, "documents")
+  private[graft] def emb(s: SparkSession, d: String) = Tables.load(s, d, "embeddings")
 
   /** SQL twin of [[synthC4Docs]] (a CTE named `c4`), used by the
     * `text_c4_clean` oracle. */
-  private val synthC4Sql =
+  private[graft] val synthC4Sql =
     """c4 AS (SELECT doc_id,
       |  CASE WHEN doc_id % 17 = 0 THEN NULL ELSE concat_ws(chr(10),
       |    'Sentence one for doc ' || doc_id || ' has plenty of words' ||
@@ -168,7 +115,7 @@ object Queries {
     * the javascript line rule, the `lorem ipsum`/`{` document rules, trim
     * before matching, the surviving-line floor, and NULL text (shared by
     * the Spark gate and — re-derived in SQL — its oracle). */
-  private def synthC4Docs(s: SparkSession, d: String): DataFrame = {
+  private[graft] def synthC4Docs(s: SparkSession, d: String): DataFrame = {
     val id = col("doc_id").cast("string")
     val l1 = concat(lit("Sentence one for doc "), id, lit(" has plenty of words"),
       when(pmod(col("doc_id"), lit(11)) === 0, lit(" {.")).otherwise(lit(".")))
@@ -188,84 +135,9 @@ object Queries {
         .otherwise(concat_ws("\n", l1, l2, l3, l4, l5)).as("text"))
   }
 
-  /** Injected multi-script suffixes shared VERBATIM by [[synthScriptDocs]]
-    * and [[synthScriptSql]] (interpolated into both, so the fixtures cannot
-    * fork): a CJK run, a Cyrillic word, a Greek triple, a Katakana word,
-    * and the classic homoglyph spoof — Latin "paypal" with two Cyrillic а
-    * (U+0430), the shape a script-purity screen exists to catch. */
-  private val scrCjk = " 数据处理流水线"
-  private val scrCyr = " данные"
-  private val scrGreek = " αβγ"
-  private val scrKana = " データ"
-  private val scrHomoglyph = " pаypаl"
-
-  /** SQL twin of [[synthScriptDocs]] (a CTE named `sm`), used by the
-    * `text_script_profile` oracle. */
-  private val synthScriptSql =
-    s"""sm AS (SELECT doc_id,
-       |  CASE WHEN doc_id % 13 = 0 THEN NULL ELSE text ||
-       |    CASE WHEN doc_id % 3 = 0 THEN '$scrCjk' ELSE '' END ||
-       |    CASE WHEN doc_id % 5 = 0 THEN '$scrCyr' ELSE '' END ||
-       |    CASE WHEN doc_id % 7 = 0 THEN '$scrGreek' ELSE '' END ||
-       |    CASE WHEN doc_id % 11 = 0 THEN '$scrKana' ELSE '' END ||
-       |    CASE WHEN doc_id % 17 = 0 THEN '$scrHomoglyph' ELSE '' END
-       |  END AS text FROM documents)""".stripMargin
-
-  /** Hostile fixture for the `text_script_profile` gate: the all-ASCII
-    * corpus text with multi-script suffixes injected by doc-id class (plus
-    * NULL rows), so dominance, purity, the n_scripts mix counter, and every
-    * injected class are all exercised and hash-gated. */
-  private def synthScriptDocs(s: SparkSession, d: String): DataFrame =
-    Tables.load(s, d, "documents").select(col("doc_id"),
-      when(pmod(col("doc_id"), lit(13)) === 0, lit(null).cast("string"))
-        .otherwise(concat(col("text"),
-          when(pmod(col("doc_id"), lit(3)) === 0, lit(scrCjk)).otherwise(lit("")),
-          when(pmod(col("doc_id"), lit(5)) === 0, lit(scrCyr)).otherwise(lit("")),
-          when(pmod(col("doc_id"), lit(7)) === 0, lit(scrGreek)).otherwise(lit("")),
-          when(pmod(col("doc_id"), lit(11)) === 0, lit(scrKana)).otherwise(lit("")),
-          when(pmod(col("doc_id"), lit(17)) === 0, lit(scrHomoglyph)).otherwise(lit("")))
-        ).as("text"))
-
-  /** Injected mojibake suffix shared VERBATIM by [[synthEncodingDocs]] and
-    * [[synthEncodingSql]] (interpolated into both, so the two fixtures
-    * cannot fork): double-encoded accents (`Ã©`×3, `Ã¯`), a cp1252 dash
-    * triple (`â€”`), and one `Â`-pair mark — 6 signature hits per
-    * injection. */
-  private val encMojiSuffix = " CafÃ© rÃ©sumÃ© â€” naÃ¯ve Â· moji"
-
-  /** SQL twin of [[synthEncodingDocs]] (a CTE named `enc`), used by the
-    * `text_encoding_screen` oracle. Control/replacement characters enter
-    * via `chr()` so the SQL text itself stays printable. */
-  private val synthEncodingSql =
-    s"""enc AS (SELECT doc_id,
-       |  CASE WHEN doc_id % 23 = 0 THEN NULL ELSE text ||
-       |    CASE WHEN doc_id % 3 = 0 THEN '$encMojiSuffix' ELSE '' END ||
-       |    CASE WHEN doc_id % 5 = 0 THEN ' bad' || chr(65533) || 'bytes' || chr(65533) ELSE '' END ||
-       |    CASE WHEN doc_id % 7 = 0 THEN ' ctl' || chr(7) || chr(146) || 'x' ELSE '' END ||
-       |    CASE WHEN doc_id % 11 = 0 THEN chr(9) || chr(10) || 'tab and newline stay clean' ELSE '' END
-       |  END AS text FROM documents)""".stripMargin
-
-  /** Hostile fixture for the `text_encoding_screen` gate: real corpus text
-    * (signal counts must be zero on clean prose) plus deterministic
-    * injections — mojibake signatures (d%3), U+FFFD replacement chars
-    * (d%5), C0+C1 control chars (d%7), tab/newline that must NOT count
-    * (d%11), and NULL text (d%23) for the three-valued verdict. */
-  private def synthEncodingDocs(s: SparkSession, d: String): DataFrame = {
-    val did = col("doc_id")
-    def inj(m: Int, suffix: String) =
-      when(pmod(did, lit(m)) === 0, lit(suffix)).otherwise(lit(""))
-    Tables.load(s, d, "documents").select(did,
-      when(pmod(did, lit(23)) === 0, lit(null).cast("string"))
-        .otherwise(concat(col("text"),
-          inj(3, encMojiSuffix),
-          inj(5, " bad\uFFFDbytes\uFFFD"),
-          inj(7, " ctl\u0007\u0092x"),
-          inj(11, "\t\ntab and newline stay clean"))).as("text"))
-  }
-
   /** SQL twin of [[synthNfcDocs]] (a CTE named `nfc`), used by the
     * `text_nfc_normalize` oracle. Combining marks enter via `chr()`. */
-  private val synthNfcSql =
+  private[graft] val synthNfcSql =
     """nfc AS (SELECT doc_id,
       |  CASE WHEN doc_id % 19 = 0 THEN NULL ELSE text ||
       |    CASE WHEN doc_id % 3 = 0 THEN ' cafe' || chr(769) || ' decomposed' ELSE '' END ||
@@ -280,7 +152,7 @@ object Queries {
     * combining pair dot-above(ccc 230)+dot-below(ccc 220) that must reorder
     * AND compose (d%5), already-precomposed text that must NOT change
     * (d%7), `A`+U+030A composing to `Å` (d%11), and NULL text (d%19). */
-  private def synthNfcDocs(s: SparkSession, d: String): DataFrame = {
+  private[graft] def synthNfcDocs(s: SparkSession, d: String): DataFrame = {
     val did = col("doc_id")
     def inj(m: Int, suffix: String) =
       when(pmod(did, lit(m)) === 0, lit(suffix)).otherwise(lit(""))
@@ -293,228 +165,15 @@ object Queries {
           inj(11, " A\u030A ring"))).as("text"))
   }
 
-  /** Fixture for the `text_html_extract` gate: corpus text wrapped in
-    * deterministic HTML with the hazards the extractor must survive —
-    * title/style head, an injected script block (d%3), an HTML comment
-    * (d%5), entity-encoded punctuation (d%7), attributes on a trailing
-    * div, and NULL html (d%19). */
-  private def synthHtmlDocs(s: SparkSession, d: String): DataFrame = {
-    val did = col("doc_id")
-    def inj(m: Int, suffix: String) =
-      when(pmod(did, lit(m)) === 0, lit(suffix)).otherwise(lit(""))
-    Tables.load(s, d, "documents").select(did,
-      when(pmod(did, lit(19)) === 0, lit(null).cast("string"))
-        .otherwise(concat(
-          lit("<html><head><title>Doc "), did.cast("string"),
-          lit("</title><style>p{margin:0}</style></head><body><p>"),
-          col("text"),
-          inj(3, " <script type=\"text/javascript\">var x=1;</script>after script"),
-          inj(5, " <!-- hidden\ncomment -->"),
-          inj(7, " a &amp; b &lt;tag&gt;&nbsp;&#39;q&#39; &quot;w&quot;"),
-          inj(4, " <a class=\"x\" href=\"https://example.com/p?id=1\">link</a>"),
-          inj(11, " <A HREF='http://other.net/q'>single</A><a href=\"\">empty</a>"),
-          inj(9, " <ul><li>item one here.</li><li>item two also.</li></ul>pre<br>post<BR/>end"),
-          lit("</p><div class=\"foo\">tail</div></body></html>"))).as("html"))
-  }
-
-  /** SQL twin of [[synthHtmlDocs]] (a CTE named `hx`), used by the
-    * `text_html_extract` oracle. */
-  private val synthHtmlSql =
-    """hx AS (SELECT doc_id,
-      |  CASE WHEN doc_id % 19 = 0 THEN NULL ELSE
-      |    '<html><head><title>Doc ' || doc_id ||
-      |    '</title><style>p{margin:0}</style></head><body><p>' || text ||
-      |    CASE WHEN doc_id % 3 = 0
-      |         THEN ' <script type="text/javascript">var x=1;</script>after script' ELSE '' END ||
-      |    CASE WHEN doc_id % 5 = 0 THEN ' <!-- hidden' || chr(10) || 'comment -->' ELSE '' END ||
-      |    CASE WHEN doc_id % 7 = 0
-      |         THEN ' a &amp; b &lt;tag&gt;&nbsp;&#39;q&#39; &quot;w&quot;' ELSE '' END ||
-      |    CASE WHEN doc_id % 4 = 0
-      |         THEN ' <a class="x" href="https://example.com/p?id=1">link</a>' ELSE '' END ||
-      |    CASE WHEN doc_id % 11 = 0
-      |         THEN ' <A HREF=' || chr(39) || 'http://other.net/q' || chr(39) ||
-      |              '>single</A><a href="">empty</a>' ELSE '' END ||
-      |    CASE WHEN doc_id % 9 = 0
-      |         THEN ' <ul><li>item one here.</li><li>item two also.</li></ul>pre<br>post<BR/>end'
-      |         ELSE '' END ||
-      |    '</p><div class="foo">tail</div></body></html>'
-      |  END AS html FROM documents)""".stripMargin
-
-  /** Fixture for the `pipeline_html_clean` capstone: HTML whose BLOCK
-    * structure carries a per-rule decider for every downstream c4 line
-    * rule — two always-kept sentence paragraphs + a kept trailing div, a
-    * title line that dies on terminal punctuation AND word count, a
-    * too-short line (d%3), a `javascript` line kill (d%4), a
-    * no-terminal-punctuation line (d%5), two extra `<li>` lines (d%2), a
-    * `lorem ipsum` whole-doc kill (d%13), NULL html (d%19). Without
-    * htmlExtract's block→newline structure the whole document would be
-    * ONE line and every per-line rule would fire on the wrong unit — the
-    * seam this composition gate exists to pin. */
-  private def synthHtmlCleanDocs(s: SparkSession, d: String): DataFrame = {
-    val did = col("doc_id")
-    def inj(m: Int, suffix: String) =
-      when(pmod(did, lit(m)) === 0, lit(suffix)).otherwise(lit(""))
-    Tables.load(s, d, "documents").select(did,
-      when(pmod(did, lit(19)) === 0, lit(null).cast("string"))
-        .otherwise(concat(
-          lit("<html><head><title>Page "), did.cast("string"),
-          lit("</title></head><body><p>Document number "), did.cast("string"),
-          lit(" opens with a full sentence.</p>"),
-          lit("<p>Another proper line follows it right here.</p>"),
-          inj(3, "<p>Too short.</p>"),
-          inj(4, "<p>This line mentions javascript so it dies.</p>"),
-          inj(5, "<p>no terminal punctuation on this line</p>"),
-          inj(2, "<ul><li>List item one stays around.</li><li>List item two stays too.</li></ul>"),
-          inj(13, "<p>Filler lorem ipsum phrase kills the whole doc.</p>"),
-          lit("<div>Trailing block also ends properly.</div></body></html>"))).as("html"))
-  }
-
-  /** SQL twin of [[synthHtmlCleanDocs]] (a CTE named `hw`), used by the
-    * `pipeline_html_clean` oracle. */
-  private val synthHtmlCleanSql =
-    """hw AS (SELECT doc_id,
-      |  CASE WHEN doc_id % 19 = 0 THEN NULL ELSE
-      |    '<html><head><title>Page ' || doc_id ||
-      |    '</title></head><body><p>Document number ' || doc_id ||
-      |    ' opens with a full sentence.</p>' ||
-      |    '<p>Another proper line follows it right here.</p>' ||
-      |    CASE WHEN doc_id % 3 = 0 THEN '<p>Too short.</p>' ELSE '' END ||
-      |    CASE WHEN doc_id % 4 = 0
-      |         THEN '<p>This line mentions javascript so it dies.</p>' ELSE '' END ||
-      |    CASE WHEN doc_id % 5 = 0
-      |         THEN '<p>no terminal punctuation on this line</p>' ELSE '' END ||
-      |    CASE WHEN doc_id % 2 = 0
-      |         THEN '<ul><li>List item one stays around.</li><li>List item two stays too.</li></ul>'
-      |         ELSE '' END ||
-      |    CASE WHEN doc_id % 13 = 0
-      |         THEN '<p>Filler lorem ipsum phrase kills the whole doc.</p>' ELSE '' END ||
-      |    '<div>Trailing block also ends properly.</div></body></html>'
-      |  END AS html FROM documents)""".stripMargin
-
   /** The [[graft.ext.TextAnalysis.htmlLinks]] extraction as a DuckDB list
     * expression over an `html` column — ONE combined alternation captures
     * the quoted token in document order, quotes stripped by substring.
     * Shared by the `text_html_links` oracle and the `pipeline_web_graph`
     * head so the link semantics cannot fork. */
-  private val htmlLinksListExpr =
+  private[graft] val htmlLinksListExpr =
     """list_transform(
       |           regexp_extract_all(html, '(?i)<a[^>]*href\s*=\s*("[^"]*"|''[^'']*'')', 1),
       |           u -> substring(u, 2, length(u) - 2))""".stripMargin
-
-  /** Fixture for the `pipeline_web_graph` capstone: a deterministic
-    * 10-host web (`site0.example` … `site9.example`) where each document
-    * links its successor host (double-quoted), even documents add a hub
-    * link carrying a `utm_source` tracking param (single-quoted), and
-    * every fifth document repeats its first link UPPERCASED with an
-    * explicit `:80` — the canonicalizer must collapse it onto the first
-    * link's edge or the edge weights (and therefore the ranks) fork.
-    * NULL html on d%19. */
-  private def synthWebDocs(s: SparkSession, d: String): DataFrame = {
-    val did = col("doc_id")
-    def host(e: org.apache.spark.sql.Column) =
-      concat(lit("site"), pmod(e, lit(10)).cast("string"), lit(".example"))
-    Tables.load(s, d, "documents").select(did,
-      when(pmod(did, lit(19)) === 0, lit(null).cast("string"))
-        .otherwise(concat(
-          lit("<html><body><p>page "), did.cast("string"), lit("</p>"),
-          lit("<a href=\"http://"), host(did + 1), lit("/p/"), did.cast("string"),
-          lit("\">next</a>"),
-          when(pmod(did, lit(2)) === 0,
-            concat(lit(" <a href='https://"), host(did * 3 + 2), lit("/q?id="),
-              did.cast("string"), lit("&utm_source=feed'>hub</a>")))
-            .otherwise(lit("")),
-          when(pmod(did, lit(5)) === 0,
-            concat(lit(" <A HREF=\"HTTP://"), upper(host(did + 1)), lit(":80/p/"),
-              did.cast("string"), lit("\">dup</A>")))
-            .otherwise(lit("")),
-          lit("</body></html>"))).as("html"))
-  }
-
-  /** SQL twin of [[synthWebDocs]] (a CTE named `wg`). */
-  private val synthWebSql =
-    """wg AS (SELECT doc_id,
-      |  CASE WHEN doc_id % 19 = 0 THEN NULL ELSE
-      |    '<html><body><p>page ' || doc_id || '</p>' ||
-      |    '<a href="http://site' || ((doc_id + 1) % 10) || '.example/p/' || doc_id ||
-      |    '">next</a>' ||
-      |    CASE WHEN doc_id % 2 = 0
-      |         THEN ' <a href=' || chr(39) || 'https://site' || ((doc_id * 3 + 2) % 10) ||
-      |              '.example/q?id=' || doc_id || '&utm_source=feed' || chr(39) || '>hub</a>'
-      |         ELSE '' END ||
-      |    CASE WHEN doc_id % 5 = 0
-      |         THEN ' <A HREF="HTTP://SITE' || ((doc_id + 1) % 10) || '.EXAMPLE:80/p/' ||
-      |              doc_id || '">dup</A>'
-      |         ELSE '' END ||
-      |    '</body></html>'
-      |  END AS html FROM documents)""".stripMargin
-
-  /** SQL twin of [[synthReadabilityDocs]] (a CTE named `rd`), used by the
-    * `text_readability` oracle. */
-  private val synthReadabilitySql =
-    """rd AS (SELECT doc_id,
-      |  CASE WHEN doc_id % 19 = 0 THEN NULL ELSE text ||
-      |    CASE WHEN doc_id % 3 = 0 THEN '. One more sentence here. And a question?' ELSE '' END ||
-      |    CASE WHEN doc_id % 5 = 0 THEN ' trailing exclamation!!' ELSE '' END
-      |  END AS text FROM documents)""".stripMargin
-
-  /** Fixture for the `text_readability` gate: the corpus word salad has no
-    * sentence punctuation (the floor-at-1 path), so deterministic
-    * injections add multi-sentence docs (d%3), a `!!` run that must count
-    * as ONE separator (d%5), and NULL text (d%19). */
-  private def synthReadabilityDocs(s: SparkSession, d: String): DataFrame = {
-    val did = col("doc_id")
-    def inj(m: Int, suffix: String) =
-      when(pmod(did, lit(m)) === 0, lit(suffix)).otherwise(lit(""))
-    Tables.load(s, d, "documents").select(did,
-      when(pmod(did, lit(19)) === 0, lit(null).cast("string"))
-        .otherwise(concat(col("text"),
-          inj(3, ". One more sentence here. And a question?"),
-          inj(5, " trailing exclamation!!"))).as("text"))
-  }
-
-  /** SQL twin of [[synthParaDocs]] (a CTE named `pd`), used by the
-    * `dedup_paragraphs_global` oracle. */
-  private val synthParaSql =
-    """pd AS (SELECT doc_id,
-      |  CASE WHEN doc_id % 17 = 0 THEN NULL ELSE concat_ws(chr(10),
-      |    'Subscribe to the newsletter today.',
-      |    CASE WHEN doc_id % 13 = 0 THEN NULL
-      |         ELSE 'Unique insight ' || translate(doc_id::VARCHAR, '0123456789', 'abcdefghij') || ' appears once.' END,
-      |    '',
-      |    'Shared footer for group ' || translate((doc_id % 10)::VARCHAR, '0123456789', 'abcdefghij') || ' here.',
-      |    CASE WHEN doc_id % 7 = 0 THEN 'Echo line for doc ' || translate(doc_id::VARCHAR, '0123456789', 'abcdefghij') || ' repeats.' END,
-      |    CASE WHEN doc_id % 7 = 0 THEN 'Echo line for doc ' || translate(doc_id::VARCHAR, '0123456789', 'abcdefghij') || ' repeats.' END,
-      |    'Release 123 of series ' || (doc_id % 3) || ' shipped.',
-      |    '   ')
-      |  END AS text FROM documents)""".stripMargin
-
-  /** Hostile fixture for the `dedup_paragraphs_global` gate: a global
-    * boilerplate line (every doc), per-group shared footers, per-doc unique
-    * lines (ids spelled in LETTERS so digit folding cannot collide them),
-    * within-doc echoes, a digit-folding collision line ("Release 123" ≡
-    * "Release 000" everywhere), blank/whitespace-only lines, NULL-text
-    * docs, and `%13` docs made ENTIRELY of corpus-duplicated lines so the
-    * empty-document drop is exercised. Mirrored verbatim in
-    * [[synthParaSql]]. */
-  private def synthParaDocs(s: SparkSession, d: String): DataFrame = {
-    val uid = translate(col("doc_id").cast("string"), "0123456789", "abcdefghij")
-    val gid = translate(pmod(col("doc_id"), lit(10)).cast("string"), "0123456789", "abcdefghij")
-    Tables.load(s, d, "documents").select(col("doc_id"),
-      when(pmod(col("doc_id"), lit(17)) === 0, lit(null).cast("string"))
-        .otherwise(concat_ws("\n",
-          lit("Subscribe to the newsletter today."),
-          when(pmod(col("doc_id"), lit(13)) === 0, lit(null).cast("string"))
-            .otherwise(concat(lit("Unique insight "), uid, lit(" appears once."))),
-          lit(""),
-          concat(lit("Shared footer for group "), gid, lit(" here.")),
-          when(pmod(col("doc_id"), lit(7)) === 0,
-            concat(lit("Echo line for doc "), uid, lit(" repeats."))),
-          when(pmod(col("doc_id"), lit(7)) === 0,
-            concat(lit("Echo line for doc "), uid, lit(" repeats."))),
-          concat(lit("Release 123 of series "), pmod(col("doc_id"), lit(3)).cast("string"),
-            lit(" shipped.")),
-          lit("   "))).as("text"))
-  }
 
   /** The [[graft.ext.TextAnalysis.htmlExtract]] chain as reusable CTEs
     * (`hc1`..`hcc`, final relation `hcc(doc_id, clean_text)`) over a
@@ -524,7 +183,7 @@ object Queries {
     * verbatim (shared Java-regex/RE2 syntax); newlines enter as chr(10)
     * replacements because a DuckDB replacement string does not interpret
     * escapes. */
-  private def htmlExtractSql(src: String): String =
+  private[graft] def htmlExtractSql(src: String): String =
     s"""hc1 AS (SELECT doc_id, regexp_replace(html, '<!--.*?-->', ' ', 'gs') AS t FROM $src),
        |hc2 AS (SELECT doc_id, regexp_replace(t, '<script[^>]*>.*?</script>', ' ', 'gis') AS t FROM hc1),
        |hc3 AS (SELECT doc_id, regexp_replace(t, '<style[^>]*>.*?</style>', ' ', 'gis') AS t FROM hc2),
@@ -546,7 +205,7 @@ object Queries {
     * source relation with `(doc_id, text)` — shared by the standalone gate
     * and the `pipeline_clean_corpus` capstone so the SQL twin of
     * [[graft.ext.TextAnalysis.c4Clean]] cannot fork. */
-  private def c4CleanSql(src: String): String =
+  private[graft] def c4CleanSql(src: String): String =
     s"""ct AS (SELECT doc_id, lower(text) AS lt,
        |        list_filter(list_transform(string_split(text, chr(10)), l -> trim(l)), l ->
        |          (ends_with(l, '.') OR ends_with(l, '!') OR ends_with(l, '?')
@@ -566,7 +225,7 @@ object Queries {
     * `gopherStopwords` parameter). Shared by the standalone gate and the
     * capstone so the SQL twin of
     * [[graft.ext.TextAnalysis.gopherQuality]] cannot fork. */
-  private def gopherMetricsSql(src: String,
+  private[graft] def gopherMetricsSql(src: String,
       stopsSql: String = "['the','be','to','of','and','that','have','with']"): String =
     s"""gt AS (SELECT doc_id, text,
        |        list_filter(regexp_split_to_array(text, '\\s+'), w -> len(w) > 0) AS w,
@@ -611,7 +270,7 @@ object Queries {
   /** The gate's `keep` conjunction (minWords 10, bullet frac 0.5, all
     * other thresholds the Gopher defaults) — shared verbatim by the
     * standalone gate and the capstone's filter. */
-  private val gopherKeepSql =
+  private[graft] val gopherKeepSql =
     """(n_words >= 10 AND n_words <= 100000
       |        AND mean_word_len >= 3.0 AND mean_word_len <= 10.0
       |        AND hash_word_ratio <= 0.1 AND ellipsis_word_ratio <= 0.1
@@ -622,7 +281,7 @@ object Queries {
   /** The corpus-unigram surprisal CTEs (`tok`, `f`, `n`) over `documents` —
     * shared by the `text_surprisal` oracle and the `pipeline_ccnet_buckets`
     * capstone so the score formula cannot fork across mirrors. */
-  private val surprisalCtes =
+  private[graft] val surprisalCtes =
     """tok AS (SELECT doc_id, unnest(regexp_split_to_array(text, '\s+')) AS w
       |               FROM documents),
       |f AS (SELECT w, count(*) AS f FROM tok GROUP BY w),
@@ -632,7 +291,7 @@ object Queries {
     * fixture — shared by the `text_url_canonicalize` oracle and the
     * `dedup_url_canonical` dedup key, so the five-step canonicalization
     * mirror cannot fork between them. */
-  private val canonicalUrlCtes =
+  private[graft] val canonicalUrlCtes =
     """nf AS (SELECT doc_id, url, regexp_replace(trim(url), '#.*$', '') AS nofrag FROM u),
       |pf AS (SELECT doc_id, url, nofrag,
       |              regexp_extract(nofrag, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1) AS scheme,
@@ -667,7 +326,7 @@ object Queries {
       |        FROM q)""".stripMargin
 
   /** The final canonical-URL expression over the `k` CTE (same sharing). */
-  private val canonicalUrlExpr =
+  private[graft] val canonicalUrlExpr =
     """CASE WHEN query IS NULL THEN base
       |            WHEN len(kept) = 0 THEN base
       |            ELSE base || '?' || array_to_string(kept, '&') END""".stripMargin
@@ -676,145 +335,16 @@ object Queries {
     * fixture — shared by all three URL oracles so the host semantics (the
     * r16 advisory's userinfo-bypass fix) cannot fork across mirrors.
     * `extra` threads passthrough columns (e.g. `", url"`). */
-  private def urlHostSql(extra: String = "", src: String = "u"): String =
+  private[graft] def urlHostSql(extra: String = "", src: String = "u"): String =
     s"""h AS (SELECT doc_id$extra, lower(CASE WHEN starts_with(a, '[')
        |                THEN regexp_extract(a, '^(\\[[^\\]]*\\])', 1)
        |                ELSE split_part(a, ':', 1) END) AS host
        |        FROM (SELECT doc_id$extra, regexp_extract(url,
        |                '^[A-Za-z][A-Za-z0-9+.-]*://(?:[^/?#]*@)?([^/?#]*)', 1) AS a FROM $src) ha)""".stripMargin
 
-  /** SQL twin of [[synthGopherDocs]] (a CTE named `g`), used by the
-    * `text_gopher_quality` oracle. */
-  private val synthGopherSql =
-    """g AS (SELECT doc_id,
-      |  CASE WHEN doc_id % 19 = 0 THEN NULL
-      |       WHEN doc_id % 17 = 0 THEN 'Tiny.'
-      |       ELSE concat_ws(chr(10),
-      |    CASE WHEN doc_id % 3 = 0 THEN 'zzz qqq 123 9876 xyzzy plugh wibble wobble flarn quux blorp snarf'
-      |         ELSE 'The quality of doc ' || doc_id || ' should be fine with that measure.' END,
-      |    CASE WHEN doc_id % 3 = 0 THEN 'gibberish continues apace without small common glue terms anywhere sadly'
-      |         WHEN doc_id % 7 = 0 THEN '• bullet item one for doc ' || doc_id
-      |         ELSE 'Words continue to flow for doc ' || doc_id || ' and they have value.' END,
-      |    CASE WHEN doc_id % 3 = 0 THEN 'more nonsense words parade past meaning nothing useful today'
-      |         WHEN doc_id % 7 = 0 THEN '• second bullet line here'
-      |         WHEN doc_id % 13 = 0 THEN '#### ### ## # more #hash #noise ###'
-      |         ELSE 'A further line keeps the document healthy.' END,
-      |    CASE WHEN doc_id % 5 = 0 THEN 'this trailing thought just drifts away...'
-      |         WHEN doc_id % 29 = 0 THEN '12 34 56 78 90 11 22 33 44 55' END,
-      |    CASE WHEN doc_id % 5 = 0 THEN 'and so does this one...' END,
-      |    CASE WHEN doc_id % 11 = 0 THEN 'Repeated filler line for the dup rule.' END,
-      |    CASE WHEN doc_id % 11 = 0 THEN 'Repeated filler line for the dup rule.' END,
-      |    CASE WHEN doc_id % 11 = 0 THEN 'Repeated filler line for the dup rule.' END)
-      |  END AS text FROM documents)""".stripMargin
-
-  /** Hostile fixture for the `text_gopher_quality` gate: per-rule deciders —
-    * stopword-free gibberish (d%3), bullet-heavy (d%7), ellipsis-trailing
-    * lines (d%5), hash-symbol noise (d%13), numeric non-alpha words (d%29),
-    * triplicated lines (d%11), a one-word doc (d%17), NULL text (d%19) —
-    * built from the same deterministic arithmetic as [[synthGopherSql]]. */
-  private def synthGopherDocs(s: SparkSession, d: String): DataFrame = {
-    val did = col("doc_id")
-    val id = did.cast("string")
-    val gib = pmod(did, lit(3)) === 0
-    val l1 = when(gib,
-        lit("zzz qqq 123 9876 xyzzy plugh wibble wobble flarn quux blorp snarf"))
-      .otherwise(concat(lit("The quality of doc "), id,
-        lit(" should be fine with that measure.")))
-    val l2 = when(gib,
-        lit("gibberish continues apace without small common glue terms anywhere sadly"))
-      .when(pmod(did, lit(7)) === 0, concat(lit("• bullet item one for doc "), id))
-      .otherwise(concat(lit("Words continue to flow for doc "), id,
-        lit(" and they have value.")))
-    val l3 = when(gib, lit("more nonsense words parade past meaning nothing useful today"))
-      .when(pmod(did, lit(7)) === 0, lit("• second bullet line here"))
-      .when(pmod(did, lit(13)) === 0, lit("#### ### ## # more #hash #noise ###"))
-      .otherwise(lit("A further line keeps the document healthy."))
-    val l4 = when(pmod(did, lit(5)) === 0, lit("this trailing thought just drifts away..."))
-      .when(pmod(did, lit(29)) === 0, lit("12 34 56 78 90 11 22 33 44 55"))
-    val l4b = when(pmod(did, lit(5)) === 0, lit("and so does this one..."))
-    val dup = lit("Repeated filler line for the dup rule.")
-    val l5 = when(pmod(did, lit(11)) === 0, dup)
-    val l6 = when(pmod(did, lit(11)) === 0, dup)
-    val l7 = when(pmod(did, lit(11)) === 0, dup)
-    Tables.load(s, d, "documents").select(did,
-      when(pmod(did, lit(19)) === 0, lit(null).cast("string"))
-        .when(pmod(did, lit(17)) === 0, lit("Tiny."))
-        .otherwise(concat_ws("\n", l1, l2, l3, l4, l4b, l5, l6, l7)).as("text"))
-  }
-
-  /** Exact-dedup corpus selection (the `pipeline_corpus_select` capstone,
-    * shared by the sampled variant): fingerprint-dedup winners ∩ token-length
-    * filter ∩ language-ID agreement, composed purely from library operators. */
-  private def corpusSelect(s: SparkSession, d: String): DataFrame = {
-    val doc = docs(s, d)
-    val keep = Dedup.exact(
-      doc.withColumn("fp",
-        md5(concat_ws(" ", array_sort(array_distinct(TextAnalysis.tokens(col("text"))))))),
-      Seq("fp"), "doc_id").select("doc_id")
-    val toks = TextAnalysis.tokenStats(doc).select("doc_id", "n_tokens")
-    val lang = TextAnalysis.langId(doc).select("doc_id", "pred_lang")
-    doc.join(keep, "doc_id")
-      .join(toks, "doc_id")
-      .join(lang, "doc_id")
-      .filter(col("n_tokens") >= 5 && col("pred_lang") === col("lang"))
-      .select("doc_id", "lang", "n_chars", "n_tokens")
-  }
-
-  /**
-   * Run `body` with `spark.sql.shuffle.partitions` temporarily lowered to
-   * `n` — STREAMING drains only. A stateful streaming operator instantiates
-   * one state store (checkpoint dir, provider, maintenance task) per
-   * shuffle partition per stateful operator; at the gate/bench data scale
-   * that lifecycle dominates the actual work, so drains size state
-   * partitions to their load exactly as a production job sizes
-   * `shuffle.partitions` to its stream volume (the partition count is
-   * pinned into the checkpoint at first start — a real deployment chooses
-   * it deliberately; riding the batch session default is the accident).
-   * Restored in `finally`, so surrounding batch plans are untouched.
-   */
-  private def withStatePartitions[T](s: SparkSession, n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, n.toString)
-    try body finally s.conf.set(key, prev)
-  }
-
-  /** Stage the events fixture into a stream-source dir, LAYOUT-AGNOSTIC:
-    * sf0.1 ships `events.parquet` as one file, but scaled replicas
-    * (`BuildScaled`) ship it as a parquet DIRECTORY of part files — a plain
-    * `Files.copy` of a directory copies only the empty dir entry, the
-    * stream reads zero rows, and the gate dies far from the cause (the sf1
-    * 10× probe hit exactly this). Part files land directly in `in` (the
-    * file stream source does not recurse into subdirs), `prefix`ed so
-    * repeated stagings of the same fixture never collide. */
-  private def stageEvents(d: String, in: java.nio.file.Path, prefix: String): Unit = {
-    val src = java.nio.file.Paths.get(d, "events.parquet")
-    if (java.nio.file.Files.isDirectory(src)) {
-      val st = java.nio.file.Files.list(src)
-      try st.forEach { p =>
-        if (p.toString.endsWith(".parquet"))
-          java.nio.file.Files.copy(p, in.resolve(s"$prefix-${p.getFileName}"))
-      } finally st.close()
-    } else java.nio.file.Files.copy(src, in.resolve(s"$prefix.parquet"))
-  }
-
-  /** events + deterministic synthetic `update_ts` (no update-date column in
-    * the fixtures — FIXTURES.md): `ts + (event_id % 7) days`. */
-  private def eventsWithUpdateTs(s: SparkSession, d: String): DataFrame =
-    events(s, d).withColumn("update_ts",
-      expr("ts + make_dt_interval(cast(event_id % 7 as int), 0, 0, 0)"))
-
-  private val evCte =
-    """WITH ev AS (SELECT event_id, ts, ts + (event_id % 7) * INTERVAL 1 DAY AS update_ts FROM events)"""
-  private val changedKeysSql =
-    """SELECT event_id FROM ev
-      | WHERE CAST(update_ts AS DATE) BETWEEN DATE '2024-01-05' AND DATE '2024-01-09'
-      |   AND event_id NOT IN (SELECT event_id FROM ev
-      |                         WHERE CAST(ts AS DATE) BETWEEN DATE '2024-01-05' AND DATE '2024-01-09')""".stripMargin
-
   /** events projection with ts truncated to microseconds on the DuckDB side
     * (our Spark reader already yields micro-precision TIMESTAMP_NTZ). */
-  private val evCols = "event_id, CAST(ts AS TIMESTAMP) AS ts, user_id, event_type, value, props"
+  private[graft] val evCols = "event_id, CAST(ts AS TIMESTAMP) AS ts, user_id, event_type, value, props"
 
   /** The registered SQL transformation steps (sproc analog, O1). */
   val Steps = new SqlStepRegistry(Map(
@@ -831,3364 +361,6 @@ object Queries {
         | WHERE o_orderdate BETWEEN TIMESTAMP '{start_ts}' AND TIMESTAMP '{end_ts}'
         | GROUP BY date_trunc('day', o_orderdate)""".stripMargin))
 
-  // =========================================================================
-  // queries — (SparkSession, sfDir) => DataFrame
-  // =========================================================================
-
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // ---- scans / predicates / projections (§2.1, §2.2) ----
-    "s1_full_scan" -> ((s, d) => customer(s, d)),
-    "s2_window_scan" -> ((s, d) => Ops.windowScan(li(s, d), "l_shipdate", LiFrom, LiTo)),
-    "p1_drop_audit" -> ((s, d) =>
-      Ops.dropAudit(li(s, d)
-        .withColumn("ID", col("l_orderkey") * 10 + col("l_linenumber"))
-        .withColumn("Insert_DateTime", lit(java.time.LocalDateTime.of(2024, 1, 1, 0, 0))))),
-    "p2_key_projection" -> ((s, d) => orders(s, d).select("o_orderkey")),
-    "p4_cast_date_window" -> ((s, d) =>
-      orders(s, d).filter(Ops.datePredicate("o_orderdate", OrdFrom, OrdTo))),
-    "p5_key_membership" -> ((s, d) =>
-      orders(s, d).filter(col("o_orderkey").isin(1L, 2L, 3L, 5L, 8L, 13L, 21L, 34L, 55L, 89L))),
-
-    // ---- joins / set ops: the sync pipeline semantics (§2.3, §2.7) ----
-    "j1_changed_keys" -> ((s, d) => {
-      val ev = eventsWithUpdateTs(s, d)
-      Ops.changedKeys(ev, "event_id", "ts", "update_ts", EvFrom, EvTo)
-    }),
-    "j2_keyed_fetch" -> ((s, d) => {
-      val ev = eventsWithUpdateTs(s, d)
-      val changed = Ops.changedKeys(ev, "event_id", "ts", "update_ts", EvFrom, EvTo)
-      Ops.keyedFetch(events(s, d), "event_id", changed)
-    }),
-    "a3_keyed_delete" -> ((s, d) => {
-      val ev = eventsWithUpdateTs(s, d)
-      val changed = Ops.changedKeys(ev, "event_id", "ts", "update_ts", EvFrom, EvTo)
-      Ops.keyedDelete(events(s, d), "event_id", changed)
-    }),
-    "a4_upsert" -> ((s, d) => {
-      val ev = eventsWithUpdateTs(s, d)
-      val changed = Ops.changedKeys(ev, "event_id", "ts", "update_ts", EvFrom, EvTo)
-      // target = state loaded through the window end; source = rows as later modified
-      val target = events(s, d).filter(to_date(col("ts")) <= lit(EvTo))
-      val source = events(s, d).withColumn("value", col("value") + 1)
-      Ops.upsert(target, source, "event_id", changed)
-    }),
-    // entry-point C end-to-end (SURVEY.md §3.3): changed-key discovery and
-    // upsert composed by the library itself — target is the state as of the
-    // window end, source carries the synthetic update_ts
-    "o2_incremental_update" -> ((s, d) => {
-      val ev = eventsWithUpdateTs(s, d)
-      val target = ev.filter(to_date(col("ts")) <= lit(EvTo))
-      Ops.incrementalUpdate(target, ev, "event_id", "ts", "update_ts", EvFrom, EvTo)
-    }),
-    // incremental materialized-rollup refresh: stale daily agg keeps its
-    // out-of-window days; the window's days are re-aggregated from the
-    // (updated) window rows only. The oracle is the FULL re-aggregation of
-    // the refreshed base — the equivalence the operator claims
-    "o3_agg_maintain" -> ((s, d) => {
-      val ev = events(s, d)
-      def dailyAgg(df: DataFrame) = df.groupBy(
-          date_trunc("day", col("ts")).cast("timestamp_ntz").as("day"), col("event_type"))
-        .agg(count(lit(1)).as("n_events"),
-          round(sum(col("value").cast("decimal(18,2)")).cast("double"), 2).as("total_value"))
-      val stale = dailyAgg(ev)
-      val freshWindow = ev.filter(Ops.datePredicate("ts", EvFrom, EvTo))
-        .withColumn("value", col("value") + 1)
-      Ops.maintainDailyAgg(stale, freshWindow, "day", EvFrom, EvTo)(dailyAgg)
-    }),
-    // the SKETCH profile's error bounds gated at the driver: approximate
-    // output has no bit-stable cross-engine form, but its theoretical
-    // bounds do — emit every bound VIOLATION (HLL distinct estimate off by
-    // > 5×rsd; approx p50/p99 outside a generous exact-percentile
-    // envelope, rank error ≤ n/accuracy = 1 row here) and require the
-    // result to be EMPTY, which a WHERE FALSE oracle checks exactly.
-    "profile_sketch_bounds" -> ((s, d) => {
-      val ev = events(s, d)
-      val approx = ext.Profiling.approxProfile(ev, Seq("user_id", "event_type"), Seq("value"))
-      val exact = ext.Profiling.profile(ev, Seq("user_id", "event_type"))
-      val env = ev.agg(
-        expr("percentile(value, 0.45)").cast("double").as("p45"),
-        expr("percentile(value, 0.55)").cast("double").as("p55"),
-        expr("percentile(value, 0.97)").cast("double").as("p97"),
-        expr("percentile(value, 0.999)").cast("double").as("p999")).head()
-      val distinctViolations = approx.filter(col("approx_distinct").isNotNull)
-        .join(exact.select(col("col_name"), col("n_distinct")), "col_name")
-        .filter(abs(col("approx_distinct") - col("n_distinct")).cast("double")
-          > lit(0.10) * col("n_distinct")) // 5 × rsd(0.02)
-        .select(col("col_name"), lit("approx_distinct").as("metric"),
-          col("approx_distinct").cast("double").as("value"))
-      val pViolations = approx.filter(col("approx_p50").isNotNull)
-        .filter(!col("approx_p50").between(env.getDouble(0), env.getDouble(1)) ||
-          !col("approx_p99").between(env.getDouble(2), env.getDouble(3)))
-        .select(col("col_name"), lit("approx_percentile").as("metric"),
-          col("approx_p50").as("value"))
-      distinctViolations.unionByName(pViolations)
-    }),
-    // declarative data-quality report over the copied fact table — the QA
-    // gate the reference gets from SQL Server constraints and a parquet
-    // lake needs explicitly. Row-local checks fuse into ONE scan; unique
-    // and referential checks are one keyed pass each. Mixed pass/fail
-    // counts on the fixtures keep the gate honest (not all-zeros).
-    "validate_orders" -> ((s, d) => {
-      import graft.ext.Validate
-      Validate.report(orders(s, d), Seq(
-        Validate.NotNull("o_custkey"),
-        Validate.AcceptedValues("o_orderstatus", Seq("O", "F")),
-        Validate.InRange("o_totalprice", Some(0.0), Some(150000.0)),
-        Validate.Predicate("o_orderkey", "positive_key", col("o_orderkey") > 0),
-        Validate.Unique(Seq("o_orderkey")),
-        Validate.RefIntegrity("o_custkey", customer(s, d), "c_custkey")))
-    }),
-    // entry points A+B+C end-to-end at the driver gate: the phased Runner
-    // (classify → copy+update fact → plain fact → parallel dim) over a temp
-    // source/target TableStore pair built inside the query, with the ledger
-    // row counts riding along as extra rows. The oracle reconstructs the
-    // post-state of every table (window reload, changed-key upsert, dim
-    // truncate-reload) plus the four Completed ledger records in DuckDB.
-    // Output is canonicalized to (src_table, k, v_num, v_str) scalar rows.
-    "o4_runner_e2e" -> ((s, d) => {
-      // source warehouse (a copy+update fact with synthetic update_ts, a
-      // plain windowed fact, and a dim) staged once per JVM and COPIED per
-      // invocation (r20 fixture-class move — the staging is gate setup,
-      // not the Runner work this gate certifies; Verify still stages it
-      // from scratch). The Runner's classify/dispatch/copy/upsert/ledger
-      // phases run fresh against a fresh target store every time.
-      val srcDir = java.nio.file.Files.createTempDirectory("graft-o4-src")
-      copyTree(java.nio.file.Path.of(o4SourceWarehouseDir(s, d)), srcDir)
-      val srcStore = new graft.store.TableStore(s, srcDir.toString)
-      val tgtStore = new graft.store.TableStore(s,
-        java.nio.file.Files.createTempDirectory("graft-o4-tgt").toString)
-      val clock = () => java.time.LocalDateTime.of(2024, 6, 1, 12, 0)
-      val ledger = new graft.ledger.Ledger(s, tgtStore, clock = clock)
-      val cfg = graft.config.EngineConfig(
-        sourceSchema = "src", targetSchema = "tgt", scheduleMode = None,
-        dateFrom = Some(EvFrom.toString), dateTo = Some(EvTo.toString),
-        tables = Seq(
-          graft.config.TableSpec("events_cu", "fact", dateColumn = Some("ts"),
-            updateDateColumn = Some("update_ts"), primaryKey = Some("event_id")),
-          graft.config.TableSpec("events_plain", "fact", dateColumn = Some("ts")),
-          graft.config.TableSpec("customer", "dim")))
-      val results = new graft.pipeline.Runner(s, srcStore, tgtStore, ledger, clock = clock).run(cfg)
-      require(results.forall(_.ok),
-        s"o4_runner_e2e: failed table results: ${results.filterNot(_.ok).mkString("; ")}")
-      def canon(table: String, df: DataFrame, k: org.apache.spark.sql.Column,
-          vNum: org.apache.spark.sql.Column, vStr: org.apache.spark.sql.Column) =
-        df.select(lit(table).as("src_table"), k.cast("long").as("k"),
-          vNum.cast("double").as("v_num"), vStr.cast("string").as("v_str"))
-      canon("events_cu", tgtStore.read("events_cu"),
-          col("event_id"), col("value"), col("event_type"))
-        .unionByName(canon("events_plain", tgtStore.read("events_plain"),
-          col("event_id"), col("value"), col("event_type")))
-        .unionByName(canon("customer", tgtStore.read("customer"),
-          col("c_custkey"), col("c_acctbal"), col("c_name")))
-        .unionByName(canon("ledger", ledger.latest,
-          col("recordsCopied"), lit(null),
-          concat_ws("/", col("tableName"), col("process"), col("status"))))
-    }),
-    // schema evolution at the driver gate: a table whose later appends
-    // added a column must read as the union-by-name of both schema
-    // generations (old rows NULL for the new column) — the mergeSchema
-    // read path (S6/S9 storage extension), not one arbitrary footer's view
-    "o5_evolved_read" -> ((s, d) => {
-      val store = new graft.store.TableStore(s,
-        java.nio.file.Files.createTempDirectory("graft-o5").toString)
-      val ord = orders(s, d)
-      store.atomicOverwrite("orders_evolving",
-        ord.filter(col("o_orderkey") % 2 === 0).select("o_orderkey", "o_custkey"))
-      store.append("orders_evolving",
-        ord.filter(col("o_orderkey") % 2 === 1)
-          .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus")))
-      store.readEvolved("orders_evolving")
-    }),
-    // object-store-safe commit protocol at the driver gate: the same
-    // overwrite→append→compact lifecycle as o5 but through POINTER commits
-    // (immutable generation dirs + atomic create-if-absent markers — the
-    // protocol a 100 TB object-store deployment needs, where rename is a
-    // non-atomic copy+delete). The read resolves the manifest chain; the
-    // oracle is simply the reconstructed row set.
-    "o6_pointer_commit" -> ((s, d) => {
-      val store = new graft.store.TableStore(s,
-        java.nio.file.Files.createTempDirectory("graft-o6").toString,
-        graft.store.CommitMode.Pointer)
-      val ord = orders(s, d).select("o_orderkey", "o_custkey", "o_orderstatus")
-      store.atomicOverwrite("ord_ptr", ord.filter(col("o_orderkey") % 2 === 0))
-      store.append("ord_ptr", ord.filter(col("o_orderkey") % 2 === 1))
-      store.compact("ord_ptr", 4) // folds the append generations into one
-      store.read("ord_ptr")
-    }),
-    // generation time travel on the o6 pointer protocol: three publishes
-    // under retention 3, then every retained snapshot read back exactly
-    // as-published and tagged — the reproducible-training-run / audit path
-    // (pin the generation a job read, re-read it bit-identically later)
-    "o7_time_travel" -> ((s, d) => {
-      // committed store from the per-JVM fixture cache (r20 wave 2): the
-      // three staged commits are corpus-deterministic setup; the operator
-      // this gate certifies — resolving and re-reading PINNED generations
-      // bit-identically — runs fresh below, READ-ONLY on the cached store.
-      // The write path stays certified by the first build per JVM (the
-      // driver Verify) and TableStoreSpec.
-      val store = new graft.store.TableStore(s, o7StoreDir(s, d),
-        graft.store.CommitMode.Pointer, keepGenerations = 3)
-      val gens = store.generations("ord_tt") // newest first
-      require(gens.size == 3, s"o7_time_travel: expected 3 retained generations, got $gens")
-      def snap(g: Long, tag: String) =
-        store.readGeneration("ord_tt", g).withColumn("snap", lit(tag))
-      snap(gens(2), "v1").unionByName(snap(gens(1), "v2")).unionByName(snap(gens.head, "v3"))
-    }),
-    // manifest-stats data skipping on a range-clustered pointer table: a
-    // narrow price band must open a strict subset of the 16 clustered
-    // files (pruneEvidence is asserted, not assumed) and still return
-    // exactly the filtered table
-    "o8_stats_pruned_read" -> ((s, d) => {
-      // clustered store from the per-JVM fixture cache (see o7): the gate
-      // certifies the manifest-stats PRUNED READ, fresh below, READ-ONLY
-      val store = new graft.store.TableStore(s, o8StoreDir(s, d),
-        graft.store.CommitMode.Pointer, statsColumns = Seq("o_totalprice"))
-      val (kept, total) = store.pruneEvidence("ord_sk", "o_totalprice", 50000.0, 100000.0)
-      require(kept < total,
-        s"o8_stats_pruned_read: expected pruning on the clustered layout, kept $kept of $total")
-      store.readWhere("ord_sk", "o_totalprice", 50000.0, 100000.0)
-    }),
-    // the 100 TB fact-table shape: date-PARTITIONED and pointer-committed,
-    // with per-file stats recorded INSIDE partition subdirs — a narrow band
-    // on a non-partition column prunes files within every month (fine axis),
-    // a band on the partition column skips whole month dirs (coarse axis),
-    // and both compose; every prune is asserted, not assumed
-    "o9_part_pruned_read" -> ((s, d) => {
-      // date-partitioned store from the per-JVM fixture cache (see o7):
-      // the gate certifies BOTH pruning axes + the composed read, fresh
-      // below, READ-ONLY on the cached store
-      val store = new graft.store.TableStore(s, o9StoreDir(s, d),
-        graft.store.CommitMode.Pointer, statsColumns = Seq("o_totalprice"))
-      val (kf, tf) = store.pruneEvidence("ord_pp", "o_totalprice", 50000.0, 100000.0)
-      require(kf < tf, s"o9: file axis inside partitions must prune, kept $kf of $tf")
-      val m = java.sql.Date.valueOf("1997-03-01")
-      val (kp, tp) = store.pruneEvidence("ord_pp", "o_month", m, m)
-      require(kp < tp, s"o9: partition axis must prune, kept $kp of $tp")
-      val both = Seq[(String, Any, Any)](("o_month", m, m), ("o_totalprice", 50000.0, 100000.0))
-      val (kb, _) = store.pruneEvidence("ord_pp", both)
-      require(kb <= math.min(kf, kp), s"o9: composed axes must intersect, kept $kb vs $kf/$kp")
-      store.readWhere("ord_pp", both)
-        .select("o_orderkey", "o_custkey", "o_totalprice", "o_month")
-    }),
-    // run-level multi-table snapshot: one atomic _run marker pins the pair
-    // of tables a run published; a later half-finished run that already
-    // republished one table does NOT leak into the snapshot view — the
-    // reconstruction below must equal the FULL original pair
-    "o10_run_snapshot" -> ((s, d) => {
-      // staged store + published snapshot id from the per-JVM fixture
-      // cache (see o7), including the mid-flight republish; the operator
-      // this gate certifies — snapshot-isolated reconstruction of the
-      // FULL original pair — runs fresh below, READ-ONLY
-      val (snapDir, snap) = o10Fixture(s, d)
-      val store = new graft.store.TableStore(s, snapDir,
-        graft.store.CommitMode.Pointer, keepGenerations = 3)
-      def canon(tag: String, df: DataFrame, k: org.apache.spark.sql.Column,
-          v: org.apache.spark.sql.Column, n: org.apache.spark.sql.Column) =
-        df.select(lit(tag).as("src_table"), k.cast("long").as("k"),
-          v.cast("double").as("v"), n.cast("string").as("name"))
-      canon("cust", store.readSnapshot(snap, "cust_s"),
-          col("c_custkey"), col("c_acctbal"), col("c_name"))
-        .unionByName(canon("ord", store.readSnapshot(snap, "ord_s"),
-          col("o_orderkey"), col("o_totalprice"), lit(null)))
-    }),
-    // generation diff: the incremental-consumer surface over the commit
-    // history — a consumer that processed generation v1 learns exactly the
-    // insert/delete multiset that produces v2, from the store alone
-    "o12_generation_diff" -> ((s, d) => {
-      // two-generation store from the per-JVM fixture cache (see o7): the
-      // operator this gate certifies is generationDiff, fresh, READ-ONLY
-      val store = new graft.store.TableStore(s, o12StoreDir(s, d),
-        graft.store.CommitMode.Pointer, keepGenerations = 3)
-      val gens = store.generations("ord_d") // newest first
-      store.generationDiff("ord_d", gens(1), gens.head)
-    }),
-    // partition-scoped generation diff: a one-month overwrite on a
-    // month-partitioned table must DIFF one month — shared manifest entries
-    // are skipped before any scan (the incremental-consumer path at 100 TB:
-    // diff cost tracks the changed partitions, never the table)
-    "o12_diff_partition_scoped" -> ((s, d) => {
-      // month-partitioned two-generation store from the per-JVM fixture
-      // cache (see o7): the operator this gate certifies — the diff
-      // scanning ~one month's files, evidence-checked — runs fresh below,
-      // READ-ONLY on the cached store
-      val store = new graft.store.TableStore(s, o12pStoreDir(s, d),
-        graft.store.CommitMode.Pointer, keepGenerations = 3)
-      val gens = store.generations("ord_pd")
-      val (scanned, total) = store.generationDiffEvidence("ord_pd", gens(1), gens.head)
-      require(scanned < total / 3,
-        s"o12p: one-month change must diff ~one month's files: scanned $scanned of $total")
-      store.generationDiff("ord_pd", gens(1), gens.head)
-    }),
-    // store change feed: the commit history consumed as ordered CDC batches
-    // (insert/delete multisets per commit, batch-stamped) — the engine's own
-    // changed-key propagation, no source column convention needed
-    "o13_change_feed" -> ((s, d) => {
-      // staged store + consumer cursor from the per-JVM fixture cache (see
-      // o7): the operator this gate certifies — draining the commit
-      // history as ordered CDC batches — runs fresh below, READ-ONLY
-      val (feedDir, cursor) = o13Fixture(s, d)
-      val store = new graft.store.TableStore(s, feedDir,
-        graft.store.CommitMode.Pointer, keepGenerations = 4)
-      var batchNo = 0
-      var acc: Option[DataFrame] = None
-      graft.streaming.EventStream.drainChanges(store, "ord_f", cursor) { (diff, _) =>
-        batchNo += 1
-        val stamped = diff.withColumn("batch", lit(batchNo))
-        acc = Some(acc.map(_.unionByName(stamped)).getOrElse(stamped))
-      }
-      require(batchNo == 2, s"o13: two commits after the cursor, drained $batchNo")
-      acc.get
-    }),
-    // JSONL shard export round-trip: the corpus written as line-JSON shards
-    // (<= 100 records each — the training-stack delivery format) and read
-    // back under the SOURCE schema must equal the table itself; escaping,
-    // NULLs, and int widths all ride the gate hash
-    "o14_export_jsonl" -> ((s, d) => {
-      val doc = docs(s, d)
-      val dir = java.nio.file.Files.createTempDirectory("graft-jsonl").toString + "/docs"
-      graft.io.Export.jsonlShards(doc, dir, maxRecordsPerShard = 100,
-        compression = Some("gzip"))
-      graft.io.Export.readJsonl(s, dir, doc.schema)
-    }),
-    // WET (Common Crawl extracted-text) ingest: documents encoded as
-    // standard WARC/1.0 conversion records (Content-Length in UTF-8 bytes,
-    // language in the real WET header), then parsed back byte-exactly —
-    // the identity oracle proves the framing (a char-based parser would
-    // already diverge on the fixture's multibyte text)
-    "o17_ingest_wet" -> ((s, d) => {
-      val doc = docs(s, d).filter(col("text").isNotNull)
-      val dir = java.nio.file.Files.createTempDirectory("graft-wet").toString + "/wet"
-      graft.io.Warc.writeWet(doc.select(
-          concat(lit("urn:graft:doc:"), col("doc_id")).as("uri"),
-          lit("2024-01-01T00:00:00Z").as("wdate"),
-          col("lang"), col("text")),
-        dir, "uri", "wdate", "lang", "text", maxRecordsPerShard = 100)
-      graft.io.Warc.readWet(s, dir)
-        .select(regexp_extract(col("uri"), "urn:graft:doc:(\\d+)", 1)
-          .cast("bigint").as("doc_id"), col("lang"), col("text"))
-    }),
-    // ORC shard round-trip over EVENTS — the table with the types that
-    // classically shift across columnar formats (micros-NTZ timestamps,
-    // raw doubles): the re-read must be value-identical to the parquet
-    // source under the same identity oracle the a-gates use
-    "o16_export_orc" -> ((s, d) => {
-      val ev = events(s, d)
-      val dir = java.nio.file.Files.createTempDirectory("graft-orc").toString + "/ev"
-      graft.io.Export.orcShards(ev, dir, maxRecordsPerShard = 2000,
-        compression = Some("zstd"))
-      graft.io.Export.readOrc(s, dir)
-    }),
-    // CSV shard round-trip under the RFC-4180 dialect (doubled-quote
-    // escaping, \N null sentinel): the re-read must reproduce the table
-    // exactly — same identity oracle as the JSONL gate
-    "o15_export_csv" -> ((s, d) => {
-      val doc = docs(s, d)
-      val dir = java.nio.file.Files.createTempDirectory("graft-csv").toString + "/docs"
-      graft.io.Export.csvShards(doc, dir, maxRecordsPerShard = 100,
-        compression = Some("gzip"))
-      graft.io.Export.readCsv(s, dir, doc.schema)
-    }),
-    // two-dimensional pruned read over the z-order layout: the Morton curve
-    // keeps every file rectangle-ish in (o_orderkey, o_custkey), so a band
-    // on EITHER dimension alone opens a strict subset of the 16 files and
-    // the 2-D band opens no more than either axis's subset
-    "o11_zorder_2d_read" -> ((s, d) => {
-      // z-ordered store from the per-JVM fixture cache (see o7): the gate
-      // certifies 2-D pruning + the banded read, fresh below, READ-ONLY
-      val store = new graft.store.TableStore(s, o11StoreDir(s, d),
-        graft.store.CommitMode.Pointer, statsColumns = Seq("o_orderkey", "o_custkey"))
-      val bounds = Seq[(String, Any, Any)](
-        ("o_orderkey", 10000L, 20000L), ("o_custkey", 100L, 400L))
-      val (_, total) = store.pruneEvidence("ord_z2", "o_orderkey", 0L, Long.MaxValue)
-      val (ka, _) = store.pruneEvidence("ord_z2", "o_orderkey", 10000L, 20000L)
-      val (kc, _) = store.pruneEvidence("ord_z2", "o_custkey", 100L, 400L)
-      require(ka < total && kc < total,
-        s"o11: each dimension alone must prune: orderkey $ka, custkey $kc of $total")
-      val (k2, _) = store.pruneEvidence("ord_z2", bounds)
-      require(k2 <= math.min(ka, kc), s"o11: 2-D band must intersect, kept $k2 vs $ka/$kc")
-      store.readWhere("ord_z2", bounds)
-    }),
-    "a1_window_delete" -> ((s, d) =>
-      Ops.windowDelete(li(s, d), "l_shipdate", LiFrom, LiTo)),
-    "a5_window_reload" -> ((s, d) => {
-      // flagship: stale target (loaded only to 1998-12-31) refreshed for the window
-      val target = li(s, d).filter(col("l_shipdate") < lit(java.time.LocalDateTime.of(1999, 1, 1, 0, 0)))
-      Ops.windowedReload(target, li(s, d), "l_shipdate", LiFrom, LiTo)
-    }),
-    "a2_truncate_reload" -> ((s, d) => Ops.truncateReload(part(s, d))),
-    "asof_prior_error" -> ((s, d) => {
-      // as-of join: each click gets the user's latest error at or before it
-      val ev = events(s, d)
-      val clicks = ev.filter(col("event_type") === "click")
-      val errors = ev.filter(col("event_type") === "error")
-      Ops.asOfJoin(clicks, errors, "user_id", "ts", "ts", "event_id", "event_id")
-        .select(col("event_id"), col("user_id"), col("ts"),
-          col("asof.event_id").as("prior_error_id"),
-          col("asof.ts").as("prior_error_ts"))
-    }),
-    // forward as-of: each click gets the user's NEXT error at or after it
-    // (pandas merge_asof direction='forward'; DuckDB ASOF <=)
-    "asof_next_error" -> ((s, d) => {
-      val ev = events(s, d)
-      val clicks = ev.filter(col("event_type") === "click")
-      val errors = ev.filter(col("event_type") === "error")
-      Ops.asOfJoin(clicks, errors, "user_id", "ts", "ts", "event_id", "event_id",
-          direction = "forward")
-        .select(col("event_id"), col("user_id"), col("ts"),
-          col("asof.event_id").as("next_error_id"),
-          col("asof.ts").as("next_error_ts"))
-    }),
-
-    // ---- sproc analog (§2.9 O1) ----
-    "o1_sql_step" -> ((s, d) => {
-      orders(s, d).createOrReplaceTempView("orders")
-      // timestamp_ntz cast: date_trunc yields LTZ TimestampType which parquet
-      // writes as legacy INT96 (ns at the reader) while the DuckDB oracle
-      // materializes naive micros — the 3-round hash-red root cause (r3
-      // verdict). UTC session makes the cast a value identity.
-      Steps.run(s, "daily_order_stats", OrdFrom, OrdTo)
-        .withColumn("order_date", col("order_date").cast("timestamp_ntz"))
-    }),
-
-    // ---- general analytics the extension surface builds on (§2.12) ----
-    "q1_pricing_summary" -> ((s, d) => {
-      val price = col("l_extendedprice").cast("decimal(18,2)")
-      val disc = col("l_discount").cast("decimal(18,2)")
-      li(s, d).filter(col("l_shipdate") <= lit(java.time.LocalDateTime.of(1998, 9, 1, 0, 0)))
-        .groupBy("l_returnflag", "l_linestatus")
-        // exact decimal math INTERNALLY, but the COMPARED representation is
-        // round(CAST(sum AS DOUBLE), native scale): decimal128(38,x) output
-        // hash-mismatched at the driver for three straight rounds despite
-        // arrow-level bit-identity (r3 verdict) — doubles behind round() are
-        // the representation the gate demonstrably hashes reliably
-        // (stream_windowed_counts, agg_label_centroids). Rounding at the
-        // sum's native scale never hits a .xx5 boundary, so HALF_UP-vs-
-        // banker's divergence between engines cannot trigger.
-        .agg(
-          round(sum(col("l_quantity").cast("decimal(18,2)")).cast("double"), 2).as("sum_qty"),
-          round(sum(price).cast("double"), 2).as("sum_base_price"),
-          round(sum(price * (lit(BigDecimal(1)) - disc)).cast("double"), 4).as("sum_disc_price"),
-          count(lit(1)).as("count_order"))
-    }),
-    "q3_shipping_priority" -> ((s, d) => {
-      // TPC-H Q3 shape: revenue per order for one segment, top 10 — exercises
-      // a 3-way join (dim broadcast), grouped agg, deterministic top-k
-      val c = customer(s, d).filter(col("c_mktsegment") === "BUILDING")
-      val o = orders(s, d).filter(col("o_orderdate") < lit(java.time.LocalDateTime.of(1998, 3, 15, 0, 0)))
-      val l = li(s, d).filter(col("l_shipdate") > lit(java.time.LocalDateTime.of(1998, 3, 15, 0, 0)))
-      val price = col("l_extendedprice").cast("decimal(18,2)")
-      val disc = col("l_discount").cast("decimal(18,2)")
-      l.join(o, col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(c), col("o_custkey") === col("c_custkey"))
-        .groupBy(col("l_orderkey"), col("o_orderdate"), col("o_orderpriority"))
-        .agg(sum(price * (lit(BigDecimal(1)) - disc)).as("revenue"))
-        .orderBy(col("revenue").desc, col("l_orderkey"))
-        .limit(10)
-    }),
-    // TPC-H Q5 shape: local-supplier revenue per nation for one region-year —
-    // the classic 6-table join-reorder/broadcast exercise. The fact join
-    // (lineitem × orders) shuffles on the order key; customer, supplier,
-    // nation, and region are all broadcast dims, and the "local" condition
-    // (c_nationkey = s_nationkey) rides the supplier broadcast join
-    "q5_local_supplier_volume" -> ((s, d) => {
-      val o = orders(s, d)
-        .filter(col("o_orderdate") >= lit(java.time.LocalDateTime.of(1996, 1, 1, 0, 0)) &&
-          col("o_orderdate") < lit(java.time.LocalDateTime.of(1997, 1, 1, 0, 0)))
-      val n = Tables.load(s, d, "nation")
-      val r = Tables.load(s, d, "region").filter(col("r_name") === "ASIA")
-      val price = col("l_extendedprice").cast("decimal(18,2)")
-      val disc = col("l_discount").cast("decimal(18,2)")
-      li(s, d).join(o, col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(customer(s, d)), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(Tables.load(s, d, "supplier")),
-          col("l_suppkey") === col("s_suppkey") &&
-            col("c_nationkey") === col("s_nationkey"))
-        .join(broadcast(n), col("s_nationkey") === col("n_nationkey"))
-        .join(broadcast(r), col("n_regionkey") === col("r_regionkey"))
-        .groupBy(col("n_name"))
-        .agg(sum(price * (lit(BigDecimal(1)) - disc)).as("revenue"))
-        .orderBy(col("revenue").desc, col("n_name"))
-    }),
-    // TPC-H Q18 shape (large-volume orders): the HAVING aggregation IS the
-    // carried value, so the big-order set joins back once instead of
-    // re-aggregating lineitem; quantities are integral doubles, so the sum
-    // is exact in any accumulation order and the > cut cannot flap
-    "q18_large_orders" -> ((s, d) => {
-      val big = li(s, d).groupBy(col("l_orderkey"))
-        .agg(sum(col("l_quantity")).as("total_qty"))
-        .filter(col("total_qty") > 280.0)
-      orders(s, d).join(big, col("o_orderkey") === col("l_orderkey"))
-        .join(broadcast(customer(s, d)), col("o_custkey") === col("c_custkey"))
-        .select(col("c_name"), col("c_custkey"), col("o_orderkey"),
-          col("o_orderdate"), col("o_totalprice"), col("total_qty"))
-        .orderBy(col("o_totalprice").desc, col("o_orderdate"), col("o_orderkey"))
-        .limit(100)
-    }),
-    // TPC-H Q6 shape (forecast-revenue change): the pure scan-side query —
-    // every predicate pushes to the parquet reader, no join, one global
-    // decimal sum. Decimal(18,2)×Decimal(18,2) sums land on DECIMAL(38,4)
-    // in both engines, so the raw decimal compares exactly (q3/q5 pattern)
-    "q6_forecast_revenue" -> ((s, d) =>
-      li(s, d)
-        .filter(col("l_shipdate") >= lit(java.time.LocalDateTime.of(1996, 1, 1, 0, 0)) &&
-          col("l_shipdate") < lit(java.time.LocalDateTime.of(1997, 1, 1, 0, 0)) &&
-          col("l_discount").between(0.05, 0.07) && col("l_quantity") < 24.0)
-        .agg(sum(col("l_extendedprice").cast("decimal(18,2)") *
-          col("l_discount").cast("decimal(18,2)")).as("revenue"))),
-    // TPC-H Q10 shape (returned items): one quarter of orders, only
-    // R-flagged lines, revenue per customer, top 20 — fact×fact shuffle
-    // join on the order key, customer and nation ride broadcasts
-    "q10_returned_items" -> ((s, d) => {
-      val o = orders(s, d)
-        .filter(col("o_orderdate") >= lit(java.time.LocalDateTime.of(1996, 1, 1, 0, 0)) &&
-          col("o_orderdate") < lit(java.time.LocalDateTime.of(1996, 4, 1, 0, 0)))
-      val price = col("l_extendedprice").cast("decimal(18,2)")
-      val disc = col("l_discount").cast("decimal(18,2)")
-      li(s, d).filter(col("l_returnflag") === "R")
-        .join(o, col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(customer(s, d)), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(Tables.load(s, d, "nation")), col("c_nationkey") === col("n_nationkey"))
-        .groupBy(col("c_custkey"), col("c_name"), col("c_acctbal"), col("n_name"))
-        // round(CAST(sum AS DOUBLE), 4): the exact decimal sum is identical
-        // in both engines; hashing the rounded double sidesteps the wide-
-        // decimal canonicalization that forked the r17 hash (q1 pattern).
-        // Documented deviation (r18 ADVICE): ORDERING is on the rounded
-        // value, so two customers whose exact revenues differ by < 5e-5
-        // tie here and break on c_custkey, where exact-decimal TPC-H
-        // ranking could order them the other way — both engines apply the
-        // identical rule, so the gate is stable; the exact sums at these
-        // SFs differ by cents, far above the rounding grain
-        .agg(round(sum(price * (lit(BigDecimal(1)) - disc)).cast("double"), 4).as("revenue"))
-        .orderBy(col("revenue").desc, col("c_custkey"))
-        .limit(20)
-    }),
-    // TPC-H Q13 shape (customer order-count distribution): the classic
-    // left-outer + double aggregation — zero-order customers MUST appear
-    // in the c_count=0 bucket, which is exactly what the outer join
-    // preserves and an inner join would silently drop
-    "q13_order_count_distribution" -> ((s, d) =>
-      customer(s, d)
-        .join(orders(s, d), col("c_custkey") === col("o_custkey"), "left")
-        .groupBy(col("c_custkey")).agg(count(col("o_orderkey")).as("c_count"))
-        .groupBy(col("c_count")).agg(count(lit(1)).as("custdist"))
-        .orderBy(col("custdist").desc, col("c_count").desc)),
-    // TPC-H Q14 shape (promo-revenue share): one month of lineitem against
-    // the part dim (broadcast), CASE-gated revenue ratio; the division
-    // happens on DOUBLES cast from exact decimal sums, so both engines
-    // perform the identical IEEE op on identical operands
-    "q14_promo_effect" -> ((s, d) => {
-      val price = col("l_extendedprice").cast("decimal(18,2)")
-      val disc = col("l_discount").cast("decimal(18,2)")
-      val rev = price * (lit(BigDecimal(1)) - disc)
-      li(s, d)
-        .filter(col("l_shipdate") >= lit(java.time.LocalDateTime.of(1996, 3, 1, 0, 0)) &&
-          col("l_shipdate") < lit(java.time.LocalDateTime.of(1996, 4, 1, 0, 0)))
-        .join(broadcast(Tables.load(s, d, "part")), col("l_partkey") === col("p_partkey"))
-        .agg(round(lit(100.0) * sum(when(col("p_type") === "PROMO", rev)
-            .otherwise(lit(BigDecimal(0)))).cast("double") /
-          sum(rev).cast("double"), 6).as("promo_share"))
-    }),
-    // TPC-H Q19 shape (discounted revenue, OR-of-ANDs): three disjunct
-    // brand/size/quantity branches over the part join — the classic
-    // "OR does not kill pushdown" exercise: the common l_partkey join key
-    // still hashes, and the disjunction evaluates post-join in codegen
-    "q19_discounted_revenue" -> ((s, d) => {
-      val price = col("l_extendedprice").cast("decimal(18,2)")
-      val disc = col("l_discount").cast("decimal(18,2)")
-      val branch =
-        (col("p_brand") === "Brand#11" && col("p_size").between(1, 15) &&
-          col("l_quantity").between(1.0, 20.0)) ||
-        (col("p_brand") === "Brand#22" && col("p_size").between(1, 25) &&
-          col("l_quantity").between(10.0, 30.0)) ||
-        (col("p_brand") === "Brand#13" && col("p_size").between(1, 50) &&
-          col("l_quantity").between(20.0, 40.0))
-      li(s, d)
-        .join(broadcast(Tables.load(s, d, "part")), col("l_partkey") === col("p_partkey"))
-        .filter(branch)
-        .agg(sum(price * (lit(BigDecimal(1)) - disc)).as("revenue"))
-    }),
-    // TPC-H Q22 shape (idle balances): customers above the positive-balance
-    // average with NO RECENT orders (none since 2001), per nation. The
-    // scalar cutoff is an EXACT decimal sum cast to double ONCE (identical
-    // IEEE division both engines — no ulp flap at the > boundary),
-    // broadcast as a one-row frame; the no-recent-order test is a
-    // left-anti join against the date-pruned order scan, never NOT IN
-    "q22_idle_balances" -> ((s, d) => {
-      val c = customer(s, d)
-      val cutoff = broadcast(c.filter(col("c_acctbal") > 0.0)
-        .agg((sum(col("c_acctbal").cast("decimal(18,2)")).cast("double") /
-          count(lit(1))).as("cutoff")))
-      val recent = orders(s, d)
-        .filter(col("o_orderdate") >= lit(java.time.LocalDateTime.of(2001, 1, 1, 0, 0)))
-      c.crossJoin(cutoff).filter(col("c_acctbal") > col("cutoff"))
-        .join(recent, col("c_custkey") === col("o_custkey"), "left_anti")
-        .join(broadcast(Tables.load(s, d, "nation")), col("c_nationkey") === col("n_nationkey"))
-        .groupBy(col("n_name"))
-        .agg(count(lit(1)).as("numcust"),
-          round(sum(col("c_acctbal").cast("decimal(18,2)")).cast("double"), 2).as("totacctbal"))
-    }),
-    // TPC-H Q7 shape (volume shipping): bilateral trade between two
-    // nations by ship year — the two-role nation-dim exercise (the same
-    // dim joins twice under different keys); the OR couples the two
-    // role filters so it evaluates post-join, on broadcast-joined rows
-    "q7_volume_shipping" -> ((s, d) => {
-      val nat = Tables.load(s, d, "nation")
-      val n1 = nat.select(col("n_nationkey").as("s_nk"), col("n_name").as("supp_nation"))
-      val n2 = nat.select(col("n_nationkey").as("c_nk"), col("n_name").as("cust_nation"))
-      val price = col("l_extendedprice").cast("decimal(18,2)")
-      val disc = col("l_discount").cast("decimal(18,2)")
-      li(s, d)
-        .filter(col("l_shipdate") >= lit(java.time.LocalDateTime.of(1996, 1, 1, 0, 0)) &&
-          col("l_shipdate") < lit(java.time.LocalDateTime.of(1998, 1, 1, 0, 0)))
-        .join(orders(s, d), col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(customer(s, d)), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(Tables.load(s, d, "supplier")), col("l_suppkey") === col("s_suppkey"))
-        .join(broadcast(n1), col("s_nationkey") === col("s_nk"))
-        .join(broadcast(n2), col("c_nationkey") === col("c_nk"))
-        .filter((col("supp_nation") === "NATION_3" && col("cust_nation") === "NATION_7") ||
-          (col("supp_nation") === "NATION_7" && col("cust_nation") === "NATION_3"))
-        .groupBy(col("supp_nation"), col("cust_nation"), year(col("l_shipdate")).as("l_year"))
-        .agg(sum(price * (lit(BigDecimal(1)) - disc)).as("revenue"))
-    }),
-    // TPC-H Q8 shape (national market share): one supplier nation's share
-    // of a region+part-type market by order year — CASE-gated revenue
-    // ratio per group, sums exact decimal, the division on cast doubles
-    "q8_market_share" -> ((s, d) => {
-      val price = col("l_extendedprice").cast("decimal(18,2)")
-      val disc = col("l_discount").cast("decimal(18,2)")
-      val rev = price * (lit(BigDecimal(1)) - disc)
-      val p = Tables.load(s, d, "part").filter(col("p_type") === "ECONOMY").select("p_partkey")
-      val r = Tables.load(s, d, "region").filter(col("r_name") === "ASIA")
-      val nat = Tables.load(s, d, "nation")
-      val n2 = nat.select(col("n_nationkey").as("s_nk"), col("n_name").as("supp_nation"))
-      li(s, d)
-        .join(broadcast(p), col("l_partkey") === col("p_partkey"))
-        .join(orders(s, d)
-          .filter(col("o_orderdate") >= lit(java.time.LocalDateTime.of(1995, 1, 1, 0, 0)) &&
-            col("o_orderdate") < lit(java.time.LocalDateTime.of(1997, 1, 1, 0, 0))),
-          col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(customer(s, d)), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(nat), col("c_nationkey") === col("n_nationkey"))
-        .join(broadcast(r), col("n_regionkey") === col("r_regionkey"))
-        .join(broadcast(Tables.load(s, d, "supplier")), col("l_suppkey") === col("s_suppkey"))
-        .join(broadcast(n2), col("s_nationkey") === col("s_nk"))
-        .groupBy(year(col("o_orderdate")).as("o_year"))
-        .agg(round(sum(when(col("supp_nation") === "NATION_3", rev)
-            .otherwise(lit(BigDecimal(0)))).cast("double") /
-          sum(rev).cast("double"), 6).as("mkt_share"))
-    }),
-    // TPC-H Q15 shape (top supplier): quarter revenue per supplier, the
-    // argmax selected by an exact-decimal equality against a broadcast
-    // one-row max — never a global sort; the revenue agg is cache-tracked
-    // (it feeds both the max and the final filter)
-    "q15_top_supplier" -> ((s, d) => {
-      val price = col("l_extendedprice").cast("decimal(18,2)")
-      val disc = col("l_discount").cast("decimal(18,2)")
-      val rev = graft.ext.Caches.track(
-        li(s, d)
-          .filter(col("l_shipdate") >= lit(java.time.LocalDateTime.of(1996, 1, 1, 0, 0)) &&
-            col("l_shipdate") < lit(java.time.LocalDateTime.of(1996, 4, 1, 0, 0)))
-          .groupBy(col("l_suppkey"))
-          .agg(sum(price * (lit(BigDecimal(1)) - disc)).as("total_revenue")))
-      val mx = broadcast(rev.agg(max(col("total_revenue")).as("mx")))
-      rev.crossJoin(mx).filter(col("total_revenue") === col("mx"))
-        .join(broadcast(Tables.load(s, d, "supplier")), col("l_suppkey") === col("s_suppkey"))
-        .select(col("s_suppkey"), col("s_name"), col("total_revenue"))
-    }),
-    // TPC-H Q17 shape (small-quantity revenue): the correlated per-part
-    // average decorrelated into a grouped cutoff frame joined back — the
-    // cutoff is (0.2·Σqty)/n on INTEGRAL-double sums (exact in any
-    // accumulation order), so the < boundary cannot ulp-flap
-    "q17_small_quantity_revenue" -> ((s, d) => {
-      val bp = Tables.load(s, d, "part")
-        .filter(col("p_brand") === "Brand#13").select("p_partkey")
-      val l = graft.ext.Caches.track(
-        li(s, d).join(broadcast(bp), col("l_partkey") === col("p_partkey")))
-      val cut = l.groupBy(col("l_partkey").as("pk"))
-        .agg((lit(0.2) * sum(col("l_quantity")) / count(lit(1))).as("cutoff"))
-      l.join(cut, col("l_partkey") === col("pk"))
-        .filter(col("l_quantity") < col("cutoff"))
-        .agg(round(sum(col("l_extendedprice").cast("decimal(18,2)")).cast("double") / 7.0, 2)
-          .as("avg_yearly"))
-    }),
-    // TPC-H Q2 shape (min-cost supplier): groupwise-min correlated subquery
-    // decorrelated into a window min — the fixture has no partsupp, so the
-    // part×supplier "catalog" is DERIVED from lineitem (unit cost = min
-    // observed l_extendedprice/l_quantity per pair; identical IEEE division
-    // both engines). One shuffle builds the catalog, the window min rides
-    // the same partkey partitioning; all dims broadcast
-    "q2_min_cost_supplier" -> ((s, d) => {
-      val sup = Tables.load(s, d, "supplier")
-      val nat = Tables.load(s, d, "nation")
-      val eur = sup
-        .join(broadcast(nat), col("s_nationkey") === col("n_nationkey"))
-        .join(broadcast(Tables.load(s, d, "region").filter(col("r_name") === "EUROPE")),
-          col("n_regionkey") === col("r_regionkey"))
-        .select(col("s_suppkey"), col("s_name"), col("s_acctbal"), col("n_name"))
-      val cat = li(s, d)
-        .join(broadcast(eur.select("s_suppkey")), col("l_suppkey") === col("s_suppkey"))
-        .groupBy(col("l_partkey"), col("l_suppkey"))
-        .agg(min(col("l_extendedprice") / col("l_quantity")).as("unit_cost"))
-      val w = Window.partitionBy("l_partkey")
-      val p = Tables.load(s, d, "part")
-        .filter(col("p_size").isin(15, 25, 35) && col("p_type").isin("LARGE", "SMALL"))
-        .select("p_partkey")
-      cat.withColumn("best", min(col("unit_cost")).over(w))
-        .filter(col("unit_cost") === col("best"))
-        .join(broadcast(p), col("l_partkey") === col("p_partkey"))
-        .join(broadcast(eur), col("l_suppkey") === col("s_suppkey"))
-        .select(col("s_acctbal"), col("s_name"), col("n_name"), col("p_partkey"),
-          col("unit_cost"))
-        .orderBy(col("s_acctbal").desc, col("p_partkey"), col("s_name"))
-        .limit(100)
-    }),
-    // TPC-H Q4 shape (priority checking): EXISTS decorrelated to a
-    // left-semi join with a NON-EQUI residual (the fixture has no
-    // commit/receipt dates, so "late" = shipped >60 days after the order
-    // date); the semi join still hashes on the order key, the residual
-    // evaluates per matched pair — no nested loop
-    "q4_priority_late_ship" -> ((s, d) => {
-      val o = orders(s, d)
-        .filter(col("o_orderdate") >= lit(java.time.LocalDateTime.of(1996, 7, 1, 0, 0)) &&
-          col("o_orderdate") < lit(java.time.LocalDateTime.of(1996, 10, 1, 0, 0)))
-      o.join(li(s, d).select("l_orderkey", "l_shipdate"),
-          col("o_orderkey") === col("l_orderkey") &&
-            col("l_shipdate") > col("o_orderdate") + expr("INTERVAL 60 DAYS"),
-          "left_semi")
-        .groupBy(col("o_orderpriority"))
-        .agg(count(lit(1)).as("order_count"))
-        .orderBy(col("o_orderpriority"))
-    }),
-    // TPC-H Q9 shape (product-type profit by nation/year): 4-way join with
-    // a LIKE part filter, profit = revenue − cost where cost is a
-    // retail-price proxy (no partsupp supplycost in the fixture — 0.8·
-    // p_retailprice·qty, documented). Both sums stay EXACT decimal through
-    // the agg; the subtraction and 0.8 scale happen ONCE per group on cast
-    // doubles (identical IEEE ops both engines — no rounding needed)
-    "q9_nation_profit" -> ((s, d) => {
-      val price = col("l_extendedprice").cast("decimal(18,2)")
-      val disc = col("l_discount").cast("decimal(18,2)")
-      val p = Tables.load(s, d, "part")
-        .filter(col("p_name").like("%widget%"))
-        .select(col("p_partkey"), col("p_retailprice").cast("decimal(18,2)").as("retail"))
-      li(s, d)
-        .join(broadcast(p), col("l_partkey") === col("p_partkey"))
-        .join(broadcast(Tables.load(s, d, "supplier")), col("l_suppkey") === col("s_suppkey"))
-        .join(orders(s, d).select("o_orderkey", "o_orderdate"),
-          col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(Tables.load(s, d, "nation")), col("s_nationkey") === col("n_nationkey"))
-        .groupBy(col("n_name").as("nation"), year(col("o_orderdate")).as("o_year"))
-        .agg((sum(price * (lit(BigDecimal(1)) - disc)).cast("double") -
-          lit(0.8) * sum(col("retail") * col("l_quantity").cast("decimal(18,2)"))
-            .cast("double")).as("profit"))
-        .orderBy(col("nation"), col("o_year").desc)
-    }),
-    // TPC-H Q11 shape (important stock values): per-part value vs a GLOBAL
-    // scalar threshold — the scalar is an exact decimal sum divided once
-    // on doubles (mean-relative, so the gate is non-degenerate at every
-    // SF), broadcast as a one-row frame against the cache-tracked value
-    // aggregation that feeds both sides
-    "q11_important_values" -> ((s, d) => {
-      val sup = Tables.load(s, d, "supplier")
-        .join(broadcast(Tables.load(s, d, "nation")
-          .filter(col("n_name").isin("NATION_5", "NATION_6", "NATION_7", "NATION_8"))),
-          col("s_nationkey") === col("n_nationkey"))
-        .select("s_suppkey")
-      val value = graft.ext.Caches.track(
-        li(s, d)
-          .join(broadcast(sup), col("l_suppkey") === col("s_suppkey"))
-          .groupBy(col("l_partkey"))
-          .agg(sum(col("l_extendedprice").cast("decimal(18,2)")).as("value")))
-      val cut = broadcast(value.agg(
-        (lit(1.5) * sum(col("value")).cast("double") / count(lit(1))).as("cutoff")))
-      // the exact decimal sum drives the cutoff compare and the sort; the
-      // OUTPUT is round(CAST(sum AS DOUBLE), native scale) — wide-decimal
-      // (38,2) dumps have hash-mismatched at the driver even when locally
-      // bit-identical (r3 forensics), rounded doubles never have
-      value.crossJoin(cut)
-        .filter(col("value").cast("double") > col("cutoff"))
-        .select(col("l_partkey"), round(col("value").cast("double"), 2).as("value"))
-        .orderBy(col("value").desc, col("l_partkey"))
-    }),
-    // TPC-H Q12 shape (late lines by class): CASE-gated dual counts per
-    // line class (the fixture has no shipmode — l_returnflag stands in),
-    // the "late" residual is the same non-equi ship-vs-order-date test as
-    // q4; counts via count(CASE) so both engines emit BIGINT (DuckDB
-    // sum(int) would widen to HUGEINT and hash-mismatch)
-    "q12_late_lines_by_flag" -> ((s, d) => {
-      val hi = col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-      orders(s, d)
-        .filter(col("o_orderdate") >= lit(java.time.LocalDateTime.of(1996, 1, 1, 0, 0)) &&
-          col("o_orderdate") < lit(java.time.LocalDateTime.of(1997, 1, 1, 0, 0)))
-        .join(li(s, d).select("l_orderkey", "l_returnflag", "l_shipdate"),
-          col("o_orderkey") === col("l_orderkey"))
-        .filter(col("l_shipdate") > col("o_orderdate") + expr("INTERVAL 30 DAYS"))
-        .groupBy(col("l_returnflag"))
-        .agg(count(when(hi, 1)).as("high_line_count"),
-          count(when(!hi, 1)).as("low_line_count"))
-        .orderBy(col("l_returnflag"))
-    }),
-    // TPC-H Q16 shape (supplier variety by part attrs): COUNT DISTINCT per
-    // attribute triple with a NOT-IN supplier exclusion — the exclusion is
-    // a broadcast left-anti (keys non-null by construction, so NOT IN ≡
-    // anti join); the part/supplier relation is DERIVED from lineitem
-    // (no partsupp in the fixture)
-    "q16_supplier_variety" -> ((s, d) => {
-      val excluded = Tables.load(s, d, "supplier")
-        .filter(col("s_acctbal") < 0.0).select("s_suppkey")
-      val p = Tables.load(s, d, "part")
-        .filter(col("p_brand") =!= "Brand#15" && col("p_type") =!= "PROMO" &&
-          col("p_size").isin(1, 9, 14, 23, 36, 45, 49, 50))
-        .select("p_partkey", "p_brand", "p_type", "p_size")
-      li(s, d).select("l_partkey", "l_suppkey")
-        .join(broadcast(p), col("l_partkey") === col("p_partkey"))
-        .join(broadcast(excluded), col("l_suppkey") === col("s_suppkey"), "left_anti")
-        .groupBy(col("p_brand"), col("p_type"), col("p_size"))
-        .agg(countDistinct(col("l_suppkey")).as("supplier_cnt"))
-        .orderBy(col("supplier_cnt").desc, col("p_brand"), col("p_type"), col("p_size"))
-    }),
-    // TPC-H Q20 shape (bulk suppliers): the nested IN chain — suppliers in
-    // a nation set whose (supplier, part) shipped volume of a LIKE-filtered
-    // part family crossed a HAVING threshold in a year; the inner agg
-    // shrinks to distinct suppkeys BEFORE the semi join, dims broadcast
-    "q20_bulk_suppliers" -> ((s, d) => {
-      val reds = Tables.load(s, d, "part")
-        .filter(col("p_name").like("red%")).select("p_partkey")
-      val bulky = li(s, d)
-        .filter(col("l_shipdate") >= lit(java.time.LocalDateTime.of(1996, 1, 1, 0, 0)) &&
-          col("l_shipdate") < lit(java.time.LocalDateTime.of(1997, 1, 1, 0, 0)))
-        .join(broadcast(reds), col("l_partkey") === col("p_partkey"))
-        .groupBy(col("l_suppkey"), col("l_partkey"))
-        .agg(sum(col("l_quantity")).as("qty"))
-        .filter(col("qty") > 25.0)
-        .select("l_suppkey").distinct()
-      Tables.load(s, d, "supplier")
-        .join(broadcast(Tables.load(s, d, "nation")
-          .filter(col("n_name").isin("NATION_3", "NATION_7", "NATION_11", "NATION_15"))),
-          col("s_nationkey") === col("n_nationkey"))
-        .join(bulky, col("s_suppkey") === col("l_suppkey"), "left_semi")
-        .select(col("s_name"), col("s_suppkey"))
-        .orderBy(col("s_suppkey"))
-    }),
-    // TPC-H Q21 shape (suppliers who kept orders waiting): the classic
-    // EXISTS + NOT-EXISTS self-join pair — "my line shipped late AND the
-    // order had another supplier AND no other supplier shipped after me",
-    // decorrelated to a left-semi then a left-anti on the order key with
-    // non-equi residuals; the late test is ship > order date + 45 days
-    // (no receipt/commit dates in the fixture)
-    "q21_waiting_suppliers" -> ((s, d) => {
-      // all three roles (the late line, the other-supplier EXISTS probe, the
-      // shipped-after NOT-EXISTS probe) only ever see lines of F orders —
-      // join lineitem to the F filter ONCE, cache it, and derive the three
-      // sides from the cached frame (the naive form re-scanned and re-joined
-      // the full fact three times: 11× wall at 30× data; this form is ~3×)
-      val fLines = graft.ext.Caches.track(
-        li(s, d).select("l_orderkey", "l_suppkey", "l_shipdate")
-          .join(orders(s, d).filter(col("o_orderstatus") === "F")
-            .select("o_orderkey", "o_orderdate"),
-            col("l_orderkey") === col("o_orderkey"))
-          .select(col("l_orderkey"), col("l_suppkey"), col("l_shipdate"),
-            col("o_orderdate")))
-      val base = fLines
-        .filter(col("l_shipdate") > col("o_orderdate") + expr("INTERVAL 45 DAYS"))
-      val l2 = fLines.select(col("l_orderkey").as("ok2"), col("l_suppkey").as("sk2"))
-      val l3 = fLines.select(col("l_orderkey").as("ok3"), col("l_suppkey").as("sk3"),
-        col("l_shipdate").as("sd3"))
-      base
-        .join(l2, col("l_orderkey") === col("ok2") && col("l_suppkey") =!= col("sk2"),
-          "left_semi")
-        .join(l3, col("l_orderkey") === col("ok3") && col("l_suppkey") =!= col("sk3") &&
-          col("sd3") > col("l_shipdate"), "left_anti")
-        .join(broadcast(Tables.load(s, d, "supplier")), col("l_suppkey") === col("s_suppkey"))
-        .groupBy(col("s_name"))
-        .agg(count(lit(1)).as("numwait"))
-        .orderBy(col("numwait").desc, col("s_name"))
-        .limit(20)
-    }),
-    "join_enrich_orders" -> ((s, d) =>
-      orders(s, d).filter(Ops.datePredicate("o_orderdate", OrdFrom, OrdTo))
-        .join(broadcast(customer(s, d)), col("o_custkey") === col("c_custkey"))
-        .select("o_orderkey", "o_totalprice", "c_name", "c_mktsegment")),
-    // deliberate pre-salting of a skewed join (Skew.saltedJoin): results are
-    // IDENTICAL to the plain inner join — which is exactly what the oracle
-    // checks — while hot keys spread over 8 shuffle partitions
-    "join_salted_skew" -> ((s, d) => {
-      val ev = events(s, d)
-      val dim = ev.groupBy("user_id").agg(count(lit(1)).as("user_total"))
-      graft.ops.Skew.saltedJoin(ev.select("event_id", "user_id"), dim, "user_id", 8)
-        .select("event_id", "user_id", "user_total")
-    }),
-    "window_topk_per_segment" -> ((s, d) => {
-      val j = orders(s, d).join(broadcast(customer(s, d)), col("o_custkey") === col("c_custkey"))
-        .select("c_mktsegment", "o_orderkey", "o_totalprice")
-      val w = Window.partitionBy("c_mktsegment").orderBy(col("o_totalprice").desc, col("o_orderkey"))
-      j.withColumn("rn", row_number().over(w)).filter(col("rn") <= 3).drop("rn")
-    }),
-    // analytic window functions (§2.5): lag/lead/row_number + a running sum,
-    // one shuffle on the partition key; the running sum accumulates exact
-    // decimals (order-independent) and only the final value is rounded double
-    "window_order_ledger" -> ((s, d) => {
-      val w = Window.partitionBy("o_custkey").orderBy(col("o_orderdate"), col("o_orderkey"))
-      orders(s, d).select(
-        col("o_custkey"), col("o_orderkey"), col("o_orderdate"), col("o_totalprice"),
-        row_number().over(w).as("order_seq"),
-        lag("o_totalprice", 1).over(w).as("prev_price"),
-        lead("o_totalprice", 1).over(w).as("next_price"),
-        round(sum(col("o_totalprice").cast("decimal(18,2)"))
-          .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-          .cast("double"), 2).as("running_total"))
-    }),
-    // bounded-frame moving aggregate (§2.5): daily rollup then a 7-row
-    // trailing sum per type — the grouped pass partial-aggregates map-side,
-    // the frame pass shuffles once on event_type
-    "window_moving_daily" -> ((s, d) => {
-      val daily = events(s, d).groupBy(
-        date_trunc("day", col("ts")).cast("timestamp_ntz").as("event_date"), col("event_type"))
-        .agg(count(lit(1)).as("n_events"), sum(col("value").cast("decimal(18,2)")).as("tv"))
-      val w = Window.partitionBy("event_type").orderBy("event_date")
-      daily.select(
-        col("event_date"), col("event_type"), col("n_events"),
-        round(col("tv").cast("double"), 2).as("total_value"),
-        (col("n_events") - lag("n_events", 1).over(w)).as("delta_events"),
-        round(sum(col("tv")).over(w.rowsBetween(-6, Window.currentRow)).cast("double"), 2)
-          .as("total_7d"))
-    }),
-    // set operations (§2.7): INTERSECT / EXCEPT / UNION ALL as first-class
-    // ops — Spark plans intersect/except as hash left-semi/anti over the
-    // distinct sets, shuffling only the (small) key projections
-    "set_ops_user_cohorts" -> ((s, d) => {
-      val ev = events(s, d)
-      def users(t: String) = ev.filter(col("event_type") === t).select("user_id").distinct()
-      val buyers = users("purchase")
-      val erring = users("error")
-      buyers.intersect(erring).withColumn("cohort", lit("both"))
-        .unionByName(buyers.except(erring).withColumn("cohort", lit("purchase_only")))
-        .unionByName(erring.except(buyers).withColumn("cohort", lit("error_only")))
-    }),
-    // CUBE: all four grouping sets over (status, month) in one pass —
-    // partial-aggregated map-side like any groupBy, one shuffle
-    "agg_cube_orders" -> ((s, d) =>
-      orders(s, d)
-        .cube(col("o_orderstatus"), date_format(col("o_orderdate"), "yyyy-MM").as("order_month"))
-        .agg(count(lit(1)).as("n_orders"),
-          round(sum(col("o_totalprice").cast("decimal(18,2)")).cast("double"), 2).as("total_price"))),
-    // LEFT OUTER enrichment with null preservation: every customer row
-    // survives, order-less customers carry NULL aggregates — the dimension
-    // side pre-aggregates so only (key, count, sum) rows join
-    "join_left_outer_orders" -> ((s, d) => {
-      val per = orders(s, d).groupBy("o_custkey")
-        .agg(count(lit(1)).as("n_orders"),
-          round(sum(col("o_totalprice").cast("decimal(18,2)")).cast("double"), 2)
-            .as("total_price"))
-      customer(s, d).select("c_custkey", "c_name", "c_nationkey")
-        .join(per, col("c_custkey") === col("o_custkey"), "left")
-        .drop("o_custkey")
-    }),
-    // snapshot reconciliation as a FULL OUTER join of two windowed per-key
-    // aggregates — the sync-engine "diff two table states" shape; both sides
-    // pre-aggregate before the join so only (key, count) rows shuffle
-    "join_full_outer_reconcile" -> ((s, d) => {
-      val ev = events(s, d)
-      val a = ev.filter(Ops.datePredicate("ts", EvFrom, EvTo))
-        .groupBy("user_id").agg(count(lit(1)).as("n_week1"))
-      val b = ev.filter(Ops.datePredicate("ts", LocalDate.of(2024, 1, 10), LocalDate.of(2024, 1, 14)))
-        .groupBy("user_id").agg(count(lit(1)).as("n_week2"))
-      a.join(b, Seq("user_id"), "full_outer")
-        .select(col("user_id"), col("n_week1"), col("n_week2"),
-          when(col("n_week1").isNull, lit("week2_only"))
-            .when(col("n_week2").isNull, lit("week1_only"))
-            .otherwise(lit("both")).as("presence"))
-    }),
-    "agg_rollup_orders" -> ((s, d) =>
-      // ROLLUP: per-(priority, status) totals plus per-priority subtotals and
-      // a grand total — one pass, partial-aggregated like any groupBy
-      orders(s, d).rollup("o_orderpriority", "o_orderstatus")
-        .agg(count(lit(1)).as("n_orders"),
-          // compared as round(double, 2), not decimal(38,2): wide-decimal
-          // output hash-mismatched at the driver 3 rounds running (r3 verdict)
-          round(sum(col("o_totalprice").cast("decimal(18,2)")).cast("double"), 2).as("total_price"))),
-    "agg_events_daily" -> ((s, d) =>
-      // day key as a day-truncated TIMESTAMP_NTZ, not DATE (date32 output
-      // hash-differs from DuckDB's day-timestamp at the driver) and not bare
-      // date_trunc output (LTZ TimestampType → legacy INT96 parquet, the
-      // 3-round hash-red root cause). Cast is value-identity under UTC.
-      events(s, d).groupBy(
-        date_trunc("day", col("ts")).cast("timestamp_ntz").as("event_date"), col("event_type"))
-        .agg(count(lit(1)).as("n_events"),
-          // decimal(18,2) output hash-mismatched at the driver in r4 even
-          // after the NTZ day-key fix; rounded double is the representation
-          // the gate demonstrably hashes reliably (q1/rollup, fixed r4)
-          round(sum(col("value").cast("decimal(18,2)")).cast("double"), 2).as("total_value"))),
-    // GROUPING SETS beyond rollup/cube's hierarchies: two independent
-    // one-dimension aggregates in ONE pass over the fact table (status
-    // totals ∪ priority totals), partial-aggregated map-side like any groupBy
-    "agg_grouping_sets" -> ((s, d) =>
-      orders(s, d).groupingSets(
-          Seq(Seq(col("o_orderstatus")), Seq(col("o_orderpriority"))),
-          col("o_orderstatus"), col("o_orderpriority"))
-        .agg(count(lit(1)).as("n_orders"),
-          round(sum(col("o_totalprice").cast("decimal(18,2)")).cast("double"), 2)
-            .as("total_price"))),
-    // rank/distribution analytics (§2.5): dense_rank, quartile ntile,
-    // percent_rank, cume_dist per event type over per-user totals — exact
-    // rational arithmetic both engines compute bit-identically
-    "window_rank_metrics" -> ((s, d) => {
-      val pu = events(s, d).groupBy("event_type", "user_id")
-        .agg(round(sum(col("value").cast("decimal(18,2)")).cast("double"), 2)
-          .as("total_value"))
-      val w = Window.partitionBy("event_type")
-        .orderBy(col("total_value").desc, col("user_id"))
-      pu.select(col("event_type"), col("user_id"), col("total_value"),
-        dense_rank().over(w).as("drank"),
-        ntile(4).over(w).as("quartile"),
-        round(percent_rank().over(w), 6).as("pct_rank"),
-        round(cume_dist().over(w), 6).as("cdist"))
-    }),
-    // rolling volume anomaly: per-type daily counts z-scored against the
-    // trailing 7-day baseline (current day excluded); integer window sums
-    // make every derived double bit-identical cross-engine
-    "ts_volume_anomaly" -> ((s, d) =>
-      ext.TimeSeries.rollingVolumeAnomaly(events(s, d), "event_type", "ts")),
-    // temporal regularization: sparse per-user signup days resampled to each
-    // user's dense day grid, totals forward-filled — one window pass, no
-    // fabricated-grid join (TimeSeries.dailyGridFill)
-    "ts_resample_fill" -> ((s, d) => {
-      val daily = events(s, d).filter(col("event_type") === "signup")
-        .groupBy(col("user_id"),
-          date_trunc("day", col("ts")).cast("timestamp_ntz").as("day"))
-        .agg(count(lit(1)).as("n_events"),
-          round(sum(col("value").cast("decimal(18,2)")).cast("double"), 2)
-            .as("total_value"))
-      graft.ext.TimeSeries.dailyGridFill(daily, "user_id", "day", Seq("total_value"))
-    }),
-    // truncated-kernel EWMA (8 taps, alpha 0.3) over per-user daily value
-    // totals — the smoothed-trend signal; one window pass, coefficients an
-    // IEEE product chain the oracle folds to bit-identically
-    "ts_ewma_daily" -> ((s, d) => {
-      val daily = events(s, d).groupBy(col("user_id"), col("ts").cast("date").as("day"))
-        .agg(sum(col("value").cast("decimal(18,2)")).as("tv"))
-      graft.ext.TimeSeries.truncatedEwma(daily, "user_id", "day", "tv")
-        .select(col("user_id"), col("day"),
-          round(col("tv").cast("double"), 2).as("daily_value"),
-          round(col("ewma"), 6).as("ewma"))
-    }),
-    // lag-1 autocorrelation of per-type daily event counts (over OBSERVED
-    // days — the lag is the previous observation, not the previous
-    // calendar day): Pearson r from six exact INTEGER sums, so every
-    // derived double is the same IEEE expression both engines compute
-    "ts_autocorr_daily" -> ((s, d) => {
-      val daily = events(s, d)
-        .groupBy(col("event_type"), col("ts").cast("date").as("day"))
-        .agg(count(lit(1)).as("x"))
-      val w = Window.partitionBy("event_type").orderBy("day")
-      val pairs = daily.withColumn("y", lag(col("x"), 1).over(w))
-        .filter(col("y").isNotNull)
-      val g = pairs.groupBy("event_type").agg(
-        count(lit(1)).as("n"), sum("x").as("sx"), sum("y").as("sy"),
-        sum(col("x") * col("y")).as("sxy"),
-        sum(col("x") * col("x")).as("sxx"), sum(col("y") * col("y")).as("syy"))
-      val num = (col("n") * col("sxy") - col("sx") * col("sy")).cast("double")
-      val dx = (col("n") * col("sxx") - col("sx") * col("sx")).cast("double")
-      val dy = (col("n") * col("syy") - col("sy") * col("sy")).cast("double")
-      g.select(col("event_type"), col("n").as("n_pairs"),
-        when(dx > 0.0 && dy > 0.0, round(num / (sqrt(dx) * sqrt(dy)), 6)).as("autocorr"))
-    }),
-    // COUNT(DISTINCT) under ROLLUP: distinct users per (type, day) with
-    // both subtotal levels — each grouping set re-aggregates the distinct
-    // set (no sketch), the expand-then-aggregate plan Spark partials
-    "agg_distinct_rollup" -> ((s, d) =>
-      events(s, d)
-        .select(col("event_type"), col("ts").cast("date").as("day"), col("user_id"))
-        .rollup("event_type", "day")
-        .agg(countDistinct("user_id").as("n_users"), count(lit(1)).as("n_events"))),
-    // retention/survival curve: fraction of users still active >= k days
-    // after their first event, at every realized lifetime k — exact
-    // integer suffix sums over the (tiny, day-span-bounded) lifetime
-    // histogram; the windowed cumulative runs on <= 31 rows by design
-    "events_survival_retention" -> ((s, d) => {
-      val span = events(s, d).groupBy("user_id")
-        .agg(datediff(max(col("ts").cast("date")), min(col("ts").cast("date"))).as("m"))
-      val hist = span.groupBy("m").agg(count(lit(1)).as("cnt"))
-      val w = Window.orderBy(col("m").desc)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val tot = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-      hist.select(col("m").as("k"), sum(col("cnt")).over(w).as("survivors"),
-          round(sum(col("cnt")).over(w).cast("double") /
-            sum(col("cnt")).over(tot), 6).as("fraction"))
-    }),
-    // weekly cohort retention matrix (r18): users grouped by first-active
-    // week, each cohort's distinct-active count at every realized week
-    // offset — the cohort grid behind every retention dashboard, and the
-    // survival curve's two-dimensional refinement. Week key = epoch-days/7
-    // (integer, engine-portable); exact distinct counts + ONE rounded
-    // ratio. Scale shape: one distinct (user, week) projection, a per-user
-    // min, and two grouped counts — the matrix is (weeks × offsets)-
-    // bounded, never user-count-sized
-    "events_retention_cohorts" -> ((s, d) => {
-      val wk = floor(datediff(col("ts").cast("date"),
-        lit("1970-01-01").cast("date")) / lit(7.0)).cast("long")
-      // tracked: the distinct activity frame feeds the cohort derivation
-      // and the offset join; the cohort frame feeds sizes and the join
-      val ue = graft.ext.Caches.track(
-        events(s, d).select(col("user_id"), wk.as("week")).distinct())
-      val cohort = graft.ext.Caches.track(
-        ue.groupBy("user_id").agg(min("week").as("cohort_week")))
-      val sizes = cohort.groupBy("cohort_week").agg(count(lit(1)).as("cohort_n"))
-      ue.join(cohort, Seq("user_id"))
-        .groupBy(col("cohort_week"), (col("week") - col("cohort_week")).as("week_offset"))
-        .agg(countDistinct("user_id").as("active_n"))
-        .join(broadcast(sizes), Seq("cohort_week"))
-        .withColumn("retention",
-          round(col("active_n").cast("double") / col("cohort_n"), 6))
-        .select("cohort_week", "week_offset", "active_n", "cohort_n", "retention")
-    }),
-    // per-node degree/strength/reciprocity over the transition digraph —
-    // the graph's shape card (hubs, sinks, mutual-loop density); counts
-    // and integral-double weight sums, exact in any order
-    "graph_degree_stats" -> ((s, d) => {
-      val e = graft.ext.Caches.track(eventTransitionsFixture(s, d))
-      val out = e.groupBy(col("src").as("node"))
-        .agg(count(lit(1)).as("out_deg"), sum("w").as("out_w"))
-      val in = e.groupBy(col("dst").as("node"))
-        .agg(count(lit(1)).as("in_deg"), sum("w").as("in_w"))
-      val recip = e.join(e.select(col("dst").as("src"), col("src").as("dst")),
-          Seq("src", "dst"), "left_semi")
-        .groupBy(col("src").as("node")).agg(count(lit(1)).as("n_reciprocal"))
-      out.join(in, Seq("node"), "full_outer").join(recip, Seq("node"), "left")
-        .select(col("node"),
-          coalesce(col("out_deg"), lit(0L)).as("out_deg"),
-          coalesce(col("out_w"), lit(0.0)).as("out_w"),
-          coalesce(col("in_deg"), lit(0L)).as("in_deg"),
-          coalesce(col("in_w"), lit(0.0)).as("in_w"),
-          coalesce(col("n_reciprocal"), lit(0L)).as("n_reciprocal"))
-    }),
-    // day-of-week-adjusted volume anomaly: each day's count z-scored
-    // against its type's SAME-WEEKDAY profile (population stats, current
-    // day included) — the seasonal complement to ts_volume_anomaly's
-    // trailing window; all-integer sums make every double the same IEEE
-    // expression both engines compute
-    "ts_seasonal_anomaly" -> ((s, d) => {
-      val daily = events(s, d)
-        .groupBy(col("event_type"), col("ts").cast("date").as("day"))
-        .agg(count(lit(1)).as("x"))
-        .withColumn("dow", expr("weekday(day)"))
-      val g = Window.partitionBy("event_type", "dow")
-      val staged = daily
-        .withColumn("n", count(lit(1)).over(g))
-        .withColumn("sx", sum(col("x")).over(g))
-        .withColumn("sxx", sum(col("x") * col("x")).over(g))
-      val mean = col("sx").cast("double") / col("n").cast("double")
-      val varN = (col("n") * col("sxx") - col("sx") * col("sx")).cast("double") /
-        (col("n") * col("n")).cast("double")
-      val z = (col("x").cast("double") - mean) / sqrt(varN)
-      val ok = col("n") >= 2 && varN > 0.0
-      staged.select(col("event_type"), col("day"), col("x").as("n_events"),
-        col("dow"), col("n").as("dow_days"),
-        when(ok, round(z, 6)).as("z_score"))
-    }),
-    // Lorenz/Pareto revenue concentration by customer decile: the global
-    // rank comes from Ops.globalOrdinals (range partition + zipWithIndex —
-    // NO single-partition exchange at any scale), deciles are INTEGER
-    // arithmetic on that ordinal, and only the 10-row decile frame sees a
-    // window; shares divide doubles cast from exact decimal sums
-    "window_pareto_deciles" -> ((s, d) => {
-      val rev = orders(s, d).groupBy(col("o_custkey"))
-        .agg(sum(col("o_totalprice").cast("decimal(18,2)")).as("rev"))
-      val tot = broadcast(rev.agg(sum(col("rev")).as("total"), count(lit(1)).as("n")))
-      val ord = graft.ops.Ops.globalOrdinals(rev,
-        Seq(col("rev").desc, col("o_custkey")), 8, "ord")
-      val dec = ord.crossJoin(tot)
-        .withColumn("decile", expr("CAST(ord * 10 DIV n AS INT) + 1"))
-        .groupBy("decile")
-        .agg(count(lit(1)).as("n_customers"), sum(col("rev")).as("drev"),
-          first(col("total")).as("total"))
-      val w = Window.orderBy("decile")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      dec.select(col("decile"), col("n_customers"),
-        round(col("drev").cast("double") / col("total").cast("double"), 6).as("rev_share"),
-        round(sum(col("drev")).over(w).cast("double") / col("total").cast("double"), 6)
-          .as("cum_share"))
-    }),
-    // Gini coefficient of order value per market segment via the rank
-    // formula G = (2Σi·x − (n+1)Σx)/(nΣx) with x ascending — all-integer
-    // cents arithmetic, Σi·x accumulated in DECIMAL(38,0) (a 30× probe
-    // overflowed the long accumulator at ~2×10¹⁹; DuckDB mirrors with
-    // HUGEINT — both exact in any accumulation order)
-    "agg_gini_segments" -> ((s, d) => {
-      val j = orders(s, d)
-        .join(broadcast(customer(s, d)), col("o_custkey") === col("c_custkey"))
-        .select(col("c_mktsegment"), col("o_orderkey"),
-          (col("o_totalprice").cast("decimal(18,2)") * 100).cast("long").as("cents"))
-      val w = Window.partitionBy("c_mktsegment").orderBy(col("cents"), col("o_orderkey"))
-      j.withColumn("i", row_number().over(w).cast("long"))
-        .groupBy("c_mktsegment").agg(count(lit(1)).as("n"),
-          sum(col("cents")).as("sx"),
-          sum(col("i").cast("decimal(19,0)") * col("cents").cast("decimal(19,0)")).as("six"))
-        .select(col("c_mktsegment"), col("n"),
-          round((lit(2.0) * col("six").cast("double") -
-              (col("n") + 1).cast("double") * col("sx").cast("double")) /
-            (col("n").cast("double") * col("sx").cast("double")), 6).as("gini"))
-    }),
-    // linear multi-touch attribution: each purchase's credit split equally
-    // across the DISTINCT touch types (view/click) seen in its user's
-    // 7 prior days — credits are 1/k with k ≤ 2, so every credit is an
-    // exact binary fraction and the sums are exact in any order
-    "events_attribution_linear" -> ((s, d) => {
-      val ev = events(s, d)
-      val conv = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id").as("conv_id"), col("user_id"), col("ts").as("cts"))
-      val touch = ev.filter(col("event_type").isin("view", "click"))
-        .select(col("user_id"), col("event_type").as("touch_type"), col("ts").as("tts"))
-      val j = conv.join(touch, Seq("user_id"))
-        .filter(col("tts") < col("cts") &&
-          col("tts") >= col("cts") - expr("INTERVAL 7 DAYS"))
-        .select(col("conv_id"), col("touch_type")).distinct()
-      j.withColumn("credit",
-          lit(1.0) / count(lit(1)).over(Window.partitionBy("conv_id")))
-        .groupBy("touch_type")
-        .agg(count(lit(1)).as("n_conversions"), round(sum("credit"), 6).as("credit"))
-    }),
-    // RFM segmentation: per-user recency/frequency/monetary quartile codes
-    // via three chained global quantile-bin passes (Sampling.quantileBins —
-    // exact interpolated thresholds, ties fall lower); recency in exact
-    // microseconds from the corpus max, monetary an exact decimal sum
-    "events_rfm_segments" -> ((s, d) => {
-      val ev = events(s, d)
-      val mx = broadcast(ev.agg(max(unix_micros(col("ts").cast("timestamp"))).as("mx")))
-      val rfm = ev.groupBy("user_id").agg(
-        max(unix_micros(col("ts").cast("timestamp"))).as("last_us"),
-        count(lit(1)).as("f"),
-        sum(col("value").cast("decimal(18,2)")).cast("double").as("m"))
-      val base = rfm.crossJoin(mx)
-        .select(col("user_id"), (col("mx") - col("last_us")).as("r_us"), col("f"), col("m"))
-      val binned = Sampling.quantileBins(
-        Sampling.quantileBins(
-          Sampling.quantileBins(base, "r_us", 4, "r_bin"),
-          "f", 4, "f_bin"),
-        "m", 4, "m_bin")
-      binned.select(col("user_id"), col("r_bin"), col("f_bin"), col("m_bin"),
-        concat(col("r_bin").cast("string"), col("f_bin").cast("string"),
-          col("m_bin").cast("string")).as("segment"))
-    }),
-    // conversion lag: per-user first purchase AFTER the first view, exact
-    // microsecond arithmetic (unix_micros ≡ epoch_us), interpolated
-    // percentiles over the integral lags — one row out
-    "events_conversion_lag" -> ((s, d) => {
-      val ev = events(s, d)
-      val fv = ev.filter(col("event_type") === "view")
-        .groupBy("user_id").agg(min(col("ts")).as("first_view"))
-      val lags = ev.filter(col("event_type") === "purchase")
-        .join(fv, "user_id").filter(col("ts") > col("first_view"))
-        .groupBy(col("user_id"), col("first_view"))
-        .agg(min(unix_micros(col("ts").cast("timestamp"))).as("mb"))
-        .select((col("mb") - unix_micros(col("first_view").cast("timestamp"))).as("lag_us"))
-      def pct(q: Double, nm: String) =
-        round(expr(s"percentile(lag_us, $q)") / 1000000.0, 6).as(nm)
-      lags.agg(count(lit(1)).as("n_converted"), pct(0.25, "p25_s"),
-        pct(0.5, "p50_s"), pct(0.75, "p75_s"), pct(0.9, "p90_s"))
-    }),
-    "distinct_counts" -> ((s, d) =>
-      events(s, d).agg(
-        countDistinct(col("user_id")).as("n_users"),
-        countDistinct(col("event_type")).as("n_types"))),
-    // pivot: per-user value totals spread across the 5 event types — one
-    // grouped pass, each cell a partial-aggregated sum (users missing a type
-    // get NULL, matching the SQL CASE-sum)
-    "agg_pivot_event_types" -> ((s, d) =>
-      events(s, d).groupBy("user_id")
-        .pivot("event_type", Seq("click", "view", "purchase", "signup", "error"))
-        .agg(round(sum(col("value").cast("decimal(18,2)")).cast("double"), 2))),
-    // exact interpolated quantiles per type (Spark `percentile` ≡ DuckDB
-    // `quantile_cont`, both the (n−1)·q linear-interpolation definition;
-    // round(6) absorbs summation-order ulps)
-    "agg_value_percentiles" -> ((s, d) =>
-      events(s, d).groupBy("event_type").agg(
-        round(expr("percentile(value, 0.25)"), 6).as("p25"),
-        round(expr("percentile(value, 0.5)"), 6).as("p50"),
-        round(expr("percentile(value, 0.75)"), 6).as("p75"))),
-    // dataset profiling: one aggregation pass, long-format per-column stats
-    "profile_events" -> ((s, d) =>
-      ext.Profiling.profile(events(s, d),
-        Seq("event_id", "user_id", "event_type", "value", "props"))),
-    // robust per-group outlier screen: modified z-score (median/MAD,
-    // Iglewicz–Hoaglin k=3.5) — immune to the masking that mean/stddev
-    // z-scores suffer on the value column's heavy right tail
-    "profile_outliers_mad" -> ((s, d) =>
-      ext.Profiling.madOutliers(events(s, d), Seq("event_type"), "value",
-          carryCols = Seq("event_id"), k = 3.5)
-        .select(col("event_type"), col("event_id"), col("value"),
-          round(col("robust_z"), 6).as("robust_z"))),
-    // equi-width value histogram: scalar min/max pass, then one grouped
-    // count on the computed bin — at most `bins` partials per partition
-    "profile_histogram" -> ((s, d) =>
-      ext.Profiling.histogram(events(s, d), "value", bins = 20)),
-    // PSI distribution drift between two snapshot halves (event_id parity):
-    // reference-derived equi-width bins, edge-clamped, Laplace-smoothed
-    // shares; rounded at 6 (ln/division ulps differ across libms)
-    "profile_psi_drift" -> ((s, d) => {
-      val ev = events(s, d)
-      ext.Profiling.psiDrift(ev.filter(col("event_id") % 2 === 0),
-          ev.filter(col("event_id") % 2 === 1), "value", bins = 10)
-        .select(col("bin"), round(col("p_ref"), 6).as("p_ref"),
-          round(col("p_cur"), 6).as("p_cur"),
-          round(col("psi_contrib"), 6).as("psi_contrib"))
-    }),
-    // count–min sketch probe: exact top-30 tokens vs their sketch
-    // estimates — the mergeable constant-memory frequency sketch (cell-wise
-    // sum IS the merge, d×w rows at any corpus size); buckets keyed by the
-    // portable idHash so both engines address the same cells
-    "profile_cms_heavy_hitters" -> ((s, d) =>
-      ext.Profiling.cmsHeavyHitters(docs(s, d), "text")),
-    // one-row corpus data card: counts/cardinalities/mass/dup rate, every
-    // number an exact integer or exact integer division — no rounding
-    "profile_corpus_card" -> ((s, d) =>
-      ext.Profiling.corpusCard(docs(s, d))),
-    // Zipf's-law fit over the top-100 token frequencies: OLS of ln(freq)
-    // on ln(rank) as EXPLICIT sums (n·Σxy−Σx·Σy over n·Σx²−(Σx)²) so both
-    // engines run the same arithmetic shape; ranks/counts are exact ints,
-    // stats rounded at 6 (the ln/sum-order contract)
-    "profile_zipf_fit" -> ((s, d) =>
-      ext.Profiling.zipfFit(docs(s, d), "text")),
-    // cohort retention: users grouped by first-activity day, distinct-user
-    // counts per (cohort, day offset) — two key shuffles, both on user/day
-    "agg_user_retention" -> ((s, d) => {
-      val ev = events(s, d).select(col("user_id"),
-        date_trunc("day", col("ts")).cast("timestamp_ntz").as("day"))
-      val first = ev.groupBy("user_id").agg(min(col("day")).as("cohort_day"))
-      ev.join(first, "user_id")
-        .groupBy(col("cohort_day"),
-          datediff(col("day").cast("date"), col("cohort_day").cast("date")).as("day_offset"))
-        .agg(countDistinct(col("user_id")).as("n_users"))
-    }),
-    // first-touch conversion funnel view -> click -> purchase within 7 days
-    // of each user's first view; per-step match timestamps ride the hash
-    "events_funnel" -> ((s, d) =>
-      graft.ext.Events.funnel(events(s, d), "user_id", "event_type", "ts",
-          Seq("view", "click", "purchase"), windowSeconds = 604800L)
-        .withColumnRenamed("user", "user_id")),
-    // contiguous 3-step path mining over per-user timelines (PrefixSpan's
-    // n-gram core): occurrence + distinct-user support, min 20 occurrences
-    "events_frequent_paths" -> ((s, d) =>
-      graft.ext.Events.frequentPaths(events(s, d), "user_id", "event_type",
-        "ts", "event_id", length = 3, minSupport = 20L)),
-    "json_extract_props" -> ((s, d) =>
-      events(s, d).select(col("event_id"),
-        get_json_object(col("props"), "$.k").cast("long").as("k"))),
-
-    // ---- text analysis (§2.12) ----
-    "text_token_stats" -> ((s, d) => TextAnalysis.tokenStats(docs(s, d))),
-    // lexical diversity: type/token ratio + hapax fraction per document —
-    // the vocabulary-richness quality signal (template/boilerplate text
-    // scores low TTR, spam keyword-stuffing scores high hapax); one
-    // (doc, token) shuffle, exact integer ratios
-    "text_lexical_diversity" -> ((s, d) => {
-      val tf = docs(s, d)
-        .select(col("doc_id"), explode(TextAnalysis.tokens(col("text"))).as("tok"))
-        .groupBy("doc_id", "tok").agg(count(lit(1)).as("c"))
-      tf.groupBy("doc_id").agg(
-          sum(col("c")).as("n_tokens"), count(lit(1)).as("n_types"),
-          sum(when(col("c") === 1, 1L).otherwise(0L)).as("n_hapax"))
-        .select(col("doc_id"), col("n_tokens"), col("n_types"), col("n_hapax"),
-          round(col("n_types").cast("double") / col("n_tokens"), 6).as("ttr"),
-          round(col("n_hapax").cast("double") / col("n_types"), 6).as("hapax_ratio"))
-    }),
-    // capstone pipeline: the actual training-corpus selection pass —
-    // fingerprint-dedup winners ∩ length filter ∩ language-ID agreement,
-    // composed purely from the library's operators
-    "pipeline_corpus_select" -> ((s, d) => corpusSelect(s, d)),
-    // sampled capstone: the full training-data selection shape — dedup →
-    // quality/language filter → deterministic hash downsample. Gates
-    // Sampling.hashFraction IN COMPOSITION (the selection must commute with
-    // the upstream joins for the oracle to agree).
-    "pipeline_corpus_sample" -> ((s, d) =>
-      // selection from the per-JVM fixture (r20 wave 2): corpusSelect is
-      // the pipeline_corpus_select gate's operator (fresh there); the
-      // operator HERE is the deterministic hash downsample over it
-      Sampling.hashFraction(corpusSelectFixture(s, d), "doc_id", 500)),
-    // packed capstone: selection → training sequences. Gates
-    // Packing.packTokenBudget IN COMPOSITION — the bins must be stable
-    // against however the upstream dedup/filter joins partitioned the data
-    "pipeline_corpus_pack" -> ((s, d) =>
-      // selection from the per-JVM fixture (see pipeline_corpus_sample)
-      graft.ext.Packing.packTokenBudget(corpusSelectFixture(s, d), "doc_id", "n_tokens", 256, 4)),
-    // fuzzy capstone: same selection pass but deduped through NEAR-dup
-    // clusters (jaccardPairs → connectedComponents) instead of exact
-    // fingerprints — each cluster keeps only its canonical (minimum-id)
-    // member; docs in no near-dup pair keep themselves. Exact duplicates
-    // have Jaccard 1.0, so this strictly subsumes the fingerprint pass.
-    // NB connectedComponents executes its iterative fixpoint eagerly at
-    // build time (see its scaladoc) — inherent to the fuzzy path.
-    "pipeline_corpus_select_fuzzy" -> ((s, d) => {
-      val doc = docs(s, d)
-      // near-dup clusters from the per-JVM derived-frame fixture (r20 wave
-      // 2): the eager jaccardPairs -> connectedComponents fixpoint is the
-      // dedup_clusters gate's operator (still fresh THERE); here it is
-      // shared INPUT to the selection composition under certification
-      val clusters = jaccardClustersFixture(s, d)
-      val losers = clusters.filter(col("node") =!= col("cluster"))
-        .select(col("node").as("doc_id"))
-      val toks = TextAnalysis.tokenStats(doc).select("doc_id", "n_tokens")
-      val lang = TextAnalysis.langId(doc).select("doc_id", "pred_lang")
-      doc.join(losers, Seq("doc_id"), "left_anti")
-        .join(toks, "doc_id")
-        .join(lang, "doc_id")
-        .filter(col("n_tokens") >= 5 && col("pred_lang") === col("lang"))
-        .select("doc_id", "lang", "n_chars", "n_tokens")
-    }),
-    "text_quality" -> ((s, d) => TextAnalysis.quality(docs(s, d))),
-    // configurable wordlist screen (the UT1/Dolma toxicity-list stage):
-    // exact-token match on the shared tokenizer, keep = ratio <= 5%
-    "text_lexicon_screen" -> ((s, d) => {
-      val lex = { import s.implicits._
-        Seq("slow", "merge", "filter").toDF("word") }
-      TextAnalysis.lexiconScreen(docs(s, d), lex, maxRatio = 0.05)
-        .select(col("doc_id"), col("n_tokens"), col("n_blocked"),
-          round(col("blocked_ratio"), 6).as("blocked_ratio"), col("keep"))
-    }),
-    // Flesch/Flesch-Kincaid readability (the grade-level quality prior):
-    // exact word/sentence/vowel-group counts, formulas at 6 decimals
-    "text_readability" -> ((s, d) =>
-      TextAnalysis.readability(synthReadabilityDocs(s, d))),
-    // multi-word blocklist phrase screen (the C4 §2.2 / Dolma boilerplate-
-    // phrase stage): anchor-pruned contiguous token-run matching against a
-    // broadcast phrase table; the doubled spelling must collapse to one
-    // entry and "no such phrase" must hit nothing
-    "text_phrase_screen" -> ((s, d) => {
-      val ph = { import s.implicits._
-        Seq("table table", "fast merge", "the line sort",
-          "  FAST   Merge ", "no such phrase").toDF("phrase") }
-      TextAnalysis.phraseScreen(docs(s, d), ph)
-    }),
-    // encoding-damage screen (the ftfy/CCNet stage between WET parse and
-    // quality filtering): U+FFFD replacement chars, raw C0/C1 controls, and
-    // double-encoding mojibake signatures counted exactly over the hostile
-    // fixture; keep = zero signals, NULL text -> NULL verdict
-    "text_encoding_screen" -> ((s, d) =>
-      TextAnalysis.encodingScreen(synthEncodingDocs(s, d))),
-    // Unicode-script composition over the hostile multi-script fixture:
-    // per-class character counts, the n_scripts mix counter, alphabetical
-    // tie-broken dominance, and the purity ratio — the screen that catches
-    // the injected Cyrillic-а homoglyph spoof language ID misses
-    "text_script_profile" -> ((s, d) =>
-      TextAnalysis.scriptProfile(synthScriptDocs(s, d))),
-    // the SparkSessionExtensions SQL-function path end-to-end: the SAME
-    // native expression invoked from SQL TEXT (not the Column wrapper) —
-    // proves a SQL-first deployment reaches the graftx family through
-    // spark.sql.extensions registration alone
-    "o18_sql_function_path" -> ((s, d) => {
-      synthNfcDocs(s, d).createOrReplaceTempView("sql_path_docs")
-      // spark.sql resolves eagerly, so the view can drop immediately —
-      // query entries must not leak state into the shared session.
-      // jw_probe runs on a GUARANTEED-ASCII hashed-letters projection (the
-      // dedup_name_linkage recipe), not substring(text, 1, 8): the JW
-      // kernel indexes code points where DuckDB's indexes bytes, so raw
-      // corpus heads only hash-match while they happen to be ASCII — a
-      // fixture regen with CJK/accented heads would break the gate by
-      // design (r17 advice)
-      val df = s.sql("""SELECT doc_id, unicode_normalize(text, 'NFC') AS nfc_text,
-                       |       length(unicode_normalize(text, 'NFC')) AS n_chars_nfc,
-                       |       round(jaro_winkler(
-                       |         translate(lpad(CAST(doc_id * 2654435761 % 100000000 AS STRING), 8, '0'),
-                       |                   '0123456789', 'abcdefghij'), 'martha'), 6) AS jw_probe
-                       |  FROM sql_path_docs""".stripMargin)
-      s.catalog.dropTempView("sql_path_docs")
-      df
-    }),
-    // Unicode NFC normalization (the repair step after the encoding
-    // screen, before fingerprint/dedup): the codegen'd JDK-Normalizer
-    // expression vs DuckDB's utf8proc nfc_normalize — two independent
-    // implementations of the same Unicode algorithm, hash-compared
-    "text_nfc_normalize" -> ((s, d) => {
-      val nfcCol = TextAnalysis.nfcNormalize(col("text"))
-      synthNfcDocs(s, d).select(col("doc_id"), nfcCol.as("nfc_text"),
-        length(nfcCol).as("n_chars_nfc"), (nfcCol =!= col("text")).as("changed"))
-    }),
-    // raw-HTML → text extraction (r18): the pre-WET crawl stage — tag /
-    // script / comment stripping + entity decode over the hostile HTML
-    // fixture, the identical regex chain running under DuckDB
-    "text_html_extract" -> ((s, d) =>
-      TextAnalysis.htmlExtract(synthHtmlDocs(s, d))),
-    // outlink extraction (r18): the crawl-frontier / web-graph source —
-    // ALL double-quoted href targets first, then single-quoted (pos is
-    // that grouped order, not raw document position); empty hrefs kept
-    // (the Urls family filters downstream)
-    "text_html_links" -> ((s, d) =>
-      TextAnalysis.htmlLinks(synthHtmlDocs(s, d))),
-    "text_langid" -> ((s, d) => TextAnalysis.langId(docs(s, d))),
-    "text_fingerprint" -> ((s, d) => TextAnalysis.fingerprint(docs(s, d))),
-    // per-doc Shannon char entropy: the gibberish/base64/binary-junk
-    // detector of crawl quality filtering (prose sits in a narrow band)
-    // the astral-plane caveat, MEASURED (r18 verdict item 7): every 23rd
-    // doc carries supplementary-plane emoji (UTF-16 surrogate pairs on the
-    // JVM). Both engines split on CODE POINTS (Java's empty-pattern split
-    // has refused to cut surrogate pairs since JDK 8; DuckDB is natively
-    // codepoint-based) and both length() functions count code points, so
-    // the gate pins agreement instead of narrating a divergence
-    "text_char_entropy" -> ((s, d) => TextAnalysis.charEntropy(
-      docs(s, d).select(col("doc_id"),
-        when(pmod(col("doc_id"), lit(23)) === 0,
-          concat(col("text"), lit(" 😀🚀😀")))
-          .otherwise(col("text")).as("text")))),
-    // winnowing (Schleimer et al., the MOSS selection): min-hash of every
-    // 4-gram window over positional 5-gram md5 hashes, rightmost ties —
-    // ~2/(w+1) of grams stored, any shared >= k+w-1-token run still caught
-    "text_winnow_fingerprints" -> ((s, d) =>
-      TextAnalysis.winnowFingerprints(docs(s, d), k = 5, window = 4)),
-    // URL hygiene (the RefinedWeb/C4 step after crawl ingest): URLs
-    // synthesized deterministically from doc_id to cover every
-    // canonicalization case — mixed-case scheme/host, default and
-    // non-default ports, fragments, CONSECUTIVE tracking params, all-params-
-    // stripped, and a bare non-URL string — each of the five steps mirrored
-    // verbatim in the DuckDB oracle, so the whole rewrite is hash-gated
-    "text_url_canonicalize" -> ((s, d) => {
-      val u = synthUrls(s, d)
-      u.select(col("doc_id"), col("url"),
-        ext.Urls.canonicalizeUrl(col("url")).as("canonical"),
-        ext.Urls.urlHost(col("url")).as("host"),
-        ext.Urls.registrableDomainApprox(ext.Urls.urlHost(col("url"))).as("domain"))
-    }),
-    // host-level keep/drop statistics (the RefinedWeb per-host stage): one
-    // codegen'd projection + ONE map-side-combined groupBy on the host;
-    // pooled stopword ratio keeps every number an exact integer division
-    "text_url_host_stats" -> ((s, d) =>
-      ext.Urls.hostStats(
-        synthUrls(s, d).join(docs(s, d).select(col("doc_id"), col("text")),
-          Seq("doc_id")),
-        "url", "text")),
-    // PSL-exact registrable domain: longest public-suffix rule wins via
-    // the exploded dot-suffix equi-join over DISTINCT hosts; the approx
-    // (last-two-labels) column rides along to pin where they diverge
-    // (news…example.co.uk -> example.co.uk vs the approx's co.uk)
-    "text_url_domain_psl" -> ((s, d) => {
-      import s.implicits._
-      val psl = Seq("com", "org", "net", "uk", "co.uk", "org.uk", "au",
-        "com.au", "edu.au", "de").toDF("suffix")
-      val hosts = synthUrls(s, d).select(col("doc_id"),
-        ext.Urls.urlHost(col("url")).as("host"))
-      ext.Urls.registrableDomainPsl(hosts, "host", psl)
-        .select(col("doc_id"), col("host"), col("domain"),
-          ext.Urls.registrableDomainApprox(col("host")).as("domain_approx"))
-    }),
-    // domain blocklist filter: host == domain or any subdomain; blocklist
-    // broadcast, corpus un-shuffled
-    "text_url_filter_blocked" -> ((s, d) => {
-      import s.implicits._
-      val blocked = Seq("example.com", "tracker.net").toDF("domain")
-      ext.Urls.filterBlockedDomains(synthUrls(s, d), "url", blocked)
-        .select("doc_id", "url")
-    }),
-    // C4 line-level cleaning over the hostile multi-line fixture; every
-    // line/document rule mirrored verbatim in the DuckDB oracle
-    "text_c4_clean" -> ((s, d) =>
-      TextAnalysis.c4Clean(synthC4Docs(s, d), minLinesPerDoc = 3)),
-    // Gopher/MassiveText doc-level quality rules over the hostile fixture;
-    // thresholds tightened (minWords 10, bullet frac 0.5) so every rule has
-    // fixture rows that live and die by it — mirrored in the oracle's keep
-    "text_gopher_quality" -> ((s, d) =>
-      TextAnalysis.gopherQuality(synthGopherDocs(s, d),
-        minWords = 10, maxBulletLineFrac = 0.5)),
-    // the cleaning-stage capstone: C4 line rules → Gopher doc rules →
-    // exact fingerprint dedup over a corpus doubled with a shifted-id
-    // replica (so the dedup stage is load-bearing: every survivor is the
-    // min-id member of its content class); each stage's SQL twin is the
-    // factored CTE chain the standalone gates share
-    "pipeline_clean_corpus" -> ((s, d) => {
-      val base = synthC4Docs(s, d)
-      val corpus = base.unionByName(
-        base.select((col("doc_id") + 100000).as("doc_id"), col("text")))
-      // cc feeds BOTH the gopher metrics and the survivor join — cache it
-      // so the c4 split/filter subtree computes once (Bench/Verify release
-      // via Caches.unpersistAll after the query)
-      val cc = graft.ext.Caches.track(
-        TextAnalysis.c4Clean(corpus, minLinesPerDoc = 3)
-          .select(col("doc_id"), col("clean_text")))
-      val gk = TextAnalysis.gopherQuality(
-          cc.select(col("doc_id"), col("clean_text").as("text")),
-          minWords = 10, maxBulletLineFrac = 0.5,
-          gopherStopwords = Seq("sentence", "doc", "for", "this"))
-        .filter(col("keep")).select("doc_id")
-      val kept = cc.join(gk, "doc_id")
-      Dedup.exact(
-          kept.withColumn("fp", Dedup.contentFingerprint(col("clean_text"))),
-          Seq("fp"), "doc_id")
-        .select("doc_id", "clean_text")
-    }),
-    // the crawl-chain capstone (r18 verdict item 1): raw HTML → block-
-    // structured text extraction → C4 LINE rules → exact fingerprint dedup
-    // over a doubled corpus. The load-bearing seam is htmlExtract's
-    // block→newline contract: c4Clean splits on \n, so the pre-r19
-    // whitespace collapse degenerated every document to one line and the
-    // per-line rules fired on the wrong unit
-    "pipeline_html_clean" -> ((s, d) => {
-      val base = synthHtmlCleanDocs(s, d)
-      val corpus = base.unionByName(
-        base.select((col("doc_id") + 100000).as("doc_id"), col("html")))
-      val ex = TextAnalysis.htmlExtract(corpus)
-      val cleaned = TextAnalysis.c4Clean(
-        ex.select(col("doc_id"), col("clean_text").as("text")), minLinesPerDoc = 3)
-      Dedup.exact(
-          cleaned.withColumn("fp", Dedup.contentFingerprint(col("clean_text"))),
-          Seq("fp"), "doc_id")
-        .select("doc_id", "clean_text", "n_lines_kept")
-    }),
-    "text_term_stats" -> ((s, d) => TextAnalysis.termStats(docs(s, d), k = 100)),
-    "text_tfidf" -> ((s, d) => TextAnalysis.tfidf(docs(s, d), k = 100)),
-    // per-doc top-3 TF-IDF keywords: rank on the ROUNDED score (the tfidf
-    // determinism contract), one doc-partitioned window
-    "text_keywords_per_doc" -> ((s, d) =>
-      TextAnalysis.keywordsPerDoc(docs(s, d))),
-    // repeated-trigram quality rule (boilerplate/degenerate-text signal)
-    "text_repetition" -> ((s, d) => TextAnalysis.repetition(docs(s, d))),
-    // top-2-gram character fraction (the remaining MassiveText repetition
-    // rule); one (doc, gram) shuffle + max(struct) argmax, total-order
-    // tie-break mirrored by the oracle's ROW_NUMBER
-    "text_repetition_topgram" -> ((s, d) =>
-      TextAnalysis.repetitionTopGram(docs(s, d))),
-    // corpus-unigram surprisal (model-free perplexity stand-in); gated at 6
-    // decimals — ln and float-sum order differ by ulps across libms
-    "text_surprisal" -> ((s, d) =>
-      TextAnalysis.unigramSurprisal(docs(s, d), "doc_id", "text")
-        .select(col("doc_id"), col("n_tokens"),
-          round(col("avg_surprisal"), 6).as("avg_surprisal"))),
-    // vocabulary drift between the en and de slices: smoothed unigram KL
-    // both ways + Jensen-Shannon — the text-side PSI
-    "text_vocab_divergence" -> ((s, d) => {
-      val dd = docs(s, d)
-      TextAnalysis.vocabDivergence(
-        dd.filter(col("lang") === "en"), dd.filter(col("lang") === "de"))
-    }),
-    // BM25 top-25 for a fixed three-term query — rounded-score ranking so
-    // the selected SET is engine-independent at the cutoff
-    "text_bm25_search" -> ((s, d) =>
-      TextAnalysis.bm25(docs(s, d), "fast hash join", topK = 25)),
-    // the PERSISTED inverted-index path (r18): build token-clustered
-    // postings + additive df + frozen stats into a temp TableStore, reload
-    // the stats from storage, search through the pruned postings scan —
-    // must be bit-identical to the in-memory bm25 (the
-    // sim_ann_ivf_persisted technique: same oracle, whole persist/load/
-    // probe pipeline hash-checked)
-    "text_bm25_index_search" -> ((s, d) => {
-      // the index builds ONCE per process (fixture cache — r19 verdict
-      // item 3: build cost amortizes in production and is bench hygiene
-      // here); the gate then measures the production steady state:
-      // stats reload + the pruned postings probe, hash-checked whole
-      val store = new graft.store.TableStore(s, bm25FullIndexDir(s, d))
-      val idx = TextAnalysis.loadTextIndex(store, "fts")
-      TextAnalysis.searchTextIndex(store, idx, "fast hash join", topK = 25)
-    }),
-    // the growing-index loop: index built on docs < 250, the rest appended
-    // as postings + df DELTAS (stats stay FROZEN — the IVF frozen-quantizer
-    // trade, Lucene's per-segment practice). The oracle reproduces exactly
-    // that contract: n/avgdl from the build slice, postings/df from the
-    // whole corpus — a lost append, a stale df sum, or an accidental stats
-    // refresh all hash-fail
-    "text_bm25_index_grow" -> ((s, d) => {
-      // base index (docs < 250) from the per-JVM fixture cache, copied to
-      // a fresh dir; the GROW leg — the operator this gate certifies —
-      // appends the rest as postings/df deltas FRESH on every invocation
-      val store = bm25GrowStore(s, d, "graft-bm25-grow")
-      val built = TextAnalysis.loadTextIndex(store, "fts_g")
-      TextAnalysis.appendToTextIndex(store, built, docs(s, d).filter(col("doc_id") >= 250))
-      val idx = TextAnalysis.loadTextIndex(store, "fts_g")
-      TextAnalysis.searchTextIndex(store, idx, "fast hash join", topK = 25)
-    }),
-    // the stats-refresh lever (r18 verdict item 4): same grown index as
-    // text_bm25_index_grow, but refreshTextIndexStats recomputes n/avgdl
-    // from the postings (one narrow aggregation, no postings rewrite) —
-    // after which search must equal the in-memory bm25 over the WHOLE
-    // corpus (the plain bm25 oracle), not the frozen build-slice contract
-    "text_bm25_index_refresh" -> ((s, d) => {
-      val dd = docs(s, d)
-      // refreshTextIndexStats computes n_docs/avgdl over POSTINGS-bearing
-      // docs (the documented deviation), while the in-memory bm25 oracle
-      // counts every doc — the refresh ≡ whole-corpus-bm25 contract below
-      // therefore needs a fixture with no zero-token/NULL-text docs.
-      // Asserted HERE so a fixture change fails with this message instead
-      // of forking the gate hash like an operator bug (r19 ADVICE fix).
-      // The count is corpus-deterministic → per-JVM cached (and prewarmed),
-      // so the timed gate region doesn't re-pay a full-corpus tokenization
-      // per run (r20 review fix — the same certification-cost class item 3
-      // moved out of the bench's steady state).
-      val tokenless: Long = bm25TokenlessCount(s, d)
-      require(tokenless == 0,
-        s"text_bm25_index_refresh: fixture grew $tokenless zero-token doc(s); " +
-          "the postings-only n/avgdl refresh makes the whole-corpus bm25 " +
-          "oracle inapplicable — see refreshTextIndexStats docs")
-      // base from the fixture cache (copy), grow + REFRESH fresh per run —
-      // the refresh lever is the operator under certification here
-      val grown = bm25GrowStore(s, d, "graft-bm25-refresh")
-      val built = TextAnalysis.loadTextIndex(grown, "fts_g")
-      TextAnalysis.appendToTextIndex(grown, built, dd.filter(col("doc_id") >= 250))
-      val idx = TextAnalysis.refreshTextIndexStats(grown, "fts_g")
-      TextAnalysis.searchTextIndex(grown, idx, "fast hash join", topK = 25)
-    }),
-    // PMI collocation mining (Church & Hanks): top-40 bigrams by rounded
-    // PMI at min pair count 5 — the multi-word-unit discovery step of
-    // vocabulary curation; rounded-rank + (w1, w2) tiebreak at the cutoff
-    "text_collocations" -> ((s, d) =>
-      TextAnalysis.collocations(docs(s, d), minCount = 5L, topK = 40)),
-    // Stupid-Backoff bigram surprisal under a reference-slice LM (every
-    // tenth doc, the novelty convention) — the count-table form of the
-    // CCNet perplexity filter; 6 decimals like every ln-based gate
-    "text_bigram_surprisal" -> ((s, d) => {
-      val dd = docs(s, d)
-      TextAnalysis.bigramSurprisal(dd,
-          dd.filter(pmod(col("doc_id"), lit(10)) === 0), "doc_id", "text")
-        .select(col("doc_id"), col("n_bigrams"),
-          round(col("avg_surprisal"), 6).as("avg_surprisal"))
-    }),
-    // interpolated Kneser–Ney bigram surprisal under the same reference
-    // slice — the KenLM-default smoothing CCNet's perplexity filter
-    // actually ships: backoff mass follows CONTINUATION counts (how many
-    // distinct contexts a word completes), not raw frequency; 6 decimals
-    // like every ln-based gate
-    "text_kn_bigram_ppl" -> ((s, d) => {
-      val dd = docs(s, d)
-      TextAnalysis.knBigramSurprisal(dd,
-          dd.filter(pmod(col("doc_id"), lit(10)) === 0), "doc_id", "text")
-        .select(col("doc_id"), col("n_bigrams"),
-          round(col("avg_kn_surprisal"), 6).as("avg_kn_surprisal"))
-    }),
-    // CCNet head/middle/tail (Wenzek et al. 2020 §3.3): per-LANGUAGE
-    // surprisal terciles via groupQuantileBins — one global cut would rank
-    // languages by LM fit, not documents within a language
-    "pipeline_ccnet_buckets" -> ((s, d) => {
-      val dd = docs(s, d)
-      val scored = TextAnalysis.unigramSurprisal(dd, "doc_id", "text")
-        .select(col("doc_id"), round(col("avg_surprisal"), 6).as("avg_surprisal"))
-      // the scored frame feeds BOTH the per-language threshold aggregation
-      // and the bin-assignment join — cache it so the multi-shuffle
-      // surprisal subtree computes once (released via Caches.unpersistAll)
-      val j = graft.ext.Caches.track(
-        dd.select(col("doc_id"), col("lang")).join(scored, Seq("doc_id")))
-      Sampling.groupQuantileBins(j, "lang", "avg_surprisal", 3)
-        .select(col("doc_id"), col("lang"), col("avg_surprisal"),
-          element_at(array(lit("head"), lit("middle"), lit("tail")), col("bin"))
-            .as("bucket"))
-    }),
-    // cross-corpus novelty: fraction of each doc's distinct trigrams unseen
-    // in the reference slice (every tenth doc) — the data-mixing signal;
-    // NULL-text docs pre-filtered (no grams to score)
-    "text_novelty" -> ((s, d) => {
-      val nn = docs(s, d).filter(col("text").isNotNull)
-      TextAnalysis.noveltyScores(nn, nn.filter(col("doc_id") % 10 === 0),
-        "doc_id", "text", n = 3)
-    }),
-    // Moore–Lewis / DSIR domain scoring: rank every doc by how target-like
-    // its tokens are (target = the src0 slice), add-one smoothing over the
-    // joint vocabulary; rounded at 6 decimals (ln/sum order differs by ulps
-    // across libms, same contract as text_surprisal)
-    "text_ce_diff" -> ((s, d) => {
-      val doc = docs(s, d)
-      TextAnalysis.crossEntropyDiff(doc, doc.filter(col("source") === "src0"),
-          "doc_id", "text")
-        .select(col("doc_id"), col("n_tokens"), round(col("ce_diff"), 6).as("ce_diff"))
-    }),
-    // BPE tokenizer induction (Sennrich et al. 2016): 16 merges learned from
-    // the corpus — the iterative argmax fixpoint is unrolled in the oracle as
-    // 16 chained MATERIALIZED CTEs (bpeMergesOracle below), so the FULL merge
-    // table is hash-gated, not just the first round; merge-order optimality
-    // is additionally pinned by the classic worked example in
-    // TextMultimodalSpec ...
-    "text_bpe_merges" -> ((s, d) =>
-      TextAnalysis.bpeTrain(docs(s, d), "doc_id", "text", 16)),
-    // ... the FIRST merge alone IS SQL-expressible (one argmax over the
-    // weighted adjacent-pair histogram with the total-order tie-break), so
-    // the trainer's core round is hash-gated even though the fixpoint isn't
-    "text_bpe_first_merge" -> ((s, d) =>
-      TextAnalysis.bpeTrain(docs(s, d), "doc_id", "text", 1)),
-    // ... and segmentation correctness IS oracle-gated, as the conservation
-    // contract: applying the learned merges to every doc and re-joining the
-    // subword tokens must reconstruct the whitespace-normalized text
-    // exactly — any merge/segment bug that drops, duplicates, or reorders a
-    // symbol produces a violation row, and the oracle is the empty set
-    "text_bpe_contract" -> ((s, d) => {
-      val doc = docs(s, d).filter(col("text").isNotNull)
-      // the 16 learned merges from the per-JVM fixture (r20 wave 2): the
-      // trainer is the text_bpe_merges gate's operator (fresh there); this
-      // gate certifies SEGMENTATION + the conservation contract, which run
-      // fresh below against the same merge table
-      val merges = bpeMergesFixture(s, d)
-      val seg = TextAnalysis.bpeSegment(doc, merges, "doc_id", "text")
-      val rejoined = seg.select(col("doc_id"),
-        trim(regexp_replace(concat_ws("", col("bpe_tokens")), "</w>", " ")).as("rejoined"))
-      doc.select(col("doc_id"), array_join(split(col("text"), "\\s+"), " ").as("orig"))
-        .join(rejoined, Seq("doc_id"))
-        .filter(col("orig") =!= col("rejoined"))
-        .select(col("doc_id"), col("orig"), col("rejoined"))
-    }),
-    // sliding context windows (40-token chunks every 30): fan-out explode,
-    // no shuffle — the RAG/embedding chunker over the whole corpus
-    "text_chunk_windows" -> ((s, d) =>
-      TextAnalysis.chunkWindows(docs(s, d), chunkTokens = 40, stride = 30)),
-    "text_normalize" -> ((s, d) =>
-      docs(s, d).select(col("doc_id"),
-        TextAnalysis.normalize(col("text")).as("norm_text"),
-        length(TextAnalysis.normalize(col("text"))).as("n_chars_norm"))),
-    // PII scrubbing: the fixture corpus is PII-free word salad, so each doc
-    // gets a deterministic doc_id-derived contact line appended (identically
-    // in the oracle) — the gate then pins real email/phone/IP redactions,
-    // not a no-op pass-through
-    "text_pii_redact" -> ((s, d) => {
-      val withPii = expr(
-        """concat(text, ' contact u', doc_id, '@example.com',
-          |       ' call 415-555-', lpad(cast(doc_id % 10000 as string), 4, '0'),
-          |       ' from 10.0.', cast(doc_id % 256 as string), '.',
-          |       cast((doc_id div 256) % 256 as string))""".stripMargin)
-      docs(s, d).select(col("doc_id"), TextAnalysis.redactPii(withPii).as("redacted"))
-    }),
-
-    // training-sequence packing: deterministic hash shuffle → shard →
-    // prefix-sum token bins (the concat-then-chunk pre-training shape)
-    "pack_token_budget" -> ((s, d) => {
-      val toks = TextAnalysis.tokenStats(docs(s, d)).select("doc_id", "n_tokens")
-      graft.ext.Packing.packTokenBudget(toks, "doc_id", "n_tokens", budget = 512, nShards = 8)
-    }),
-
-    // ---- deterministic sampling (§2.12) ----
-    "sampling_hash_fraction" -> ((s, d) => Sampling.hashFraction(docs(s, d), "doc_id", 200)),
-    "sampling_stratified" -> ((s, d) => Sampling.stratified(docs(s, d), "lang", "doc_id", 20)),
-    // quality-proportional keep: weight = n_chars/2000 (clamped at 1 inside
-    // the operator — long docs always kept, short docs kept hash-fractionally)
-    "sampling_weighted" -> ((s, d) =>
-      Sampling.weightedFraction(
-        docs(s, d).withColumn("w", col("n_chars") / lit(2000.0)), "doc_id", "w")),
-    // domain mixing: fixed per-language quotas; es/zh have no quota → dropped
-    "sampling_stratified_quotas" -> ((s, d) =>
-      Sampling.stratifiedQuotas(docs(s, d), "lang", "doc_id",
-        Map("en" -> 30, "de" -> 10, "fr" -> 5))),
-    // fill a 60k-char budget from docs in deterministic hash order — the
-    // corpus-assembly primitive (bucket-prefix plan, no global-order window)
-    "sampling_budget_select" -> ((s, d) =>
-      Sampling.budgetSelect(docs(s, d), "doc_id", "n_chars", 60000L)),
-    // data-constrained mixing (Muennighoff et al. 2023): repeat each domain
-    // to its char budget — whole epochs for every doc, then a deterministic
-    // budget-walk partial epoch; es/zh have no budget → dropped. en exceeds
-    // its corpus many-fold (multi-epoch), de/fr exercise the other regimes.
-    "sampling_repeat_to_budget" -> ((s, d) =>
-      Sampling.repeatToBudget(docs(s, d), "lang", "doc_id", "n_chars",
-        Map("en" -> 1500000L, "de" -> 150000L, "fr" -> 10000L))
-        .select(col("doc_id"), col("lang"), col("epoch"))),
-    // temperature-flattened language mixing (α = 0.5 → sqrt weights, the
-    // IEEE-correctly-rounded point, so the oracle derives identical rates)
-    "sampling_temperature" -> ((s, d) =>
-      Sampling.temperatureSample(docs(s, d), "lang", "doc_id", alpha = 0.5, budget = 150L)),
-    // per-language winsorization of n_chars to the [0.05, 0.95] quantile
-    // band: rows kept, leverage capped; thresholds are one per-group
-    // percentile agg broadcast back, the clamp a pure projection
-    "sampling_winsorize" -> ((s, d) =>
-      Sampling.winsorize(docs(s, d), "lang", "n_chars", loQ = 0.05, hiQ = 0.95)
-        .select(col("doc_id"), col("lang"), col("n_chars"),
-          col("winsorized"), col("winsorized_clipped"))),
-    // UniMax budget waterfall (Chung et al. 2023): budget 700 docs, 2-epoch
-    // cap — at the sf0.01 distribution the two smallest languages take full
-    // capacity and the rest sit at the common waterline, so both branches
-    // of the closed form are exercised and hash-gated
-    "sampling_unimax" -> ((s, d) =>
-      Sampling.unimaxAllocation(docs(s, d), "lang", budget = 700.0,
-        maxEpochs = 2.0)),
-    // the pre-training corpus shuffle: one deterministic hash permutation,
-    // strided over 8 shards — same shard/pos on any engine or partitioning
-    "sampling_shuffle_shards" -> ((s, d) =>
-      Sampling.shuffleToShards(docs(s, d).select("doc_id"), "doc_id", 8)),
-    // exactly-100 weighted sample (Efraimidis-Spirakis keys over the
-    // portable id hash), length-proportional odds under a firm budget
-    "sampling_weighted_k" -> ((s, d) =>
-      Sampling.weightedSampleK(docs(s, d), "doc_id", "n_chars", 100)
-        .select("doc_id", "lang", "n_chars")),
-    // equal-frequency discretization: order-price deciles; thresholds are
-    // exact interpolated percentiles (≡ quantile_cont) and on-threshold
-    // values fall LOWER — boundary-safe here because 2-decimal price gaps
-    // (≥ 0.01) dwarf interpolation ulps
-    "sampling_quantile_bins" -> ((s, d) =>
-      Sampling.quantileBins(orders(s, d), "o_totalprice", 10)
-        .select("o_orderkey", "bin")),
-    // cross-domain score calibration (quantile normalization): per-language
-    // percent rank re-mapped onto the GLOBAL length distribution — the
-    // "make scores comparable across sources" step before mixing; percent
-    // rank via distinct-value cumsum (no per-group row sort), grid as one
-    // broadcast aggregation row
-    "sampling_quantile_normalize" -> ((s, d) =>
-      Sampling.quantileNormalize(docs(s, d), "lang", "n_chars", gridK = 100)
-        .select("doc_id", "lang", "n_chars", "calibrated")),
-    // deterministic contrastive negatives: 3 hash-drawn partners per doc,
-    // partner ordinal = idHash("id:j") mod n — reproducible on any engine,
-    // self-collisions dropped
-    "sampling_negative_pairs" -> ((s, d) =>
-      Sampling.negativePairs(docs(s, d).select("doc_id"), "doc_id", 3)),
-    // leakage-safe splits: near-dup cluster members must land in ONE split
-    // (the split boundary can only fall between clusters)
-    "sampling_split_cluster_safe" -> ((s, d) => {
-      val doc = docs(s, d)
-      // shared near-dup clusters fixture (see pipeline_corpus_select_fuzzy)
-      val clusters = jaccardClustersFixture(s, d)
-      Sampling.assignSplitsClusterSafe(doc, clusters, "doc_id",
-        Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
-        .select("doc_id", "split")
-    }),
-    // per-group quantile gate: keep docs at or above their language's median
-    // length — the "top half by quality, per language" selection rule; one
-    // grouped pass for thresholds, broadcast back over the corpus
-    "sampling_quantile_filter" -> ((s, d) =>
-      Sampling.groupQuantileFilter(docs(s, d), "lang", "n_chars", 0.5)),
-
-    // ---- keyless time-range join (§2.12): clicks near ANY error within 60 s.
-    // Both sides deliberately name their time column `ts` — the canonical
-    // event-correlation shape — so the gate exercises the collision-safe
-    // internal rename, not just the easy distinct-names case.
-    "range_join_events" -> ((s, d) => {
-      val ev = events(s, d)
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("event_id").as("click_id"), col("ts"))
-      val errors = ev.filter(col("event_type") === "error")
-        .select(col("event_id").as("error_id"), col("ts"))
-      Ops.rangeJoin(clicks, errors, "ts", "ts", java.time.Duration.ofSeconds(60))
-        .select("click_id", "error_id")
-    }),
-    // interval-OVERLAP join: click/error SPANS (deterministic variable
-    // lengths, event_id % 60 s) that intersect — both sides name their
-    // bounds (s, e), exercising the collision-safe rename like range_join
-    "interval_join_events" -> ((s, d) => {
-      val ev = events(s, d)
-      def spans(tpe: String, idName: String) = ev.filter(col("event_type") === tpe)
-        .select(col("event_id").as(idName), col("ts").as("s"),
-          expr("ts + make_dt_interval(0, 0, 0, cast(event_id % 60 as double))").as("e"))
-      Ops.intervalJoin(spans("click", "click_id"), spans("error", "error_id"),
-        "s", "e", "s", "e", java.time.Duration.ofSeconds(60))
-        .select("click_id", "error_id")
-    }),
-
-    // ---- dedup (§2.12) ----
-    "dedup_exact" -> ((s, d) => Dedup.exact(docs(s, d), Seq("lang", "source"), "doc_id")),
-    // cross-source contamination matrix: distinct trigram-shingle overlap
-    // + Jaccard per source pair — the mixing-governance report; gram-keyed
-    // self-join bounded at #sources^2 fan-out per gram
-    "dedup_source_overlap" -> ((s, d) =>
-      Dedup.sourceOverlapMatrix(docs(s, d), "source", "doc_id", "text")),
-    // canonical-URL dedup — the FIRST dedup stage of every crawl pipeline
-    // (one fetch per canonical page identity, before any content hashing):
-    // Dedup.exact keyed on canonicalizeUrl, so tracking-param/fragment/
-    // case/port variants of one page collapse to the lowest doc_id
-    "dedup_url_canonical" -> ((s, d) => {
-      val u = synthUrls(s, d)
-        .withColumn("__curl", ext.Urls.canonicalizeUrl(col("url")))
-      Dedup.exact(u, Seq("__curl"), "doc_id").drop("__curl")
-    }),
-    "dedup_fingerprint" -> ((s, d) => {
-      // content-based exact dedup: one cheap shuffle on the md5 fingerprint
-      // of the sorted distinct token set (the scale-friendly first pass
-      // before any fuzzy dedup)
-      val withFp = docs(s, d).withColumn("fp", Dedup.contentFingerprint(col("text")))
-      Dedup.exact(withFp, Seq("fp"), "doc_id").drop("fp")
-    }),
-    // canonical selection: collapse each fingerprint cluster to its BEST
-    // member (longest text, doc_id tiebreak) instead of dedup_fingerprint's
-    // min-id winner; singletons never shuffle — keepBest broadcasts the
-    // (tiny) cluster membership over the corpus
-    "dedup_keep_best" -> ((s, d) => {
-      val doc = docs(s, d)
-      val fp = doc.select(col("doc_id"), Dedup.contentFingerprint(col("text")).as("fp"))
-      val dupFps = fp.groupBy("fp").agg(count(lit(1)).as("__c"))
-        .filter(col("__c") > 1).select("fp")
-      val clusters = fp.join(dupFps, Seq("fp"))
-        .select(col("doc_id").as("node"), col("fp").as("cluster"))
-      Dedup.keepBest(doc, clusters, "doc_id", Seq(col("n_chars").desc, col("doc_id")))
-    }),
-    // incremental ingest dedup: the doc_id >= 250 "new crawl" deduped
-    // against the doc_id < 250 established corpus by content fingerprint —
-    // the archive is never re-paired, cost tracks the batch
-    "dedup_incremental" -> ((s, d) => {
-      val doc = docs(s, d)
-      Dedup.dedupeAgainstCorpus(
-        doc.filter(col("doc_id") >= 250), doc.filter(col("doc_id") < 250),
-        "doc_id", "text")
-    }),
-    // fuzzy incremental ingest against a PERSISTED LSH index: the corpus'
-    // shingle sets + band buckets are built and stored once, the batch
-    // probes the stored buckets and verifies exact Jaccard against the
-    // stored sets — the archive is never re-shingled per ingest. Exact
-    // recall at this operating point (band curve ≈ 0.9998 at 64/16 t=0.8;
-    // verified-exact output), so the brute-force Jaccard oracle applies.
-    "dedup_incremental_fuzzy" -> ((s, d) => {
-      // archive index from the per-JVM fixture cache (copied tree — the
-      // r20 fixture-class move; Verify still builds it from scratch); the
-      // PROBE/VERIFY leg — the operator this gate certifies — runs fresh
-      val store = lshIndexStore(s, d, "corpus_lsh", 250, "graft-lsh-idx")
-      val doc = docs(s, d)
-      val idx = Dedup.loadLshIndex(store, "corpus_lsh") // reload, not the in-memory handle
-      Dedup.dedupeAgainstLshIndex(store, idx, doc.filter(col("doc_id") >= 250),
-        "doc_id", "text", 0.8)
-    }),
-    // the full incremental-ingest LOOP over a growing index: archive index
-    // ← docs < 200; batch 1 (200..349) dedupes against it and its SURVIVORS
-    // are APPENDED to the index (appendToLshIndex — two O(1)-committed
-    // generation appends, the existing index never rewritten); batch 2
-    // (≥ 350) must then dedupe against archive ∪ batch-1 survivors. At
-    // sf0.01 three batch-2 docs are near-dups ONLY of batch-1 survivors —
-    // if the append didn't take, they'd wrongly survive and the hash gate
-    // would catch it
-    "dedup_incremental_fuzzy_grow" -> ((s, d) => {
-      // archive index from the per-JVM fixture cache (copied tree); the
-      // LOOP — dedupe, APPEND survivors, dedupe against the grown index —
-      // is the operator and runs fresh on the copy every invocation
-      val store = lshIndexStore(s, d, "arch", 200, "graft-lsh-grow")
-      val doc = docs(s, d)
-      val idx = Dedup.loadLshIndex(store, "arch")
-      val survivors1 = Dedup.dedupeAgainstLshIndex(store, idx,
-        doc.filter(col("doc_id") >= 200 && col("doc_id") < 350), "doc_id", "text", 0.8)
-      Dedup.appendToLshIndex(store, idx, survivors1, "doc_id", "text")
-      Dedup.dedupeAgainstLshIndex(store, idx, doc.filter(col("doc_id") >= 350),
-        "doc_id", "text", 0.8)
-    }),
-    // contiguous global ordinals without the Exchange SinglePartition the
-    // naive global row_number plans: range-partition + per-partition
-    // offsets (two parallel jobs, driver holds only #partitions counts)
-    "window_global_ordinal" -> ((s, d) =>
-      Ops.globalOrdinals(docs(s, d).select("doc_id"), Seq(col("doc_id")), numParts = 8)),
-    // deterministic split assignment: 80/10/10 by id-hash ppm bucket —
-    // stable under any partitioning/engine (randomSplit is not), so a doc
-    // keeps its split across re-runs (the train/test-leak guard)
-    "sampling_split_assign" -> ((s, d) =>
-      Sampling.assignSplits(docs(s, d).select("doc_id"), "doc_id",
-        Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))),
-    "dedup_ngram_jaccard" -> ((s, d) => Dedup.jaccardPairs(docs(s, d), "doc_id", "text", 3, 0.8)),
-    // short-text fuzzy matching: Levenshtein ≤ 5 over 40-char prefixes with
-    // full-text length difference ≤ 5, blocked by language — the
-    // in-word-edit dedup rule jaccard/minhash can't see. Length blocking is
-    // internal (minimal maxDist+1-wide buckets with adjacent-bucket
-    // probing — the r19 verdict's adaptive-blocking fix, where the optimum
-    // is the constant floor), so a boundary-straddling pair is still found
-    // and the per-band candidate slack is the contract's own ±5, not the
-    // old fixed-64 conservatism that grew ~quadratically at 30×
-    "dedup_edit_distance" -> ((s, d) =>
-      Dedup.editDistancePairs(docs(s, d), "doc_id", "text", Seq("lang"),
-        maxDist = 5, prefixLen = 40)),
-    // decontamination: docs 0-9 stand in for a benchmark set; corpus docs
-    // sharing >= 2 distinct trigrams with any of them are removed
-    "dedup_decontaminate" -> ((s, d) => {
-      val doc = docs(s, d)
-      Dedup.decontaminate(doc.filter(col("doc_id") >= 10), doc.filter(col("doc_id") < 10),
-        "doc_id", "text", n = 3, minOverlap = 2)
-    }),
-    // membership decontamination at blocklist scale: Bloom prefilter (built
-    // from Spark's own runtime-filter expressions) + exact confirm join —
-    // every seventh doc's content fingerprint is the blocklist, result is
-    // exactly the NOT-IN-by-fingerprint corpus (left-anti null semantics)
-    "dedup_decontaminate_bloom" -> ((s, d) => {
-      val doc = docs(s, d)
-      Dedup.decontaminateExactBloom(doc, doc.filter(col("doc_id") % 7 === 2), "text")
-    }),
-    // substring-level dedup (Lee et al. 2022 shape): merged per-doc token
-    // intervals covered by any 8-gram occurring in >= 2 distinct docs
-    "dedup_span_exact" -> ((s, d) =>
-      Dedup.duplicateSpans(docs(s, d), "doc_id", "text", n = 8)),
-    // the span APPLICATION: duplicated-span tokens removed (docs with spans
-    // are whitespace-retokenized and rejoined; spanless docs — including
-    // NULL text — pass through byte-identical)
-    "dedup_span_strip" -> ((s, d) => {
-      val doc = docs(s, d)
-      Dedup.stripDuplicateSpans(doc,
-        Dedup.duplicateSpans(doc, "doc_id", "text", n = 8), "doc_id", "text")
-        .select("doc_id", "clean_text")
-    }),
-    // CCNet cross-corpus paragraph dedup: first occurrence of each
-    // normalized paragraph survives, documents reassembled, emptied docs
-    // dropped — over the hostile boilerplate/echo/digit-fold fixture
-    "dedup_paragraphs_global" -> ((s, d) =>
-      Dedup.dedupParagraphsGlobal(synthParaDocs(s, d), "doc_id", "text")),
-    // dup clusters: transitive closure over the exact Jaccard pairs, each
-    // cluster labeled by its minimum doc id (the canonical keeper)
-    "dedup_clusters" -> ((s, d) =>
-      Dedup.connectedComponents(
-        Dedup.jaccardPairs(docs(s, d), "doc_id", "text", 3, 0.8), "doc_a", "doc_b")
-        .select(col("node").as("doc_id"), col("cluster").as("cluster_id"))),
-    // PageRank over the per-user event-type transition graph (the host-graph
-    // centrality prior of crawl curation, exercised on the fixture's only
-    // natural digraph); 10 fixed rounds, weights = transition counts; ranks
-    // rounded at 6 (keyed-sum order differs by ulps across engines)
-    "graph_pagerank" -> ((s, d) =>
-      Graphs.pageRank(eventTransitionsFixture(s, d), "src", "dst", iterations = 10,
-          weightCol = Some("w"))
-        .select(col("node"), round(col("rank"), 6).as("rank"))),
-    // the crawl-frontier capstone (r18 verdict item 3): raw HTML →
-    // htmlLinks (document-order outlinks) → URL canonicalization → host
-    // extraction → host-level edge list → PageRank. Edge weight is
-    // count(DISTINCT canonical url) per (src, dst) — NOT the link-row
-    // count: urlHost alone already lowercases the authority and strips the
-    // port, so a row count would collapse the fixture's UPPERCASE+:80 dup
-    // link even with canonicalizeUrl broken; under DISTINCT the dup
-    // collapses 2→1 only when canonicalization actually rewrites it, which
-    // makes the canonicalization stage falsifiable by this gate
-    // (r19 ADVICE fix). Each stage is the standalone gate's operator; the
-    // composition pins the seams between them.
-    "pipeline_web_graph" -> ((s, d) => {
-      val links = TextAnalysis.htmlLinks(synthWebDocs(s, d))
-      val canon = links.select(col("doc_id"),
-        ext.Urls.canonicalizeUrl(col("url")).as("curl"))
-      val edges = canon.select(
-          concat(lit("site"), pmod(col("doc_id"), lit(10)).cast("string"),
-            lit(".example")).as("src"),
-          ext.Urls.urlHost(col("curl")).as("dst"),
-          col("curl"))
-        .groupBy("src", "dst").agg(countDistinct(col("curl")).cast("double").as("w"))
-      Graphs.pageRank(edges, "src", "dst", iterations = 10, weightCol = Some("w"))
-        .select(col("node"), round(col("rank"), 6).as("rank"))
-    }),
-    // TrustRank over the same digraph: teleport pinned to two seed types —
-    // the seeded host-trust variant (link farms off the seed cone rank 0)
-    "graph_trustrank" -> ((s, d) => {
-      val seeds = { import s.implicits._; Seq("view", "signup").toDF("etype") }
-      Graphs.trustRank(eventTransitionsFixture(s, d), "src", "dst", seeds, "etype",
-          iterations = 10, weightCol = Some("w"))
-        .select(col("node"), round(col("rank"), 6).as("rank"))
-    }),
-    // HITS hubs & authorities over the same digraph — the directory-vs-
-    // content link prior (PageRank says "important", HITS says which nodes
-    // POINT WELL vs which are POINTED AT well); 10 rounds, L1-normalized
-    "graph_hits" -> ((s, d) =>
-      Graphs.hits(eventTransitionsFixture(s, d), "src", "dst", iterations = 10,
-          weightCol = Some("w"))
-        .select(col("node"), round(col("hub"), 6).as("hub"),
-          round(col("authority"), 6).as("authority"))),
-    // synchronous label propagation over the same digraph's undirected view
-    // — the host-graph community pass of crawl curation; 5 fixed rounds,
-    // max-weight/min-label argmax, output is exact strings (no rounding)
-    "graph_communities" -> ((s, d) =>
-      Graphs.labelPropagation(eventTransitionsFixture(s, d), "src", "dst",
-        iterations = 5, weightCol = Some("w"))),
-    // multi-source BFS trust distance over the same digraph: minimum hop
-    // count from the seed cone, capped at 4 rounds (TrustRank's discrete
-    // cousin — "how many referrals from trusted?"); integer output, the
-    // fixed round count is the determinism contract
-    "graph_bfs_distance" -> ((s, d) => {
-      val seeds = { import s.implicits._; Seq("view", "signup").toDF("etype") }
-      Graphs.seededDistances(eventTransitionsFixture(s, d), "src", "dst",
-        seeds, "etype", rounds = 4)
-    }),
-    // per-node triangle participation over the part co-occurrence graph
-    // (parts sharing an order, support >= 2) — the dense-neighborhood
-    // clustering prior. Pair formation is per-order (<= 13 parts/order in
-    // the fixture → <= 78 pairs), never all-pairs; the triangle pass is
-    // degree-oriented so hub parts cannot explode the wedge join
-    "graph_triangles" -> ((s, d) => {
-      // cached: the distinct projection feeds BOTH self-join sides — uncached
-      // it would scan + exchange lineitem twice
-      val pairs = partCoocFixture(s, d)
-      Graphs.triangleCounts(pairs, "pa", "pb")
-    }),
-    // common-neighbor link prediction over the same co-occurrence graph:
-    // distance-2 non-edges scored by shared-neighbor count + neighborhood
-    // Jaccard — exact integer ratios, wedge join keyed on the center
-    "graph_link_prediction" -> ((s, d) => {
-      val pairs = partCoocFixture(s, d)
-      Graphs.linkPrediction(pairs, "pa", "pb", minCommon = 2)
-        .select(col("node_a"), col("node_b"), col("cn"),
-          round(col("jaccard"), 6).as("jaccard"))
-    }),
-    // first-order Markov transition matrix of user behavior: lead() within
-    // each user's (ts, event_id)-ordered stream, then (src,dst) counts and
-    // per-source probabilities — the behavioral prior behind session
-    // simulation and next-event models; one window pass + one agg
-    "events_markov_transitions" -> ((s, d) => {
-      val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-      events(s, d)
-        .withColumn("dst_type", lead(col("event_type"), 1).over(w))
-        .filter(col("dst_type").isNotNull)
-        .groupBy(col("event_type").as("src_type"), col("dst_type"))
-        .agg(count(lit(1)).as("cnt"))
-        .withColumn("prob", round(col("cnt").cast("double") /
-          sum("cnt").over(Window.partitionBy("src_type")), 6))
-    }),
-    // market-basket association over per-user event-type sets: support /
-    // confidence / lift per ordered type pair. The pair join runs on the
-    // DISTINCT (user, type) projection — fan-out bounded by the type
-    // vocabulary per user, not event volume — and the per-type support
-    // frame broadcasts (it is vocabulary-sized by construction)
-    "events_basket_lift" -> ((s, d) => {
-      // cached: the distinct (user, type) projection feeds the user count,
-      // the support frame, and both pair-join sides — four consumers
-      val ut = graft.ext.Caches.track(
-        events(s, d).select(col("user_id"), col("event_type")).distinct())
-      val n = ut.select(countDistinct("user_id").as("n"))
-      val supp = ut.groupBy("event_type").agg(count(lit(1)).as("s1"))
-      ut.select(col("user_id"), col("event_type").as("ta"))
-        .join(ut.select(col("user_id"), col("event_type").as("tb")), "user_id")
-        .filter(col("ta") < col("tb"))
-        .groupBy("ta", "tb").agg(count(lit(1)).as("supp_ab"))
-        .join(broadcast(supp.select(col("event_type").as("ta"), col("s1").as("supp_a"))), "ta")
-        .join(broadcast(supp.select(col("event_type").as("tb"), col("s1").as("supp_b"))), "tb")
-        .crossJoin(broadcast(n))
-        .select(col("ta"), col("tb"), col("supp_ab"), col("supp_a"), col("supp_b"),
-          round(col("supp_ab").cast("double") / col("supp_a"), 6).as("confidence"),
-          round(col("supp_ab").cast("double") * col("n") /
-            (col("supp_a") * col("supp_b")), 6).as("lift"))
-    }),
-    // gaps-and-islands: maximal runs of consecutive active DAYS per user
-    // (the classic day - row_number() constant-group trick) — streak
-    // detection for engagement/retention cohorts; one window pass, one agg
-    "window_gap_islands" -> ((s, d) => {
-      val days = events(s, d)
-        .select(col("user_id"), col("ts").cast("date").as("day")).distinct()
-      val w = Window.partitionBy("user_id").orderBy("day")
-      days.withColumn("grp", date_sub(col("day"), row_number().over(w)))
-        .groupBy("user_id", "grp")
-        .agg(min("day").as("island_start"), max("day").as("island_end"),
-          count(lit(1)).as("n_days"))
-        .select("user_id", "island_start", "island_end", "n_days")
-    }),
-    "dedup_minhash_lsh" -> ((s, d) => Dedup.minhashLshPairs(docs(s, d), "doc_id", "text", 3, 64, 16, 0.8)),
-    // near-superset pairs (containment vs the smaller set) — catches
-    // truncated/boilerplate-wrapped copies Jaccard under-scores
-    "dedup_containment" -> ((s, d) =>
-      Dedup.containmentPairs(docs(s, d), "doc_id", "text", 3, 0.9)),
-    // gated with the md5-based token hash (computable bit-identically in
-    // DuckDB) so the full SimHash pipeline is oracle-checked; production
-    // default stays xxhash64 (Dedup.xxTokenHash)
-    "dedup_simhash" -> ((s, d) =>
-      Dedup.simhashPairs(docs(s, d), "doc_id", "text", 3, Dedup.md5TokenHash)),
-    // gated through the ROUTER (r17 verdict: the gated plan must be the one
-    // that survives 100×): at gate scale the router picks the exact
-    // IVF-blocked path — bit-identical to cosinePairs, so the brute-force
-    // oracle applies — and past the measured crossover (20 k vectors, wide
-    // threshold) it switches to the banded-LSH scale path
-    "dedup_embedding_cosine" -> ((s, d) =>
-      Similarity.cosinePairsRouted(emb(s, d), "vec_id", "embedding", 0.45)),
-    // SemDeDup (Abbas et al. 2023): embedding-space near-dup groups collapsed
-    // to their best member by document quality (n_chars desc, id asc tie) —
-    // vec_id ≡ doc_id in the fixtures, so the quality column cross-joins the
-    // two modalities; singletons pass through untouched. Exact pair recall at
-    // this threshold (IVF blocking), so the brute-force recursive-CTE oracle
-    // reproduces the survivor set row-for-row.
-    // ROUTED pair step (r17 verdict): exact at gate scale ⇒ the brute-force
-    // recursive-CTE oracle still reproduces the survivor set row-for-row;
-    // past the crossover the pairs come from banded LSH and the
-    // components/keep-best stages are unchanged
-    "dedup_semantic_keepbest" -> ((s, d) => {
-      val q = emb(s, d).join(
-        docs(s, d).select(col("doc_id").as("vec_id"), col("n_chars")), Seq("vec_id"))
-      Similarity.semanticDedupRouted(q, "vec_id", "embedding", 0.45,
-        Seq(col("n_chars").desc, col("vec_id").asc))
-        .select("vec_id", "label", "n_chars")
-    }),
-    // wide-threshold routed scale path: LSH pre-filter + exact verification.
-    // Gated on its CONTRACT (violations must be empty): zero false
-    // positives vs the exact operator at the same threshold, and zero
-    // missed pairs in the near-dup band (cos >= 0.99 — where the band curve
-    // puts collision probability at ~1 under the fixed seed). Recall BELOW
-    // that band is the documented trade (see cosinePairsLsh scaladoc).
-    // The fixtures carry no cos >= 0.99 pairs (max pairwise ~0.51,
-    // DuckDB-verified), so the near-dup band is PLANTED in-query
-    // (plantNearDups: 10 jittered companions at cos ~1-2e-6) and a vacuity
-    // guard emits a violation row if the band is ever empty — without it
-    // the missed_near_dup branch compares two empty sets and the recall
-    // half of the contract can never fail (the round-12 vacuity).
-    // the AUTO-SHARPEN ladder, driver-certified (r18 verdict item 5): a
-    // planted dense moderate-similarity cluster (120 vectors at pairwise
-    // cos ~0.92 around the min-id embedding) blows the caller's 12×12
-    // band shape past the explicit 12000-pair budget, so WITHOUT the
-    // escalation ladder this gate dies in bucketPairs' loud refusal —
-    // completing at all certifies the production sharpening path
-    // end-to-end. The corpus is id-capped (vec_id < 500): at base SFs
-    // those are 500 independent vectors; in the 30× replica they are 17
-    // originals × 30 directionally-jittered reps whose mutual moderate
-    // similarity adds ~4–5 k sharpest-rung candidates — the 12000 budget
-    // clears that mass where the r19 marathon's first cut (4000, cluster
-    // 80) refused, while the 12×12 estimate stays cluster-dominated
-    // (≳16 k) and over budget at every SF, keeping the forcing invariant.
-    // Contract branches mirror dedup_cosine_lsh_routed: zero false
-    // positives vs the exact search at the same threshold, zero missed
-    // pairs in the planted cos >= 0.99 near-dup band (the ladder's
-    // P(candidate | near-dup) >= 0.99-per-rung design), plus the vacuity
-    // guard. Oracle: the violation set is empty.
-    "dedup_cosine_lsh_sharpen" -> ((s, d) => {
-      val e = sharpenFixture(s, d)
-      // certification sides (two exact brute-force searches + the forcing
-      // estimate) come from the per-JVM fixture cache — corpus-
-      // deterministic, built once per process (r19 verdict item 3: the
-      // steady-state bench measures the OPERATOR below, not the oracle's
-      // brute-force cost; a fresh JVM still pays and certifies the build)
-      val (exactRows, nearRows, pairSchema, est12) = sharpenCert(s, d)
-      import scala.jdk.CollectionConverters._
-      val exact = s.createDataFrame(exactRows.asJava, pairSchema)
-      val nearDup = s.createDataFrame(nearRows.asJava, pairSchema)
-      // the OPERATOR under certification — the escalated LSH search runs
-      // fresh on every invocation
-      val lsh = Similarity.trackedPersist(
-        Similarity.cosinePairsLsh(e, "vec_id", "embedding", 0.45,
-          pairBudget = 12000L))
-      val fp = lsh.exceptAll(exact)
-        .select(lit("false_positive").as("kind"), col("id_a"), col("id_b"))
-      val missedNearDup = nearDup.exceptAll(lsh)
-        .select(lit("missed_near_dup").as("kind"), col("id_a"), col("id_b"))
-      val vacuous = nearDup.groupBy().agg(count(lit(1)).as("n"))
-        .filter(col("n") < 10)
-        .select(lit("vacuous_near_dup_band").as("kind"),
-          col("n").as("id_a"), lit(-1L).as("id_b"))
-      // the forcing premise, asserted at RUNTIME (r19 review fix): the
-      // gate certifies the ladder only if the caller-shape estimate
-      // actually exceeds the budget — computed from the operator's own
-      // bucketing primitive, so fixture drift that un-forces the
-      // escalation turns into a violation row instead of a silent pass
-      val forcing = {
-        import s.implicits._
-        (if (est12 > 12000L) Seq.empty[(String, Long, Long)]
-         else Seq(("forcing_not_engaged", est12.toLong, -1L)))
-          .toDF("kind", "id_a", "id_b")
-      }
-      fp.unionByName(missedNearDup).unionByName(vacuous).unionByName(forcing)
-    }),
-    "dedup_cosine_lsh_routed" -> ((s, d) => {
-      val e = Similarity.plantNearDups(emb(s, d), "vec_id", "embedding")
-      // certification sides (the two exact brute-force searches) come
-      // from the per-JVM fixture cache — corpus-deterministic, the
-      // sharpenCert class (r20 wave 4); a fresh JVM still pays and
-      // certifies the brute-force builds
-      val (exactRows, nearRows, pairSchema) = routedCert(s, d)
-      import scala.jdk.CollectionConverters._
-      val exact = s.createDataFrame(exactRows.asJava, pairSchema)
-      val nearDup = s.createDataFrame(nearRows.asJava, pairSchema)
-      // autoSharpen OFF: the contract certifies the DOCUMENTED 12×12 band
-      // curve (and the gate's exact-search side is only feasible below the
-      // crossover anyway — at marathon scale this gate's pair-budget
-      // refusal remains the designed behavior). The routed LSH search is
-      // the OPERATOR and runs fresh; it feeds two contract branches, so
-      // it persists (this query is one pair search, not two)
-      val lsh = Similarity.trackedPersist(
-        Similarity.cosinePairsLsh(e, "vec_id", "embedding", 0.45, autoSharpen = false))
-      val fp = lsh.exceptAll(exact)
-        .select(lit("false_positive").as("kind"), col("id_a"), col("id_b"))
-      val missedNearDup = nearDup.exceptAll(lsh)
-        .select(lit("missed_near_dup").as("kind"), col("id_a"), col("id_b"))
-      val vacuous = nearDup.groupBy().agg(count(lit(1)).as("n"))
-        .filter(col("n") < 10)
-        .select(lit("vacuous_near_dup_band").as("kind"),
-          col("n").as("id_a"), lit(-1L).as("id_b"))
-      fp.unionByName(missedNearDup).unionByName(vacuous)
-    }),
-
-    // gated output is posexploded to scalar (label, idx, value) rows — the
-    // driver's checker cannot sort/hash array<double> columns
-    "agg_label_centroids" -> ((s, d) =>
-      ext.Aggregators.labelCentroids(s, emb(s, d))
-        .select(col("label"), posexplode(col("centroid")))
-        .select(col("label"), col("pos").cast("long").as("idx"), col("col").as("value"))),
-    "agg_user_sessions" -> ((s, d) => {
-      // batch analog of streaming sessionize: gap-based sessions via
-      // lag + cumulative session-break sum, then per-user rollup
-      val byUser = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      val sess = events(s, d)
-        .withColumn("prev_ts", lag(col("ts"), 1).over(byUser))
-        .withColumn("new_session",
-          when(col("prev_ts").isNull ||
-            col("ts") > col("prev_ts") + expr("INTERVAL 1800 SECONDS"), 1).otherwise(0))
-        .withColumn("session_id", sum(col("new_session")).over(
-          byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      sess.groupBy("user_id", "session_id").agg(count(lit(1)).as("n"))
-        .groupBy("user_id")
-        .agg(count(lit(1)).as("n_sessions"), max(col("n")).as("longest_session"))
-    }),
-
-    // ---- similarity search (§2.12) ----
-    "sim_topk" -> ((s, d) => {
-      val e = emb(s, d)
-      Similarity.topK(e, e.filter(col("vec_id") < 10), "vec_id", "embedding", 5)
-    }),
-    // retrieval-eval harness: NDCG@10 per query with label relevance over
-    // the exact brute-force ranking — the embedding-space quality metric;
-    // discount weights and IDCG prefix sums are JVM-computed literals
-    // shared verbatim with the oracle (no transcendental re-derivation)
-    "sim_retrieval_ndcg" -> ((s, d) => {
-      val e = emb(s, d)
-      Similarity.retrievalNdcg(e, e.filter(col("vec_id") < 20),
-          "vec_id", "embedding", "label", 10)
-        .select(col("query_id"), round(col("ndcg"), 6).as("ndcg"))
-    }),
-    // margin-based bitext mining (LASER/CCMatrix): mutual-NN pairs across
-    // an even/odd split of the embedding corpus (the two "languages"),
-    // ratio-margin scored over top-4 neighborhood means — the hub-robust
-    // criterion for mining aligned translation pairs; the means sum exact
-    // integer micro-cosines so no accumulation order can flap the gate
-    // SIZE-ROUTED (r17 verdict): the exact |A|×|B| grid at gate scale —
-    // the oracle's regime, same code path — and the IVF-pooled CCMatrix
-    // composition (4√n-list quantizer, fixed nprobe=32 — the measured
-    // r20 frontier winner, see bitextMarginMineRouted) past 20 k vectors
-    "sim_bitext_margin" -> ((s, d) => {
-      val e = emb(s, d)
-      Similarity.bitextMarginMineRouted(
-        e.filter(col("vec_id") % 2 === 0), e.filter(col("vec_id") % 2 === 1),
-        "vec_id", "embedding", k = 4)
-    }),
-    // hybrid retrieval: a BM25 pool and a cosine pool fused by reciprocal
-    // rank (Σ 1/(60+r)) — the RAG-era lexical+vector standard; both pools
-    // rank by ROUNDED score with id tiebreak so the fused set is
-    // engine-independent, and ids link documents ↔ embeddings
-    "sim_rrf_fusion" -> ((s, d) =>
-      Similarity.hybridRrf(docs(s, d), emb(s, d), "fast hash join", 0L)),
-    // distributed Lloyd's k-means (3 recenter rounds + final assignment) —
-    // the cluster structure behind SemDeDup-style pruning and
-    // cluster-balanced sampling; every round is one codegen'd assignment
-    // map + one partial-aggregating recenter, k*dim doubles to the driver.
-    // Oracle unrolls the identical rounds as chained CTEs (kmeansSql).
-    "sim_kmeans_clusters" -> ((s, d) =>
-      ext.Clustering.kmeansAssign(emb(s, d), "vec_id", "embedding", k = 8, iters = 3)),
-    // cluster topic labeling (r18): name every k-means cluster by its most
-    // DISTINCTIVE terms — per-cluster term counts × ln(n_clusters /
-    // cluster_freq), the cluster-level TF-IDF — the "what is this cluster"
-    // audit between clustering and mixture/pruning decisions (SemDeDup
-    // §4-style cluster inspection at corpus scale). Scale shape: token
-    // counts partial-aggregate straight to the (cluster, token) frame
-    // (vocab×k-bounded, NEVER corpus-sized past the first combine), the
-    // cluster-frequency frame is vocab-sized and broadcasts, and the
-    // per-cluster top-3 window sorts vocab-bounded partitions
-    "sim_cluster_keywords" -> ((s, d) => {
-      val assign = ext.Clustering.kmeansAssign(emb(s, d), "vec_id", "embedding",
-        k = 8, iters = 3)
-      // tracked: the vocab×k count frame feeds the score join, the
-      // cluster-frequency agg, AND the distinct-cluster scalar — three
-      // consumers (released by Caches.unpersistAll)
-      val ct = graft.ext.Caches.track(docs(s, d).filter(col("text").isNotNull)
-        .select(col("doc_id").as("vec_id"),
-          explode(TextAnalysis.tokens(col("text"))).as("token"))
-        .join(assign, Seq("vec_id"))
-        .groupBy("cluster", "token").agg(count(lit(1)).as("tf")))
-      val cf = ct.groupBy("token").agg(count(lit(1)).as("cluster_freq"))
-      val nc = ct.select(countDistinct("cluster").as("nc"))
-      val w = Window.partitionBy("cluster").orderBy(col("score").desc, col("token"))
-      ct.join(broadcast(cf), Seq("token")).crossJoin(broadcast(nc))
-        .withColumn("score", round(col("tf").cast("double") *
-          log(col("nc").cast("double") / col("cluster_freq").cast("double")), 6))
-        .withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= 3)
-        .select(col("cluster"), col("rank"), col("token"),
-          col("tf"), col("cluster_freq"), col("score"))
-    }),
-    // supervised nearest-centroid (Rocchio) confusion matrix — the
-    // embedding-space separability eval: per-label rounded mean centroids,
-    // every vector re-assigned by the kmeans cost recipe, (label,
-    // predicted) counts out; label-sorted centroid rows make the
-    // first-min tie-break ≡ ORDER BY cost, label
-    "sim_centroid_confusion" -> ((s, d) =>
-      ext.Clustering.nearestLabelCentroid(emb(s, d), "vec_id", "embedding", "label")
-        .groupBy("label", "predicted").agg(count(lit(1)).as("n"))),
-    // SSL-prototypes / D4 pruning (Sorscher et al. 2022; Abbas et al.
-    // 2023): drop the most prototypical quarter of every k-means cluster —
-    // points nearest their centroid carry the least marginal information
-    // once the cluster is represented; keepFraction's complement (0.25) is
-    // binary-exact so both engines cut at the identical quantile
-    "sim_prototype_prune" -> ((s, d) =>
-      ext.Clustering.prototypePrune(emb(s, d), "vec_id", "embedding",
-        k = 8, iters = 3, keepFraction = 0.75)),
-    // cluster-balanced curation: cap every k-means cluster's contribution at
-    // the same per-cluster sample (deterministic (idHash, id) order) — the
-    // topic-flattening composition the SemDeDup/data-mixing recipes run
-    // between clustering and training-set assembly. Composes the two gated
-    // primitives; the oracle chains their oracles the same way.
-    "sampling_cluster_balanced" -> ((s, d) =>
-      Sampling.stratified(
-        ext.Clustering.kmeansAssign(emb(s, d), "vec_id", "embedding", k = 8, iters = 3),
-        "cluster", "vec_id", 25)),
-    // distributed quality-classifier training (fastText-shape logistic
-    // regression, hashing-trick features — one aggregation job per step,
-    // O(dim) to the driver): the label is a text-DERIVABLE property
-    // (count('table') > count('row')) that is exactly linearly separable
-    // in the feature space, so a correct trainer MUST fit it — the gate
-    // emits a violation row if training accuracy lands under the 0.95
-    // floor. Trained with preconditioned Adam (40 jobs, r16 retune —
-    // down from 61 full-batch Adagrad jobs at the same floor margin);
-    // samplePermille=0 (auto) makes gradient steps MINI-BATCH (~1000-row
-    // deterministic hash slices, floor 250‰) once the corpus is big
-    // enough for the slice to keep gradient SNR — the 100 TB shape, where
-    // a full corpus pass per step is the expensive way to fit a linear
-    // probe.
-    // Measured (deterministic): 0.996 full-batch at sf0.01, 0.998 sampled
-    // at sf0.1. NB the fixture's lang column is NOT text-derivable (all
-    // five langs share one 31-token vocabulary) — a lang label here would
-    // gate noise, not learning.
-    "pipeline_quality_classifier" -> ((s, d) => {
-      import s.implicits._
-      // hashed features + labels from the per-JVM fixture (r20 wave 2):
-      // feature staging is corpus-deterministic input prep; the operator
-      // this gate certifies is the routed trainLogistic fit below, which
-      // runs fresh (count, dim probe, IRLS iterations, final metrics job)
-      val feats = qualityFeaturesFixture(s, d)
-      // AUTO-ROUTED (r19 verdict item 5): at dim 129 (≤ the MEASURED
-      // Newton/adam crossover, Classifier.NewtonAutoMaxDim) the router
-      // picks IRLS — 5 Newton iterations, same floor as the r16 40-step
-      // Adam schedule with ~7x fewer sequential jobs — and a high-dim
-      // hashing model would take the sampled-adam O(dim)/row path. NB the
-      // r19 verdict hypothesized a corpus-SIZE crossover; the 30× fork
-      // measurement refuted it (adam 45.3 s vs newton 24.3 s at 150k rows,
-      // dim 129 — both paths are linear in rows), so auto routes on dim;
-      // the crossover is spec-pinned (ClassifierSpec) and recorded in
-      // BASELINE.md round 20.
-      val m = Classifier.trainLogistic(feats, "label", steps = 6,
-        learningRate = 0.3, samplePermille = 0, optimizer = "auto")
-      val viol = if (m.trainAccuracy >= 0.95) Seq.empty[(String, Double)]
-        else Seq(("train_accuracy_below_floor", m.trainAccuracy))
-      viol.toDF("check", "value")
-    }),
-    // hard-negative mining (DPR shape): top-5 most-similar NON-duplicates —
-    // the query's cos>=0.45 cluster-mates are excluded BEFORE the rank, so
-    // every query still gets exactly k negatives. ROUTED duplicate
-    // detection + bounded map-side top-k (r17 verdict: this gate's
-    // brute-force regime was the marathon's worst scale-killer at 196×);
-    // at gate scale the router's exact branch makes it bit-identical to
-    // the brute-force oracle
-    "pipeline_hard_negatives" -> ((s, d) => {
-      val e = emb(s, d)
-      Similarity.hardNegativesRouted(e, e.filter(col("vec_id") < 10),
-        "vec_id", "embedding", 5, 0.45)
-    }),
-    // gated at nprobe = nlist: full-probe IVF is EXACTLY brute force (every
-    // list is scanned), so the brute-force top-k oracle applies and the whole
-    // IVF plan (quantizer training, list assignment, probe join, re-rank) is
-    // driver-hash-checked. The approximate operating point (nprobe < nlist)
-    // is covered by the recall bound in SimilaritySpec.
-    "sim_ann_ivf" -> ((s, d) => {
-      val e = emb(s, d)
-      Similarity.annTopK(e, e.filter(col("vec_id") < 10), "vec_id", "embedding", 5,
-        nlist = 16, nprobe = 16)
-    }),
-    // the PERSISTED index path at the same exact operating point: build the
-    // index into a temp TableStore, reload the quantizer from storage (not
-    // the in-memory handle), search at full probe ≡ brute force — gating
-    // build, persist, reload, list-pruned scan, and probe re-rank end-to-end
-    "sim_ann_ivf_persisted" -> ((s, d) => {
-      // index store from the per-JVM fixture cache (r20 wave 2, the
-      // bm25FullIndexDir pattern): the build amortizes in production; the
-      // gate measures the steady state — quantizer reload from storage +
-      // the list-pruned probe — consumed READ-ONLY, hash-checked whole
-      val store = new graft.store.TableStore(s, ivfBaseIndexDir(s, d, "plain"))
-      val idx = Similarity.loadIndex(store, "ivf_idx")
-      Similarity.searchIndex(store, idx, emb(s, d).filter(col("vec_id") < 10),
-        "vec_id", "embedding", 5, nprobe = 16)
-    }),
-    // IVF+SQ: the quantized-payload index (4x less probe IO at real widths),
-    // ranked by the dequantized dot — searched at the exact full-probe
-    // point, gated against DuckDB reproducing the identical quantization
-    // (unit-normalize -> scale=127/max|x| -> floor(x*scale+0.5)) and ranking
-    "sim_ann_ivf_sq" -> ((s, d) => {
-      // quantized index store from the per-JVM fixture cache (see
-      // sim_ann_ivf_persisted) — reload + quantized probe, READ-ONLY
-      val store = new graft.store.TableStore(s, ivfBaseIndexDir(s, d, "sq"))
-      val idx = Similarity.loadIndex(store, "ivf_sq")
-      Similarity.searchIndexQuantized(store, idx, emb(s, d).filter(col("vec_id") < 10),
-        "vec_id", "embedding", 5, nprobe = 16)
-    }),
-    // two-stage retrieval: int8-SQ first stage -> exact float re-rank of a
-    // 4k candidate pool. Gated at full probe, where the pool provably
-    // contains the true top-k on this fixture, so the composed pipeline
-    // (SQ probe + keyed float fetch + exact re-rank) must equal brute force
-    // exactly; the partial-probe benefit (re-rank recovering the int8
-    // recall tax at nprobe=4) is pinned by SimilaritySpec + ScaleSmoke
-    "sim_ann_rerank" -> ((s, d) => {
-      // quantized index store from the per-JVM fixture cache (see
-      // sim_ann_ivf_persisted) — the two-stage probe runs fresh, READ-ONLY
-      val store = new graft.store.TableStore(s, ivfBaseIndexDir(s, d, "rr"))
-      val e = emb(s, d)
-      val idx = Similarity.loadIndex(store, "ivf_rr")
-      Similarity.searchIndexRerank(store, idx, e, e.filter(col("vec_id") < 10),
-        "vec_id", "embedding", 5, nprobe = 16)
-    }),
-    // the growing-index ANN loop: index built on vectors < 300, the rest
-    // appended via appendToIndex (assigned by the STORED quantizer, corpus
-    // appended as its own generation). Searched at the exact full-probe
-    // point, so the result must equal the brute-force oracle over the WHOLE
-    // corpus — 24 of the 50 expected rows are appended vectors, so a lost
-    // or mis-assigned append hash-fails
-    "sim_ann_ivf_persisted_grow" -> ((s, d) => {
-      // base index (vectors < 300) from the per-JVM fixture cache, COPIED
-      // to a fresh dir (the bm25GrowStore pattern); the GROW leg — stored-
-      // quantizer assignment + append + full-probe search — is the
-      // operator this gate certifies and runs fresh on every invocation
-      val store = ivfGrowStore(s, d)
-      val e = emb(s, d)
-      val idx = Similarity.loadIndex(store, "ivf_g")
-      Similarity.appendToIndex(store, idx, e.filter(col("vec_id") >= 300),
-        "vec_id", "embedding")
-      Similarity.searchIndex(store, idx, e.filter(col("vec_id") < 10),
-        "vec_id", "embedding", 5, nprobe = 16)
-    }),
-
-    // ---- streaming (§2.11): the Structured Streaming path gated against a
-    // batch oracle — complete-mode tumbling day windows over the events
-    // stream, drained with Trigger.AvailableNow, must equal DuckDB's batch
-    // group-by. Proves stream ≡ batch at the driver's hash gate.
-    "stream_windowed_counts" -> ((s, d) => {
-      import org.apache.spark.sql.streaming.Trigger
-      s.catalog.dropTempView("stream_wc") // stale sink table from a prior run
-      // glob (not the bare file path): FileStreamSource requires a directory
-      // or glob basePath; the glob's parent dir becomes the base
-      val stream = graft.streaming.EventStream.read(s, s"$d/events.parque*")
-      val q = graft.streaming.EventStream.windowedCounts(stream, "1 day", "1 hour")
-        .writeStream.format("memory").queryName("stream_wc")
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      // bounded wait: a hung stream must fail THIS query, not stall the
-      // whole verify/bench harness
-      if (!q.awaitTermination(streamDrainMs)) {
-        q.stop()
-        throw new IllegalStateException(s"stream_windowed_counts did not drain within ${streamDrainMs / 1000} s")
-      }
-      s.table("stream_wc").select(
-        // streaming event-time is TIMESTAMP (LTZ, UTC session) — emit NTZ to
-        // match the batch/oracle type; round the double sum (ulp-order
-        // differences between engines' summation orders)
-        col("window_start").cast("timestamp_ntz").as("window_start"),
-        col("event_type"), col("n_events"),
-        round(col("total_value"), 6).as("total_value"))
-    }),
-
-    // streaming stateful distinct drained AvailableNow, gated ≡ batch DISTINCT
-    "stream_distinct_pairs" -> ((s, d) => {
-      import org.apache.spark.sql.streaming.Trigger
-      s.catalog.dropTempView("stream_dp")
-      val stream = graft.streaming.EventStream.read(s, s"$d/events.parque*")
-      val q = graft.streaming.EventStream.distinctKeys(stream, Seq("user_id", "event_type"))
-        .writeStream.format("memory").queryName("stream_dp")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      if (!q.awaitTermination(streamDrainMs)) {
-        q.stop()
-        throw new IllegalStateException(s"stream_distinct_pairs did not drain within ${streamDrainMs / 1000} s")
-      }
-      s.table("stream_dp")
-    }),
-
-    // stream-stream range correlation drained AvailableNow, gated ≡ the
-    // batch rangeJoin oracle: clicks within 60 s of any error, both sides
-    // live streams joined on the banded time key. Inner stream joins emit
-    // on match (the watermark only bounds state), so one drain sees every
-    // pair once both sides' single micro-batch has loaded.
-    "stream_correlated" -> ((s, d) => withStatePartitions(s, 8) {
-      import org.apache.spark.sql.streaming.Trigger
-      s.catalog.dropTempView("stream_corr")
-      // pre-flight band guard on the same files, batch-side: a stream can't
-      // aggregate its own input eagerly, so validate the band key's
-      // cardinality BEFORE committing stream-join state to it (r13: a
-      // collapsed ts column made this query's state explode 179×).
-      // Asserted once per JVM (r20 wave 2b — corpus-deterministic setup);
-      // the streaming correlation below runs fresh per invocation
-      correlatedBandGuard(s, d)
-      def side(tpe: String, idAs: String) =
-        graft.streaming.EventStream.read(s, s"$d/events.parque*")
-          .filter(col("event_type") === tpe)
-          .select(col("event_id").as(idAs), col("ts"))
-      val q = graft.streaming.EventStream.correlated(
-          side("click", "click_id"), side("error", "error_id"),
-          "ts", "ts", java.time.Duration.ofSeconds(60))
-        .select("click_id", "error_id")
-        .writeStream.format("memory").queryName("stream_corr")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      if (!q.awaitTermination(streamDrainMs)) {
-        q.stop()
-        throw new IllegalStateException(s"stream_correlated did not drain within ${streamDrainMs / 1000} s")
-      }
-      s.table("stream_corr")
-    }),
-
-    // streaming sessionize drained to closed sessions, gated ≡ the batch
-    // gap-session rollup (agg_user_sessions oracle). flatMapGroupsWithState
-    // only EMITS a session when its event-time timeout fires, so after the
-    // real corpus drains, a sentinel event one day past the stream's end is
-    // appended and a second drain (same checkpoint) advances the watermark
-    // past every real session's end+gap — the still-open tails time out and
-    // emit. The sentinel's own session (user −1) never closes; it is
-    // excluded below. Two drains over one checkpoint is the same restart
-    // pattern the CDC specs use; the parquet sink accumulates across them
-    // (a memory sink would drop drain 1's rows on re-registration).
-    "stream_sessions" -> ((s, d) => withStatePartitions(s, 8) {
-      import org.apache.spark.sql.streaming.Trigger
-      val tmp = java.nio.file.Files.createTempDirectory("graft-stream-sess")
-      val in = tmp.resolve("in")
-      java.nio.file.Files.createDirectories(in)
-      stageEvents(d, in, "events")
-      val out = s"$tmp/out"
-      def drain(): Unit = {
-        val q = graft.streaming.EventStream.sessionize(
-            s, graft.streaming.EventStream.read(s, in.toString), "30 minutes")
-          .toDF().writeStream.format("parquet").option("path", out)
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        if (!q.awaitTermination(streamDrainMs)) {
-          q.stop()
-          throw new IllegalStateException(s"stream_sessions did not drain within ${streamDrainMs / 1000} s")
-        }
-      }
-      drain() // the real corpus: every session behind the final watermark emits
-      // the sentinel (max(ts)+1d in the SOURCE's own ts representation —
-      // see sessionSentinelFile) comes precomputed from the per-JVM
-      // fixture cache; appending it here is a file COPY, which is all the
-      // second drain needs (the checkpoint sees one new file)
-      java.nio.file.Files.copy(sessionSentinelFile(s, d),
-        in.resolve("sentinel.parquet"),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      drain() // same checkpoint: only the sentinel file is new
-      s.read.parquet(out).filter(col("userId") >= 0L)
-        .groupBy("userId")
-        .agg(count(lit(1)).as("n_sessions"), max(col("nEvents")).as("longest_session"))
-        .select(col("userId").as("user_id"), col("n_sessions"), col("longest_session"))
-    }),
-
-    // streaming exactly-once dedup gated against plain DISTINCT: the corpus
-    // is staged TWICE (every event a true duplicate), the stream must emit
-    // each event_id once. Watermark spans the fixture (31 days > the 30-day
-    // event range) so no dedup state evicts mid-drain.
-    // streaming ingest dedup: the batch `dedup_incremental_fuzzy` split
-    // (index = docs < 250, incoming = docs >= 250) arriving as TWO staged
-    // parquet files drained one per micro-batch (maxFilesPerTrigger=1) —
-    // each micro-batch probes the persisted LSH index via foreachBatch and
-    // appends its survivors to a store table; the final survivor set must
-    // be row-identical to the batch path (shared brute-force oracle).
-    // Survivors vs a STATIC index are micro-batch-order independent, so the
-    // gate is deterministic whatever order the file source picks; the
-    // sequential grow-the-index variant is spec-pinned (IngestStreamSpec).
-    "stream_ingest_dedup" -> ((s, d) => {
-      // archive index from the per-JVM fixture cache (copied tree); the
-      // STREAMING leg — micro-batch probes via foreachBatch + survivor
-      // appends — is the operator and runs fresh per invocation
-      val store = lshIndexStore(s, d, "corpus_lsh", 250, "graft-ingest-store")
-      val idx = Dedup.loadLshIndex(store, "corpus_lsh")
-      // staged incoming batches from the per-JVM fixture cache (r20 wave
-      // 2): input staging is not the operator; the micro-batch probe +
-      // survivor appends below run fresh on a fresh store copy, and the
-      // file source reads the staged dir READ-ONLY
-      val in = ingestInputDir(s, d)
-      val q = graft.streaming.IngestStream.dedupToStore(
-        graft.streaming.IngestStream.readDocs(s, in),
-        store, idx, "doc_id", "text", 0.8, "survivors")
-      if (!q.awaitTermination(streamDrainMs)) {
-        q.stop()
-        throw new IllegalStateException(s"stream_ingest_dedup did not drain within ${streamDrainMs / 1000} s")
-      }
-      store.read("survivors").select("doc_id", "text", "lang", "source", "n_chars")
-    }),
-    "stream_dedup" -> ((s, d) => withStatePartitions(s, 8) {
-      import org.apache.spark.sql.streaming.Trigger
-      s.catalog.dropTempView("stream_dd")
-      val tmp = java.nio.file.Files.createTempDirectory("graft-stream-dedup")
-      val in = tmp.resolve("in")
-      java.nio.file.Files.createDirectories(in)
-      stageEvents(d, in, "f0")
-      stageEvents(d, in, "f1")
-      val q = graft.streaming.EventStream.dedupedEvents(
-          graft.streaming.EventStream.read(s, in.toString), watermark = "31 days")
-        .writeStream.format("memory").queryName("stream_dd")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      if (!q.awaitTermination(streamDrainMs)) {
-        q.stop()
-        throw new IllegalStateException(s"stream_dedup did not drain within ${streamDrainMs / 1000} s")
-      }
-      s.table("stream_dd").select(col("event_id"),
-        col("ts").cast("timestamp_ntz").as("ts"),
-        col("user_id"), col("event_type"), col("value"), col("props"))
-    }),
-
-    // streaming CDC apply gated end-to-end: a change stream (base images
-    // seq=0 plus updated images seq=1 for every 10th key) upserted into a
-    // temp TableStore copy; the post-state must equal the DuckDB
-    // reconstruction. In-batch last-write-wins on seq resolves the
-    // duplicate keys regardless of how AvailableNow batches the files.
-    "stream_cdc_apply" -> ((s, d) => withStatePartitions(s, 8) {
-      import org.apache.spark.sql.streaming.Trigger
-      val tmp = java.nio.file.Files.createTempDirectory("graft-stream-cdc")
-      val store = new graft.store.TableStore(s, s"$tmp/store")
-      // staged change files from the per-JVM fixture cache (r20 wave 2):
-      // input staging is not the operator; the streaming upsert below
-      // (fresh checkpoint + fresh target store) is, and the file source
-      // reads the staged dir READ-ONLY
-      val in = cdcInputDir(s, d)
-      val schema = events(s, d).withColumn("seq", lit(0L)).schema
-      val stream = s.readStream.schema(schema).parquet(s"$in/f*")
-      val q = graft.streaming.EventStream.upsertInto(stream, store, "copy", "event_id", "seq")
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .trigger(Trigger.AvailableNow()).start()
-      if (!q.awaitTermination(streamDrainMs)) {
-        q.stop()
-        throw new IllegalStateException(s"stream_cdc_apply did not drain within ${streamDrainMs / 1000} s")
-      }
-      store.read("copy")
-    }),
-
-    // the count–min sketch streamed: one sketch of cells per micro-batch
-    // (maxFilesPerTrigger=1 over two staged corpus halves forces >= 2
-    // batches, require-checked), cells appended to a store table, merged
-    // at read by a plain cell-wise SUM — the sketch is distributive, so
-    // the merged result must equal the whole-corpus sketch (same oracle
-    // as the batch gate); the probe then runs against the MERGED sketch
-    "stream_cms_merge" -> ((s, d) => withStatePartitions(s, 8) {
-      import org.apache.spark.sql.streaming.Trigger
-      val tmp = java.nio.file.Files.createTempDirectory("graft-stream-cms")
-      val store = new graft.store.TableStore(s, s"$tmp/store")
-      val doc = docs(s, d)
-      // staged corpus halves from the per-JVM fixture cache (r20 wave 2):
-      // the per-micro-batch sketch + idempotent append + merged probe below
-      // are the operator and run fresh (fresh checkpoint + fresh store)
-      val in = cmsInputDir(s, d)
-      val batches = new java.util.concurrent.atomic.AtomicInteger(0)
-      val q = s.readStream.schema(doc.schema)
-        .option("maxFilesPerTrigger", 1).parquet(s"$in/h*")
-        .writeStream.foreachBatch { (b: DataFrame, batchId: Long) =>
-          batches.incrementAndGet()
-          // batchId-keyed so a replayed micro-batch cannot double-count
-          // cells (the IngestStream exactly-once discipline)
-          store.appendIdempotent("cms_cells", ext.Profiling.cmsSketch(
-            b.select(explode(TextAnalysis.tokens(col("text"))).as("t")), "t"),
-            s"cms-$batchId")
-          (): Unit
-        }
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .trigger(Trigger.AvailableNow()).start()
-      if (!q.awaitTermination(streamDrainMs)) {
-        q.stop()
-        throw new IllegalStateException(s"stream_cms_merge did not drain within ${streamDrainMs / 1000} s")
-      }
-      require(batches.get() >= 2,
-        s"expected >= 2 micro-batches, got ${batches.get()}")
-      val merged = store.read("cms_cells")
-        .groupBy("row", "bucket").agg(sum("cnt").as("cnt"))
-      ext.Profiling.cmsProbe(doc, "text", merged)
-    }),
-
-    // the Misra–Gries sketch gated in its EXACT regime: capacity above the
-    // corpus' distinct-token count means no counter ever decrements and no
-    // merge ever shrinks, so the sketch IS `GROUP BY token / count(*)` —
-    // DuckDB-expressible; the approximate regime's ±n/(capacity+1) bounds
-    // stay spec-pinned (AggregatorsSpec)
-    "agg_frequent_tokens" -> ((s, d) =>
-      ext.Aggregators.frequentTokens(s, docs(s, d), capacity = 1 << 17)),
-
-    // int8 scalar quantization, posexploded to scalar rows for the gate
-    "sim_quantize_int8" -> ((s, d) =>
-      Similarity.quantizeInt8(emb(s, d), "vec_id", "embedding")
-        .select(col("vec_id"), col("scale"), posexplode(col("qvec")))
-        .select(col("vec_id"), col("scale"), col("pos").cast("long").as("idx"),
-          col("col").as("q"))),
-
-    // ---- multimodal plumbing (§2.12) ----
-    "mm_features" -> ((s, d) =>
-      Multimodal.extractFeatures(s, Multimodal.withSyntheticMedia(docs(s, d)))
-        .toDF().select(col("id"), col("nBytes").as("n_bytes"),
-          col("headByte").as("head_byte"), col("frameCount").as("frame_count"))),
-    "mm_frame_counts" -> ((s, d) =>
-      Multimodal.sampleFrames(Multimodal.withSyntheticMedia(docs(s, d)), 32, 2)
-        .groupBy(col("id")).agg(count(lit(1)).as("n_frames"))),
-    // resize plumbing gated on byte-derivable scalars (byte 0 survives the
-    // stride sample by construction; payload caps at 24x16=384 bytes; the
-    // corpus is ASCII so the decoded head char code == the head byte)
-    "mm_resize" -> ((s, d) =>
-      Multimodal.resize(s, Multimodal.withSyntheticMedia(docs(s, d)), 24, 16)
-        .toDF().select(col("id"),
-          length(col("payload")).as("n_bytes_out"),
-          expr("meta.width").as("out_width"),
-          ascii(substring(col("payload").cast("string"), 1, 1)).as("head_byte"))),
-    // REAL JDK codec round-trip at the driver gate: encode deterministic
-    // PNG/WAV payloads in-query (even ids → ImageIO PNG, odd ids →
-    // AudioSystem WAV), decode them with the real codecs, emit the decoded
-    // geometry. The oracle states the expected pixel grids / PCM frame
-    // counts as id arithmetic — rows match only if decoding actually ran.
-    "mm_decode_real" -> ((s, d) =>
-      Multimodal.decodeRealRoundTrip(s,
-        orders(s, d).filter(col("o_orderkey") <= 32).select(col("o_orderkey").as("id")))),
-    // perceptual image near-dup: every planted off-grid-perturbed twin must
-    // pair with its original through REAL PNG decode → aHash → hamming
-    // banding; violations (missed planted pairs) must be empty
-    "mm_image_near_dup" -> ((s, d) =>
-      Multimodal.imageNearDupRoundTrip(s,
-        orders(s, d).filter(col("o_orderkey") <= 24).select(col("o_orderkey").as("id")))),
-
-    // multinomial naive Bayes language routing: train on even doc ids,
-    // classify odd; one token-keyed model join (unseen tokens fold into
-    // the per-label constant), round-6 argmax with label tiebreak.
-    // NOTE the gate checks PARITY, not accuracy — the fixture's languages
-    // share most vocabulary by construction (only sparse marker tokens
-    // differ), so NB accuracy here is ~0.34; the separable-corpus
-    // perfect-recovery property is pinned in NbClassifySpec
-    "text_nb_classify" -> ((s, d) => {
-      val dd = docs(s, d)
-      TextAnalysis.nbClassify(dd.filter(col("doc_id") % 2 === 0),
-        dd.filter(col("doc_id") % 2 === 1))
-    }),
-    // two-sample KS drift between the purchase and error value
-    // distributions: bin-free CDF max-gap on the distinct-value grid
-    "profile_ks_drift" -> ((s, d) =>
-      graft.ext.Profiling.ksStatistic(events(s, d), col("value"),
-        col("event_type") === "purchase", col("event_type") === "error")),
-    // Herfindahl–Hirschman revenue concentration per segment: exact
-    // Σcᵢ²/S² over integer customer-revenue cents — one division total
-    "agg_hhi_segments" -> ((s, d) => {
-      val cust = orders(s, d)
-        .join(broadcast(customer(s, d)), col("o_custkey") === col("c_custkey"))
-        .select(col("c_mktsegment"), col("c_custkey"),
-          (col("o_totalprice").cast("decimal(18,2)") * 100).cast("long").as("cents"))
-        .groupBy("c_mktsegment", "c_custkey")
-        .agg(sum("cents").cast("decimal(38,0)").as("ci"))
-      cust.groupBy("c_mktsegment")
-        .agg(count(lit(1)).as("n_customers"),
-          sum(col("ci") * col("ci")).as("__sq"), sum("ci").as("__s"))
-        .select(col("c_mktsegment"), col("n_customers"),
-          round(col("__sq").cast("double") /
-            (col("__s").cast("double") * col("__s").cast("double")), 6).as("hhi"))
-    }),
-    // per-class precision/recall/F1 over the NB predictions — closes the
-    // train → apply → evaluate loop with exact integer ratios
-    "eval_nb_report" -> ((s, d) => {
-      // NB predictions from the per-JVM derived-frame fixture (r20 wave 2):
-      // nbClassify is the text_nb_classify gate's operator (fresh there);
-      // here the operator under certification is the classification report
-      Eval.classificationReport(nbPredsFixture(s, d), col("gold"), col("predicted"))
-    }),
-    // Theil–Sen robust daily-volume trend per event type: median of all
-    // pairwise day-slopes over the zero-filled day grid
-    "ts_trend_theil_sen" -> ((s, d) =>
-      graft.ext.TimeSeries.theilSenTrend(events(s, d), "event_type", "ts")),
-    // k-core peeling (5 fixed rounds, k=3) over the part co-occurrence
-    // graph — the dense-subgraph screen; fixed-round so the oracle can
-    // unroll the identical peels as chained CTEs
-    "graph_kcore" -> ((s, d) => {
-      val pairs = partCoocFixture(s, d)
-      Graphs.kCore(pairs, "pa", "pb", k = 3, rounds = 5)
-    }),
-    // k-NN majority-vote classification: exact cosine top-5 votes with
-    // the (votes DESC, label ASC) deterministic tie-break
-    "sim_knn_classify" -> ((s, d) => {
-      val e = emb(s, d)
-      Similarity.knnClassify(e, e.filter(col("vec_id") < 20),
-        "vec_id", "embedding", "label", 5)
-    }),
-    // Theil T inequality per market segment beside the Gini gate: exact
-    // integer cents, per-row (x·n/Σx)·ln(x·n/Σx) terms, one grouped sum
-    "agg_theil_index" -> ((s, d) => {
-      val j = orders(s, d)
-        .join(broadcast(customer(s, d)), col("o_custkey") === col("c_custkey"))
-        .select(col("c_mktsegment"),
-          (col("o_totalprice").cast("decimal(18,2)") * 100).cast("long").as("cents"))
-      val tot = j.groupBy("c_mktsegment")
-        .agg(count(lit(1)).as("n"), sum("cents").as("sx"))
-      val r = col("cents").cast("double") * col("n").cast("double") /
-        col("sx").cast("double")
-      j.join(broadcast(tot), Seq("c_mktsegment"))
-        .groupBy(col("c_mktsegment"))
-        .agg(max(col("n")).as("n"),
-          round(sum(r * log(r)) / max(col("n")).cast("double"), 6).as("theil"))
-    }),
-    // Kendall τ-a rank agreement between the token-count and char-count
-    // orderings of each language's top-50 longest docs — the cheap-vs-
-    // expensive scorer swap test; pairs form only WITHIN the bounded head
-    "eval_kendall_tau" -> ((s, d) => {
-      val scored = docs(s, d).filter(col("text").isNotNull)
-        .select(col("doc_id"), col("lang"),
-          size(split(col("text"), "\\s+")).cast("long").as("n_tokens"),
-          length(col("text")).cast("long").as("n_chars_obs"))
-      Eval.rankAgreement(scored, col("lang"), col("n_chars_obs"),
-          col("n_tokens"), col("doc_id"), head = 50)
-        .withColumnRenamed("grp", "lang")
-    }),
-    // MRR@10 beside NDCG@10: reciprocal rank of each query's FIRST
-    // same-label neighbor in the same cosine ranking (0 when none ranks)
-    "sim_retrieval_mrr" -> ((s, d) => {
-      val e = emb(s, d)
-      Similarity.retrievalMrr(e, e.filter(col("vec_id") < 20),
-        "vec_id", "embedding", "label", 10)
-    }),
-    // one-sided CUSUM level-shift chart per event type: the sequential
-    // change detector for sustained small feed shifts the per-day z-score
-    // misses; exact integer deviations via n-scaling, closed-form
-    // prefix-sum/running-min windows (never the raw recursion)
-    "ts_cusum_shift" -> ((s, d) =>
-      graft.ext.TimeSeries.cusumShift(events(s, d), "event_type", "ts",
-        slackPerDay = 2L, threshold = 5.0)),
-    // degree assortativity of the part co-occurrence graph (the
-    // graph_triangles/link-prediction fixture): one exact-integer Pearson
-    // over edge-endpoint degrees
-    "graph_assortativity" -> ((s, d) => {
-      val pairs = partCoocFixture(s, d)
-      Graphs.degreeAssortativity(pairs, "pa", "pb")
-    }),
-
-    // ---- evaluation metrics (Eval — §2.12 measurement family) ----
-    // exact ROC AUC of event value as a purchase score: midranks via the
-    // distributed globalOrdinals numbering (NO single-partition sort)
-    "eval_auc_purchase" -> ((s, d) =>
-      Eval.aucBinary(events(s, d), col("value"),
-        col("event_type") === "purchase", col("event_id"))),
-    // reliability bins of the max-normalized value against purchase —
-    // bit-deterministic bin edges, exact decimal score sums
-    "eval_calibration_bins" -> ((s, d) =>
-      Eval.calibrationBins(events(s, d), col("value"),
-        col("event_type") === "purchase", bins = 10)),
-    // chance-corrected agreement of the n-gram language-ID heuristic
-    // against the gold lang column — the labeler-acceptance metric
-    "eval_langid_kappa" -> ((s, d) => {
-      // langId predictions from the per-JVM fixture (r20 wave 2b): langId
-      // is the text_langid gate's operator (fresh there); the operator
-      // under certification here is the chance-corrected agreement
-      val pred = langIdPredsFixture(s, d).select(col("doc_id"), col("pred_lang"))
-      val j = pred.join(docs(s, d).select(col("doc_id"), col("lang")), Seq("doc_id"))
-      Eval.cohensKappa(j, col("pred_lang"), col("lang"))
-    }),
-
-    // ---- privacy screens (Privacy — §2.12 release-gate family) ----
-    // k-anonymity + l-diversity stats over the (segment, nation) quasi-
-    // identifier with the acctbal-thousands bucket as the sensitive value
-    "privacy_k_anon_stats" -> ((s, d) =>
-      Privacy.anonymityStats(customer(s, d), Seq("c_mktsegment", "c_nationkey"),
-        floor(col("c_acctbal") / 1000).cast("long"), k = 10, l = 3)),
-    // enforcement: suppress quasi-identifiers of rows in groups below k
-    "privacy_suppress_k" -> ((s, d) =>
-      Privacy.suppressBelowK(
-        customer(s, d).select("c_custkey", "c_mktsegment", "c_nationkey"),
-        Seq("c_mktsegment", "c_nationkey"), k = 12)
-        .select("c_custkey", "c_mktsegment", "c_nationkey", "grp_n", "suppressed")),
-
-    // ---- fuzzy record linkage (native Jaro–Winkler comparator) ----
-    // census-style blocked name linkage over deterministic pseudo-names
-    // (Knuth-hashed custkey digits → letters) and their perturbed variants
-    // (identity / char drop / adjacent swap / last-char replace by id%4);
-    // the gate cross-checks the codegen'd JaroWinkler kernel against
-    // DuckDB's independent implementation over every blocked pair
-    "dedup_name_linkage" -> ((s, d) => {
-      val base = customer(s, d).select(col("c_custkey").as("id"),
-        translate(lpad(pmod(col("c_custkey") * lit(2654435761L), lit(100000000L))
-          .cast("string"), 8, "0"), "0123456789", "abcdefghij").as("name"))
-      val variants = base.select(col("id"),
-        when(col("id") % 4 === 0, col("name"))
-          .when(col("id") % 4 === 1,
-            concat(substring(col("name"), 1, 2), substring(col("name"), 4, 8)))
-          .when(col("id") % 4 === 2,
-            concat(substring(col("name"), 1, 3), substring(col("name"), 5, 1),
-              substring(col("name"), 4, 1), substring(col("name"), 6, 8)))
-          .otherwise(concat(substring(col("name"), 1, 7), lit("z"))).as("name"))
-      // CORPUS-ADAPTIVE blocking (blockChars = 0 — r17 verdict: a pinned
-      // 2-char prefix saturates at 100 blocks and candidates grow ~n²).
-      // At gate scale the estimator lands on the oracle's 2-char key
-      // (1500 names → ~15 candidate pairs/row, inside the 32/row target);
-      // a bigger corpus widens the prefix instead of grinding
-      Dedup.linkNamesJaroWinkler(base, variants, "id", "name", "id", "name",
-        threshold = 0.84, blockChars = 0)
-    }),
-
-    // ---- production JDBC path (S6's database analog) as a GATED entry ----
-    // the Derby-backed write→read round trip that JdbcSpec exercises,
-    // promoted into the driver's hash gate (r17 verdict): Jdbc.append
-    // batch-inserts the frame (the SqlBulkCopy analog), Jdbc.read fetches
-    // it back through the PARTITIONED parallel scan (4 key-range splits —
-    // the reference's single streaming cursor, TableCopyService.cs:140,
-    // distributed), and the result must hash-equal the parquet source
-    "o19_jdbc_roundtrip" -> ((s, d) => withDerbyGate(s) { cfg =>
-      val src = customer(s, d).filter(col("c_custkey") <= 200)
-        .select(col("c_custkey"), col("c_name"), col("c_acctbal"))
-      graft.store.Jdbc.append(src, cfg, "t_gate_roundtrip")
-      // the 4-way key-range scan — the reference's single streaming cursor
-      // (TableCopyService.cs:140), distributed
-      graft.store.Jdbc.read(s, cfg, "t_gate_roundtrip",
-          splitCol = Some(("c_custkey", 1L, 200L, 4)))
-        .select(col("c_custkey"), col("c_name"), col("c_acctbal"))
-    }),
-
-    // ---- o20: the reference's CORE transaction over a real database ----
-    // windowed delete + reinsert inside ONE target transaction
-    // (TableCopyService.cs:89-170): Jdbc.overwriteWindow stages the fresh
-    // window distributed, then one coordinator txn runs DELETE … BETWEEN
-    // (day start .. day end − 3 ms) + INSERT..SELECT + COMMIT. Post-state
-    // must hash-match the a5-shaped parquet oracle. Fixture bounded to
-    // event_id <= 2000 so the gate measures the transaction, not insert
-    // volume; the fresh rows carry value + 1 so a silently-skipped
-    // delete+reinsert cannot hash-match.
-    "o20_jdbc_window_reload" -> ((s, d) => withDerbyGate(s) { cfg =>
-      val base = evJdbcBase(s, d)
-      // stale target: state loaded only through the window end (the a5 shape)
-      graft.store.Jdbc.append(base.filter(to_date(col("ts")) <= lit(EvTo)), cfg, "t_win")
-      val fresh = Ops.windowScan(base.withColumn("value", col("value") + 1),
-        "ts", EvFrom, EvTo)
-      graft.store.Jdbc.overwriteWindow(fresh, cfg, "t_win", "ts", EvFrom, EvTo)
-      graft.store.Jdbc.read(s, cfg, "t_win", splitCol = Some(("event_id", 1L, 2000L, 4)))
-        .select(col("event_id"), col("ts").cast("timestamp_ntz").as("ts"),
-          col("user_id"), col("event_type"), col("value"))
-    }),
-
-    // ---- o21: the reference's keyed update transaction over JDBC ----
-    // changed-key discovery (J1) + source re-fetch (J2) feed
-    // Jdbc.upsert: stage the fresh rows, then one target txn deletes the
-    // changed keys (set-based EXISTS against the stage — the 2000-literal
-    // IN batches of TableUpdateService.cs:117-128, lifted) and reinserts.
-    // Post-state must hash-match the a4-shaped parquet oracle.
-    "o21_jdbc_upsert" -> ((s, d) => withDerbyGate(s) { cfg =>
-      val base = evJdbcBase(s, d)
-      graft.store.Jdbc.append(base.filter(to_date(col("ts")) <= lit(EvTo)), cfg, "t_ups")
-      val ev = eventsWithUpdateTs(s, d).filter(col("event_id") <= 2000)
-      val changed = Ops.changedKeys(ev, "event_id", "ts", "update_ts", EvFrom, EvTo)
-      val fresh = Ops.keyedFetch(base.withColumn("value", col("value") + 1),
-        "event_id", changed)
-      graft.store.Jdbc.upsert(fresh, cfg, "t_ups", Seq("event_id"))
-      graft.store.Jdbc.read(s, cfg, "t_ups", splitCol = Some(("event_id", 1L, 2000L, 4)))
-        .select(col("event_id"), col("ts").cast("timestamp_ntz").as("ts"),
-          col("user_id"), col("event_type"), col("value"))
-    }),
-
-    // ---- o22: target-side stored-procedure passthrough ----
-    // the reference's sproc dispatch (StoreProcRunService.cs:16-31 runs
-    // `EXEC name @StartDateParam, @EndDateParam` on the TARGET connection):
-    // a real Derby SQL procedure (Java body — DerbyProcs.windowSummary,
-    // running INSIDE the database on the nested connection) is registered
-    // and invoked through SqlStepRegistry's `jdbc:` step kind with the
-    // window bound positionally; the gate reads the procedure's SIDE
-    // EFFECT back and hash-checks it against DuckDB computing the same
-    // window summary from the parquet source — proving the parameters
-    // arrived and the proc's write landed. Integer arithmetic only, so the
-    // twin matches bit-exactly.
-    "o22_jdbc_sproc" -> ((s, d) => withDerbyGate(s) { cfg =>
-      graft.store.Jdbc.append(events(s, d).filter(col("event_id") <= 2000)
-        .select(col("event_id"), col("ts").cast("timestamp").as("ts")), cfg, "SPROC_SRC")
-      graft.store.Jdbc.execute(cfg,
-        """CREATE TABLE SPROC_OUT("n_rows" BIGINT, "sum_ids" BIGINT)""")
-      graft.store.Jdbc.execute(cfg,
-        "CREATE PROCEDURE WINDOW_SUMMARY(IN s TIMESTAMP, IN e TIMESTAMP) " +
-          "PARAMETER STYLE JAVA LANGUAGE JAVA MODIFIES SQL DATA " +
-          "EXTERNAL NAME 'graft.store.DerbyProcs.windowSummary'")
-      val reg = new graft.proc.SqlStepRegistry(
-        Map("roll" -> "jdbc:CALL WINDOW_SUMMARY(?, ?)"))
-      reg.runJdbc("roll", EvFrom, EvTo, cfg)
-      graft.store.Jdbc.read(s, cfg, "SPROC_OUT")
-    })
-  )
-
-  /** Streaming gates' drain guard (default 300 s — generous at every driver
-    * SF; a stream that hasn't drained by then has degenerate state or
-    * quadratic output, and the guard names it instead of hanging the gate).
-    * `SPARK_GRAFT_STREAM_DRAIN_MS` raises it for scale PROBES whose output
-    * is legitimately large (the 100× replica multiplies event density and
-    * with it the correlation join's output — BASELINE.md round 20); the
-    * driver never sets it, so gate behavior is unchanged. */
-  private lazy val streamDrainMs: Long = {
-    val raw = sys.env.get("SPARK_GRAFT_STREAM_DRAIN_MS")
-    val ms = try raw.map(_.trim.toLong).getOrElse(300000L)
-    catch {
-      case e: NumberFormatException => throw new IllegalArgumentException(
-        s"SPARK_GRAFT_STREAM_DRAIN_MS must be a millisecond count: '${raw.get}'", e)
-    }
-    require(ms > 0, s"SPARK_GRAFT_STREAM_DRAIN_MS must be positive: $ms")
-    ms
-  }
-
-  /** events bounded to a CONSTANT slice (a gate must not grow with SF) with
-    * `ts` cast to session-TZ timestamp for the JDBC leg — value-identity
-    * under the UTC session; gate outputs re-cast to `timestamp_ntz` (the o1
-    * convention) so the driver compare sees the fixture's type. */
-  private def evJdbcBase(s: SparkSession, d: String): DataFrame =
-    events(s, d).filter(col("event_id") <= 2000)
-      .select(col("event_id"), col("ts").cast("timestamp").as("ts"),
-        col("user_id"), col("event_type"), col("value"))
-
-  /** Run `body` against a FRESH embedded-Derby database under the shared
-    * JVM-wide gate home ([[derbyGateHome]]), materialize the resulting
-    * frame as a local relation, then shut the database down and delete its
-    * directory — embedded Derby otherwise keeps every booted db's page
-    * cache + threads alive for the JVM's life, and a runs>=3 marathon must
-    * not accumulate live databases or page files (r18/r19 review fixes,
-    * factored out of o19 when o20–o22 joined). The PRODUCTION path stays
-    * distributed — Jdbc.read returns the partitioned frame and never
-    * collects; the bounded collect here exists for the shutdown ordering. */
-  private def withDerbyGate(s: SparkSession)(
-      body: graft.store.Jdbc.JdbcConfig => DataFrame): DataFrame = {
-    val home = derbyGateHome
-    val db = s"db-${java.util.UUID.randomUUID().toString.take(8)}"
-    val cfg = graft.store.Jdbc.JdbcConfig(
-      url = s"jdbc:derby:$home/$db;create=true",
-      user = "graft", password = "", // ignored by embedded Derby
-      driver = "org.apache.derby.jdbc.EmbeddedDriver")
-    // shutdown + delete run in a FINALLY: a failing gate body must not leak
-    // a live booted database (page cache + threads) or its page files into
-    // the shared JVM — under runs>=3 a repeatedly-failing gate would
-    // otherwise accumulate three of them, the exact r18 failure mode this
-    // helper exists to prevent (r20 review fix: the old inline o19 body
-    // only cleaned up on success).
-    try {
-      val rows = body(cfg)
-      s.createDataFrame(rows.collectAsList(), rows.schema)
-    } finally {
-      try java.sql.DriverManager.getConnection(s"jdbc:derby:$home/$db;shutdown=true")
-      catch { case _: java.sql.SQLException => () } // 08006 = clean shutdown
-      // delete the shut-down DATABASE dir; the shared home stays (it is
-      // derby.system.home — Derby wants it alive for derby.log). Traversal
-      // errors arrive as UncheckedIOException and must not fail a gate
-      // whose work already succeeded (r19 review fix).
-      try {
-        import java.nio.file.{Files, Path}
-        import java.util.Comparator
-        val walk = Files.walk(home.resolve(db))
-        try walk.sorted(Comparator.reverseOrder[Path]())
-          .forEach((p: Path) => { Files.deleteIfExists(p); () })
-        finally walk.close()
-      } catch {
-        case _: java.io.IOException | _: java.io.UncheckedIOException => ()
-      }
-    }
-  }
-
-  /** The one Derby system home for every `o19_jdbc_roundtrip` invocation
-    * in this JVM — created once (lazy val), registered as
-    * `derby.system.home` in the same once-guard. */
-  private lazy val derbyGateHome: java.nio.file.Path = {
-    val h = java.nio.file.Files.createTempDirectory("graft-derby-gate")
-    if (System.getProperty("derby.system.home") == null)
-      System.setProperty("derby.system.home", h.toString)
-    h
-  }
-
-  // =========================================================================
-  // Per-JVM fixture cache (r19 verdict item 3): a handful of gates pay a
-  // corpus-DETERMINISTIC certification or index-build cost per invocation —
-  // the sharpen gate's two brute-force oracle searches, the BM25 gates'
-  // persisted-index builds — which is certification/bench hygiene, not
-  // operator cost. These helpers build that fixed side ONCE per process;
-  // the OPERATOR under test still runs fresh on every invocation and is
-  // certified against the cached sides, so results are bit-identical and a
-  // fresh JVM (the driver's Verify) still pays and certifies the full
-  // build. Entries are plain JVM values and store DIRECTORIES — never live
-  // DataFrames, so the bench's per-query `Dedup.unpersistAll` cannot
-  // invalidate them. `Bench` prewarms the selected gates' fixtures in its
-  // untimed warmup so steady-state s/q tracks operator cost.
-  // =========================================================================
-
-  private val fixtureCache = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
-  private def cachedFixture[T <: AnyRef](key: String)(build: => T): T =
-    fixtureCache.computeIfAbsent(key, _ => build).asInstanceOf[T]
-
-  /** Build the per-process fixtures for the named gates OUTSIDE any timed
-    * region — called by `Bench`'s warmup (and harmless anywhere else). */
-  def prewarmFixtures(s: SparkSession, d: String, names: Iterable[String]): Unit = {
-    val n = names.toSet
-    if (n("text_bm25_index_search")) bm25FullIndexDir(s, d)
-    if (n("text_bm25_index_grow") || n("text_bm25_index_refresh")) bm25BaseIndexDir(s, d)
-    if (n("text_bm25_index_refresh")) bm25TokenlessCount(s, d)
-    if (n("dedup_cosine_lsh_sharpen")) sharpenCert(s, d)
-    if (n("dedup_cosine_lsh_routed")) routedCert(s, d)
-    if (n("stream_ingest_dedup") || n("dedup_incremental_fuzzy"))
-      lshBaseIndexDir(s, d, "corpus_lsh", 250)
-    if (n("dedup_incremental_fuzzy_grow")) lshBaseIndexDir(s, d, "arch", 200)
-    if (n("o4_runner_e2e")) o4SourceWarehouseDir(s, d)
-    // r20 wave 2: shared derived frames, committed-store read fixtures,
-    // persisted IVF bases, staged stream inputs
-    if (n("graph_triangles") || n("graph_link_prediction") || n("graph_kcore") ||
-        n("graph_assortativity")) partCoocFixture(s, d)
-    if (n("graph_pagerank") || n("graph_trustrank") || n("graph_hits") ||
-        n("graph_communities") || n("graph_bfs_distance") || n("graph_degree_stats"))
-      eventTransitionsFixture(s, d)
-    if (n("sampling_split_cluster_safe") || n("pipeline_corpus_select_fuzzy"))
-      jaccardClustersFixture(s, d)
-    if (n("eval_nb_report")) nbPredsFixture(s, d)
-    if (n("eval_langid_kappa")) langIdPredsFixture(s, d)
-    if (n("stream_correlated")) correlatedBandGuard(s, d)
-    if (n("pipeline_corpus_sample") || n("pipeline_corpus_pack")) corpusSelectFixture(s, d)
-    if (n("pipeline_quality_classifier")) qualityFeaturesFixture(s, d)
-    if (n("text_bpe_contract")) bpeMergesFixture(s, d)
-    if (n("sim_ann_ivf_persisted")) ivfBaseIndexDir(s, d, "plain")
-    if (n("sim_ann_ivf_sq")) ivfBaseIndexDir(s, d, "sq")
-    if (n("sim_ann_rerank")) ivfBaseIndexDir(s, d, "rr")
-    if (n("sim_ann_ivf_persisted_grow")) ivfBaseIndexDir(s, d, "grow")
-    if (n("o7_time_travel")) o7StoreDir(s, d)
-    if (n("o8_stats_pruned_read")) o8StoreDir(s, d)
-    if (n("o9_part_pruned_read")) o9StoreDir(s, d)
-    if (n("o10_run_snapshot")) o10Fixture(s, d)
-    if (n("o11_zorder_2d_read")) o11StoreDir(s, d)
-    if (n("o12_generation_diff")) o12StoreDir(s, d)
-    if (n("o12_diff_partition_scoped")) o12pStoreDir(s, d)
-    if (n("o13_change_feed")) o13Fixture(s, d)
-    if (n("stream_cdc_apply")) cdcInputDir(s, d)
-    if (n("stream_cms_merge")) cmsInputDir(s, d)
-    if (n("stream_ingest_dedup")) ingestInputDir(s, d)
-    if (n("stream_sessions")) sessionSentinelFile(s, d)
-    ()
-  }
-
-  /** The refresh gate's fixture premise (no zero-token/NULL-text docs),
-    * counted once per JVM — see the gate's comment. */
-  private def bm25TokenlessCount(s: SparkSession, d: String): Long =
-    cachedFixture[java.lang.Long](s"bm25tokenless:$d") {
-      Long.box(docs(s, d).filter(col("text").isNull ||
-        size(TextAnalysis.tokens(col("text"))) === 0).count())
-    }.longValue()
-
-  /** The sharpen gate's planted fixture (500-vector slice + near-dup plants
-    * + a 120-vector dense cluster) — pure plan construction, rebuilt per
-    * invocation. */
-  private def sharpenFixture(s: SparkSession, d: String): DataFrame =
-    Similarity.plantDenseCluster(
-      Similarity.plantNearDups(
-        emb(s, d).filter(col("vec_id") < 500), "vec_id", "embedding"),
-      "vec_id", "embedding", m = 120, mag = 0.40)
-
-  /** The sharpen gate's corpus-deterministic CERTIFICATION sides — exact
-    * pairs at 0.45, the cos >= 0.99 near-dup band, the 12×12 forcing
-    * estimate — collected once per JVM (bounded: a few thousand id pairs).
-    * The escalated LSH search itself is NOT cached: it is the operator the
-    * gate certifies, and runs fresh against these sides every time. */
-  private def sharpenCert(s: SparkSession, d: String)
-      : (Seq[org.apache.spark.sql.Row], Seq[org.apache.spark.sql.Row],
-         org.apache.spark.sql.types.StructType, java.lang.Long) =
-    cachedFixture(s"sharpencert:$d") {
-      val e = sharpenFixture(s, d)
-      val exact = Similarity.cosinePairs(e, "vec_id", "embedding", 0.45)
-      val near = Similarity.cosinePairs(e, "vec_id", "embedding", 0.99)
-      val est = Similarity.lshCandidateEstimate(e, "vec_id", "embedding")
-      (exact.collect().toSeq, near.collect().toSeq, exact.schema, Long.box(est))
-    }
-
-  /** The routed gate's corpus-deterministic CERTIFICATION sides — the
-    * exact brute-force pairs at 0.45 and the planted cos >= 0.99 near-dup
-    * band over the same plantNearDups fixture — collected once per JVM
-    * (bounded id-pair lists; the [[sharpenCert]] class). The ROUTED LSH
-    * search at autoSharpen=false is NOT cached: it is the operator this
-    * gate certifies and runs fresh against these sides every time. */
-  private def routedCert(s: SparkSession, d: String)
-      : (Seq[org.apache.spark.sql.Row], Seq[org.apache.spark.sql.Row],
-         org.apache.spark.sql.types.StructType) =
-    cachedFixture(s"routedcert:$d") {
-      val e = Similarity.plantNearDups(emb(s, d), "vec_id", "embedding")
-      val exact = Similarity.cosinePairs(e, "vec_id", "embedding", 0.45)
-      val near = Similarity.cosinePairs(e, "vec_id", "embedding", 0.99)
-      (exact.collect().toSeq, near.collect().toSeq, exact.schema)
-    }
-
-  /** Per-process full-corpus BM25 index store ([[TextAnalysis.buildTextIndex]]
-    * over all documents, table `fts`) — read-only for the search gate. */
-  private def bm25FullIndexDir(s: SparkSession, d: String): String =
-    cachedFixture(s"bm25full:$d") {
-      val dir = java.nio.file.Files.createTempDirectory("graft-bm25-idx").toString
-      TextAnalysis.buildTextIndex(new graft.store.TableStore(s, dir), "fts", docs(s, d))
-      dir
-    }
-
-  /** Per-process BASE index store (docs < 250, table `fts_g`) for the
-    * grow/refresh gates — each invocation COPIES this tree to a fresh temp
-    * dir before mutating, so the cached base stays pristine. */
-  private def bm25BaseIndexDir(s: SparkSession, d: String): String =
-    cachedFixture(s"bm25base:$d") {
-      val dir = java.nio.file.Files.createTempDirectory("graft-bm25-base").toString
-      TextAnalysis.buildTextIndex(new graft.store.TableStore(s, dir), "fts_g",
-        docs(s, d).filter(col("doc_id") < 250))
-      dir
-    }
-
-  /** Recursive file-tree copy (the store fixtures are small local trees;
-    * copying is milliseconds next to the Spark jobs a rebuild costs). */
-  private def copyTree(src: java.nio.file.Path, dst: java.nio.file.Path): Unit = {
-    import java.nio.file.{Files, Path}
-    val walk = Files.walk(src)
-    try walk.forEach { p: Path =>
-      val t = dst.resolve(src.relativize(p).toString)
-      if (Files.isDirectory(p)) Files.createDirectories(t)
-      else Files.copy(p, t, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      ()
-    } finally walk.close()
-  }
-
-  /** A fresh mutable copy of the grow/refresh base index store. */
-  private def bm25GrowStore(s: SparkSession, d: String, prefix: String): graft.store.TableStore = {
-    val dir = java.nio.file.Files.createTempDirectory(prefix)
-    copyTree(java.nio.file.Path.of(bm25BaseIndexDir(s, d)), dir)
-    new graft.store.TableStore(s, dir.toString)
-  }
-
   /** Per-process BASE LSH dedup index store (same fixture class as
     * [[bm25BaseIndexDir]], r20 optimization round): the archive index the
     * incremental-ingest gates probe/grow is corpus-deterministic input
@@ -4197,378 +369,31 @@ object Queries {
     * JVM per (table, cutoff); every invocation COPIES the tree before
     * touching it, so the cached base stays pristine and the gates' appends
     * land in their own copy. */
-  private def lshBaseIndexDir(s: SparkSession, d: String, table: String,
-      cutoff: Int): String =
-    cachedFixture(s"lshbase:$d:$table:$cutoff") {
+  private[graft] def lshBaseIndex(table: String, cutoff: Int): Fixture[String] =
+    Fixture(s"lshbase:$table:$cutoff") { (s, d) =>
       val dir = java.nio.file.Files.createTempDirectory("graft-lsh-base").toString
       graft.ext.Dedup.buildLshIndex(new graft.store.TableStore(s, dir), table,
         docs(s, d).filter(col("doc_id") < cutoff), "doc_id", "text")
       dir
     }
 
-  /** A fresh mutable copy of a cached base LSH index store. */
-  private def lshIndexStore(s: SparkSession, d: String, table: String,
-      cutoff: Int, prefix: String): graft.store.TableStore = {
-    val dir = java.nio.file.Files.createTempDirectory(prefix)
-    copyTree(java.nio.file.Path.of(lshBaseIndexDir(s, d, table, cutoff)), dir)
-    new graft.store.TableStore(s, dir.toString)
-  }
-
-  /** Per-process STAGED SOURCE WAREHOUSE for `o4_runner_e2e` (fixture
-    * class, r20 optimization round): the three source tables the Runner
-    * reads are corpus-deterministic staging — the operator the gate
-    * certifies is the Runner's classify/dispatch/copy/upsert/ledger work
-    * against a fresh TARGET store, which still runs fully per invocation.
-    * The source store is read-only during the run, but each invocation
-    * still gets its own copy for isolation. */
-  private def o4SourceWarehouseDir(s: SparkSession, d: String): String =
-    cachedFixture(s"o4src:$d") {
-      val dir = java.nio.file.Files.createTempDirectory("graft-o4-src-base").toString
-      val srcStore = new graft.store.TableStore(s, dir)
-      srcStore.atomicOverwrite("events_cu", eventsWithUpdateTs(s, d))
-      srcStore.atomicOverwrite("events_plain", events(s, d))
-      srcStore.atomicOverwrite("customer", customer(s, d))
-      dir
-    }
-
-  /** Per-process parquet materialization of a corpus-deterministic DERIVED
-    * frame SHARED by several gates (r20 wave 2 — the same fixture class as
-    * the index/store caches above): the frame is built once per JVM by the
-    * exact same builder the gates called inline, written to a temp parquet
-    * dir, and each consumer gate re-reads it as a plain scan. Only frames
-    * that are (a) bit-deterministic and (b) certified by their OWN gate (or
-    * pure input staging) are cached this way — the operator each consuming
-    * gate certifies still runs fresh per invocation, and a fresh JVM
-    * (the driver's Verify) still pays and certifies every build once. */
-  private def cachedFrameDir(s: SparkSession, key: String, prefix: String)(
-      build: => DataFrame): String =
-    cachedFixture(s"frame:$key") {
-      val dir = java.nio.file.Files.createTempDirectory(prefix).toString
-      build.write.mode("overwrite").parquet(dir)
-      dir
-    }
-
-  /** [[partCoOccurrence]] for the four co-occurrence graph gates: the
-    * shared derived edge list (its derivation is mirrored as one constant
-    * CTE prefix in the oracles and certified through every consumer's
-    * hash), built once per JVM instead of once per gate. */
-  private def partCoocFixture(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(cachedFrameDir(s, s"partcooc:$d", "graft-fix-cooc")(
-      partCoOccurrence(s, d)))
-
-  /** [[eventTransitions]] for the six transition-digraph gates. */
-  private def eventTransitionsFixture(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(cachedFrameDir(s, s"evtrans:$d", "graft-fix-etr")(
-      eventTransitions(s, d)))
+  private[graft] val lshCorpusIndexDir = lshBaseIndex("corpus_lsh", 250)
 
   /** Near-dup clusters (jaccardPairs → connectedComponents, the
     * `dedup_clusters` operator — certified by that gate, which still runs
     * the eager fixpoint fresh) shared as INPUT by
     * `sampling_split_cluster_safe` and `pipeline_corpus_select_fuzzy`. */
-  private def jaccardClustersFixture(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(cachedFrameDir(s, s"jacclusters:$d", "graft-fix-jcl")(
+  private[graft] val jaccardClustersFixture =
+    Fixture.frame("jacclusters", "graft-fix-jcl") { (s, d) =>
       Dedup.connectedComponents(
-        Dedup.jaccardPairs(docs(s, d), "doc_id", "text", 3, 0.8), "doc_a", "doc_b")))
-
-  /** NB predictions (the `text_nb_classify` operator — certified there,
-    * fresh there) shared as INPUT by `eval_nb_report`, whose own operator
-    * is the classification report. */
-  private def nbPredsFixture(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(cachedFrameDir(s, s"nbpreds:$d", "graft-fix-nb") {
-      val dd = docs(s, d)
-      TextAnalysis.nbClassify(dd.filter(col("doc_id") % 2 === 0),
-        dd.filter(col("doc_id") % 2 === 1))
-    })
-
-  /** langId predictions (the `text_langid` operator — certified there,
-    * fresh there) shared as INPUT by `eval_langid_kappa`, whose own
-    * operator is Cohen's kappa. */
-  private def langIdPredsFixture(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(cachedFrameDir(s, s"langid:$d", "graft-fix-lid")(
-      TextAnalysis.langId(docs(s, d))))
-
-  /** stream_correlated's pre-flight band guard (one batch aggregation over
-    * the error slice) — corpus-deterministic setup, asserted once per JVM;
-    * the streaming range-correlation itself is the gate's operator. */
-  private def correlatedBandGuard(s: SparkSession, d: String): Unit = {
-    cachedFixture[java.lang.Boolean](s"bandguard:$d") {
-      graft.ops.Ops.assertBandCardinality(
-        graft.io.Tables.load(s, d, "events").filter(col("event_type") === "error"),
-        "ts", java.time.Duration.ofSeconds(60), minRows = 1000L)
-      java.lang.Boolean.TRUE
+        Dedup.jaccardPairs(docs(s, d), "doc_id", "text", 3, 0.8), "doc_a", "doc_b")
     }
-    ()
-  }
-
-  /** [[corpusSelect]] (the `pipeline_corpus_select` operator — certified
-    * there, fresh there) shared as INPUT by the sampled/packed capstones,
-    * whose own operators are hashFraction / packTokenBudget. */
-  private def corpusSelectFixture(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(cachedFrameDir(s, s"corpussel:$d", "graft-fix-csel")(
-      corpusSelect(s, d)))
-
-  /** Hashed features + labels for `pipeline_quality_classifier` — input
-    * staging for the operator the gate certifies (trainLogistic's routed
-    * IRLS fit, which runs fresh per invocation). */
-  private def qualityFeaturesFixture(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(cachedFrameDir(s, s"qfeats:$d", "graft-fix-qf") {
-      val doc = docs(s, d).filter(col("text").isNotNull)
-      def cnt(t: String) = size(filter(split(col("text"), "\\s+"), w => w === t))
-      val labeled = doc.select(col("doc_id"),
-        (cnt("table") > cnt("row")).cast("int").as("label"))
-      Classifier.hashedFeatures(doc, "doc_id", "text", 128)
-        .join(labeled, Seq("doc_id"))
-    })
-
-  /** The 16 learned BPE merges (the `text_bpe_merges` operator — certified
-    * there, fresh there) shared as INPUT by `text_bpe_contract`, whose own
-    * operator is segmentation + the conservation check. Collected rows
-    * (16 of them), not a parquet dir. */
-  private def bpeMergesFixture(s: SparkSession, d: String): DataFrame = {
-    val (rows, schema) = cachedFixture[(Seq[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType)](s"bpemerges:$d") {
-      val m = TextAnalysis.bpeTrain(docs(s, d).filter(col("text").isNotNull),
-        "doc_id", "text", 16)
-      (m.collect().toSeq, m.schema)
-    }
-    import scala.jdk.CollectionConverters._
-    s.createDataFrame(rows.asJava, schema)
-  }
-
-  /** Per-process persisted IVF index stores for the `sim_ann_*` gates
-    * (exactly the [[bm25FullIndexDir]] pattern, applied to the vector
-    * member of the persisted-index family): the build is
-    * corpus-deterministic certification/index cost that amortizes in
-    * production; the search gates consume the store READ-ONLY, and the
-    * grow gate copies the base tree before appending. */
-  private def ivfBaseIndexDir(s: SparkSession, d: String, kind: String): String =
-    cachedFixture(s"ivf:$kind:$d") {
-      val dir = java.nio.file.Files.createTempDirectory(s"graft-ivf-$kind-base").toString
-      val store = new graft.store.TableStore(s, dir)
-      val e = emb(s, d)
-      kind match {
-        case "plain" =>
-          Similarity.buildIndex(store, "ivf_idx", e, "vec_id", "embedding", nlist = 16)
-        case "sq" =>
-          Similarity.buildIndexQuantized(store, "ivf_sq", e, "vec_id", "embedding", nlist = 16)
-        case "rr" =>
-          Similarity.buildIndexQuantized(store, "ivf_rr", e, "vec_id", "embedding", nlist = 16)
-        case "grow" =>
-          Similarity.buildIndex(store, "ivf_g", e.filter(col("vec_id") < 300),
-            "vec_id", "embedding", nlist = 16)
-        case other => throw new IllegalArgumentException(s"unknown ivf fixture kind: $other")
-      }
-      dir
-    }
-
-  /** A fresh mutable copy of the cached grow-base IVF index store. */
-  private def ivfGrowStore(s: SparkSession, d: String): graft.store.TableStore = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-grow")
-    copyTree(java.nio.file.Path.of(ivfBaseIndexDir(s, d, "grow")), dir)
-    new graft.store.TableStore(s, dir.toString)
-  }
-
-  // ---- per-process COMMITTED STORE fixtures for the o7–o13 read gates ----
-  // Each gate's commits are corpus-deterministic staging; the operator the
-  // gate certifies is the READ side (time travel, stats/partition/z-order
-  // pruning, snapshot isolation, generation diff, change feed), which runs
-  // fresh per invocation against the cached store — READ-ONLY, so no
-  // per-invocation copy is needed. The write path stays certified by the
-  // first build per JVM (the driver's Verify) and by TableStoreSpec.
-
-  private def o7StoreDir(s: SparkSession, d: String): String =
-    cachedFixture(s"o7:$d") {
-      val dir = java.nio.file.Files.createTempDirectory("graft-o7-base").toString
-      val store = new graft.store.TableStore(s, dir,
-        graft.store.CommitMode.Pointer, keepGenerations = 3)
-      val ord = orders(s, d).select("o_orderkey", "o_custkey", "o_orderstatus")
-      store.atomicOverwrite("ord_tt", ord.filter(col("o_orderkey") % 2 === 0))
-      store.atomicOverwrite("ord_tt", ord.filter(col("o_orderkey") % 2 === 1))
-      store.append("ord_tt", ord.filter(col("o_orderkey") % 10 === 0))
-      dir
-    }
-
-  private def o8StoreDir(s: SparkSession, d: String): String =
-    cachedFixture(s"o8:$d") {
-      val dir = java.nio.file.Files.createTempDirectory("graft-o8-base").toString
-      val store = new graft.store.TableStore(s, dir,
-        graft.store.CommitMode.Pointer, statsColumns = Seq("o_totalprice"))
-      store.atomicOverwriteClustered("ord_sk",
-        orders(s, d).select("o_orderkey", "o_custkey", "o_totalprice"),
-        Seq("o_totalprice"), 16)
-      dir
-    }
-
-  private def o9StoreDir(s: SparkSession, d: String): String =
-    cachedFixture(s"o9:$d") {
-      val dir = java.nio.file.Files.createTempDirectory("graft-o9-base").toString
-      val store = new graft.store.TableStore(s, dir,
-        graft.store.CommitMode.Pointer, statsColumns = Seq("o_totalprice"))
-      val ord = orders(s, d).select(col("o_orderkey"), col("o_custkey"),
-          col("o_totalprice"), trunc(col("o_orderdate"), "month").as("o_month"))
-        .repartitionByRange(4, col("o_totalprice")).sortWithinPartitions("o_totalprice")
-      store.atomicOverwrite("ord_pp", ord, partitionBy = Seq("o_month"))
-      dir
-    }
-
-  /** o10's staged store plus the published snapshot id the gate reads. */
-  private def o10Fixture(s: SparkSession, d: String): (String, Long) =
-    cachedFixture[(String, java.lang.Long)](s"o10:$d") {
-      val dir = java.nio.file.Files.createTempDirectory("graft-o10-base").toString
-      val store = new graft.store.TableStore(s, dir,
-        graft.store.CommitMode.Pointer, keepGenerations = 3)
-      val cust = customer(s, d).select("c_custkey", "c_name", "c_acctbal")
-      val ord = orders(s, d).select("o_orderkey", "o_custkey", "o_totalprice")
-      store.atomicOverwrite("cust_s", cust)
-      store.atomicOverwrite("ord_s", ord)
-      val snap = store.publishSnapshot(Seq("cust_s", "ord_s"))
-      // the next run is mid-flight: one table already republished
-      store.atomicOverwrite("cust_s", cust.limit(3))
-      (dir, Long.box(snap))
-    } match { case (dir, snap) => (dir, snap.longValue()) }
-
-  private def o11StoreDir(s: SparkSession, d: String): String =
-    cachedFixture(s"o11:$d") {
-      val dir = java.nio.file.Files.createTempDirectory("graft-o11-base").toString
-      val store = new graft.store.TableStore(s, dir,
-        graft.store.CommitMode.Pointer, statsColumns = Seq("o_orderkey", "o_custkey"))
-      store.atomicOverwriteZOrdered("ord_z2",
-        orders(s, d).select("o_orderkey", "o_custkey", "o_totalprice"),
-        "o_orderkey", "o_custkey", 16)
-      dir
-    }
-
-  private def o12StoreDir(s: SparkSession, d: String): String =
-    cachedFixture(s"o12:$d") {
-      val dir = java.nio.file.Files.createTempDirectory("graft-o12-base").toString
-      val store = new graft.store.TableStore(s, dir,
-        graft.store.CommitMode.Pointer, keepGenerations = 3)
-      val ord = orders(s, d).select("o_orderkey", "o_custkey", "o_orderstatus")
-      store.atomicOverwrite("ord_d", ord.filter(col("o_orderkey") % 2 === 0))
-      store.atomicOverwrite("ord_d",
-        ord.filter(col("o_orderkey") % 2 === 1 || col("o_orderkey") % 4 === 0))
-      dir
-    }
-
-  private def o12pStoreDir(s: SparkSession, d: String): String =
-    cachedFixture(s"o12p:$d") {
-      val dir = java.nio.file.Files.createTempDirectory("graft-o12p-base").toString
-      val store = new graft.store.TableStore(s, dir,
-        graft.store.CommitMode.Pointer, keepGenerations = 3)
-      val ord = orders(s, d).select(col("o_orderkey"), col("o_custkey"),
-        col("o_orderstatus"), trunc(col("o_orderdate"), "month").as("o_month"))
-      // bounded driver collect: distinct months of the fixture's ~7-year
-      // order span (≤ ~84 rows of metadata)
-      val months = ord.select("o_month").distinct().collect()
-        .map(_.getDate(0).toLocalDate).sortBy(_.toString).toSeq
-      store.overwriteDatePartitions("ord_pd", ord, "o_month", months)
-      val march = java.time.LocalDate.of(1997, 3, 1)
-      store.overwriteDatePartitions("ord_pd",
-        ord.filter(col("o_month") === java.sql.Date.valueOf(march) &&
-          col("o_orderkey") % 2 === 0),
-        "o_month", Seq(march))
-      dir
-    }
-
-  /** o13's staged store plus the consumer cursor (the generation published
-    * before the two commits the change feed must drain). */
-  private def o13Fixture(s: SparkSession, d: String): (String, Long) =
-    cachedFixture[(String, java.lang.Long)](s"o13:$d") {
-      val dir = java.nio.file.Files.createTempDirectory("graft-o13-base").toString
-      val store = new graft.store.TableStore(s, dir,
-        graft.store.CommitMode.Pointer, keepGenerations = 4)
-      val ord = orders(s, d).select("o_orderkey", "o_custkey", "o_orderstatus")
-      store.atomicOverwrite("ord_f", ord.filter(col("o_orderkey") % 3 === 0))
-      val cursor = store.generations("ord_f").head
-      store.atomicOverwrite("ord_f", ord.filter(col("o_orderkey") % 3 <= 1))
-      store.atomicOverwrite("ord_f", ord.filter(col("o_orderkey") % 3 >= 1))
-      (dir, Long.box(cursor))
-    } match { case (dir, cur) => (dir, cur.longValue()) }
-
-  // ---- per-process STAGED STREAM INPUT fixtures ----
-  // Input staging (writing the deterministic source files a stream drains)
-  // is not the streaming operator the gates certify; the streams themselves
-  // (checkpoint, state, sink/store) run fresh per invocation. Staged dirs
-  // are consumed READ-ONLY by the file stream source.
-
-  /** stream_cdc_apply's staged change files (base images + seq=1 updates). */
-  private def cdcInputDir(s: SparkSession, d: String): String =
-    cachedFixture(s"cdcin:$d") {
-      val dir = java.nio.file.Files.createTempDirectory("graft-cdc-in").toString
-      val base = events(s, d).withColumn("seq", lit(0L))
-      base.write.parquet(s"$dir/f0")
-      base.filter(col("event_id") % 10 === 0)
-        .withColumn("value", col("value") + 100)
-        .withColumn("seq", lit(1L))
-        .write.parquet(s"$dir/f1")
-      dir
-    }
-
-  /** stream_cms_merge's staged corpus halves. */
-  private def cmsInputDir(s: SparkSession, d: String): String =
-    cachedFixture(s"cmsin:$d") {
-      val dir = java.nio.file.Files.createTempDirectory("graft-cms-in").toString
-      val doc = docs(s, d)
-      doc.filter(pmod(col("doc_id"), lit(2)) === 0).coalesce(1)
-        .write.parquet(s"$dir/h0")
-      doc.filter(pmod(col("doc_id"), lit(2)) === 1).coalesce(1)
-        .write.parquet(s"$dir/h1")
-      dir
-    }
-
-  /** stream_ingest_dedup's staged incoming batches (docs ≥ 250 as two
-    * single-file slices, one micro-batch each under maxFilesPerTrigger=1). */
-  private def ingestInputDir(s: SparkSession, d: String): String =
-    cachedFixture(s"ingestin:$d") {
-      val root = java.nio.file.Files.createTempDirectory("graft-ingest-base")
-      val in = root.resolve("in")
-      java.nio.file.Files.createDirectories(in)
-      val doc = docs(s, d)
-      def stage(df: DataFrame, name: String): Unit = {
-        val w = root.resolve(s"${name}_w")
-        df.coalesce(1).write.mode("overwrite").parquet(w.toString)
-        val st = java.nio.file.Files.list(w)
-        try st.forEach { p =>
-          if (p.toString.endsWith(".parquet"))
-            java.nio.file.Files.copy(p, in.resolve(s"$name.parquet"))
-        } finally st.close()
-      }
-      stage(doc.filter(col("doc_id") >= 250 && col("doc_id") < 375), "b0")
-      stage(doc.filter(col("doc_id") >= 375), "b1")
-      in.toString
-    }
-
-  /** stream_sessions' sentinel event (max(ts)+1d in the SOURCE's own ts
-    * representation) as a staged single parquet file, computed once per
-    * JVM — the drain-advancing append is a file copy per invocation. */
-  private def sessionSentinelFile(s: SparkSession, d: String): java.nio.file.Path =
-    java.nio.file.Path.of(cachedFixture[String](s"sentinel:$d") {
-      val dir = java.nio.file.Files.createTempDirectory("graft-sess-sent")
-      val src = s.read.parquet(s"$d/events.parquet")
-      val tsType = src.schema("ts").dataType
-      val plusDay = tsType match {
-        case org.apache.spark.sql.types.LongType =>
-          max(col("ts")) + lit(86400L * 1000000000L) // ns-epoch long
-        case _ => (max(col("ts")) + expr("INTERVAL 1 DAY")).cast(tsType)
-      }
-      src.agg(plusDay.as("ts")).select(
-          lit(-1L).as("event_id"), col("ts"),
-          lit(-1L).as("user_id"), lit("sentinel").as("event_type"),
-          lit(0.0).as("value"), lit(null).cast("string").as("props"))
-        .coalesce(1).write.parquet(dir.resolve("w").toString)
-      val st = java.nio.file.Files.list(dir.resolve("w"))
-      val part = try st.filter(p => p.toString.endsWith(".parquet"))
-        .findFirst().orElseThrow(() =>
-          new IllegalStateException("sentinel write produced no parquet part"))
-      finally st.close()
-      part.toString
-    })
 
   // =========================================================================
   // DuckDB oracles — same column names, deterministic values
   // =========================================================================
 
-  private val trigramCte =
+  private[graft] val trigramCte =
     """WITH t AS (SELECT doc_id, regexp_split_to_array(text, '\s+') AS tk FROM documents),
       |s AS (SELECT doc_id,
       |             CASE WHEN len(tk) >= 3
@@ -4581,7 +406,7 @@ object Queries {
     * = docs ≥ 250, t = 0.8) — shared by the batch (`dedup_incremental_fuzzy`)
     * and streaming (`stream_ingest_dedup`) ingest-dedup gates, which must
     * land the identical survivor set. */
-  private lazy val incrementalFuzzySql =
+  private[graft] lazy val incrementalFuzzySql =
     s"""$trigramCte,
        |hits AS (SELECT DISTINCT b.doc_id
        |           FROM s b JOIN s c ON b.doc_id >= 250 AND c.doc_id < 250
@@ -4591,33 +416,15 @@ object Queries {
        | WHERE doc_id >= 250 AND text IS NOT NULL
        |   AND doc_id NOT IN (SELECT doc_id FROM hits)""".stripMargin
 
-  /** Shared CTE chain for the duplicate-SPAN oracles: positional 8-gram
-    * strings → grams in ≥ 2 distinct docs → marked 1-based start positions →
-    * gaps-and-islands → per-island spans `sp(doc_id, s, e)` in the Spark
-    * output's 0-based inclusive coordinates. DuckDB compares gram STRINGS
-    * where Spark compares gram hashes — identical modulo 64-bit collisions,
-    * the shingle-family contract. */
-  private val spanIslandCtes =
-    """WITH t AS (SELECT doc_id, text, regexp_split_to_array(text, '\s+') AS tk FROM documents),
-      |p AS (SELECT doc_id, tk, unnest(range(1, len(tk) - 6)) AS i FROM t WHERE len(tk) >= 8),
-      |g AS (SELECT doc_id, i, array_to_string(tk[i:i+7], chr(1)) AS gram FROM p),
-      |dup AS (SELECT gram FROM g GROUP BY gram HAVING count(DISTINCT doc_id) >= 2),
-      |m AS (SELECT g.doc_id, g.i FROM g JOIN dup USING (gram)),
-      |x AS (SELECT doc_id, i, max(i + 7) OVER (PARTITION BY doc_id ORDER BY i
-      |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pe FROM m),
-      |y AS (SELECT doc_id, i, CASE WHEN pe IS NULL OR i > pe + 1 THEN 1 ELSE 0 END AS brk FROM x),
-      |z AS (SELECT doc_id, i, sum(brk) OVER (PARTITION BY doc_id ORDER BY i) AS isl FROM y),
-      |sp AS (SELECT doc_id, min(i) - 1 AS s, max(i) + 6 AS e FROM z GROUP BY doc_id, isl)""".stripMargin
-
   /** Tokenized-documents CTE (`t`) — same definition `trigramCte` opens with,
     * split out so oracles that already carry the trigram CTEs can append
     * [[scCte]] without a duplicate `t`. */
-  private val tCte =
+  private[graft] val tCte =
     """t AS (SELECT doc_id, regexp_split_to_array(text, '\s+') AS tk FROM documents)"""
 
   /** Language-ID marker-score CTE (`sc`, reads `t`) and the argmax CASE —
     * shared by the `text_langid` oracle and both corpus-pipeline oracles. */
-  private val scCte =
+  private[graft] val scCte =
     """sc AS (SELECT doc_id,
       |         len(list_filter(tk, x -> list_contains(['the','a','and','is','of'], x))) AS s_en,
       |         len(list_filter(tk, x -> list_contains(['der','die','das','und','ist'], x))) AS s_de,
@@ -4626,9 +433,9 @@ object Queries {
       |         len(list_filter(tk, x -> list_contains(['的','是','了','在','和'], x))) AS s_zh
       |    FROM t)""".stripMargin
 
-  private val langScoreCtes = s"$tCte,\n$scCte"
+  private[graft] val langScoreCtes = s"$tCte,\n$scCte"
 
-  private val predLangCase =
+  private[graft] val predLangCase =
     """CASE WHEN s_en >= s_de AND s_en >= s_fr AND s_en >= s_es AND s_en >= s_zh THEN 'en'
       |            WHEN s_de >= s_fr AND s_de >= s_es AND s_de >= s_zh THEN 'de'
       |            WHEN s_fr >= s_es AND s_fr >= s_zh THEN 'fr'
@@ -4637,7 +444,7 @@ object Queries {
 
   /** Exact brute-force cosine top-k (k=5, queries = vec_id < 10) — oracle for
     * both `sim_topk` and the full-probe (`nprobe = nlist`) `sim_ann_ivf`. */
-  private val rangeJoinEventsSql =
+  private[graft] val rangeJoinEventsSql =
     """SELECT c.event_id AS click_id, e.event_id AS error_id
       |  FROM events c, events e
       | WHERE c.event_type = 'click' AND e.event_type = 'error'
@@ -4646,7 +453,7 @@ object Queries {
   /** Gap-session rollup (30-min gap, strictly-greater break) — shared by the
     * batch window sessionizer and the streaming flatMapGroupsWithState
     * drain, which must agree exactly. */
-  private val userSessionsSql =
+  private[graft] val userSessionsSql =
     """WITH s AS (
       |  SELECT user_id, ts, event_id,
       |         CASE WHEN lag(ts) OVER w IS NULL
@@ -4665,7 +472,7 @@ object Queries {
     * (brute-force pairs → undirected reach → min-label components `cl`) —
     * the oracle counterpart of cosinePairs + connectedComponents, used by
     * the SemDeDup and hard-negative gates. */
-  private val embClusterCtes =
+  private[graft] val embClusterCtes =
     """WITH RECURSIVE p AS (
       |  SELECT a.vec_id AS id_a, b.vec_id AS id_b
       |    FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
@@ -4678,40 +485,6 @@ object Queries {
       |  SELECT e2.src, r.label FROM e e2 JOIN reach r ON e2.dst = r.node),
       |cl AS (SELECT node, min(label) AS cluster FROM reach GROUP BY node)""".stripMargin
 
-  /** `ts_ewma_daily` oracle: the identical truncated-kernel EWMA
-    * ([[graft.ext.TimeSeries.truncatedEwma]] at alpha=0.3, 8 taps) with the
-    * coefficient chain computed HERE by the same IEEE product chain and
-    * interpolated as shortest-roundtrip literals (Double.toString), so both
-    * engines evaluate bit-identical tap sums. */
-  private val ewmaDailySql: String = {
-    val coefs = Array.iterate(0.3, 8)(_ * (1.0 - 0.3))
-    def tap(j: Int) = if (j == 0) "x" else s"lag(x, $j) OVER w"
-    val num = (0 until 8).map(j =>
-      s"(CASE WHEN ${tap(j)} IS NOT NULL THEN ${tap(j)} * ${coefs(j)} ELSE 0.0 END)")
-      .mkString(" + ")
-    val den = (0 until 8).map(j =>
-      s"(CASE WHEN ${tap(j)} IS NOT NULL THEN ${coefs(j)} ELSE 0.0 END)")
-      .mkString(" + ")
-    s"""WITH daily AS (SELECT user_id, CAST(ts AS DATE) AS day,
-       |                      sum(CAST(value AS DECIMAL(18,2))) AS tv
-       |                 FROM events GROUP BY 1, 2),
-       |l AS (SELECT user_id, day, CAST(tv AS DOUBLE) AS x FROM daily)
-       |SELECT user_id, day, round(x, 2) AS daily_value,
-       |       round(($num) / ($den), 6) AS ewma
-       |  FROM l WINDOW w AS (PARTITION BY user_id ORDER BY day)""".stripMargin
-  }
-
-  /** Shared co-occurrence-graph CTEs (`graph_triangles` /
-    * `graph_link_prediction`): parts sharing an order, support ≥ 2,
-    * canonical `a < b`, plus node degrees — ONE text so the two gates'
-    * edge derivations cannot fork. */
-  private val partCoocCtes =
-    """op AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
-      |e AS (SELECT x.pk AS a, y.pk AS b FROM op x JOIN op y ON x.ok = y.ok AND x.pk < y.pk
-      |       GROUP BY 1, 2 HAVING count(*) >= 2),
-      |deg AS (SELECT node, count(*) AS dg FROM (
-      |          SELECT a AS node FROM e UNION ALL SELECT b FROM e) GROUP BY 1)""".stripMargin
-
   /** `sim_retrieval_ndcg` oracle: the identical brute-force ranking +
     * DCG/IDCG arithmetic with the discount weights and IDCG prefix sums
     * interpolated from [[graft.ext.Similarity.ndcgWeights]] — both engines
@@ -4720,7 +493,7 @@ object Queries {
     * smoothing folded so only SEEN tokens join) — ends at
     * `sc(doc_id, gold, lang, s)`; used by the classify gate and the
     * per-class report gate so the two cannot fork. */
-  private val nbScoreCtes: String =
+  private[graft] val nbScoreCtes: String =
     """tr AS (SELECT lang, unnest(regexp_split_to_array(text, '\s+')) AS w
       |              FROM documents WHERE doc_id % 2 = 0 AND text IS NOT NULL),
       |cnt AS (SELECT lang, w, count(*) AS c FROM tr GROUP BY 1, 2),
@@ -4749,75 +522,12 @@ object Queries {
       |         FROM sp CROSS JOIN vv CROSS JOIN dt
       |         LEFT JOIN hits ON sp.doc_id = hits.doc_id AND sp.lang = hits.lang)""".stripMargin
 
-  /** 5 k-core peel rounds (k=3) over the part co-occurrence graph,
-    * unrolled as chained MATERIALIZED CTEs (the bpe_merges precedent —
-    * without MATERIALIZED each round's three references to the prior
-    * round re-INLINE the whole chain, a 3⁸ plan blowup that hangs the
-    * oracle; materialized, the chain runs in 0.1 s) — each round
-    * re-derives degrees over the prior round's edge set and keeps only
-    * >= k endpoints, exactly the operator's loop. */
-  private val kcoreSql: String = {
-    val k = 3
-    val head =
-      """WITH op AS MATERIALIZED (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
-        |e0r AS MATERIALIZED (SELECT a.pk AS pa, b.pk AS pb FROM op a JOIN op b
-        |         ON a.ok = b.ok AND a.pk < b.pk GROUP BY 1, 2 HAVING count(*) >= 2),
-        |e0 AS MATERIALIZED (SELECT DISTINCT pa AS a, pb AS b FROM e0r)""".stripMargin
-    val rounds = (1 to 5).map { i =>
-      s""",
-         |d$i AS MATERIALIZED (SELECT node, count(*) AS dg FROM (SELECT a AS node FROM e${i - 1}
-         |        UNION ALL SELECT b FROM e${i - 1}) GROUP BY 1),
-         |n$i AS MATERIALIZED (SELECT node FROM d$i WHERE dg >= $k),
-         |e$i AS MATERIALIZED (SELECT e${i - 1}.a, e${i - 1}.b FROM e${i - 1}
-         |        JOIN n$i x ON e${i - 1}.a = x.node
-         |        JOIN n$i y ON e${i - 1}.b = y.node)""".stripMargin
-    }.mkString
-    head + rounds +
-      "\nSELECT node, count(*) AS degree FROM (SELECT a AS node FROM e5" +
-      "\nUNION ALL SELECT b FROM e5) GROUP BY 1"
-  }
-
-  private val ndcgSql: String = {
-    val (w, i) = graft.ext.Similarity.ndcgWeights(10)
-    val wLit = w.mkString("[", ", ", "]")
-    val iLit = i.mkString("[", ", ", "]")
-    s"""WITH q AS (SELECT vec_id AS query_id, label AS qlabel, embedding
-       |             FROM embeddings WHERE vec_id < 20),
-       |sc AS (SELECT q.query_id, q.qlabel, c.vec_id AS neighbor_id,
-       |              list_cosine_similarity(q.embedding::DOUBLE[], c.embedding::DOUBLE[]) AS cos,
-       |              CASE WHEN c.label = q.qlabel THEN 1 ELSE 0 END AS rel
-       |         FROM q JOIN embeddings c ON q.query_id <> c.vec_id),
-       |top AS (SELECT query_id, qlabel, rel,
-       |               row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rnk
-       |          FROM sc QUALIFY rnk <= 10),
-       |d AS (SELECT query_id, qlabel,
-       |             sum(CAST(rel AS DOUBLE) * ($wLit)[rnk]) AS dcg
-       |        FROM top GROUP BY 1, 2),
-       |lc AS (SELECT label AS qlabel, count(*) AS lcnt FROM embeddings GROUP BY 1)
-       |SELECT query_id,
-       |       round(CASE WHEN lcnt > 1 THEN dcg / ($iLit)[CAST(LEAST(lcnt - 1, 10) AS INT)] END, 6) AS ndcg
-       |  FROM d JOIN lc USING (qlabel)""".stripMargin
-  }
-
-  private val bruteForceTopKSql =
-    """SELECT query_id, neighbor_id FROM (
-      |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-      |         row_number() OVER (PARTITION BY q.vec_id
-      |             ORDER BY list_cosine_similarity(q.embedding::DOUBLE[], c.embedding::DOUBLE[]) DESC,
-      |                      c.vec_id) AS rn
-      |    FROM embeddings q JOIN embeddings c ON q.vec_id <> c.vec_id
-      |   WHERE q.vec_id < 10) x
-      | WHERE rn <= 5""".stripMargin
-
-  private val jaccardCtes =
+  private[graft] val jaccardCtes =
     s"""$trigramCte,
        |j AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
        |             len(list_intersect(a.sh, b.sh))::DOUBLE
        |               / len(list_distinct(a.sh || b.sh)) AS jaccard
        |        FROM s a JOIN s b ON a.doc_id < b.doc_id)""".stripMargin
-
-  private val jaccardPairsSql =
-    s"$jaccardCtes\nSELECT doc_a, doc_b, jaccard FROM j WHERE jaccard >= 0.8"
 
   /** Duplicate clusters = transitive closure of the near-dup pair graph,
     * labeled with the min reachable doc id (DuckDB recursive CTE ≡ the
@@ -4825,7 +535,7 @@ object Queries {
   /** Recursive transitive-closure CTE chain over the exact Jaccard pairs —
     * ends at `reach(node, label)`; shared by the clusters gate and the
     * cluster-safe split gate. */
-  private val clusterCtes =
+  private[graft] val clusterCtes =
     s"""${jaccardCtes.replaceFirst("WITH ", "WITH RECURSIVE ")},
        |p AS (SELECT doc_a, doc_b FROM j WHERE jaccard >= 0.8),
        |e AS (SELECT doc_a AS src, doc_b AS dst FROM p
@@ -4847,7 +557,7 @@ object Queries {
     * oracles — ONE text, so `graph_pagerank`/`graph_trustrank`/`graph_hits`
     * provably rank the same graph (a tie-break fix applied to one cannot
     * silently diverge the others). */
-  private val graphHeadSql =
+  private[graft] val graphHeadSql =
     """WITH s AS (SELECT event_type,
       |             lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS nxt
       |             FROM events),
@@ -4856,47 +566,11 @@ object Queries {
       |nodes AS MATERIALIZED (SELECT src AS node FROM e UNION SELECT dst FROM e),
       |nn AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM nodes)""".stripMargin
 
-  /** `graph_bfs_distance` oracle: the BFS rounds unrolled as chained
-    * min-union CTEs over the SAME `graphHeadSql` transition graph. */
-  private def bfsSql(seeds: Seq[String], rounds: Int): String = {
-    val list = seeds.map(x => s"'$x'").mkString(", ")
-    val steps = (1 to rounds).map { i =>
-      val p = i - 1
-      s"""d$i AS (SELECT node, min(dist) AS dist FROM (
-         |  SELECT node, dist FROM d$p
-         |  UNION ALL
-         |  SELECT e.dst AS node, d$p.dist + 1 AS dist FROM d$p JOIN e ON d$p.node = e.src) t
-         | GROUP BY node)""".stripMargin
-    }.mkString(",\n")
-    s"""$graphHeadSql,
-       |d0 AS (SELECT node, 0 AS dist FROM nodes WHERE node IN ($list)),
-       |$steps
-       |SELECT node, dist FROM d$rounds""".stripMargin
-  }
-
-  /** The `pipeline_web_graph` head: htmlLinks (shared list expression) →
-    * the shared canonicalization CTEs → the shared host CTE → host-level
-    * edge list with counted weights — ending in the `e`/`nodes`/`nn`
-    * relations [[rankSql]] consumes. Every stage is the same factored SQL
-    * its standalone gate uses, so no seam can fork. */
-  private val webGraphHeadSql =
-    s"""WITH $synthWebSql,
-       |lk AS (SELECT doc_id, $htmlLinksListExpr AS urls FROM wg),
-       |u AS (SELECT doc_id, unnest(urls) AS url FROM lk),
-       |$canonicalUrlCtes,
-       |cu AS (SELECT doc_id, $canonicalUrlExpr AS url FROM k),
-       |${urlHostSql(extra = ", url", src = "cu")},
-       |e AS MATERIALIZED (SELECT 'site' || (doc_id % 10) || '.example' AS src,
-       |        host AS dst, CAST(count(DISTINCT url) AS DOUBLE) AS w
-       |        FROM h GROUP BY 1, 2),
-       |nodes AS MATERIALIZED (SELECT src AS node FROM e UNION SELECT dst FROM e),
-       |nn AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM nodes)""".stripMargin
-
   /** PageRank/TrustRank rounds unrolled over ANY head producing CTEs
     * `e(src, dst, w)`, `nodes(node)`, `nn(n)` — `graphHeadSql` for the
     * event-transition gates, the web-graph head for the
     * `pipeline_web_graph` capstone. */
-  private def rankSql(seeds: Option[Seq[String]],
+  private[graft] def rankSql(seeds: Option[Seq[String]],
       graphHead: String = graphHeadSql): String = {
     val head =
       s"""$graphHead,
@@ -4939,77 +613,6 @@ object Queries {
     s"$head,\n$init,\n$rounds\nSELECT node, round(rank, 6) AS rank FROM r10"
   }
 
-  private val dedupClustersSql =
-    s"""$clusterCtes
-       |SELECT node AS doc_id, min(label) AS cluster_id FROM reach GROUP BY node""".stripMargin
-
-  /** `graph_hits` oracle: the 10 HITS rounds unrolled as chained
-    * MATERIALIZED CTEs over the same transition digraph as `rankSql` (raw
-    * merged weights, NOT out-normalized — HITS propagates endorsement, not
-    * a walk). Each round mirrors the operator's arithmetic exactly: grouped
-    * `sum(score·w)`, an L1 total, `coalesce(c, 0)/total` with the
-    * zero-total collapse as a CASE. */
-  private def hitsSql(rounds: Int): String = {
-    val head =
-      s"""$graphHeadSql,
-         |h0 AS MATERIALIZED (SELECT node, CAST(1.0 AS DOUBLE) / n AS hub FROM nodes, nn)""".stripMargin
-    val body = (1 to rounds).map { i =>
-      val p = i - 1
-      s"""ar$i AS (SELECT e.dst AS node, sum(h$p.hub * e.w) AS c
-         |           FROM h$p JOIN e ON h$p.node = e.src GROUP BY e.dst),
-         |at$i AS (SELECT coalesce(sum(c), CAST(0 AS DOUBLE)) AS t FROM ar$i),
-         |a$i AS MATERIALIZED (SELECT nodes.node,
-         |         CASE WHEN at$i.t = 0 THEN CAST(0 AS DOUBLE)
-         |              ELSE coalesce(ar$i.c, CAST(0 AS DOUBLE)) / at$i.t END AS authority
-         |         FROM nodes CROSS JOIN at$i LEFT JOIN ar$i ON nodes.node = ar$i.node),
-         |hr$i AS (SELECT e.src AS node, sum(a$i.authority * e.w) AS c
-         |           FROM a$i JOIN e ON a$i.node = e.dst GROUP BY e.src),
-         |ht$i AS (SELECT coalesce(sum(c), CAST(0 AS DOUBLE)) AS t FROM hr$i),
-         |h$i AS MATERIALIZED (SELECT nodes.node,
-         |         CASE WHEN ht$i.t = 0 THEN CAST(0 AS DOUBLE)
-         |              ELSE coalesce(hr$i.c, CAST(0 AS DOUBLE)) / ht$i.t END AS hub
-         |         FROM nodes CROSS JOIN ht$i LEFT JOIN hr$i ON nodes.node = hr$i.node)""".stripMargin
-    }.mkString(",\n")
-    s"""$head,
-       |$body
-       |SELECT h$rounds.node, round(h$rounds.hub, 6) AS hub,
-       |       round(a$rounds.authority, 6) AS authority
-       |  FROM h$rounds JOIN a$rounds ON h$rounds.node = a$rounds.node""".stripMargin
-  }
-
-  /** `graph_communities` oracle: the synchronous label-propagation rounds
-    * of [[graft.ext.Graphs.labelPropagation]] unrolled as chained
-    * MATERIALIZED CTEs over the same transition digraph. The undirected
-    * view mirrors the operator's construction EXACTLY (each merged
-    * directed edge seen from both endpoints then re-merged — so a
-    * self-loop's weight doubles in its own view, and a u→v plus v→u pair
-    * collapse additively); per round, per-label vote sums (exact — the
-    * weights are integer counts) and the max-weight / min-label argmax as
-    * a `row_number` pick. Labels are node ids (strings): no floats ever
-    * reach the output, so the gate hashes exactly with no rounding. */
-  private def lpaSql(rounds: Int): String = {
-    val head =
-      s"""$graphHeadSql,
-         |und AS MATERIALIZED (SELECT node, nbr, sum(w) AS w FROM (
-         |         SELECT src AS node, dst AS nbr, w FROM e
-         |         UNION ALL SELECT dst AS node, src AS nbr, w FROM e)
-         |       GROUP BY node, nbr),
-         |l0 AS MATERIALIZED (SELECT node, node AS label FROM nodes)""".stripMargin
-    val body = (1 to rounds).map { i =>
-      val p = i - 1
-      s"""v$i AS (SELECT u.node, l.label, sum(u.w) AS wsum
-         |          FROM und u JOIN l$p l ON u.nbr = l.node
-         |         GROUP BY u.node, l.label),
-         |l$i AS MATERIALIZED (SELECT node, label FROM (
-         |         SELECT node, label, row_number() OVER (PARTITION BY node
-         |                  ORDER BY wsum DESC, label ASC) AS rn FROM v$i)
-         |       WHERE rn = 1)""".stripMargin
-    }.mkString(",\n")
-    s"""$head,
-       |$body
-       |SELECT node, label AS community FROM l$rounds""".stripMargin
-  }
-
   /** `sim_kmeans_clusters` oracle: the Lloyd rounds of
     * [[graft.ext.Clustering.kmeansAssign]] unrolled as chained MATERIALIZED
     * CTEs (the `rankSql` fixpoint technique). Each round mirrors the
@@ -5019,7 +622,7 @@ object Queries {
     * driver-side |c|^2 loop and the codegen'd `centroid_dots`), recentered
     * means rounded to `scale` decimals BEFORE the next round, empty clusters
     * keeping their previous centroid via the coalesce. */
-  private def kmeansCtes(k: Int, iters: Int, scale: Int): (String, String) = {
+  private[graft] def kmeansCtes(k: Int, iters: Int, scale: Int): (String, String) = {
     val head =
       s"""WITH e AS MATERIALIZED (SELECT vec_id, embedding::DOUBLE[] AS v
          |       FROM embeddings WHERE embedding IS NOT NULL),
@@ -5048,107 +651,9 @@ object Queries {
     (s"$head,\n$rounds,\n$fin", "af")
   }
 
-  private def kmeansSql(k: Int, iters: Int, scale: Int): String = {
-    val (ctes, af) = kmeansCtes(k, iters, scale)
-    s"$ctes\nSELECT vec_id, CAST(c AS BIGINT) AS cluster FROM $af"
-  }
-
-  /** `dedup_name_linkage` oracle with the ADAPTIVE blocking width derived
-    * in SQL — the exact twin of [[graft.ext.Dedup.linkNamesJaroWinkler]]'s
-    * `blockChars = 0` estimator: per candidate width b, Σ|L_p|·|R_p| over
-    * matched b-char prefixes; pick the smallest b in 2..8 whose estimate
-    * fits `32·max(|L|,|R|)`, else 8 (the fixture's names are exactly 8
-    * chars, so the engine's wider fallback widths block identically). */
-  private val nameLinkageAdaptiveSql: String = {
-    val candCtes = (2 to 8).map { b =>
-      s"""cb$b AS (SELECT coalesce(sum(la.nl * ra.nr), 0) AS cand
-         |  FROM (SELECT substr(name, 1, $b) AS p, count(*) AS nl FROM nm GROUP BY 1) la
-         |  JOIN (SELECT substr(name, 1, $b) AS p, count(*) AS nr FROM v GROUP BY 1) ra
-         |    ON la.p = ra.p)""".stripMargin
-    }.mkString(",\n")
-    val chosen = (2 to 7).foldRight("8") { (b, rest) =>
-      s"CASE WHEN (SELECT cand FROM cb$b) <= bud.b THEN $b ELSE $rest END"
-    }
-    s"""WITH nm AS (SELECT c_custkey AS id,
-       |       translate(lpad(CAST((c_custkey * 2654435761) % 100000000 AS VARCHAR), 8, '0'),
-       |                 '0123456789', 'abcdefghij') AS name
-       |         FROM customer),
-       |v AS (SELECT id, CASE CAST(id % 4 AS INT)
-       |        WHEN 0 THEN name
-       |        WHEN 1 THEN substr(name, 1, 2) || substr(name, 4, 8)
-       |        WHEN 2 THEN substr(name, 1, 3) || substr(name, 5, 1) || substr(name, 4, 1) || substr(name, 6, 8)
-       |        ELSE substr(name, 1, 7) || 'z' END AS name FROM nm),
-       |$candCtes,
-       |bud AS (SELECT 32 * GREATEST((SELECT count(*) FROM nm), (SELECT count(*) FROM v)) AS b),
-       |ch AS (SELECT ($chosen) AS k FROM bud),
-       |l AS (SELECT id AS id_a, name AS name_a,
-       |             substr(name, 1, (SELECT k FROM ch)) AS blk FROM nm),
-       |r AS (SELECT id AS id_b, name AS name_b,
-       |             substr(name, 1, (SELECT k FROM ch)) AS blk FROM v)
-       |SELECT id_a, id_b, name_a, name_b,
-       |       round(jaro_winkler_similarity(name_a, name_b), 6) AS jw
-       |  FROM l JOIN r ON l.blk = r.blk
-       | WHERE round(jaro_winkler_similarity(name_a, name_b), 6) >= 0.84""".stripMargin
-  }
-
-  /** `sim_cluster_keywords` oracle: the k-means rounds, then cluster-level
-    * TF-IDF (tf × ln(n_clusters / cluster_freq), round 6) with the
-    * (score DESC, token) per-cluster total order — the identical
-    * derivation over the identical assignment. */
-  private def clusterKeywordsSql(k: Int, iters: Int, scale: Int): String = {
-    val (ctes, af) = kmeansCtes(k, iters, scale)
-    s"""$ctes,
-       |ct AS (SELECT CAST($af.c AS BIGINT) AS cluster, tok AS token, count(*) AS tf
-       |         FROM (SELECT doc_id, unnest(regexp_split_to_array(text, '\\s+')) AS tok
-       |                 FROM documents WHERE text IS NOT NULL) t
-       |         JOIN $af ON t.doc_id = $af.vec_id
-       |        GROUP BY 1, 2),
-       |cf AS (SELECT token, count(*) AS cluster_freq FROM ct GROUP BY token),
-       |ncl AS (SELECT count(DISTINCT cluster) AS nc FROM ct),
-       |sck AS (SELECT ct.cluster, ct.token, ct.tf, cf.cluster_freq,
-       |              round(CAST(ct.tf AS DOUBLE)
-       |                    * ln(CAST(nc AS DOUBLE) / CAST(cf.cluster_freq AS DOUBLE)), 6) AS score
-       |         FROM ct JOIN cf USING (token), ncl),
-       |rkk AS (SELECT *, row_number() OVER (PARTITION BY cluster
-       |               ORDER BY score DESC, token) AS rank FROM sck)
-       |SELECT cluster, CAST(rank AS BIGINT) AS rank, token, tf, cluster_freq, score
-       |  FROM rkk WHERE rank <= 3""".stripMargin
-  }
-
-  /** `sim_prototype_prune` oracle: the k-means rounds, the assigned
-    * cluster's cost recomputed against the FINAL centroid table (equal to
-    * the engine's `array_min` over the rounded cost vector, because the
-    * assignment IS the argmin), and the per-cluster `quantile_cont` keep
-    * threshold with a `cost >= th` value predicate. */
-  private def prototypePruneSql(k: Int, iters: Int, scale: Int, q: String): String = {
-    val (ctes, af) = kmeansCtes(k, iters, scale)
-    s"""$ctes,
-       |pc AS (SELECT $af.vec_id, CAST($af.c AS BIGINT) AS cluster,
-       |              round(list_sum(list_transform(p.v, x -> x * x))
-       |                    - list_dot_product(e.v, p.v) * 2.0, $scale) AS proto_cost
-       |         FROM $af JOIN e USING (vec_id) JOIN c$iters p ON $af.c = p.c),
-       |thr AS (SELECT cluster, quantile_cont(proto_cost, $q) AS th
-       |          FROM pc GROUP BY cluster)
-       |SELECT pc.vec_id, pc.cluster, pc.proto_cost
-       |  FROM pc JOIN thr USING (cluster)
-       | WHERE pc.proto_cost >= thr.th""".stripMargin
-  }
-
-  /** `sampling_cluster_balanced` oracle: the k-means rounds plus the
-    * stratified per-cluster top-`n` in the engine's `(idHash, id)` order. */
-  private def kmeansBalancedSql(k: Int, iters: Int, scale: Int, n: Int): String = {
-    val (ctes, af) = kmeansCtes(k, iters, scale)
-    s"""$ctes
-       |SELECT vec_id, cluster FROM (
-       |  SELECT vec_id, CAST(c AS BIGINT) AS cluster,
-       |         row_number() OVER (PARTITION BY c
-       |           ORDER BY ${duckIdHash("vec_id")}, vec_id) AS rn
-       |  FROM $af) x WHERE rn <= $n""".stripMargin
-  }
-
   /** The engine's 60-bit portable id hash ([[Sampling.idHash]]) spelled in
     * DuckDB — bit-identical to Spark's `conv(substring(md5(..),1,15),16,10)`. */
-  private def duckIdHash(c: String): String =
+  private[graft] def duckIdHash(c: String): String =
     s"CAST('0x' || substr(md5(CAST($c AS VARCHAR)), 1, 15) AS BIGINT)"
 
   /** The BM25 scoring CTE chain (`d/st/p/f/sc`) shared verbatim by the
@@ -5158,7 +663,7 @@ object Queries {
     * frozen-stats oracle for the grown persisted index (`n`/`avgdl` come
     * from the build slice, postings from the whole corpus). Empty string
     * = whole-corpus stats, the plain [[bm25Ctes]]. */
-  private def bm25CtesWith(statsWhere: String): String =
+  private[graft] def bm25CtesWith(statsWhere: String): String =
     s"""d AS (SELECT doc_id, regexp_split_to_array(text, '\\s+') AS t FROM documents),
       |st AS (SELECT count(*) AS n,
       |              CAST(sum(len(t)) AS DOUBLE) / count(len(t)) AS avgdl FROM d $statsWhere),
@@ -5172,13 +677,13 @@ object Queries {
       |              / (p.tf + CAST(1.2 AS DOUBLE) * (0.25 + 0.75 * p.dl / st.avgdl)) AS s
       |         FROM p JOIN f USING (w), st)""".stripMargin
 
-  private val bm25Ctes = bm25CtesWith("")
+  private[graft] val bm25Ctes = bm25CtesWith("")
 
   /** Shared by `profile_cms_heavy_hitters` (batch-built sketch) and
     * `stream_cms_merge` (micro-batch sketches merged cell-wise in the
     * store): the sketch is distributive, so both must equal this
     * whole-corpus reconstruction. */
-  private val cmsProbeSql =
+  private[graft] val cmsProbeSql =
     s"""WITH tok AS (SELECT unnest(regexp_split_to_array(text, '\\s+')) AS t FROM documents),
        |top AS (SELECT t, count(*) AS exact_count FROM tok GROUP BY t
        |        ORDER BY exact_count DESC, t LIMIT 30),
@@ -5193,2576 +698,27 @@ object Queries {
        |         AND sk.bucket = (tp.h * (r.rw * 2 + 1) + r.rw) % 1024
        | GROUP BY tp.t, tp.exact_count""".stripMargin
 
-  /** Oracle for `pipeline_corpus_select`, shared by the sampled variant. */
-  private val corpusSelectSql =
-    s"""WITH $langScoreCtes,
-       |fp AS (SELECT doc_id,
-       |              md5(array_to_string(list_sort(list_distinct(regexp_split_to_array(text, '\\s+'))), ' ')) AS fp
-       |         FROM documents),
-       |keep AS (SELECT min(doc_id) AS doc_id FROM fp GROUP BY fp),
-       |q AS (SELECT doc_id, len(tk) AS n_tokens FROM t),
-       |pred AS (SELECT doc_id, $predLangCase AS pred_lang FROM sc)
-       |SELECT d.doc_id, d.lang, d.n_chars, q.n_tokens
-       |  FROM documents d
-       |  JOIN keep USING (doc_id)
-       |  JOIN q USING (doc_id)
-       |  JOIN pred USING (doc_id)
-       | WHERE q.n_tokens >= 5 AND pred.pred_lang = d.lang""".stripMargin
+  // =========================================================================
+  // The SparkEntry views over the gate registry (graft.gates)
+  // =========================================================================
 
-  /** DuckDB oracle for the full [[graft.ext.TextAnalysis.bpeTrain]] merge
-    * table: the iterative argmax fixpoint unrolled as `numMerges` chained
-    * CTE rounds. Round k's argmax (`m_k`: count DESC, then lexicographic
-    * (l, r) — the trainer's total order) feeds round k+1's symbol table
-    * (`s_{k+1}`), whose merge application replicates
-    * [[org.apache.spark.sql.graftx.BpeMergeAdjacent]]'s greedy left-to-right
-    * scan-with-skip EXACTLY via `list_reduce` over a chr(30)-separated
-    * string accumulator: merging appends `r` with no separator, so the fresh
-    * token `l||r` can never re-match as a left side in the same round
-    * (`l||r != l` always, and symbols never contain the separator — the two
-    * facts that make fold ≡ scan). CTEs MUST be MATERIALIZED: each round
-    * references its predecessor twice (pair histogram + rewrite), so
-    * DuckDB's default CTE inlining would replicate the corpus scan 2^k
-    * times. Rounds with a best count below the trainer's `minPairCount` (2)
-    * are filtered out, mirroring early stop. */
-  private def bpeMergesOracle(numMerges: Int): String = {
-    val sep = "chr(30)"
-    val head = Seq(
-      """w AS (SELECT unnest(regexp_split_to_array(text, '\s+')) AS word FROM documents)""",
-      "h AS (SELECT word, count(*) AS freq FROM w GROUP BY word)",
-      "s0 AS MATERIALIZED (SELECT list_append(regexp_split_to_array(word, ''), '</w>') AS sym, freq FROM h)")
-    val rounds = (0 until numMerges).flatMap { k =>
-      val argmax =
-        s"""m$k AS MATERIALIZED (SELECT l, r, c FROM (
-           |  SELECT sym[CAST(i AS INT)] AS l, sym[CAST(i AS INT)+1] AS r, sum(freq) AS c
-           |    FROM s$k, unnest(range(1, len(sym))) AS t(i) GROUP BY 1, 2)
-           |  ORDER BY c DESC, l, r LIMIT 1)""".stripMargin
-      val rewrite = if (k == numMerges - 1) Nil else Seq(
-        s"""s${k + 1} AS MATERIALIZED (SELECT CASE WHEN len(sym) < 2 THEN sym ELSE string_split(
-           |  list_reduce(sym, (acc, x) -> CASE WHEN x = m$k.r AND (acc = m$k.l OR ends_with(acc, $sep || m$k.l))
-           |                               THEN acc || x ELSE acc || $sep || x END), $sep) END AS sym, freq
-           |  FROM s$k, m$k)""".stripMargin)
-      argmax +: rewrite
-    }
-    val union = (0 until numMerges).map { k =>
-      s"""SELECT CAST($k AS INT) AS rank, l AS "left", r AS "right", CAST(c AS BIGINT) AS pair_count FROM m$k WHERE c >= 2"""
-    }.mkString("\nUNION ALL ")
-    "WITH " + (head ++ rounds).mkString(",\n") + "\n" + union
-  }
+  /** Every gate by name: one [[gates.Gate]] record per operator, kept with
+    * its oracle and fixtures in its family's file under `graft.gates`. */
+  private[graft] lazy val registry: Map[String, gates.Gate] = gates.Gate.registry(
+    gates.StoreGates.gates ++ gates.TpchGates.gates ++ gates.AnalyticsGates.gates ++
+      gates.TextGates.gates ++ gates.DedupGates.gates ++ gates.SimilarityGates.gates ++
+      gates.GraphGates.gates ++ gates.StreamGates.gates ++ gates.SamplingGates.gates ++
+      gates.PipelineGates.gates)
 
-  val oracles: Map[String, String] = Map(
-    "text_bpe_merges" -> bpeMergesOracle(16),
-    "s1_full_scan" -> "SELECT * FROM customer",
-    "s2_window_scan" ->
-      s"SELECT * FROM lineitem WHERE l_shipdate BETWEEN $liStartLit AND $liEndLit",
-    "p1_drop_audit" -> "SELECT * FROM lineitem",
-    "p2_key_projection" -> "SELECT o_orderkey FROM orders",
-    "p4_cast_date_window" ->
-      "SELECT * FROM orders WHERE CAST(o_orderdate AS DATE) BETWEEN DATE '1998-03-01' AND DATE '1998-03-31'",
-    "p5_key_membership" ->
-      "SELECT * FROM orders WHERE o_orderkey IN (1, 2, 3, 5, 8, 13, 21, 34, 55, 89)",
-    "j1_changed_keys" -> s"$evCte $changedKeysSql",
-    "j2_keyed_fetch" ->
-      s"$evCte SELECT $evCols FROM events WHERE event_id IN ($changedKeysSql)",
-    "a3_keyed_delete" ->
-      s"$evCte SELECT $evCols FROM events WHERE event_id NOT IN ($changedKeysSql)",
-    "a4_upsert" ->
-      s"""$evCte,
-         |changed AS ($changedKeysSql),
-         |target AS (SELECT $evCols FROM events WHERE CAST(ts AS DATE) <= DATE '2024-01-09'),
-         |src AS (SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id, event_type, value + 1 AS value, props FROM events)
-         |SELECT * FROM target WHERE event_id NOT IN (SELECT event_id FROM changed)
-         |UNION ALL
-         |SELECT * FROM src WHERE event_id IN (SELECT event_id FROM changed)""".stripMargin,
-    "o2_incremental_update" ->
-      s"""$evCte,
-         |changed AS ($changedKeysSql),
-         |fullv AS (SELECT event_id, CAST(e.ts AS TIMESTAMP) AS ts, user_id, event_type,
-         |                 value, props,
-         |                 CAST(e.ts + (event_id % 7) * INTERVAL 1 DAY AS TIMESTAMP) AS update_ts
-         |            FROM events e)
-         |SELECT * FROM fullv
-         | WHERE CAST(ts AS DATE) <= DATE '2024-01-09'
-         |   AND event_id NOT IN (SELECT event_id FROM changed)
-         |UNION ALL
-         |SELECT * FROM fullv WHERE event_id IN (SELECT event_id FROM changed)""".stripMargin,
-    // the bound-violation set must be EMPTY — schema-matched zero rows
-    "profile_sketch_bounds" ->
-      """SELECT CAST(NULL AS VARCHAR) AS col_name, CAST(NULL AS VARCHAR) AS metric,
-        |       CAST(NULL AS DOUBLE) AS value
-        |  FROM events WHERE FALSE""".stripMargin,
-    "validate_orders" ->
-      """SELECT 'not_null' AS "check", 'o_custkey' AS "column",
-        |       (SELECT count(*) FROM orders WHERE o_custkey IS NULL) AS n_violations
-        |UNION ALL
-        |SELECT 'accepted_values', 'o_orderstatus',
-        |       (SELECT count(*) FROM orders
-        |         WHERE o_orderstatus IS NOT NULL AND o_orderstatus NOT IN ('O', 'F'))
-        |UNION ALL
-        |SELECT 'in_range', 'o_totalprice',
-        |       (SELECT count(*) FROM orders
-        |         WHERE o_totalprice IS NOT NULL
-        |           AND (CAST(o_totalprice AS DOUBLE) < 0 OR CAST(o_totalprice AS DOUBLE) > 150000))
-        |UNION ALL
-        |SELECT 'predicate:positive_key', 'o_orderkey',
-        |       (SELECT count(*) FROM orders WHERE NOT COALESCE(o_orderkey > 0, FALSE))
-        |UNION ALL
-        |SELECT 'unique', 'o_orderkey',
-        |       -- DuckDB sum(BIGINT) widens to DECIMAL(38,0); the engine reports BIGINT
-        |       (SELECT CAST(COALESCE(sum(n - 1), 0) AS BIGINT) FROM (
-        |          SELECT count(*) AS n FROM orders WHERE o_orderkey IS NOT NULL
-        |           GROUP BY o_orderkey HAVING count(*) > 1) t)
-        |UNION ALL
-        |SELECT 'ref_integrity', 'o_custkey',
-        |       (SELECT count(*) FROM orders
-        |         WHERE o_custkey IS NOT NULL
-        |           AND o_custkey NOT IN (SELECT c_custkey FROM customer))""".stripMargin,
-    // entry points A+B+C reconstructed: the window-reload post-state (P3 raw
-    // BETWEEN, +1d−3ms end), the changed-key upsert post-state (date-cast
-    // changed-key discovery, full-row re-fetch), the dim truncate-reload,
-    // and the four Completed ledger records with their recordsCopied counts
-    "o4_runner_e2e" ->
-      s"""$evCte,
-         |changed AS ($changedKeysSql),
-         |win AS (SELECT * FROM events
-         |         WHERE ts BETWEEN TIMESTAMP '2024-01-05 00:00:00.000'
-         |                      AND TIMESTAMP '2024-01-09 23:59:59.997'),
-         |cu AS (SELECT event_id, value, event_type FROM win
-         |        WHERE event_id NOT IN (SELECT event_id FROM changed)
-         |       UNION ALL
-         |       SELECT event_id, value, event_type FROM events
-         |        WHERE event_id IN (SELECT event_id FROM changed))
-         |SELECT 'events_cu' AS src_table, event_id AS k,
-         |       CAST(value AS DOUBLE) AS v_num, event_type AS v_str FROM cu
-         |UNION ALL
-         |SELECT 'events_plain', event_id, CAST(value AS DOUBLE), event_type FROM win
-         |UNION ALL
-         |SELECT 'customer', c_custkey, CAST(c_acctbal AS DOUBLE), c_name FROM customer
-         |UNION ALL
-         |SELECT 'ledger', (SELECT count(*) FROM win), CAST(NULL AS DOUBLE), 'events_cu/Fact Copy/Completed'
-         |UNION ALL
-         |SELECT 'ledger', (SELECT count(*) FROM changed), CAST(NULL AS DOUBLE), 'events_cu/Table Update/Completed'
-         |UNION ALL
-         |SELECT 'ledger', (SELECT count(*) FROM win), CAST(NULL AS DOUBLE), 'events_plain/Fact Copy/Completed'
-         |UNION ALL
-         |SELECT 'ledger', (SELECT count(*) FROM customer), CAST(NULL AS DOUBLE), 'customer/Dim Copy/Completed'""".stripMargin,
-    "o5_evolved_read" ->
-      """SELECT o_orderkey, o_custkey, CAST(NULL AS VARCHAR) AS o_orderstatus
-        |  FROM orders WHERE o_orderkey % 2 = 0
-        |UNION ALL
-        |SELECT o_orderkey, o_custkey, o_orderstatus
-        |  FROM orders WHERE o_orderkey % 2 = 1""".stripMargin,
-    "o6_pointer_commit" ->
-      "SELECT o_orderkey, o_custkey, o_orderstatus FROM orders",
-    "o7_time_travel" ->
-      """SELECT o_orderkey, o_custkey, o_orderstatus, 'v1' AS snap
-        |  FROM orders WHERE o_orderkey % 2 = 0
-        |UNION ALL
-        |SELECT o_orderkey, o_custkey, o_orderstatus, 'v2'
-        |  FROM orders WHERE o_orderkey % 2 = 1
-        |UNION ALL
-        |SELECT o_orderkey, o_custkey, o_orderstatus, 'v3'
-        |  FROM orders WHERE o_orderkey % 2 = 1 OR o_orderkey % 10 = 0""".stripMargin,
-    "o8_stats_pruned_read" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-        |WHERE o_totalprice BETWEEN 50000.0 AND 100000.0""".stripMargin,
-    "o9_part_pruned_read" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice,
-        |       CAST(date_trunc('month', o_orderdate) AS DATE) AS o_month
-        |  FROM orders
-        | WHERE CAST(date_trunc('month', o_orderdate) AS DATE) = DATE '1997-03-01'
-        |   AND o_totalprice BETWEEN 50000.0 AND 100000.0""".stripMargin,
-    "o10_run_snapshot" ->
-      """SELECT 'cust' AS src_table, c_custkey AS k, c_acctbal AS v, c_name AS name
-        |  FROM customer
-        |UNION ALL
-        |SELECT 'ord', o_orderkey, o_totalprice, CAST(NULL AS VARCHAR) FROM orders""".stripMargin,
-    "o11_zorder_2d_read" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-        | WHERE o_orderkey BETWEEN 10000 AND 20000
-        |   AND o_custkey BETWEEN 100 AND 400""".stripMargin,
-    "o12_generation_diff" ->
-      """SELECT o_orderkey, o_custkey, o_orderstatus, 'insert' AS __change
-        |  FROM orders WHERE o_orderkey % 2 = 1
-        |UNION ALL
-        |SELECT o_orderkey, o_custkey, o_orderstatus, 'delete'
-        |  FROM orders WHERE o_orderkey % 2 = 0 AND o_orderkey % 4 <> 0""".stripMargin,
-    "o12_diff_partition_scoped" ->
-      """SELECT o_orderkey, o_custkey, o_orderstatus,
-        |       CAST(date_trunc('month', o_orderdate) AS DATE) AS o_month,
-        |       'delete' AS __change
-        |  FROM orders
-        | WHERE CAST(date_trunc('month', o_orderdate) AS DATE) = DATE '1997-03-01'
-        |   AND o_orderkey % 2 = 1""".stripMargin,
-    // JSONL round-trip ≡ the table itself
-    "o14_export_jsonl" -> "SELECT doc_id, text, lang, source, n_chars FROM documents",
-    "o15_export_csv" -> "SELECT doc_id, text, lang, source, n_chars FROM documents",
-    "o16_export_orc" -> s"SELECT $evCols FROM events",
-    "o17_ingest_wet" -> "SELECT doc_id, lang, text FROM documents WHERE text IS NOT NULL",
-    "o13_change_feed" ->
-      """SELECT o_orderkey, o_custkey, o_orderstatus, 'insert' AS __change, 1 AS batch
-        |  FROM orders WHERE o_orderkey % 3 = 1
-        |UNION ALL
-        |SELECT o_orderkey, o_custkey, o_orderstatus, 'insert', 2
-        |  FROM orders WHERE o_orderkey % 3 = 2
-        |UNION ALL
-        |SELECT o_orderkey, o_custkey, o_orderstatus, 'delete', 2
-        |  FROM orders WHERE o_orderkey % 3 = 0""".stripMargin,
-    "o3_agg_maintain" ->
-      """WITH up AS (
-        |  SELECT ts, event_type,
-        |         CASE WHEN CAST(ts AS DATE) BETWEEN DATE '2024-01-05' AND DATE '2024-01-09'
-        |              THEN value + 1 ELSE value END AS value
-        |    FROM events)
-        |SELECT CAST(CAST(ts AS DATE) AS TIMESTAMP) AS day, event_type,
-        |       count(*) AS n_events,
-        |       round(CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE), 2) AS total_value
-        |  FROM up GROUP BY 1, 2""".stripMargin,
-    "a1_window_delete" ->
-      s"SELECT * FROM lineitem WHERE l_shipdate NOT BETWEEN $liStartLit AND $liEndLit",
-    "a5_window_reload" ->
-      s"""SELECT * FROM lineitem
-         | WHERE l_shipdate < TIMESTAMP '1999-01-01 00:00:00'
-         |   AND l_shipdate NOT BETWEEN $liStartLit AND $liEndLit
-         |UNION ALL
-         |SELECT * FROM lineitem WHERE l_shipdate BETWEEN $liStartLit AND $liEndLit""".stripMargin,
-    "a2_truncate_reload" -> "SELECT * FROM part",
-    "asof_prior_error" ->
-      """WITH c AS (SELECT * FROM events WHERE event_type = 'click'),
-        |     e AS (SELECT * FROM events WHERE event_type = 'error')
-        |SELECT c.event_id, c.user_id, CAST(c.ts AS TIMESTAMP) AS ts,
-        |       e.event_id AS prior_error_id, CAST(e.ts AS TIMESTAMP) AS prior_error_ts
-        |  FROM c ASOF LEFT JOIN e ON c.user_id = e.user_id AND c.ts >= e.ts""".stripMargin,
-    "asof_next_error" ->
-      """WITH c AS (SELECT * FROM events WHERE event_type = 'click'),
-        |     e AS (SELECT * FROM events WHERE event_type = 'error')
-        |SELECT c.event_id, c.user_id, CAST(c.ts AS TIMESTAMP) AS ts,
-        |       e.event_id AS next_error_id, CAST(e.ts AS TIMESTAMP) AS next_error_ts
-        |  FROM c ASOF LEFT JOIN e ON c.user_id = e.user_id AND c.ts <= e.ts""".stripMargin,
-    // DuckDB's date_trunc('day', ts) returns DATE (Spark's returns timestamp)
-    // — re-cast the day key so both engines materialize a day timestamp
-    "o1_sql_step" ->
-      s"""SELECT CAST(order_date AS TIMESTAMP) AS order_date, n_orders, total_price
-         |  FROM (${Steps.sqlFor("daily_order_stats", OrdFrom, OrdTo)}) t""".stripMargin,
-    "q1_pricing_summary" ->
-      // sums compared as round(double, native scale) — see the query comment
-      """SELECT l_returnflag, l_linestatus,
-        |       round(CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE), 2) AS sum_qty,
-        |       round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE), 2) AS sum_base_price,
-        |       round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE), 4) AS sum_disc_price,
-        |       count(*) AS count_order
-        |  FROM lineitem
-        | WHERE l_shipdate <= TIMESTAMP '1998-09-01 00:00:00'
-        | GROUP BY l_returnflag, l_linestatus""".stripMargin,
-    "q3_shipping_priority" ->
-      """SELECT l_orderkey, o_orderdate, o_orderpriority,
-        |       sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS revenue
-        |  FROM lineitem
-        |  JOIN orders ON l_orderkey = o_orderkey
-        |  JOIN customer ON o_custkey = c_custkey
-        | WHERE c_mktsegment = 'BUILDING'
-        |   AND o_orderdate < TIMESTAMP '1998-03-15 00:00:00'
-        |   AND l_shipdate > TIMESTAMP '1998-03-15 00:00:00'
-        | GROUP BY l_orderkey, o_orderdate, o_orderpriority
-        | ORDER BY revenue DESC, l_orderkey
-        | LIMIT 10""".stripMargin,
-    "q5_local_supplier_volume" ->
-      """SELECT n_name,
-        |       sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS revenue
-        |  FROM lineitem
-        |  JOIN orders ON l_orderkey = o_orderkey
-        |  JOIN customer ON o_custkey = c_custkey
-        |  JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-        |  JOIN nation ON s_nationkey = n_nationkey
-        |  JOIN region ON n_regionkey = r_regionkey
-        | WHERE r_name = 'ASIA'
-        |   AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |   AND o_orderdate < TIMESTAMP '1997-01-01 00:00:00'
-        | GROUP BY n_name
-        | ORDER BY revenue DESC, n_name""".stripMargin,
-    "q18_large_orders" ->
-      """WITH big AS (SELECT l_orderkey, sum(l_quantity) AS total_qty
-        |               FROM lineitem GROUP BY 1 HAVING sum(l_quantity) > 280)
-        |SELECT c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice, total_qty
-        |  FROM orders JOIN big ON o_orderkey = l_orderkey
-        |  JOIN customer ON o_custkey = c_custkey
-        | ORDER BY o_totalprice DESC, o_orderdate, o_orderkey
-        | LIMIT 100""".stripMargin,
-    "q6_forecast_revenue" ->
-      """SELECT sum(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(l_discount AS DECIMAL(18,2))) AS revenue
-        |  FROM lineitem
-        | WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |   AND l_shipdate <  TIMESTAMP '1997-01-01 00:00:00'
-        |   AND l_discount BETWEEN 0.05 AND 0.07
-        |   AND l_quantity < 24""".stripMargin,
-    "q10_returned_items" ->
-      """SELECT c_custkey, c_name, c_acctbal, n_name,
-        |       round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE), 4) AS revenue
-        |  FROM lineitem
-        |  JOIN orders ON l_orderkey = o_orderkey
-        |  JOIN customer ON o_custkey = c_custkey
-        |  JOIN nation ON c_nationkey = n_nationkey
-        | WHERE l_returnflag = 'R'
-        |   AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |   AND o_orderdate <  TIMESTAMP '1996-04-01 00:00:00'
-        | GROUP BY c_custkey, c_name, c_acctbal, n_name
-        | ORDER BY revenue DESC, c_custkey
-        | LIMIT 20""".stripMargin,
-    "q13_order_count_distribution" ->
-      """SELECT c_count, count(*) AS custdist FROM (
-        |  SELECT c_custkey, count(o_orderkey) AS c_count
-        |    FROM customer LEFT JOIN orders ON c_custkey = o_custkey
-        |   GROUP BY c_custkey) x
-        | GROUP BY c_count
-        | ORDER BY custdist DESC, c_count DESC""".stripMargin,
-    "q14_promo_effect" ->
-      """SELECT round(100.0 * CAST(sum(CASE WHEN p_type = 'PROMO'
-        |           THEN CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))
-        |           ELSE 0 END) AS DOUBLE)
-        |         / CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE),
-        |         6) AS promo_share
-        |  FROM lineitem JOIN part ON l_partkey = p_partkey
-        | WHERE l_shipdate >= TIMESTAMP '1996-03-01 00:00:00'
-        |   AND l_shipdate <  TIMESTAMP '1996-04-01 00:00:00'""".stripMargin,
-    "q19_discounted_revenue" ->
-      """SELECT sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS revenue
-        |  FROM lineitem JOIN part ON l_partkey = p_partkey
-        | WHERE (p_brand = 'Brand#11' AND p_size BETWEEN 1 AND 15 AND l_quantity BETWEEN 1 AND 20)
-        |    OR (p_brand = 'Brand#22' AND p_size BETWEEN 1 AND 25 AND l_quantity BETWEEN 10 AND 30)
-        |    OR (p_brand = 'Brand#13' AND p_size BETWEEN 1 AND 50 AND l_quantity BETWEEN 20 AND 40)""".stripMargin,
-    "q22_idle_balances" ->
-      """WITH cut AS (SELECT CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) / count(*) AS cutoff
-        |               FROM customer WHERE c_acctbal > 0)
-        |SELECT n_name, count(*) AS numcust,
-        |       round(CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE), 2) AS totacctbal
-        |  FROM customer, cut
-        |  JOIN nation ON c_nationkey = n_nationkey
-        | WHERE c_acctbal > cutoff
-        |   AND NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey
-        |                      AND o_orderdate >= TIMESTAMP '2001-01-01 00:00:00')
-        | GROUP BY n_name""".stripMargin,
-    "q7_volume_shipping" ->
-      """SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-        |       EXTRACT(YEAR FROM l_shipdate) AS l_year,
-        |       sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS revenue
-        |  FROM lineitem
-        |  JOIN orders ON l_orderkey = o_orderkey
-        |  JOIN customer ON o_custkey = c_custkey
-        |  JOIN supplier ON l_suppkey = s_suppkey
-        |  JOIN nation n1 ON s_nationkey = n1.n_nationkey
-        |  JOIN nation n2 ON c_nationkey = n2.n_nationkey
-        | WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |   AND l_shipdate <  TIMESTAMP '1998-01-01 00:00:00'
-        |   AND ((n1.n_name = 'NATION_3' AND n2.n_name = 'NATION_7')
-        |     OR (n1.n_name = 'NATION_7' AND n2.n_name = 'NATION_3'))
-        | GROUP BY 1, 2, 3""".stripMargin,
-    "q8_market_share" ->
-      """SELECT EXTRACT(YEAR FROM o_orderdate) AS o_year,
-        |       round(CAST(sum(CASE WHEN n2.n_name = 'NATION_3'
-        |                 THEN CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))
-        |                 ELSE 0 END) AS DOUBLE)
-        |             / CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE),
-        |             6) AS mkt_share
-        |  FROM lineitem
-        |  JOIN part ON l_partkey = p_partkey
-        |  JOIN orders ON l_orderkey = o_orderkey
-        |  JOIN customer ON o_custkey = c_custkey
-        |  JOIN nation n1 ON c_nationkey = n1.n_nationkey
-        |  JOIN region ON n1.n_regionkey = r_regionkey
-        |  JOIN supplier ON l_suppkey = s_suppkey
-        |  JOIN nation n2 ON s_nationkey = n2.n_nationkey
-        | WHERE p_type = 'ECONOMY' AND r_name = 'ASIA'
-        |   AND o_orderdate >= TIMESTAMP '1995-01-01 00:00:00'
-        |   AND o_orderdate <  TIMESTAMP '1997-01-01 00:00:00'
-        | GROUP BY 1""".stripMargin,
-    "q2_min_cost_supplier" ->
-      """WITH cat AS (
-        |  SELECT l_partkey, l_suppkey, min(l_extendedprice / l_quantity) AS unit_cost
-        |    FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-        |    JOIN nation ON s_nationkey = n_nationkey
-        |    JOIN region ON n_regionkey = r_regionkey
-        |   WHERE r_name = 'EUROPE'
-        |   GROUP BY 1, 2),
-        |win AS (SELECT *, min(unit_cost) OVER (PARTITION BY l_partkey) AS best FROM cat)
-        |SELECT s_acctbal, s_name, n_name, p_partkey, unit_cost
-        |  FROM win JOIN part ON l_partkey = p_partkey
-        |  JOIN supplier ON l_suppkey = s_suppkey
-        |  JOIN nation ON s_nationkey = n_nationkey
-        | WHERE unit_cost = best
-        |   AND p_size IN (15, 25, 35) AND p_type IN ('LARGE', 'SMALL')
-        | ORDER BY s_acctbal DESC, p_partkey, s_name
-        | LIMIT 100""".stripMargin,
-    "q4_priority_late_ship" ->
-      """SELECT o_orderpriority, count(*) AS order_count
-        |  FROM orders
-        | WHERE o_orderdate >= TIMESTAMP '1996-07-01 00:00:00'
-        |   AND o_orderdate <  TIMESTAMP '1996-10-01 00:00:00'
-        |   AND EXISTS (SELECT 1 FROM lineitem
-        |                WHERE l_orderkey = o_orderkey
-        |                  AND l_shipdate > o_orderdate + INTERVAL 60 DAY)
-        | GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q9_nation_profit" ->
-      """SELECT n_name AS nation, EXTRACT(YEAR FROM o_orderdate) AS o_year,
-        |       CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE)
-        |       - 0.8 * CAST(sum(CAST(p_retailprice AS DECIMAL(18,2)) * CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE)
-        |         AS profit
-        |  FROM lineitem
-        |  JOIN part ON l_partkey = p_partkey
-        |  JOIN supplier ON l_suppkey = s_suppkey
-        |  JOIN orders ON l_orderkey = o_orderkey
-        |  JOIN nation ON s_nationkey = n_nationkey
-        | WHERE p_name LIKE '%widget%'
-        | GROUP BY 1, 2 ORDER BY 1, 2 DESC""".stripMargin,
-    "q11_important_values" ->
-      """WITH val AS (
-        |  SELECT l_partkey, sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS value
-        |    FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-        |    JOIN nation ON s_nationkey = n_nationkey
-        |   WHERE n_name IN ('NATION_5','NATION_6','NATION_7','NATION_8')
-        |   GROUP BY 1)
-        |SELECT l_partkey, round(CAST(value AS DOUBLE), 2) AS value FROM val
-        | WHERE CAST(value AS DOUBLE) > 1.5 * (SELECT CAST(sum(value) AS DOUBLE) / count(*) FROM val)
-        | ORDER BY value DESC, l_partkey""".stripMargin,
-    "q12_late_lines_by_flag" ->
-      """SELECT l_returnflag,
-        |       count(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH') THEN 1 END) AS high_line_count,
-        |       count(CASE WHEN o_orderpriority NOT IN ('1-URGENT','2-HIGH') THEN 1 END) AS low_line_count
-        |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-        | WHERE l_shipdate > o_orderdate + INTERVAL 30 DAY
-        |   AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |   AND o_orderdate <  TIMESTAMP '1997-01-01 00:00:00'
-        | GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q16_supplier_variety" ->
-      """SELECT p_brand, p_type, p_size, count(DISTINCT l_suppkey) AS supplier_cnt
-        |  FROM lineitem JOIN part ON l_partkey = p_partkey
-        | WHERE p_brand <> 'Brand#15' AND p_type <> 'PROMO'
-        |   AND p_size IN (1, 9, 14, 23, 36, 45, 49, 50)
-        |   AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
-        | GROUP BY 1, 2, 3
-        | ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin,
-    "q20_bulk_suppliers" ->
-      """SELECT s_name, s_suppkey FROM supplier
-        |  JOIN nation ON s_nationkey = n_nationkey
-        | WHERE n_name IN ('NATION_3','NATION_7','NATION_11','NATION_15')
-        |   AND s_suppkey IN (
-        |     SELECT l_suppkey FROM lineitem JOIN part ON l_partkey = p_partkey
-        |      WHERE p_name LIKE 'red%'
-        |        AND l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |        AND l_shipdate <  TIMESTAMP '1997-01-01 00:00:00'
-        |      GROUP BY l_suppkey, l_partkey
-        |     HAVING sum(l_quantity) > 25)
-        | ORDER BY s_suppkey""".stripMargin,
-    "q21_waiting_suppliers" ->
-      """SELECT s_name, count(*) AS numwait
-        |  FROM lineitem l1
-        |  JOIN orders ON l1.l_orderkey = o_orderkey
-        |  JOIN supplier ON l1.l_suppkey = s_suppkey
-        | WHERE o_orderstatus = 'F'
-        |   AND l1.l_shipdate > o_orderdate + INTERVAL 45 DAY
-        |   AND EXISTS (SELECT 1 FROM lineitem l2
-        |                WHERE l2.l_orderkey = l1.l_orderkey AND l2.l_suppkey <> l1.l_suppkey)
-        |   AND NOT EXISTS (SELECT 1 FROM lineitem l3
-        |                    WHERE l3.l_orderkey = l1.l_orderkey AND l3.l_suppkey <> l1.l_suppkey
-        |                      AND l3.l_shipdate > l1.l_shipdate)
-        | GROUP BY s_name
-        | ORDER BY numwait DESC, s_name
-        | LIMIT 20""".stripMargin,
-    "q15_top_supplier" ->
-      """WITH rev AS (SELECT l_suppkey,
-        |                    sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS total_revenue
-        |               FROM lineitem
-        |              WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |                AND l_shipdate <  TIMESTAMP '1996-04-01 00:00:00'
-        |              GROUP BY 1),
-        |mx AS (SELECT max(total_revenue) AS m FROM rev)
-        |SELECT s_suppkey, s_name, total_revenue
-        |  FROM rev, mx JOIN supplier ON l_suppkey = s_suppkey
-        | WHERE total_revenue = m""".stripMargin,
-    "q17_small_quantity_revenue" ->
-      """WITH l AS (SELECT l_partkey, l_quantity, l_extendedprice
-        |             FROM lineitem JOIN part ON l_partkey = p_partkey
-        |            WHERE p_brand = 'Brand#13'),
-        |cut AS (SELECT l_partkey AS pk, 0.2 * sum(l_quantity) / count(*) AS cutoff
-        |          FROM l GROUP BY 1)
-        |SELECT round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / 7.0, 2) AS avg_yearly
-        |  FROM l JOIN cut ON l_partkey = pk
-        | WHERE l_quantity < cutoff""".stripMargin,
-    "join_enrich_orders" ->
-      """SELECT o_orderkey, o_totalprice, c_name, c_mktsegment
-        |  FROM orders JOIN customer ON o_custkey = c_custkey
-        | WHERE CAST(o_orderdate AS DATE) BETWEEN DATE '1998-03-01' AND DATE '1998-03-31'""".stripMargin,
-    "window_topk_per_segment" ->
-      """SELECT c_mktsegment, o_orderkey, o_totalprice FROM (
-        |  SELECT c_mktsegment, o_orderkey, o_totalprice,
-        |         row_number() OVER (PARTITION BY c_mktsegment ORDER BY o_totalprice DESC, o_orderkey) AS rn
-        |    FROM orders JOIN customer ON o_custkey = c_custkey) x
-        | WHERE rn <= 3""".stripMargin,
-    "window_order_ledger" ->
-      """SELECT o_custkey, o_orderkey, o_orderdate, o_totalprice,
-        |       row_number() OVER w AS order_seq,
-        |       lag(o_totalprice, 1) OVER w AS prev_price,
-        |       lead(o_totalprice, 1) OVER w AS next_price,
-        |       round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)))
-        |             OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-        |                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE), 2) AS running_total
-        |  FROM orders
-        |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)""".stripMargin,
-    "window_moving_daily" ->
-      """WITH daily AS (
-        |  SELECT CAST(CAST(ts AS DATE) AS TIMESTAMP) AS event_date, event_type,
-        |         count(*) AS n_events, sum(CAST(value AS DECIMAL(18,2))) AS tv
-        |    FROM events GROUP BY 1, 2)
-        |SELECT event_date, event_type, n_events,
-        |       round(CAST(tv AS DOUBLE), 2) AS total_value,
-        |       n_events - lag(n_events, 1) OVER (PARTITION BY event_type ORDER BY event_date) AS delta_events,
-        |       round(CAST(sum(tv) OVER (PARTITION BY event_type ORDER BY event_date
-        |             ROWS BETWEEN 6 PRECEDING AND CURRENT ROW) AS DOUBLE), 2) AS total_7d
-        |  FROM daily""".stripMargin,
-    "set_ops_user_cohorts" ->
-      """SELECT user_id, 'both' AS cohort
-        |  FROM (SELECT user_id FROM events WHERE event_type = 'purchase'
-        |        INTERSECT
-        |        SELECT user_id FROM events WHERE event_type = 'error') t
-        |UNION ALL
-        |SELECT user_id, 'purchase_only' AS cohort
-        |  FROM (SELECT user_id FROM events WHERE event_type = 'purchase'
-        |        EXCEPT
-        |        SELECT user_id FROM events WHERE event_type = 'error') t
-        |UNION ALL
-        |SELECT user_id, 'error_only' AS cohort
-        |  FROM (SELECT user_id FROM events WHERE event_type = 'error'
-        |        EXCEPT
-        |        SELECT user_id FROM events WHERE event_type = 'purchase') t""".stripMargin,
-    "agg_cube_orders" ->
-      """SELECT o_orderstatus, strftime(o_orderdate, '%Y-%m') AS order_month, count(*) AS n_orders,
-        |       round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE), 2) AS total_price
-        |  FROM orders GROUP BY CUBE (o_orderstatus, strftime(o_orderdate, '%Y-%m'))""".stripMargin,
-    "join_full_outer_reconcile" ->
-      """WITH a AS (SELECT user_id, count(*) AS n_week1 FROM events
-        |            WHERE CAST(ts AS DATE) BETWEEN DATE '2024-01-05' AND DATE '2024-01-09' GROUP BY user_id),
-        |     b AS (SELECT user_id, count(*) AS n_week2 FROM events
-        |            WHERE CAST(ts AS DATE) BETWEEN DATE '2024-01-10' AND DATE '2024-01-14' GROUP BY user_id)
-        |SELECT COALESCE(a.user_id, b.user_id) AS user_id, n_week1, n_week2,
-        |       CASE WHEN n_week1 IS NULL THEN 'week2_only'
-        |            WHEN n_week2 IS NULL THEN 'week1_only'
-        |            ELSE 'both' END AS presence
-        |  FROM a FULL JOIN b ON a.user_id = b.user_id""".stripMargin,
-    "agg_rollup_orders" ->
-      """SELECT o_orderpriority, o_orderstatus, count(*) AS n_orders,
-        |       round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE), 2) AS total_price
-        |  FROM orders GROUP BY ROLLUP (o_orderpriority, o_orderstatus)""".stripMargin,
-    "agg_events_daily" ->
-      // CAST chain (not date_trunc): DuckDB's date_trunc('day') returns DATE
-      """SELECT CAST(CAST(ts AS DATE) AS TIMESTAMP) AS event_date, event_type, count(*) AS n_events,
-        |       round(CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE), 2) AS total_value
-        |  FROM events GROUP BY 1, 2""".stripMargin,
-    "join_left_outer_orders" ->
-      """WITH per AS (
-        |  SELECT o_custkey, count(*) AS n_orders,
-        |         round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE), 2) AS total_price
-        |    FROM orders GROUP BY 1)
-        |SELECT c_custkey, c_name, c_nationkey, n_orders, total_price
-        |  FROM customer LEFT JOIN per ON c_custkey = o_custkey""".stripMargin,
-    "agg_grouping_sets" ->
-      """SELECT o_orderstatus, o_orderpriority, count(*) AS n_orders,
-        |       round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE), 2) AS total_price
-        |  FROM orders
-        | GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority))""".stripMargin,
-    "window_rank_metrics" ->
-      """WITH pu AS (
-        |  SELECT event_type, user_id,
-        |         round(CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE), 2) AS total_value
-        |    FROM events GROUP BY 1, 2)
-        |SELECT event_type, user_id, total_value,
-        |       dense_rank() OVER w AS drank,
-        |       ntile(4) OVER w AS quartile,
-        |       round(percent_rank() OVER w, 6) AS pct_rank,
-        |       round(cume_dist() OVER w, 6) AS cdist
-        |  FROM pu
-        |WINDOW w AS (PARTITION BY event_type ORDER BY total_value DESC, user_id)""".stripMargin,
-    // same dense grid + the same integer rolling sums over ROWS BETWEEN 7
-    // PRECEDING AND 1 PRECEDING; the derived mean/var/z expressions mirror
-    // the operator's shape exactly (exact-integer inputs -> identical IEEE
-    // doubles, rounding is display-only; the anomaly flag compares the
-    // UNROUNDED z)
-    "ts_volume_anomaly" ->
-      """WITH daily AS (
-        |  SELECT event_type AS k, CAST(CAST(ts AS DATE) AS TIMESTAMP) AS day,
-        |         count(*) AS c FROM events GROUP BY 1, 2),
-        |span AS (SELECT k, min(day) AS d0, max(day) AS d1 FROM daily GROUP BY 1),
-        |grid AS (SELECT k, unnest(generate_series(d0, d1, INTERVAL 1 DAY)) AS day
-        |           FROM span),
-        |g AS (SELECT g.k, g.day, coalesce(d.c, 0) AS c
-        |        FROM grid g LEFT JOIN daily d ON g.k = d.k AND g.day = d.day),
-        |w AS (SELECT k, day, c,
-        |        count(*) OVER win AS n,
-        |        CAST(coalesce(sum(c) OVER win, 0) AS BIGINT) AS sx,
-        |        CAST(coalesce(sum(c * c) OVER win, 0) AS BIGINT) AS sxx
-        |      FROM g WINDOW win AS (PARTITION BY k ORDER BY day
-        |        ROWS BETWEEN 7 PRECEDING AND 1 PRECEDING)),
-        |v AS (SELECT *, CAST(n * sxx - sx * sx AS DOUBLE)
-        |               / CAST(n * n AS DOUBLE) AS vr,
-        |             CAST(sx AS DOUBLE) / CAST(n AS DOUBLE) AS mean
-        |        FROM w)
-        |SELECT k AS event_type, day, c AS n_events, n AS baseline_days,
-        |       CASE WHEN n > 0 THEN round(mean, 6) END AS baseline_mean,
-        |       CASE WHEN n >= 3 AND vr > 0 THEN round(sqrt(vr), 6) END AS baseline_std,
-        |       CASE WHEN n >= 3 AND vr > 0
-        |            THEN round((CAST(c AS DOUBLE) - mean) / sqrt(vr), 6) END AS z_score,
-        |       CASE WHEN n >= 3 AND vr > 0
-        |            THEN abs((CAST(c AS DOUBLE) - mean) / sqrt(vr)) >= 2.0
-        |            ELSE FALSE END AS anomaly
-        |  FROM v""".stripMargin,
-    "ts_resample_fill" ->
-      """WITH daily AS (
-        |  SELECT user_id, CAST(CAST(ts AS DATE) AS TIMESTAMP) AS day,
-        |         count(*) AS n_events,
-        |         round(CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE), 2) AS total_value
-        |    FROM events WHERE event_type = 'signup' GROUP BY 1, 2),
-        |span AS (SELECT user_id, min(day) AS d0, max(day) AS d1 FROM daily GROUP BY 1),
-        |grid AS (SELECT user_id, unnest(generate_series(d0, d1, INTERVAL 1 DAY)) AS day
-        |           FROM span),
-        |j AS (SELECT g.user_id, g.day, d.n_events, d.total_value
-        |        FROM grid g LEFT JOIN daily d ON g.user_id = d.user_id AND g.day = d.day)
-        |SELECT user_id, day, n_events,
-        |       last_value(total_value IGNORE NULLS) OVER (
-        |         PARTITION BY user_id ORDER BY day
-        |         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS total_value
-        |  FROM j""".stripMargin,
-    "profile_histogram" ->
-      // the CASE mirrors the operator's constant-column fallback (w = 1.0
-      // when hi == lo) — without it DuckDB's 0/0 → NULL and LEAST(19, NULL)
-      // would misfile a constant column into bin 19
-      """WITH mm AS (SELECT min(CAST(value AS DOUBLE)) AS lo,
-        |                   max(CAST(value AS DOUBLE)) AS hi FROM events),
-        |mw AS (SELECT lo, hi,
-        |              CASE WHEN hi > lo THEN (hi - lo) / 20 ELSE 1.0 END AS w FROM mm),
-        |b AS (SELECT LEAST(19, CAST(floor((CAST(value AS DOUBLE) - mw.lo) / mw.w) AS INT)) AS bin
-        |        FROM events, mw WHERE value IS NOT NULL),
-        |c AS (SELECT bin, count(*) AS n FROM b GROUP BY bin)
-        |SELECT c.bin, mw.lo + c.bin * mw.w AS bin_lo,
-        |       mw.lo + (c.bin + 1) * mw.w AS bin_hi, c.n
-        |  FROM c, mw""".stripMargin,
-    // identical edges/clamp/smoothing/contribution arithmetic; the spine
-    // (range(10)) makes empty bins present on both engines
-    // CMS re-derived: ONE portable hash per term, the same affine
-    // per-row bucket derivation ((h·(2i+1)+i) mod w) on both the sketch
-    // build and the probe side, min over the depth rows
-    "profile_cms_heavy_hitters" -> cmsProbeSql,
-    // the streamed sketch is cell-wise-sum distributive, so the merged
-    // micro-batch sketch IS the whole-corpus sketch — same oracle
-    "stream_cms_merge" -> cmsProbeSql,
-    // identical counts/cardinalities/divisions; the fingerprint is the
-    // repo-wide contentFingerprint formula (the dedup_fingerprint mirror)
-    "profile_corpus_card" ->
-      """WITH s AS (SELECT text,
-        |       CASE WHEN text IS NOT NULL
-        |            THEN len(regexp_split_to_array(text, '\s+')) END AS nt,
-        |       lang, source,
-        |       md5(array_to_string(list_sort(list_distinct(
-        |         regexp_split_to_array(text, '\s+'))), ' ')) AS fp
-        |  FROM documents),
-        |a AS (SELECT count(*) AS n_docs,
-        |             count(*) - count(text) AS n_null_text,
-        |             count(DISTINCT lang) AS n_langs,
-        |             count(DISTINCT source) AS n_sources,
-        |             CAST(sum(nt) AS BIGINT) AS total_tokens,
-        |             CAST(sum(length(text)) AS BIGINT) AS total_chars,
-        |             CAST(sum(CASE WHEN nt < 30 THEN 1 ELSE 0 END) AS BIGINT) AS n_short,
-        |             count(DISTINCT fp) AS n_distinct_fingerprints
-        |        FROM s)
-        |SELECT *,
-        |       CAST(total_tokens AS DOUBLE)
-        |         / CAST(n_docs - n_null_text AS DOUBLE) AS mean_tokens,
-        |       CAST(n_short AS DOUBLE)
-        |         / CAST(n_docs - n_null_text AS DOUBLE) AS short_frac,
-        |       CAST(n_docs - n_null_text - n_distinct_fingerprints AS DOUBLE)
-        |         / CAST(n_docs - n_null_text AS DOUBLE) AS dup_frac
-        |  FROM a""".stripMargin,
-    // identical explicit-sums OLS over the same (ln rank, ln count) points:
-    // row_number() with the (count DESC, token ASC) total order ≡ the
-    // Spark side's globalOrdinals numbering; ln of exact integers on both
-    // engines, derived stats rounded at 6
-    "profile_zipf_fit" ->
-      """WITH cnt AS (SELECT w, count(*) AS c FROM (
-        |         SELECT unnest(regexp_split_to_array(text, '\s+')) AS w
-        |           FROM documents) t GROUP BY w),
-        |top AS (SELECT w, c FROM cnt ORDER BY c DESC, w LIMIT 100),
-        |xy AS (SELECT ln(CAST(r AS DOUBLE)) AS x, ln(CAST(c AS DOUBLE)) AS y
-        |         FROM (SELECT c, row_number() OVER (ORDER BY c DESC, w) AS r
-        |                 FROM top) rr),
-        |s AS (SELECT count(*) AS n, sum(x) AS sx, sum(y) AS sy,
-        |             sum(x*y) AS sxy, sum(x*x) AS sxx, sum(y*y) AS syy
-        |        FROM xy)
-        |SELECT n AS n_ranks,
-        |       round((CAST(n AS DOUBLE)*sxy - sx*sy)
-        |             / (CAST(n AS DOUBLE)*sxx - sx*sx), 6) AS zipf_slope,
-        |       round((sy - ((CAST(n AS DOUBLE)*sxy - sx*sy)
-        |                    / (CAST(n AS DOUBLE)*sxx - sx*sx)) * sx)
-        |             / CAST(n AS DOUBLE), 6) AS zipf_intercept,
-        |       round(((CAST(n AS DOUBLE)*sxy - sx*sy)
-        |              * (CAST(n AS DOUBLE)*sxy - sx*sy))
-        |             / ((CAST(n AS DOUBLE)*sxx - sx*sx)
-        |                * (CAST(n AS DOUBLE)*syy - sy*sy)), 6) AS zipf_r2
-        |  FROM s""".stripMargin,
-    "profile_psi_drift" ->
-      """WITH r AS (SELECT CAST(value AS DOUBLE) AS v FROM events
-        |            WHERE event_id % 2 = 0 AND value IS NOT NULL AND isfinite(CAST(value AS DOUBLE))),
-        |c AS (SELECT CAST(value AS DOUBLE) AS v FROM events
-        |       WHERE event_id % 2 = 1 AND value IS NOT NULL AND isfinite(CAST(value AS DOUBLE))),
-        |mm AS (SELECT min(v) AS lo, max(v) AS hi FROM r),
-        |mw AS (SELECT lo, CASE WHEN hi > lo THEN (hi - lo) / 10 ELSE 1.0 END AS w FROM mm),
-        |rb AS (SELECT GREATEST(0, LEAST(9, CAST(floor((v - mw.lo) / mw.w) AS INT))) AS bin
-        |         FROM r, mw),
-        |cb AS (SELECT GREATEST(0, LEAST(9, CAST(floor((v - mw.lo) / mw.w) AS INT))) AS bin
-        |         FROM c, mw),
-        |rc AS (SELECT bin, count(*) AS cr FROM rb GROUP BY bin),
-        |ccn AS (SELECT bin, count(*) AS ccnt FROM cb GROUP BY bin),
-        |tot AS (SELECT (SELECT count(*) FROM r) AS nr, (SELECT count(*) FROM c) AS nc),
-        |s AS (SELECT CAST(b.range AS INT) AS bin,
-        |             (coalesce(rc.cr, 0) + 0.5) / (tot.nr + 0.5 * 10) AS p,
-        |             (coalesce(ccn.ccnt, 0) + 0.5) / (tot.nc + 0.5 * 10) AS q
-        |        FROM range(10) b
-        |        LEFT JOIN rc ON rc.bin = b.range
-        |        LEFT JOIN ccn ON ccn.bin = b.range, tot)
-        |SELECT bin, round(p, 6) AS p_ref, round(q, 6) AS p_cur,
-        |       round((p - q) * ln(p / q), 6) AS psi_contrib
-        |  FROM s""".stripMargin,
-    "agg_user_retention" ->
-      """WITH e AS (SELECT user_id, CAST(CAST(ts AS DATE) AS TIMESTAMP) AS day FROM events),
-        |f AS (SELECT user_id, min(day) AS cohort_day FROM e GROUP BY 1)
-        |SELECT cohort_day, date_diff('day', CAST(cohort_day AS DATE), CAST(day AS DATE)) AS day_offset,
-        |       count(DISTINCT e.user_id) AS n_users
-        |  FROM e JOIN f USING (user_id) GROUP BY 1, 2""".stripMargin,
-    "distinct_counts" ->
-      "SELECT count(DISTINCT user_id) AS n_users, count(DISTINCT event_type) AS n_types FROM events",
-    "agg_pivot_event_types" ->
-      """SELECT user_id,
-        |       round(CAST(sum(CASE WHEN event_type = 'click' THEN CAST(value AS DECIMAL(18,2)) END) AS DOUBLE), 2) AS click,
-        |       round(CAST(sum(CASE WHEN event_type = 'view' THEN CAST(value AS DECIMAL(18,2)) END) AS DOUBLE), 2) AS view,
-        |       round(CAST(sum(CASE WHEN event_type = 'purchase' THEN CAST(value AS DECIMAL(18,2)) END) AS DOUBLE), 2) AS purchase,
-        |       round(CAST(sum(CASE WHEN event_type = 'signup' THEN CAST(value AS DECIMAL(18,2)) END) AS DOUBLE), 2) AS signup,
-        |       round(CAST(sum(CASE WHEN event_type = 'error' THEN CAST(value AS DECIMAL(18,2)) END) AS DOUBLE), 2) AS error
-        |  FROM events GROUP BY user_id""".stripMargin,
-    "agg_value_percentiles" ->
-      """SELECT event_type,
-        |       round(quantile_cont(value, 0.25), 6) AS p25,
-        |       round(quantile_cont(value, 0.50), 6) AS p50,
-        |       round(quantile_cont(value, 0.75), 6) AS p75
-        |  FROM events GROUP BY event_type""".stripMargin,
-    // same interpolated-median parity as agg_value_percentiles
-    // (quantile_cont ≡ Spark percentile); the arithmetic is spelled in the
-    // operator's exact order — (0.6745·(x−med))/mad — and mad=0 groups drop
-    "profile_outliers_mad" ->
-      """WITH m AS (SELECT event_type, quantile_cont(value, 0.5) AS med
-        |             FROM events GROUP BY 1),
-        |d AS (SELECT e.event_type, e.event_id, e.value, m.med,
-        |             abs(e.value - m.med) AS dev
-        |        FROM events e JOIN m USING (event_type)),
-        |s AS (SELECT event_type, quantile_cont(dev, 0.5) AS mad
-        |        FROM d GROUP BY 1)
-        |SELECT d.event_type, d.event_id, d.value,
-        |       round(0.6745 * (d.value - d.med) / s.mad, 6) AS robust_z
-        |  FROM d JOIN s USING (event_type)
-        | WHERE s.mad > 0 AND abs(0.6745 * (d.value - d.med) / s.mad) > 3.5""".stripMargin,
-    "profile_events" ->
-      """SELECT 'event_id' AS col_name, count(*) AS n_rows, count(*) - count(event_id) AS n_nulls, count(DISTINCT event_id) AS n_distinct FROM events
-        |UNION ALL SELECT 'user_id', count(*), count(*) - count(user_id), count(DISTINCT user_id) FROM events
-        |UNION ALL SELECT 'event_type', count(*), count(*) - count(event_type), count(DISTINCT event_type) FROM events
-        |UNION ALL SELECT 'value', count(*), count(*) - count(value), count(DISTINCT value) FROM events
-        |UNION ALL SELECT 'props', count(*), count(*) - count(props), count(DISTINCT props) FROM events""".stripMargin,
-    "json_extract_props" ->
-      "SELECT event_id, CAST(json_extract_string(props, '$.k') AS BIGINT) AS k FROM events",
-    // first-touch funnel: the same greedy min-filter chain; step k+1
-    // strictly after step k, no later than first-view + 7 days
-    "events_funnel" ->
-      """WITH f AS (SELECT user_id, event_type, ts FROM events
-        |            WHERE event_type IN ('view', 'click', 'purchase')),
-        |s1 AS (SELECT user_id, min(ts) AS ts_1 FROM f
-        |        WHERE event_type = 'view' GROUP BY user_id),
-        |s2 AS (SELECT s1.user_id, s1.ts_1, min(f.ts) AS ts_2
-        |         FROM s1 LEFT JOIN f ON f.user_id = s1.user_id
-        |              AND f.event_type = 'click' AND f.ts > s1.ts_1
-        |              AND f.ts <= s1.ts_1 + INTERVAL 604800 SECOND
-        |        GROUP BY s1.user_id, s1.ts_1),
-        |s3 AS (SELECT s2.user_id, s2.ts_1, s2.ts_2, min(f.ts) AS ts_3
-        |         FROM s2 LEFT JOIN f ON f.user_id = s2.user_id
-        |              AND f.event_type = 'purchase' AND f.ts > s2.ts_2
-        |              AND f.ts <= s2.ts_1 + INTERVAL 604800 SECOND
-        |        GROUP BY s2.user_id, s2.ts_1, s2.ts_2)
-        |SELECT user_id, ts_1, ts_2, ts_3,
-        |       1 + (CASE WHEN ts_2 IS NULL THEN 0 ELSE 1 END)
-        |         + (CASE WHEN ts_3 IS NULL THEN 0 ELSE 1 END) AS steps_completed,
-        |       ts_3 IS NOT NULL AS converted
-        |  FROM s3""".stripMargin,
-    // same (ts, event_id) tie order as the transition digraph; support
-    // filter on total occurrences, distinct-user support rides along
-    "events_frequent_paths" ->
-      """WITH s AS (SELECT user_id, event_type AS step_1,
-        |         lead(event_type, 1) OVER w AS step_2,
-        |         lead(event_type, 2) OVER w AS step_3
-        |    FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))
-        |SELECT step_1, step_2, step_3, count(*) AS n_occurrences,
-        |       count(DISTINCT user_id) AS n_users
-        |  FROM s WHERE step_3 IS NOT NULL
-        | GROUP BY 1, 2, 3 HAVING count(*) >= 20""".stripMargin,
-    "text_token_stats" ->
-      """SELECT doc_id,
-        |       len(regexp_split_to_array(text, '\s+')) AS n_tokens,
-        |       len(list_distinct(regexp_split_to_array(text, '\s+'))) AS n_distinct_tokens,
-        |       len(regexp_extract_all(text, '[A-Za-z0-9_]+|[^A-Za-z0-9_\s]')) AS n_tokens_bpe
-        |  FROM documents""".stripMargin,
-    "text_lexical_diversity" ->
-      """WITH tf AS (SELECT doc_id, tok, count(*) AS c FROM (
-        |  SELECT doc_id, unnest(regexp_split_to_array(text, '\s+')) AS tok
-        |    FROM documents) t GROUP BY 1, 2),
-        |g AS (SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_tokens, count(*) AS n_types,
-        |             CAST(sum(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_hapax
-        |        FROM tf GROUP BY 1)
-        |SELECT doc_id, n_tokens, n_types, n_hapax,
-        |       round(CAST(n_types AS DOUBLE) / n_tokens, 6) AS ttr,
-        |       round(CAST(n_hapax AS DOUBLE) / n_types, 6) AS hapax_ratio
-        |  FROM g""".stripMargin,
-    "text_quality" ->
-      """WITH t AS (SELECT doc_id, length(text) AS n_chars_obs,
-        |                  regexp_split_to_array(text, '\s+') AS tk FROM documents)
-        |SELECT doc_id, len(tk) AS n_tokens, n_chars_obs,
-        |       list_sum(list_transform(tk, x -> length(x)))::DOUBLE / len(tk) AS avg_token_len,
-        |       len(list_filter(tk, x -> list_contains(['the','a','an','of','to','and','in','is','it','for'], x)))::DOUBLE / len(tk) AS stopword_ratio,
-        |       len(tk) < 30 AS short_doc
-        |  FROM t""".stripMargin,
-    // keep decision on the UNROUNDED ratio in both engines — an exact
-    // small-integer division, bit-identical; round(6) only for display
-    "text_lexicon_screen" ->
-      """WITH lex AS (SELECT DISTINCT lower(w) AS w
-        |               FROM (VALUES ('slow'), ('merge'), ('filter')) t(w)),
-        |tok AS (SELECT doc_id, unnest(regexp_split_to_array(lower(text), '\s+')) AS tk
-        |          FROM documents),
-        |agg AS (SELECT t.doc_id, count(*) AS n_tokens, count(lex.w) AS n_blocked
-        |          FROM tok t LEFT JOIN lex ON t.tk = lex.w GROUP BY t.doc_id)
-        |SELECT doc_id, n_tokens, n_blocked,
-        |       round(n_blocked::DOUBLE / n_tokens, 6) AS blocked_ratio,
-        |       n_blocked::DOUBLE / n_tokens <= 0.05 AS keep
-        |  FROM agg""".stripMargin,
-    // readability mirror: identical split-count arithmetic and the exact
-    // formula operation order, rounded at 6 decimals on both sides
-    "text_readability" ->
-      s"""WITH $synthReadabilitySql,
-         |t AS (SELECT doc_id, regexp_split_to_array(lower(text), '\\s+') AS tk, text FROM rd),
-         |m AS (SELECT doc_id, len(tk) AS n_words,
-         |  CASE WHEN text IS NULL THEN NULL
-         |       ELSE greatest(1, len(regexp_split_to_array(text, '[.!?]+')) - 1) END AS n_sentences,
-         |  CAST(list_sum(list_transform(tk,
-         |    w -> greatest(1, len(regexp_split_to_array(w, '[aeiouy]+')) - 1))) AS BIGINT) AS n_syllables
-         |  FROM t)
-         |SELECT doc_id, n_words, n_sentences, n_syllables,
-         |  round(206.835 - 1.015 * (n_words::DOUBLE / n_sentences)
-         |    - 84.6 * (n_syllables::DOUBLE / n_words), 6) AS flesch_ease,
-         |  round(0.39 * (n_words::DOUBLE / n_sentences)
-         |    + 11.8 * (n_syllables::DOUBLE / n_words) - 15.59, 6) AS fk_grade
-         |  FROM m""".stripMargin,
-    // mirror of phraseScreen: positions via unnest(range(...)), anchor
-    // equi-join, 1-based inclusive list-slice equality for the verify
-    "text_phrase_screen" ->
-      """WITH ph0 AS (SELECT DISTINCT regexp_split_to_array(trim(lower(phrase)), '\s+') AS pt
-        |               FROM (VALUES ('table table'), ('fast merge'), ('the line sort'),
-        |                            ('  FAST   Merge '), ('no such phrase')) p(phrase)
-        |              WHERE phrase IS NOT NULL AND length(trim(phrase)) > 0),
-        |ph AS (SELECT pt, pt[1] AS anchor, CAST(len(pt) AS INT) AS plen FROM ph0),
-        |d AS (SELECT doc_id, regexp_split_to_array(lower(text), '\s+') AS tk FROM documents),
-        |cand AS (SELECT d.doc_id, CAST(u.i AS INT) AS i, ph.pt, ph.plen
-        |           FROM d, unnest(range(1, len(d.tk) + 1)) AS u(i)
-        |           JOIN ph ON d.tk[CAST(u.i AS INT)] = ph.anchor),
-        |hits AS (SELECT c.doc_id, count(*) AS nh
-        |           FROM cand c JOIN d USING (doc_id)
-        |          WHERE d.tk[c.i : c.i + c.plen - 1] = c.pt
-        |          GROUP BY c.doc_id)
-        |SELECT d.doc_id, len(d.tk) AS n_tokens,
-        |       CASE WHEN d.tk IS NULL THEN NULL ELSE coalesce(h.nh, 0) END AS n_phrase_hits,
-        |       CASE WHEN d.tk IS NULL THEN NULL ELSE coalesce(h.nh, 0) END <= 0 AS keep
-        |  FROM d LEFT JOIN hits h USING (doc_id)""".stripMargin,
-    // signal counts are length deltas over replace()/regexp_replace() with
-    // the SAME pattern/signature strings the operator uses (interpolated
-    // from TextAnalysis, so the mirrors cannot fork); keep compares exact
-    // integer sums — no rounding anywhere
-    "text_encoding_screen" -> {
-      val moji = TextAnalysis.MojibakeSignatures.map(sig =>
-        s"(length(text) - length(replace(text, '$sig', ''))) // ${sig.length}")
-        .mkString(" + ")
-      s"""WITH $synthEncodingSql,
-         |m AS (SELECT doc_id, length(text) AS n_chars,
-         |  CAST(length(text) - length(replace(text, chr(65533), '')) AS BIGINT) AS n_replacement,
-         |  CAST(length(text) - length(regexp_replace(text, '${TextAnalysis.ControlCharClass}', '', 'g')) AS BIGINT) AS n_control,
-         |  CAST($moji AS BIGINT) AS n_mojibake FROM enc)
-         |SELECT doc_id, n_chars, n_replacement, n_control, n_mojibake,
-         |       n_replacement + n_control + n_mojibake <= 0 AS keep FROM m""".stripMargin
-    },
-    // class counts are the SAME length-delta expressions over the SAME
-    // literal-endpoint character classes (interpolated from
-    // TextAnalysis.ScriptRanges, so the mirrors cannot fork); dominance is
-    // the same alphabetical-priority CASE, purity the same rounded ratio
-    "text_script_profile" -> {
-      val classes = TextAnalysis.ScriptRanges :+ ("digit" -> "[0-9]")
-      val counts = classes.map { case (n, cls) =>
-        s"length(text) - length(regexp_replace(text, '$cls', '', 'g')) AS $n"
-      }.mkString(",\n         |  ")
-      val letters = TextAnalysis.ScriptRanges.map(_._1)
-      val dom = letters.map(n => s"WHEN $n = mx THEN '$n'").mkString(" ")
-      val nScripts = letters.map(n => s"(CASE WHEN $n > 0 THEN 1 ELSE 0 END)")
-        .mkString(" + ")
-      s"""WITH $synthScriptSql,
-         |c AS (SELECT doc_id, length(text) AS n_chars,
-         |  $counts
-         |  FROM sm WHERE text IS NOT NULL),
-         |m AS (SELECT *, greatest(${letters.mkString(", ")}) AS mx,
-         |             ${letters.mkString(" + ")} AS sl FROM c)
-         |SELECT doc_id, n_chars, ${classes.map(_._1).mkString(", ")},
-         |       n_chars - sl - digit AS other,
-         |       $nScripts AS n_scripts,
-         |       CASE WHEN mx > 0 THEN CASE $dom END END AS dominant_script,
-         |       CASE WHEN sl > 0
-         |            THEN round(CAST(mx AS DOUBLE) / CAST(sl AS DOUBLE), 6)
-         |       END AS script_purity
-         |  FROM m""".stripMargin
-    },
-    "text_nfc_normalize" ->
-      s"""WITH $synthNfcSql
-         |SELECT doc_id, nfc_normalize(text) AS nfc_text,
-         |       length(nfc_normalize(text)) AS n_chars_nfc,
-         |       nfc_normalize(text) <> text AS changed
-         |  FROM nfc""".stripMargin,
-    "o18_sql_function_path" ->
-      s"""WITH $synthNfcSql
-         |SELECT doc_id, nfc_normalize(text) AS nfc_text,
-         |       length(nfc_normalize(text)) AS n_chars_nfc,
-         |       round(jaro_winkler_similarity(
-         |         translate(lpad(CAST((doc_id * 2654435761) % 100000000 AS VARCHAR), 8, '0'),
-         |                   '0123456789', 'abcdefghij'), 'martha'), 6) AS jw_probe
-         |  FROM nfc""".stripMargin,
-    // the identical strip/decode/collapse chain: comments, script/style
-    // blocks (gis non-greedy), block boundaries -> newline, tags -> space,
-    // six literal entity replaces with &amp; LAST, horizontal-whitespace
-    // collapse, newline tidy, trim — factored CTEs shared with the
-    // pipeline_html_clean capstone
-    "text_html_extract" ->
-      s"""WITH $synthHtmlSql,
-        |${htmlExtractSql("hx")}
-        |SELECT doc_id, clean_text,
-        |       CASE WHEN clean_text IS NULL THEN NULL
-        |            WHEN length(clean_text) = 0 THEN 0
-        |            ELSE len(string_split(clean_text, chr(10))) END AS n_lines,
-        |       length(clean_text) AS n_chars FROM hcc""".stripMargin,
-    // ONE combined alternation captures the quoted token in document
-    // order (quotes included, stripped by substring) — pos is true
-    // document position across mixed quote styles; NULL html yields no
-    // rows
-    "text_html_links" ->
-      s"""WITH $synthHtmlSql,
-        |lk AS (SELECT doc_id, $htmlLinksListExpr AS urls
-        |       FROM hx)
-        |SELECT doc_id, CAST(idx - 1 AS BIGINT) AS pos, url
-        |  FROM (SELECT doc_id, unnest(urls) AS url,
-        |               generate_subscripts(urls, 1) AS idx FROM lk) t""".stripMargin,
-    "text_c4_clean" ->
-      s"""WITH $synthC4Sql,
-         |${c4CleanSql("c4")}
-         |SELECT doc_id, clean_text, n_lines_kept FROM cc""".stripMargin,
-    "text_gopher_quality" ->
-      s"""WITH $synthGopherSql,
-         |${gopherMetricsSql("g")}
-         |SELECT *, $gopherKeepSql AS keep
-         |  FROM gm""".stripMargin,
-    "pipeline_clean_corpus" ->
-      s"""WITH $synthC4Sql,
-         |corpus AS (SELECT doc_id, text FROM c4
-         |           UNION ALL SELECT doc_id + 100000, text FROM c4),
-         |${c4CleanSql("corpus")},
-         |gsrc AS (SELECT doc_id, clean_text AS text FROM cc),
-         |${gopherMetricsSql("gsrc", "['sentence','doc','for','this']")},
-         |gkeep AS (SELECT doc_id FROM gm WHERE $gopherKeepSql),
-         |kept AS (SELECT cc.doc_id, cc.clean_text FROM cc JOIN gkeep USING (doc_id)),
-         |fp AS (SELECT doc_id,
-         |              md5(array_to_string(list_sort(list_distinct(
-         |                regexp_split_to_array(clean_text, '\\s+'))), ' ')) AS fp
-         |         FROM kept),
-         |win AS (SELECT min(doc_id) AS doc_id FROM fp GROUP BY fp)
-         |SELECT k.doc_id, k.clean_text
-         |  FROM kept k JOIN win USING (doc_id)""".stripMargin,
-    // htmlExtract CTEs (the text_html_extract chain verbatim) feeding the
-    // c4Clean CTEs (the text_c4_clean chain verbatim) feeding the exact-
-    // fingerprint survivor rule — each stage's SQL twin is the factored
-    // chain its standalone gate shares, so no stage can fork
-    "pipeline_html_clean" ->
-      s"""WITH $synthHtmlCleanSql,
-         |src AS (SELECT doc_id, html FROM hw
-         |        UNION ALL SELECT doc_id + 100000, html FROM hw),
-         |${htmlExtractSql("src")},
-         |c4src AS (SELECT doc_id, clean_text AS text FROM hcc),
-         |${c4CleanSql("c4src")},
-         |fp AS (SELECT doc_id,
-         |              md5(array_to_string(list_sort(list_distinct(
-         |                regexp_split_to_array(clean_text, '\\s+'))), ' ')) AS fp
-         |         FROM cc),
-         |win AS (SELECT min(doc_id) AS doc_id FROM fp GROUP BY fp)
-         |SELECT cc.doc_id, cc.clean_text, cc.n_lines_kept
-         |  FROM cc JOIN win USING (doc_id)""".stripMargin,
-    "text_url_canonicalize" ->
-      s"""WITH $synthUrlSql,
-         |$canonicalUrlCtes,
-         |${urlHostSql()}
-         |SELECT k.doc_id, k.url,
-         |       $canonicalUrlExpr AS canonical,
-         |       h.host,
-         |       CASE WHEN len(string_split(h.host, '.')) <= 2 THEN h.host
-         |            ELSE string_split(h.host, '.')[-2] || '.' || string_split(h.host, '.')[-1]
-         |            END AS domain
-         |  FROM k JOIN h ON k.doc_id = h.doc_id""".stripMargin,
-    // string trigrams stand in for the operator's hashed shingles (set
-    // semantics identical modulo 64-bit collisions — the decontaminate
-    // contract); jaccard is the exact integer division, unrounded
-    "dedup_source_overlap" ->
-      """WITH t AS (SELECT doc_id, source, regexp_split_to_array(text, '\s+') AS tk
-        |             FROM documents WHERE text IS NOT NULL),
-        |s AS (SELECT doc_id, source,
-        |             CASE WHEN len(tk) >= 3
-        |                  THEN list_distinct(list_transform(range(1, len(tk) - 1),
-        |                                     i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2]))
-        |                  ELSE [array_to_string(tk, ' ')] END AS sh
-        |        FROM t),
-        |sg AS (SELECT DISTINCT source AS src, unnest(sh) AS g FROM s),
-        |tot AS (SELECT src, count(*) AS t FROM sg GROUP BY src),
-        |cm AS (SELECT a.src AS source_a, b.src AS source_b, count(*) AS n_common
-        |         FROM sg a JOIN sg b ON a.g = b.g AND a.src < b.src GROUP BY 1, 2)
-        |SELECT source_a, source_b, ta.t AS n_grams_a, tb.t AS n_grams_b, n_common,
-        |       CAST(n_common AS DOUBLE) / CAST(ta.t + tb.t - n_common AS DOUBLE) AS jaccard
-        |  FROM cm JOIN tot ta ON source_a = ta.src JOIN tot tb ON source_b = tb.src""".stripMargin,
-    // the SAME shared canonicalization CTEs as text_url_canonicalize; the
-    // survivor rule is min(doc_id) per canonical key (the dedup_exact
-    // row_number contract — one row per id makes them identical)
-    "dedup_url_canonical" ->
-      s"""WITH $synthUrlSql,
-         |$canonicalUrlCtes,
-         |cu AS (SELECT doc_id, url,
-         |       $canonicalUrlExpr AS curl
-         |         FROM k),
-         |win AS (SELECT min(doc_id) AS doc_id FROM cu GROUP BY curl)
-         |SELECT cu.doc_id, cu.url FROM cu JOIN win USING (doc_id)""".stripMargin,
-    // identical host extraction (the shared h CTE), identical tokenizer and
-    // stopword list as text_quality, the same pooled integer divisions
-    "text_url_host_stats" ->
-      s"""WITH $synthUrlSql,
-         |${urlHostSql()},
-         |q AS (SELECT h.host, len(regexp_split_to_array(d.text, '\\s+')) AS nt,
-         |             len(list_filter(regexp_split_to_array(d.text, '\\s+'),
-         |                 x -> list_contains(['the','a','an','of','to','and','in','is','it','for'], x))) AS ns
-         |        FROM h JOIN documents d USING (doc_id)
-         |       WHERE d.text IS NOT NULL AND h.host <> ''),
-         |g AS (SELECT host, count(*) AS n_docs,
-         |             CAST(sum(CASE WHEN nt < 30 THEN 1 ELSE 0 END) AS BIGINT) AS n_short,
-         |             CAST(sum(nt) AS BIGINT) AS total_tokens,
-         |             CAST(sum(ns) AS BIGINT) AS total_stopwords
-         |        FROM q GROUP BY host)
-         |SELECT host, n_docs, n_short,
-         |       CAST(n_short AS DOUBLE) / CAST(n_docs AS DOUBLE) AS short_ratio,
-         |       total_tokens,
-         |       CAST(total_stopwords AS DOUBLE) / CAST(total_tokens AS DOUBLE) AS stopword_ratio,
-         |       CAST(n_short AS DOUBLE) / CAST(n_docs AS DOUBLE) <= 0.5 AS keep
-         |  FROM g""".stripMargin,
-    "text_url_domain_psl" ->
-      s"""WITH $synthUrlSql,
-         |${urlHostSql()},
-         |psl(suffix) AS (VALUES ('com'),('org'),('net'),('uk'),('co.uk'),
-         |                       ('org.uk'),('au'),('com.au'),('edu.au'),('de')),
-         |e AS (SELECT DISTINCT host FROM h),
-         |p AS (SELECT host, string_split(host, '.') AS parts,
-         |             len(string_split(host, '.')) AS n FROM e),
-         |x0 AS (SELECT host, parts, n, unnest(generate_series(1, n)) AS i FROM p),
-         |x AS (SELECT host, n - i + 1 AS k,
-         |             array_to_string(parts[i:n], '.') AS suf FROM x0),
-         |b AS (SELECT x.host, max(x.k) AS k FROM x JOIN psl ON x.suf = psl.suffix
-         |       GROUP BY x.host),
-         |m AS (SELECT p.host, p.parts, p.n, coalesce(b.k, 1) AS k
-         |        FROM p LEFT JOIN b USING (host)),
-         |d AS (SELECT host, CASE WHEN n > k
-         |               THEN array_to_string(parts[n-k:n], '.') END AS domain FROM m)
-         |SELECT h.doc_id, h.host, d.domain,
-         |       CASE WHEN len(string_split(h.host, '.')) <= 2 THEN h.host
-         |            ELSE string_split(h.host, '.')[-2] || '.' ||
-         |                 string_split(h.host, '.')[-1] END AS domain_approx
-         |  FROM h JOIN d USING (host)""".stripMargin,
-    "text_url_filter_blocked" ->
-      s"""WITH $synthUrlSql,
-         |${urlHostSql(", url")}
-         |SELECT doc_id, url FROM h
-         | WHERE NOT (host = 'example.com' OR host LIKE '%.example.com'
-         |            OR host = 'tracker.net' OR host LIKE '%.tracker.net')""".stripMargin,
-    "text_langid" ->
-      s"""WITH $langScoreCtes
-         |SELECT doc_id,
-         |       $predLangCase AS pred_lang,
-         |       CASE WHEN s_en >= s_de AND s_en >= s_fr AND s_en >= s_es AND s_en >= s_zh THEN s_en
-         |            WHEN s_de >= s_fr AND s_de >= s_es AND s_de >= s_zh THEN s_de
-         |            WHEN s_fr >= s_es AND s_fr >= s_zh THEN s_fr
-         |            WHEN s_es >= s_zh THEN s_es
-         |            ELSE s_zh END AS marker_hits
-         |  FROM sc""".stripMargin,
-    "text_fingerprint" ->
-      """SELECT doc_id,
-        |       md5(array_to_string(list_sort(list_distinct(regexp_split_to_array(text, '\s+'))), ' ')) AS fingerprint
-        |  FROM documents""".stripMargin,
-    // H = ln(L) - (sum c*ln c)/L over exact integer counts, one division;
-    // the d%23 emoji injection pins codepoint-split/codepoint-length
-    // agreement across engines on supplementary-plane text
-    "text_char_entropy" ->
-      """WITH ed AS (SELECT doc_id,
-        |              CASE WHEN doc_id % 23 = 0 THEN text || ' 😀🚀😀'
-        |                   ELSE text END AS text FROM documents),
-        |c AS (SELECT doc_id, CAST(length(text) AS BIGINT) AS len,
-        |                  unnest(regexp_split_to_array(text, '')) AS ch
-        |             FROM ed WHERE text IS NOT NULL AND length(text) > 0),
-        |g AS (SELECT doc_id, len, ch, count(*) AS c FROM c GROUP BY 1, 2, 3)
-        |SELECT doc_id, round(ln(CAST(len AS DOUBLE))
-        |         - sum(CAST(c AS DOUBLE) * ln(CAST(c AS DOUBLE))) / CAST(len AS DOUBLE),
-        |         6) AS entropy
-        |  FROM g GROUP BY doc_id, len""".stripMargin,
-    // winnowing re-derived: positional 5-gram md5 hashes, struct-min over
-    // each 4-window (rightmost tie via -pos), final-partial-window rule
-    "text_winnow_fingerprints" ->
-      """WITH d AS (SELECT doc_id, regexp_split_to_array(text, '\s+') AS t FROM documents),
-        |g AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos,
-        |             CAST('0x' || substr(md5(array_to_string(
-        |               t[CAST(i AS INT):CAST(i AS INT) + 4], chr(1))), 1, 15) AS BIGINT) AS h
-        |        FROM d, unnest(range(1, len(t) - 3)) AS u(i)
-        |       WHERE len(t) >= 5),
-        |s AS (SELECT doc_id, pos,
-        |             count(*) OVER (PARTITION BY doc_id) AS m,
-        |             min({'h': h, 'np': -pos}) OVER (PARTITION BY doc_id ORDER BY pos
-        |               ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS best
-        |        FROM g)
-        |SELECT DISTINCT doc_id, CAST(-(best.np) AS BIGINT) AS pos, best.h AS gram_hash
-        |  FROM s WHERE pos >= least(4, m) - 1""".stripMargin,
-    "pipeline_corpus_select" -> corpusSelectSql,
-    "pipeline_corpus_sample" ->
-      s"""SELECT * FROM (
-         |$corpusSelectSql
-         |) cs WHERE ${duckIdHash("doc_id")} % 1000 < 500""".stripMargin,
-    "pipeline_corpus_pack" ->
-      s"""WITH cs AS (
-         |$corpusSelectSql
-         |),
-         |ph AS (SELECT doc_id, CAST(n_tokens AS BIGINT) AS n_tokens,
-         |              ${duckIdHash("doc_id")} AS hh
-         |         FROM cs WHERE n_tokens IS NOT NULL AND n_tokens >= 0),
-         |pw AS (SELECT doc_id, CAST(hh % 4 AS INT) AS shard, n_tokens,
-         |              sum(n_tokens) OVER (PARTITION BY hh % 4 ORDER BY hh, doc_id
-         |                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n_tokens AS cum_before
-         |         FROM ph)
-         |SELECT doc_id, shard, n_tokens, CAST(cum_before // 256 AS BIGINT) AS pack_id FROM pw""".stripMargin,
-    "pipeline_corpus_select_fuzzy" ->
-      // near-dup cluster losers (recursive-CTE transitive closure over the
-      // exact Jaccard pair graph, non-minimum members) excluded, then the
-      // same token-count and language-agreement filters
-      s"""${jaccardCtes.replaceFirst("WITH ", "WITH RECURSIVE ")},
-         |p AS (SELECT doc_a, doc_b FROM j WHERE jaccard >= 0.8),
-         |e AS (SELECT doc_a AS src, doc_b AS dst FROM p
-         |      UNION SELECT doc_b AS src, doc_a AS dst FROM p),
-         |reach(node, label) AS (
-         |  SELECT src AS node, src AS label FROM e
-         |  UNION
-         |  SELECT e2.src, r.label FROM e e2 JOIN reach r ON e2.dst = r.node),
-         |losers AS (SELECT node FROM (SELECT node, min(label) AS cluster_id
-         |                               FROM reach GROUP BY node) c
-         |            WHERE node <> cluster_id),
-         |$scCte,
-         |q AS (SELECT doc_id, len(tk) AS n_tokens FROM t),
-         |pred AS (SELECT doc_id, $predLangCase AS pred_lang FROM sc)
-         |SELECT d.doc_id, d.lang, d.n_chars, q.n_tokens
-         |  FROM documents d
-         |  JOIN q USING (doc_id)
-         |  JOIN pred USING (doc_id)
-         | WHERE d.doc_id NOT IN (SELECT node FROM losers)
-         |   AND q.n_tokens >= 5 AND pred.pred_lang = d.lang""".stripMargin,
-    "pack_token_budget" ->
-      s"""WITH toks AS (
-         |  SELECT doc_id, CAST(len(regexp_split_to_array(text, '\\s+')) AS BIGINT) AS n_tokens,
-         |         ${duckIdHash("doc_id")} AS hh
-         |    FROM documents
-         |   WHERE len(regexp_split_to_array(text, '\\s+')) >= 0),
-         |w AS (SELECT doc_id, CAST(hh % 8 AS INT) AS shard, n_tokens, hh,
-         |             sum(n_tokens) OVER (PARTITION BY hh % 8 ORDER BY hh, doc_id
-         |                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n_tokens AS cum_before
-         |        FROM toks)
-         |SELECT doc_id, shard, n_tokens, CAST(cum_before // 512 AS BIGINT) AS pack_id FROM w""".stripMargin,
-    "sampling_hash_fraction" ->
-      s"SELECT * FROM documents WHERE ${duckIdHash("doc_id")} % 1000 < 200",
-    "sampling_stratified" ->
-      s"""SELECT doc_id, text, lang, source, n_chars FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY lang
-         |             ORDER BY ${duckIdHash("doc_id")}, doc_id) AS rn
-         |    FROM documents) x WHERE rn <= 20""".stripMargin,
-    "sampling_quantile_filter" ->
-      """WITH thr AS (SELECT lang, quantile_cont(n_chars, 0.5) AS t
-        |               FROM documents GROUP BY lang)
-        |SELECT doc_id, text, d.lang, source, n_chars
-        |  FROM documents d JOIN thr ON d.lang = thr.lang
-        | WHERE d.n_chars >= thr.t""".stripMargin,
-    "sampling_weighted" ->
-      s"""SELECT doc_id, text, lang, source, n_chars, CAST(n_chars AS DOUBLE) / 2000.0 AS w
-         |  FROM documents
-         | WHERE CAST(${duckIdHash("doc_id")} % 1000000 AS DOUBLE)
-         |       < least(greatest(CAST(n_chars AS DOUBLE) / 2000.0, 0), 1) * 1000000""".stripMargin,
-    // cluster-safe splits: split key = cluster label (min member id) for
-    // clustered docs, own id for singletons; cumulative-ppm thresholds on
-    // the portable id hash — 0.8/0.1/0.1 → 800000/900000
-    "sampling_split_cluster_safe" ->
-      s"""$clusterCtes,
-         |cl AS (SELECT node, min(label) AS cluster_id FROM reach GROUP BY node),
-         |k AS (SELECT d.doc_id, coalesce(cl.cluster_id, d.doc_id) AS key
-         |        FROM documents d LEFT JOIN cl ON d.doc_id = cl.node),
-         |h AS (SELECT doc_id, ${duckIdHash("key")} % 1000000 AS b FROM k)
-         |SELECT doc_id, CASE WHEN b < 800000 THEN 'train'
-         |                    WHEN b < 900000 THEN 'val'
-         |                    ELSE 'test' END AS split
-         |  FROM h""".stripMargin,
-    // α = 0.5 temperature mixing: sqrt is IEEE-correctly-rounded, so both
-    // engines derive bit-identical per-language rates; the arithmetic shape
-    // (budget·w)/(sw·n) mirrors the Spark expression exactly
-    // decile thresholds via quantile_cont ≡ Spark percentile; strictly-
-    // below counting reproduces the ties-fall-lower contract
-    "sampling_quantile_bins" ->
-      """WITH t AS (SELECT quantile_cont(o_totalprice,
-        |                    [0.1,0.2,0.3,0.4,0.5,0.6,0.7,0.8,0.9]) AS th
-        |             FROM orders)
-        |SELECT o_orderkey,
-        |       CASE WHEN o_totalprice IS NULL THEN NULL
-        |            ELSE 1 + len(list_filter(t.th, x -> o_totalprice > x)) END AS bin
-        |  FROM orders, t""".stripMargin,
-    // quantile normalization re-derived: percent_rank within language
-    // (ties share the min rank — DuckDB's window semantics ≡ the engine's
-    // distinct-value cumsum), global grid via quantile_cont ≡ Spark
-    // percentile, both rounds half-away-from-zero in both engines
-    "sampling_quantile_normalize" ->
-      s"""WITH b AS (SELECT doc_id, lang, n_chars FROM documents
-         |            WHERE lang IS NOT NULL AND n_chars IS NOT NULL),
-         |g AS (SELECT quantile_cont(CAST(n_chars AS DOUBLE),
-         |               [${(0 to 100).map(i => i / 100.0).mkString(",")}]) AS grid
-         |        FROM b),
-         |pr AS (SELECT doc_id, lang, n_chars,
-         |              percent_rank() OVER (PARTITION BY lang ORDER BY n_chars) AS pr
-         |         FROM b)
-         |SELECT pr.doc_id, pr.lang, pr.n_chars,
-         |       round(g.grid[CAST(round(pr.pr * 100) AS INT) + 1], 6) AS calibrated
-         |  FROM pr, g""".stripMargin,
-    // same ordinal + 60-bit-hash-mod-n arithmetic, self-collisions dropped
-    "sampling_negative_pairs" ->
-      s"""WITH o AS (SELECT doc_id, row_number() OVER (ORDER BY doc_id) - 1 AS ord
-         |             FROM documents),
-         |n AS (SELECT count(*) AS n FROM documents),
-         |a AS (SELECT o.doc_id AS anchor_id, o.ord AS aord, js.j,
-         |             CAST('0x' || substr(md5(CAST(o.doc_id AS VARCHAR) || ':' ||
-         |                  CAST(js.j AS VARCHAR)), 1, 15) AS BIGINT) % n.n AS pord
-         |        FROM o, n, (SELECT unnest(range(0, 3)) AS j) js)
-         |SELECT a.anchor_id, a.j, p.doc_id AS negative_id
-         |  FROM a JOIN o p ON a.pord = p.ord
-         | WHERE a.pord <> a.aord""".stripMargin,
-    "sampling_temperature" ->
-      s"""WITH c AS (SELECT lang, count(*) AS n FROM documents GROUP BY lang),
-         |sm AS (SELECT sum(sqrt(CAST(n AS DOUBLE))) AS sw FROM c),
-         |r AS (SELECT lang, least(CAST(1.0 AS DOUBLE),
-         |               (150.0 * sqrt(CAST(n AS DOUBLE))) / (sw * CAST(n AS DOUBLE))) AS rate
-         |        FROM c, sm)
-         |SELECT d.doc_id, d.text, d.lang, d.source, d.n_chars
-         |  FROM documents d JOIN r USING (lang)
-         | WHERE CAST(${duckIdHash("doc_id")} % 1000000 AS DOUBLE) < rate * 1000000""".stripMargin,
-    // ES keys re-derived: hash-uniform u strictly inside (0,1), ln(u)/w,
-    // rounded-key ranking with id tiebreak for an engine-independent cutoff
-    "sampling_weighted_k" ->
-      s"""SELECT doc_id, lang, n_chars FROM (
-         |  SELECT doc_id, lang, n_chars,
-         |         round(ln((CAST(${duckIdHash("doc_id")} % 1000000 AS DOUBLE) + 0.5)
-         |                  / 1000000.0) / CAST(n_chars AS DOUBLE), 9) AS k
-         |    FROM documents
-         |   WHERE doc_id IS NOT NULL AND CAST(n_chars AS DOUBLE) > 0
-         |     AND NOT isnan(CAST(n_chars AS DOUBLE))) x
-         | ORDER BY k DESC, doc_id LIMIT 100""".stripMargin,
-    // the seeded hash is idHash("<id>:<seed>") — spelled as the same md5
-    // construction with the ':0' literal concatenated before hashing
-    "sampling_shuffle_shards" ->
-      s"""SELECT doc_id, (rn - 1) % 8 AS shard, (rn - 1) // 8 AS pos_in_shard
-         |  FROM (SELECT doc_id, row_number() OVER (ORDER BY
-         |          CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':0'), 1, 15) AS BIGINT),
-         |          doc_id) AS rn
-         |          FROM documents) x""".stripMargin,
-    "sampling_stratified_quotas" ->
-      s"""SELECT doc_id, text, lang, source, n_chars FROM (
-         |  SELECT d.*, q.quota, row_number() OVER (PARTITION BY d.lang
-         |             ORDER BY ${duckIdHash("doc_id")}, doc_id) AS rn
-         |    FROM documents d
-         |    JOIN (VALUES ('en', 30), ('de', 10), ('fr', 5)) q(lang, quota)
-         |      ON d.lang = q.lang) x
-         | WHERE rn <= quota""".stripMargin,
-    "sampling_budget_select" ->
-      s"""SELECT doc_id, text, lang, source, n_chars FROM (
-         |  SELECT *, sum(n_chars) OVER (ORDER BY ${duckIdHash("doc_id")}, doc_id
-         |             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-         |    FROM documents) x
-         | WHERE cum <= 60000""".stripMargin,
-    // whole epochs via integer div/mod on exact long totals; the partial
-    // epoch is the budget-select walk per domain at epoch = nfull
-    "sampling_repeat_to_budget" ->
-      s"""WITH b(lang, budget) AS (VALUES ('en', 1500000), ('de', 150000), ('fr', 10000)),
-         |tot AS (SELECT lang, sum(CAST(n_chars AS BIGINT)) AS total
-         |          FROM documents GROUP BY lang),
-         |e AS (SELECT b.lang, CAST(CAST(b.budget AS BIGINT) // t.total AS BIGINT) AS nfull,
-         |             CAST(CAST(b.budget AS BIGINT) % t.total AS BIGINT) AS leftover
-         |        FROM b JOIN tot t ON b.lang = t.lang WHERE t.total > 0)
-         |SELECT d.doc_id, d.lang, CAST(u.ep AS BIGINT) AS epoch
-         |  FROM documents d JOIN e ON d.lang = e.lang, unnest(range(e.nfull)) AS u(ep)
-         |UNION ALL
-         |SELECT doc_id, lang, CAST(nfull AS BIGINT) AS epoch FROM (
-         |  SELECT d.doc_id, d.lang, e.nfull, e.leftover,
-         |         sum(CAST(d.n_chars AS BIGINT)) OVER (PARTITION BY d.lang
-         |           ORDER BY ${duckIdHash("doc_id")}, doc_id
-         |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-         |    FROM documents d JOIN e ON d.lang = e.lang) x
-         | WHERE cum <= leftover""".stripMargin,
-    // same per-group quantile_cont thresholds, same clamp and clipped flag
-    // (the raw comparison, not the rounded value); NULL values pass through
-    "sampling_winsorize" ->
-      """WITH thr AS (SELECT lang, quantile_cont(n_chars, 0.05) AS lo,
-        |                    quantile_cont(n_chars, 0.95) AS hi
-        |               FROM documents WHERE n_chars IS NOT NULL GROUP BY lang)
-        |SELECT doc_id, d.lang, n_chars,
-        |       CASE WHEN n_chars IS NOT NULL
-        |            THEN round(least(greatest(CAST(n_chars AS DOUBLE), lo), hi), 6)
-        |       END AS winsorized,
-        |       CASE WHEN n_chars IS NOT NULL
-        |            THEN CAST(n_chars AS DOUBLE) < lo OR CAST(n_chars AS DOUBLE) > hi
-        |            ELSE FALSE END AS winsorized_clipped
-        |  FROM documents d JOIN thr ON d.lang = thr.lang""".stripMargin,
-    // identical waterfall closed form: ascending-capacity rank + running
-    // sum, the prefix `fits` predicate, whole-frame (k*, P_k*) sums, and
-    // the same CASE allocation — capacities are integral doubles at
-    // maxEpochs 2.0, so the comparison is exact on both engines
-    "sampling_unimax" ->
-      """WITH cnt AS (SELECT lang, count(*) AS n_docs FROM documents
-        |              WHERE lang IS NOT NULL GROUP BY lang),
-        |st AS (SELECT lang, n_docs, CAST(n_docs AS DOUBLE) * 2.0 AS cap
-        |         FROM cnt),
-        |wn AS (SELECT lang, n_docs, cap,
-        |              row_number() OVER (ORDER BY cap, lang) AS r,
-        |              sum(cap) OVER (ORDER BY cap, lang) AS p,
-        |              count(*) OVER () AS l
-        |         FROM st),
-        |ft AS (SELECT *, cap * (l - r) <= 700.0 - p AS fits FROM wn),
-        |ks AS (SELECT *,
-        |              sum(CASE WHEN fits THEN 1 ELSE 0 END) OVER () AS k,
-        |              sum(CASE WHEN fits THEN cap ELSE 0.0 END) OVER () AS pk
-        |         FROM ft)
-        |SELECT lang, n_docs, round(cap, 6) AS capacity,
-        |       round(CASE WHEN fits THEN cap
-        |                  ELSE (700.0 - pk) / CAST(l - k AS DOUBLE) END, 6)
-        |         AS alloc_docs,
-        |       round(CASE WHEN fits THEN cap
-        |                  ELSE (700.0 - pk) / CAST(l - k AS DOUBLE) END
-        |             / CAST(n_docs AS DOUBLE), 6) AS epochs
-        |  FROM ks""".stripMargin,
-    "stream_distinct_pairs" ->
-      "SELECT DISTINCT user_id, event_type FROM events",
-    "text_tfidf" ->
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(regexp_split_to_array(text, '\s+')) AS token FROM documents),
-        |g AS (SELECT token, count(DISTINCT doc_id) AS doc_freq, count(*) AS term_freq
-        |        FROM tok GROUP BY token),
-        |n AS (SELECT count(DISTINCT doc_id) AS n_docs FROM documents)
-        |SELECT token, doc_freq, term_freq,
-        |       round(term_freq * ln(CAST(n_docs AS DOUBLE) / doc_freq), 4) AS tfidf
-        |  FROM g, n
-        | ORDER BY tfidf DESC, token LIMIT 100""".stripMargin,
-    // identical tf/df derivation and ln ratio; row_number over the same
-    // (rounded tfidf DESC, token) per-doc total order
-    "text_keywords_per_doc" ->
-      """WITH dt AS (SELECT doc_id, tok AS token, count(*) AS tf FROM (
-        |        SELECT doc_id, unnest(regexp_split_to_array(text, '\s+')) AS tok
-        |          FROM documents) t GROUP BY 1, 2),
-        |df AS (SELECT token, count(*) AS doc_freq FROM dt GROUP BY token),
-        |n AS (SELECT count(DISTINCT doc_id) AS nd FROM documents),
-        |sc AS (SELECT dt.doc_id, dt.token, dt.tf, df.doc_freq,
-        |              round(CAST(dt.tf AS DOUBLE)
-        |                    * ln(CAST(nd AS DOUBLE) / CAST(df.doc_freq AS DOUBLE)), 6) AS tfidf
-        |         FROM dt JOIN df USING (token), n),
-        |rk AS (SELECT *, row_number() OVER (PARTITION BY doc_id
-        |                 ORDER BY tfidf DESC, token) AS rank FROM sc)
-        |SELECT doc_id, CAST(rank AS BIGINT) AS rank, token, tf, doc_freq, tfidf
-        |  FROM rk WHERE rank <= 3""".stripMargin,
-    "text_repetition_topgram" ->
-      """WITH t AS (SELECT doc_id, regexp_split_to_array(text, '\s+') AS tk FROM documents),
-        |g AS (SELECT doc_id, length(array_to_string(tk, ' ')) AS chars,
-        |             unnest(list_transform(generate_series(1, len(tk) - 1),
-        |               i -> array_to_string(tk[i:i+1], ' '))) AS gram
-        |        FROM t WHERE len(tk) >= 2),
-        |c AS (SELECT doc_id, chars, gram, count(*) AS cnt FROM g GROUP BY 1, 2, 3),
-        |r AS (SELECT doc_id, chars, gram, cnt,
-        |             row_number() OVER (PARTITION BY doc_id
-        |               ORDER BY cnt DESC, length(gram) DESC, gram DESC) AS rn
-        |        FROM c)
-        |SELECT d.doc_id, r.gram AS top_gram,
-        |       coalesce(r.cnt, 0) AS top_gram_count,
-        |       coalesce(r.cnt * length(r.gram) / r.chars::DOUBLE, 0.0)
-        |         AS top_gram_char_frac
-        |  FROM documents d LEFT JOIN r ON d.doc_id = r.doc_id AND r.rn = 1""".stripMargin,
-    "text_repetition" ->
-      """WITH t AS (SELECT doc_id, regexp_split_to_array(text, '\s+') AS tk FROM documents),
-        |g AS (SELECT doc_id,
-        |             CASE WHEN len(tk) >= 3
-        |                  THEN list_transform(range(1, len(tk) - 1),
-        |                                      i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])
-        |                  ELSE [array_to_string(tk, ' ')] END AS gr
-        |        FROM t)
-        |SELECT doc_id, len(gr) AS n_grams, len(list_distinct(gr)) AS n_distinct_grams,
-        |       1.0 - CAST(len(list_distinct(gr)) AS DOUBLE) / len(gr) AS dup_gram_ratio
-        |  FROM g""".stripMargin,
-    // corpus-unigram surprisal: avg ln(N/freq) per doc, rounded to 6
-    "text_surprisal" ->
-      s"""WITH $surprisalCtes
-        |SELECT tok.doc_id, count(*) AS n_tokens,
-        |       round(avg(ln(CAST(n.n AS DOUBLE) / CAST(f.f AS DOUBLE))), 6) AS avg_surprisal
-        |  FROM tok JOIN f USING (w), n
-        | GROUP BY tok.doc_id""".stripMargin,
-    // smoothed-unigram divergence re-derived: add-one over the UNION
-    // vocabulary, long adds before the one double division per term
-    "text_vocab_divergence" ->
-      """WITH ca AS (SELECT w, count(*) AS c FROM (
-        |        SELECT unnest(regexp_split_to_array(text, '\s+')) AS w
-        |          FROM documents WHERE lang = 'en') x GROUP BY w),
-        |cb AS (SELECT w, count(*) AS c FROM (
-        |        SELECT unnest(regexp_split_to_array(text, '\s+')) AS w
-        |          FROM documents WHERE lang = 'de') x GROUP BY w),
-        |j AS (SELECT coalesce(ca.c, 0) AS cca, coalesce(cb.c, 0) AS ccb
-        |        FROM ca FULL OUTER JOIN cb ON ca.w = cb.w),
-        |t AS (SELECT sum(cca) AS na, sum(ccb) AS nb, count(*) AS v FROM j),
-        |pq AS (SELECT CAST(cca + 1 AS DOUBLE) / (na + v) AS p,
-        |              CAST(ccb + 1 AS DOUBLE) / (nb + v) AS q
-        |         FROM j, t)
-        |SELECT round(sum(p * ln(p / q)), 6) AS kl_ab,
-        |       round(sum(q * ln(q / p)), 6) AS kl_ba,
-        |       round((sum(p * ln(p / ((p + q) / 2.0)))
-        |              + sum(q * ln(q / ((p + q) / 2.0)))) / 2.0, 6) AS js
-        |  FROM pq""".stripMargin,
-    // BM25 re-derived with IEEE-identical arithmetic: long ops stay long
-    // until the first 0.5 add; avgdl is one double division of exact
-    // integer sum/count; Lucene +1 idf; rounded-score ranking at the cutoff
-    "text_bm25_search" ->
-      s"""WITH $bm25Ctes
-        |SELECT doc_id, round(sum(s), 6) AS score
-        |  FROM sc GROUP BY doc_id
-        | ORDER BY score DESC, doc_id LIMIT 25""".stripMargin,
-    // persisted index at build ≡ the in-memory operator — same oracle
-    "text_bm25_index_search" ->
-      s"""WITH $bm25Ctes
-        |SELECT doc_id, round(sum(s), 6) AS score
-        |  FROM sc GROUP BY doc_id
-        | ORDER BY score DESC, doc_id LIMIT 25""".stripMargin,
-    // grown index: FROZEN build-slice stats, whole-corpus postings/df
-    "text_bm25_index_grow" ->
-      s"""WITH ${bm25CtesWith("WHERE doc_id < 250")}
-        |SELECT doc_id, round(sum(s), 6) AS score
-        |  FROM sc GROUP BY doc_id
-        | ORDER BY score DESC, doc_id LIMIT 25""".stripMargin,
-    // grown + REFRESHED index ≡ the in-memory bm25 over the whole corpus
-    // (the same plain bm25 oracle as the fresh-index gate) — a refresh
-    // that missed the appended postings, or one that kept the frozen
-    // slice stats, hash-fails against this
-    "text_bm25_index_refresh" ->
-      s"""WITH $bm25Ctes
-        |SELECT doc_id, round(sum(s), 6) AS score
-        |  FROM sc GROUP BY doc_id
-        | ORDER BY score DESC, doc_id LIMIT 25""".stripMargin,
-    // PMI re-derived with the identical division tree: (c12/nb) /
-    // ((c1/nu) * (c2/nu)), exact long totals divided once, round 6
-    "text_collocations" ->
-      """WITH d AS (SELECT regexp_split_to_array(text, '\s+') AS t FROM documents),
-        |uni AS (SELECT w, count(*) AS c FROM (SELECT unnest(t) AS w FROM d) x GROUP BY w),
-        |bg AS (SELECT t[CAST(i AS INT)] AS w1, t[CAST(i AS INT) + 1] AS w2, count(*) AS pair_count
-        |         FROM d, unnest(range(1, len(t))) AS u(i)
-        |        WHERE len(t) >= 2 GROUP BY 1, 2),
-        |tot AS (SELECT (SELECT CAST(sum(pair_count) AS BIGINT) FROM bg) AS nb,
-        |               (SELECT CAST(sum(c) AS BIGINT) FROM uni) AS nu)
-        |SELECT w1, w2, pair_count,
-        |       round(ln((CAST(pair_count AS DOUBLE) / CAST(nb AS DOUBLE)) /
-        |                ((CAST(u1.c AS DOUBLE) / CAST(nu AS DOUBLE)) *
-        |                 (CAST(u2.c AS DOUBLE) / CAST(nu AS DOUBLE)))), 6) AS pmi
-        |  FROM bg JOIN uni u1 ON bg.w1 = u1.w
-        |          JOIN uni u2 ON bg.w2 = u2.w, tot
-        | WHERE pair_count >= 5
-        | ORDER BY pmi DESC, w1, w2 LIMIT 40""".stripMargin,
-    // Stupid Backoff re-derived: bigram count over unigram-context count
-    // when the reference saw the pair, else alpha * add-one unigram;
-    // identical CAST/paren structure so the doubles match bit-for-bit
-    "text_bigram_surprisal" ->
-      """WITH d AS (SELECT doc_id, regexp_split_to_array(text, '\s+') AS t FROM documents),
-        |db AS (SELECT doc_id, t[CAST(i AS INT)] AS w1, t[CAST(i AS INT) + 1] AS w2
-        |         FROM d, unnest(range(1, len(t))) AS u(i)
-        |        WHERE len(t) >= 2),
-        |rb AS (SELECT w1, w2, count(*) AS cb FROM db WHERE doc_id % 10 = 0 GROUP BY w1, w2),
-        |f AS (SELECT w, count(*) AS c
-        |        FROM (SELECT unnest(t) AS w FROM d WHERE doc_id % 10 = 0) rt GROUP BY w),
-        |nv AS (SELECT sum(c) AS n, count(*) AS v FROM f),
-        |sc AS (SELECT db.doc_id,
-        |              CASE WHEN rb.cb IS NOT NULL
-        |                   THEN CAST(rb.cb AS DOUBLE) / CAST(f1.c AS DOUBLE)
-        |                   ELSE 0.4 * (CAST(coalesce(f2.c, 0) + 1 AS DOUBLE)
-        |                               / CAST(nv.n + nv.v AS DOUBLE)) END AS s
-        |         FROM db LEFT JOIN rb ON db.w1 = rb.w1 AND db.w2 = rb.w2
-        |                 LEFT JOIN f f1 ON db.w1 = f1.w
-        |                 LEFT JOIN f f2 ON db.w2 = f2.w, nv)
-        |SELECT doc_id, count(*) AS n_bigrams,
-        |       round(avg(-ln(s)), 6) AS avg_surprisal
-        |  FROM sc GROUP BY doc_id""".stripMargin,
-    // interpolated Kneser–Ney re-derived: context totals / distinct
-    // continuations / distinct contexts all from ONE grouped bigram count,
-    // the add-one continuation floor, and the identical CAST/paren
-    // structure so the doubles match bit-for-bit before round 6
-    "text_kn_bigram_ppl" ->
-      """WITH d AS (SELECT doc_id, regexp_split_to_array(text, '\s+') AS t FROM documents),
-        |db AS (SELECT doc_id, t[CAST(i AS INT)] AS w1, t[CAST(i AS INT) + 1] AS w2
-        |         FROM d, unnest(range(1, len(t))) AS u(i)
-        |        WHERE len(t) >= 2),
-        |rb AS (SELECT w1, w2, count(*) AS cb FROM db WHERE doc_id % 10 = 0 GROUP BY w1, w2),
-        |cx AS (SELECT w1, sum(cb) AS c1, count(*) AS n1f FROM rb GROUP BY w1),
-        |ct AS (SELECT w2, count(*) AS n1b FROM rb GROUP BY w2),
-        |tot AS (SELECT (SELECT count(*) FROM rb) AS b,
-        |               (SELECT count(DISTINCT w) FROM
-        |                  (SELECT unnest(t) AS w FROM d WHERE doc_id % 10 = 0) rt) AS v),
-        |sc AS (SELECT db.doc_id,
-        |              CASE WHEN cx.c1 IS NOT NULL
-        |                   THEN (greatest(CAST(coalesce(rb.cb, 0) AS DOUBLE) - 0.75, 0.0)
-        |                         + 0.75 * CAST(cx.n1f AS DOUBLE)
-        |                              * (CAST(coalesce(ct.n1b, 0) + 1 AS DOUBLE)
-        |                                 / CAST(tot.b + tot.v AS DOUBLE)))
-        |                        / CAST(cx.c1 AS DOUBLE)
-        |                   ELSE CAST(coalesce(ct.n1b, 0) + 1 AS DOUBLE)
-        |                        / CAST(tot.b + tot.v AS DOUBLE) END AS p
-        |         FROM db LEFT JOIN rb ON db.w1 = rb.w1 AND db.w2 = rb.w2
-        |                 LEFT JOIN cx ON db.w1 = cx.w1
-        |                 LEFT JOIN ct ON db.w2 = ct.w2, tot)
-        |SELECT doc_id, count(*) AS n_bigrams,
-        |       round(avg(-ln(p)), 6) AS avg_kn_surprisal
-        |  FROM sc GROUP BY doc_id""".stripMargin,
-    // CCNet §3.3 head/middle/tail: per-LANGUAGE surprisal terciles — the
-    // same quantile_cont formula the sampling_quantile_bins gate proved
-    // bit-identical to Spark's interpolated percentile; values ON a
-    // threshold fall LOWER (strict >), the groupQuantileBins contract
-    "pipeline_ccnet_buckets" ->
-      s"""WITH $surprisalCtes,
-        |sc AS (SELECT tok.doc_id,
-        |              round(avg(ln(CAST(n.n AS DOUBLE) / CAST(f.f AS DOUBLE))), 6) AS avg_surprisal
-        |         FROM tok JOIN f USING (w), n GROUP BY tok.doc_id),
-        |j AS (SELECT d.doc_id, d.lang, sc.avg_surprisal FROM documents d JOIN sc USING (doc_id)),
-        |thr AS (SELECT lang, quantile_cont(avg_surprisal, [1.0/3, 2.0/3]) AS th
-        |          FROM j GROUP BY lang)
-        |SELECT j.doc_id, j.lang, j.avg_surprisal,
-        |       (['head','middle','tail'])[1 + len(list_filter(thr.th, x -> j.avg_surprisal > x))] AS bucket
-        |  FROM j LEFT JOIN thr USING (lang)""".stripMargin,
-    // the trainer's first argmax round, re-derived: char symbols + '</w>',
-    // adjacent pairs weighted by word occurrences, (count DESC, l, r) order
-    "text_bpe_first_merge" ->
-      """WITH w AS (SELECT unnest(regexp_split_to_array(text, '\s+')) AS word
-        |             FROM documents),
-        |s AS (SELECT list_append(regexp_split_to_array(word, ''), '</w>') AS sym FROM w),
-        |p AS (SELECT sym[CAST(i AS INT)] AS l, sym[CAST(i AS INT) + 1] AS r
-        |        FROM s, unnest(range(1, len(sym))) AS t(i))
-        |SELECT CAST(0 AS INT) AS rank, l AS "left", r AS "right",
-        |       count(*) AS pair_count
-        |  FROM p GROUP BY l, r
-        | ORDER BY pair_count DESC, l, r LIMIT 1""".stripMargin,
-    // BPE conservation contract: violations must be empty (see the gate)
-    "text_bpe_contract" ->
-      """SELECT CAST(NULL AS BIGINT) AS doc_id, CAST(NULL AS VARCHAR) AS orig,
-        |       CAST(NULL AS VARCHAR) AS rejoined
-        |  FROM documents WHERE FALSE""".stripMargin,
-    // Moore–Lewis cross-entropy difference vs the src0 target slice:
-    // identical smoothing formulation ((c+1)/(N+V) over the joint vocab)
-    "text_ce_diff" ->
-      """WITH tokr AS (SELECT doc_id, unnest(regexp_split_to_array(text, '\s+')) AS w
-        |                FROM documents),
-        |tokt AS (SELECT unnest(regexp_split_to_array(text, '\s+')) AS w
-        |           FROM documents WHERE source = 'src0'),
-        |fr AS (SELECT w, count(*) AS fr FROM tokr GROUP BY w),
-        |ft AS (SELECT w, count(*) AS ft FROM tokt GROUP BY w),
-        |vf AS (SELECT coalesce(fr.w, ft.w) AS w, coalesce(fr.fr, 0) AS fr,
-        |              coalesce(ft.ft, 0) AS ft
-        |         FROM fr FULL OUTER JOIN ft ON fr.w = ft.w),
-        |tot AS (SELECT sum(fr) AS nr, sum(ft) AS nt, count(*) AS v FROM vf)
-        |SELECT tokr.doc_id, count(*) AS n_tokens,
-        |       round(avg(ln(CAST(vf.ft + 1 AS DOUBLE) / CAST(tot.nt + tot.v AS DOUBLE))
-        |               - ln(CAST(vf.fr + 1 AS DOUBLE) / CAST(tot.nr + tot.v AS DOUBLE))), 6) AS ce_diff
-        |  FROM tokr JOIN vf USING (w), tot
-        | GROUP BY tokr.doc_id""".stripMargin,
-    // distinct-trigram novelty vs the doc_id%10=0 reference slice; string
-    // grams here ≡ Spark's hashed grams modulo 64-bit collisions
-    "text_novelty" ->
-      """WITH t AS (SELECT doc_id, regexp_split_to_array(text, '\s+') AS tk
-        |             FROM documents WHERE text IS NOT NULL),
-        |s AS (SELECT doc_id,
-        |             CASE WHEN len(tk) >= 3
-        |                  THEN list_distinct(list_transform(range(1, len(tk) - 1),
-        |                                     i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2]))
-        |                  ELSE [array_to_string(tk, ' ')] END AS sh
-        |        FROM t),
-        |ref AS (SELECT DISTINCT unnest(sh) AS g FROM s WHERE doc_id % 10 = 0),
-        |ds AS (SELECT doc_id, unnest(sh) AS g FROM s),
-        |seen AS (SELECT ds.doc_id, count(*) AS ns FROM ds JOIN ref USING (g)
-        |          GROUP BY ds.doc_id)
-        |SELECT s.doc_id, CAST(len(sh) AS BIGINT) AS n_grams,
-        |       CAST(coalesce(seen.ns, 0) AS BIGINT) AS n_seen,
-        |       CAST(len(sh) - coalesce(seen.ns, 0) AS DOUBLE)
-        |         / CAST(len(sh) AS DOUBLE) AS novelty
-        |  FROM s LEFT JOIN seen ON s.doc_id = seen.doc_id""".stripMargin,
-    "text_chunk_windows" ->
-      """WITH t AS (SELECT doc_id, regexp_split_to_array(text, '\s+') AS tk FROM documents),
-        |c AS (SELECT doc_id, tk, len(tk) AS n,
-        |             unnest(range(0, (len(tk) - 1) // 30 + 1)) AS cid
-        |        FROM t)
-        |SELECT doc_id, CAST(cid AS INT) AS chunk_id,
-        |       array_to_string(tk[cid*30+1 : cid*30+40], ' ') AS chunk_text,
-        |       CAST(least(40, n - cid*30) AS INT) AS n_chunk_tokens
-        |  FROM c""".stripMargin,
-    "text_normalize" ->
-      """SELECT doc_id,
-        |       trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]+', ' ', 'g'), '\s+', ' ', 'g')) AS norm_text,
-        |       length(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]+', ' ', 'g'), '\s+', ' ', 'g'))) AS n_chars_norm
-        |  FROM documents""".stripMargin,
-    "text_pii_redact" ->
-      """WITH pii AS (
-        |  SELECT doc_id,
-        |         text || ' contact u' || CAST(doc_id AS VARCHAR) || '@example.com'
-        |              || ' call 415-555-' || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')
-        |              || ' from 10.0.' || CAST(doc_id % 256 AS VARCHAR) || '.'
-        |              || CAST((doc_id // 256) % 256 AS VARCHAR) AS t
-        |    FROM documents)
-        |SELECT doc_id,
-        |       regexp_replace(regexp_replace(regexp_replace(t,
-        |         '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-        |         '\b\d{3}-\d{3}-\d{4}\b', '<PHONE>', 'g'),
-        |         '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '<IP>', 'g') AS redacted
-        |  FROM pii""".stripMargin,
-    "range_join_events" -> rangeJoinEventsSql,
-    // overlap of [ts, ts + (event_id % 60)s] spans; touching endpoints count
-    "interval_join_events" ->
-      """WITH c AS (SELECT event_id AS click_id,
-        |                  epoch_us(CAST(ts AS TIMESTAMP)) AS s,
-        |                  epoch_us(CAST(ts AS TIMESTAMP)) + (event_id % 60) * 1000000 AS e
-        |             FROM events WHERE event_type = 'click'),
-        |er AS (SELECT event_id AS error_id,
-        |              epoch_us(CAST(ts AS TIMESTAMP)) AS s,
-        |              epoch_us(CAST(ts AS TIMESTAMP)) + (event_id % 60) * 1000000 AS e
-        |         FROM events WHERE event_type = 'error')
-        |SELECT click_id, error_id FROM c, er
-        | WHERE c.s <= er.e AND er.s <= c.e""".stripMargin,
-    // the streaming band join must equal the batch range join exactly
-    "stream_correlated" -> rangeJoinEventsSql,
-    "text_term_stats" ->
-      """SELECT token, doc_freq, term_freq FROM (
-        |  SELECT tok AS token, count(DISTINCT doc_id) AS doc_freq, count(*) AS term_freq
-        |    FROM (SELECT doc_id, unnest(regexp_split_to_array(text, '\s+')) AS tok FROM documents) t
-        |   GROUP BY tok) s
-        | ORDER BY doc_freq DESC, token LIMIT 100""".stripMargin,
-    "join_salted_skew" ->
-      """SELECT event_id, e.user_id, user_total
-        |  FROM events e
-        |  JOIN (SELECT user_id, count(*) AS user_total FROM events GROUP BY user_id) d
-        |    ON e.user_id = d.user_id""".stripMargin,
-    "stream_windowed_counts" ->
-      """SELECT CAST(CAST(ts AS DATE) AS TIMESTAMP) AS window_start, event_type,
-        |       count(*) AS n_events, round(sum(value), 6) AS total_value
-        |  FROM events GROUP BY 1, 2""".stripMargin,
-    "dedup_exact" ->
-      """SELECT doc_id, text, lang, source, n_chars FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY lang, source ORDER BY doc_id) AS rn
-        |    FROM documents) x WHERE rn = 1""".stripMargin,
-    "dedup_fingerprint" ->
-      """SELECT doc_id, text, lang, source, n_chars FROM documents WHERE doc_id IN (
-        |  SELECT min(doc_id) FROM (
-        |    SELECT doc_id, md5(array_to_string(list_sort(list_distinct(regexp_split_to_array(text, '\s+'))), ' ')) AS fp
-        |      FROM documents) f
-        |  GROUP BY fp)""".stripMargin,
-    "dedup_keep_best" ->
-      """WITH fps AS (
-        |  SELECT doc_id, md5(array_to_string(list_sort(list_distinct(regexp_split_to_array(text, '\s+'))), ' ')) AS fp
-        |    FROM documents),
-        |dup AS (SELECT fp FROM fps GROUP BY fp HAVING count(*) > 1),
-        |members AS (SELECT f.doc_id, f.fp FROM fps f JOIN dup USING (fp)),
-        |winners AS (SELECT doc_id FROM (
-        |  SELECT m.doc_id, row_number() OVER (PARTITION BY m.fp
-        |           ORDER BY d.n_chars DESC, d.doc_id) AS rn
-        |    FROM members m JOIN documents d USING (doc_id)) x WHERE rn = 1)
-        |SELECT doc_id, text, lang, source, n_chars FROM documents
-        | WHERE doc_id NOT IN (SELECT doc_id FROM members)
-        |UNION ALL
-        |SELECT doc_id, text, lang, source, n_chars FROM documents
-        | WHERE doc_id IN (SELECT doc_id FROM winners)""".stripMargin,
-    "dedup_incremental" ->
-      """WITH fps AS (
-        |  SELECT doc_id, md5(array_to_string(list_sort(list_distinct(regexp_split_to_array(text, '\s+'))), ' ')) AS fp
-        |    FROM documents WHERE text IS NOT NULL),
-        |corpus AS (SELECT DISTINCT fp FROM fps WHERE doc_id < 250),
-        |keep AS (SELECT min(doc_id) AS doc_id FROM fps
-        |          WHERE doc_id >= 250 AND fp NOT IN (SELECT fp FROM corpus)
-        |          GROUP BY fp)
-        |SELECT doc_id, text, lang, source, n_chars FROM documents
-        | WHERE doc_id IN (SELECT doc_id FROM keep)""".stripMargin,
-    "dedup_ngram_jaccard" -> jaccardPairsSql,
-    // brute-force batch×corpus Jaccard at the verified-exact operating point
-    "dedup_incremental_fuzzy" -> incrementalFuzzySql,
-    // the STREAMING ingest path must land exactly the batch path's survivor
-    // set: same index split, same threshold, same brute-force oracle
-    "stream_ingest_dedup" -> incrementalFuzzySql,
-    // two-stage brute force: batch-1 survivors join the reference corpus
-    // before batch 2 is compared (the growing-index loop's oracle)
-    "dedup_incremental_fuzzy_grow" ->
-      s"""$trigramCte,
-         |surv1 AS (SELECT b.doc_id, b.sh FROM s b
-         |           WHERE b.doc_id >= 200 AND b.doc_id < 350
-         |             AND NOT EXISTS (
-         |               SELECT 1 FROM s c WHERE c.doc_id < 200
-         |                  AND len(list_intersect(b.sh, c.sh))::DOUBLE
-         |                        / len(list_distinct(b.sh || c.sh)) >= 0.8)),
-         |arch AS (SELECT sh FROM s WHERE doc_id < 200
-         |         UNION ALL SELECT sh FROM surv1),
-         |hits AS (SELECT DISTINCT b.doc_id
-         |           FROM s b JOIN arch c ON b.doc_id >= 350
-         |          WHERE len(list_intersect(b.sh, c.sh))::DOUBLE
-         |                  / len(list_distinct(b.sh || c.sh)) >= 0.8)
-         |SELECT * FROM documents
-         | WHERE doc_id >= 350 AND text IS NOT NULL
-         |   AND doc_id NOT IN (SELECT doc_id FROM hits)""".stripMargin,
-    "window_global_ordinal" ->
-      """SELECT doc_id, row_number() OVER (ORDER BY doc_id) - 1 AS ordinal
-        |  FROM documents""".stripMargin,
-    "sampling_split_assign" ->
-      s"""SELECT doc_id,
-         |       CASE WHEN doc_id IS NULL THEN NULL
-         |            WHEN h < 800000 THEN 'train'
-         |            WHEN h < 900000 THEN 'val'
-         |            ELSE 'test' END AS split
-         |  FROM (SELECT doc_id, ${duckIdHash("doc_id")} % 1000000 AS h FROM documents) t""".stripMargin,
-    "dedup_edit_distance" ->
-      // the unblocked-within-maxDist contract: same language, full lengths
-      // within 5, prefix edit distance within 5 — no length-bucket blindness
-      """SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |       levenshtein(substr(a.text, 1, 40), substr(b.text, 1, 40)) AS edit_dist
-        |  FROM documents a JOIN documents b
-        |    ON a.lang = b.lang AND a.doc_id < b.doc_id
-        |   AND abs(length(a.text) - length(b.text)) <= 5
-        | WHERE levenshtein(substr(a.text, 1, 40), substr(b.text, 1, 40)) <= 5""".stripMargin,
-    "dedup_decontaminate" ->
-      s"""$trigramCte,
-         |bl AS (SELECT DISTINCT unnest(sh) AS g FROM s WHERE doc_id < 10),
-         |ds AS (SELECT doc_id, unnest(sh) AS g FROM s WHERE doc_id >= 10),
-         |hits AS (SELECT ds.doc_id, count(*) AS h FROM ds JOIN bl USING (g)
-         |          GROUP BY ds.doc_id)
-         |SELECT d.* FROM documents d
-         | WHERE d.doc_id >= 10
-         |   AND d.doc_id NOT IN (SELECT doc_id FROM hits WHERE h >= 2)""".stripMargin,
-    // exact NOT-IN by content fingerprint (left-anti null semantics: NULL
-    // fingerprints kept, blocklist NULLs ignored) — the bloom prefilter is
-    // an implementation detail the result must be invisible to
-    "dedup_decontaminate_bloom" ->
-      """WITH fp AS (SELECT doc_id,
-        |              md5(array_to_string(list_sort(list_distinct(
-        |                regexp_split_to_array(text, '\s+'))), ' ')) AS f
-        |              FROM documents),
-        |bl AS (SELECT DISTINCT f FROM fp WHERE doc_id % 7 = 2 AND f IS NOT NULL)
-        |SELECT d.doc_id, d.text, d.lang, d.source, d.n_chars
-        |  FROM documents d JOIN fp ON d.doc_id = fp.doc_id
-        | WHERE fp.f IS NULL OR fp.f NOT IN (SELECT f FROM bl)""".stripMargin,
-    // duplicated 8-gram spans, merged per doc (gaps-and-islands)
-    "dedup_span_exact" ->
-      s"""$spanIslandCtes
-         |SELECT doc_id, CAST(s AS BIGINT) AS span_start, CAST(e AS BIGINT) AS span_end,
-         |       CAST(e - s + 1 AS BIGINT) AS span_tokens
-         |  FROM sp""".stripMargin,
-    // span application: for docs WITH spans, tokens at covered indexes
-    // removed and survivors rejoined on single spaces; spanless docs pass
-    // through byte-identical (Spark keeps their ORIGINAL text, so the
-    // oracle must not retokenize them)
-    "dedup_span_strip" ->
-      s"""$spanIslandCtes,
-         |tok AS (SELECT doc_id, unnest(tk) AS w, generate_subscripts(tk, 1) AS i
-         |          FROM t WHERE doc_id IN (SELECT doc_id FROM sp)),
-         |cov AS (SELECT doc_id, unnest(range(s + 1, e + 2)) AS i FROM sp),
-         |keep AS (SELECT tok.doc_id, tok.w, tok.i FROM tok
-         |          WHERE NOT EXISTS (SELECT 1 FROM cov
-         |                             WHERE cov.doc_id = tok.doc_id AND cov.i = tok.i)),
-         |clean AS (SELECT doc_id, string_agg(w, ' ' ORDER BY i) AS ct
-         |            FROM keep GROUP BY doc_id)
-         |SELECT d.doc_id,
-         |       CASE WHEN d.doc_id IN (SELECT doc_id FROM sp)
-         |            THEN coalesce(c.ct, '') ELSE d.text END AS clean_text
-         |  FROM documents d LEFT JOIN clean c ON d.doc_id = c.doc_id""".stripMargin,
-    // the full CCNet chain in SQL: split/trim/drop-blank lines, digit-fold
-    // normalization, ROW_NUMBER first-occurrence (the Spark side's
-    // min(struct(doc, pos)) — identical winner: (doc_id, pos) is a total
-    // order), position-ordered reassembly, emptied docs dropped
-    "dedup_paragraphs_global" ->
-      s"""WITH $synthParaSql,
-         |ls AS (SELECT doc_id, string_split(text, chr(10)) AS l FROM pd
-         |        WHERE text IS NOT NULL),
-         |p0 AS (SELECT doc_id, i - 1 AS pos, trim(l[i]) AS para
-         |         FROM ls, unnest(range(1, len(l) + 1)) AS t(i)
-         |        WHERE len(trim(l[i])) > 0),
-         |r AS (SELECT doc_id, pos, para, row_number() OVER (
-         |               PARTITION BY lower(regexp_replace(para, '[0-9]', '0', 'g'))
-         |               ORDER BY doc_id, pos) AS rn
-         |        FROM p0),
-         |g AS (SELECT doc_id,
-         |             string_agg(CASE WHEN rn = 1 THEN para END, chr(10) ORDER BY pos) AS clean_text,
-         |             count(CASE WHEN rn = 1 THEN 1 END) AS n_paras_kept,
-         |             count(*) AS n_paras_total
-         |        FROM r GROUP BY doc_id)
-         |SELECT doc_id, clean_text, n_paras_kept, n_paras_total
-         |  FROM g WHERE n_paras_kept >= 1""".stripMargin,
-    "dedup_minhash_lsh" -> jaccardPairsSql, // verified-exact output; recall ≈ 0.9998 at t=0.8 (see Dedup)
-    // brute-force containment over all pairs (the prefix×full-index plan
-    // must reproduce it exactly)
-    "dedup_containment" ->
-      s"""$trigramCte,
-         |c AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         |             len(list_intersect(a.sh, b.sh))::DOUBLE
-         |               / least(len(a.sh), len(b.sh)) AS containment
-         |        FROM s a JOIN s b ON a.doc_id < b.doc_id)
-         |SELECT doc_a, doc_b, containment FROM c WHERE containment >= 0.9""".stripMargin,
-    "dedup_clusters" -> dedupClustersSql,
-    "graph_pagerank" -> rankSql(None),
-    // the same unrolled rank rounds over the web-graph head (htmlLinks →
-    // canonicalize → host → counted edges) — stage CTEs shared with the
-    // standalone gates
-    "pipeline_web_graph" -> rankSql(None, webGraphHeadSql),
-    "graph_trustrank" -> rankSql(Some(Seq("view", "signup"))),
-    "graph_hits" -> hitsSql(10),
-    "graph_communities" -> lpaSql(5),
-    "graph_bfs_distance" -> bfsSql(Seq("view", "signup"), 4),
-    "events_attribution_linear" ->
-      """WITH conv AS (SELECT event_id AS conv_id, user_id, ts AS cts
-        |                FROM events WHERE event_type = 'purchase'),
-        |touch AS (SELECT user_id, event_type AS touch_type, ts AS tts
-        |            FROM events WHERE event_type IN ('view', 'click')),
-        |j AS (SELECT DISTINCT conv_id, touch_type
-        |        FROM conv JOIN touch USING (user_id)
-        |       WHERE tts < cts AND tts >= cts - INTERVAL 7 DAY),
-        |c AS (SELECT conv_id, touch_type,
-        |             CAST(1.0 AS DOUBLE) / count(*) OVER (PARTITION BY conv_id) AS credit
-        |        FROM j)
-        |SELECT touch_type, count(*) AS n_conversions, round(sum(credit), 6) AS credit
-        |  FROM c GROUP BY 1""".stripMargin,
-    "events_rfm_segments" ->
-      """WITH rfm AS (SELECT user_id, max(epoch_us(ts)) AS last_us, count(*) AS f,
-        |                    CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS m
-        |               FROM events GROUP BY 1),
-        |mx AS (SELECT max(epoch_us(ts)) AS mx FROM events),
-        |w AS (SELECT user_id, mx - last_us AS r_us, f, m FROM rfm, mx),
-        |tr AS (SELECT quantile_cont(r_us, [0.25, 0.5, 0.75]) AS t FROM w),
-        |tf AS (SELECT quantile_cont(f, [0.25, 0.5, 0.75]) AS t FROM w),
-        |tm AS (SELECT quantile_cont(m, [0.25, 0.5, 0.75]) AS t FROM w),
-        |b AS (SELECT user_id,
-        |             1 + len(list_filter(tr.t, x -> r_us > x)) AS r_bin,
-        |             1 + len(list_filter(tf.t, x -> f > x)) AS f_bin,
-        |             1 + len(list_filter(tm.t, x -> m > x)) AS m_bin
-        |        FROM w, tr, tf, tm)
-        |SELECT user_id, r_bin, f_bin, m_bin,
-        |       CAST(r_bin AS VARCHAR) || CAST(f_bin AS VARCHAR) || CAST(m_bin AS VARCHAR) AS segment
-        |  FROM b""".stripMargin,
-    // degree-oriented wedge closure mirrored step for step: canonical a<b
-    // edges with support >= 2, (degree,id)-orientation, wedge self-join at
-    // the smallest corner, closing-edge probe, 3-corner count union
-    "graph_triangles" ->
-      s"""WITH $partCoocCtes,
-        |o AS (SELECT CASE WHEN da.dg < db.dg OR (da.dg = db.dg AND e.a < e.b) THEN e.a ELSE e.b END AS u,
-        |             CASE WHEN da.dg < db.dg OR (da.dg = db.dg AND e.a < e.b) THEN e.b ELSE e.a END AS v,
-        |             CASE WHEN da.dg < db.dg OR (da.dg = db.dg AND e.a < e.b) THEN db.dg ELSE da.dg END AS dv
-        |        FROM e JOIN deg da ON e.a = da.node JOIN deg db ON e.b = db.node),
-        |w AS (SELECT x.u, x.v AS v1, y.v AS v2 FROM o x JOIN o y ON x.u = y.u
-        |       WHERE x.dv < y.dv OR (x.dv = y.dv AND x.v < y.v)),
-        |t AS (SELECT w.u, w.v1, w.v2 FROM w JOIN o ON w.v1 = o.u AND w.v2 = o.v)
-        |SELECT node, count(*) AS triangles FROM (
-        |  SELECT u AS node FROM t UNION ALL SELECT v1 FROM t UNION ALL SELECT v2 FROM t)
-        | GROUP BY node""".stripMargin,
-    // distance-2 non-edges scored by shared-neighbor count + neighborhood
-    // Jaccard — the same symmetric-adjacency wedge join and exact integer
-    // ratio as Graphs.linkPrediction
-    "graph_link_prediction" ->
-      s"""WITH $partCoocCtes,
-        |adj AS (SELECT a AS x, b AS y FROM e UNION ALL SELECT b, a FROM e),
-        |cn AS (SELECT v1.y AS v, v2.y AS w, count(*) AS cn
-        |         FROM adj v1 JOIN adj v2 ON v1.x = v2.x AND v1.y < v2.y
-        |        GROUP BY 1, 2 HAVING count(*) >= 2),
-        |ne AS (SELECT cn.v, cn.w, cn.cn FROM cn
-        |         LEFT JOIN e ON cn.v = e.a AND cn.w = e.b
-        |        WHERE e.a IS NULL)
-        |SELECT v AS node_a, w AS node_b, cn,
-        |       round(CAST(cn AS DOUBLE) / (da.dg + db.dg - cn), 6) AS jaccard
-        |  FROM ne JOIN deg da ON v = da.node JOIN deg db ON w = db.node""".stripMargin,
-    "ts_autocorr_daily" ->
-      """WITH daily AS (SELECT event_type, CAST(ts AS DATE) AS day, count(*) AS x
-        |                 FROM events GROUP BY 1, 2),
-        |p AS (SELECT event_type, x,
-        |             lag(x) OVER (PARTITION BY event_type ORDER BY day) AS y
-        |        FROM daily),
-        |g AS (SELECT event_type, count(*) AS n, sum(x) AS sx, sum(y) AS sy,
-        |             sum(x * y) AS sxy, sum(x * x) AS sxx, sum(y * y) AS syy
-        |        FROM p WHERE y IS NOT NULL GROUP BY 1)
-        |SELECT event_type, n AS n_pairs,
-        |       CASE WHEN CAST(n * sxx - sx * sx AS DOUBLE) > 0.0
-        |             AND CAST(n * syy - sy * sy AS DOUBLE) > 0.0
-        |            THEN round(CAST(n * sxy - sx * sy AS DOUBLE) /
-        |                       (sqrt(CAST(n * sxx - sx * sx AS DOUBLE)) *
-        |                        sqrt(CAST(n * syy - sy * sy AS DOUBLE))), 6)
-        |       END AS autocorr
-        |  FROM g""".stripMargin,
-    "agg_distinct_rollup" ->
-      """SELECT event_type, day, count(DISTINCT user_id) AS n_users, count(*) AS n_events
-        |  FROM (SELECT event_type, CAST(ts AS DATE) AS day, user_id FROM events) t
-        | GROUP BY ROLLUP (event_type, day)""".stripMargin,
-    "events_survival_retention" ->
-      """WITH span AS (SELECT user_id,
-        |                     date_diff('day', min(CAST(ts AS DATE)), max(CAST(ts AS DATE))) AS m
-        |                FROM events GROUP BY 1),
-        |h AS (SELECT m, count(*) AS cnt FROM span GROUP BY 1)
-        |SELECT m AS k,
-        |       CAST(sum(cnt) OVER (ORDER BY m DESC ROWS UNBOUNDED PRECEDING) AS BIGINT) AS survivors,
-        |       round(CAST(sum(cnt) OVER (ORDER BY m DESC ROWS UNBOUNDED PRECEDING) AS DOUBLE)
-        |             / CAST(sum(cnt) OVER () AS DOUBLE), 6) AS fraction
-        |  FROM h""".stripMargin,
-    "events_retention_cohorts" ->
-      """WITH uw AS (SELECT DISTINCT user_id,
-        |         CAST(floor((CAST(ts AS DATE) - DATE '1970-01-01') / 7.0) AS BIGINT) AS week
-        |       FROM events),
-        |ch AS (SELECT user_id, min(week) AS cohort_week FROM uw GROUP BY 1),
-        |sz AS (SELECT cohort_week, count(*) AS cohort_n FROM ch GROUP BY 1),
-        |act AS (SELECT ch.cohort_week, uw.week - ch.cohort_week AS week_offset,
-        |               count(DISTINCT uw.user_id) AS active_n
-        |          FROM uw JOIN ch USING (user_id) GROUP BY 1, 2)
-        |SELECT act.cohort_week, act.week_offset, act.active_n, sz.cohort_n,
-        |       round(CAST(act.active_n AS DOUBLE) / sz.cohort_n, 6) AS retention
-        |  FROM act JOIN sz USING (cohort_week)""".stripMargin,
-    "graph_degree_stats" ->
-      s"""$graphHeadSql,
-        |o AS (SELECT src AS node, count(*) AS out_deg, sum(w) AS out_w FROM e GROUP BY 1),
-        |i AS (SELECT dst AS node, count(*) AS in_deg, sum(w) AS in_w FROM e GROUP BY 1),
-        |r AS (SELECT e.src AS node, count(*) AS n_reciprocal
-        |        FROM e WHERE EXISTS (SELECT 1 FROM e e2 WHERE e2.src = e.dst AND e2.dst = e.src)
-        |       GROUP BY 1)
-        |SELECT n.node, coalesce(out_deg, 0) AS out_deg, coalesce(out_w, 0.0) AS out_w,
-        |       coalesce(in_deg, 0) AS in_deg, coalesce(in_w, 0.0) AS in_w,
-        |       coalesce(n_reciprocal, 0) AS n_reciprocal
-        |  FROM nodes n LEFT JOIN o USING (node) LEFT JOIN i USING (node)
-        |       LEFT JOIN r USING (node)""".stripMargin,
-    // weekday(day) in Spark is 0=Monday; DuckDB's isodow is 1=Monday → −1
-    "ts_seasonal_anomaly" ->
-      """WITH daily AS (SELECT event_type, CAST(ts AS DATE) AS day, count(*) AS x
-        |                 FROM events GROUP BY 1, 2),
-        |d2 AS (SELECT event_type, day, x, CAST(isodow(day) - 1 AS INT) AS dow FROM daily),
-        |g AS (SELECT event_type, day, x, dow,
-        |             count(*) OVER w AS n, sum(x) OVER w AS sx,
-        |             sum(x * x) OVER w AS sxx
-        |        FROM d2 WINDOW w AS (PARTITION BY event_type, dow))
-        |SELECT event_type, day, x AS n_events, dow, n AS dow_days,
-        |       CASE WHEN n >= 2 AND CAST(n * sxx - sx * sx AS DOUBLE)
-        |                            / CAST(n * n AS DOUBLE) > 0.0
-        |            THEN round((CAST(x AS DOUBLE) - CAST(sx AS DOUBLE) / CAST(n AS DOUBLE))
-        |                       / sqrt(CAST(n * sxx - sx * sx AS DOUBLE) / CAST(n * n AS DOUBLE)), 6)
-        |       END AS z_score
-        |  FROM g""".stripMargin,
-    "window_pareto_deciles" ->
-      """WITH rev AS (SELECT o_custkey, sum(CAST(o_totalprice AS DECIMAL(18,2))) AS rev
-        |               FROM orders GROUP BY 1),
-        |t AS (SELECT sum(rev) AS total, count(*) AS n FROM rev),
-        |o AS (SELECT rev, row_number() OVER (ORDER BY rev DESC, o_custkey) - 1 AS ord
-        |        FROM rev),
-        |d AS (SELECT CAST(ord * 10 // n AS INT) + 1 AS decile,
-        |             count(*) AS n_customers, sum(rev) AS drev
-        |        FROM o, t GROUP BY 1)
-        |SELECT decile, n_customers,
-        |       round(CAST(drev AS DOUBLE) / CAST(total AS DOUBLE), 6) AS rev_share,
-        |       round(CAST(sum(drev) OVER (ORDER BY decile ROWS UNBOUNDED PRECEDING) AS DOUBLE)
-        |             / CAST(total AS DOUBLE), 6) AS cum_share
-        |  FROM d, t""".stripMargin,
-    "agg_gini_segments" ->
-      """WITH j AS (SELECT c_mktsegment, o_orderkey,
-        |                  CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
-        |             FROM orders JOIN customer ON o_custkey = c_custkey),
-        |r AS (SELECT c_mktsegment, cents,
-        |             row_number() OVER (PARTITION BY c_mktsegment
-        |                 ORDER BY cents, o_orderkey) AS i
-        |        FROM j)
-        |SELECT c_mktsegment, count(*) AS n,
-        |       round((2.0 * CAST(sum(CAST(i AS HUGEINT) * cents) AS DOUBLE)
-        |              - CAST(count(*) + 1 AS DOUBLE) * CAST(sum(cents) AS DOUBLE))
-        |             / (CAST(count(*) AS DOUBLE) * CAST(sum(cents) AS DOUBLE)), 6) AS gini
-        |  FROM r GROUP BY 1""".stripMargin,
-    "events_conversion_lag" ->
-      """WITH fv AS (SELECT user_id, min(ts) AS first_view FROM events
-        |             WHERE event_type = 'view' GROUP BY 1),
-        |lg AS (SELECT e.user_id,
-        |              min(epoch_us(e.ts)) - epoch_us(first_view) AS lag_us
-        |         FROM events e JOIN fv USING (user_id)
-        |        WHERE e.event_type = 'purchase' AND e.ts > first_view
-        |        GROUP BY e.user_id, first_view)
-        |SELECT count(*) AS n_converted,
-        |       round(quantile_cont(lag_us, 0.25) / 1000000.0, 6) AS p25_s,
-        |       round(quantile_cont(lag_us, 0.5) / 1000000.0, 6) AS p50_s,
-        |       round(quantile_cont(lag_us, 0.75) / 1000000.0, 6) AS p75_s,
-        |       round(quantile_cont(lag_us, 0.9) / 1000000.0, 6) AS p90_s
-        |  FROM lg""".stripMargin,
-    "events_markov_transitions" ->
-      """WITH t AS (SELECT event_type AS src_type,
-        |                  lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS dst_type
-        |             FROM events),
-        |c AS (SELECT src_type, dst_type, count(*) AS cnt FROM t
-        |       WHERE dst_type IS NOT NULL GROUP BY 1, 2)
-        |SELECT src_type, dst_type, cnt,
-        |       round(CAST(cnt AS DOUBLE) / sum(cnt) OVER (PARTITION BY src_type), 6) AS prob
-        |  FROM c""".stripMargin,
-    "events_basket_lift" ->
-      """WITH ut AS (SELECT DISTINCT user_id, event_type FROM events),
-        |n AS (SELECT count(DISTINCT user_id) AS n FROM ut),
-        |s AS (SELECT event_type, count(*) AS s1 FROM ut GROUP BY 1),
-        |p AS (SELECT x.event_type AS ta, y.event_type AS tb, count(*) AS supp_ab
-        |        FROM ut x JOIN ut y ON x.user_id = y.user_id AND x.event_type < y.event_type
-        |       GROUP BY 1, 2)
-        |SELECT ta, tb, supp_ab, sa.s1 AS supp_a, sb.s1 AS supp_b,
-        |       round(CAST(supp_ab AS DOUBLE) / sa.s1, 6) AS confidence,
-        |       round(CAST(supp_ab AS DOUBLE) * n.n / (sa.s1 * sb.s1), 6) AS lift
-        |  FROM p JOIN s sa ON p.ta = sa.event_type
-        |         JOIN s sb ON p.tb = sb.event_type, n""".stripMargin,
-    "window_gap_islands" ->
-      """WITH days AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events),
-        |g AS (SELECT user_id, day,
-        |             day - CAST(row_number() OVER (PARTITION BY user_id ORDER BY day) AS INT) AS grp
-        |        FROM days)
-        |SELECT user_id, min(day) AS island_start, max(day) AS island_end,
-        |       count(*) AS n_days
-        |  FROM g GROUP BY user_id, grp""".stripMargin,
-    "ts_ewma_daily" -> ewmaDailySql,
-    "dedup_simhash" ->
-      // full SimHash pipeline in SQL: 60-bit md5-prefix token hash (identical
-      // to Dedup.md5TokenHash), per-bit majority vote, hamming ≤ 3 pairs
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(regexp_split_to_array(text, '\s+')) AS tk FROM documents),
-        |th AS (
-        |  SELECT doc_id, CAST('0x' || substr(md5(tk), 1, 15) AS BIGINT) AS h FROM tok),
-        |votes AS (
-        |  SELECT doc_id, b.b AS bit,
-        |         sum(CASE WHEN (h >> b.b) & 1 = 1 THEN 1 ELSE -1 END) AS v
-        |    FROM th, (SELECT unnest(range(64)) AS b) b
-        |   GROUP BY doc_id, b.b),
-        |fp AS (
-        |  SELECT doc_id,
-        |         sum(CASE WHEN v > 0 THEN (1::BIGINT << bit) ELSE 0 END)::BIGINT AS simhash
-        |    FROM votes GROUP BY doc_id)
-        |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |       CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
-        |  FROM fp a JOIN fp b ON a.doc_id < b.doc_id
-        | WHERE bit_count(xor(a.simhash, b.simhash)) <= 3""".stripMargin,
-    "dedup_embedding_cosine" ->
-      """SELECT a.vec_id AS id_a, b.vec_id AS id_b
-        |  FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-        | WHERE list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]) >= 0.45""".stripMargin,
-    // SemDeDup survivor set: brute-force cosine pairs → recursive-CTE
-    // components (min-id label) → per-cluster winner by (n_chars DESC,
-    // vec_id ASC) + all singletons
-    "dedup_semantic_keepbest" ->
-      s"""$embClusterCtes,
-         |q AS (SELECT em.vec_id, em.label, d.n_chars
-         |        FROM embeddings em JOIN documents d ON em.vec_id = d.doc_id),
-         |win AS (SELECT vec_id, label, n_chars FROM (
-         |          SELECT q.*, cl.cluster,
-         |                 row_number() OVER (PARTITION BY cl.cluster
-         |                     ORDER BY q.n_chars DESC, q.vec_id ASC) AS rn
-         |            FROM q JOIN cl ON q.vec_id = cl.node)
-         |         WHERE rn = 1)
-         |SELECT vec_id, label, n_chars FROM q
-         | WHERE vec_id NOT IN (SELECT node FROM cl)
-         |UNION ALL
-         |SELECT vec_id, label, n_chars FROM win""".stripMargin,
-    // trainer contract: violations must be empty (see the gate)
-    "pipeline_quality_classifier" ->
-      """SELECT CAST(NULL AS VARCHAR) AS check, CAST(NULL AS DOUBLE) AS value
-        |  FROM documents WHERE FALSE""".stripMargin,
-    // hard negatives: brute-force top-k with the query's cluster-mates
-    // excluded BEFORE the rank (same rank/tie convention as sim_topk)
-    "pipeline_hard_negatives" ->
-      s"""$embClusterCtes,
-         |mates AS (SELECT a.node AS qid, b.node AS nid
-         |            FROM cl a JOIN cl b ON a.cluster = b.cluster)
-         |SELECT query_id, neighbor_id FROM (
-         |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         |         row_number() OVER (PARTITION BY q.vec_id
-         |             ORDER BY list_cosine_similarity(q.embedding::DOUBLE[], c.embedding::DOUBLE[]) DESC,
-         |                      c.vec_id) AS rn
-         |    FROM embeddings q JOIN embeddings c ON q.vec_id <> c.vec_id
-         |   WHERE q.vec_id < 10
-         |     AND NOT EXISTS (SELECT 1 FROM mates m
-         |                      WHERE m.qid = q.vec_id AND m.nid = c.vec_id)) x
-         | WHERE rn <= 5""".stripMargin,
-    "dedup_cosine_lsh_routed" ->
-      """SELECT CAST(NULL AS VARCHAR) AS kind, CAST(NULL AS BIGINT) AS id_a,
-        |       CAST(NULL AS BIGINT) AS id_b
-        |  FROM embeddings WHERE FALSE""".stripMargin,
-    // the sharpen gate's contract is the same empty violation set — the
-    // escalation itself is certified structurally (the query cannot
-    // complete without it: the fixture exceeds the explicit budget at the
-    // caller's shape, which is the loud-refusal path otherwise)
-    "dedup_cosine_lsh_sharpen" ->
-      """SELECT CAST(NULL AS VARCHAR) AS kind, CAST(NULL AS BIGINT) AS id_a,
-        |       CAST(NULL AS BIGINT) AS id_b
-        |  FROM embeddings WHERE FALSE""".stripMargin,
-    "agg_user_sessions" -> userSessionsSql,
-    // streaming sessionize must reproduce the batch gap sessions exactly
-    "stream_sessions" -> userSessionsSql,
-    // the doubled stream deduped ≡ the table itself (event_id unique)
-    "stream_dedup" -> s"SELECT $evCols FROM events",
-    "stream_cdc_apply" ->
-      """SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id, event_type,
-        |       CASE WHEN event_id % 10 = 0 THEN value + 100 ELSE value END AS value,
-        |       props,
-        |       CASE WHEN event_id % 10 = 0 THEN 1 ELSE 0 END AS seq
-        |  FROM events""".stripMargin,
-    // exact-regime Misra–Gries (capacity > distinct tokens) ≡ GROUP BY
-    "agg_frequent_tokens" ->
-      """SELECT tok AS token, count(*) AS est_count
-        |  FROM (SELECT unnest(regexp_split_to_array(text, '\s+')) AS tok FROM documents) t
-        | GROUP BY tok""".stripMargin,
-    "agg_label_centroids" ->
-      """SELECT label, CAST(idx - 1 AS BIGINT) AS idx, round(avg(val), 6) AS value FROM (
-        |  SELECT label, unnest(embedding::DOUBLE[]) AS val,
-        |         generate_subscripts(embedding, 1) AS idx FROM embeddings) t
-        |GROUP BY label, idx""".stripMargin,
-    "sim_quantize_int8" ->
-      """SELECT vec_id, scale, CAST(idx - 1 AS BIGINT) AS idx,
-        |       CAST(floor(val * scale + 0.5) AS BIGINT) AS q
-        |  FROM (SELECT vec_id,
-        |               CASE WHEN m > 0 THEN 127.0 / m ELSE 0.0 END AS scale, val, idx
-        |          FROM (SELECT vec_id,
-        |                       list_max(list_transform(embedding::DOUBLE[], x -> abs(x))) AS m,
-        |                       unnest(embedding::DOUBLE[]) AS val,
-        |                       generate_subscripts(embedding, 1) AS idx
-        |                  FROM embeddings) t) s""".stripMargin,
-    "sim_topk" -> bruteForceTopKSql,
-    "sim_retrieval_ndcg" -> ndcgSql,
-    // RRF re-derived: the bm25 CTEs with a 50-pool cut, the cosine pool
-    "sim_bitext_margin" ->
-      """WITH av AS (SELECT vec_id AS a_id, embedding::DOUBLE[] AS v
-        |              FROM embeddings WHERE vec_id % 2 = 0),
-        |bv AS (SELECT vec_id AS b_id, embedding::DOUBLE[] AS v
-        |         FROM embeddings WHERE vec_id % 2 = 1),
-        |c AS (SELECT a_id, b_id, list_cosine_similarity(av.v, bv.v) AS cos FROM av, bv),
-        |r AS (SELECT a_id, b_id, cos,
-        |             row_number() OVER (PARTITION BY a_id ORDER BY cos DESC, b_id) AS rn_a,
-        |             row_number() OVER (PARTITION BY b_id ORDER BY cos DESC, a_id) AS rn_b
-        |        FROM c),
-        |da AS (SELECT a_id, sum(CAST(round(cos * 1000000.0) AS BIGINT)) AS ma
-        |         FROM r WHERE rn_a <= 4 GROUP BY 1),
-        |db AS (SELECT b_id, sum(CAST(round(cos * 1000000.0) AS BIGINT)) AS mb
-        |         FROM r WHERE rn_b <= 4 GROUP BY 1)
-        |SELECT r.a_id, r.b_id,
-        |       round(round(cos, 6) * 8000000.0 / CAST(ma + mb AS DOUBLE), 6) AS margin
-        |  FROM r JOIN da ON r.a_id = da.a_id JOIN db ON r.b_id = db.b_id
-        | WHERE rn_a = 1 AND rn_b = 1
-        | ORDER BY margin DESC, r.a_id""".stripMargin,
-    // against the vec_id=0 query row, both ranked by (rounded score, id),
-    // fused as CAST(1.0 AS DOUBLE)/(60+rank) sums over a full outer join
-    "sim_rrf_fusion" ->
-      s"""WITH $bm25Ctes,
-        |lp AS (SELECT doc_id, round(sum(s), 6) AS score
-        |         FROM sc GROUP BY doc_id
-        |        ORDER BY score DESC, doc_id LIMIT 50),
-        |lex AS (SELECT CAST(doc_id AS BIGINT) AS id,
-        |               row_number() OVER (ORDER BY score DESC, doc_id) AS lex_rank
-        |          FROM lp),
-        |vq AS (SELECT embedding FROM embeddings WHERE vec_id = 0),
-        |vs AS (SELECT CAST(c.vec_id AS BIGINT) AS id,
-        |              round(list_cosine_similarity(c.embedding::DOUBLE[],
-        |                                           vq.embedding::DOUBLE[]), 6) AS cs
-        |         FROM embeddings c, vq WHERE c.vec_id <> 0),
-        |vp AS (SELECT id, cs FROM vs ORDER BY cs DESC, id LIMIT 50),
-        |vec AS (SELECT id, row_number() OVER (ORDER BY cs DESC, id) AS vec_rank FROM vp)
-        |SELECT coalesce(lex.id, vec.id) AS id, lex.lex_rank, vec.vec_rank,
-        |       coalesce(CAST(1.0 AS DOUBLE) / (60 + lex.lex_rank), CAST(0.0 AS DOUBLE)) +
-        |       coalesce(CAST(1.0 AS DOUBLE) / (60 + vec.vec_rank), CAST(0.0 AS DOUBLE)) AS rrf
-        |  FROM lex FULL JOIN vec ON lex.id = vec.id
-        | ORDER BY rrf DESC, id LIMIT 20""".stripMargin,
-    "sim_kmeans_clusters" -> kmeansSql(8, 3, 6),
-    "sim_cluster_keywords" -> clusterKeywordsSql(8, 3, 6),
-    // per-label rounded mean centroids + the kmeans assignment recipe
-    // (round(|c|²−2·v·c, 6) argmin, ties to the lowest label)
-    "sim_centroid_confusion" ->
-      """WITH e AS MATERIALIZED (SELECT vec_id, label, embedding::DOUBLE[] AS v
-        |       FROM embeddings WHERE embedding IS NOT NULL AND label IS NOT NULL),
-        |m AS (SELECT label AS c, u.idx, round(avg(u.x), 6) AS m
-        |        FROM (SELECT label, unnest(v) AS x,
-        |                     generate_subscripts(v, 1) AS idx FROM e) u
-        |       GROUP BY 1, 2),
-        |cent AS MATERIALIZED (SELECT c, list(m ORDER BY idx) AS v FROM m GROUP BY c),
-        |a AS (SELECT vec_id, label, c AS predicted FROM (
-        |  SELECT e.vec_id, e.label, p.c,
-        |         row_number() OVER (PARTITION BY e.vec_id ORDER BY
-        |           round(list_sum(list_transform(p.v, x -> x * x))
-        |                 - list_dot_product(e.v, p.v) * 2.0, 6), p.c) AS rn
-        |    FROM e CROSS JOIN cent p) t WHERE rn = 1)
-        |SELECT label, predicted, count(*) AS n FROM a GROUP BY 1, 2""".stripMargin,
-    "sim_prototype_prune" -> prototypePruneSql(8, 3, 6, "0.25"),
-    "sampling_cluster_balanced" -> kmeansBalancedSql(8, 3, 6, 25),
-    "sim_ann_ivf" -> bruteForceTopKSql, // full-probe IVF ≡ brute force (see queries)
-    "sim_ann_ivf_persisted" -> bruteForceTopKSql, // persisted index, same exact point
-    "sim_ann_ivf_persisted_grow" -> bruteForceTopKSql, // grown index, same exact point
-    "sim_ann_rerank" -> bruteForceTopKSql, // SQ stage-1 + float re-rank, full probe
-    // IVF+SQ at full probe: DuckDB re-derives the identical int8 payload
-    // (same unit-norm, same 127/max|x| scale, same floor(x*scale+0.5)) and
-    // ranks by the same dequantized dot, ties by neighbor id
-    "sim_ann_ivf_sq" ->
-      """WITH u AS (SELECT vec_id,
-        |       list_transform(embedding::DOUBLE[], x ->
-        |         x / sqrt(list_sum(list_transform(embedding::DOUBLE[], y -> y*y)))) AS v
-        |     FROM embeddings),
-        |q8 AS (SELECT vec_id, v, CASE WHEN m > 0 THEN 127.0 / m ELSE 0.0 END AS scale
-        |       FROM (SELECT vec_id, v, list_max(list_transform(v, x -> abs(x))) AS m FROM u) t),
-        |qv AS (SELECT vec_id, scale, list_transform(v, x -> floor(x * scale + 0.5)) AS q FROM q8),
-        |sc AS (SELECT uq.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |              CASE WHEN c.scale > 0 THEN list_inner_product(uq.v, c.q) / c.scale
-        |                   ELSE 0.0 END AS cos
-        |         FROM u uq JOIN qv c ON uq.vec_id <> c.vec_id
-        |        WHERE uq.vec_id < 10)
-        |SELECT query_id, neighbor_id FROM (
-        |  SELECT query_id, neighbor_id,
-        |         row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rn
-        |    FROM sc) x WHERE rn <= 5""".stripMargin,
-    "mm_features" ->
-      """SELECT doc_id AS id, octet_length(encode(text)) AS n_bytes,
-        |       ascii(substr(text, 1, 1)) AS head_byte,
-        |       octet_length(encode(text)) // ((doc_id % 64 + 16) * (doc_id % 48 + 16)) AS frame_count
-        |  FROM documents""".stripMargin,
-    "mm_frame_counts" ->
-      "SELECT doc_id AS id, greatest(octet_length(encode(text)) // 64, 1) AS n_frames FROM documents",
-    "mm_resize" ->
-      """SELECT doc_id AS id,
-        |       least(octet_length(encode(text)), 384) AS n_bytes_out,
-        |       24 AS out_width,
-        |       ascii(substr(text, 1, 1)) AS head_byte
-        |  FROM documents""".stripMargin,
-    "mm_decode_real" ->
-      """SELECT o_orderkey AS id,
-        |       CAST(CASE WHEN o_orderkey % 2 = 0 THEN o_orderkey % 5 + 3 ELSE 0 END AS INT) AS width,
-        |       CAST(CASE WHEN o_orderkey % 2 = 0 THEN o_orderkey % 4 + 2 ELSE 0 END AS INT) AS height,
-        |       CASE WHEN o_orderkey % 2 = 0 THEN (o_orderkey % 5 + 3) * (o_orderkey % 4 + 2) ELSE 0 END AS n_pixels,
-        |       CASE WHEN o_orderkey % 2 = 1 THEN o_orderkey * 10 + 50 ELSE 0 END AS pcm_frames
-        |  FROM orders WHERE o_orderkey <= 32""".stripMargin,
-    // planted perceptual-twin pairs must all be found → violations empty
-    "mm_image_near_dup" ->
-      """SELECT CAST(NULL AS BIGINT) AS doc_a, CAST(NULL AS BIGINT) AS doc_b
-        |  FROM orders WHERE FALSE""".stripMargin,
-    // add-one NB: unseen tokens fold into n·ln(T+V), so only seen pairs join
-    "text_nb_classify" ->
-      s"""WITH $nbScoreCtes
-         |SELECT doc_id, gold, lang AS predicted, lang = gold AS correct
-         |  FROM sc QUALIFY row_number() OVER (PARTITION BY doc_id
-         |        ORDER BY s DESC, lang) = 1""".stripMargin,
-    // per-class P/R/F1 over the same NB predictions; F1 via the exact
-    // integer identity 2·tp/(n_gold + n_pred), undefined ratios NULL
-    "eval_nb_report" ->
-      s"""WITH $nbScoreCtes,
-         |pred AS (SELECT doc_id, gold, lang AS predicted
-         |           FROM sc QUALIFY row_number() OVER (PARTITION BY doc_id
-         |                 ORDER BY s DESC, lang) = 1),
-         |cells AS (SELECT gold AS g, predicted AS p, count(*) AS c
-         |            FROM pred GROUP BY 1, 2),
-         |gm AS (SELECT g AS label, CAST(sum(c) AS BIGINT) AS n_gold FROM cells GROUP BY 1),
-         |pm AS (SELECT p AS label, CAST(sum(c) AS BIGINT) AS n_pred FROM cells GROUP BY 1),
-         |tpx AS (SELECT g AS label, c AS tp FROM cells WHERE g = p)
-         |SELECT label,
-         |       coalesce(n_gold, 0) AS n_gold,
-         |       coalesce(n_pred, 0) AS n_pred,
-         |       coalesce(tp, 0) AS tp,
-         |       CASE WHEN coalesce(n_pred, 0) > 0
-         |            THEN round(CAST(coalesce(tp, 0) AS DOUBLE) / n_pred, 6) END AS precision,
-         |       CASE WHEN coalesce(n_gold, 0) > 0
-         |            THEN round(CAST(coalesce(tp, 0) AS DOUBLE) / n_gold, 6) END AS recall,
-         |       CASE WHEN coalesce(n_gold, 0) + coalesce(n_pred, 0) > 0
-         |            THEN round(2.0 * coalesce(tp, 0)
-         |                       / (coalesce(n_gold, 0) + coalesce(n_pred, 0)), 6) END AS f1
-         |  FROM gm FULL OUTER JOIN pm USING (label) LEFT JOIN tpx USING (label)""".stripMargin,
-    // CDF max-gap on the pooled distinct-value grid, identical divisions
-    "profile_ks_drift" ->
-      """WITH g AS (SELECT value AS v,
-        |                  sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS ca,
-        |                  sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS cb
-        |             FROM events
-        |            WHERE value IS NOT NULL AND event_type IN ('purchase', 'error')
-        |            GROUP BY 1),
-        |t AS (SELECT CAST(sum(ca) AS BIGINT) AS na, CAST(sum(cb) AS BIGINT) AS nb FROM g),
-        |c AS (SELECT v, sum(ca) OVER (ORDER BY v) AS cca,
-        |             sum(cb) OVER (ORDER BY v) AS ccb FROM g),
-        |d AS (SELECT v, abs(CAST(cca AS DOUBLE) / na - CAST(ccb AS DOUBLE) / nb) AS dd
-        |        FROM c, t),
-        |m AS (SELECT max(dd) AS mx FROM d)
-        |SELECT t.na AS n_a, t.nb AS n_b, round(m.mx, 6) AS ks_stat,
-        |       min(d.v) AS at_value
-        |  FROM d, m, t WHERE d.dd = m.mx GROUP BY 1, 2, 3""".stripMargin,
-    // Σcᵢ²/S² with HUGEINT squares, one double division
-    "agg_hhi_segments" ->
-      """WITH cu AS (SELECT c_mktsegment, c_custkey,
-        |                   sum(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS ci
-        |              FROM orders JOIN customer ON o_custkey = c_custkey
-        |             GROUP BY 1, 2)
-        |SELECT c_mktsegment, count(*) AS n_customers,
-        |       round(CAST(sum(CAST(ci AS HUGEINT) * ci) AS DOUBLE)
-        |             / (CAST(sum(ci) AS DOUBLE) * CAST(sum(ci) AS DOUBLE)), 6) AS hhi
-        |  FROM cu GROUP BY 1""".stripMargin,
-    // identical grid fill + per-pair IEEE slope + interpolated median
-    "ts_trend_theil_sen" ->
-      """WITH daily AS (SELECT event_type AS k, CAST(CAST(ts AS DATE) AS TIMESTAMP) AS day,
-        |                      count(*) AS x
-        |                 FROM events GROUP BY 1, 2),
-        |g AS (SELECT k, unnest(generate_series(mn, mx, INTERVAL 1 DAY)) AS day
-        |        FROM (SELECT k, min(day) AS mn, max(day) AS mx FROM daily GROUP BY 1)),
-        |f AS (SELECT g.k, g.day, coalesce(x, 0) AS x
-        |        FROM g LEFT JOIN daily ON g.k = daily.k AND g.day = daily.day),
-        |dd AS (SELECT k, datediff('day', min(day) OVER (PARTITION BY k), day) AS d, x
-        |         FROM f),
-        |p AS (SELECT a.k, CAST(b.x - a.x AS DOUBLE) / (b.d - a.d) AS s
-        |        FROM dd a JOIN dd b ON a.k = b.k AND a.d < b.d)
-        |SELECT k AS event_type, count(*) AS n_pairs,
-        |       round(quantile_cont(s, 0.5), 6) AS slope
-        |  FROM p GROUP BY 1""".stripMargin,
-    // the identical 5 peel rounds unrolled as chained CTEs
-    "graph_kcore" -> kcoreSql,
-    // exact top-5 votes, (votes DESC, label ASC) pick — the ndcg CTE shape
-    "sim_knn_classify" ->
-      """WITH q AS (SELECT vec_id AS query_id, label AS gold, embedding
-        |             FROM embeddings WHERE vec_id < 20),
-        |sc AS (SELECT q.query_id, q.gold, c.vec_id AS neighbor_id, c.label AS clabel,
-        |              list_cosine_similarity(q.embedding::DOUBLE[], c.embedding::DOUBLE[]) AS cos
-        |         FROM q JOIN embeddings c ON q.query_id <> c.vec_id),
-        |top AS (SELECT query_id, gold, clabel,
-        |               row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rnk
-        |          FROM sc QUALIFY rnk <= 5),
-        |v AS (SELECT query_id, gold, clabel, count(*) AS votes
-        |        FROM top GROUP BY 1, 2, 3)
-        |SELECT query_id, gold, clabel AS predicted, votes, clabel = gold AS correct
-        |  FROM v QUALIFY row_number() OVER (PARTITION BY query_id
-        |        ORDER BY votes DESC, clabel) = 1""".stripMargin,
-    // identical per-row double term (x·n/Σx)·ln(...), one grouped sum
-    "agg_theil_index" ->
-      """WITH j AS (SELECT c_mktsegment,
-        |                  CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
-        |             FROM orders JOIN customer ON o_custkey = c_custkey),
-        |t AS (SELECT c_mktsegment, count(*) AS n, sum(cents) AS sx FROM j GROUP BY 1)
-        |SELECT j.c_mktsegment, max(n) AS n,
-        |       round(sum((CAST(cents AS DOUBLE) * CAST(n AS DOUBLE) / CAST(sx AS DOUBLE))
-        |                 * ln(CAST(cents AS DOUBLE) * CAST(n AS DOUBLE) / CAST(sx AS DOUBLE)))
-        |             / CAST(max(n) AS DOUBLE), 6) AS theil
-        |  FROM j JOIN t USING (c_mktsegment) GROUP BY 1""".stripMargin,
-    // τ-a over the top-50-chars head per language: exact integer pair counts
-    "eval_kendall_tau" ->
-      """WITH s AS (SELECT doc_id, lang,
-        |                  CAST(len(regexp_split_to_array(text, '\s+')) AS BIGINT) AS n_tokens,
-        |                  CAST(length(text) AS BIGINT) AS n_chars_obs
-        |             FROM documents WHERE text IS NOT NULL),
-        |h AS (SELECT lang, doc_id, n_tokens, n_chars_obs,
-        |             row_number() OVER (PARTITION BY lang
-        |                 ORDER BY n_chars_obs DESC, doc_id) AS r1
-        |        FROM s QUALIFY r1 <= 50),
-        |r AS (SELECT lang, r1,
-        |             row_number() OVER (PARTITION BY lang
-        |                 ORDER BY n_tokens DESC, doc_id) AS r2
-        |        FROM h),
-        |p AS (SELECT a.lang, count(*) AS n_pairs,
-        |             sum(CASE WHEN a.r2 < b.r2 THEN 1 ELSE 0 END) AS concordant
-        |        FROM r a JOIN r b ON a.lang = b.lang AND a.r1 < b.r1
-        |       GROUP BY 1)
-        |SELECT lang, n_pairs, CAST(concordant AS BIGINT) AS concordant,
-        |       CAST(n_pairs - concordant AS BIGINT) AS discordant,
-        |       round((2.0 * concordant - n_pairs) / n_pairs, 6) AS tau
-        |  FROM p""".stripMargin,
-    // first same-label hit in the shared ndcg ranking CTEs → 1/rank
-    "sim_retrieval_mrr" ->
-      """WITH q AS (SELECT vec_id AS query_id, label AS qlabel, embedding
-        |             FROM embeddings WHERE vec_id < 20),
-        |sc AS (SELECT q.query_id, c.vec_id AS neighbor_id,
-        |              list_cosine_similarity(q.embedding::DOUBLE[], c.embedding::DOUBLE[]) AS cos,
-        |              CASE WHEN c.label = q.qlabel THEN 1 ELSE 0 END AS rel
-        |         FROM q JOIN embeddings c ON q.query_id <> c.vec_id),
-        |top AS (SELECT query_id, rel,
-        |               row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rnk
-        |          FROM sc QUALIFY rnk <= 10),
-        |fr AS (SELECT query_id, min(rnk) AS r FROM top WHERE rel = 1 GROUP BY 1)
-        |SELECT q.query_id, coalesce(round(1.0 / r, 6), 0.0) AS rr
-        |  FROM q LEFT JOIN fr USING (query_id)""".stripMargin,
-    // closed-form CUSUM: P_i − min(0, min prefix P) over n-scaled integer
-    // deviations; generate_series densifies gap days to real zeros
-    "ts_cusum_shift" ->
-      """WITH daily AS (SELECT event_type AS k, CAST(CAST(ts AS DATE) AS TIMESTAMP) AS day,
-        |                      count(*) AS x
-        |                 FROM events GROUP BY 1, 2),
-        |g AS (SELECT k, unnest(generate_series(mn, mx, INTERVAL 1 DAY)) AS day
-        |        FROM (SELECT k, min(day) AS mn, max(day) AS mx FROM daily GROUP BY 1)),
-        |f AS (SELECT g.k, g.day, coalesce(x, 0) AS x
-        |        FROM g LEFT JOIN daily ON g.k = daily.k AND g.day = daily.day),
-        |t AS (SELECT k, day, x,
-        |             count(*) OVER (PARTITION BY k) AS n,
-        |             sum(x) OVER (PARTITION BY k) AS sx
-        |        FROM f),
-        |c AS (SELECT k, day, x, n,
-        |             sum(CAST(n AS HUGEINT) * x - sx - n * 2)
-        |               OVER (PARTITION BY k ORDER BY day) AS cum
-        |        FROM t),
-        |m AS (SELECT k, day, x, n, cum,
-        |             least(min(cum) OVER (PARTITION BY k ORDER BY day), 0) AS mp
-        |        FROM c)
-        |SELECT k AS event_type, day, x AS n_events,
-        |       round(CAST(cum - mp AS DOUBLE) / CAST(n AS DOUBLE), 6) AS cusum,
-        |       CAST(cum - mp AS DOUBLE) > 5.0 * n AS shift_alarm
-        |  FROM m""".stripMargin,
-    // Newman degree assortativity over the co-occurrence graph: numerator
-    // and denominator each ONE exact HUGEINT cast to double once
-    "graph_assortativity" ->
-      """WITH op AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
-        |e0 AS (SELECT a.pk AS pa, b.pk AS pb FROM op a JOIN op b
-        |        ON a.ok = b.ok AND a.pk < b.pk
-        |        GROUP BY 1, 2 HAVING count(*) >= 2),
-        |und AS (SELECT DISTINCT least(pa, pb) AS a, greatest(pa, pb) AS b FROM e0),
-        |deg AS (SELECT node, count(*) AS dg FROM (
-        |          SELECT a AS node FROM und UNION ALL SELECT b FROM und)
-        |         GROUP BY 1),
-        |j AS (SELECT da.dg AS dj, db.dg AS dk
-        |        FROM und JOIN deg da ON und.a = da.node
-        |                 JOIN deg db ON und.b = db.node),
-        |s AS (SELECT CAST(count(*) AS HUGEINT) * 2 AS m2,
-        |             sum(CAST(dj AS HUGEINT) + dk) AS sj,
-        |             sum(2 * CAST(dj AS HUGEINT) * dk) AS sjk,
-        |             sum(CAST(dj AS HUGEINT) * dj + CAST(dk AS HUGEINT) * dk) AS sj2
-        |        FROM j)
-        |SELECT CAST(m2 / 2 AS BIGINT) AS n_edges,
-        |       CASE WHEN m2 * sj2 - sj * sj = 0 THEN NULL
-        |            ELSE round(CAST(m2 * sjk - sj * sj AS DOUBLE)
-        |                       / CAST(m2 * sj2 - sj * sj AS DOUBLE), 6) END AS assortativity
-        |  FROM s""".stripMargin,
-    // Mann–Whitney midrank AUC: tie group at cumulative count `cum` with n
-    // members occupies ranks (cum−n+1)..cum, so 2·Σ(pos midranks) =
-    // Σ np·(2·cum−n+1); the division happens once, in double
-    "eval_auc_purchase" ->
-      """WITH g AS (SELECT value AS s, count(*) AS n,
-        |                  sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS np
-        |             FROM events WHERE value IS NOT NULL GROUP BY 1),
-        |o AS (SELECT s, n, np, sum(n) OVER (ORDER BY s) AS cum FROM g),
-        |t AS (SELECT sum(CAST(np AS HUGEINT) * (2 * cum - n + 1)) AS r2,
-        |             CAST(sum(np) AS BIGINT) AS p,
-        |             CAST(sum(n - np) AS BIGINT) AS nn
-        |        FROM o)
-        |SELECT p AS n_pos, nn AS n_neg,
-        |       round((CAST(r2 AS DOUBLE) - CAST(p AS DOUBLE) * (CAST(p AS DOUBLE) + 1))
-        |             / (2.0 * CAST(p AS DOUBLE) * CAST(nn AS DOUBLE)), 6) AS auc
-        |  FROM t""".stripMargin,
-    "eval_calibration_bins" ->
-      """WITH mx AS (SELECT max(value) AS m FROM events WHERE value IS NOT NULL),
-        |b AS (SELECT least(greatest(CAST(floor(value / m * 10) AS INT), 0), 9) AS bin,
-        |             CAST(value AS DECIMAL(18,2)) AS v,
-        |             CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS y
-        |        FROM events, mx WHERE value IS NOT NULL)
-        |SELECT bin, count(*) AS n,
-        |       round(CAST(sum(v) AS DOUBLE) / CAST(count(*) AS DOUBLE)
-        |             / (SELECT m FROM mx), 6) AS mean_score,
-        |       round(CAST(sum(y) AS DOUBLE) / CAST(count(*) AS DOUBLE), 6) AS frac_pos
-        |  FROM b GROUP BY 1""".stripMargin,
-    "eval_langid_kappa" ->
-      s"""WITH $langScoreCtes,
-         |pred AS (SELECT doc_id, $predLangCase AS pred_lang FROM sc),
-         |j AS (SELECT p.pred_lang AS pl, d.lang AS gl
-         |        FROM pred p JOIN documents d USING (doc_id)
-         |       WHERE p.pred_lang IS NOT NULL AND d.lang IS NOT NULL),
-         |tot AS (SELECT count(*) AS n,
-         |               sum(CASE WHEN pl = gl THEN 1 ELSE 0 END) AS diag
-         |          FROM j),
-         |rm AS (SELECT pl AS lab, count(*) AS c FROM j GROUP BY 1),
-         |cm AS (SELECT gl AS lab, count(*) AS c FROM j GROUP BY 1),
-         |pe AS (SELECT coalesce(sum(CAST(rm.c AS HUGEINT) * cm.c), 0) AS sp
-         |         FROM rm JOIN cm USING (lab))
-         |SELECT CAST(n AS BIGINT) AS n,
-         |       round(CAST(diag AS DOUBLE) / CAST(n AS DOUBLE), 6) AS p_observed,
-         |       round(CAST(sp AS DOUBLE) / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)), 6) AS p_expected,
-         |       CASE WHEN sp = CAST(n AS HUGEINT) * n THEN NULL
-         |            ELSE round((CAST(diag AS DOUBLE) / CAST(n AS DOUBLE)
-         |                    - CAST(sp AS DOUBLE) / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)))
-         |                  / (1.0 - CAST(sp AS DOUBLE) / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE))), 6)
-         |       END AS kappa
-         |  FROM tot, pe""".stripMargin,
-    "privacy_k_anon_stats" ->
-      """SELECT c_mktsegment, c_nationkey, count(*) AS n,
-        |       CAST(count(DISTINCT CAST(floor(c_acctbal / 1000) AS BIGINT)) AS BIGINT) AS l_distinct,
-        |       count(*) >= 10 AS k_anonymous,
-        |       count(DISTINCT CAST(floor(c_acctbal / 1000) AS BIGINT)) >= 3 AS l_diverse
-        |  FROM customer GROUP BY 1, 2""".stripMargin,
-    "privacy_suppress_k" ->
-      """WITH g AS (SELECT c_mktsegment, c_nationkey, count(*) AS grp_n
-        |             FROM customer GROUP BY 1, 2)
-        |SELECT c_custkey,
-        |       CASE WHEN grp_n < 12 THEN '*' ELSE c.c_mktsegment END AS c_mktsegment,
-        |       CASE WHEN grp_n < 12 THEN '*' ELSE CAST(c.c_nationkey AS VARCHAR) END AS c_nationkey,
-        |       grp_n, grp_n < 12 AS suppressed
-        |  FROM customer c JOIN g USING (c_mktsegment, c_nationkey)""".stripMargin,
-    // independent-implementation cross-check of the codegen'd JaroWinkler
-    // kernel: DuckDB's comparator over every blocked candidate pair. The
-    // ORACLE MIRRORS THE ADAPTIVE BLOCKING ESTIMATOR (r18 review fix): the
-    // engine widens the prefix until Σ|L_p|·|R_p| fits 32·n, so a fixed
-    // 2-char oracle key would silently fork the gate the moment the corpus
-    // outgrows ~3.2 k names — instead the unrolled cb2..cb8 CTEs compute
-    // the same candidate estimates and `ch` picks the same minimal width
-    // (names are exactly 8 chars, so the engine's ≥8 fallback blocks
-    // identically to width 8), keeping the gate hash-exact at ANY SF
-    "dedup_name_linkage" -> nameLinkageAdaptiveSql,
-    // the JDBC round trip must hand back exactly what went in — the oracle
-    // is the parquet source slice itself
-    "o19_jdbc_roundtrip" ->
-      """SELECT c_custkey, c_name, c_acctbal
-        |  FROM customer WHERE c_custkey <= 200""".stripMargin,
-    // o20: the Derby post-state must equal the a5 composition — target rows
-    // outside the window + fresh (value+1) rows inside it, raw-datetime
-    // BETWEEN with the .997 day end on both sides
-    "o20_jdbc_window_reload" ->
-      s"""WITH base AS (SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id, event_type, value
-         |                FROM events WHERE event_id <= 2000)
-         |SELECT * FROM base
-         | WHERE CAST(ts AS DATE) <= DATE '2024-01-09'
-         |   AND ts NOT BETWEEN $evStartLit AND $evEndLit
-         |UNION ALL
-         |SELECT event_id, ts, user_id, event_type, value + 1 AS value FROM base
-         | WHERE ts BETWEEN $evStartLit AND $evEndLit""".stripMargin,
-    // o21: the Derby post-state must equal the a4 composition at the same
-    // bounded slice — unchanged target rows for unchanged keys + fresh
-    // (value+1) source rows for the changed keys
-    "o21_jdbc_upsert" ->
-      s"""WITH ev AS (SELECT event_id, ts, ts + (event_id % 7) * INTERVAL 1 DAY AS update_ts
-         |              FROM events WHERE event_id <= 2000),
-         |changed AS ($changedKeysSql),
-         |base AS (SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id, event_type, value
-         |           FROM events WHERE event_id <= 2000)
-         |SELECT * FROM base
-         | WHERE CAST(ts AS DATE) <= DATE '2024-01-09'
-         |   AND event_id NOT IN (SELECT event_id FROM changed)
-         |UNION ALL
-         |SELECT event_id, ts, user_id, event_type, value + 1 AS value FROM base
-         | WHERE event_id IN (SELECT event_id FROM changed)""".stripMargin,
-    // o22: the procedure's side effect (window row count + integer key sum)
-    // recomputed from the parquet source; DuckDB's BIGINT sum widens to
-    // HUGEINT, cast back to the procedure's declared type
-    "o22_jdbc_sproc" ->
-      s"""SELECT count(*) AS n_rows, CAST(sum(event_id) AS BIGINT) AS sum_ids
-         |  FROM events
-         | WHERE event_id <= 2000
-         |   AND ts BETWEEN $evStartLit AND $evEndLit""".stripMargin
-    // every gated query has an oracle: the approximate ops are gated at their
-    // exact operating points (sim_ann_ivf at full probe, dedup_minhash_lsh
-    // verified-exact) with the approximate points covered by specs
-  )
+  /** `SparkEntry.queries`: gate name → (SparkSession, sfDir) => DataFrame. */
+  lazy val all: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map { case (name, g) => name -> g.body }
+
+  /** `SparkEntry.oracleSql`: gate name → its DuckDB oracle. */
+  lazy val oracles: Map[String, String] = registry.map { case (name, g) => name -> g.oracle }
+
+  /** Build the fixtures the named gates declare OUTSIDE any timed region —
+    * called by `Bench`'s warmup (and harmless anywhere else). */
+  def prewarmFixtures(s: SparkSession, d: String, names: Iterable[String]): Unit =
+    names.iterator.flatMap(registry.get).flatMap(_.fixtures).distinct.foreach(_(s, d))
 }

@@ -64,6 +64,9 @@ object Verify {
     if (only.isEmpty) // a stale stamp from a previous subset run in a reused
       Files.deleteIfExists(Paths.get(s"$outDir/SUBSET_RUN.txt")) // outDir lies
     SparkEntry.queries.filter(kv => selected(kv._1)).foreach { case (name, fn) =>
+      // an earlier run's dump in a reused outDir must not outlive a gate
+      // that now fails: the checker would score the stale dump as ok
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$outDir/$name"))
       try {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")

@@ -1268,7 +1268,7 @@ object Similarity {
    * past the ceiling want a distributed-trained quantizer, which this
    * driver-side k-means deliberately is not). It is also the measured
    * recall winner, not just the cheaper point: on the 30k×30k replica
-   * frontier (BitextSizingProbe, r20) the old `√n`-lists/1-16th-fraction
+   * frontier (r20 sizing table in BASELINE.md) the old `√n`-lists/1-16th-fraction
    * sizing mined 43% of the exact grid's pairs at a 5.8% probe fraction,
    * while `4√n`-lists/nprobe-32 mined 62% at 4.6% — finer lists waste
    * less of the probe budget on far-field vectors, so the deeper
@@ -1280,8 +1280,8 @@ object Similarity {
    * centroids, not k-means — silently voiding the measured frontier.
    * `sampleSize` is therefore a FLOOR, raised to `8·nlist` when the
    * corpus-derived nlist outgrows it (measured at 100k×100k: the scaled
-   * sample's NN1 recall beats the fixed-4096 quantizer's, see
-   * BitextSizingProbe's `recall` mode).
+   * sample's NN1 recall beats the fixed-4096 quantizer's, see the r20
+   * sizing table in BASELINE.md).
    */
   def bitextMarginMineRouted(a: DataFrame, b: DataFrame, idCol: String,
       vecCol: String, k: Int = 4, exactMaxRows: Long = 20000L,
@@ -1289,10 +1289,17 @@ object Similarity {
     val n = math.max(a.count(), b.count())
     if (n <= exactMaxRows) bitextMarginMine(a, b, idCol, vecCol, k)
     else {
-      val nlist = math.min(4096L, math.max(16L, 4L * math.sqrt(n.toDouble).toLong)).toInt
-      val nprobe = math.min(nlist, 32)
-      val sample = math.min(32768, math.max(sampleSize, 8 * nlist))
+      val (nlist, nprobe, sample) = bitextPooledSizing(n, sampleSize)
       bitextMarginMinePooled(a, b, idCol, vecCol, k, nlist, nprobe, sample, seed)
     }
+  }
+
+  /** [[bitextMarginMineRouted]]'s pooled sizing `(nlist, nprobe, sample)`
+    * for `n` rows on the larger side: `nlist = 4√n` in [16, 4096], a fixed
+    * probe count of 32, and the training-sample floor `sampleSize` raised
+    * to 8 draws per centroid, capped at 32 k. */
+  private[graft] def bitextPooledSizing(n: Long, sampleSize: Int): (Int, Int, Int) = {
+    val nlist = math.min(4096L, math.max(16L, 4L * math.sqrt(n.toDouble).toLong)).toInt
+    (nlist, math.min(nlist, 32), math.min(32768, math.max(sampleSize, 8 * nlist)))
   }
 }

@@ -11,7 +11,7 @@ class ContractSpec extends AnyFunSuite {
     * rows-only check). Each needs a reason here and a spec pinning what the
     * oracle can't. EMPTY since round 16: text_bpe_merges — the last holdout —
     * now hash-gates the full merge table via the chained-CTE fixpoint unroll
-    * (Queries.bpeMergesOracle). */
+    * (TextGates.bpeMergesOracle). */
   private val rowsOnlyByDesign = Set.empty[String]
 
   test("every gated query has an oracle and every oracle has a query") {
@@ -34,5 +34,12 @@ class ContractSpec extends AnyFunSuite {
       assert(sql.trim.nonEmpty, s"$name: empty oracle")
       assert(tables.exists(sql.contains), s"$name: oracle references no fixture table")
     }
+  }
+
+  test("the gate registry refuses a duplicate gate name and names it") {
+    val g = gates.Gate("dup_gate", (s, _) => s.emptyDataFrame, "SELECT 1 FROM orders")
+    val e = intercept[IllegalArgumentException](
+      gates.Gate.registry(Seq(g, g.copy(oracle = "SELECT 2 FROM orders"))))
+    assert(e.getMessage.contains("dup_gate"))
   }
 }

@@ -113,10 +113,18 @@ class PlanSweepSpec extends AnyFunSuite {
       "dedup_cosine_lsh_sharpen")
 
   test("no gated query plans a cartesian product; BNLJ only where designed") {
+    val undeclared = scala.collection.mutable.ListBuffer.empty[String]
     val offenders = Queries.all.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
+      // fixture declarations cannot drift: with only the gate's declared
+      // fixtures prewarmed (Bench's path), building the gate builds no other
+      gates.Fixture.clearCache()
+      Queries.prewarmFixtures(spark, TestSpark.Sf0001, Seq(name))
+      val prewarmed = gates.Fixture.cachedKeys
       val plan =
         try fn(spark, TestSpark.Sf0001).queryExecution.executedPlan.toString
         finally graft.ext.Dedup.unpersistAll()
+      val extra = gates.Fixture.cachedKeys -- prewarmed
+      if (extra.nonEmpty) undeclared += s"$name: ${extra.toSeq.sorted.mkString(", ")}"
       val cartesian = plan.contains("CartesianProduct")
       val bnlj = plan.contains("BroadcastNestedLoopJoin") &&
         !broadcastAllPairsByDesign(name)
@@ -125,5 +133,7 @@ class PlanSweepSpec extends AnyFunSuite {
       else None
     }
     assert(offenders.isEmpty, s"unkeyed join plans:\n${offenders.mkString("\n")}")
+    assert(undeclared.isEmpty,
+      s"gates building undeclared fixtures:\n${undeclared.mkString("\n")}")
   }
 }

@@ -494,4 +494,16 @@ class SimilaritySpec extends AnyFunSuite with org.scalatest.BeforeAndAfterEach {
     assert(forcedBitext.map(_._1).distinct.length == forcedBitext.length)
     assert(forcedBitext.map(_._2).distinct.length == forcedBitext.length)
   }
+
+  test("bitext pooled sizing: 4√n lists in [16, 4096], 32 probes, 8 draws per list") {
+    // the r20 sizing frontier (BASELINE.md): n = 30 000 is the measured
+    // 30k×30k replica point, 2^20 the 4096-list ceiling, 4 M past it
+    val sizing = Seq(10L, 30000L, 1048576L, 4000000L)
+      .map(n => n -> Similarity.bitextPooledSizing(n, sampleSize = 4096))
+    assert(sizing == Seq(
+      10L -> ((16, 16, 4096)),
+      30000L -> ((692, 32, 5536)),
+      1048576L -> ((4096, 32, 32768)),
+      4000000L -> ((4096, 32, 32768))))
+  }
 }
