@@ -33,8 +33,7 @@ object Dedup {
     val w = Window.partitionBy(keys.map(col): _*).orderBy(col(idCol))
     // collision-probed temp name: a hardcoded "__rn" would silently destroy
     // a caller column of that name before dropping it
-    val taken = df.columns.toSet
-    val rn = Iterator.from(0).map(i => s"__rn$i").find(!taken(_)).get
+    val rn = graft.ops.Ops.freshName(df.columns.toSet, "__rn")
     df.withColumn(rn, row_number().over(w)).filter(col(rn) === 1).drop(rn)
   }
 
@@ -663,10 +662,7 @@ object Dedup {
   def dedupeAgainstCorpus(batch: DataFrame, corpus: DataFrame, idCol: String,
       textCol: String): DataFrame = {
     val fp = contentFingerprint(col(textCol))
-    val fpCol = {
-      val taken = batch.columns.toSet
-      Iterator.from(0).map(i => s"__fp$i").find(!taken(_)).get
-    }
+    val fpCol = graft.ops.Ops.freshName(batch.columns.toSet, "__fp")
     val corpusFps = corpus.filter(col(textCol).isNotNull).select(fp.as(fpCol)).distinct()
     exact(
       batch.filter(col(textCol).isNotNull).withColumn(fpCol, fp)
@@ -868,10 +864,8 @@ object Dedup {
     // internal names probed against the input so a column named __ta/__band
     // can never silently break the pair filter
     val taken = docs.columns.toSet ++ reserved
-    def fresh(base: String): String =
-      Iterator.from(0).map(i => if (i == 0) base else s"$base$i").find(!taken(_)).get
-    val (ta, tb, la, lb, band) =
-      (fresh("__ta"), fresh("__tb"), fresh("__la"), fresh("__lb"), fresh("__band"))
+    val Seq(ta, tb, la, lb, band) = Seq("__ta", "__tb", "__la", "__lb", "__band")
+      .map(graft.ops.Ops.freshName(taken, _, bare = true))
     def side(tag: String, t: String, l: String) = docs.select(
       blockCols.map(col) ++ Seq(
         col(idCol).as(s"doc_$tag"),
@@ -915,7 +909,7 @@ object Dedup {
     val members = graft.ops.Ops.hintIfSmall(
       clusters.select(col("node").as(idCol), col("cluster")))
     val taken = docs.columns.toSet + "cluster"
-    val rn = Iterator.from(0).map(i => s"__rn$i").find(!taken(_)).get
+    val rn = graft.ops.Ops.freshName(taken, "__rn")
     val w = Window.partitionBy(col("cluster")).orderBy(ordering: _*)
     val winners = docs.join(members, Seq(idCol))
       .withColumn(rn, row_number().over(w))
@@ -972,8 +966,7 @@ object Dedup {
    */
   def decontaminateExactBloom(docs: DataFrame, blocklist: DataFrame,
       textCol: String): DataFrame = {
-    val taken = docs.columns.toSet
-    val fp = Iterator.from(0).map(i => s"__fp$i").find(!taken(_)).get
+    val fp = graft.ops.Ops.freshName(docs.columns.toSet, "__fp")
     bloomAntiJoin(
       docs.withColumn(fp, contentFingerprint(col(textCol))),
       blocklist.select(contentFingerprint(col(textCol)).as(fp)), fp).drop(fp)

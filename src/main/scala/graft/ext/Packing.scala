@@ -35,10 +35,8 @@ object Packing {
     require(budget > 0, s"budget must be positive: $budget")
     require(nShards > 0, s"nShards must be positive: $nShards")
     val taken = docs.columns.toSet
-    def fresh(base: String) = Iterator.from(0).map(i => s"$base$i").find(!taken(_)).get
-    val hCol = fresh("__idhash")
-    val shardCol = fresh("__shard")
-    val cumCol = fresh("__cum_before")
+    val Seq(hCol, shardCol, cumCol) =
+      Seq("__idhash", "__shard", "__cum_before").map(graft.ops.Ops.freshName(taken, _))
     val base = docs
       .filter(col(nTokensCol).isNotNull && col(nTokensCol) >= 0)
       .select(col(idCol), col(nTokensCol).cast("long").as(nTokensCol))

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.ops.Ops.freshName
+
 /**
  * Deterministic sampling operators for training-data pipelines
  * (SURVEY.md §2.12): hash-based fraction sampling and per-group stratified
@@ -99,19 +101,12 @@ object Sampling {
    */
   def assignSplitsClusterSafe(df: DataFrame, clusters: DataFrame, idCol: String,
       splits: Seq[(String, Double)], splitCol: String = "split"): DataFrame = {
-    val key = freshCol(df, "__splitkey")
+    val key = freshName(df.columns.toSet, "__splitkey")
     val m = graft.ops.Ops.hintIfSmall(
       clusters.select(col("node").as(idCol), col("cluster").as(key)))
     val keyed = df.join(m, Seq(idCol), "left_outer")
       .withColumn(key, coalesce(col(key), col(idCol)))
     assignSplits(keyed, key, splits, splitCol).drop(key)
-  }
-
-  /** A temp-column name guaranteed absent from `df`'s schema (a fixed
-    * `"__rn"` would silently clobber — or collide with — a user column). */
-  private def freshCol(df: DataFrame, base: String): String = {
-    val taken = df.columns.toSet
-    Iterator.from(0).map(i => s"$base$i").find(!taken(_)).get
   }
 
   /** Stratified sample: the `n` rows with the smallest `(idHash, id)` per
@@ -134,8 +129,8 @@ object Sampling {
   def stratified(df: DataFrame, groupCol: String, idCol: String, n: Int): DataFrame = {
     require(n > 0, s"sample size must be positive: $n")
     val h = idHash(col(idCol))
-    val rn = freshCol(df, "__rn")
-    val pid = freshCol(df, "__pid")
+    val rn = freshName(df.columns.toSet, "__rn")
+    val pid = freshName(df.columns.toSet, "__pid")
     val wLocal = Window.partitionBy(col(groupCol), col(pid)).orderBy(h, col(idCol))
     val pruned = df.withColumn(pid, spark_partition_id())
       .withColumn(rn, row_number().over(wLocal))
@@ -160,12 +155,12 @@ object Sampling {
     val spark = df.sparkSession
     import spark.implicits._
     val maxQ = quotas.values.max
-    val q = freshCol(df, "__quota")
+    val q = freshName(df.columns.toSet, "__quota")
     val qdf = quotas.toSeq.toDF(groupCol, q)
     val joined = df.join(broadcast(qdf), groupCol)
     val h = idHash(col(idCol))
-    val rn = freshCol(joined, "__rn")
-    val pid = freshCol(joined, "__pid")
+    val rn = freshName(joined.columns.toSet, "__rn")
+    val pid = freshName(joined.columns.toSet, "__pid")
     val wLocal = Window.partitionBy(col(groupCol), col(pid)).orderBy(h, col(idCol))
     val pruned = joined.withColumn(pid, spark_partition_id())
       .withColumn(rn, row_number().over(wLocal))
@@ -202,9 +197,9 @@ object Sampling {
     val spark = df.sparkSession
     import spark.implicits._
     val h = idHash(col(idCol))
-    val bkt = freshCol(df, "__bkt")
-    val cum = freshCol(df, "__cum")
-    val pre = freshCol(df, "__pre")
+    val bkt = freshName(df.columns.toSet, "__bkt")
+    val cum = freshName(df.columns.toSet, "__cum")
+    val pre = freshName(df.columns.toSet, "__pre")
     val withB = df.withColumn(bkt, shiftright(h, 60 - bucketBits))
     val sums = withB.groupBy(bkt)
       .agg(coalesce(sum(col(weightCol).cast("long")), lit(0L)).as("w"))
@@ -258,8 +253,8 @@ object Sampling {
       if (tot <= 0L) None
       else Some((d, budgets(d) / tot, budgets(d) % tot))
     }
-    val ep = freshCol(df, "__epoch")
-    val fullCol = freshCol(df, "__full")
+    val ep = freshName(df.columns.toSet, "__epoch")
+    val fullCol = freshName(df.columns.toSet, "__full")
     val fullDomains = plan.filter(_._2 > 0).map { case (d, full, _) => (d, full) }
     val fullPart = if (fullDomains.isEmpty) None else {
       val fdf = broadcast(fullDomains.toDF(groupCol, fullCol))
@@ -302,7 +297,7 @@ object Sampling {
     require(q >= 0.0 && q <= 1.0, s"quantile out of range: $q")
     val thrFn = if (approx) s"percentile_approx(`$scoreCol`, $q, 10000)"
                 else s"percentile(`$scoreCol`, $q)"
-    val thr = freshCol(df, "__thr")
+    val thr = freshName(df.columns.toSet, "__thr")
     val thresholds = df.groupBy(col(groupCol)).agg(expr(thrFn).as(thr))
     df.join(broadcast(thresholds), Seq(groupCol))
       .filter(col(scoreCol) >= col(thr))
@@ -336,8 +331,8 @@ object Sampling {
     def thrFn(q: Double) = if (approx)
       s"percentile_approx(`$valueCol`, $q, 10000)"
     else s"percentile(`$valueCol`, $q)"
-    val lo = freshCol(df, "__wlo")
-    val hi = freshCol(df, "__whi")
+    val lo = freshName(df.columns.toSet, "__wlo")
+    val hi = freshName(df.columns.toSet, "__whi")
     val thresholds = df.filter(col(valueCol).isNotNull)
       .groupBy(col(groupCol))
       .agg(expr(thrFn(loQ)).as(lo), expr(thrFn(hiQ)).as(hi))
@@ -377,7 +372,7 @@ object Sampling {
   def negativePairs(df: DataFrame, idCol: String, k: Int,
       numParts: Int = 32): DataFrame = {
     require(k > 0, s"k must be positive: $k")
-    val ord = freshCol(df, "__negord")
+    val ord = freshName(df.columns.toSet, "__negord")
     val orded = graft.ops.Ops.globalOrdinals(
       df.select(col(idCol)), Seq(col(idCol).asc), numParts, ord)
     val n = orded.agg(count(lit(1)).as("__n"))
@@ -419,7 +414,7 @@ object Sampling {
     val thrFn = if (approx)
       s"percentile_approx(`$valueCol`, array(${probs.mkString(",")}), 10000)"
     else s"percentile(`$valueCol`, array(${probs.mkString(",")}))"
-    val thr = freshCol(df, "__qthr")
+    val thr = freshName(df.columns.toSet, "__qthr")
     val thresholds = df.agg(expr(thrFn).as(thr))
     val binExpr = probs.indices
       .map(i => when(col(valueCol) > element_at(col(thr), i + 1), 1).otherwise(0))
@@ -473,12 +468,12 @@ object Sampling {
     // probe side) — the bigramSurprisal multi-consumer convention
     val base = Caches.track(
       df.filter(col(groupCol).isNotNull && col(valueCol).isNotNull))
-    val grid = freshCol(df, "__qngrid")
+    val grid = freshName(df.columns.toSet, "__qngrid")
     val gridRow = base.agg(expr(gridFn).as(grid))
-    val c = freshCol(df, "__qnc")
-    val cum = freshCol(df, "__qncum")
-    val n = freshCol(df, "__qnn")
-    val pr = freshCol(df, "__qnpr")
+    val c = freshName(df.columns.toSet, "__qnc")
+    val cum = freshName(df.columns.toSet, "__qncum")
+    val n = freshName(df.columns.toSet, "__qnn")
+    val pr = freshName(df.columns.toSet, "__qnpr")
     val w = Window.partitionBy(col(groupCol)).orderBy(col(valueCol))
     val ranks = base.groupBy(col(groupCol), col(valueCol))
       .agg(count(lit(1)).as(c))
@@ -526,7 +521,7 @@ object Sampling {
     val thrFn = if (approx)
       s"percentile_approx(`$valueCol`, array(${probs.mkString(",")}), 10000)"
     else s"percentile(`$valueCol`, array(${probs.mkString(",")}))"
-    val thr = freshCol(df, "__gqthr")
+    val thr = freshName(df.columns.toSet, "__gqthr")
     val thresholds = df.groupBy(col(groupCol)).agg(expr(thrFn).as(thr))
     val binExpr = probs.indices
       .map(i => when(col(valueCol) > element_at(col(thr), i + 1), 1).otherwise(0))
@@ -567,7 +562,7 @@ object Sampling {
     require(budget > 0, s"budget must be positive: $budget")
     val nD = col("__n").cast("double")
     val wExpr = if (alpha == 0.5) sqrt(nD) else pow(nD, lit(alpha))
-    val rate = freshCol(df, "__rate")
+    val rate = freshName(df.columns.toSet, "__rate")
     val counts = df.groupBy(col(domainCol)).agg(count(lit(1)).as("__n"))
       .withColumn("__w", wExpr)
     val norm = counts.agg(sum(col("__w")).as("__s"))
@@ -609,7 +604,7 @@ object Sampling {
   def weightedSampleK(df: DataFrame, idCol: String, weightCol: String,
       k: Int): DataFrame = {
     require(k > 0, s"k must be positive: $k")
-    val key = freshCol(df, "__eskey")
+    val key = freshName(df.columns.toSet, "__eskey")
     val u = (idHash(col(idCol)) % 1000000L + lit(0.5)) / lit(1000000.0)
     df.filter(col(idCol).isNotNull && col(weightCol).cast("double") > 0.0 &&
         !isnan(col(weightCol).cast("double")))
@@ -655,8 +650,8 @@ object Sampling {
   def shuffleToShards(df: DataFrame, idCol: String, numShards: Int,
       seed: Long = 0L, numParts: Int = 32): DataFrame = {
     require(numShards > 0, s"numShards must be positive: $numShards")
-    val h = freshCol(df, "__shufhash")
-    val ord = freshCol(df, "__shuford")
+    val h = freshName(df.columns.toSet, "__shufhash")
+    val ord = freshName(df.columns.toSet, "__shuford")
     val hashed = df.withColumn(h,
       idHash(concat(col(idCol).cast("string"), lit(":"), lit(seed.toString))))
     graft.ops.Ops.globalOrdinals(hashed, Seq(col(h).asc, col(idCol).asc),

@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType}
 
 /**
  * Similarity search over embedding columns (`array<float>`, SURVEY.md §2.12):
@@ -118,14 +119,26 @@ object Similarity {
 
   /**
    * Exact brute-force top-k: for each query vector, the `k` nearest corpus
-   * vectors by cosine (self-matches excluded, ties broken by corpus id).
-   *
-   * The query side is **broadcast** — the corpus never shuffles, each
-   * corpus partition streams once against the in-memory query set. This is
-   * the right plan shape at any corpus size as long as the query batch is
-   * small; for large query batches, chunk the queries and union.
+   * vectors by cosine (self-matches excluded, ties broken by corpus id) —
+   * [[scoredGrid]] ranked by [[topKPerQuery]]. Ids must be integral and
+   * `k >= 1`; anything else is refused by name.
    */
   def topK(corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String, k: Int): DataFrame = {
+    topKPerQuery("topK", scoredGrid(corpus, queries, idCol, vecCol), k, keepIdType = true)
+      .select("query_id", "neighbor_id")
+  }
+
+  /** The exact scored grid every brute-force operator ranks: broadcast
+    * unit-normalized queries × the cached unit-normalized corpus, self-
+    * matches (equal ids) excluded, as narrow `(query_id, neighbor_id, cos)`
+    * rows.
+    *
+    * The query side is **broadcast** — the corpus never shuffles, each
+    * corpus partition streams once against the in-memory query set. This is
+    * the right plan shape at any corpus size as long as the query batch is
+    * small; for large query batches, chunk the queries and union. */
+  private def scoredGrid(corpus: DataFrame, queries: DataFrame, idCol: String,
+      vecCol: String): DataFrame = {
     val q = broadcast(unitized(queries, idCol, vecCol, "query_id", "qv"))
     // cached: BroadcastHashJoin codegen defers stream-side column evaluation
     // to per-OUTPUT-row — every query match would re-run the normalize,
@@ -133,16 +146,62 @@ object Similarity {
     // path before the equivalent fix there). The persisted projection is the
     // classic built-once similarity index; Caches.unpersistAll releases it.
     val c = Caches.track(unitized(corpus, idCol, vecCol, "neighbor_id", "cv"))
-    // project the vectors away BEFORE the rank window: the per-query sort
-    // shuffles its whole input, and carrying two dim-d vectors per scored
-    // row makes that payload O(d) per candidate — measured 46× (not the
-    // linear 8×) going dim-128 → dim-1024 before this projection. The
-    // narrow (query_id, neighbor_id, cos) row is 24 bytes at any dimension.
-    val scored = c.join(q, col("query_id") =!= col("neighbor_id"))
+    // project the vectors away BEFORE ranking: carrying two dim-d vectors
+    // per scored row makes the ranking payload O(d) per candidate —
+    // measured 46× (not the linear 8×) going dim-128 → dim-1024 under the
+    // former per-query sort before this projection. The narrow
+    // (query_id, neighbor_id, cos) row is 24 bytes at any dimension.
+    c.join(q, col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"), dot(col("qv"), col("cv")).as("cos"))
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rnk", row_number().over(w)).filter(col("rnk") <= k)
-      .select("query_id", "neighbor_id")
+  }
+
+  /** The one per-query top-k of this module: `(query_id, neighbor_id, cos)`
+    * → each query's `k` best as `(query_id, neighbor_id, cos, rnk)`, `rnk`
+    * 1-based under the (cos DESC, neighbor_id ASC) total order.
+    *
+    * Bounded map-side aggregation ([[Aggregators.TopKPairsAggregator]]),
+    * NOT a rank window: with a batch of queries the scored frame holds
+    * |Q|·|candidates| rows, and a window would shuffle ALL of them to
+    * per-query reducers; the aggregator partially combines to ≤ k pairs
+    * per (query × map partition) before the exchange (measured 196 s →
+    * 119 s on the 30k×30k bitext pool, identical results).
+    *
+    * The aggregator ranks ids as `long`, so `neighbor_id` must be integral
+    * (byte/short/int/long — lossless through `long`) and `k >= 1`; `op`
+    * names the refusing operator. A string, decimal or fractional id is
+    * refused rather than cast: a cast would rank `'007'` as `7` and merge
+    * distinct fractional ids. `neighbor_id` comes back as `long`, or in its
+    * input type when `keepIdType` (the operators whose output always kept
+    * the corpus id type). */
+  private def topKPerQuery(op: String, scored: DataFrame, k: Int,
+      keepIdType: Boolean): DataFrame = {
+    val idType = scored.schema("neighbor_id").dataType
+    require(Set[DataType](ByteType, ShortType, IntegerType, LongType)(idType),
+      s"$op: ids must be integral (byte/short/int/long) to rank, got ${idType.simpleString}")
+    require(k >= 1, s"$op: k must be >= 1: $k")
+    val topk = udaf(new Aggregators.TopKPairsAggregator(k))
+    scored.groupBy("query_id")
+      .agg(topk(col("neighbor_id").cast("long"), col("cos")).as("__tk"))
+      .select(col("query_id"), posexplode(col("__tk")).as(Seq("__pos", "__p")))
+      .select(col("query_id"),
+        (if (keepIdType) col("__p._1").cast(idType) else col("__p._1")).as("neighbor_id"),
+        col("__p._2").as("cos"), (col("__pos") + 1).as("rnk"))
+  }
+
+  /** [[topK]]'s ranking with both sides' labels re-attached by id —
+    * `(query_id, neighbor_id, cos, rnk, qlabel, clabel, rel)`, `rel` = 1
+    * on a label match. The grid ranks without labels; the ≤ |queries|·k
+    * ranked rows are broadcast back onto the corpus labels (the corpus
+    * streams, nothing is scored twice). */
+  private def rankedWithLabels(op: String, corpus: DataFrame, queries: DataFrame,
+      idCol: String, vecCol: String, labelCol: String, k: Int): DataFrame = {
+    require(k >= 1 && k <= 1000, s"k must be in [1,1000]: $k")
+    val ranked = topKPerQuery(op, scoredGrid(corpus, queries, idCol, vecCol), k, keepIdType = true)
+    corpus.select(col(idCol).as("neighbor_id"), col(labelCol).as("clabel"))
+      .join(broadcast(ranked), Seq("neighbor_id"))
+      .join(broadcast(queries.select(col(idCol).as("query_id"), col(labelCol).as("qlabel"))),
+        Seq("query_id"))
+      .withColumn("rel", (col("clabel") === col("qlabel")).cast("int"))
   }
 
   /**
@@ -165,27 +224,16 @@ object Similarity {
    * by rank — an oracle interpolating the same values never re-derives a
    * transcendental, so engine libm differences cannot flap the gate.
    * Returns `(query_id, ndcg)` (ndcg unrounded; callers round for gates).
+   * Ids must be integral, as for [[topK]].
    */
   def retrievalNdcg(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, labelCol: String, k: Int): DataFrame = {
-    require(k >= 1 && k <= 1000, s"k must be in [1,1000]: $k")
-    import org.apache.spark.sql.graftx.VectorFunctions.vec_normalize
+    val top = rankedWithLabels("retrievalNdcg", corpus, queries, idCol, vecCol, labelCol, k)
     val (wArr, iArr) = ndcgWeights(k)
-    val q = broadcast(queries.select(col(idCol).as("query_id"),
-      vec_normalize(col(vecCol)).as("qv"), col(labelCol).as("qlabel")))
-    // cached for the same BroadcastHashJoin fan-out reason as topK
-    val c = Caches.track(corpus.select(col(idCol).as("neighbor_id"),
-      vec_normalize(col(vecCol)).as("cv"), col(labelCol).as("clabel")))
-    val scored = c.join(q, col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("qlabel"),
-        dot(col("qv"), col("cv")).as("cos"), col("neighbor_id"),
-        (col("clabel") === col("qlabel")).cast("int").as("rel"))
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id"))
-    val top = scored.withColumn("rnk", row_number().over(w)).filter(col("rnk") <= k)
     val dcg = top.groupBy("query_id", "qlabel")
       .agg(sum(col("rel").cast("double") *
         element_at(array(wArr.map(lit): _*), col("rnk"))).as("dcg"))
-    val labelCounts = broadcast(c.groupBy(col("clabel").as("qlabel"))
+    val labelCounts = broadcast(corpus.groupBy(col(labelCol).as("qlabel"))
       .agg(count(lit(1)).as("lcnt")))
     dcg.join(labelCounts, Seq("qlabel"))
       .select(col("query_id"), when(col("lcnt") > 1, col("dcg") /
@@ -203,26 +251,15 @@ object Similarity {
    * whatever grain it reports; the division is one exact `1/integer`.
    *
    * Same plan shape as [[retrievalNdcg]] (broadcast query side, cached
-   * normalized corpus, one per-query rank window) — the scored frame is
-   * query-partitioned so the window never single-partitions.
+   * normalized corpus, the bounded per-query top-k of [[topKPerQuery]]).
+   * Ids must be integral, as for [[topK]].
    */
   def retrievalMrr(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, labelCol: String, k: Int): DataFrame = {
-    require(k >= 1 && k <= 1000, s"k must be in [1,1000]: $k")
-    import org.apache.spark.sql.graftx.VectorFunctions.vec_normalize
-    val q = broadcast(queries.select(col(idCol).as("query_id"),
-      vec_normalize(col(vecCol)).as("qv"), col(labelCol).as("qlabel")))
-    val c = Caches.track(corpus.select(col(idCol).as("neighbor_id"),
-      vec_normalize(col(vecCol)).as("cv"), col(labelCol).as("clabel")))
-    val scored = c.join(q, col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"),
-        dot(col("qv"), col("cv")).as("cos"), col("neighbor_id"),
-        (col("clabel") === col("qlabel")).cast("int").as("rel"))
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id"))
-    val first = scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k && col("rel") === 1)
+    val first = rankedWithLabels("retrievalMrr", corpus, queries, idCol, vecCol, labelCol, k)
+      .filter(col("rel") === 1)
       .groupBy("query_id").agg(min("rnk").as("__r"))
-    q.select("query_id").join(first, Seq("query_id"), "left")
+    queries.select(col(idCol).as("query_id")).join(first, Seq("query_id"), "left")
       .select(col("query_id"),
         coalesce(round(lit(1.0) / col("__r"), 6), lit(0.0)).as("rr"))
   }
@@ -236,25 +273,16 @@ object Similarity {
    * label ASC) so the prediction is a total order in both engines.
    * Output: (query_id, gold, predicted, votes, correct).
    *
-   * Scale shape: broadcast query side, corpus streams once, per-query
-   * rank window, then a ≤|labels|-row vote count per query — everything
-   * after the scan is query-cardinality-sized.
+   * Scale shape: broadcast query side, corpus streams once, the bounded
+   * per-query top-k, then a ≤|labels|-row vote count per query —
+   * everything after the scan is query-cardinality-sized. Ids must be
+   * integral, as for [[topK]].
    */
   def knnClassify(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, labelCol: String, k: Int): DataFrame = {
-    require(k >= 1 && k <= 1000, s"k must be in [1,1000]: $k")
-    import org.apache.spark.sql.graftx.VectorFunctions.vec_normalize
-    val q = broadcast(queries.select(col(idCol).as("query_id"),
-      vec_normalize(col(vecCol)).as("qv"), col(labelCol).as("gold")))
-    val c = Caches.track(corpus.select(col(idCol).as("neighbor_id"),
-      vec_normalize(col(vecCol)).as("cv"), col(labelCol).as("clabel")))
-    val scored = c.join(q, col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("gold"),
-        dot(col("qv"), col("cv")).as("cos"), col("neighbor_id"), col("clabel"))
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id"))
-    val votes = scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .groupBy("query_id", "gold", "clabel").agg(count(lit(1)).as("votes"))
+    val votes = rankedWithLabels("knnClassify", corpus, queries, idCol, vecCol, labelCol, k)
+      .groupBy(col("query_id"), col("qlabel").as("gold"), col("clabel"))
+      .agg(count(lit(1)).as("votes"))
     val pick = Window.partitionBy("query_id")
       .orderBy(col("votes").desc, col("clabel"))
     votes.withColumn("__p", row_number().over(pick)).filter(col("__p") === 1)
@@ -355,10 +383,10 @@ object Similarity {
    * Plan shape: side B broadcasts (the [[topK]] contract — side A streams
    * once, never shuffles for scoring), the scored pair frame is cached and
    * projected NARROW (ids + cos, 24 bytes/row at any dimension) before the
-   * two rank windows. This brute-force pair source is exact and right when
-   * one side fits a broadcast (the usual mining shape: a query batch
-   * against a corpus shard); for two huge sides swap the pair source for
-   * the IVF-routed pool ([[annSearchIvf]] / [[cosinePairsRouted]]) — the
+   * two per-side top-k passes. This brute-force pair source is exact and
+   * right when one side fits a broadcast (the usual mining shape: a query
+   * batch against a corpus shard); for two huge sides swap the pair source
+   * for the IVF-routed pool ([[annSearchIvf]] / [[cosinePairsRouted]]) — the
    * margin algebra downstream of `scored` is pair-source-independent.
    */
   def bitextMarginMine(a: DataFrame, b: DataFrame, idCol: String,
@@ -381,22 +409,19 @@ object Similarity {
     val scored = Caches.track(pa.crossJoin(pb)
       .select(col("a_id"), col("b_id"),
         (dot(col("av"), col("bv")) / (col("__na") * col("__nb"))).as("cos")))
-    // both directions' top-k via the bounded map-side aggregator — two rank
-    // windows here would each sort-shuffle the ENTIRE |A|×|B| grid; the
-    // aggregator moves ≤ k pairs per (node × map partition) and yields the
-    // identical (cos DESC, id ASC) top-k
-    val topk = udaf(new Aggregators.TopKPairsAggregator(k))
+    // both directions' top-k via the bounded map-side ranker — two rank
+    // windows here would each sort-shuffle the ENTIRE |A|×|B| grid
     val micro = round(col("cos") * lit(1e6), 0).cast("long")
-    val ab = Caches.track(scored.groupBy("a_id")
-      .agg(topk(col("b_id"), col("cos")).as("__tk"))
-      .select(col("a_id"), posexplode(col("__tk")).as(Seq("__pos", "__p")))
-      .select(col("a_id"), col("__p._1").as("b_id"), col("__p._2").as("cos"),
-        (col("__pos") + 1).as("rn_a")))
-    val ba = Caches.track(scored.groupBy("b_id")
-      .agg(topk(col("a_id"), col("cos")).as("__tk"))
-      .select(col("b_id"), posexplode(col("__tk")).as(Seq("__pos", "__p")))
-      .select(col("b_id"), col("__p._1").as("a_id"), col("__p._2").as("cos"),
-        (col("__pos") + 1).as("rn_b")))
+    val ab = Caches.track(topKPerQuery("bitextMarginMine",
+        scored.select(col("a_id").as("query_id"), col("b_id").as("neighbor_id"), col("cos")), k,
+        keepIdType = false)
+      .select(col("query_id").as("a_id"), col("neighbor_id").as("b_id"), col("cos"),
+        col("rnk").as("rn_a")))
+    val ba = Caches.track(topKPerQuery("bitextMarginMine",
+        scored.select(col("b_id").as("query_id"), col("a_id").as("neighbor_id"), col("cos")), k,
+        keepIdType = false)
+      .select(col("query_id").as("b_id"), col("neighbor_id").as("a_id"), col("cos"),
+        col("rnk").as("rn_b")))
     val da = ab.groupBy("a_id").agg(sum(micro).as("__ma"))
     val db = ba.groupBy("b_id").agg(sum(micro).as("__mb"))
     ab.filter(col("rn_a") === 1)
@@ -409,32 +434,25 @@ object Similarity {
       .orderBy(col("margin").desc, col("a_id"))
   }
 
-  /** IVF-pooled top-k WITH scores (`query_id`, `neighbor_id`, `cos`,
-    * `rnk` ≤ k) — [[annTopK]]'s probe plan, but keeping the cosine and NOT
-    * excluding id-equal pairs (bitext sides are separate id spaces; a
-    * same-id pair across sides is a legitimate candidate). */
-  private def ivfPoolScored(corpus: DataFrame, queries: DataFrame, idCol: String,
+  /** IVF top-k WITH scores (`query_id`, `neighbor_id`, `cos`, `rnk` ≤ k)
+    * over a per-call index: train the quantizer, assign the corpus, probe
+    * and rank. [[annTopK]] drops id-equal pairs (`excludeSelf`); the bitext
+    * pools keep them (bitext sides are separate id spaces; a same-id pair
+    * across sides is a legitimate candidate). */
+  private def ivfRanked(op: String, corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, k: Int, nlist: Int, nprobe: Int, sampleSize: Int,
-      seed: Long): DataFrame = {
+      seed: Long, excludeSelf: Boolean): DataFrame = {
     val cents = trainCentroids(corpus, vecCol, nlist, sampleSize, seed)
-    val c = Caches.track(unitized(corpus, idCol, vecCol, "neighbor_id", "cv")
-      .withColumn("list", listAssignment(col("cv"), cents)))
-    val scored = broadcast(probes(cents, queries, idCol, vecCol, nprobe)).join(c, Seq("list"))
-      .select(col("query_id"), col("neighbor_id"), dot(col("qv"), col("cv")).as("cos"))
-    // bounded map-side top-k, NOT a rank window: with corpus-sized query
-    // sides the probe join emits |Q|·(nprobe/nlist)·|C| scored rows (225 M
-    // at 30k×30k quarter-probe), and a window would shuffle ALL of them to
-    // per-query reducers; the aggregator partially combines to ≤ k pairs
-    // per (query × map partition) before the exchange (measured 196 s →
-    // 119 s on the 30k×30k bitext smoke, identical results — the comparator
-    // is the same (cos DESC, id ASC) total order; the residual cost is the
-    // 2×225 M dim-64 dot evaluations themselves)
-    val topk = udaf(new Aggregators.TopKPairsAggregator(k))
-    scored.groupBy("query_id")
-      .agg(topk(col("neighbor_id"), col("cos")).as("__tk"))
-      .select(col("query_id"), posexplode(col("__tk")).as(Seq("__pos", "__p")))
-      .select(col("query_id"), col("__p._1").as("neighbor_id"),
-        col("__p._2").as("cos"), (col("__pos") + 1).as("rnk"))
+    // cached: this IS the IVF index (normalized vector + list id per row) and
+    // it must be MATERIALIZED, not a lazy projection: BroadcastHashJoin
+    // codegen defers stream-side column evaluation to per-OUTPUT-row, so the
+    // probe join would otherwise re-run normalize + the nlist-dot argmax
+    // once per MATCH — measured 58 s → 1.1 s on the ScaleSmoke dim-512
+    // corpus (35× tax at ~37 matches/row). For reuse across query batches,
+    // [[buildIndex]] writes this same frame to storage instead.
+    val c = Caches.track(ivfAssigned(corpus, idCol, vecCol, cents))
+    probeAndRank(op, c, probes(cents, queries, idCol, vecCol, nprobe), k,
+      keepIdType = false, excludeSelf = excludeSelf)
   }
 
   /**
@@ -458,11 +476,13 @@ object Similarity {
       sampleSize: Int = 4096, seed: Long = 42L): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
     val ab = Caches.track(
-      ivfPoolScored(b, a, idCol, vecCol, k, nlist, nprobe, sampleSize, seed)
+      ivfRanked("bitextMarginMinePooled", b, a, idCol, vecCol, k, nlist, nprobe, sampleSize,
+        seed, excludeSelf = false)
         .select(col("query_id").as("a_id"), col("neighbor_id").as("b_id"),
           col("cos"), col("rnk").as("rn_a")))
     val ba = Caches.track(
-      ivfPoolScored(a, b, idCol, vecCol, k, nlist, nprobe, sampleSize, seed)
+      ivfRanked("bitextMarginMinePooled", a, b, idCol, vecCol, k, nlist, nprobe, sampleSize,
+        seed, excludeSelf = false)
         .select(col("query_id").as("b_id"), col("neighbor_id").as("a_id"),
           col("cos").as("cos_ba"), col("rnk").as("rn_b")))
     val ma = ab.groupBy("a_id")
@@ -551,6 +571,14 @@ object Similarity {
     (array_position(scores, array_max(scores)) - 1).cast("int")
   }
 
+  /** The IVF index frame `(neighbor_id, cv, list)`: unit-normalized vectors
+    * assigned to their nearest centroid — what [[buildIndex]] persists,
+    * [[appendToIndex]] grows and the per-call IVF paths cache. */
+  private def ivfAssigned(df: DataFrame, idCol: String, vecCol: String,
+      centroids: Array[Array[Double]]): DataFrame =
+    unitized(df, idCol, vecCol, "neighbor_id", "cv")
+      .withColumn("list", listAssignment(col("cv"), centroids))
+
   /**
    * Approximate top-k via IVF (inverted-file) search: a coarse quantizer
    * (spherical k-means over a deterministic sample, [[trainCentroids]])
@@ -568,17 +596,8 @@ object Similarity {
   def annTopK(corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
       k: Int, nlist: Int = 16, nprobe: Int = 6, sampleSize: Int = 4096,
       seed: Long = 42L): DataFrame = {
-    val cents = trainCentroids(corpus, vecCol, nlist, sampleSize, seed)
-    // cached: this IS the IVF index (normalized vector + list id per row) and
-    // it must be MATERIALIZED, not a lazy projection: BroadcastHashJoin
-    // codegen defers stream-side column evaluation to per-OUTPUT-row, so the
-    // probe join below would otherwise re-run normalize + the nlist-dot
-    // argmax once per MATCH — measured 58 s → 1.1 s on the ScaleSmoke
-    // dim-512 corpus (35× tax at ~37 matches/row). For reuse across query
-    // batches, [[buildIndex]] writes this same frame to storage instead.
-    val c = Caches.track(unitized(corpus, idCol, vecCol, "neighbor_id", "cv")
-      .withColumn("list", listAssignment(col("cv"), cents)))
-    probeAndRank(c, probes(cents, queries, idCol, vecCol, nprobe), k)
+    ivfRanked("annTopK", corpus, queries, idCol, vecCol, k, nlist, nprobe, sampleSize, seed,
+      excludeSelf = true).select("query_id", "neighbor_id")
   }
 
   /** Per-query probe set (`query_id`, `qv`, `list`): the `nprobe` nearest
@@ -596,25 +615,21 @@ object Similarity {
       explode(transform(slice(array_sort(col("cd")), 1, nprobe), p => p.getField("1"))).as("list"))
   }
 
-  /** Probe join + exact re-rank shared by [[annTopK]] and [[searchIndex]]:
-    * `c` is the (neighbor_id, cv, list) index frame. Vectors are projected
-    * away before the rank — see [[topK]]: only 24-byte rows may move, not
-    * O(d) vector payloads. The top-k itself is the bounded map-side
-    * [[Aggregators.TopKPairsAggregator]] under the same (cos DESC, id ASC)
-    * total order a rank window would use — with a BATCH of queries the
-    * probe join emits |Q|·(nprobe/nlist)·|C| scored candidates, and a
-    * window shuffles every one of them to per-query reducers; the
-    * aggregator partially combines to ≤ k pairs per (query × map
-    * partition) before the exchange (196 s → 119 s on the 30k×30k bitext
-    * pool — the same plan shape at production batch sizes). */
-  private def probeAndRank(c: DataFrame, probeFrame: DataFrame, k: Int): DataFrame = {
-    val scored = broadcast(probeFrame).join(c, Seq("list"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"), dot(col("qv"), col("cv")).as("cos"))
-    val topk = udaf(new Aggregators.TopKPairsAggregator(k))
-    scored.groupBy("query_id")
-      .agg(topk(col("neighbor_id"), col("cos")).as("__tk"))
-      .select(col("query_id"), explode(col("__tk._1")).as("neighbor_id"))
+  /** The IVF probe join ranked, shared by every IVF search: each query's
+    * probe lists join the index frame `c` on `list`, candidates score by
+    * `score` (default the exact dot of the unit vectors), id-equal pairs
+    * drop when `excludeSelf`, and [[topKPerQuery]] keeps each query's k
+    * best — `(query_id, neighbor_id, cos, rnk)`. Only the scored 24-byte
+    * rows reach the ranker, never O(d) vector payloads (see
+    * [[scoredGrid]]). */
+  private def probeAndRank(op: String, c: DataFrame, probeFrame: DataFrame, k: Int,
+      keepIdType: Boolean, score: Column = dot(col("qv"), col("cv")),
+      excludeSelf: Boolean = true): DataFrame = {
+    val joined = broadcast(probeFrame).join(c, Seq("list"))
+    val candidates =
+      if (excludeSelf) joined.filter(col("query_id") =!= col("neighbor_id")) else joined
+    topKPerQuery(op, candidates.select(col("query_id"), col("neighbor_id"), score.as("cos")), k,
+      keepIdType)
   }
 
   /** A persisted IVF index: `table` holds the normalized, list-assigned
@@ -637,10 +652,19 @@ object Similarity {
   def buildIndex(store: graft.store.TableStore, table: String, corpus: DataFrame,
       idCol: String, vecCol: String, nlist: Int = 16, sampleSize: Int = 4096,
       seed: Long = 42L): IvfIndex = {
+    writeIvf(store, table, corpus, idCol, vecCol, nlist, sampleSize, seed)(identity)
+  }
+
+  /** The one IVF build: train the quantizer, write the list-assigned corpus
+    * — through `payload`, which may re-encode the vectors but keeps `list`
+    * — range-clustered on `list`, and persist the centroids to
+    * `<table>_centroids` as (list, pos, value) rows. */
+  private def writeIvf(store: graft.store.TableStore, table: String, corpus: DataFrame,
+      idCol: String, vecCol: String, nlist: Int, sampleSize: Int, seed: Long)(
+      payload: DataFrame => DataFrame): IvfIndex = {
     val cents = trainCentroids(corpus, vecCol, nlist, sampleSize, seed)
-    val assigned = unitized(corpus, idCol, vecCol, "neighbor_id", "cv")
-      .withColumn("list", listAssignment(col("cv"), cents))
-    store.atomicOverwriteClustered(table, assigned, Seq("list"), numFiles = cents.length)
+    store.atomicOverwriteClustered(table, payload(ivfAssigned(corpus, idCol, vecCol, cents)),
+      Seq("list"), numFiles = cents.length)
     val spark = corpus.sparkSession
     import spark.implicits._
     store.atomicOverwrite(s"${table}_centroids",
@@ -672,9 +696,7 @@ object Similarity {
    */
   def appendToIndex(store: graft.store.TableStore, index: IvfIndex, batch: DataFrame,
       idCol: String, vecCol: String): Unit = {
-    store.append(index.table,
-      unitized(batch, idCol, vecCol, "neighbor_id", "cv")
-        .withColumn("list", listAssignment(col("cv"), index.centroids)))
+    store.append(index.table, ivfAssigned(batch, idCol, vecCol, index.centroids))
     // opt-in growth bound (store.autoCompactFiles): re-clustering on `list`
     // restores the build-time probe file skipping after many small appends
     store.maybeAutoCompactClustered(index.table, Seq("list"), index.centroids.length)
@@ -696,45 +718,24 @@ object Similarity {
   def buildIndexQuantized(store: graft.store.TableStore, table: String, corpus: DataFrame,
       idCol: String, vecCol: String, nlist: Int = 16, sampleSize: Int = 4096,
       seed: Long = 42L): IvfIndex = {
-    val cents = trainCentroids(corpus, vecCol, nlist, sampleSize, seed)
-    val u = unitized(corpus, idCol, vecCol, "neighbor_id", "cv")
-      .withColumn("list", listAssignment(col("cv"), cents))
-    val maxAbs = array_max(transform(col("cv"), x => abs(x)))
-    val q = u
-      .select(col("neighbor_id"), col("list"), col("cv"),
-        when(maxAbs > 0, lit(127.0) / maxAbs).otherwise(lit(0.0)).as("scale"))
-      .select(col("neighbor_id"), col("list"), col("scale"),
-        transform(col("cv"), x => floor(x * col("scale") + lit(0.5))).as("qvec"))
-    store.atomicOverwriteClustered(table, q, Seq("list"), numFiles = cents.length)
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    store.atomicOverwrite(s"${table}_centroids",
-      cents.zipWithIndex.flatMap { case (c, l) =>
-        c.zipWithIndex.map { case (v, p) => (l, p, v) }
-      }.toSeq.toDF("list", "pos", "value"))
-    IvfIndex(table, cents)
+    writeIvf(store, table, corpus, idCol, vecCol, nlist, sampleSize, seed)(
+      int8Quantized(_, Seq("neighbor_id", "list"), col("cv")))
   }
 
   /** Search an IVF+SQ index built by [[buildIndexQuantized]]: probe pruning
     * identical to [[searchIndex]], ranking by the dequantized dot
     * `dot(q_unit, qvec)/scale` (ties by neighbor id). A zero-vector corpus
     * row (`scale = 0`) scores 0 and never ranks — mirroring `unitized`'s
-    * zero handling on the exact path. */
+    * zero handling on the exact path. Ids must be integral and `k >= 1`,
+    * as for [[topK]]; `neighbor_id` keeps the corpus id type. */
   def searchIndexQuantized(store: graft.store.TableStore, index: IvfIndex, queries: DataFrame,
       idCol: String, vecCol: String, k: Int, nprobe: Int = 6): DataFrame = {
-    val p = Caches.track(probes(index.centroids, queries, idCol, vecCol, nprobe))
-    val lists = p.select("list").distinct().collect().map(_.getInt(0)) // ≤ nlist driver rows
-    val c = store.read(index.table).filter(col("list").isin(lists.toIndexedSeq: _*))
-    val scored = broadcast(p).join(c, Seq("list"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        // qvec is array<bigint> (Spark's floor); the cast to double is exact
-        // for int8-range values
-        when(col("scale") > 0, dot(col("qv"), col("qvec").cast("array<double>")) / col("scale"))
-          .otherwise(lit(0.0)).as("cos"))
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rnk", row_number().over(w)).filter(col("rnk") <= k)
-      .select("query_id", "neighbor_id")
+    searchStored("searchIndexQuantized", store, index, queries, idCol, vecCol, k, nprobe,
+      keepIdType = true,
+      // qvec is array<bigint> (Spark's floor); the cast to double is exact
+      // for int8-range values
+      when(col("scale") > 0, dot(col("qv"), col("qvec").cast("array<double>")) / col("scale"))
+        .otherwise(lit(0.0)))
   }
 
   /**
@@ -753,11 +754,11 @@ object Similarity {
    * Scale shape: stage 1's cost is the SQ probe (quarter-width rows over
    * `nprobe/nlist` of the files); stage 2 touches the float corpus through
    * one broadcast semi-join on `neighbor_id` + a broadcast of the query
-   * vectors — no corpus shuffle, no wide sort (the rank window moves
+   * vectors — no corpus shuffle, no wide sort (the bounded top-k moves
    * 24-byte rows). At full probe with an adequate pool the result equals
    * brute force exactly (gated); at partial probe the int8 ranking gap
    * closes to the float path's recall at the same nprobe (ScaleSmoke
-   * curve).
+   * curve). Ids must be integral and `k >= 1`, as for [[topK]].
    */
   def searchIndexRerank(store: graft.store.TableStore, index: IvfIndex,
       exactSource: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
@@ -772,9 +773,7 @@ object Similarity {
       .withColumnRenamed("query_id", "__qid"))
     val scored = cv.join(q, col("__qid") === col("query_id"))
       .select(col("query_id"), col("neighbor_id"), dot(col("qv"), col("cv")).as("cos"))
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rnk", row_number().over(w)).filter(col("rnk") <= k)
-      .select("query_id", "neighbor_id")
+    topKPerQuery("searchIndexRerank", scored, k, keepIdType = true).select("query_id", "neighbor_id")
   }
 
   /** Reload a persisted index's quantizer (nlist × dim rows — bounded index
@@ -798,6 +797,16 @@ object Similarity {
    */
   def searchIndex(store: graft.store.TableStore, index: IvfIndex, queries: DataFrame,
       idCol: String, vecCol: String, k: Int, nprobe: Int = 6): DataFrame = {
+    searchStored("searchIndex", store, index, queries, idCol, vecCol, k, nprobe,
+      keepIdType = false, dot(col("qv"), col("cv")))
+  }
+
+  /** The persisted-index search both payloads share: the batch's probe
+    * frame, the `list IN (...)`-pruned index read, and [[probeAndRank]]
+    * under the payload's `score`. */
+  private def searchStored(op: String, store: graft.store.TableStore, index: IvfIndex,
+      queries: DataFrame, idCol: String, vecCol: String, k: Int, nprobe: Int,
+      keepIdType: Boolean, score: Column): DataFrame = {
     // the probes frame (nlist dots + argsort per query) is built ONCE and
     // persisted: it feeds both the list-pruning collect and the probe join —
     // recomputing it per consumer would pay the quantizer scoring twice per
@@ -806,7 +815,7 @@ object Similarity {
     val p = Caches.track(probes(index.centroids, queries, idCol, vecCol, nprobe))
     val lists = p.select("list").distinct().collect().map(_.getInt(0)) // ≤ nlist driver rows
     val c = store.read(index.table).filter(col("list").isin(lists.toIndexedSeq: _*))
-    probeAndRank(c, p, k)
+    probeAndRank(op, c, p, k, keepIdType, score).select("query_id", "neighbor_id")
   }
 
   /**
@@ -826,12 +835,17 @@ object Similarity {
    * dim-1024 section pins the linear behavior.
    */
   def quantizeInt8(emb: DataFrame, idCol: String, vecCol: String): DataFrame = {
-    val v = asDouble(col(vecCol))
+    int8Quantized(emb, Seq(idCol), asDouble(col(vecCol)))
+  }
+
+  /** [[quantizeInt8]]'s formula over any double-vector column `v`, keeping
+    * the `keys` columns: `(keys…, scale, qvec)`. */
+  private def int8Quantized(df: DataFrame, keys: Seq[String], v: Column): DataFrame = {
     val maxAbs = array_max(transform(v, x => abs(x)))
-    emb.select(col(idCol), v.as("__v"),
-        when(maxAbs > 0, lit(127.0) / maxAbs).otherwise(lit(0.0)).as("scale"))
-      .select(col(idCol), col("scale"),
-        transform(col("__v"), x => floor(x * col("scale") + lit(0.5))).as("qvec"))
+    df.select(keys.map(col) :+ v.as("__v") :+
+        when(maxAbs > 0, lit(127.0) / maxAbs).otherwise(lit(0.0)).as("scale"): _*)
+      .select(keys.map(col) :+ col("scale") :+
+        transform(col("__v"), x => floor(x * col("scale") + lit(0.5))).as("qvec"): _*)
   }
 
   /**
@@ -1201,10 +1215,7 @@ object Similarity {
    * components → the cluster-mate pair set (membership² within clusters —
    * tiny, size-gated broadcast); the scored query×corpus frame anti-joins
    * the mates and ranks what's left via the bounded map-side
-   * [[Aggregators.TopKPairsAggregator]] — a rank window would sort-shuffle
-   * the whole |Q|×|C| scored frame to per-query reducers, the aggregator
-   * moves ≤ k pairs per (query × map partition) under the identical
-   * (cos DESC, id ASC) total order. EAGER like every components consumer.
+   * [[topKPerQuery]]. EAGER like every components consumer.
    */
   def hardNegatives(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, k: Int, dupThreshold: Double, nlist: Int = 16): DataFrame = {
@@ -1237,16 +1248,9 @@ object Similarity {
     val mates = graft.ops.Ops.hintIfSmall(
       clusters.as("a").join(clusters.as("b"), col("a.cluster") === col("b.cluster"))
         .select(col("a.node").as("query_id"), col("b.node").as("neighbor_id")))
-    val q = broadcast(unitized(queries, idCol, vecCol, "query_id", "qv"))
-    val c = Caches.track(unitized(corpus, idCol, vecCol, "neighbor_id", "cv"))
-    val scored = c.join(q, col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"), dot(col("qv"), col("cv")).as("cos"))
-      .join(mates, Seq("query_id", "neighbor_id"), "left_anti")
-    val topk = udaf(new Aggregators.TopKPairsAggregator(k))
-    scored.groupBy("query_id")
-      .agg(topk(col("neighbor_id"), col("cos")).as("__tk"))
-      .select(col("query_id"), posexplode(col("__tk")).as(Seq("__pos", "__p")))
-      .select(col("query_id"), col("__p._1").as("neighbor_id"))
+    topKPerQuery("hardNegatives", scoredGrid(corpus, queries, idCol, vecCol)
+        .join(mates, Seq("query_id", "neighbor_id"), "left_anti"), k, keepIdType = false)
+      .select("query_id", "neighbor_id")
   }
 
   /**

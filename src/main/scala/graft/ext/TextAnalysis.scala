@@ -433,39 +433,66 @@ object TextAnalysis {
   def bm25(docs: DataFrame, query: String, idCol: String = "doc_id",
       textCol: String = "text", k1: Double = 1.2, b: Double = 0.75,
       topK: Int = 10): DataFrame = {
+    val qTerms = queryTerms(query, k1, b, topK, "bm25 query")
+    val postings = bm25Postings(docs, idCol, textCol, Some(qTerms))
+    val df = postings.groupBy("token").agg(count(lit(1)).as("__df"))
+    val scored = postings.join(graft.ops.Ops.hintIfSmall(df), Seq("token"))
+      .crossJoin(broadcast(bm25Stats(docs, size(tokens(col(textCol))))))
+    bm25Top(scored, col("__n"), col("__avgdl"), k1, b, topK)
+      .select(col("doc_id").as(idCol), col("score"))
+  }
+
+  /** BM25's query-term parse and parameter checks: the query's distinct
+    * whitespace-separated terms. */
+  private def queryTerms(query: String, k1: Double, b: Double, topK: Int,
+      who: String): Seq[String] = {
     require(k1 >= 0 && b >= 0 && b <= 1, s"bm25 parameters out of range: k1=$k1 b=$b")
     require(topK > 0, s"topK must be positive: $topK")
     val qTerms = query.trim.split("\\s+").filter(_.nonEmpty).distinct.toSeq
-    require(qTerms.nonEmpty, "bm25 query has no terms")
-    // avgdl as ONE double division over exact integer sum/count — an
-    // incremental double `avg` would differ across engines in ulps and
-    // avgdl multiplies into every score
-    val tl = size(tokens(col(textCol)))
-    val stats = docs.agg(count(lit(1)).as("__n"),
-      (sum(tl).cast("double") / count(tl)).as("__avgdl"))
-    // tokenize ONCE per input row, in its own twice-referenced projection:
-    // size(tokens) inline next to explode(tokens) lands ABOVE the Generate
-    // and re-splits the text per exploded OUTPUT row — O(tokens^2) per doc
-    // (measured 2.5 s vs 0.35 s on the sf0.1 corpus, r20 probe); the
-    // two-step shape computes dl below the Generate, once per document
-    val postings = docs
-      .select(col(idCol), tokens(col(textCol)).as("__tk"))
-      .select(col(idCol), size(col("__tk")).as("__dl"), explode(col("__tk")).as("__t"))
-      .filter(col("__t").isin(qTerms: _*))
-      .groupBy(col(idCol), col("__t"))
-      .agg(count(lit(1)).as("__tf"), min(col("__dl")).as("__dl"))
-    val df = postings.groupBy("__t").agg(count(lit(1)).as("__df"))
-    val scored = postings.join(graft.ops.Ops.hintIfSmall(df), Seq("__t"))
-      .crossJoin(broadcast(stats))
-      .select(col(idCol),
-        (log((col("__n") - col("__df") + lit(0.5)) / (col("__df") + lit(0.5)) + lit(1.0)) *
-          (col("__tf") * lit(k1 + 1.0)).cast("double") /
-          (col("__tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("__dl") / col("__avgdl"))))
-          .as("__s"))
-      .groupBy(col(idCol))
-      .agg(round(sum(col("__s")), 6).as("score"))
-    scored.orderBy(col("score").desc, col(idCol).asc).limit(topK)
+    require(qTerms.nonEmpty, s"$who has no terms")
+    qTerms
   }
+
+  /** BM25's corpus normalizers over one row per document with length `dl`:
+    * `(__n, __avgdl)`, avgdl as ONE double division over exact integer
+    * sum/count — an incremental double `avg` would differ across engines in
+    * ulps, and avgdl multiplies into every score. */
+  private def bm25Stats(perDoc: DataFrame, dl: Column): DataFrame =
+    perDoc.agg(count(lit(1)).as("__n"), (sum(dl).cast("double") / count(dl)).as("__avgdl"))
+
+  /** BM25 postings `(token, doc_id, tf, dl)`, restricted to `terms` when
+    * given (the filter sits BEFORE the `(token, doc)` shuffle, so only
+    * matching postings move). Tokenizes ONCE per input row, in its own
+    * twice-referenced projection: size(tokens) inline next to
+    * explode(tokens) lands ABOVE the Generate and re-splits the text per
+    * exploded OUTPUT row — O(tokens^2) per doc (measured 2.5 s vs 0.35 s on
+    * the sf0.1 corpus, r20 probe); the two-step shape computes dl below the
+    * Generate, once per document. */
+  private def bm25Postings(docs: DataFrame, idCol: String, textCol: String,
+      terms: Option[Seq[String]]): DataFrame = {
+    val exploded = docs
+      .select(col(idCol).as("doc_id"), tokens(col(textCol)).as("__tk"))
+      .select(col("doc_id"), size(col("__tk")).as("dl"), explode(col("__tk")).as("token"))
+    terms.fold(exploded)(ts => exploded.filter(col("token").isin(ts: _*)))
+      .groupBy("token", "doc_id")
+      .agg(count(lit(1)).as("tf"), min("dl").as("dl"))
+  }
+
+  /** The one BM25 score tree (Lucene `+1` idf) and rounded-score cutoff over
+    * `(doc_id, tf, dl, __df)` postings rows, `n`/`avgdl` the corpus
+    * normalizers: the `topK` `(doc_id, score)` rows by `round(score, 6)`
+    * DESC, doc_id ASC. */
+  private def bm25Top(postings: DataFrame, n: Column, avgdl: Column, k1: Double,
+      b: Double, topK: Int): DataFrame =
+    postings
+      .select(col("doc_id"),
+        (log((n - col("__df") + lit(0.5)) / (col("__df") + lit(0.5)) + lit(1.0)) *
+          (col("tf") * lit(k1 + 1.0)).cast("double") /
+          (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / avgdl)))
+          .as("__s"))
+      .groupBy(col("doc_id"))
+      .agg(round(sum(col("__s")), 6).as("score"))
+      .orderBy(col("score").desc, col("doc_id").asc).limit(topK)
 
   /** Handle for a persisted inverted index: the table-name prefix plus the
     * FROZEN corpus statistics (`n_docs`, `avgdl`) captured at build time —
@@ -497,23 +524,20 @@ object TextAnalysis {
   def buildTextIndex(store: graft.store.TableStore, table: String, docs: DataFrame,
       idCol: String = "doc_id", textCol: String = "text",
       numFiles: Int = 32): TextIndex = {
-    val tl = size(tokens(col(textCol)))
-    // avgdl as ONE double division over exact integer sum/count — bm25's
-    // determinism contract, frozen into the stats table
-    val st = docs.agg(count(lit(1)).as("n"),
-      (sum(tl).cast("double") / count(tl)).as("avgdl")).head()
-    val (n, avgdl) = (st.getLong(0), st.getDouble(1))
-    // two-step tokenize (see bm25's postings comment): dl computed below
-    // the Generate, once per document — not per exploded row
-    val postings = Caches.track(docs
-      .select(col(idCol).as("doc_id"), tokens(col(textCol)).as("__tk"))
-      .select(col("doc_id"), size(col("__tk")).as("dl"), explode(col("__tk")).as("token"))
-      .groupBy("token", "doc_id")
-      .agg(count(lit(1)).as("tf"), min("dl").as("dl")))
+    // bm25's determinism contract, frozen into the stats table
+    val st = bm25Stats(docs, size(tokens(col(textCol)))).head()
+    val postings = Caches.track(bm25Postings(docs, idCol, textCol, None))
     store.atomicOverwriteClustered(s"${table}_postings", postings, Seq("token"), numFiles)
     store.atomicOverwrite(s"${table}_df",
       postings.groupBy("token").agg(count(lit(1)).as("df")))
-    val spark = docs.sparkSession
+    writeTextStats(store, table, st, docs.sparkSession)
+  }
+
+  /** Persist `(n_docs, avgdl)` — the `(__n, __avgdl)` row of [[bm25Stats]]
+    * — as the index's one-row `_stats` table. */
+  private def writeTextStats(store: graft.store.TableStore, table: String,
+      st: org.apache.spark.sql.Row, spark: org.apache.spark.sql.SparkSession): TextIndex = {
+    val (n, avgdl) = (st.getLong(0), st.getDouble(1))
     import spark.implicits._
     store.atomicOverwrite(s"${table}_stats", Seq((n, avgdl)).toDF("n_docs", "avgdl"))
     TextIndex(table, n, avgdl)
@@ -534,13 +558,7 @@ object TextAnalysis {
   def appendToTextIndex(store: graft.store.TableStore, index: TextIndex,
       batch: DataFrame, idCol: String = "doc_id", textCol: String = "text",
       numFiles: Int = 32): Unit = {
-    // two-step tokenize (see bm25's postings comment): dl computed below
-    // the Generate, once per document — not per exploded row
-    val postings = Caches.track(batch
-      .select(col(idCol).as("doc_id"), tokens(col(textCol)).as("__tk"))
-      .select(col("doc_id"), size(col("__tk")).as("dl"), explode(col("__tk")).as("token"))
-      .groupBy("token", "doc_id")
-      .agg(count(lit(1)).as("tf"), min("dl").as("dl")))
+    val postings = Caches.track(bm25Postings(batch, idCol, textCol, None))
     store.append(s"${index.table}_postings", postings)
     store.append(s"${index.table}_df",
       postings.groupBy("token").agg(count(lit(1)).as("df")))
@@ -576,19 +594,14 @@ object TextAnalysis {
   def refreshTextIndexStats(store: graft.store.TableStore, table: String): TextIndex = {
     val perDoc = store.read(s"${table}_postings")
       .groupBy("doc_id").agg(min("dl").as("__dl"))
-    val st = perDoc.agg(count(lit(1)).as("n"),
-      (sum(col("__dl")).cast("double") / count(col("__dl"))).as("avgdl")).head()
+    val st = bm25Stats(perDoc, col("__dl")).head()
     // an index with zero postings has nothing to refresh FROM — the avgdl
     // aggregate is NULL there, and silently writing (0, 0) would divide
     // every later score by a zero normalizer; refuse loudly instead
     require(st.getLong(0) > 0 && !st.isNullAt(1),
       s"refreshTextIndexStats('$table'): the postings table has no " +
         "token-bearing documents — rebuild the index instead of refreshing")
-    val (n, avgdl) = (st.getLong(0), st.getDouble(1))
-    val spark = perDoc.sparkSession
-    import spark.implicits._
-    store.atomicOverwrite(s"${table}_stats", Seq((n, avgdl)).toDF("n_docs", "avgdl"))
-    TextIndex(table, n, avgdl)
+    writeTextStats(store, table, st, perDoc.sparkSession)
   }
 
   /**
@@ -603,24 +616,14 @@ object TextAnalysis {
    */
   def searchTextIndex(store: graft.store.TableStore, index: TextIndex, query: String,
       k1: Double = 1.2, b: Double = 0.75, topK: Int = 10): DataFrame = {
-    require(k1 >= 0 && b >= 0 && b <= 1, s"bm25 parameters out of range: k1=$k1 b=$b")
-    require(topK > 0, s"topK must be positive: $topK")
-    val qTerms = query.trim.split("\\s+").filter(_.nonEmpty).distinct.toSeq
-    require(qTerms.nonEmpty, "searchTextIndex: query has no terms")
+    val qTerms = queryTerms(query, k1, b, topK, "searchTextIndex: query")
     val post = store.read(s"${index.table}_postings")
       .filter(col("token").isin(qTerms: _*))
     val dfT = store.read(s"${index.table}_df")
       .filter(col("token").isin(qTerms: _*))
       .groupBy("token").agg(sum("df").as("__df"))
-    post.join(graft.ops.Ops.hintIfSmall(dfT), Seq("token"))
-      .select(col("doc_id"),
-        (log((lit(index.nDocs) - col("__df") + lit(0.5)) / (col("__df") + lit(0.5)) + lit(1.0)) *
-          (col("tf") * lit(k1 + 1.0)).cast("double") /
-          (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / lit(index.avgdl))))
-          .as("__s"))
-      .groupBy(col("doc_id"))
-      .agg(round(sum(col("__s")), 6).as("score"))
-      .orderBy(col("score").desc, col("doc_id").asc).limit(topK)
+    bm25Top(post.join(graft.ops.Ops.hintIfSmall(dfT), Seq("token")),
+      lit(index.nDocs), lit(index.avgdl), k1, b, topK)
   }
 
   /**
@@ -1180,9 +1183,8 @@ object TextAnalysis {
     // temp names guaranteed absent from the input (a fixed "__t" would
     // silently collide with a user column of that name)
     val taken = docs.columns.toSet
-    def fresh(base: String) = Iterator.from(0).map(i => s"$base$i").find(!taken(_)).get
-    val tCol = fresh("__tok")
-    val nCol = fresh("__ntok")
+    val tCol = graft.ops.Ops.freshName(taken, "__tok")
+    val nCol = graft.ops.Ops.freshName(taken, "__ntok")
     val t = tokens(col(textCol))
     docs.select(col(idCol), t.as(tCol), size(t).as(nCol))
       .withColumn("chunk_id",

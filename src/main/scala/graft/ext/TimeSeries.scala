@@ -23,12 +23,6 @@ import org.apache.spark.sql.functions._
  */
 object TimeSeries {
 
-  /** First `__name`-style column name not already taken in `df`. */
-  private def freshCol(df: DataFrame, base: String): String = {
-    val taken = df.columns.toSet
-    Iterator.from(0).map(i => if (i == 0) base else s"$base$i").find(!taken(_)).get
-  }
-
   /**
    * Fill a per-key daily series to a dense grid over each key's own
    * `[min(day), max(day)]` span (no fabrication outside a key's observed
@@ -57,8 +51,9 @@ object TimeSeries {
     require(badFill.isEmpty, s"bad fillCols: ${badFill.mkString(", ")}")
     val metricCols = daily.columns.filterNot(c => c == keyCol || c == dayCol)
     val fill = fillCols.toSet
-    val next = freshCol(daily, "__next")
-    val day = freshCol(daily, "__day")
+    val taken = daily.columns.toSet
+    val next = graft.ops.Ops.freshName(taken, "__next", bare = true)
+    val day = graft.ops.Ops.freshName(taken, "__day", bare = true)
     val w = Window.partitionBy(keyCol).orderBy(dayCol)
     // date columns need date_sub (date − day-time interval would widen to
     // timestamp and make the sequence bounds type-mismatch)

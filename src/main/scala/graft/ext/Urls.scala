@@ -161,8 +161,8 @@ object Urls {
     val taken = df.columns.toSet
     require(!taken.contains(out),
       s"output column '$out' already exists on the input frame")
-    val hc = Iterator.from(0).map(i => s"__pslhost$i").find(!taken(_)).get
-    val dc = Iterator.from(0).map(i => s"__psldom$i").find(!taken(_)).get
+    val hc = graft.ops.Ops.freshName(taken, "__pslhost")
+    val dc = graft.ops.Ops.freshName(taken, "__psldom")
     val mapped = hosts.join(best, Seq("__host"), "left")
       .select(col("__host"), coalesce(col("__k"), lit(1)).as("__k"))
       .select(col("__host").as(hc),

@@ -83,6 +83,12 @@ object Ops {
     modified.join(created, Seq(pk), "left_anti")
   }
 
+  /** The first of `base0, base1, …` — `base, base1, …` when `bare` —
+    * absent from `taken`: a temp-column name that can never clobber or
+    * collide with a caller column (a fixed `"__rn"` would). */
+  private[graft] def freshName(taken: Set[String], base: String, bare: Boolean = false): String =
+    Iterator.from(0).map(i => if (bare && i == 0) base else s"$base$i").find(!taken(_)).get
+
   /** Broadcast-hint the key side only when Catalyst's size ESTIMATE says it
     * fits the session's broadcast threshold. An unconditional hint bypasses
     * AQE's size check — a churn-heavy window can produce an arbitrarily
@@ -276,7 +282,7 @@ object Ops {
         s"renamed right columns ${renamed.mkString(",")} still collide")
     val rTime = if (leftCols(rightTime)) rightTime + rightSuffix else rightTime
     val taken = leftCols ++ renamed
-    val band = Iterator.from(0).map(i => s"__band$i").find(!taken(_)).get
+    val band = freshName(taken, "__band")
     def bandOf(t: Column): Column = floor(unix_micros(t.cast("timestamp")) / lit(tolUs))
     val l = left.withColumn(band, explode(array(
       bandOf(col(leftTime)) - 1, bandOf(col(leftTime)), bandOf(col(leftTime)) + 1)))
@@ -341,7 +347,7 @@ object Ops {
     def ren(c: String) = if (leftCols(c)) c + rightSuffix else c
     val (rS, rE) = (ren(rightStart), ren(rightEnd))
     val taken = leftCols ++ renamed
-    val band = Iterator.from(0).map(i => s"__band$i").find(!taken(_)).get
+    val band = freshName(taken, "__band")
     def bandOf(t: Column): Column = floor(us(t) / lit(spanUs))
     val l = left.withColumn(band, explode(array(
       bandOf(col(leftStart)) - 1, bandOf(col(leftStart)), bandOf(col(leftStart)) + 1)))

@@ -210,21 +210,23 @@ final class Runner(
       val n = changed.count() // recordsCopied = changed-key count (TableUpdateService.cs:163)
       if (n > 0) {
         if (spec.partitionByDate) {
-          // same broadcast(distinct keys) shape as Ops.upsert so neither the
-          // target nor the source shuffles for a small changed-key set
-          val keys = org.apache.spark.sql.functions.broadcast(changed.select(pk).distinct())
+          // Ops.upsert's keyed joins: the changed keys broadcast only when
+          // their estimate fits the threshold (Ops.hintIfSmall) — a churn-
+          // heavy window degrades to a shuffle join instead of failing at
+          // the broadcast limit
+          val keys = changed.select(pk).distinct()
           val tgt = target.read(spec.tableName) // carries the load_date partition column
           val fresh = Ops.dropAudit(Ops.keyedFetch(src, pk, keys))
             .withColumn("load_date", to_date(col(dc)))
-          val days = tgt.join(keys, Seq(pk), "left_semi").select("load_date")
+          val days = Ops.keyedFetch(tgt, pk, keys).select("load_date")
             .union(fresh.select("load_date")).distinct()
             .collect().map { r =>
               Option(r.getDate(0)).getOrElse(throw new IllegalArgumentException(
                 s"table '${spec.tableName}': a changed row has a NULL $dc — " +
                   "date-partitioned tables require a non-null date_column")).toLocalDate
             }.toSeq
-          val slice = tgt.filter(col("load_date").isin(days: _*)).drop("load_date")
-            .join(keys, Seq(pk), "left_anti")
+          val slice = Ops.keyedDelete(
+              tgt.filter(col("load_date").isin(days: _*)).drop("load_date"), pk, keys)
             .unionByName(fresh.drop("load_date"))
             .withColumn("load_date", to_date(col(dc)))
           target.overwriteDatePartitions(spec.tableName, slice, "load_date", days)

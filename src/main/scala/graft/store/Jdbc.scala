@@ -10,9 +10,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * world is SQL Server via TDS — `TableCopyService.cs` reads with a
  * streaming `SqlDataReader` and writes with `SqlBulkCopy`). In Spark the
  * same roles are `spark.read.jdbc` / `df.write.jdbc`, and the engine's
- * operators are storage-agnostic `DataFrame → DataFrame` transforms, so
- * swapping [[TableStore]] (parquet, used by the test harness) for this
- * module is the only change a production deployment needs.
+ * operators are storage-agnostic `DataFrame → DataFrame` transforms. This
+ * module is NOT a drop-in for [[TableStore]]: [[graft.pipeline.Runner]] is
+ * typed on `TableStore`, and `SqlStepRegistry.run` refuses `jdbc:` steps,
+ * so a Runner run aborts on one. Callers drive JDBC targets directly
+ * through [[overwriteWindow]], [[upsert]] and [[call]], as the `o19`–`o22`
+ * gates do.
  *
  * The read/append legs and the TRANSACTIONAL write legs
  * ([[overwriteWindow]], [[upsert]], [[call]]) are all exercised against

@@ -1805,10 +1805,7 @@ final class TableStore(spark: SparkSession, root: String,
       acc.bitwiseOR(shiftleft(shiftright(na, i).bitwiseAND(lit(1L)), 2 * i + 1))
         .bitwiseOR(shiftleft(shiftright(nb, i).bitwiseAND(lit(1L)), 2 * i))
     }
-    val zCol = {
-      val taken = df.columns.toSet
-      Iterator.from(0).map(i => s"__z$i").find(!taken(_)).get
-    }
+    val zCol = graft.ops.Ops.freshName(df.columns.toSet, "__z")
     atomicOverwriteAs(table,
       df.withColumn(zCol, z)
         .repartitionByRange(numFiles, col(zCol))

@@ -165,7 +165,7 @@ object EventStream {
         s"renamed right columns ${renamed.mkString(",")} still collide")
     val rTime = if (leftCols(rightTime)) rightTime + rightSuffix else rightTime
     val taken = leftCols ++ renamed
-    val band = Iterator.from(0).map(i => s"__band$i").find(!taken(_)).get
+    val band = graft.ops.Ops.freshName(taken, "__band")
     def bandOf(t: org.apache.spark.sql.Column) =
       floor(unix_micros(t.cast("timestamp")) / lit(tolUs))
     val l = left.withWatermark(leftTime, watermark)
@@ -206,8 +206,7 @@ object EventStream {
     events.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(pk).orderBy(col(orderCol).desc)
-      val taken = batch.columns.toSet
-      val rn = Iterator.from(0).map(i => s"__rn$i").find(!taken(_)).get
+      val rn = graft.ops.Ops.freshName(batch.columns.toSet, "__rn")
       val fresh = batch.withColumn(rn, row_number().over(w))
         .filter(col(rn) === 1).drop(rn)
       // upsertExact, not upsert: the audit-dropping copy contract would strip
@@ -249,8 +248,7 @@ object EventStream {
     events.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(pk).orderBy(col(orderCol).desc)
-      val taken = batch.columns.toSet
-      val rn = Iterator.from(0).map(i => s"__rn$i").find(!taken(_)).get
+      val rn = graft.ops.Ops.freshName(batch.columns.toSet, "__rn")
       // persisted: the deduped batch feeds TWO jobs (the day collect and the
       // partition write) — without it the window recomputes per job
       val fresh = batch.withColumn(rn, row_number().over(w))

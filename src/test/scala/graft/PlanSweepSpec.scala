@@ -3,7 +3,8 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Global physical-plan contract over EVERY gated query: nothing may plan a
-  * CartesianProduct, and unkeyed broadcast-nested-loop joins are allowed
+  * CartesianProduct or rank similarity scores with a `row_number` window,
+  * and unkeyed broadcast-nested-loop joins are allowed
   * only where the operator's design is explicitly an all-pairs scan over a
   * broadcast side (brute-force similarity top-k: tiny query set × corpus,
   * the baseline ANN is measured against). A new query that accidentally
@@ -112,6 +113,12 @@ class PlanSweepSpec extends AnyFunSuite {
       // scalar, never data-proportional
       "dedup_cosine_lsh_sharpen")
 
+  /** A `row_number()` window whose ORDER BY holds the `cos` score — the
+    * per-query top-k that sort-shuffles every scored candidate; the bounded
+    * map-side top-k is the one ranking path over similarity scores. */
+  private val cosRankWindow =
+    """row_number\(\) windowspecdefinition\([^)]*\bcos#\d+ (ASC|DESC)""".r
+
   test("no gated query plans a cartesian product; BNLJ only where designed") {
     val undeclared = scala.collection.mutable.ListBuffer.empty[String]
     val offenders = Queries.all.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
@@ -128,11 +135,12 @@ class PlanSweepSpec extends AnyFunSuite {
       val cartesian = plan.contains("CartesianProduct")
       val bnlj = plan.contains("BroadcastNestedLoopJoin") &&
         !broadcastAllPairsByDesign(name)
-      if (cartesian || bnlj)
-        Some(s"$name: ${if (cartesian) "CartesianProduct" else "unplanned BroadcastNestedLoopJoin"}")
-      else None
+      val cosRank = cosRankWindow.findFirstIn(plan).isDefined
+      Seq(cartesian -> "CartesianProduct", bnlj -> "unplanned BroadcastNestedLoopJoin",
+          cosRank -> "row_number window ordered on cos (use the bounded top-k)")
+        .collect { case (true, what) => s"$name: $what" }
     }
-    assert(offenders.isEmpty, s"unkeyed join plans:\n${offenders.mkString("\n")}")
+    assert(offenders.isEmpty, s"offending plans:\n${offenders.mkString("\n")}")
     assert(undeclared.isEmpty,
       s"gates building undeclared fixtures:\n${undeclared.mkString("\n")}")
   }

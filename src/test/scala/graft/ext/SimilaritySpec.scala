@@ -187,6 +187,63 @@ class SimilaritySpec extends AnyFunSuite with org.scalatest.BeforeAndAfterEach {
       Similarity.knnClassify(df, df, "vec_id", "embedding", "label", 0))
   }
 
+  test("exact cosine ties break by neighbor id ASC in every ranked operator") {
+    // ids 30, 12, 21 share one vector, so their cosines against any query
+    // are bit-equal; query 0's k=3 cutoff falls inside that tie group
+    val rows = Seq(
+      (0L, Array(1f, 0f), "A"), (10L, Array(1f, 0.1f), "B"),
+      (30L, Array(0.6f, 0.8f), "A"), (12L, Array(0.6f, 0.8f), "B"),
+      (21L, Array(0.6f, 0.8f), "A"), (5L, Array(0f, 1f), "B"),
+      (40L, Array(-1f, 0f), "B"))
+    val df = rows.toDF("vec_id", "embedding", "label")
+    val q = df.filter(col("vec_id") === 0L)
+    val want = Set((0L, 10L), (0L, 12L), (0L, 21L))
+    def top(ranked: org.apache.spark.sql.DataFrame): Set[(Long, Long)] = {
+      val got = ranked.as[(Long, Long)].collect().toSet
+      Dedup.unpersistAll()
+      got
+    }
+    assert(top(Similarity.topK(df, q, "vec_id", "embedding", 3)) == want)
+    val store = new graft.store.TableStore(spark,
+      java.nio.file.Files.createTempDirectory("graft-tie-spec").toString)
+    val plain = Similarity.buildIndex(store, "tie_f", df, "vec_id", "embedding", nlist = 2)
+    assert(top(Similarity.searchIndex(store, plain, q, "vec_id", "embedding", 3,
+      nprobe = 2)) == want)
+    val sq = Similarity.buildIndexQuantized(store, "tie_q", df, "vec_id", "embedding", nlist = 2)
+    assert(top(Similarity.searchIndexQuantized(store, sq, q, "vec_id", "embedding", 3,
+      nprobe = 2)) == want)
+    // ranks 1..4 are 10 (B), 12 (B), 21 (A), 30 (A): the first same-label
+    // hit sits at rank 3 — an id-DESC tiebreak would put 30 at rank 2
+    def rr(k: Int): Double = {
+      val got = Similarity.retrievalMrr(df, q, "vec_id", "embedding", "label", k)
+        .as[(Long, Double)].collect().toMap
+      Dedup.unpersistAll()
+      got(0L)
+    }
+    assert(rr(3) == 0.333333)
+    assert(rr(2) == 0.0)
+  }
+
+  test("ranked operators refuse non-integral ids and k < 1 by name; int ids keep their type") {
+    val df = Seq((1, Array(1f, 0f), "A"), (2, Array(0.9f, 0.1f), "B"), (3, Array(0f, 1f), "A"))
+      .toDF("vec_id", "embedding", "label")
+    val top = Similarity.topK(df, df, "vec_id", "embedding", 1)
+    assert(top.schema("neighbor_id").dataType == org.apache.spark.sql.types.IntegerType)
+    assert(top.as[(Int, Int)].collect().toSet == Set((1, 2), (2, 1), (3, 2)))
+    // through a cast, '007' would rank and come back as 7 and the decimal
+    // ids 0.5 / 1.0 / 1.5 would merge — refused instead
+    val str = df.withColumn("vec_id", format_string("%03d", col("vec_id")))
+    val e1 = intercept[IllegalArgumentException](Similarity.topK(str, str, "vec_id", "embedding", 1))
+    assert(e1.getMessage.contains("topK: ids must be integral") && e1.getMessage.contains("string"))
+    val dec = df.withColumn("vec_id", (col("vec_id") / 2).cast("decimal(5,1)"))
+    val e2 = intercept[IllegalArgumentException](
+      Similarity.retrievalMrr(dec, dec, "vec_id", "embedding", "label", 1))
+    assert(e2.getMessage.contains("retrievalMrr: ids must be integral") &&
+      e2.getMessage.contains("decimal(5,1)"))
+    val e3 = intercept[IllegalArgumentException](Similarity.topK(df, df, "vec_id", "embedding", 0))
+    assert(e3.getMessage.contains("topK: k must be >= 1"))
+  }
+
   test("ANN (IVF, kmeans coarse quantizer) recall ≥ 0.6 vs exact top-5 at nprobe=6/16") {
     val q = emb.filter(col("vec_id") < 20)
     val exact = Similarity.topK(emb, q, "vec_id", "embedding", 5)
