@@ -75,18 +75,21 @@ final class Runner(
       log.warn(s"table '${h.tableName}' has type 'historical' — classified but never dispatched " +
         "(reference parity, BulkCopyManager.cs:104); skipping"))
 
-    val sprocResults = classified.sprocs.map(runStep(_, window)) // throws on failure (abort-run)
+    // every ledger record of this run carries one run-level id
+    val pipelineRunId = Some(java.util.UUID.randomUUID.toString)
+    val sprocResults = classified.sprocs.map(runStep(_, window, pipelineRunId)) // throws (abort-run)
     val copyUpdate = classified.copyUpdate.flatMap { spec =>
-      val c = runIsolated(spec, "Fact Copy", window)(copyTable(spec, window, truncate = false))
-      val u = runIsolated(spec, "Table Update", window)(updateTable(spec, window))
+      val c = runIsolated(spec, "Fact Copy", window, pipelineRunId)(
+        copyTable(spec, window, truncate = false))
+      val u = runIsolated(spec, "Table Update", window, pipelineRunId)(updateTable(spec, window))
       Seq(c, u)
     }
     val facts = classified.facts.map(spec =>
-      runIsolated(spec, "Fact Copy", window)(copyTable(spec, window, truncate = false)))
+      runIsolated(spec, "Fact Copy", window, pipelineRunId)(copyTable(spec, window, truncate = false)))
     implicit val ec: ExecutionContext = ExecutionContext.global
     val dims = Await.result(
       Future.traverse(classified.dims)(spec => Future(
-        runIsolated(spec, "Dim Copy", window)(copyTable(spec, window, truncate = true)))),
+        runIsolated(spec, "Dim Copy", window, pipelineRunId)(copyTable(spec, window, truncate = true)))),
       Duration.Inf)
     val results = sprocResults ++ copyUpdate ++ facts ++ dims
     if (snapshotRun) {
@@ -108,12 +111,13 @@ final class Runner(
     * completion here: `spark.sql` executes a command (INSERT, DDL) eagerly,
     * and a query step is drained through the `noop` sink, so a SELECT-only
     * step executes too instead of only being analysed. Failures rethrow. */
-  private def runStep(spec: TableSpec, window: (LocalDate, LocalDate)): TableResult = {
+  private def runStep(spec: TableSpec, window: (LocalDate, LocalDate),
+      pipelineRunId: Option[String]): TableResult = {
     val (from, to) = Windows.sprocOverride(window, clock())
     val tlog = runLogs.map(_.forTable(spec.tableName))
     tlog.foreach(_.info(s"Sproc started window=$from..$to"))
     val rec = ledger.start(spec.tableName, "Sproc",
-      Some((from.toString, to.toString)))
+      Some((from.toString, to.toString)), pipelineRunId = pipelineRunId)
     Try {
       val df = steps.run(spark, spec.tableName, from, to)
       if (!df.queryExecution.commandExecuted.isInstanceOf[CommandResult])
@@ -130,13 +134,13 @@ final class Runner(
     }
   }
 
-  private def runIsolated(spec: TableSpec, process: String, window: (LocalDate, LocalDate))(
-      body: => Long): TableResult = {
+  private def runIsolated(spec: TableSpec, process: String, window: (LocalDate, LocalDate),
+      pipelineRunId: Option[String])(body: => Long): TableResult = {
     val tlog = runLogs.map(_.forTable(spec.tableName))
     tlog.foreach(_.info(s"$process started window=${window._1}..${window._2}"))
     val rec = ledger.start(spec.tableName, process,
       Some((window._1.toString, window._2.toString)),
-      spec.dateColumn, spec.updateDateColumn, spec.primaryKey)
+      spec.dateColumn, spec.updateDateColumn, spec.primaryKey, pipelineRunId)
     Try(body) match {
       case Success(rows) =>
         ledger.finish(rec, "Completed", Some(rows))

@@ -1202,9 +1202,12 @@ final class TableStore(spark: SparkSession, root: String,
   }
 
   /** Append rows (the reference's plain `SqlBulkCopy` append path,
-    * `TableCopyService.cs:121,144-170`); used for the ledger and pure-append
-    * facts. Takes the writer lock (waiting up to `appendLockWaitMs` — appends
-    * serialize fine, unlike rewrites where failing fast is the right call):
+    * `TableCopyService.cs:121,144-170`); used for pure-append facts,
+    * streaming sinks, index growers and the run ledger's folds (one
+    * generation per many records; a single record never comes here — see
+    * [[graft.ledger.Ledger]]). Takes the writer lock (waiting up to
+    * `appendLockWaitMs` — appends serialize fine, unlike rewrites where
+    * failing fast is the right call):
     * an unlocked append racing a rewrite can land its files in a retired
     * directory and be silently lost, and two concurrent append jobs race on
     * the shared `_temporary` staging dir. In pointer mode each append is its
@@ -1857,9 +1860,10 @@ final class TableStore(spark: SparkSession, root: String,
   }
 
   /** Small-file compaction: rewrite the table as ~`targetFiles` files with
-    * an atomic swap. Append-heavy tables (ledgers, streaming sinks, micro-
-    * batch upserts) accrete one-file-per-batch; at scale the file count —
-    * not the byte count — dominates scan planning and open() overhead, so
+    * an atomic swap. Append-heavy tables (streaming sinks, micro-batch
+    * upserts, pure-append facts) accrete one-file-per-batch; at scale the
+    * file count — not the byte count — dominates scan planning and open()
+    * overhead, so
     * periodic compaction is part of the table lifecycle. Readers see the
     * old state until the single atomic publish. In pointer mode compaction
     * also folds accumulated append generations back into one. A

@@ -314,4 +314,28 @@ class RunnerSpec extends AnyFunSuite {
     // set — only dispatched tables are, so ledger appends never bloat pins
     assert(tgt.snapshotEntries(snap2).keySet == Set("fact_sales", "dim_color"))
   }
+  test("pointer-mode runs write no ledger generation; one run's records share one run id") {
+    import graft.store.CommitMode
+    val (src, _, _) = setup()
+    val tgt = new TableStore(spark, Files.createTempDirectory("graft-tgt-ledger").toString,
+      CommitMode.Pointer)
+    val led = new Ledger(spark, tgt, clock = clock)
+    val runner = new Runner(spark, src, tgt, led, clock = clock)
+    val spec = cfg(TableSpec("fact_sales", "fact", dateColumn = Some("sold_at")),
+      TableSpec("dim_color", "dim"))
+    def runIds(): Map[String, Seq[String]] =
+      led.history.select("runId", "pipelineRunId").as[(String, String)].collect().toSeq
+        .groupBy(_._1).map { case (r, ids) => r -> ids.map(_._2) }
+    assert(runner.run(spec).forall(_.ok))
+    val first = runIds()
+    assert(runner.run(spec).forall(_.ok))
+    val second = runIds() -- first.keySet
+    val ids1 = first.values.flatten.toSet
+    val ids2 = second.values.flatten.toSet
+    assert(first.size == 2 && second.size == 2)
+    assert(ids1.size == 1 && ids2.size == 1 && ids1 != ids2 && !ids1.contains(null), s"$ids1 $ids2")
+    val ledgerDir = new java.io.File(tgt.tablePath("tbl_dw_copy_logs"))
+    val gens = Option(ledgerDir.listFiles).toSeq.flatten.filter(_.getName.startsWith("_gen-"))
+    assert(gens.isEmpty, s"ledger generations: ${gens.map(_.getName).mkString(", ")}")
+  }
 }
