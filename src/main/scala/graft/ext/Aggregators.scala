@@ -168,7 +168,6 @@ object Aggregators {
     * and error (`n_tokens/(capacity+1)`); see [[FrequentItemsSketch]]. */
   def frequentTokens(spark: SparkSession, docs: DataFrame, capacity: Int,
       textCol: String = "text"): DataFrame = {
-    import spark.implicits._
     val agg = udaf(new FrequentItemsSketch(capacity))
     docs.select(explode(TextAnalysis.tokens(col(textCol))).as("tok"))
       .agg(agg(col("tok")).as("sketch"))
@@ -179,7 +178,6 @@ object Aggregators {
   /** Per-label centroid of the `embeddings` table, values rounded to
     * `scale` decimals so the result is robust to summation order. */
   def labelCentroids(spark: SparkSession, emb: DataFrame, scale: Int = 6): DataFrame = {
-    import spark.implicits._
     val dim = emb.select(col("embedding")).head().getSeq[Float](0).length
     val agg = udaf(new CentroidAggregator(dim))
     emb.select(col("label"), col("embedding").cast("array<double>").as("v"))

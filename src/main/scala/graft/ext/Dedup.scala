@@ -519,8 +519,9 @@ object Dedup {
   }
 
   /** Star-contraction alternations the last distributed
-    * [[connectedComponents]] run took — observability for the scale smoke
-    * (a 1 M-link chain must converge in ~log rounds, not diameter). */
+    * [[connectedComponents]] run took — observability for the round bound
+    * (a chain must converge in ~log rounds, not diameter: `DedupSpec` pins
+    * a 512-link chain; BASELINE.md records 21 rounds on a 1 M-link path). */
   val lastDistributedRounds = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** Eager lineage truncation for the CC fixpoint. With

@@ -108,7 +108,8 @@ object Similarity {
     * the previous cast + `transform(x -> x / norm)` composition contained a
     * higher-order lambda, which has NO codegen and dragged the whole
     * projection (cast included) into interpreted eval: measured as the
-    * dominant cost of the dim-1024 IVF path in `ScaleSmoke`. Arithmetic is
+    * dominant cost of the dim-1024 IVF path (BASELINE.md, "Round-6
+    * similarity-path codegen fix": 100-query ANN 380 s → 2.2 s). Arithmetic is
     * identical (in-order Σx², per-element divide), so gated results are
     * bit-unchanged. */
   private def unitized(df: DataFrame, idCol: String, vecCol: String,
@@ -447,8 +448,9 @@ object Similarity {
     // it must be MATERIALIZED, not a lazy projection: BroadcastHashJoin
     // codegen defers stream-side column evaluation to per-OUTPUT-row, so the
     // probe join would otherwise re-run normalize + the nlist-dot argmax
-    // once per MATCH — measured 58 s → 1.1 s on the ScaleSmoke dim-512
-    // corpus (35× tax at ~37 matches/row). For reuse across query batches,
+    // once per MATCH — measured 58 s → 1.1 s on a dim-512 replica corpus
+    // (35× tax at ~37 matches/row; BASELINE.md, "Round-6 similarity-path
+    // codegen fix"). For reuse across query batches,
     // [[buildIndex]] writes this same frame to storage instead.
     val c = Caches.track(ivfAssigned(corpus, idCol, vecCol, cents))
     probeAndRank(op, c, probes(cents, queries, idCol, vecCol, nprobe), k,
@@ -757,8 +759,9 @@ object Similarity {
    * vectors — no corpus shuffle, no wide sort (the bounded top-k moves
    * 24-byte rows). At full probe with an adequate pool the result equals
    * brute force exactly (gated); at partial probe the int8 ranking gap
-   * closes to the float path's recall at the same nprobe (ScaleSmoke
-   * curve). Ids must be integral and `k >= 1`, as for [[topK]].
+   * closes to the float path's recall at the same nprobe (BASELINE.md,
+   * "partial-probe recall curves, IVF index family": 40 k jittered
+   * vectors). Ids must be integral and `k >= 1`, as for [[topK]].
    */
   def searchIndexRerank(store: graft.store.TableStore, index: IvfIndex,
       exactSource: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
@@ -831,8 +834,9 @@ object Similarity {
    * is materialized as a column FIRST, and the quantizing lambda references
    * `col("scale")` — embedding the scale subtree inside the lambda would
    * re-evaluate the max per ELEMENT, an O(d²)-per-row tax that at real
-   * embedding widths (1–4 k) costs 30–1000× (r3 verdict). `ScaleSmoke`'s
-   * dim-1024 section pins the linear behavior.
+   * embedding widths (1–4 k) costs 30–1000× (r3 verdict). The linear
+   * behavior is measured at dim 1024 in BASELINE.md, "janino 64 KB find +
+   * fix" (20 k vectors quantize in 0.26 s).
    */
   def quantizeInt8(emb: DataFrame, idCol: String, vecCol: String): DataFrame = {
     int8Quantized(emb, Seq(idCol), asDouble(col(vecCol)))
@@ -892,7 +896,8 @@ object Similarity {
     // interpreted eval, see `unitized`) and NOT a CreateArray of per-
     // centroid acos(dot(...)) children (at nlist×dim ≈ 16×1024 that
     // generates past janino's 64 KB method limit and the stage silently
-    // falls back to interpreted eval anyway — the r15 ScaleSmoke find)
+    // falls back to interpreted eval anyway — BASELINE.md, "janino 64 KB
+    // find + fix")
     val angles = org.apache.spark.sql.graftx.VectorFunctions.centroid_angles(col("v"), cents)
     // cached: index and probe sides both project from this subtree
     // (Caches.unpersistAll releases it after the query is consumed)
@@ -986,7 +991,8 @@ object Similarity {
     // ONE codegen'd sign_band_keys expression (the plane matrix travels as
     // a single plan reference; the previous bands x rowsPerBand inline
     // when(dot(...)) block overflowed janino's 64 KB method limit at
-    // 144 planes and silently ran interpreted — the r15 ScaleSmoke find)
+    // 144 planes and silently ran interpreted — BASELINE.md, "janino 64 KB
+    // find + fix")
     def keyedFor(b: Int, r: Int): DataFrame = signBandKeyed(u, dim, b, r, seed)
     def estPairs(keyed: DataFrame): Long = estBucketPairs(keyed)
     // Ladder recall math (P(candidate | cos >= 0.99), p = 1 − θ/π ≈ 0.955

@@ -89,8 +89,6 @@ object Validate {
       violation(c).map(v =>
         (c, i, coalesce(sum(when(v, 1L).otherwise(0L)), lit(0L)).as(s"__v_$i")))
     }
-    val spark = df.sparkSession
-    import spark.implicits._
 
     val rowReport: Option[DataFrame] =
       if (rowChecks.isEmpty) None

@@ -6,7 +6,6 @@ import java.time.LocalDate
 import graft.Queries._
 import graft.ext.Sampling
 import graft.ops.Ops
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 

@@ -3,7 +3,6 @@ package gates
 
 import graft.Queries._
 import graft.ext.{Eval, Privacy, Sampling, TextAnalysis}
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**

@@ -3,7 +3,6 @@ package gates
 
 import graft.Queries._
 import graft.ext.{Similarity, TextAnalysis}
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -339,7 +338,8 @@ object SimilarityGates {
     // contains the true top-k on this fixture, so the composed pipeline
     // (SQ probe + keyed float fetch + exact re-rank) must equal brute force
     // exactly; the partial-probe benefit (re-rank recovering the int8
-    // recall tax at nprobe=4) is pinned by SimilaritySpec + ScaleSmoke
+    // recall tax at nprobe=4) is pinned by SimilaritySpec and measured in
+    // BASELINE.md, "partial-probe recall curves, IVF index family"
     Gate("sim_ann_rerank", ((s, d) => {
       // quantized index store from the per-JVM fixture cache (see
       // sim_ann_ivf_persisted) — the two-stage probe runs fresh, READ-ONLY

@@ -3,7 +3,6 @@ package gates
 
 import graft.Queries._
 import graft.io.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 

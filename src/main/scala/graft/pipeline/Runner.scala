@@ -12,7 +12,7 @@ import graft.ops.Ops
 import graft.proc.SqlStepRegistry
 import graft.store.TableStore
 import graft.time.Windows
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical.CommandResult
 
 /** Outcome of one table's processing (per-table error isolation, O5). */

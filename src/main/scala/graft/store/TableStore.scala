@@ -2037,9 +2037,10 @@ final class TableStore(spark: SparkSession, root: String,
     * pointer-mode append writes its generation dir BEFORE taking the lock,
     * so the writer that breaks a crashed peer's lock has its own fresh
     * uncommitted dir on disk — a grace-0 sweep would reap it and fail the
-    * very append that healed the table (observed in ScaleSmoke's TTL
-    * stress). The crashed peer's leftover is older than the TTL by
-    * definition, so the TTL-sized grace still reclaims it. */
+    * very append that healed the table (observed in the TTL stress of
+    * BASELINE.md, "store concurrency stress"). The crashed peer's leftover
+    * is older than the TTL by definition, so the TTL-sized grace still
+    * reclaims it. */
   private def recoverWith(table: String, orphanGraceMs: Long): Unit = {
     val f = fs
     val live = new Path(tablePath(table))

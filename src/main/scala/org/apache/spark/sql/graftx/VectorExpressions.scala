@@ -268,10 +268,11 @@ object MinHashSignature {
  * has no codegen: its presence makes the WHOLE projection fall back to
  * interpreted evaluation (boxed elements, virtual calls — including every
  * other expression in the projection, such as the array cast). Measured on
- * the ScaleSmoke dim-1024 corpus that fallback was the dominant cost of the
- * IVF path. This expression is one tight primitive loop, folds the
- * float→double cast into the read, and keeps the projection inside
- * whole-stage codegen. Arithmetic is IDENTICAL to the composed route
+ * a 20 k-vector dim-1024 replica corpus that fallback was the dominant cost
+ * of the IVF path (BASELINE.md, "Round-6 similarity-path codegen fix").
+ * This expression is one tight primitive loop, folds the float→double
+ * cast into the read, and keeps the projection inside whole-stage codegen.
+ * Arithmetic is IDENTICAL to the composed route
  * (in-order sum of squares, per-element divide), so gated oracle results are
  * bit-unchanged.
  */

@@ -1,6 +1,6 @@
 package graft.config
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
 import graft.TestSpark
 import org.scalatest.funsuite.AnyFunSuite

@@ -1,7 +1,6 @@
 package graft.ext
 
 import graft.TestSpark
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 class ClassifierSpec extends AnyFunSuite {

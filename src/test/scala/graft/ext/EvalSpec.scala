@@ -152,4 +152,20 @@ class EvalSpec extends AnyFunSuite {
     assert(nk.getAs[Long]("n") == 1)
     assert(nk.isNullAt(nk.fieldIndex("kappa")))
   }
+
+  test("aucBinary is partitioning-invariant under heavy score ties; the planted separation holds") {
+    // 100-way tied scores (the midrank path under tie pressure); positives
+    // concentrate in the upper half of the scores
+    val n = 20000L
+    val s = pmod(col("id") * 2654435761L, lit(100L))
+    def scored(parts: Int) = spark.range(n).repartition(parts).select(col("id"), s.as("s"),
+      (pmod(col("id") * 1099511627L, lit(1000L)) <
+        (lit(150L) + when(s >= 50, 500L).otherwise(0L))).as("y"))
+    def auc(parts: Int) = Eval.aucBinary(scored(parts), col("s"), col("y"), col("id"))
+      .as[(Long, Long, Double)].head()
+    val (a, b) = (auc(8), auc(3))
+    assert(a == b, s"AUC moved with partitioning: $a vs $b")
+    assert(a._1 + a._2 == n, "every row classified")
+    assert(a._3 > 0.6 && a._3 < 0.9, s"planted separation direction lost: ${a._3}")
+  }
 }

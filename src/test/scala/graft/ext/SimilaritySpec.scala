@@ -541,7 +541,8 @@ class SimilaritySpec extends AnyFunSuite with org.scalatest.BeforeAndAfterEach {
     // forced pooled branch: structural sanity only (a partial probe may
     // both lose exact pairs and promote pool-local mutual-NN1s — recall
     // bounds for the pooled composition are pinned by the dedicated
-    // bitextMarginMinePooled spec and ScaleSmoke): sides keep their id
+    // bitextMarginMinePooled spec and BASELINE.md, "pooled bitext mining
+    // at 30×"): sides keep their id
     // parity and each side contributes a given id at most once
     val forcedBitext = Similarity.bitextMarginMineRouted(a, b, "vec_id", "embedding",
       k = 4, exactMaxRows = 0L).select("a_id", "b_id")
@@ -562,5 +563,49 @@ class SimilaritySpec extends AnyFunSuite with org.scalatest.BeforeAndAfterEach {
       30000L -> ((692, 32, 5536)),
       1048576L -> ((4096, 32, 32768)),
       4000000L -> ((4096, 32, 32768))))
+  }
+
+  test("semanticDedup survivors are pairwise below the threshold; identical replicas collapse") {
+    // three identical replicas of every fixture vector, at a threshold the
+    // raw fixtures also cross: any pair >= t lands in one cluster and
+    // keepBest keeps one member, so an exact pair search over the
+    // survivors must come back empty
+    val t = 0.45
+    assert(Similarity.cosinePairs(emb, "vec_id", "embedding", t).count() > 0,
+      "precondition: the fixtures carry pairs above the threshold")
+    val replicas = emb.crossJoin(spark.range(3).toDF("rep"))
+      .select((col("vec_id") * 3 + col("rep")).as("vec_id"), col("embedding"))
+    val kept = Similarity.semanticDedup(replicas, "vec_id", "embedding", t,
+      Seq(col("vec_id").asc)).select("vec_id", "embedding").localCheckpoint()
+    val n = kept.count()
+    assert(n < emb.count(), s"replica groups and above-threshold pairs must collapse: $n survivors")
+    val residual = Similarity.cosinePairs(kept, "vec_id", "embedding", t).count()
+    assert(residual == 0L, s"survivors must be pairwise below $t: $residual pairs")
+  }
+
+  test("grown IVF index: full probe ≡ exact after appends in several generations; compaction keeps results") {
+    val store = new graft.store.TableStore(spark,
+      java.nio.file.Files.createTempDirectory("graft-ivf-grow-spec").toString,
+      graft.store.CommitMode.Pointer)
+    val grown = pmod(col("vec_id"), lit(5L)) === 4L
+    val idx = Similarity.buildIndex(store, "grow_ivf", emb.filter(!grown), "vec_id", "embedding",
+      nlist = 16)
+    // a fifth of the corpus arrives later, in four generations assigned by
+    // the frozen quantizer
+    for (b <- 0 until 4)
+      Similarity.appendToIndex(store, idx,
+        emb.filter(pmod(col("vec_id"), lit(20L)) === 4L + 5L * b), "vec_id", "embedding")
+    // queries drawn from the appended vectors; truth over the whole corpus
+    val q = emb.filter(grown && col("vec_id") < 200)
+    val exact = Similarity.topK(emb, q, "vec_id", "embedding", 10).as[(Long, Long)].collect().toSet
+    def search(nprobe: Int) = Similarity.searchIndex(store, idx, q, "vec_id", "embedding", 10,
+      nprobe = nprobe).as[(Long, Long)].collect().toSet
+    assert(search(16) == exact, "full-probe search over the grown index lost appended vectors")
+    val partial = search(4)
+    val files = store.dataFileCount("grow_ivf")
+    store.compactClustered("grow_ivf", Seq("list"), numFiles = 4)
+    assert(store.dataFileCount("grow_ivf") < files, s"compaction kept $files files")
+    assert(search(4) == partial, "compaction changed partial-probe results")
+    assert(search(16) == exact)
   }
 }

@@ -746,4 +746,23 @@ class TextMultimodalSpec extends AnyFunSuite {
       (1L, 3L, 3L, 0.0), (2L, 2L, 0L, 1.0), (3L, 4L, 1L, 0.75), (4L, 1L, 0L, 1.0)))
     Dedup.unpersistAll()
   }
+
+  test("crossEntropyDiff over the fixture corpus: every score finite; the target slice outscores the rest") {
+    // the target is one source's docs; two added docs use only tokens the
+    // target never saw, which add-one smoothing must keep finite
+    val raw = graft.io.Tables.load(spark, TestSpark.Sf0001, "documents")
+      .filter(col("text").isNotNull).select("doc_id", "text", "source")
+      .unionByName(Seq((-1L, "zzq qqv unseen", "novel"), (-2L, "only novel words", "novel"))
+        .toDF("doc_id", "text", "source"))
+    val inTarget = col("source") === "src0"
+    val (tgt, rest, bad) = TextAnalysis.crossEntropyDiff(raw, raw.filter(inTarget), "doc_id", "text")
+      .join(raw.select("doc_id", "source"), "doc_id")
+      .agg(avg(when(inTarget, col("ce_diff"))), avg(when(!inTarget, col("ce_diff"))),
+        sum(when(col("ce_diff").isNull || isnan(col("ce_diff")) ||
+          abs(col("ce_diff")) === Double.PositiveInfinity, 1L).otherwise(0L)))
+      .as[(Double, Double, Long)].head()
+    Dedup.unpersistAll()
+    assert(bad == 0L, s"$bad non-finite ce_diff scores")
+    assert(tgt > rest, f"target slice must outscore the rest: $tgt%.4f <= $rest%.4f")
+  }
 }

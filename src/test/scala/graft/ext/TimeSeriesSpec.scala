@@ -101,7 +101,6 @@ class TimeSeriesSpec extends AnyFunSuite {
       // set-compare alone would hide duplicate grid rows
       assert(gotRows.length == got.size, "grid emitted duplicate rows")
       val want = rows.groupBy(_._1).flatMap { case (k, obs) =>
-        val byDay = obs.map(t => t._2 -> t._3).toMap
         val (d0, d1) = (obs.map(_._2).min, obs.map(_._2).max)
         Iterator.iterate(d0)(_.plusDays(1)).takeWhile(!_.isAfter(d1)).map { d =>
           // last non-null value among observed days <= d

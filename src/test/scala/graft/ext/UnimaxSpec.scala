@@ -33,7 +33,7 @@ class UnimaxSpec extends AnyFunSuite {
 
   test("budget above total capacity caps every language at maxEpochs") {
     val m = alloc(40.0)
-    assert(m.values.forall { case (n, cap, a, e) => a == cap && e == 2.0 })
+    assert(m.values.forall { case (_, cap, a, e) => a == cap && e == 2.0 })
     assert(m.values.map(_._3).sum == 30.0)
   }
 

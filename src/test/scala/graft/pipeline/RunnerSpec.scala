@@ -6,7 +6,6 @@ import java.time.LocalDateTime
 import graft.TestSpark
 import graft.config.{EngineConfig, TableSpec}
 import graft.ledger.Ledger
-import graft.ops.Ops
 import graft.proc.SqlStepRegistry
 import graft.store.TableStore
 import org.apache.spark.sql.functions._

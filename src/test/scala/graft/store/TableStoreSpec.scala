@@ -898,7 +898,8 @@ class TableStoreSpec extends AnyFunSuite {
   test("breaking a stale lock heals the table AND commits the breaking append in one call") {
     // pointer-mode append writes its gen dir BEFORE taking the lock; the
     // stale-break recovery must not sweep that in-flight dir (grace = TTL,
-    // not 0) — regression pin for the ScaleSmoke-found defect
+    // not 0) — regression pin for the defect the TTL stress found
+    // (BASELINE.md, "store concurrency stress")
     val root = Files.createTempDirectory("graft-ttl").toString
     val store = new TableStore(spark, root, CommitMode.Pointer,
       lockTtlMs = 60000L, appendLockWaitMs = 0L)
@@ -1543,6 +1544,52 @@ class TableStoreSpec extends AnyFunSuite {
     write(s"$t/_idem.hk", "graft-idem v1\nkey\thk")
     assert(store.idempotentKeyCommitted("t", "hk"))
     assert(!store.idempotentKeyCommitted("t", "none"))
+  }
+
+  test("concurrent append × read × vacuum: no torn read, no lost commit") {
+    // one appender commits generations while a reader reads every listed
+    // generation and a vacuum loop reclaims beyond `keep`: each read is a
+    // whole number of commits, or the friendly no-marker refusal of a
+    // generation retired after it was listed — never a partial result
+    import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
+    val store = new TableStore(spark, Files.createTempDirectory("graft-stress").toString,
+      CommitMode.Pointer, keepGenerations = 3)
+    val (base, batch, appends) = (100L, 10L, 8)
+    store.atomicOverwrite("t", spark.range(base).toDF("id"))
+    val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val done = new AtomicBoolean(false)
+    val (reads, vacuums) = (new AtomicInteger(0), new AtomicInteger(0))
+    def untilDone(name: String)(body: => Unit) = new Thread(() =>
+      try while (!done.get) body catch { case t: Throwable => errs.add(t) }, name)
+    val appender = new Thread(() =>
+      try for (i <- 0 until appends)
+        store.append("t", spark.range(1000L + i * batch, 1000L + (i + 1) * batch).toDF("id"))
+      catch { case t: Throwable => errs.add(t) } finally done.set(true), "stress-appender")
+    val reader = untilDone("stress-reader") {
+      store.generations("t").foreach { g =>
+        try {
+          val n = store.readGeneration("t", g).count()
+          assert(n >= base && (n - base) % batch == 0, s"torn read of generation $g: $n rows")
+          reads.incrementAndGet()
+        } catch {
+          case e: IllegalArgumentException if e.getMessage.contains("no committed marker") => ()
+        }
+      }
+    }
+    val vacuumer = untilDone("stress-vacuum") {
+      // contention with a commit is the designed fail-fast refusal: retry
+      try { store.vacuum("t", keep = 3); vacuums.incrementAndGet() }
+      catch { case _: ConcurrentWriteException => () }
+      Thread.sleep(20)
+    }
+    val threads = Seq(appender, reader, vacuumer)
+    threads.foreach(_.start())
+    threads.foreach(_.join(120000L))
+    done.set(true)
+    assert(errs.isEmpty, s"raced into errors: ${errs.toArray.take(3).mkString(" | ")}")
+    assert(reads.get > 0 && vacuums.get > 0,
+      s"the race never overlapped: ${reads.get} reads, ${vacuums.get} vacuums")
+    assert(store.read("t").count() == base + appends * batch, "lost commit")
   }
 }
 
