@@ -729,33 +729,43 @@ object Dedup {
    * index segments would silently break probe/verify comparability, so
    * they travel in the meta table and are never re-specified here).
    *
-   * Scale shape: cost per call tracks the batch (shingle + minhash + two
-   * appends); the existing index is never read or rewritten — in pointer
-   * mode each append publishes as its own O(1)-committed generation, and
-   * [[graft.store.TableStore.compact]] folds the segment chain when it
-   * grows long. Appending leaves new bucket rows outside the original
-   * range-clustered file layout; probes shuffle on (band, bucket) either
-   * way, so correctness is unaffected and only footer-skipping tightness
-   * decays until the next compact. Unique ids across segments are the
-   * caller's contract (same as [[buildLshIndex]]): append the SURVIVORS of
-   * [[dedupeAgainstLshIndex]], which are id-disjoint from the archive by
-   * construction.
+   * Scale shape: the batch's shingle sets are materialized ONCE (a
+   * tracked `localCheckpoint`, released by [[unpersistAll]]) and both
+   * appends read that checkpoint. A cached frame would not do: a plain
+   * rename-mode append into the index refreshes every cached plan that
+   * reads it — [[dedupeAgainstLshIndex]]'s survivors read both segment
+   * tables — so the second append would re-run the whole dedup probe. A
+   * keyed replay whose two appends both committed returns before anything
+   * is materialized.
+   *
+   * Index rows are never rewritten, but each append's drift check merges
+   * every footer of its segment table
+   * ([[graft.store.TableStore.readEvolved]]), a cost that grows with the
+   * segment's file count. In pointer mode each append publishes as its
+   * own O(1)-committed generation, and [[graft.store.TableStore.compact]]
+   * folds the segment chain when it grows long. Appending leaves new
+   * bucket rows outside the original range-clustered file layout; probes
+   * shuffle on (band, bucket) either way, so correctness is unaffected and
+   * only footer-skipping tightness decays until the next compact. Unique
+   * ids across segments are the caller's contract (same as
+   * [[buildLshIndex]]): append the SURVIVORS of [[dedupeAgainstLshIndex]],
+   * which are id-disjoint from the archive by construction.
    */
   def appendToLshIndex(store: graft.store.TableStore, index: LshIndex, batch: DataFrame,
       idCol: String, textCol: String, idempotencyKey: Option[String] = None): Unit = {
-    val sets = persistTracked(hashedShingleSets(
-      batch.filter(col(textCol).isNotNull), idCol, textCol, index.n))
-    val buckets = lshBuckets(sets, idCol, index.numHashes, index.bands)
-      .withColumnRenamed(idCol, "id")
-    idempotencyKey match {
-      case None =>
-        store.append(index.table, sets.withColumnRenamed(idCol, "id"))
-        store.append(s"${index.table}_buckets", buckets)
-      case Some(k) =>
-        // each segment table keys independently, so a replay that crashed
-        // between the two appends resumes by skipping the committed one
-        store.appendIdempotent(index.table, sets.withColumnRenamed(idCol, "id"), k)
-        store.appendIdempotent(s"${index.table}_buckets", buckets, k)
+    val segments = Seq(index.table, s"${index.table}_buckets")
+    if (!idempotencyKey.exists(k => segments.forall(store.idempotentKeyCommitted(_, k)))) {
+      val sets = Caches.trackCheckpoint(hashedShingleSets(
+        batch.filter(col(textCol).isNotNull), idCol, textCol, index.n))
+        .withColumnRenamed(idCol, "id")
+      segments.zip(Seq(sets, lshBuckets(sets, "id", index.numHashes, index.bands))).foreach {
+        case (table, rows) => idempotencyKey match {
+          case None => store.append(table, rows)
+          // each segment table keys independently, so a replay that crashed
+          // between the two appends resumes by skipping the committed one
+          case Some(k) => store.appendIdempotent(table, rows, k)
+        }
+      }
     }
     // opt-in growth bound (store.autoCompactFiles): hundreds of ingest
     // batches otherwise degrade probe-time file skipping silently; the

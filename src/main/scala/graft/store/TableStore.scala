@@ -1147,8 +1147,9 @@ final class TableStore(spark: SparkSession, root: String,
     * (kind: marker|generation, name, action: deleted|would_delete). The
     * publish path already enforces `keepGenerations` automatically; this
     * is the operator-invoked form for reclaiming a time-travel window
-    * early. Deletion runs under the writer lock, so a vacuum never reaps a
-    * concurrent rewrite's in-flight generation dir; dry-run is lock-free.
+    * early. Deletion runs under the writer lock, which serializes it with
+    * rewrites and commits; dry-run is lock-free. An in-flight generation
+    * dir is kept safe by [[vacuumPlan]]'s orphan grace, not by the lock.
     * `keep >= 2` keeps the current + previous reader-isolation minimum. */
   def vacuum(table: String, keep: Int, dryRun: Boolean = false): DataFrame = {
     require(keep >= 2,
@@ -1163,9 +1164,10 @@ final class TableStore(spark: SparkSession, root: String,
       val (dropMarkers, dropDirs) = vacuumPlan(table, keep)
       rows(dropMarkers, dropDirs, "would_delete")
     } else {
-      // deletion takes the writer lock: an unlocked vacuum racing a rewrite
-      // would reap the in-flight writer's not-yet-referenced gen dir as an
-      // "orphan" and force it into the loud retry path for no reason
+      // the orphan grace (`lockTtlMs` in vacuumPlan) is what protects every
+      // in-flight gen dir, including a pointer append's, whose data is
+      // written outside the lock; the lock serializes this vacuum with
+      // rewrites and commits, so its plan and deletes see one table state
       val lock = acquireWriteLock(table, "vacuum")
       try {
         val (dropMarkers, dropDirs) = vacuumPlan(table, keep)
@@ -1212,7 +1214,14 @@ final class TableStore(spark: SparkSession, root: String,
     * directory and be silently lost, and two concurrent append jobs race on
     * the shared `_temporary` staging dir. In pointer mode each append is its
     * own atomically-published generation (the manifest accumulates dirs;
-    * [[compact]] folds them). */
+    * [[compact]] folds them).
+    *
+    * Cache hazard: a rename-mode append writes into the live table dir, so
+    * Spark refreshes every cached frame whose plan reads that table, and
+    * the next use recomputes it from scratch. A caller that reuses a frame
+    * derived from the table across appends must `localCheckpoint` it
+    * instead (see [[graft.ext.Dedup.appendToLshIndex]]). A pointer-mode
+    * append writes a fresh `_gen-*` dir and refreshes nothing. */
   def append(table: String, df: DataFrame): Unit = {
     refuseIfCatalogBucketed(table, "append")
     if (!pointerMode) {

@@ -34,7 +34,7 @@ class ConfigSpec extends AnyFunSuite {
         |    { "table_name": "t2", "table_type": "dim" },
         |    { "table_name": "t3", "table_type": "fact", "date_column": "d",
         |      "update_date_column": "u", "primary_key": "pk" } ] }""".stripMargin
-    val f = Files.createTempFile("graft-cfg", ".json")
+    val f = TestSpark.tempDir("graft-cfg").resolve("cfg.json")
     Files.writeString(f, json)
     val cfg = EngineConfig.load(TestSpark.spark, f.toString)
     assert(cfg.sourceSchema == "stage" && cfg.targetSchema == "bronze")
@@ -49,7 +49,7 @@ class ConfigSpec extends AnyFunSuite {
     val json =
       """{ "SourceSchema": "stage", "TargetSchema": "bronze",
         |  "ScheduleMode": "daily", "DateFrom": "2024-01-01", "DateTo": "2024-01-05" }""".stripMargin
-    val f = Files.createTempFile("graft-cfg-env", ".json")
+    val f = TestSpark.tempDir("graft-cfg-env").resolve("cfg.json")
     Files.writeString(f, json)
     val env = Map(
       "GRAFT_SOURCESCHEMA" -> "prod_stage", // all-caps form
@@ -65,7 +65,7 @@ class ConfigSpec extends AnyFunSuite {
   }
 
   test("env overlay supplies a value the file omits entirely") {
-    val f = Files.createTempFile("graft-cfg-env2", ".json")
+    val f = TestSpark.tempDir("graft-cfg-env2").resolve("cfg.json")
     Files.writeString(f, """{ "TargetSchema": "bronze" }""")
     val cfg = EngineConfig.load(TestSpark.spark, f.toString,
       Map("GRAFT_DATEFROM" -> "2024-02-01", "GRAFT_SOURCESCHEMA" -> "s2"))

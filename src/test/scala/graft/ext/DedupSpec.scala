@@ -178,7 +178,7 @@ class DedupSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterEach {
 
   test("persisted LSH index: incremental fuzzy dedup ≡ boundary-crossing LSH pairs") {
     val store = new graft.store.TableStore(spark,
-      java.nio.file.Files.createTempDirectory("graft-lsh-spec").toString)
+      TestSpark.tempDir("graft-lsh-spec").toString)
     val corpus = docs.filter(col("doc_id") < 250)
     val batch = docs.filter(col("doc_id") >= 250)
     val built = Dedup.buildLshIndex(store, "c_lsh", corpus, "doc_id", "text")
@@ -201,9 +201,97 @@ class DedupSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterEach {
     assert(kept.nonEmpty)
   }
 
+  /** Runs `body` and returns (jobs run, jobs in which some task read files
+    * under `path`). A job reads `path` when one of its tasks reports a
+    * metric of a file scan located there: the scan nodes come from the
+    * SQL execution events, a cached plan's scan included, so a job served
+    * from a cache or a checkpoint does not count, while one that
+    * recomputes a refreshed cache does. Needs static plans (adaptive
+    * execution off): an adaptive cached plan re-plans its scans into
+    * nodes no execution event names. */
+  private def jobsScanning(path: String)(body: => Unit): (Int, Int) = {
+    import org.apache.spark.scheduler._
+    import org.apache.spark.sql.execution.SparkPlanInfo
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val scanMetrics = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
+    val jobOfStage = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val scanning = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    def note(p: SparkPlanInfo): Unit = {
+      if (p.metadata.get("Location").exists(_.contains(path)))
+        p.metrics.foreach(m => scanMetrics.add(m.accumulatorId))
+      p.children.foreach(note)
+    }
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet()
+        e.stageIds.foreach(jobOfStage.put(_, e.jobId))
+      }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskInfo.accumulables.exists(a => scanMetrics.contains(a.id)))
+          scanning.add(jobOfStage.get(e.stageId))
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => note(s.sparkPlanInfo)
+        case _ =>
+      }
+    }
+    TestSpark.drainListenerBus()
+    spark.sparkContext.addSparkListener(listener)
+    try { body; TestSpark.drainListenerBus() } finally spark.sparkContext.removeSparkListener(listener)
+    (jobs.get(), scanning.size)
+  }
+
+  test("appendToLshIndex runs the dedup probe at most once") {
+    // a plain rename-mode append writes into the live index dir, so Spark
+    // refreshes every cached plan reading it: a cached input would make the
+    // second append re-run the whole probe that produced it
+    val ns = spark.newSession() // the shared cache manager, static plans (see jobsScanning)
+    ns.conf.set("spark.sql.adaptive.enabled", "false")
+    val store = new graft.store.TableStore(ns, TestSpark.tempDir("graft-lsh-once").toString,
+      graft.store.CommitMode.Rename)
+    val nsDocs = graft.io.Tables.load(ns, TestSpark.Sf0001, "documents")
+    val corpus = nsDocs.filter(col("doc_id") < 250)
+    val batch = nsDocs.filter(col("doc_id") >= 250 && col("doc_id") < 400)
+    val idx = Dedup.buildLshIndex(store, "once_lsh", corpus, "doc_id", "text")
+    Dedup.unpersistAll()
+    val survivorIds = Dedup.dedupeAgainstLshIndex(store, idx, batch, "doc_id", "text", 0.8)
+      .select("doc_id").as[Long].collect().toSet
+    Dedup.unpersistAll()
+    assert(survivorIds.nonEmpty && survivorIds.size < batch.count())
+    val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    // the survivors stay lazy and uncached: the append's one materialization
+    // is what runs the probe
+    val survivors = Dedup.dedupeAgainstLshIndex(store, idx, batch, "doc_id", "text", 0.8)
+    val buckets = store.tablePath("once_lsh_buckets")
+    val (_, probes) = jobsScanning(buckets)(
+      Dedup.appendToLshIndex(store, idx, survivors, "doc_id", "text"))
+    assert(probes <= 1, s"the append scanned $buckets in $probes jobs")
+    // a keyed replay whose two appends both committed materializes nothing
+    val keyed = nsDocs.filter(col("doc_id") >= 400)
+    Dedup.appendToLshIndex(store, idx, keyed, "doc_id", "text", Some("b2"))
+    val (replayJobs, _) = jobsScanning(buckets)(
+      Dedup.appendToLshIndex(store, idx, keyed, "doc_id", "text", Some("b2")))
+    assert(replayJobs == 0, s"a committed replay ran $replayJobs jobs")
+    Dedup.unpersistAll()
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- persistedBefore).isEmpty,
+      "the append's checkpoint outlived unpersistAll")
+    // the grown index holds exactly what a fresh build over its inputs does
+    val fresh = new graft.store.TableStore(ns, TestSpark.tempDir("graft-lsh-once-ref").toString)
+    Dedup.buildLshIndex(fresh, "ref_lsh", corpus
+      .unionByName(batch.filter(col("doc_id").isin(survivorIds.toSeq: _*)))
+      .unionByName(keyed), "doc_id", "text")
+    Dedup.unpersistAll()
+    def sets(s: graft.store.TableStore, t: String) =
+      s.read(t).select("id", "hs", "sz").as[(Long, Seq[Long], Int)].collect().sortBy(_._1).toSeq
+    def bucketRows(s: graft.store.TableStore, t: String) =
+      s.read(t).select("band", "bucket", "id").as[(Int, Int, Long)].collect().sorted.toSeq
+    assert(sets(store, "once_lsh") == sets(fresh, "ref_lsh"))
+    assert(bucketRows(store, "once_lsh_buckets") == bucketRows(fresh, "ref_lsh_buckets"))
+  }
+
   test("auto-compaction bounds a growing LSH index; results and keys survive") {
     val store = new graft.store.TableStore(spark,
-      java.nio.file.Files.createTempDirectory("graft-lsh-ac").toString,
+      TestSpark.tempDir("graft-lsh-ac").toString,
       autoCompactFiles = 20)
     val corpus = docs.filter(col("doc_id") < 200)
     val idx = Dedup.buildLshIndex(store, "ac_lsh", corpus, "doc_id", "text")
@@ -241,7 +329,7 @@ class DedupSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterEach {
       .select("doc_id").as[Long].collect().toSet
     Dedup.unpersistAll()
     val store2 = new graft.store.TableStore(spark,
-      java.nio.file.Files.createTempDirectory("graft-lsh-ac2").toString)
+      TestSpark.tempDir("graft-lsh-ac2").toString)
     val idx2 = Dedup.buildLshIndex(store2, "ref_lsh",
       docs.filter(col("doc_id") < 400), "doc_id", "text")
     val gotFresh = Dedup.dedupeAgainstLshIndex(store2, idx2, probe, "doc_id", "text", 0.8)
@@ -351,7 +439,7 @@ class DedupSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterEach {
     // job); without one, localCheckpoint keeps the single-box fast path
     val sc = spark.sparkContext
     assert(sc.getCheckpointDir.isEmpty, "fixture assumes no ambient checkpoint dir")
-    val dir = java.nio.file.Files.createTempDirectory("graft-ccdur").toString
+    val dir = TestSpark.tempDir("graft-ccdur").toString
     val n = 128L
     val chain = (0L until n).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
     val expect = (0L to n).map(_ -> 0L).toMap

@@ -205,7 +205,7 @@ class SimilaritySpec extends AnyFunSuite with org.scalatest.BeforeAndAfterEach {
     }
     assert(top(Similarity.topK(df, q, "vec_id", "embedding", 3)) == want)
     val store = new graft.store.TableStore(spark,
-      java.nio.file.Files.createTempDirectory("graft-tie-spec").toString)
+      TestSpark.tempDir("graft-tie-spec").toString)
     val plain = Similarity.buildIndex(store, "tie_f", df, "vec_id", "embedding", nlist = 2)
     assert(top(Similarity.searchIndex(store, plain, q, "vec_id", "embedding", 3,
       nprobe = 2)) == want)
@@ -260,7 +260,7 @@ class SimilaritySpec extends AnyFunSuite with org.scalatest.BeforeAndAfterEach {
 
   test("persisted IVF index: build once, reload, search ≡ exact at full probe") {
     val store = new graft.store.TableStore(spark,
-      java.nio.file.Files.createTempDirectory("graft-ivf-spec").toString)
+      TestSpark.tempDir("graft-ivf-spec").toString)
     val built = Similarity.buildIndex(store, "ivf_t", emb, "vec_id", "embedding", nlist = 16)
     // the reloaded quantizer is bit-identical to the built one
     val loaded = Similarity.loadIndex(store, "ivf_t")
@@ -287,7 +287,7 @@ class SimilaritySpec extends AnyFunSuite with org.scalatest.BeforeAndAfterEach {
 
   test("two-stage rerank: exact at full probe; recovers the int8 tax at partial probe") {
     val store = new graft.store.TableStore(spark,
-      java.nio.file.Files.createTempDirectory("graft-rr-spec").toString)
+      TestSpark.tempDir("graft-rr-spec").toString)
     Similarity.buildIndexQuantized(store, "rr", emb, "vec_id", "embedding", nlist = 16)
     val idx = Similarity.loadIndex(store, "rr")
     val q = emb.filter(col("vec_id") < 20)
@@ -585,7 +585,7 @@ class SimilaritySpec extends AnyFunSuite with org.scalatest.BeforeAndAfterEach {
 
   test("grown IVF index: full probe ≡ exact after appends in several generations; compaction keeps results") {
     val store = new graft.store.TableStore(spark,
-      java.nio.file.Files.createTempDirectory("graft-ivf-grow-spec").toString,
+      TestSpark.tempDir("graft-ivf-grow-spec").toString,
       graft.store.CommitMode.Pointer)
     val grown = pmod(col("vec_id"), lit(5L)) === 4L
     val idx = Similarity.buildIndex(store, "grow_ivf", emb.filter(!grown), "vec_id", "embedding",

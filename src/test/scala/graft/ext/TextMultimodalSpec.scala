@@ -514,7 +514,7 @@ class TextMultimodalSpec extends AnyFunSuite {
     val corpus = Seq((1L, "x x y"), (2L, "x z"),
       (3L, null.asInstanceOf[String])).toDF("doc_id", "text")
     val store = new graft.store.TableStore(spark,
-      java.nio.file.Files.createTempDirectory("graft-fts-spec").toString)
+      TestSpark.tempDir("graft-fts-spec").toString)
     val built = TextAnalysis.buildTextIndex(store, "fts", corpus)
     graft.ext.Dedup.unpersistAll()
     assert(built.nDocs == 3L && built.avgdl == 2.5)

@@ -17,7 +17,7 @@ class ExportSpec extends AnyFunSuite {
       (4L, null.asInstanceOf[String]),
       (5L, "")) ++ (6L to 25L).map(i => (i, s"filler $i"))
     val df = rows.toDF("id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("export-spec").toString + "/out"
+    val dir = TestSpark.tempDir("export-spec").toString + "/out"
     Export.jsonlShards(df.repartition(1), dir, maxRecordsPerShard = 10)
     val files = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".json"))
     assert(files.length >= 3, s"25 rows at cap 10 must roll >= 3 shards: ${files.length}")
@@ -25,7 +25,7 @@ class ExportSpec extends AnyFunSuite {
       .as[(Long, Option[String])].collect().toSet
     assert(back == rows.map { case (i, t) => (i, Option(t)) }.toSet)
     // gzip variant round-trips identically
-    val gzDir = java.nio.file.Files.createTempDirectory("export-spec-gz").toString + "/out"
+    val gzDir = TestSpark.tempDir("export-spec-gz").toString + "/out"
     Export.jsonlShards(df, gzDir, 10, compression = Some("gzip"))
     assert(new java.io.File(gzDir).listFiles().exists(_.getName.endsWith(".json.gz")))
     val backGz = Export.readJsonl(spark, gzDir, df.schema)
@@ -46,7 +46,7 @@ class ExportSpec extends AnyFunSuite {
       (6L, "\"leading quote"),
       (7L, "trailing backslash \\")) ++ (8L to 25L).map(i => (i, s"filler $i"))
     val df = rows.toDF("id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("export-csv").toString + "/out"
+    val dir = TestSpark.tempDir("export-csv").toString + "/out"
     Export.csvShards(df.repartition(1), dir, maxRecordsPerShard = 10)
     val files = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".csv"))
     assert(files.length >= 3, s"25 rows at cap 10 must roll >= 3 shards: ${files.length}")
@@ -59,7 +59,7 @@ class ExportSpec extends AnyFunSuite {
       scala.io.Source.fromFile(f, "UTF-8").getLines().toList)
     assert(raw.exists(_.contains("\"\"hi\"\"")), "embedded quotes must be doubled on the wire")
     // gzip + tab-delimited variant round-trips identically
-    val tsvDir = java.nio.file.Files.createTempDirectory("export-tsv").toString + "/out"
+    val tsvDir = TestSpark.tempDir("export-tsv").toString + "/out"
     Export.csvShards(df, tsvDir, 10, compression = Some("gzip"), delimiter = "\t")
     assert(new java.io.File(tsvDir).listFiles().exists(_.getName.endsWith(".csv.gz")))
     val backTsv = Export.readCsv(spark, tsvDir, df.schema, delimiter = "\t")
@@ -79,7 +79,7 @@ class ExportSpec extends AnyFunSuite {
         when(col("id") === 5, lit(Double.NaN))
           .when(col("id") === 6, lit(null).cast("double"))
           .otherwise(col("id") * -1.5e-7).as("v"))
-    val dir = java.nio.file.Files.createTempDirectory("export-orc").toString + "/out"
+    val dir = TestSpark.tempDir("export-orc").toString + "/out"
     Export.orcShards(df.repartition(1), dir, maxRecordsPerShard = 10,
       compression = Some("zstd"))
     val files = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".orc"))
@@ -106,7 +106,7 @@ class ExportSpec extends AnyFunSuite {
         "para one\n\npara two after a blank line"),
       ("u:4", "2024-01-01T00:00:00Z", "de", ""))
     val df = rows.toDF("uri", "wdate", "lang", "text")
-    val dir = java.nio.file.Files.createTempDirectory("export-wet").toString + "/out"
+    val dir = TestSpark.tempDir("export-wet").toString + "/out"
     Warc.writeWet(df, dir, "uri", "wdate", "lang", "text", maxRecordsPerShard = 2)
     assert(new java.io.File(dir).listFiles().exists(_.getName.endsWith(".txt.gz")))
     val back = Warc.readWet(spark, dir)

@@ -18,7 +18,7 @@ class TablesSpec extends AnyFunSuite {
       org.apache.spark.sql.types.TimestampNTZType)
     def staged(write: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
         : Set[(Long, java.time.LocalDateTime)] = {
-      val d = java.nio.file.Files.createTempDirectory("graft-tables-rep")
+      val d = TestSpark.tempDir("graft-tables-rep")
       write(canonical.select(col("event_id"), col("ts")))
         .write.parquet(s"$d/events.parquet")
       Tables.load(spark, d.toString, "events")
@@ -35,7 +35,7 @@ class TablesSpec extends AnyFunSuite {
     assert(fromLtz == expect, "LTZ-micros staging diverged")
     assert(fromNtz == expect, "NTZ staging diverged")
     // an unreadable representation refuses loudly, naming the type
-    val d = java.nio.file.Files.createTempDirectory("graft-tables-bad")
+    val d = TestSpark.tempDir("graft-tables-bad")
     canonical.withColumn("ts", col("ts").cast("string"))
       .write.parquet(s"$d/events.parquet")
     val e = intercept[IllegalArgumentException](Tables.load(spark, d.toString, "events"))

@@ -26,7 +26,7 @@ class LedgerSpec extends AnyFunSuite {
   // nanosecond clock: the stored value keeps microseconds
   private val clock = () => LocalDateTime.of(2024, 6, 1, 12, 0, 0, 123456789)
 
-  private def pointerStore(root: String = Files.createTempDirectory("graft-ledger").toString) =
+  private def pointerStore(root: String = TestSpark.tempDir("graft-ledger").toString) =
     new TableStore(spark, root, CommitMode.Pointer)
 
   /** `n` records as start+finish pairs (a trailing odd record is a start). */
@@ -53,8 +53,7 @@ class LedgerSpec extends AnyFunSuite {
     spark.sparkContext.addSparkListener(listener)
     try {
       write(led, 20)
-      val bus = classOf[org.apache.spark.SparkContext].getMethod("listenerBus").invoke(spark.sparkContext)
-      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+      TestSpark.drainListenerBus()
     } finally spark.sparkContext.removeSparkListener(listener)
     assert(jobs.get() == 0, s"20 ledger records ran ${jobs.get()} Spark jobs")
     assert(led.history.count() == 20)
@@ -75,7 +74,7 @@ class LedgerSpec extends AnyFunSuite {
   }
 
   test("two ledgers x 4 threads past two folds: each (runId, seq) once, latest one per runId") {
-    val root = Files.createTempDirectory("graft-ledger-mt").toString
+    val root = TestSpark.tempDir("graft-ledger-mt").toString
     val ledgers = Seq(pointerStore(root), pointerStore(root)).map(new Ledger(spark, _, Table, clock))
     val pairsPerThread = 12
     val threads = for (led <- ledgers; t <- 0 until 4) yield new Thread(() =>
@@ -179,7 +178,7 @@ class LedgerSpec extends AnyFunSuite {
   }
 
   test("the log sits beside the table: recover, snapshots and a rename-mode fold keep it") {
-    val root = Files.createTempDirectory("graft-ledger-rn").toString
+    val root = TestSpark.tempDir("graft-ledger-rn").toString
     val store = new TableStore(spark, root, CommitMode.Rename)
     val led = new Ledger(spark, store, Table, clock)
     write(led, 2)
@@ -189,7 +188,7 @@ class LedgerSpec extends AnyFunSuite {
     assert(led.history.count() == 4 && logFiles(led).size == 2 && store.read(Table).count() == 2)
     store.compact(Table, 1) // a rename-mode rewrite replaces the table dir
     assert(led.history.count() == 4)
-    val ptr = pointerStore(root + "-ptr")
+    val ptr = pointerStore()
     ptr.atomicOverwrite("x", Seq(1).toDF("k"))
     new Ledger(spark, ptr, Table, clock).start("x", "Dim Copy", None)
     assert(ptr.snapshots().isEmpty && ptr.dataFileCount(Table) == 0 && !ptr.exists(Table))

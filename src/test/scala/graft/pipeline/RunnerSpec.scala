@@ -18,8 +18,8 @@ class RunnerSpec extends AnyFunSuite {
   private val clock = () => LocalDateTime.of(2024, 6, 1, 12, 0)
 
   private def setup() = {
-    val src = new TableStore(spark, Files.createTempDirectory("graft-src").toString)
-    val tgt = new TableStore(spark, Files.createTempDirectory("graft-tgt").toString)
+    val src = new TableStore(spark, TestSpark.tempDir("graft-src").toString)
+    val tgt = new TableStore(spark, TestSpark.tempDir("graft-tgt").toString)
     val led = new Ledger(spark, tgt, clock = clock)
     // fact table with a date column + audit columns the copy must drop
     src.atomicOverwrite("fact_sales", Seq(
@@ -128,7 +128,7 @@ class RunnerSpec extends AnyFunSuite {
 
   test("per-table log files written under logs/yyyy-MM/<table>/ (S10)") {
     val (src, tgt, led) = setup()
-    val logRoot = Files.createTempDirectory("graft-logs").toString
+    val logRoot = TestSpark.tempDir("graft-logs").toString
     val runner = new Runner(spark, src, tgt, led, clock = clock,
       runLogs = Some(new graft.ledger.RunLogs(logRoot, clock)))
     val results = runner.run(cfg(
@@ -156,7 +156,7 @@ class RunnerSpec extends AnyFunSuite {
         |              { "table_name": "dim_color", "table_type": "dim" } ],
         |  "SqlSteps": [ { "name": "window_echo",
         |    "sql": "SELECT TIMESTAMP '{start_ts}' AS s, TIMESTAMP '{end_ts}' AS e" } ] }""".stripMargin
-    val path = Files.createTempFile("graft-cfg", ".json")
+    val path = TestSpark.tempDir("graft-cfg").resolve("cfg.json")
     Files.writeString(path, cfgJson)
     val loaded = graft.config.EngineConfig.load(spark, path.toString)
     assert(loaded.sqlSteps.keySet == Set("window_echo"))
@@ -224,8 +224,8 @@ class RunnerSpec extends AnyFunSuite {
       override def onFailure(funcName: String,
           qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = ()
     })
-    val src = new TableStore(ns, Files.createTempDirectory("graft-src").toString)
-    val tgt = new TableStore(ns, Files.createTempDirectory("graft-tgt").toString)
+    val src = new TableStore(ns, TestSpark.tempDir("graft-src").toString)
+    val tgt = new TableStore(ns, TestSpark.tempDir("graft-tgt").toString)
     val led = new Ledger(ns, tgt, clock = clock)
     src.atomicOverwrite("fact_pupd", Seq(
       (1L, "2024-01-02 08:00:00", "2024-01-06 08:00:00", "v2"),
@@ -243,9 +243,7 @@ class RunnerSpec extends AnyFunSuite {
     assert(r2.forall(_.ok), r2.mkString("; "))
     assert(tgt.read("fact_pupd").select("pk", "payload").as[(Long, String)].collect().toMap ==
       Map(1L -> "v2", 2L -> "new", 3L -> "old"))
-    val bus = classOf[org.apache.spark.SparkContext].getMethod("listenerBus")
-      .invoke(spark.sparkContext)
-    bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+    TestSpark.drainListenerBus()
     import scala.jdk.CollectionConverters._
     val seen = plans.asScala.toSeq
     assert(seen.exists(_.contains("LeftAnti")), "the update's slice anti-join was not captured")
@@ -285,7 +283,7 @@ class RunnerSpec extends AnyFunSuite {
   test("snapshotRun pins every dispatched table's run-end state in one marker") {
     import graft.store.CommitMode
     val (src, _, _) = setup()
-    val tgt = new TableStore(spark, Files.createTempDirectory("graft-tgt-ptr").toString,
+    val tgt = new TableStore(spark, TestSpark.tempDir("graft-tgt-ptr").toString,
       CommitMode.Pointer, keepGenerations = 3)
     val led = new Ledger(spark, tgt, clock = clock)
     val runner = new Runner(spark, src, tgt, led, clock = clock)
@@ -316,7 +314,7 @@ class RunnerSpec extends AnyFunSuite {
   test("pointer-mode runs write no ledger generation; one run's records share one run id") {
     import graft.store.CommitMode
     val (src, _, _) = setup()
-    val tgt = new TableStore(spark, Files.createTempDirectory("graft-tgt-ledger").toString,
+    val tgt = new TableStore(spark, TestSpark.tempDir("graft-tgt-ledger").toString,
       CommitMode.Pointer)
     val led = new Ledger(spark, tgt, clock = clock)
     val runner = new Runner(spark, src, tgt, led, clock = clock)

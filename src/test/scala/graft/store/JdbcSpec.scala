@@ -16,7 +16,7 @@ class JdbcSpec extends AnyFunSuite {
   import spark.implicits._
 
   private lazy val cfg = {
-    val home = java.nio.file.Files.createTempDirectory("graft-derby")
+    val home = TestSpark.tempDir("graft-derby")
     System.setProperty("derby.system.home", home.toString) // keep derby.log out of the repo
     Jdbc.JdbcConfig(
       url = s"jdbc:derby:$home/db;create=true",

@@ -10,7 +10,7 @@ class TableStoreSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def freshStore() =
-    new TableStore(spark, Files.createTempDirectory("graft-store").toString)
+    new TableStore(spark, TestSpark.tempDir("graft-store").toString)
 
   test("atomicOverwrite round-trips and replaces state") {
     val store = freshStore()
@@ -308,7 +308,7 @@ class TableStoreSpec extends AnyFunSuite {
   }
 
   private def pointerStore() =
-    new TableStore(spark, Files.createTempDirectory("graft-ptr").toString, CommitMode.Pointer)
+    new TableStore(spark, TestSpark.tempDir("graft-ptr").toString, CommitMode.Pointer)
 
   private def hadoopFs(store: TableStore, table: String) =
     new org.apache.hadoop.fs.Path(store.tablePath(table))
@@ -434,7 +434,7 @@ class TableStoreSpec extends AnyFunSuite {
   }
 
   test("time travel: retained generations read bit-identically; vacuumed ones raise") {
-    val store = new TableStore(spark, Files.createTempDirectory("graft-tt").toString,
+    val store = new TableStore(spark, TestSpark.tempDir("graft-tt").toString,
       CommitMode.Pointer, keepGenerations = 3)
     store.atomicOverwrite("t", Seq((1, "v1")).toDF("k", "tag"))
     store.atomicOverwrite("t", Seq((2, "v2"), (3, "v2")).toDF("k", "tag"))
@@ -462,7 +462,7 @@ class TableStoreSpec extends AnyFunSuite {
   }
 
   test("data skipping: clustered layout prunes files a range read can't match") {
-    val store = new TableStore(spark, Files.createTempDirectory("graft-skip").toString,
+    val store = new TableStore(spark, TestSpark.tempDir("graft-skip").toString,
       CommitMode.Pointer, statsColumns = Seq("k"))
     val df = spark.range(0, 1000).selectExpr("id AS k", "CAST(id AS STRING) AS v")
     store.atomicOverwriteClustered("t", df, Seq("k"), 10)
@@ -512,7 +512,7 @@ class TableStoreSpec extends AnyFunSuite {
     // string-statted column whose values LOOK numeric: "20" < "5"
     // lexicographically, but Spark's residual filter coerces numerically —
     // pruning under the recorded string dtype would silently drop rows
-    val store = new TableStore(spark, Files.createTempDirectory("graft-dtype").toString,
+    val store = new TableStore(spark, TestSpark.tempDir("graft-dtype").toString,
       CommitMode.Pointer, statsColumns = Seq("s"))
     val df = Seq("3", "5", "20", "100").toDF("s")
     store.atomicOverwriteClustered("t", df, Seq("s"), 4)
@@ -558,7 +558,7 @@ class TableStoreSpec extends AnyFunSuite {
   }
 
   test("two writers racing one expired lock: exactly one torn-free winner per attempt") {
-    val dir = Files.createTempDirectory("graft-ttlrace").toString
+    val dir = TestSpark.tempDir("graft-ttlrace").toString
     val store = new TableStore(spark, dir, CommitMode.Pointer, lockTtlMs = 500L)
     store.atomicOverwrite("t", Seq(0).toDF("k"))
     val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -586,7 +586,7 @@ class TableStoreSpec extends AnyFunSuite {
 
   test("date-partitioned pointer generations compose partition pruning with file stats skipping") {
     import org.apache.spark.sql.functions.col
-    val store = new TableStore(spark, Files.createTempDirectory("graft-partskip").toString,
+    val store = new TableStore(spark, TestSpark.tempDir("graft-partskip").toString,
       CommitMode.Pointer, statsColumns = Seq("k"))
     // 3 days × 4 range-clustered files per day: k in [0,1200), day = k/400
     val df = spark.range(0, 1200).selectExpr("id AS k",
@@ -628,7 +628,7 @@ class TableStoreSpec extends AnyFunSuite {
 
   test("two-dimensional readWhere over the z-order layout prunes on BOTH dimensions") {
     import org.apache.spark.sql.functions.col
-    val store = new TableStore(spark, Files.createTempDirectory("graft-z2d").toString,
+    val store = new TableStore(spark, TestSpark.tempDir("graft-z2d").toString,
       CommitMode.Pointer, statsColumns = Seq("a", "b"))
     // a 100×100 grid: z-ordering keeps files rectangle-ish in (a, b)
     val df = spark.range(0, 10000).selectExpr("id % 100 AS a", "CAST(id / 100 AS BIGINT) AS b")
@@ -732,7 +732,7 @@ class TableStoreSpec extends AnyFunSuite {
   }
 
   test("history mirrors the publish sequence; vacuum dry-run deletes nothing, real run reclaims") {
-    val store = new TableStore(spark, Files.createTempDirectory("graft-hist").toString,
+    val store = new TableStore(spark, TestSpark.tempDir("graft-hist").toString,
       CommitMode.Pointer, keepGenerations = 4)
     store.atomicOverwrite("t", Seq(1).toDF("k"))
     store.append("t", Seq(2, 3).toDF("k"))
@@ -771,7 +771,7 @@ class TableStoreSpec extends AnyFunSuite {
 
   test("pruned reads compose with time travel and snapshots") {
     import org.apache.spark.sql.functions.col
-    val store = new TableStore(spark, Files.createTempDirectory("graft-ttprune").toString,
+    val store = new TableStore(spark, TestSpark.tempDir("graft-ttprune").toString,
       CommitMode.Pointer, keepGenerations = 3, statsColumns = Seq("k"))
     store.atomicOverwriteClustered("t", spark.range(0, 1000).selectExpr("id AS k"), Seq("k"), 10)
     val snap = store.publishSnapshot(Seq("t"))
@@ -802,7 +802,7 @@ class TableStoreSpec extends AnyFunSuite {
     // the silent-row-loss class the r11 ADVICE flagged: pruning must agree
     // with Spark's own filter under EVERY (column dtype × bound type)
     // pairing — mismatches must fall back, never drop
-    val store = new TableStore(spark, Files.createTempDirectory("graft-prop").toString,
+    val store = new TableStore(spark, TestSpark.tempDir("graft-prop").toString,
       CommitMode.Pointer, statsColumns = Seq("n", "s", "d", "ts"))
     val df = spark.range(0, 300).selectExpr(
       "id AS n",
@@ -832,7 +832,7 @@ class TableStoreSpec extends AnyFunSuite {
   }
 
   test("generationDiff yields the exact insert/delete multiset between snapshots") {
-    val store = new TableStore(spark, Files.createTempDirectory("graft-gdiff").toString,
+    val store = new TableStore(spark, TestSpark.tempDir("graft-gdiff").toString,
       CommitMode.Pointer, keepGenerations = 3)
     // duplicates included: multiset semantics, not set semantics
     store.atomicOverwrite("t", Seq((1, "a"), (1, "a"), (2, "b")).toDF("k", "v"))
@@ -855,7 +855,7 @@ class TableStoreSpec extends AnyFunSuite {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
     import org.apache.spark.sql.functions.col
-    val store = new TableStore(spark, Files.createTempDirectory("graft-cclu").toString,
+    val store = new TableStore(spark, TestSpark.tempDir("graft-cclu").toString,
       CommitMode.Pointer, keepGenerations = 2)
     store.atomicOverwriteClustered("t",
       spark.range(0L, 800L).selectExpr("id AS k", "id * 2 AS v"), Seq("k"), 4)
@@ -900,7 +900,7 @@ class TableStoreSpec extends AnyFunSuite {
     // stale-break recovery must not sweep that in-flight dir (grace = TTL,
     // not 0) — regression pin for the defect the TTL stress found
     // (BASELINE.md, "store concurrency stress")
-    val root = Files.createTempDirectory("graft-ttl").toString
+    val root = TestSpark.tempDir("graft-ttl").toString
     val store = new TableStore(spark, root, CommitMode.Pointer,
       lockTtlMs = 60000L, appendLockWaitMs = 0L)
     store.atomicOverwrite("t", spark.range(100L).toDF("id"))
@@ -919,7 +919,7 @@ class TableStoreSpec extends AnyFunSuite {
     // append's drift guard PERMITS nullability-only drift (stripNullability),
     // so two healthy generations can disagree on array containsNull / field
     // nullable — the diff must not refuse them as a type change
-    val store = new TableStore(spark, Files.createTempDirectory("graft-gdiff-null").toString,
+    val store = new TableStore(spark, TestSpark.tempDir("graft-gdiff-null").toString,
       CommitMode.Pointer, keepGenerations = 3)
     import org.apache.spark.sql.types._
     import org.apache.spark.sql.Row
@@ -937,7 +937,7 @@ class TableStoreSpec extends AnyFunSuite {
     assert(diff.filter(col("__change") === "insert").count() == 1)
     assert(diff.filter(col("__change") === "delete").count() == 0)
     // a VALUE-type change still refuses loudly
-    val other = new TableStore(spark, Files.createTempDirectory("graft-gdiff-null2").toString,
+    val other = new TableStore(spark, TestSpark.tempDir("graft-gdiff-null2").toString,
       CommitMode.Pointer, keepGenerations = 3)
     other.atomicOverwrite("t", Seq((1, 1.0)).toDF("k", "v"))
     other.atomicOverwrite("t", Seq((1, "s")).toDF("k", "v"))
@@ -947,7 +947,7 @@ class TableStoreSpec extends AnyFunSuite {
   }
 
   test("generationDiffEvidence totals come from commit sidecars, not a table walk") {
-    val root = Files.createTempDirectory("graft-gdev").toString
+    val root = TestSpark.tempDir("graft-gdev").toString
     val store = new TableStore(spark, root, CommitMode.Pointer, keepGenerations = 3)
     store.atomicOverwrite("t", Seq((1, "a"), (2, "b")).toDF("k", "v"))
     store.append("t", Seq((3, "c")).toDF("k", "v"))
@@ -976,7 +976,7 @@ class TableStoreSpec extends AnyFunSuite {
   }
 
   test("generationDiff across an evolved append chain keeps the added column") {
-    val store = new TableStore(spark, Files.createTempDirectory("graft-gdiff-ev").toString,
+    val store = new TableStore(spark, TestSpark.tempDir("graft-gdiff-ev").toString,
       CommitMode.Pointer, keepGenerations = 5)
     store.atomicOverwrite("t", Seq((1, "a")).toDF("k", "v"))
     val g0 = store.generations("t").head
@@ -1029,7 +1029,7 @@ class TableStoreSpec extends AnyFunSuite {
 
   test("multi-level partitioned generations prune on every level plus file stats") {
     import org.apache.spark.sql.functions.col
-    val store = new TableStore(spark, Files.createTempDirectory("graft-mlp").toString,
+    val store = new TableStore(spark, TestSpark.tempDir("graft-mlp").toString,
       CommitMode.Pointer, statsColumns = Seq("k"))
     // two partition levels (region / day) + range-clustered files within
     val df = spark.range(0, 1200).selectExpr("id AS k",
@@ -1060,7 +1060,7 @@ class TableStoreSpec extends AnyFunSuite {
   }
 
   test("readWhere on an append-evolved table takes readEvolved union semantics") {
-    val store = new TableStore(spark, Files.createTempDirectory("graft-evprune").toString,
+    val store = new TableStore(spark, TestSpark.tempDir("graft-evprune").toString,
       CommitMode.Pointer, statsColumns = Seq("k", "score"))
     store.append("t", spark.range(0, 100).selectExpr("id AS k"))
     store.append("t", spark.range(100, 200).selectExpr("id AS k", "CAST(id AS DOUBLE) AS score"))
@@ -1093,7 +1093,7 @@ class TableStoreSpec extends AnyFunSuite {
   }
 
   test("vacuum deletion takes the writer lock; dry-run stays lock-free") {
-    val store = new TableStore(spark, Files.createTempDirectory("graft-vlock").toString,
+    val store = new TableStore(spark, TestSpark.tempDir("graft-vlock").toString,
       CommitMode.Pointer, keepGenerations = 2)
     store.atomicOverwrite("t", Seq(1).toDF("k"))
     store.atomicOverwrite("t", Seq(2).toDF("k"))
@@ -1111,7 +1111,7 @@ class TableStoreSpec extends AnyFunSuite {
   }
 
   test("append waits briefly for the writer lock, then fails loudly") {
-    val dir = Files.createTempDirectory("graft-applock").toString
+    val dir = TestSpark.tempDir("graft-applock").toString
     val store = new TableStore(spark, dir, CommitMode.Rename, appendLockWaitMs = 400L)
     store.append("t", Seq(1).toDF("k"))
     val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1141,7 +1141,7 @@ class TableStoreSpec extends AnyFunSuite {
 
   test("generationDiff scans only changed partitions; result still equals the full oracle") {
     import org.apache.spark.sql.functions.col
-    val store = new TableStore(spark, Files.createTempDirectory("graft-incdiff").toString,
+    val store = new TableStore(spark, TestSpark.tempDir("graft-incdiff").toString,
       CommitMode.Pointer, keepGenerations = 3)
     def rows(pairs: (String, Int)*) = pairs.toSeq.toDF("day", "v")
       .withColumn("day", col("day").cast("date"))
@@ -1201,15 +1201,10 @@ class TableStoreSpec extends AnyFunSuite {
         jobs.incrementAndGet(); ()
       }
     }
-    def drainBus(): Unit = {
-      val bus = classOf[org.apache.spark.SparkContext].getMethod("listenerBus")
-        .invoke(spark.sparkContext)
-      bus.getClass.getMethod("waitUntilEmpty").invoke(bus); ()
-    }
     spark.sparkContext.addSparkListener(listener)
     try {
       val h = store.history("t").collect()
-      drainBus()
+      TestSpark.drainListenerBus()
       assert(jobs.get() == 0,
         s"metrics-bearing history must be a pure metadata read, ran ${jobs.get()} jobs")
       assert(h.map(r => r.getLong(0) -> r.getLong(5)).toMap == expected, h.mkString("; "))
@@ -1219,13 +1214,13 @@ class TableStoreSpec extends AnyFunSuite {
       fs.delete(new org.apache.hadoop.fs.Path(store.tablePath("t"), "_commit.2.meta"), false)
       val h2 = store.history("t").collect()
       assert(h2.map(r => r.getLong(0) -> r.getLong(5)).toMap == expected, h2.mkString("; "))
-      drainBus()
+      TestSpark.drainListenerBus()
       assert(jobs.get() > 0, "the fallback path recomputes with a count job")
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("keepSnapshots decouples snapshot retention from table-generation retention") {
-    val store = new TableStore(spark, Files.createTempDirectory("graft-ksnap").toString,
+    val store = new TableStore(spark, TestSpark.tempDir("graft-ksnap").toString,
       CommitMode.Pointer, keepGenerations = 2, keepSnapshots = 5)
     store.atomicOverwrite("t", Seq(1).toDF("k"))
     val s1 = store.publishSnapshot(Seq("t"))
@@ -1246,7 +1241,7 @@ class TableStoreSpec extends AnyFunSuite {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     implicit val ec: scala.concurrent.ExecutionContext = scala.concurrent.ExecutionContext.global
-    val store = new TableStore(spark, Files.createTempDirectory("graft-papp").toString,
+    val store = new TableStore(spark, TestSpark.tempDir("graft-papp").toString,
       CommitMode.Pointer, keepGenerations = 8)
     store.atomicOverwrite("t", Seq(0).toDF("k"))
     val n = 4
@@ -1267,7 +1262,7 @@ class TableStoreSpec extends AnyFunSuite {
     // the manifest (irreconcilable footers that explode at read time). The
     // in-lock re-check must refuse instead. The seam fires exactly in the
     // race window (after the append's data write, before its lock).
-    val root = Files.createTempDirectory("graft-driftrace").toString
+    val root = TestSpark.tempDir("graft-driftrace").toString
     val store = new TableStore(spark, root, CommitMode.Pointer)
     store.atomicOverwrite("t", Seq((1, 1)).toDF("k", "v")) // v: int
     val racer = new TableStore(spark, root, CommitMode.Pointer)
@@ -1326,7 +1321,7 @@ class TableStoreSpec extends AnyFunSuite {
 
   test("appendIdempotent: same key commits once, distinct keys accumulate (pointer mode)") {
     val store = new TableStore(spark,
-      Files.createTempDirectory("graft-ptr-idem").toString, CommitMode.Pointer)
+      TestSpark.tempDir("graft-ptr-idem").toString, CommitMode.Pointer)
     assert(store.appendIdempotent("t", Seq((1, "a")).toDF("k", "v"), "b0"))
     assert(!store.appendIdempotent("t", Seq((1, "a")).toDF("k", "v"), "b0"))
     assert(store.appendIdempotent("t", Seq((2, "b")).toDF("k", "v"), "b1"))
@@ -1344,7 +1339,7 @@ class TableStoreSpec extends AnyFunSuite {
     // re-check must see the marker (not only manifest gen-dir names) or
     // the replayed batch commits a duplicate
     val store = new TableStore(spark,
-      Files.createTempDirectory("graft-ptr-idem-race").toString, CommitMode.Pointer)
+      TestSpark.tempDir("graft-ptr-idem-race").toString, CommitMode.Pointer)
     store.append("t", Seq((0, "seed")).toDF("k", "v"))
     store.beforeAppendCommit = { t =>
       store.beforeAppendCommit = _ => ()
@@ -1368,7 +1363,7 @@ class TableStoreSpec extends AnyFunSuite {
     // check, both write private gen dirs, the key re-check under the writer
     // lock (or the O_EXCL marker create) must let exactly one publish
     val store = new TableStore(spark,
-      Files.createTempDirectory("graft-ptr-race").toString, CommitMode.Pointer)
+      TestSpark.tempDir("graft-ptr-race").toString, CommitMode.Pointer)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
     try {
       val gate = new java.util.concurrent.CountDownLatch(1)
@@ -1400,7 +1395,7 @@ class TableStoreSpec extends AnyFunSuite {
     // pointer mode: the key rode the gen-dir name; compaction folds that
     // dir away and must materialize the key as a marker first
     val p = new TableStore(spark,
-      Files.createTempDirectory("graft-ptr-ck").toString, CommitMode.Pointer)
+      TestSpark.tempDir("graft-ptr-ck").toString, CommitMode.Pointer)
     assert(p.appendIdempotent("t", Seq((1, "a")).toDF("k", "v"), "b0"))
     p.compactClustered("t", Seq("k"), 1)
     assert(p.idempotentKeyCommitted("t", "b0"), "pointer compact lost the key")
@@ -1410,7 +1405,7 @@ class TableStoreSpec extends AnyFunSuite {
 
   test("maybeAutoCompactClustered fires exactly when the file count exceeds the threshold") {
     val store = new TableStore(spark,
-      Files.createTempDirectory("graft-ac").toString, autoCompactFiles = 6)
+      TestSpark.tempDir("graft-ac").toString, autoCompactFiles = 6)
     store.atomicOverwriteClustered("t", (0 until 40).map(i => (i, s"v$i")).toDF("k", "v"),
       Seq("k"), 4)
     // appends below the threshold never trigger
@@ -1469,7 +1464,7 @@ class TableStoreSpec extends AnyFunSuite {
   }
 
   test("sidecar formats are pinned byte for byte and hand-written sidecars parse") {
-    val root = Files.createTempDirectory("graft-sidecars").toString
+    val root = TestSpark.tempDir("graft-sidecars").toString
     val store = new TableStore(spark, root, CommitMode.Pointer, keepGenerations = 8,
       statsColumns = Seq("k"))
     def text(p: String): String = new String(Files.readAllBytes(java.nio.file.Paths.get(p)), "UTF-8")
@@ -1552,7 +1547,7 @@ class TableStoreSpec extends AnyFunSuite {
     // whole number of commits, or the friendly no-marker refusal of a
     // generation retired after it was listed — never a partial result
     import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
-    val store = new TableStore(spark, Files.createTempDirectory("graft-stress").toString,
+    val store = new TableStore(spark, TestSpark.tempDir("graft-stress").toString,
       CommitMode.Pointer, keepGenerations = 3)
     val (base, batch, appends) = (100L, 10L, 8)
     store.atomicOverwrite("t", spark.range(base).toDF("id"))

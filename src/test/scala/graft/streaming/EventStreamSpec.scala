@@ -10,7 +10,7 @@ class EventStreamSpec extends AnyFunSuite {
 
   // stream sources must be directories: stage the fixture file into one
   private lazy val dir: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft-stream")
+    val d = TestSpark.tempDir("graft-stream")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"${TestSpark.Sf0001}/events.parquet"),
       d.resolve("part-0.parquet"))
@@ -24,8 +24,8 @@ class EventStreamSpec extends AnyFunSuite {
     // read probes the source schema instead of assuming a unit
     val batch = graft.io.Tables.load(spark, TestSpark.Sf0001, "events").limit(200)
       .select(col("event_id"), col("ts"))
-    val dNs = java.nio.file.Files.createTempDirectory("graft-rep-ns")
-    val dUs = java.nio.file.Files.createTempDirectory("graft-rep-us")
+    val dNs = TestSpark.tempDir("graft-rep-ns")
+    val dUs = TestSpark.tempDir("graft-rep-us")
     batch.withColumn("ts", unix_micros(col("ts").cast("timestamp")) * 1000)
       .write.parquet(s"$dNs/in")
     batch.withColumn("ts", col("ts").cast("timestamp")) // µs LTZ
@@ -45,7 +45,7 @@ class EventStreamSpec extends AnyFunSuite {
       s"representations diverge: only-ns=${(fromNs -- fromUs).take(3)} only-us=${(fromUs -- fromNs).take(3)}")
     // an unsupported representation refuses loudly, naming the type — it
     // must never silently mis-scale
-    val dStr = java.nio.file.Files.createTempDirectory("graft-rep-str")
+    val dStr = TestSpark.tempDir("graft-rep-str")
     batch.withColumn("ts", col("ts").cast("string")).write.parquet(s"$dStr/in")
     val e = intercept[IllegalArgumentException](EventStream.read(spark, s"$dStr/in"))
     assert(e.getMessage.contains("unsupported ts representation"), e.getMessage)
@@ -55,7 +55,7 @@ class EventStreamSpec extends AnyFunSuite {
   test("read over an empty directory starts with RawSchema instead of failing the probe") {
     // a not-yet-populated source dir is a normal file-stream startup state:
     // the producer writes its first batch after the consumer opens
-    val empty = java.nio.file.Files.createTempDirectory("graft-stream-empty").toString
+    val empty = TestSpark.tempDir("graft-stream-empty").toString
     val events = EventStream.read(spark, empty) // must not throw
     assert(events.isStreaming)
     // falls back to the documented ns-long RawSchema, ts normalized to timestamp
@@ -96,7 +96,7 @@ class EventStreamSpec extends AnyFunSuite {
   test("sessionize closes sessions when the gap elapses (two-batch watermark advance)") {
     import org.apache.spark.sql.functions._
     // stage two files so batch 2 advances the watermark past batch 1's sessions
-    val d2 = java.nio.file.Files.createTempDirectory("graft-sess")
+    val d2 = TestSpark.tempDir("graft-sess")
     val early = graft.io.Tables.load(spark, TestSpark.Sf0001, "events")
       .filter(col("ts") < lit(java.time.LocalDateTime.of(2024, 1, 3, 0, 0)))
     val late = graft.io.Tables.load(spark, TestSpark.Sf0001, "events")
@@ -151,7 +151,7 @@ class EventStreamSpec extends AnyFunSuite {
   }
 
   test("upsertInto maintains a keyed copy across micro-batches, last-write-wins") {
-    val d = java.nio.file.Files.createTempDirectory("graft-cdc")
+    val d = TestSpark.tempDir("graft-cdc")
     val b1 = (1L to 100L).map(i => (i, s"v1-$i", 1L)).toDF("event_id", "payload", "seq")
     // batch 2 updates keys 51..100, inserts 101..150, and carries an
     // in-batch duplicate for key 150 (seq 3 must win over seq 2)
@@ -168,7 +168,7 @@ class EventStreamSpec extends AnyFunSuite {
     val src = spark.readStream.schema(b1.schema)
       .option("maxFilesPerTrigger", "1").parquet(s"$d/b*")
     val store = new graft.store.TableStore(spark,
-      java.nio.file.Files.createTempDirectory("graft-cdc-store").toString)
+      TestSpark.tempDir("graft-cdc-store").toString)
     val q = EventStream.upsertInto(src, store, "copy", "event_id", "seq")
       .option("checkpointLocation", s"$d/ckpt").start()
     try q.processAllAvailable() finally q.stop()
@@ -181,7 +181,7 @@ class EventStreamSpec extends AnyFunSuite {
   }
 
   test("upsertInto keeps a CDC pk named 'id' — audit-drop must not eat data columns") {
-    val d = java.nio.file.Files.createTempDirectory("graft-cdc-id")
+    val d = TestSpark.tempDir("graft-cdc-id")
     // pk 'id' collides with the copy path's audit-column contract; the CDC
     // upsert must treat it as data or batch 2 diverges in schema from the
     // create batch and the stream dies (round-6 advisory)
@@ -197,7 +197,7 @@ class EventStreamSpec extends AnyFunSuite {
     val src = spark.readStream.schema(b1.schema)
       .option("maxFilesPerTrigger", "1").parquet(s"$d/b*")
     val store = new graft.store.TableStore(spark,
-      java.nio.file.Files.createTempDirectory("graft-cdc-id-store").toString)
+      TestSpark.tempDir("graft-cdc-id-store").toString)
     val q = EventStream.upsertInto(src, store, "copy", "id", "seq")
       .option("checkpointLocation", s"$d/ckpt").start()
     try q.processAllAvailable() finally q.stop()
@@ -210,9 +210,9 @@ class EventStreamSpec extends AnyFunSuite {
   }
 
   test("upsertInto survives source schema evolution across stream restarts") {
-    val d = java.nio.file.Files.createTempDirectory("graft-cdc-evolve")
+    val d = TestSpark.tempDir("graft-cdc-evolve")
     val store = new graft.store.TableStore(spark,
-      java.nio.file.Files.createTempDirectory("graft-cdc-evolve-store").toString)
+      TestSpark.tempDir("graft-cdc-evolve-store").toString)
     // run 1: original schema
     val b1 = Seq((1L, "v1-1", 1L), (2L, "v1-2", 1L)).toDF("id", "payload", "seq")
     b1.coalesce(1).write.parquet(s"$d/in1")
@@ -239,7 +239,7 @@ class EventStreamSpec extends AnyFunSuite {
   }
 
   test("upsertIntoPartitions touches only the batch's day partitions") {
-    val d = java.nio.file.Files.createTempDirectory("graft-cdc-part")
+    val d = TestSpark.tempDir("graft-cdc-part")
     def rows(sub: String, rs: Seq[(Long, String, String, Long)]) =
       rs.toDF("event_id", "payload", "day", "seq")
         .withColumn("day", col("day").cast("date"))
@@ -249,7 +249,7 @@ class EventStreamSpec extends AnyFunSuite {
     rows("b1", Seq((1L, "v1-1", "2024-01-01", 1L), (2L, "v1-2", "2024-01-02", 1L)))
     val schema = spark.read.parquet(s"$d/b1").schema
     val store = new graft.store.TableStore(spark,
-      java.nio.file.Files.createTempDirectory("graft-cdc-part-store").toString)
+      TestSpark.tempDir("graft-cdc-part-store").toString)
     // two sequential drains over one checkpoint: batch 2's files are written
     // ONLY AFTER the snapshot is taken, so the untouched-partition assertion
     // can never pass vacuously (comparing the final state to itself)
@@ -276,7 +276,7 @@ class EventStreamSpec extends AnyFunSuite {
   }
 
   test("upsertIntoPartitions fails a batch loudly on NULL event dates") {
-    val d = java.nio.file.Files.createTempDirectory("graft-cdc-nullday")
+    val d = TestSpark.tempDir("graft-cdc-nullday")
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("event_id", org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("day", org.apache.spark.sql.types.DateType),
@@ -287,7 +287,7 @@ class EventStreamSpec extends AnyFunSuite {
       .coalesce(1).write.parquet(s"$d/b1")
     val src = spark.readStream.schema(schema).parquet(s"$d/b*")
     val store = new graft.store.TableStore(spark,
-      java.nio.file.Files.createTempDirectory("graft-cdc-nullday-store").toString)
+      TestSpark.tempDir("graft-cdc-nullday-store").toString)
     val q = EventStream.upsertIntoPartitions(src, store, "copy", "event_id", "seq", "day")
       .option("checkpointLocation", s"$d/ckpt").start()
     val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
@@ -315,9 +315,9 @@ class EventStreamSpec extends AnyFunSuite {
 
   test("resumable change feed: a consumer killed between batches resumes at the first unapplied commit") {
     val store = new graft.store.TableStore(spark,
-      java.nio.file.Files.createTempDirectory("graft-resfeed").toString,
+      TestSpark.tempDir("graft-resfeed").toString,
       graft.store.CommitMode.Pointer, keepGenerations = 6)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-resfeed-ckpt").toString
+    val ckpt = TestSpark.tempDir("graft-resfeed-ckpt").toString
     store.atomicOverwrite("t", Seq((1, "a")).toDF("k", "v"))
     val first = store.generations("t").head
     store.atomicOverwrite("t", Seq((1, "a"), (2, "b")).toDF("k", "v")) // +2
@@ -365,7 +365,7 @@ class EventStreamSpec extends AnyFunSuite {
 
   test("change feed: three commits drain as three batches whose union is the overall diff") {
     val store = new graft.store.TableStore(spark,
-      java.nio.file.Files.createTempDirectory("graft-feed").toString,
+      TestSpark.tempDir("graft-feed").toString,
       graft.store.CommitMode.Pointer, keepGenerations = 5)
     // four commits, each row changing at most once across the sequence so
     // the per-commit union is comparable to the end-to-end diff

@@ -25,7 +25,7 @@ class IngestStreamSpec extends AnyFunSuite {
 
   test("static-index streaming dedup lands the batch path's survivor set") {
     val store = new TableStore(spark,
-      java.nio.file.Files.createTempDirectory("ingest-spec-static").toString)
+      graft.TestSpark.tempDir("ingest-spec-static").toString)
     val archive = Seq((1L, "a b c d e f")).toDF("doc_id", "text")
     val batch = Seq(
       (10L, "a b c d e f"),  // dup of the archive -> dropped
@@ -37,7 +37,7 @@ class IngestStreamSpec extends AnyFunSuite {
     val expected = Dedup.dedupeAgainstLshIndex(store, idx, batch, "doc_id", "text", 0.8)
       .select("doc_id").as[Long].collect().toSet
     Dedup.unpersistAll()
-    val in = java.nio.file.Files.createTempDirectory("ingest-spec-in").resolve("in")
+    val in = graft.TestSpark.tempDir("ingest-spec-in").resolve("in")
     java.nio.file.Files.createDirectories(in)
     stage(batch, in, "b0")
     drain(IngestStream.dedupToStore(IngestStream.readDocs(spark, in.toString),
@@ -49,13 +49,13 @@ class IngestStreamSpec extends AnyFunSuite {
 
   test("grow=true: a later micro-batch dedupes against earlier survivors; checkpoint resumes") {
     val store = new TableStore(spark,
-      java.nio.file.Files.createTempDirectory("ingest-spec-grow").toString)
+      graft.TestSpark.tempDir("ingest-spec-grow").toString)
     val archive = Seq((1L, "a b c d e f")).toDF("doc_id", "text")
     Dedup.buildLshIndex(store, "idx", archive, "doc_id", "text")
     val idx = Dedup.loadLshIndex(store, "idx")
-    val in = java.nio.file.Files.createTempDirectory("ingest-spec-gin").resolve("in")
+    val in = graft.TestSpark.tempDir("ingest-spec-gin").resolve("in")
     java.nio.file.Files.createDirectories(in)
-    val ck = java.nio.file.Files.createTempDirectory("ingest-spec-ck").toString
+    val ck = graft.TestSpark.tempDir("ingest-spec-ck").toString
     // drain 1: doc 10 dups the archive (drop), doc 11 is novel (survive+grow)
     stage(Seq((10L, "a b c d e f"), (11L, "p q r s t u")).toDF("doc_id", "text"), in, "b0")
     drain(IngestStream.dedupToStore(IngestStream.readDocs(spark, in.toString),
@@ -76,14 +76,14 @@ class IngestStreamSpec extends AnyFunSuite {
     // appendToLshIndex) and must neither lose index segments nor forget the
     // batch's exactly-once keys
     val store = new TableStore(spark,
-      java.nio.file.Files.createTempDirectory("ingest-spec-ac").toString,
+      graft.TestSpark.tempDir("ingest-spec-ac").toString,
       autoCompactFiles = 8)
     val archive = Seq((1L, "a b c d e f")).toDF("doc_id", "text")
     Dedup.buildLshIndex(store, "idx", archive, "doc_id", "text")
     val idx = Dedup.loadLshIndex(store, "idx")
-    val in = java.nio.file.Files.createTempDirectory("ingest-spec-acin").resolve("in")
+    val in = graft.TestSpark.tempDir("ingest-spec-acin").resolve("in")
     java.nio.file.Files.createDirectories(in)
-    val ck = java.nio.file.Files.createTempDirectory("ingest-spec-acck").toString
+    val ck = graft.TestSpark.tempDir("ingest-spec-acck").toString
     // six novel single-doc files -> six micro-batches, each growing the index
     val texts = Seq("p q r s t u", "g h i j k l", "m n o aa bb cc",
       "dd ee ff gg hh ii", "jj kk ll mm nn oo", "pp qq rr ss tt uu")
@@ -108,11 +108,11 @@ class IngestStreamSpec extends AnyFunSuite {
     // in a directory, each micro-batch parses byte-exactly and probes the
     // stored LSH index; survivors (keyed by uri) reach the store
     val store = new TableStore(spark,
-      java.nio.file.Files.createTempDirectory("ingest-spec-wet").toString)
+      graft.TestSpark.tempDir("ingest-spec-wet").toString)
     val archive = Seq((1L, "a b c d e f")).toDF("doc_id", "text")
     Dedup.buildLshIndex(store, "idx", archive, "doc_id", "text")
     val idx = Dedup.loadLshIndex(store, "idx")
-    val in = java.nio.file.Files.createTempDirectory("ingest-spec-wetin").toString + "/in"
+    val in = graft.TestSpark.tempDir("ingest-spec-wetin").toString + "/in"
     def wet(name: String, rows: Seq[(String, String)]): Unit =
       graft.io.Warc.writeWet(
         rows.toDF("uri", "text")
@@ -139,13 +139,13 @@ class IngestStreamSpec extends AnyFunSuite {
     // commit record for batch 0 — the next drain re-runs batch 0 with the
     // SAME batchId, and the batchId-keyed appends must all no-op.
     val store = new TableStore(spark,
-      java.nio.file.Files.createTempDirectory("ingest-spec-replay").toString)
+      graft.TestSpark.tempDir("ingest-spec-replay").toString)
     val archive = Seq((1L, "a b c d e f")).toDF("doc_id", "text")
     Dedup.buildLshIndex(store, "idx", archive, "doc_id", "text")
     val idx = Dedup.loadLshIndex(store, "idx")
-    val in = java.nio.file.Files.createTempDirectory("ingest-spec-rin").resolve("in")
+    val in = graft.TestSpark.tempDir("ingest-spec-rin").resolve("in")
     java.nio.file.Files.createDirectories(in)
-    val ck = java.nio.file.Files.createTempDirectory("ingest-spec-rck")
+    val ck = graft.TestSpark.tempDir("ingest-spec-rck")
     stage(Seq((10L, "a b c d e f"), (11L, "p q r s t u")).toDF("doc_id", "text"), in, "b0")
     drain(IngestStream.dedupToStore(IngestStream.readDocs(spark, in.toString),
       store, idx, "doc_id", "text", 0.8, "surv", grow = true, checkpoint = Some(ck.toString)))
