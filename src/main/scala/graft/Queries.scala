@@ -371,7 +371,7 @@ object Queries {
     * land in their own copy. */
   private[graft] def lshBaseIndex(table: String, cutoff: Int): Fixture[String] =
     Fixture(s"lshbase:$table:$cutoff") { (s, d) =>
-      val dir = java.nio.file.Files.createTempDirectory("graft-lsh-base").toString
+      val dir = graft.io.TempDirs.create("graft-lsh-base").toString
       graft.ext.Dedup.buildLshIndex(new graft.store.TableStore(s, dir), table,
         docs(s, d).filter(col("doc_id") < cutoff), "doc_id", "text")
       dir

@@ -1,5 +1,7 @@
 package graft.ext
 
+import scala.collection.mutable.ArrayBuffer
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 
@@ -22,20 +24,19 @@ import org.apache.spark.storage.StorageLevel
  */
 private[graft] object Caches {
 
-  private val persisted =
-    new java.util.concurrent.ConcurrentHashMap[Long, scala.collection.mutable.ArrayBuffer[DataFrame]]()
+  /** Per-thread release actions, one per tracked frame, run in order. */
+  private val releases = new java.util.concurrent.ConcurrentHashMap[Long, ArrayBuffer[() => Unit]]()
 
-  private def buf = persisted.computeIfAbsent(
-    Thread.currentThread().getId, _ => scala.collection.mutable.ArrayBuffer.empty[DataFrame])
+  private def onRelease(release: () => Unit): Unit =
+    releases.computeIfAbsent(Thread.currentThread().getId, _ => ArrayBuffer.empty) += release
 
-  def track(df: DataFrame): DataFrame = {
-    val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-    buf += p
-    p
-  }
+  def track(df: DataFrame): DataFrame = register(df.persist(StorageLevel.MEMORY_AND_DISK))
 
   /** Record an already-persisted frame for release by [[unpersistAll]]. */
-  def register(df: DataFrame): DataFrame = { buf += df; df }
+  def register(df: DataFrame): DataFrame = {
+    onRelease(() => df.unpersist(blocking = false))
+    df
+  }
 
   /** The RDD actually holding a localCheckpoint's blocks. `Dataset
     * .unpersist` on a checkpointed frame is a NO-OP — it goes through the
@@ -56,45 +57,27 @@ private[graft] object Caches {
     * materializes the frame once and replaces its plan with a leaf
     * `LogicalRDD`, so downstream re-plans (iterative-trainer steps, probe
     * loops) stop paying per-iteration analysis of the full build lineage. */
-  def trackCheckpoint(df: DataFrame): DataFrame = {
-    val ck = df.localCheckpoint()
-    ckBuf += ck
-    ck
-  }
+  def trackCheckpoint(df: DataFrame): DataFrame = registerCheckpoint(df.localCheckpoint())
 
   /** Record an ALREADY-checkpointed frame for release by [[unpersistAll]] —
     * for iterative builders that truncate lineage round over round, release
     * dead rounds eagerly themselves, and need only the surviving final
     * round covered ([[releaseCheckpoint]] is idempotent, so a frame both
     * released manually and registered here is safe). */
-  def registerCheckpoint(df: DataFrame): DataFrame = { ckBuf += df; df }
+  def registerCheckpoint(df: DataFrame): DataFrame = {
+    onRelease(() => releaseCheckpoint(df))
+    df
+  }
 
-  private val checkpointed =
-    new java.util.concurrent.ConcurrentHashMap[Long, scala.collection.mutable.ArrayBuffer[DataFrame]]()
-
-  private def ckBuf = checkpointed.computeIfAbsent(
-    Thread.currentThread().getId, _ => scala.collection.mutable.ArrayBuffer.empty[DataFrame])
+  private def release(thread: Long): Unit = {
+    val b = releases.remove(thread)
+    if (b != null) b.foreach(_())
+  }
 
   /** Release the caches tracked by the CALLING thread (see class doc). */
-  def unpersistAll(): Unit = {
-    val b = persisted.remove(Thread.currentThread().getId)
-    if (b != null) b.foreach(_.unpersist(blocking = false))
-    val c = checkpointed.remove(Thread.currentThread().getId)
-    if (c != null) c.foreach(releaseCheckpoint)
-  }
+  def unpersistAll(): Unit = release(Thread.currentThread().getId)
 
   /** Release every thread's caches — session-teardown / test-suite cleanup
     * only; defeats the per-thread isolation if called mid-flight. */
-  def unpersistEverything(): Unit = {
-    val it = persisted.keys()
-    while (it.hasMoreElements) {
-      val b = persisted.remove(it.nextElement())
-      if (b != null) b.foreach(_.unpersist(blocking = false))
-    }
-    val ck = checkpointed.keys()
-    while (ck.hasMoreElements) {
-      val c = checkpointed.remove(ck.nextElement())
-      if (c != null) c.foreach(releaseCheckpoint)
-    }
-  }
+  def unpersistEverything(): Unit = releases.keySet().forEach(t => release(t))
 }

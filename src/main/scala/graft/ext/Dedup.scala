@@ -15,8 +15,6 @@ import org.apache.spark.sql.functions._
  */
 object Dedup {
 
-  private def persistTracked(df: DataFrame): DataFrame = Caches.track(df)
-
   /** Release the caches created by extension plan builders ON THIS THREAD
     * since the last call (kept here as the public entry point Bench/Verify
     * use). Thread-scoped so parallel queries in a shared session cannot
@@ -65,9 +63,9 @@ object Dedup {
     // per emitted element, so exploding the raw HOF-built array re-runs the
     // whole shingle-construction subtree once per shingle (the same
     // deferred-evaluation trap as the IVF probe join — materialize first).
-    val blockSh = persistTracked(hashedShingleSets(blocklist, idCol, textCol, n))
+    val blockSh = Caches.track(hashedShingleSets(blocklist, idCol, textCol, n))
       .select(explode(col("hs")).as("__g")).distinct()
-    val docSh = persistTracked(hashedShingleSets(docs, idCol, textCol, n))
+    val docSh = Caches.track(hashedShingleSets(docs, idCol, textCol, n))
       .select(col(idCol), explode(col("hs")).as("__g"))
     val contaminated = docSh.join(broadcast(blockSh), Seq("__g"), "left_semi")
       .groupBy(idCol).agg(count(lit(1)).as("__hits"))
@@ -99,8 +97,8 @@ object Dedup {
       textCol: String, n: Int = 3): DataFrame = {
     require(n >= 1, s"shingle width must be >= 1: $n")
     val nn = docs.filter(col(textCol).isNotNull)
-    val sh = persistTracked(hashedShingleSets(nn, idCol, textCol, n))
-    val sg = persistTracked(
+    val sh = Caches.track(hashedShingleSets(nn, idCol, textCol, n))
+    val sg = Caches.track(
       sh.join(nn.select(col(idCol), col(sourceCol).as("__srca")), Seq(idCol))
         .select(col("__srca"), explode(col("hs")).as("__g")).distinct())
     val totals = sg.groupBy(col("__srca")).agg(count(lit(1)).as("__tot"))
@@ -142,18 +140,22 @@ object Dedup {
     // separate projection so token hashes are computed once, not per shingle
     val tokenHashes = docs.select(col(idCol), transform(t, tok => xxhash64(tok)).as("th"))
     val th = col("th")
-    val grams = when(size(th) >= n,
-        array_distinct(transform(sequence(lit(0), size(th) - n),
-          i => xxhash64((1 to n).map(k => element_at(th, i + lit(k))): _*))))
-      .otherwise(array(xxhash64(th)))
-    tokenHashes.select(col(idCol), array_sort(grams).as("hs"))
+    tokenHashes
+      .select(col(idCol), array_sort(array_distinct(gramHashes(th, size(th), n))).as("hs"))
       .withColumn("sz", size(col("hs")))
   }
 
-  /** Jaccard from a sorted-merge intersection count: `c / (|a| + |b| − c)` —
-    * same integers as [[jaccard]], same exact double. */
-  private def jaccardFromCount(c: Column, sza: Column, szb: Column): Column =
-    c.cast("double") / (sza + szb - c).cast("double")
+  /** The shingle family's one gram hash, over a token-hash array `th` of
+    * `nt` elements: the gram at start position `i` is the `xxhash64` of the
+    * `n` token hashes `th[i+1..i+n]`, one per position in order; a doc
+    * shorter than `n` tokens is its one whole-doc shingle `xxhash64(th)`.
+    * Callers project `th` themselves, in its own projection referenced
+    * more than once, so CollapseProject cannot re-inline the tokenize+hash
+    * subtree into every gram. */
+  private[ext] def gramHashes(th: Column, nt: Column, n: Int): Column =
+    when(nt >= n, transform(sequence(lit(0), nt - n),
+        i => xxhash64((1 to n).map(k => element_at(th, i + lit(k))): _*)))
+      .otherwise(array(xxhash64(th)))
 
   /** Default candidate-pair budget for [[bucketPairs]]: 10⁸ expansions is
     * far above any blocking scheme working as designed at gate/smoke
@@ -194,7 +196,7 @@ object Dedup {
     val grouped0 = keyed.groupBy(keyCol)
       .agg(array_sort(collect_set(col(idCol))).as("ids"))
       .filter(size(col("ids")) > 1)
-    val grouped = if (pairBudget > 0) persistTracked(grouped0) else grouped0
+    val grouped = if (pairBudget > 0) Caches.track(grouped0) else grouped0
     if (pairBudget > 0) {
       val sz = size(col("ids")).cast("long")
       val est = grouped.agg(coalesce(sum(sz * (sz - 1L)), lit(0L)).as("twice"),
@@ -235,11 +237,11 @@ object Dedup {
       pairBudget: Long = DefaultPairBudget): DataFrame = {
     // the sets feed candidate generation AND both verify sides — persist so
     // the shingling subtree runs once, not three times
-    val sets = persistTracked(hashedShingleSets(docs, idCol, textCol, n))
+    val sets = Caches.track(hashedShingleSets(docs, idCol, textCol, n))
     val exploded = sets.select(col(idCol), explode(col("hs")).as("s"))
     verifyPairs(bucketPairs(dfRankedPrefixes(exploded, idCol, threshold), "s", idCol,
         pairBudget),
-      sets, idCol, threshold)
+      sets, idCol, sets, idCol, threshold)
   }
 
   /** The AllPairs/PPJoin prefix frame shared by [[jaccardPairs]] and
@@ -288,9 +290,8 @@ object Dedup {
   def containmentPairs(docs: DataFrame, idCol: String, textCol: String,
       n: Int = 3, threshold: Double = 0.9): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0, s"threshold out of (0,1]: $threshold")
-    import org.apache.spark.sql.graftx.VectorFunctions.sorted_intersect_count
-    val sets = persistTracked(hashedShingleSets(docs, idCol, textCol, n))
-    val exploded = persistTracked(sets.select(col(idCol), explode(col("hs")).as("s")))
+    val sets = Caches.track(hashedShingleSets(docs, idCol, textCol, n))
+    val exploded = Caches.track(sets.select(col(idCol), explode(col("hs")).as("s")))
     val prefixes = dfRankedPrefixes(exploded, idCol, threshold)
       .select(col(idCol).as("__pid"), col("s"))
     val full = exploded.select(col(idCol).as("__fid"), col("s"))
@@ -299,28 +300,31 @@ object Dedup {
       .select(least(col("__pid"), col("__fid")).as("doc_a"),
         greatest(col("__pid"), col("__fid")).as("doc_b"))
       .distinct()
-    val sa = sets.select(col(idCol).as("doc_a"), col("hs").as("hs_a"), col("sz").as("sz_a"))
-    val sb = sets.select(col(idCol).as("doc_b"), col("hs").as("hs_b"), col("sz").as("sz_b"))
-    cand.join(sa, "doc_a").join(sb, "doc_b")
-      .withColumn("c", sorted_intersect_count(col("hs_a"), col("hs_b")))
-      .withColumn("containment",
-        col("c").cast("double") / least(col("sz_a"), col("sz_b")).cast("double"))
-      .filter(col("containment") >= threshold)
-      .select("doc_a", "doc_b", "containment")
+    verifyPairs(cand, sets, idCol, sets, idCol, threshold, containment = true)
   }
 
-  /** Exact-Jaccard verification of candidate pairs against the hashed
-    * shingle sets (codegen'd sorted-merge intersection). */
-  private def verifyPairs(candidates: DataFrame, sets: DataFrame, idCol: String,
-      threshold: Double): DataFrame = {
+  /** Exact verification of candidate pairs `(doc_a, doc_b)`: `doc_a` joins
+    * its hashed shingle set `(idA, hs, sz)` in `setsA`, `doc_b` its set in
+    * `setsB`, and one codegen'd sorted-merge pass counts `c = |A∩B|`. The
+    * measure is Jaccard `c / (|A| + |B| − c)` (the same integers as
+    * [[jaccard]], so the same exact double) or, with `containment`,
+    * `c / min(|A|, |B|)`. Keeps pairs scoring at least `threshold` and
+    * returns `(doc_a, doc_b, jaccard | containment)`. */
+  private def verifyPairs(candidates: DataFrame, setsA: DataFrame, idA: String,
+      setsB: DataFrame, idB: String, threshold: Double,
+      containment: Boolean = false): DataFrame = {
     import org.apache.spark.sql.graftx.VectorFunctions.sorted_intersect_count
-    val sa = sets.select(col(idCol).as("doc_a"), col("hs").as("hs_a"), col("sz").as("sz_a"))
-    val sb = sets.select(col(idCol).as("doc_b"), col("hs").as("hs_b"), col("sz").as("sz_b"))
+    val sa = setsA.select(col(idA).as("doc_a"), col("hs").as("hs_a"), col("sz").as("sz_a"))
+    val sb = setsB.select(col(idB).as("doc_b"), col("hs").as("hs_b"), col("sz").as("sz_b"))
+    val (c, a, b) = (col("c"), col("sz_a"), col("sz_b"))
+    val (measure, score) =
+      if (containment) ("containment", c.cast("double") / least(a, b).cast("double"))
+      else ("jaccard", c.cast("double") / (a + b - c).cast("double"))
     candidates.join(sa, "doc_a").join(sb, "doc_b")
       .withColumn("c", sorted_intersect_count(col("hs_a"), col("hs_b")))
-      .withColumn("jaccard", jaccardFromCount(col("c"), col("sz_a"), col("sz_b")))
-      .filter(col("jaccard") >= threshold)
-      .select("doc_a", "doc_b", "jaccard")
+      .withColumn(measure, score)
+      .filter(col(measure) >= threshold)
+      .select("doc_a", "doc_b", measure)
   }
 
   /**
@@ -338,17 +342,11 @@ object Dedup {
    */
   def minhashLshPairs(docs: DataFrame, idCol: String, textCol: String,
       n: Int = 3, numHashes: Int = 64, bands: Int = 16, threshold: Double = 0.8): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must be divisible by bands")
-    import org.apache.spark.sql.graftx.VectorFunctions.minhash_signature
-    val rows = numHashes / bands
-    val sets = persistTracked(hashedShingleSets(docs, idCol, textCol, n))
-    // signature = one codegen'd per-row pass (no explode/aggregate shuffle);
-    // band key j = hash of the j-th row-group slice of the signature
-    val sigs = sets.select(col(idCol), minhash_signature(col("hs"), numHashes).as("sig"))
-    val buckets = sigs.select(col(idCol),
-      explode(array((0 until bands).map(j =>
-        struct(lit(j).as("band"), hash(slice(col("sig"), j * rows + 1, rows)).as("bucket"))): _*)).as("bk"))
-    verifyPairs(bucketPairs(buckets, "bk", idCol), sets, idCol, threshold)
+    val sets = Caches.track(hashedShingleSets(docs, idCol, textCol, n))
+    // a pair is a candidate when it shares any (band, bucket) key
+    val buckets = lshBuckets(sets, idCol, numHashes, bands)
+      .select(col(idCol), struct(col("band"), col("bucket")).as("bk"))
+    verifyPairs(bucketPairs(buckets, "bk", idCol), sets, idCol, sets, idCol, threshold)
   }
 
   /** Default SimHash token hash: `xxhash64` — the fast production choice. */
@@ -679,9 +677,14 @@ object Dedup {
     * never match, so they travel with the index instead of the caller. */
   final case class LshIndex(table: String, n: Int, numHashes: Int, bands: Int)
 
-  /** Banded signature buckets `(band, bucket)` per row of `sets`. */
+  /** Banded signature buckets `(idCol, band, bucket)` per row of `sets`:
+    * the signature is one codegen'd per-row pass (no explode/aggregate
+    * shuffle), and band `j`'s bucket is the hash of the signature's `j`-th
+    * row-group slice. Refuses `numHashes` not divisible by `bands` when
+    * called, before any plan runs. */
   private def lshBuckets(sets: DataFrame, idCol: String, numHashes: Int,
       bands: Int): DataFrame = {
+    require(numHashes % bands == 0, "numHashes must be divisible by bands")
     import org.apache.spark.sql.graftx.VectorFunctions.minhash_signature
     val rows = numHashes / bands
     sets.select(col(idCol), minhash_signature(col("hs"), numHashes).as("sig"))
@@ -703,14 +706,14 @@ object Dedup {
   def buildLshIndex(store: graft.store.TableStore, table: String, corpus: DataFrame,
       idCol: String, textCol: String, n: Int = 3, numHashes: Int = 64,
       bands: Int = 16): LshIndex = {
-    require(numHashes % bands == 0, "numHashes must be divisible by bands")
-    val sets = persistTracked(hashedShingleSets(
+    val sets = Caches.track(hashedShingleSets(
       corpus.filter(col(textCol).isNotNull), idCol, textCol, n))
+    // built before the first write, so bad banding refuses with nothing written
+    val buckets = lshBuckets(sets, idCol, numHashes, bands).withColumnRenamed(idCol, "id")
     store.atomicOverwrite(table, sets.withColumnRenamed(idCol, "id"))
     // clustered on the probe join's keys so footer stats keep bucket files
     // tight; the probe join itself shuffles on (band, bucket) either way
-    store.atomicOverwriteClustered(s"${table}_buckets",
-      lshBuckets(sets, idCol, numHashes, bands).withColumnRenamed(idCol, "id"),
+    store.atomicOverwriteClustered(s"${table}_buckets", buckets,
       Seq("band", "bucket"), numFiles = bands)
     val spark = corpus.sparkSession
     import spark.implicits._
@@ -796,21 +799,15 @@ object Dedup {
    */
   def dedupeAgainstLshIndex(store: graft.store.TableStore, index: LshIndex,
       batch: DataFrame, idCol: String, textCol: String, threshold: Double): DataFrame = {
-    import org.apache.spark.sql.graftx.VectorFunctions.sorted_intersect_count
-    val bsets = persistTracked(hashedShingleSets(
+    val bsets = Caches.track(hashedShingleSets(
       batch.filter(col(textCol).isNotNull), idCol, textCol, index.n))
-    val probes = lshBuckets(bsets, idCol, index.numHashes, index.bands)
-      .withColumnRenamed(idCol, "__batch_id")
-    val cands = probes.join(store.read(s"${index.table}_buckets"), Seq("band", "bucket"))
-      .select(col("__batch_id"), col("id").as("__corpus_id")).distinct()
-    val dups = cands
-      .join(bsets.select(col(idCol).as("__batch_id"),
-        col("hs").as("__hs_b"), col("sz").as("__sz_b")), "__batch_id")
-      .join(store.read(index.table).select(col("id").as("__corpus_id"),
-        col("hs").as("__hs_c"), col("sz").as("__sz_c")), "__corpus_id")
-      .withColumn("__c", sorted_intersect_count(col("__hs_b"), col("__hs_c")))
-      .filter(jaccardFromCount(col("__c"), col("__sz_b"), col("__sz_c")) >= threshold)
-      .select(col("__batch_id").as(idCol)).distinct()
+    // candidates pair a batch doc (doc_a) with a colliding corpus doc (doc_b)
+    val cands = lshBuckets(bsets, idCol, index.numHashes, index.bands)
+      .withColumnRenamed(idCol, "doc_a")
+      .join(store.read(s"${index.table}_buckets"), Seq("band", "bucket"))
+      .select(col("doc_a"), col("id").as("doc_b")).distinct()
+    val dups = verifyPairs(cands, bsets, idCol, store.read(index.table), "id", threshold)
+      .select(col("doc_a").as(idCol)).distinct()
     batch.filter(col(textCol).isNotNull).join(dups, Seq(idCol), "left_anti")
   }
 
@@ -995,9 +992,9 @@ object Dedup {
    * Plan shape (all shuffles on gram hash / doc id — no pair join ever
    * forms, unlike similarity dedup; spans need only "does this gram occur
    * elsewhere", a groupBy):
-   *   1. per-doc token-hash arrays → positional `n`-gram hashes (same
-   *      hashing contract as [[hashedShingleSets]]: gram = xxhash64 of its
-   *      n token xxhash64s, exact modulo 64-bit collisions — the array is
+   *   1. per-doc token-hash arrays → positional `n`-gram hashes (the
+   *      [[gramHashes]] that [[hashedShingleSets]] uses: gram = xxhash64 of
+   *      its n token xxhash64s, exact modulo 64-bit collisions — the array is
    *      materialized BEFORE the positional explode so Generate cannot
    *      re-run the gram subtree per element);
    *   2. grams held by ≥ 2 distinct docs (one grouped count-distinct);
@@ -1014,11 +1011,10 @@ object Dedup {
       n: Int = 8, withinDoc: Boolean = false): DataFrame = {
     require(n >= 2, s"span gram length must be >= 2: $n")
     val th = col("th")
-    val gramArrays = persistTracked(docs
+    val gramArrays = Caches.track(docs
       .select(col(idCol), transform(TextAnalysis.tokens(col(textCol)), tok => xxhash64(tok)).as("th"))
       .filter(size(th) >= n)
-      .select(col(idCol), transform(sequence(lit(0), size(th) - n),
-        i => xxhash64((1 to n).map(k => element_at(th, i + lit(k))): _*)).as("gs")))
+      .select(col(idCol), gramHashes(th, size(th), n).as("gs")))
     val pos = gramArrays.select(col(idCol), posexplode(col("gs")).as(Seq("pos", "g")))
     // withinDoc = the full Lee-et-al contract (ANY second occurrence marks,
     // including a repeat inside the same document); default marks cross-doc
@@ -1103,7 +1099,7 @@ object Dedup {
     // re-runs the split/explode/hash subtree from the source scan (the
     // house convention for double-consumed exploded frames; released by
     // [[unpersistAll]])
-    val paras = persistTracked(docs.filter(col(textCol).isNotNull)
+    val paras = Caches.track(docs.filter(col(textCol).isNotNull)
       .select(col(idCol), posexplode(split(col(textCol), "\n")).as(Seq("__pos", "__p0")))
       .select(col(idCol), col("__pos"), trim(col("__p0")).as("__p"))
       .filter(length(col("__p")) > 0)

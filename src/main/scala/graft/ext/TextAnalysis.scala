@@ -646,10 +646,8 @@ object TextAnalysis {
    */
   def vocabDivergence(a: DataFrame, b: DataFrame,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    def counts(df: DataFrame, cc: String) =
-      df.select(explode(tokens(col(textCol))).as("__w"))
-        .groupBy("__w").agg(count(lit(1)).as(cc))
-    val joined = counts(a, "__ca").join(counts(b, "__cb"), Seq("__w"), "full_outer")
+    val joined = tokenCounts(a, textCol, "__ca")
+      .join(tokenCounts(b, textCol, "__cb"), Seq("__w"), "full_outer")
       .select(coalesce(col("__ca"), lit(0L)).as("__ca"),
         coalesce(col("__cb"), lit(0L)).as("__cb"))
     val tot = joined.agg(sum(col("__ca")).as("__na"), sum(col("__cb")).as("__nb"),
@@ -662,6 +660,13 @@ object TextAnalysis {
         round(sum(q * log(q / p)), 6).as("kl_ba"),
         round((sum(p * log(p / m)) + sum(q * log(q / m))) / lit(2.0), 6).as("js"))
   }
+
+  /** The corpus token-count table `(__w, <countCol>)`: one row per distinct
+    * whitespace token of `df`'s `textCol` with its occurrence count — one
+    * explode and one token-keyed grouped count (vocab-sized output). */
+  private def tokenCounts(df: DataFrame, textCol: String, countCol: String): DataFrame =
+    df.select(explode(tokens(col(textCol))).as("__w"))
+      .groupBy("__w").agg(count(lit(1)).as(countCol))
 
   /**
    * Per-document Shannon character entropy — the cheap gibberish/binary
@@ -1154,15 +1159,11 @@ object TextAnalysis {
     val t = tokens(col(textCol))
     val tokenHashes = docs.select(col(idCol),
       transform(t, tok => xxhash64(tok)).as("__th"), size(t).as("__nt"))
-    val th = col("__th")
-    val grams = when(col("__nt") >= n,
-        transform(sequence(lit(0), col("__nt") - n),
-          i => xxhash64((1 to n).map(k => element_at(th, i + lit(k))): _*)))
-      .otherwise(array(xxhash64(th)))
     tokenHashes.select(col(idCol),
         when(col("__nt") >= n, col("__nt") - (n - 1)).otherwise(lit(1))
           .cast("int").as("n_grams"),
-        size(array_distinct(grams)).as("n_distinct_grams"))
+        size(array_distinct(Dedup.gramHashes(col("__th"), col("__nt"), n)))
+          .as("n_distinct_grams"))
       .withColumn("dup_gram_ratio",
         lit(1.0) - col("n_distinct_grams").cast("double") / col("n_grams"))
   }
@@ -1216,28 +1217,6 @@ object TextAnalysis {
       Ipv4Pattern, "<IP>")
 
   /**
-   * Cross-corpus n-gram NOVELTY score — the data-mixing signal "how much of
-   * this document has the reference corpus already seen": per document, the
-   * fraction of its distinct token `n`-grams absent from the reference's
-   * gram set. High novelty ⇒ new content worth keeping; near-zero ⇒
-   * boilerplate / already-covered text (the soft complement to
-   * [[graft.ext.Dedup.decontaminate]]'s hard drop).
-   *
-   * Plan: both sides shingle via [[graft.ext.Dedup.hashedShingleSets]]
-   * (8-byte gram hashes — exact modulo 64-bit collisions, the family-wide
-   * contract), the reference reduces to its DISTINCT grams, and the corpus
-   * explodes its grams once for a semi-join + per-doc count. Everything
-   * shuffles on gram hash / doc id — at 100 TB the reference gram set is a
-   * plain shuffle join side (broadcast when it fits; AQE decides), never a
-   * driver structure. Documents shorter than `n` tokens score their single
-   * whole-doc shingle, matching the shingle contract. NULL text hashes to a
-   * sentinel shingle, so pre-filter NULLs when they shouldn't score.
-   *
-   * Returns `(idCol, n_grams, n_seen, novelty)` with
-   * `novelty = (n_grams − n_seen) / n_grams` (exact IEEE division — the
-   * oracle computes the identical double).
-   */
-  /**
    * Corpus-unigram SURPRISAL — the model-free stand-in for the classic
    * LM-perplexity quality filter: score each document by the average
    * negative log-probability of its tokens under the corpus's own unigram
@@ -1259,13 +1238,29 @@ object TextAnalysis {
    */
   def unigramSurprisal(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     val tok = docs.select(col(idCol), explode(tokens(col(textCol))).as("__w"))
-    val freq = tok.groupBy(col("__w")).agg(count(lit(1)).as("__f"))
+    val freq = tokenCounts(docs, textCol, "__f")
     val total = freq.agg(sum(col("__f")).as("__n"))
     tok.join(freq, Seq("__w"))
       .crossJoin(broadcast(total))
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_tokens"),
         avg(log(col("__n").cast("double") / col("__f").cast("double"))).as("avg_surprisal"))
+  }
+
+  /** Adjacent-token bigram stream `(keep..., __w1, __w2)` — the shared
+    * explode discipline of both bigram LMs: a PLAIN `sequence` exploded and
+    * indexed per emitted row (the [[repetitionTopGram]] generator rule — a
+    * HOF-built pair array exploded inline pays the large data-independent
+    * Generate overhead); docs with < 2 tokens emit nothing. */
+  private def bigramPairs(df: DataFrame, textCol: String,
+      keep: Seq[Column]): DataFrame = {
+    val t = tokens(col(textCol))
+    df.select(keep :+ t.as("__tk") :+ size(t).as("__nt"): _*)
+      .filter(col("__nt") >= 2)
+      .select(keep :+ col("__tk") :+
+        explode(sequence(lit(1), col("__nt") - 1)).as("__i"): _*)
+      .select(keep :+ element_at(col("__tk"), col("__i")).as("__w1") :+
+        element_at(col("__tk"), col("__i") + 1).as("__w2"): _*)
   }
 
   /**
@@ -1297,34 +1292,14 @@ object TextAnalysis {
    * avg(−ln s)`; callers gating against another engine should round it
    * (ln/summation order differ by ulps across libms).
    */
-  /** Adjacent-token bigram stream `(keep..., __w1, __w2)` — the shared
-    * explode discipline of both bigram LMs: a PLAIN `sequence` exploded and
-    * indexed per emitted row (the [[repetitionTopGram]] generator rule — a
-    * HOF-built pair array exploded inline pays the large data-independent
-    * Generate overhead); docs with < 2 tokens emit nothing. */
-  private def bigramPairs(df: DataFrame, textCol: String,
-      keep: Seq[Column]): DataFrame = {
-    val t = tokens(col(textCol))
-    df.select(keep :+ t.as("__tk") :+ size(t).as("__nt"): _*)
-      .filter(col("__nt") >= 2)
-      .select(keep :+ col("__tk") :+
-        explode(sequence(lit(1), col("__nt") - 1)).as("__i"): _*)
-      .select(keep :+ element_at(col("__tk"), col("__i")).as("__w1") :+
-        element_at(col("__tk"), col("__i") + 1).as("__w2"): _*)
-  }
-
   def bigramSurprisal(docs: DataFrame, reference: DataFrame, idCol: String,
       textCol: String, alpha: Double = 0.4): DataFrame = {
     require(alpha > 0.0 && alpha <= 1.0, s"alpha must be in (0, 1]: $alpha")
-    def bigrams(df: DataFrame, keep: Seq[Column]): DataFrame =
-      bigramPairs(df, textCol, keep)
     // both reference count frames are gram-cardinality-sized (far below
     // the corpus) and the unigram frame is consumed three times (totals +
     // two join sides) — cached so the reference text scans once per shape
-    val freq = Caches.track(
-      reference.select(explode(tokens(col(textCol))).as("__w"))
-        .groupBy("__w").agg(count(lit(1)).as("__c")))
-    val refBg = bigrams(reference, Nil)
+    val freq = Caches.track(tokenCounts(reference, textCol, "__c"))
+    val refBg = bigramPairs(reference, textCol, Nil)
       .groupBy("__w1", "__w2").agg(count(lit(1)).as("__cb"))
     val totals = freq.agg(sum(col("__c")).as("__n"), count(lit(1)).as("__v"))
     val s = when(col("__cb").isNotNull,
@@ -1332,7 +1307,7 @@ object TextAnalysis {
       .otherwise(lit(alpha) *
         ((coalesce(col("__c2"), lit(0L)) + lit(1L)).cast("double") /
           (col("__n") + col("__v")).cast("double")))
-    bigrams(docs, Seq(col(idCol)))
+    bigramPairs(docs, textCol, Seq(col(idCol)))
       .join(graft.ops.Ops.hintIfSmall(refBg), Seq("__w1", "__w2"), "left_outer")
       .join(graft.ops.Ops.hintIfSmall(
         freq.select(col("__w").as("__w1"), col("__c").as("__c1"))), Seq("__w1"), "left_outer")
@@ -1433,18 +1408,12 @@ object TextAnalysis {
       minCount: Long = 5L, topK: Int = 50): DataFrame = {
     require(minCount >= 1, s"minCount must be >= 1: $minCount")
     require(topK > 0, s"topK must be positive: $topK")
-    val t = tokens(col(textCol))
     // unigram counts consumed three times (totals + two join sides)
-    val uni = Caches.track(
-      docs.select(explode(t).as("__w")).groupBy("__w").agg(count(lit(1)).as("__c")))
+    val uni = Caches.track(tokenCounts(docs, textCol, "__c"))
     // cached: consumed twice (the N_bi total and the ranked path) — without
     // it the corpus-wide bigram explode + groupBy runs once per consumer
-    val bg = Caches.track(docs.select(t.as("__tk"), size(t).as("__nt"))
-      .filter(col("__nt") >= 2)
-      .select(col("__tk"), explode(sequence(lit(1), col("__nt") - 1)).as("__i"))
-      .select(element_at(col("__tk"), col("__i")).as("w1"),
-        element_at(col("__tk"), col("__i") + 1).as("w2"))
-      .groupBy("w1", "w2").agg(count(lit(1)).as("pair_count")))
+    val bg = Caches.track(bigramPairs(docs, textCol, Nil)
+      .groupBy(col("__w1").as("w1"), col("__w2").as("w2")).agg(count(lit(1)).as("pair_count")))
     val totals = bg.agg(sum(col("pair_count")).as("__nb"))
       .crossJoin(uni.agg(sum(col("__c")).as("__nu")))
     val pmi = log(
@@ -1462,6 +1431,28 @@ object TextAnalysis {
       .limit(topK)
   }
 
+  /**
+   * Cross-corpus n-gram NOVELTY score — the data-mixing signal "how much of
+   * this document has the reference corpus already seen": per document, the
+   * fraction of its distinct token `n`-grams absent from the reference's
+   * gram set. High novelty ⇒ new content worth keeping; near-zero ⇒
+   * boilerplate / already-covered text (the soft complement to
+   * [[graft.ext.Dedup.decontaminate]]'s hard drop).
+   *
+   * Plan: both sides shingle via [[graft.ext.Dedup.hashedShingleSets]]
+   * (8-byte gram hashes — exact modulo 64-bit collisions, the family-wide
+   * contract), the reference reduces to its DISTINCT grams, and the corpus
+   * explodes its grams once for a semi-join + per-doc count. Everything
+   * shuffles on gram hash / doc id — at 100 TB the reference gram set is a
+   * plain shuffle join side (broadcast when it fits; AQE decides), never a
+   * driver structure. Documents shorter than `n` tokens score their single
+   * whole-doc shingle, matching the shingle contract. NULL text hashes to a
+   * sentinel shingle, so pre-filter NULLs when they shouldn't score.
+   *
+   * Returns `(idCol, n_grams, n_seen, novelty)` with
+   * `novelty = (n_grams − n_seen) / n_grams` (exact IEEE division — the
+   * oracle computes the identical double).
+   */
   def noveltyScores(docs: DataFrame, reference: DataFrame, idCol: String,
       textCol: String, n: Int = 3): DataFrame = {
     // both shingle frames materialized BEFORE explode — Generate re-evaluates
@@ -1634,9 +1625,8 @@ object TextAnalysis {
     // is referenced twice (scalar totals + the per-token join) — persisted
     // so neither reference re-scans its corpus. A single full-outer vocab
     // frame instead costs a sort-merge join where these cost none.
-    val freqR = Caches.track(tokR.groupBy(col("__w")).agg(count(lit(1)).as("__fr")))
-    val freqT = Caches.track(target.select(explode(tokens(col(textCol))).as("__w"))
-      .groupBy(col("__w")).agg(count(lit(1)).as("__ft")))
+    val freqR = Caches.track(tokenCounts(raw, textCol, "__fr"))
+    val freqT = Caches.track(tokenCounts(target, textCol, "__ft"))
     // N_raw, N_target, and the joint-vocab size in ONE pass over the two
     // cached count frames; travels as a single broadcast row
     val totals = freqR.select(col("__w"), col("__fr").as("__c"), lit(0).as("__t"))

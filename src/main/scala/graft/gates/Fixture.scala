@@ -30,7 +30,7 @@ final class Fixture[A] private (get: (SparkSession, String) => A) {
   def storeCopy(s: SparkSession, d: String, prefix: String)(
       implicit isDir: A <:< String): graft.store.TableStore = {
     val src = Path.of(isDir(apply(s, d)))
-    val dst = Files.createTempDirectory(prefix)
+    val dst = graft.io.TempDirs.create(prefix)
     // the store fixtures are small local trees; copying is milliseconds
     // next to the Spark jobs a rebuild costs
     val walk = Files.walk(src)
@@ -64,7 +64,7 @@ object Fixture {
   def frame(key: String, prefix: String)(
       build: (SparkSession, String) => DataFrame): Fixture[DataFrame] =
     new Fixture((s, d) => s.read.parquet(cached(s"frame:$key:$d") {
-      val dir = Files.createTempDirectory(prefix).toString
+      val dir = graft.io.TempDirs.create(prefix).toString
       build(s, d).write.mode("overwrite").parquet(dir)
       dir
     }))

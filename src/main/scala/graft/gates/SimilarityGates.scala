@@ -19,7 +19,7 @@ object SimilarityGates {
     * grow gate copies the base tree before appending. */
   private def ivfBaseIndex(kind: String): Fixture[String] =
     Fixture(s"ivf:$kind") { (s, d) =>
-      val dir = java.nio.file.Files.createTempDirectory(s"graft-ivf-$kind-base").toString
+      val dir = graft.io.TempDirs.create(s"graft-ivf-$kind-base").toString
       val store = new graft.store.TableStore(s, dir)
       val e = emb(s, d)
       kind match {

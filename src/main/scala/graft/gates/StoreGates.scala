@@ -93,7 +93,7 @@ object StoreGates {
     * in this JVM — created once (lazy val), registered as
     * `derby.system.home` in the same once-guard. */
   private lazy val derbyGateHome: java.nio.file.Path = {
-    val h = java.nio.file.Files.createTempDirectory("graft-derby-gate")
+    val h = graft.io.TempDirs.create("graft-derby-gate")
     if (System.getProperty("derby.system.home") == null)
       System.setProperty("derby.system.home", h.toString)
     h
@@ -108,7 +108,7 @@ object StoreGates {
     * still gets its own copy for isolation. */
   private val o4SourceWarehouseDir =
     Fixture("o4src") { (s, d) =>
-      val dir = java.nio.file.Files.createTempDirectory("graft-o4-src-base").toString
+      val dir = graft.io.TempDirs.create("graft-o4-src-base").toString
       val srcStore = new graft.store.TableStore(s, dir)
       srcStore.atomicOverwrite("events_cu", eventsWithUpdateTs(s, d))
       srcStore.atomicOverwrite("events_plain", events(s, d))
@@ -126,7 +126,7 @@ object StoreGates {
 
   private val o7StoreDir =
     Fixture("o7") { (s, d) =>
-      val dir = java.nio.file.Files.createTempDirectory("graft-o7-base").toString
+      val dir = graft.io.TempDirs.create("graft-o7-base").toString
       val store = new graft.store.TableStore(s, dir,
         graft.store.CommitMode.Pointer, keepGenerations = 3)
       val ord = orders(s, d).select("o_orderkey", "o_custkey", "o_orderstatus")
@@ -138,7 +138,7 @@ object StoreGates {
 
   private val o8StoreDir =
     Fixture("o8") { (s, d) =>
-      val dir = java.nio.file.Files.createTempDirectory("graft-o8-base").toString
+      val dir = graft.io.TempDirs.create("graft-o8-base").toString
       val store = new graft.store.TableStore(s, dir,
         graft.store.CommitMode.Pointer, statsColumns = Seq("o_totalprice"))
       store.atomicOverwriteClustered("ord_sk",
@@ -149,7 +149,7 @@ object StoreGates {
 
   private val o9StoreDir =
     Fixture("o9") { (s, d) =>
-      val dir = java.nio.file.Files.createTempDirectory("graft-o9-base").toString
+      val dir = graft.io.TempDirs.create("graft-o9-base").toString
       val store = new graft.store.TableStore(s, dir,
         graft.store.CommitMode.Pointer, statsColumns = Seq("o_totalprice"))
       val ord = orders(s, d).select(col("o_orderkey"), col("o_custkey"),
@@ -162,7 +162,7 @@ object StoreGates {
   /** o10's staged store plus the published snapshot id the gate reads. */
   private val o10Fixture =
     Fixture("o10") { (s, d) =>
-      val dir = java.nio.file.Files.createTempDirectory("graft-o10-base").toString
+      val dir = graft.io.TempDirs.create("graft-o10-base").toString
       val store = new graft.store.TableStore(s, dir,
         graft.store.CommitMode.Pointer, keepGenerations = 3)
       val cust = customer(s, d).select("c_custkey", "c_name", "c_acctbal")
@@ -177,7 +177,7 @@ object StoreGates {
 
   private val o11StoreDir =
     Fixture("o11") { (s, d) =>
-      val dir = java.nio.file.Files.createTempDirectory("graft-o11-base").toString
+      val dir = graft.io.TempDirs.create("graft-o11-base").toString
       val store = new graft.store.TableStore(s, dir,
         graft.store.CommitMode.Pointer, statsColumns = Seq("o_orderkey", "o_custkey"))
       store.atomicOverwriteZOrdered("ord_z2",
@@ -188,7 +188,7 @@ object StoreGates {
 
   private val o12StoreDir =
     Fixture("o12") { (s, d) =>
-      val dir = java.nio.file.Files.createTempDirectory("graft-o12-base").toString
+      val dir = graft.io.TempDirs.create("graft-o12-base").toString
       val store = new graft.store.TableStore(s, dir,
         graft.store.CommitMode.Pointer, keepGenerations = 3)
       val ord = orders(s, d).select("o_orderkey", "o_custkey", "o_orderstatus")
@@ -200,7 +200,7 @@ object StoreGates {
 
   private val o12pStoreDir =
     Fixture("o12p") { (s, d) =>
-      val dir = java.nio.file.Files.createTempDirectory("graft-o12p-base").toString
+      val dir = graft.io.TempDirs.create("graft-o12p-base").toString
       val store = new graft.store.TableStore(s, dir,
         graft.store.CommitMode.Pointer, keepGenerations = 3)
       val ord = orders(s, d).select(col("o_orderkey"), col("o_custkey"),
@@ -222,7 +222,7 @@ object StoreGates {
     * before the two commits the change feed must drain). */
   private val o13Fixture =
     Fixture("o13") { (s, d) =>
-      val dir = java.nio.file.Files.createTempDirectory("graft-o13-base").toString
+      val dir = graft.io.TempDirs.create("graft-o13-base").toString
       val store = new graft.store.TableStore(s, dir,
         graft.store.CommitMode.Pointer, keepGenerations = 4)
       val ord = orders(s, d).select("o_orderkey", "o_custkey", "o_orderstatus")
@@ -344,7 +344,7 @@ object StoreGates {
       // phases run fresh against a fresh target store every time.
       val srcStore = o4SourceWarehouseDir.storeCopy(s, d, "graft-o4-src")
       val tgtStore = new graft.store.TableStore(s,
-        java.nio.file.Files.createTempDirectory("graft-o4-tgt").toString)
+        graft.io.TempDirs.create("graft-o4-tgt").toString)
       val clock = () => java.time.LocalDateTime.of(2024, 6, 1, 12, 0)
       val ledger = new graft.ledger.Ledger(s, tgtStore, clock = clock)
       val cfg = graft.config.EngineConfig(
@@ -407,7 +407,7 @@ object StoreGates {
     // read path (S6/S9 storage extension), not one arbitrary footer's view
     Gate("o5_evolved_read", ((s, d) => {
       val store = new graft.store.TableStore(s,
-        java.nio.file.Files.createTempDirectory("graft-o5").toString)
+        graft.io.TempDirs.create("graft-o5").toString)
       val ord = orders(s, d)
       store.atomicOverwrite("orders_evolving",
         ord.filter(col("o_orderkey") % 2 === 0).select("o_orderkey", "o_custkey"))
@@ -429,7 +429,7 @@ object StoreGates {
     // oracle is simply the reconstructed row set.
     Gate("o6_pointer_commit", ((s, d) => {
       val store = new graft.store.TableStore(s,
-        java.nio.file.Files.createTempDirectory("graft-o6").toString,
+        graft.io.TempDirs.create("graft-o6").toString,
         graft.store.CommitMode.Pointer)
       val ord = orders(s, d).select("o_orderkey", "o_custkey", "o_orderstatus")
       store.atomicOverwrite("ord_ptr", ord.filter(col("o_orderkey") % 2 === 0))
@@ -613,7 +613,7 @@ object StoreGates {
     // NULLs, and int widths all ride the gate hash
     Gate("o14_export_jsonl", ((s, d) => {
       val doc = docs(s, d)
-      val dir = java.nio.file.Files.createTempDirectory("graft-jsonl").toString + "/docs"
+      val dir = graft.io.TempDirs.create("graft-jsonl").toString + "/docs"
       graft.io.Export.jsonlShards(doc, dir, maxRecordsPerShard = 100,
         compression = Some("gzip"))
       graft.io.Export.readJsonl(s, dir, doc.schema)
@@ -627,7 +627,7 @@ object StoreGates {
     // already diverge on the fixture's multibyte text)
     Gate("o17_ingest_wet", ((s, d) => {
       val doc = docs(s, d).filter(col("text").isNotNull)
-      val dir = java.nio.file.Files.createTempDirectory("graft-wet").toString + "/wet"
+      val dir = graft.io.TempDirs.create("graft-wet").toString + "/wet"
       graft.io.Warc.writeWet(doc.select(
           concat(lit("urn:graft:doc:"), col("doc_id")).as("uri"),
           lit("2024-01-01T00:00:00Z").as("wdate"),
@@ -644,7 +644,7 @@ object StoreGates {
     // source under the same identity oracle the a-gates use
     Gate("o16_export_orc", ((s, d) => {
       val ev = events(s, d)
-      val dir = java.nio.file.Files.createTempDirectory("graft-orc").toString + "/ev"
+      val dir = graft.io.TempDirs.create("graft-orc").toString + "/ev"
       graft.io.Export.orcShards(ev, dir, maxRecordsPerShard = 2000,
         compression = Some("zstd"))
       graft.io.Export.readOrc(s, dir)
@@ -655,7 +655,7 @@ object StoreGates {
     // exactly — same identity oracle as the JSONL gate
     Gate("o15_export_csv", ((s, d) => {
       val doc = docs(s, d)
-      val dir = java.nio.file.Files.createTempDirectory("graft-csv").toString + "/docs"
+      val dir = graft.io.TempDirs.create("graft-csv").toString + "/docs"
       graft.io.Export.csvShards(doc, dir, maxRecordsPerShard = 100,
         compression = Some("gzip"))
       graft.io.Export.readCsv(s, dir, doc.schema)

@@ -96,7 +96,7 @@ object StreamGates {
   /** stream_cdc_apply's staged change files (base images + seq=1 updates). */
   private val cdcInputDir =
     Fixture("cdcin") { (s, d) =>
-      val dir = java.nio.file.Files.createTempDirectory("graft-cdc-in").toString
+      val dir = graft.io.TempDirs.create("graft-cdc-in").toString
       val base = events(s, d).withColumn("seq", lit(0L))
       base.write.parquet(s"$dir/f0")
       base.filter(col("event_id") % 10 === 0)
@@ -109,7 +109,7 @@ object StreamGates {
   /** stream_cms_merge's staged corpus halves. */
   private val cmsInputDir =
     Fixture("cmsin") { (s, d) =>
-      val dir = java.nio.file.Files.createTempDirectory("graft-cms-in").toString
+      val dir = graft.io.TempDirs.create("graft-cms-in").toString
       val doc = docs(s, d)
       doc.filter(pmod(col("doc_id"), lit(2)) === 0).coalesce(1)
         .write.parquet(s"$dir/h0")
@@ -122,7 +122,7 @@ object StreamGates {
     * single-file slices, one micro-batch each under maxFilesPerTrigger=1). */
   private val ingestInputDir =
     Fixture("ingestin") { (s, d) =>
-      val root = java.nio.file.Files.createTempDirectory("graft-ingest-base")
+      val root = graft.io.TempDirs.create("graft-ingest-base")
       val in = root.resolve("in")
       java.nio.file.Files.createDirectories(in)
       val doc = docs(s, d)
@@ -145,7 +145,7 @@ object StreamGates {
     * JVM — the drain-advancing append is a file copy per invocation. */
   private val sessionSentinelFile =
     Fixture("sentinel") { (s, d) =>
-      val dir = java.nio.file.Files.createTempDirectory("graft-sess-sent")
+      val dir = graft.io.TempDirs.create("graft-sess-sent")
       val src = s.read.parquet(s"$d/events.parquet")
       val tsType = src.schema("ts").dataType
       val plusDay = tsType match {
@@ -249,7 +249,7 @@ object StreamGates {
     // (a memory sink would drop drain 1's rows on re-registration).
     Gate("stream_sessions", ((s, d) => withStatePartitions(s, 8) {
       import org.apache.spark.sql.streaming.Trigger
-      val tmp = java.nio.file.Files.createTempDirectory("graft-stream-sess")
+      val tmp = graft.io.TempDirs.create("graft-stream-sess")
       val in = tmp.resolve("in")
       java.nio.file.Files.createDirectories(in)
       stageEvents(d, in, "events")
@@ -316,7 +316,7 @@ object StreamGates {
     Gate("stream_dedup", ((s, d) => withStatePartitions(s, 8) {
       import org.apache.spark.sql.streaming.Trigger
       s.catalog.dropTempView("stream_dd")
-      val tmp = java.nio.file.Files.createTempDirectory("graft-stream-dedup")
+      val tmp = graft.io.TempDirs.create("graft-stream-dedup")
       val in = tmp.resolve("in")
       java.nio.file.Files.createDirectories(in)
       stageEvents(d, in, "f0")
@@ -339,7 +339,7 @@ object StreamGates {
     // duplicate keys regardless of how AvailableNow batches the files.
     Gate("stream_cdc_apply", ((s, d) => withStatePartitions(s, 8) {
       import org.apache.spark.sql.streaming.Trigger
-      val tmp = java.nio.file.Files.createTempDirectory("graft-stream-cdc")
+      val tmp = graft.io.TempDirs.create("graft-stream-cdc")
       val store = new graft.store.TableStore(s, s"$tmp/store")
       // staged change files from the per-JVM fixture cache (r20 wave 2):
       // input staging is not the operator; the streaming upsert below
@@ -368,7 +368,7 @@ object StreamGates {
     // as the batch gate); the probe then runs against the MERGED sketch
     Gate("stream_cms_merge", ((s, d) => withStatePartitions(s, 8) {
       import org.apache.spark.sql.streaming.Trigger
-      val tmp = java.nio.file.Files.createTempDirectory("graft-stream-cms")
+      val tmp = graft.io.TempDirs.create("graft-stream-cms")
       val store = new graft.store.TableStore(s, s"$tmp/store")
       val doc = docs(s, d)
       // staged corpus halves from the per-JVM fixture cache (r20 wave 2):

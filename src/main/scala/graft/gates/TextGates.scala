@@ -229,7 +229,7 @@ object TextGates {
     * over all documents, table `fts`) — read-only for the search gate. */
   private val bm25FullIndexDir =
     Fixture("bm25full") { (s, d) =>
-      val dir = java.nio.file.Files.createTempDirectory("graft-bm25-idx").toString
+      val dir = graft.io.TempDirs.create("graft-bm25-idx").toString
       TextAnalysis.buildTextIndex(new graft.store.TableStore(s, dir), "fts", docs(s, d))
       dir
     }
@@ -239,7 +239,7 @@ object TextGates {
     * dir before mutating, so the cached base stays pristine. */
   private val bm25BaseIndexDir =
     Fixture("bm25base") { (s, d) =>
-      val dir = java.nio.file.Files.createTempDirectory("graft-bm25-base").toString
+      val dir = graft.io.TempDirs.create("graft-bm25-base").toString
       TextAnalysis.buildTextIndex(new graft.store.TableStore(s, dir), "fts_g",
         docs(s, d).filter(col("doc_id") < 250))
       dir

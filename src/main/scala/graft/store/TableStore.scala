@@ -1216,12 +1216,13 @@ final class TableStore(spark: SparkSession, root: String,
     * own atomically-published generation (the manifest accumulates dirs;
     * [[compact]] folds them).
     *
-    * Cache hazard: a rename-mode append writes into the live table dir, so
-    * Spark refreshes every cached frame whose plan reads that table, and
-    * the next use recomputes it from scratch. A caller that reuses a frame
-    * derived from the table across appends must `localCheckpoint` it
-    * instead (see [[graft.ext.Dedup.appendToLshIndex]]). A pointer-mode
-    * append writes a fresh `_gen-*` dir and refreshes nothing. */
+    * Cache hazard: a rename-mode append, plain or keyed
+    * ([[appendIdempotent]]), changes the live table dir, so Spark refreshes
+    * every cached frame whose plan reads that table, and the next use
+    * recomputes it from scratch. A caller that reuses a frame derived from
+    * the table across appends must `localCheckpoint` it instead (see
+    * [[graft.ext.Dedup.appendToLshIndex]]). A pointer-mode append writes a
+    * fresh `_gen-*` dir and refreshes nothing. */
   def append(table: String, df: DataFrame): Unit = {
     refuseIfCatalogBucketed(table, "append")
     if (!pointerMode) {
@@ -1384,6 +1385,9 @@ final class TableStore(spark: SparkSession, root: String,
         if (!writeSidecar(marker, "idem", Seq(Seq("key", k)), exclusive = true))
           throw new ConcurrentWriteException(
             s"appendIdempotent('$table'): key $k was committed concurrently")
+        // the files arrived by rename, which Spark never sees: refresh the
+        // cached plans over the table as a plain append's write does
+        spark.catalog.refreshByPath(dir.toString)
         true
       } finally fs.delete(lock, false)
     }

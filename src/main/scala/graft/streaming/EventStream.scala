@@ -204,11 +204,7 @@ object EventStream {
       pk: String, orderCol: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     events.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(pk).orderBy(col(orderCol).desc)
-      val rn = graft.ops.Ops.freshName(batch.columns.toSet, "__rn")
-      val fresh = batch.withColumn(rn, row_number().over(w))
-        .filter(col(rn) === 1).drop(rn)
+      val fresh = latestPerKey(batch, pk, orderCol)
       // upsertExact, not upsert: the audit-dropping copy contract would strip
       // a CDC pk named 'id' (or a data column named 'insert_datetime') from
       // every batch after the first, diverging from the create path's schema
@@ -220,6 +216,15 @@ object EventStream {
         graft.ops.Ops.upsertExact(store.readEvolved(table), fresh, pk, fresh.select(pk)))
       ()
     }
+
+  /** Last-write-wins per key: each `pk`'s row with the greatest
+    * `orderCol` (ties resolve arbitrarily), via a `row_number` window under
+    * a temp name absent from the batch. */
+  private def latestPerKey(batch: DataFrame, pk: String, orderCol: String): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window.partitionBy(pk).orderBy(col(orderCol).desc)
+    val rn = graft.ops.Ops.freshName(batch.columns.toSet, "__rn")
+    batch.withColumn(rn, row_number().over(w)).filter(col(rn) === 1).drop(rn)
+  }
 
   /**
    * Partition-scoped micro-batch CDC apply — the FACT-sized form of
@@ -246,13 +251,9 @@ object EventStream {
     require(events.schema(partCol).dataType == org.apache.spark.sql.types.DateType,
       s"upsertIntoPartitions: $partCol must be DATE, is ${events.schema(partCol).dataType}")
     events.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(pk).orderBy(col(orderCol).desc)
-      val rn = graft.ops.Ops.freshName(batch.columns.toSet, "__rn")
       // persisted: the deduped batch feeds TWO jobs (the day collect and the
       // partition write) — without it the window recomputes per job
-      val fresh = batch.withColumn(rn, row_number().over(w))
-        .filter(col(rn) === 1).drop(rn).persist()
+      val fresh = latestPerKey(batch, pk, orderCol).persist()
       try {
         // day list is bounded by the batch's event-time span, not its rows.
         // A NULL day has no partition to live in — fail the batch loudly

@@ -1,7 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path}
-import java.util.concurrent.ConcurrentLinkedQueue
+import java.nio.file.Path
 
 import org.apache.spark.sql.SparkSession
 
@@ -14,14 +13,6 @@ object TestSpark {
   }
   val Sf0001 = "/root/testdata/sf0.001"
 
-  private val tempDirs = new ConcurrentLinkedQueue[Path]()
-
-  // priority 20 runs after Spark's own shutdown hook (40), so the session
-  // has stopped writing into these dirs before they go, and before Hadoop
-  // closes its filesystems (10)
-  org.apache.hadoop.util.ShutdownHookManager.get().addShutdownHook(
-    () => tempDirs.forEach(d => org.apache.commons.io.FileUtils.deleteQuietly(d.toFile)), 20)
-
   /** Block until the listener bus has delivered every event posted so far,
     * so a listener's counts cover every job already run (`listenerBus` is
     * Spark-private, hence the reflection). */
@@ -32,9 +23,5 @@ object TestSpark {
   }
 
   /** A fresh temp dir, deleted recursively when the test JVM ends. */
-  def tempDir(prefix: String): Path = {
-    val d = Files.createTempDirectory(prefix)
-    tempDirs.add(d)
-    d
-  }
+  def tempDir(prefix: String): Path = graft.io.TempDirs.create(prefix)
 }

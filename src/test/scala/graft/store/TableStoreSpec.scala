@@ -1319,6 +1319,19 @@ class TableStoreSpec extends AnyFunSuite {
     assert(store.read("t").count() == 3)
   }
 
+  test("a keyed rename-mode append refreshes cached reads of the table, like a plain append") {
+    val store = freshStore()
+    store.atomicOverwrite("t", Seq((1, "a")).toDF("k", "v"))
+    val cached = store.read("t").cache()
+    try {
+      assert(cached.count() == 1)
+      assert(store.appendIdempotent("t", Seq((2, "b")).toDF("k", "v"), "b0"))
+      assert(store.read("t").count() == 2, "a read after a keyed append returned the cached rows")
+      store.append("t", Seq((3, "c")).toDF("k", "v"))
+      assert(store.read("t").count() == 3, "a read after a plain append returned the cached rows")
+    } finally cached.unpersist()
+  }
+
   test("appendIdempotent: same key commits once, distinct keys accumulate (pointer mode)") {
     val store = new TableStore(spark,
       TestSpark.tempDir("graft-ptr-idem").toString, CommitMode.Pointer)
