@@ -42,22 +42,35 @@ private[graft] object Caches {
     * .unpersist` on a checkpointed frame is a NO-OP — it goes through the
     * CacheManager while the checkpoint persists at the RDD level — so
     * releasing one means unpersisting the `LogicalRDD` leaf's RDD. */
-  private def checkpointRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
+  private[ext] def checkpointRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
     df.queryExecution.analyzed.collectFirst {
       case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
     }
 
-  /** Eagerly release a frame produced by [[trackCheckpoint]] (or any bare
-    * `localCheckpoint()`) — the release path iterative builders use when
-    * they collapse lineage round over round. */
+  /** Eagerly release a frame produced by [[checkpoint]] — the release path
+    * iterative builders use when they collapse lineage round over round. A
+    * durable checkpoint holds no blocks, so this is a no-op for it. */
   def releaseCheckpoint(df: DataFrame): Unit =
     checkpointRdd(df).foreach(_.unpersist(blocking = false))
 
-  /** Eager `localCheckpoint` tracked for REAL release by [[unpersistAll]]:
-    * materializes the frame once and replaces its plan with a leaf
-    * `LogicalRDD`, so downstream re-plans (iterative-trainer steps, probe
-    * loops) stop paying per-iteration analysis of the full build lineage. */
-  def trackCheckpoint(df: DataFrame): DataFrame = registerCheckpoint(df.localCheckpoint())
+  /** The one checkpoint rule of `graft.ext`: an eager checkpoint that
+    * materializes `df` once and replaces its plan with a leaf `LogicalRDD`.
+    * With `sc.setCheckpointDir` configured (the cluster-run toggle) it is
+    * DURABLE — written to that storage, so a lost executor re-reads it
+    * instead of re-running the lineage or killing the job (Spark deletes
+    * the files only under `spark.cleaner.referenceTracking.cleanCheckpoints
+    * =true`; clean the dir periodically otherwise). Without one it is a
+    * `localCheckpoint`: blocks on the executors, fastest, and the accepted
+    * single-box trade (executor loss = rerun the operator). */
+  def checkpoint(df: DataFrame): DataFrame =
+    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(true)
+    else df.localCheckpoint(true)
+
+  /** [[checkpoint]] tracked for REAL release by [[unpersistAll]]: the frame
+    * is materialized once, so downstream re-plans (iterative-trainer steps,
+    * probe loops, an eager operator's several reads of its input) stop
+    * re-running and re-analysing the full build lineage. */
+  def trackCheckpoint(df: DataFrame): DataFrame = registerCheckpoint(checkpoint(df))
 
   /** Record an ALREADY-checkpointed frame for release by [[unpersistAll]] —
     * for iterative builders that truncate lineage round over round, release

@@ -228,7 +228,7 @@ object Classifier {
       s"optimizer must be adagrad|adam|newton|auto: $optimizer")
     val spark = data.sparkSession
     import spark.implicits._
-    // localCheckpoint, not cache: per-step plans embed the training frame's
+    // checkpoint, not cache: per-step plans embed the training frame's
     // logical tree, so with a plain cache every one of `steps` driver-side
     // re-plans re-analyzes the full feature-build lineage — bounded here,
     // but it grows with whatever pipeline feeds `data`. The checkpoint swaps

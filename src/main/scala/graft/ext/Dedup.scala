@@ -438,12 +438,12 @@ object Dedup {
     // several times, so without truncation the logical plan grows ~5× per
     // round and Catalyst analysis goes exponential across rounds (persist
     // only short-circuits execution, not plan analysis — the same reason
-    // GraphFrames checkpoints its CC loop). Two modes, per [[truncate]]:
-    // localCheckpoint on a single box (fastest; executor loss = rerun the
-    // operator), durable checkpoint when the session has a checkpoint dir
-    // configured — the cluster toggle that makes a 21-round job survive
-    // executor loss instead of dying with one.
-    var cur = truncate(p.select(greatest(col("a"), col("b")).as("child"),
+    // GraphFrames checkpoints its CC loop). Two modes, per
+    // [[Caches.checkpoint]]: localCheckpoint on a single box, durable
+    // checkpoint when the session has a checkpoint dir configured — the
+    // cluster toggle that makes a 21-round job survive executor loss
+    // instead of dying with one.
+    var cur = Caches.checkpoint(p.select(greatest(col("a"), col("b")).as("child"),
         least(col("a"), col("b")).as("parent"))
       .filter(col("child") =!= col("parent")).distinct())
     // one aggregation doubles as the round's materialization AND its
@@ -485,8 +485,8 @@ object Dedup {
       // the large-star output feeds small-star's neighborhood build through
       // several plan references — truncate its lineage too, or the round's
       // plan squares before the next truncation
-      val ls = truncate(starPhase(cur, large = true))
-      val next = truncate(starPhase(ls, large = false))
+      val ls = Caches.checkpoint(starPhase(cur, large = true))
+      val next = Caches.checkpoint(starPhase(ls, large = false))
       val nsig = signature(next) // cheap: the plan is a checkpoint scan
       converged = nsig == sig
       sig = nsig
@@ -521,19 +521,6 @@ object Dedup {
     * (a chain must converge in ~log rounds, not diameter: `DedupSpec` pins
     * a 512-link chain; BASELINE.md records 21 rounds on a 1 M-link path). */
   val lastDistributedRounds = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  /** Eager lineage truncation for the CC fixpoint. With
-    * `sc.setCheckpointDir` configured (the cluster-run toggle), rounds
-    * checkpoint DURABLY to that storage — a lost executor recomputes from
-    * the checkpoint instead of killing the whole multi-round job (durable
-    * checkpoint files are cleaned by Spark only when
-    * `spark.cleaner.referenceTracking.cleanCheckpoints=true`; clean the dir
-    * periodically otherwise). Without one, `localCheckpoint` keeps blocks
-    * on executors: fastest, and the accepted single-box trade (executor
-    * loss = rerun the operator). */
-  private def truncate(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(true)
-    else df.localCheckpoint(true)
 
   /** Driver-side union-find over a collected edge list (the small-graph fast
     * path of [[connectedComponents]]). Union-by-min-root + path halving: the
@@ -733,7 +720,7 @@ object Dedup {
    * they travel in the meta table and are never re-specified here).
    *
    * Scale shape: the batch's shingle sets are materialized ONCE (a
-   * tracked `localCheckpoint`, released by [[unpersistAll]]) and both
+   * tracked [[Caches.checkpoint]], released by [[unpersistAll]]) and both
    * appends read that checkpoint. A cached frame would not do: a plain
    * rename-mode append into the index refreshes every cached plan that
    * reads it — [[dedupeAgainstLshIndex]]'s survivors read both segment

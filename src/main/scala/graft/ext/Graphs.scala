@@ -90,10 +90,7 @@ object Graphs {
       nodes.join(trans.select(col("__src").as("node")), Seq("node"), "left_anti"))
     val n: Long = nodes.count() // ONE driver scalar: the node count
     val hasDangling = !dangling.isEmpty
-    def truncate(df: DataFrame): DataFrame =
-      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(true)
-      else df.localCheckpoint(true)
-    var ranks = truncate(nodes.select(col("node"), lit(1.0 / n).as("rank")))
+    var ranks = Caches.checkpoint(nodes.select(col("node"), lit(1.0 / n).as("rank")))
     for (_ <- 1 to iterations) {
       val dm: Double =
         if (!hasDangling) 0.0
@@ -102,7 +99,7 @@ object Graphs {
       val contrib = ranks.join(trans, col("node") === col("__src"))
         .groupBy(col("__dst").as("node"))
         .agg(sum(col("rank") * col("__p")).as("__c"))
-      val next = truncate(nodes.join(contrib, Seq("node"), "left_outer")
+      val next = Caches.checkpoint(nodes.join(contrib, Seq("node"), "left_outer")
         .select(col("node"),
           (lit((1.0 - damping) / n) +
             lit(damping) * (coalesce(col("__c"), lit(0.0)) + lit(dm / n)))
@@ -161,10 +158,7 @@ object Graphs {
       .select(col("node"),
         when(col("__isSeed").isNotNull, lit(1.0 / sN)).otherwise(lit(0.0)).as("__tp")))
     val hasDangling = !dangling.isEmpty
-    def truncate(df: DataFrame): DataFrame =
-      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(true)
-      else df.localCheckpoint(true)
-    var ranks = truncate(spine.select(col("node"), col("__tp").as("rank")))
+    var ranks = Caches.checkpoint(spine.select(col("node"), col("__tp").as("rank")))
     for (_ <- 1 to iterations) {
       val dm: Double =
         if (!hasDangling) 0.0
@@ -173,7 +167,7 @@ object Graphs {
       val contrib = ranks.join(trans, col("node") === col("__src"))
         .groupBy(col("__dst").as("node"))
         .agg(sum(col("rank") * col("__p")).as("__c"))
-      val next = truncate(spine.join(contrib, Seq("node"), "left_outer")
+      val next = Caches.checkpoint(spine.join(contrib, Seq("node"), "left_outer")
         .select(col("node"),
           (lit(1.0 - damping) * col("__tp") +
             lit(damping) * (coalesce(col("__c"), lit(0.0)) + lit(dm) * col("__tp")))
@@ -228,16 +222,13 @@ object Graphs {
       return localHits(merged, iterations)
     val nodes = nodeSpine(merged)
     val n: Long = nodes.count()
-    def truncate(df: DataFrame): DataFrame =
-      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(true)
-      else df.localCheckpoint(true)
-    var hub = truncate(nodes.select(col("node"), lit(1.0 / n).as("hub")))
-    var auth = truncate(nodes.select(col("node"), lit(0.0).as("authority")))
+    var hub = Caches.checkpoint(nodes.select(col("node"), lit(1.0 / n).as("hub")))
+    var auth = Caches.checkpoint(nodes.select(col("node"), lit(0.0).as("authority")))
     for (_ <- 1 to iterations) {
       val aRaw = hub.join(merged, col("node") === col("__src"))
         .groupBy(col("__dst").as("node")).agg(sum(col("hub") * col("__w")).as("__c"))
       val aSum = aRaw.agg(coalesce(sum("__c"), lit(0.0))).head().getDouble(0)
-      val aNext = truncate(nodes.join(aRaw, Seq("node"), "left_outer")
+      val aNext = Caches.checkpoint(nodes.join(aRaw, Seq("node"), "left_outer")
         .select(col("node"),
           (if (aSum == 0.0) lit(0.0)
            else coalesce(col("__c"), lit(0.0)) / lit(aSum)).as("authority")))
@@ -246,7 +237,7 @@ object Graphs {
       val hRaw = auth.join(merged, col("node") === col("__dst"))
         .groupBy(col("__src").as("node")).agg(sum(col("authority") * col("__w")).as("__c"))
       val hSum = hRaw.agg(coalesce(sum("__c"), lit(0.0))).head().getDouble(0)
-      val hNext = truncate(nodes.join(hRaw, Seq("node"), "left_outer")
+      val hNext = Caches.checkpoint(nodes.join(hRaw, Seq("node"), "left_outer")
         .select(col("node"),
           (if (hSum == 0.0) lit(0.0)
            else coalesce(col("__c"), lit(0.0)) / lit(hSum)).as("hub")))
@@ -322,12 +313,9 @@ object Graphs {
         .repartition(col("__nbr")))
     if (und.count() <= localEdgeLimit)
       return localLabelPropagation(und, iterations)
-    def truncate(df: DataFrame): DataFrame =
-      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(true)
-      else df.localCheckpoint(true)
     // every node has ≥1 undirected edge (dropped-edge endpoints are not
     // nodes), so the per-round argmax already covers the whole spine
-    var labels = truncate(und.select(col("node")).distinct()
+    var labels = Caches.checkpoint(und.select(col("node")).distinct()
       .select(col("node"), col("node").as("__label")))
     for (_ <- 1 to iterations) {
       val votes = und.join(labels.select(col("node").as("__ln"), col("__label")),
@@ -335,7 +323,7 @@ object Graphs {
         .groupBy(col("node"), col("__label")).agg(sum("__w").as("__wsum"))
       val pick = Window.partitionBy("node")
         .orderBy(col("__wsum").desc, col("__label").asc)
-      val next = truncate(votes
+      val next = Caches.checkpoint(votes
         .withColumn("__rn", row_number().over(pick))
         .filter(col("__rn") === 1).select(col("node"), col("__label")))
       Caches.releaseCheckpoint(labels)
@@ -486,14 +474,11 @@ object Graphs {
       val localSeeds = inGraph.collect().map(_.get(0)).toSet
       return localDistances(merged, localSeeds, rounds)
     }
-    def truncate(df: DataFrame): DataFrame =
-      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(true)
-      else df.localCheckpoint(true)
-    var dist = truncate(inGraph.select(col("node"), lit(0).as("dist")))
+    var dist = Caches.checkpoint(inGraph.select(col("node"), lit(0).as("dist")))
     for (_ <- 1 to rounds) {
       val step = dist.join(merged, col("node") === col("__src"))
         .select(col("__dst").as("node"), (col("dist") + 1).as("dist"))
-      dist = truncate(dist.unionAll(step).groupBy("node").agg(min("dist").as("dist")))
+      dist = Caches.checkpoint(dist.unionAll(step).groupBy("node").agg(min("dist").as("dist")))
     }
     dist
   }
@@ -646,17 +631,14 @@ object Graphs {
     require(rounds >= 1 && rounds <= 64, s"rounds must be in [1,64]: $rounds")
     val e0 = cleanedEdges(edges, srcCol, dstCol, None)
       .filter(col("__src") =!= col("__dst"))
-    def truncate(df: DataFrame): DataFrame =
-      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(true)
-      else df.localCheckpoint(true)
-    var cur = truncate(e0.select(least(col("__src"), col("__dst")).as("a"),
+    var cur = Caches.checkpoint(e0.select(least(col("__src"), col("__dst")).as("a"),
       greatest(col("__src"), col("__dst")).as("b")).distinct())
     def degrees(e: DataFrame): DataFrame =
       e.select(col("a").as("node")).unionAll(e.select(col("b")))
         .groupBy("node").agg(count(lit(1)).as("dg"))
     for (_ <- 1 to rounds) {
       val keep = degrees(cur).filter(col("dg") >= k).select("node")
-      val next = truncate(cur
+      val next = Caches.checkpoint(cur
         .join(keep.withColumnRenamed("node", "a"), Seq("a"), "left_semi")
         .join(keep.withColumnRenamed("node", "b"), Seq("b"), "left_semi"))
       Caches.releaseCheckpoint(cur)

@@ -374,8 +374,7 @@ object Profiling {
   def zipfFit(docs: DataFrame, textCol: String = "text",
       topRanks: Int = 100): DataFrame = {
     require(topRanks >= 3, s"zipfFit needs >= 3 ranks for a fit: $topRanks")
-    val cnt = docs.select(explode(TextAnalysis.tokens(col(textCol))).as("__w"))
-      .groupBy(col("__w")).agg(count(lit(1)).as("__c"))
+    val cnt = TextAnalysis.tokenCounts(docs, textCol, "__c")
     val top = cnt.orderBy(col("__c").desc, col("__w").asc).limit(topRanks)
     val xy = graft.ops.Ops.globalOrdinals(top,
         Seq(col("__c").desc, col("__w").asc), 1, "__ord")

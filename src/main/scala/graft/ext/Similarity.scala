@@ -139,21 +139,26 @@ object Similarity {
     * the right plan shape at any corpus size as long as the query batch is
     * small; for large query batches, chunk the queries and union. */
   private def scoredGrid(corpus: DataFrame, queries: DataFrame, idCol: String,
-      vecCol: String): DataFrame = {
-    val q = broadcast(unitized(queries, idCol, vecCol, "query_id", "qv"))
+      vecCol: String): DataFrame =
     // cached: BroadcastHashJoin codegen defers stream-side column evaluation
     // to per-OUTPUT-row — every query match would re-run the normalize,
     // multiplying its cost by the match fan-out (measured 35× on the IVF
     // path before the equivalent fix there). The persisted projection is the
     // classic built-once similarity index; Caches.unpersistAll releases it.
-    val c = Caches.track(unitized(corpus, idCol, vecCol, "neighbor_id", "cv"))
+    unitGrid(Caches.track(unitized(corpus, idCol, vecCol, "id", "v")), queries, idCol, vecCol)
+
+  /** [[scoredGrid]] over an already-materialized unit corpus `u` (`id`,
+    * `v`) — the form [[hardNegatives]] shares with its pair search. */
+  private def unitGrid(u: DataFrame, queries: DataFrame, idCol: String,
+      vecCol: String): DataFrame = {
+    val q = broadcast(unitized(queries, idCol, vecCol, "query_id", "qv"))
     // project the vectors away BEFORE ranking: carrying two dim-d vectors
     // per scored row makes the ranking payload O(d) per candidate —
     // measured 46× (not the linear 8×) going dim-128 → dim-1024 under the
     // former per-query sort before this projection. The narrow
     // (query_id, neighbor_id, cos) row is 24 bytes at any dimension.
-    c.join(q, col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"), dot(col("qv"), col("cv")).as("cos"))
+    u.join(q, col("query_id") =!= col("id"))
+      .select(col("query_id"), col("id").as("neighbor_id"), dot(col("qv"), col("v")).as("cos"))
   }
 
   /** The one per-query top-k of this module: `(query_id, neighbor_id, cos)`
@@ -513,19 +518,18 @@ object Similarity {
    * (≤ `sampleSize` rows) is the ONLY driver-side materialization — standard
    * IVF practice (the quantizer is tiny; the index assignment stays fully
    * distributed), so this holds at any corpus size.
+   *
+   * Reads `corpus` ONCE: the sample is one job, and the dimension comes
+   * from the sampled vectors themselves rather than a separate probe.
    */
   private[ext] def trainCentroids(corpus: DataFrame, vecCol: String, nlist0: Int,
       sampleSize: Int, seed: Long): Array[Array[Double]] = {
-    // limit(1).collect(), not head(): an empty corpus must surface the
-    // friendly require message below, not head()'s NoSuchElementException
-    val firstRow = corpus.select(col(vecCol)).limit(1).collect()
-    require(firstRow.nonEmpty, "cannot train a quantizer on an empty corpus")
-    val dim = firstRow(0).getSeq[Float](0).length
     val sample = corpus
       .select(org.apache.spark.sql.graftx.VectorFunctions.vec_normalize(col(vecCol)).as("v"))
       .orderBy(rand(seed)).limit(sampleSize)
       .collect().map(_.getSeq[Double](0).toArray)
     require(sample.nonEmpty, "cannot train a quantizer on an empty corpus")
+    val dim = sample(0).length
     // tiny corpora: fewer lists than requested beats refusing to index
     val nlist = math.min(nlist0, sample.length)
     val rnd = new scala.util.Random(seed)
@@ -875,9 +879,29 @@ object Similarity {
    * through the dot filter unmaterialized). Probe fan-out adapts to the
    * data: tight near-dup thresholds (0.8+) probe ~1 list; loose thresholds
    * widen the radius — raise `nlist` to keep lists small.
+   *
+   * EAGER in its input: `emb`'s lineage runs exactly ONCE per call, into
+   * one [[Caches]]-tracked checkpoint of the narrow `(id, unit vector)`
+   * frame (released by `Dedup.unpersistAll`); the optional √n count, the
+   * quantizer sample and the angle cache all read that frame. At scale
+   * that is one corpus-sized materialization of `8·dim` bytes a row, in
+   * place of re-running the caller's upstream for each read.
    */
   def cosinePairs(emb: DataFrame, idCol: String, vecCol: String, threshold: Double,
-      nlist: Int = 16, sampleSize: Int = 4096, seed: Long = 42L): DataFrame = {
+      nlist: Int = 16, sampleSize: Int = 4096, seed: Long = 42L): DataFrame =
+    ivfPairs(unitFrame(emb, idCol, vecCol), threshold, nlist, sampleSize, seed)
+
+  /** The one materialization of a pair operator's input: `(id, v)` with
+    * `v` unit-normalized, checkpointed once and released by
+    * `Caches.unpersistAll` — every later read is a scan of its blocks, never
+    * a re-run of the caller's lineage. */
+  private def unitFrame(emb: DataFrame, idCol: String, vecCol: String): DataFrame =
+    Caches.trackCheckpoint(unitized(emb, idCol, vecCol, "id", "v"))
+
+  /** [[cosinePairs]] over a unit frame `u` (`id`, `v`) that is cheap to
+    * re-read — a [[unitFrame]], or a projection of a checkpointed frame. */
+  private def ivfPairs(u: DataFrame, threshold: Double, nlist: Int,
+      sampleSize: Int = 4096, seed: Long = 42L): DataFrame = {
     // nlist <= 0 ⇒ ~√n lists (classic IVF sizing; one count() job). NB this
     // is NOT a universal win and is deliberately not the default: the r11
     // scale probe (BASELINE.md) measured √n-retuning 2–4× SLOWER than fixed
@@ -886,9 +910,8 @@ object Similarity {
     // explode grows ∝ n×nlist while candidate pairs barely shrink. Retune
     // upward only for TIGHT thresholds (0.8+, probe fan-out ~1–2 lists),
     // where bigger nlist genuinely shrinks per-list pair products.
-    val lists = if (nlist > 0) nlist else math.max(16, math.sqrt(emb.count().toDouble).toInt)
-    val cents = trainCentroids(emb, vecCol, lists, sampleSize, seed)
-    val u = unitized(emb, idCol, vecCol, "id", "v")
+    val lists = if (nlist > 0) nlist else math.max(16, math.sqrt(u.count().toDouble).toInt)
+    val cents = trainCentroids(u, "v", lists, sampleSize, seed)
     // clamp into acos' domain; +1e-9 absorbs float rounding at the boundary.
     // ONE codegen'd centroid_angles expression, NOT transform(sims, lambda)
     // (a higher-order lambda has no codegen and would force this whole
@@ -973,6 +996,11 @@ object Similarity {
    * would be pair-budget-sized. Pass `autoSharpen = false` to pin the
    * caller's exact shape (the recall-contract gate does, so its planted
    * band curve stays the documented 12×12 one).
+   *
+   * EAGER in its input: `emb`'s lineage runs exactly ONCE per call, into
+   * the same checkpointed `(id, unit vector)` frame as [[cosinePairs]];
+   * one aggregate over it yields the row count and the dimension, and the
+   * ladder's estimates and both verify sides read it.
    */
   def cosinePairsLsh(emb: DataFrame, idCol: String, vecCol: String, threshold: Double,
       bands: Int = 12, rowsPerBand: Int = 12, seed: Long = 42L,
@@ -980,12 +1008,23 @@ object Similarity {
       autoSharpen: Boolean = true): DataFrame = {
     require(bands > 0 && rowsPerBand > 0 && rowsPerBand <= 62,
       s"bands/rowsPerBand must be positive (rowsPerBand <= 62): $bands x $rowsPerBand")
-    val firstRow = emb.select(col(vecCol)).limit(1).collect()
-    require(firstRow.nonEmpty, "cosinePairsLsh: empty corpus")
-    val dim = firstRow(0).getSeq[Float](0).length
-    // cached: the unitized corpus feeds the band projection and BOTH verify
-    // sides (Caches.unpersistAll releases it)
-    val u = Caches.track(unitized(emb, idCol, vecCol, "id", "v"))
+    lshPairs(unitFrame(emb, idCol, vecCol), threshold, bands, rowsPerBand, seed,
+      pairBudget, autoSharpen)
+  }
+
+  /** `(rows, dim)` of a unit frame in ONE aggregate; an empty frame is
+    * refused by `op`'s name. */
+  private def unitShape(u: DataFrame, op: String): (Long, Int) = {
+    val r = u.agg(count(lit(1)), max(size(col("v")))).head()
+    require(r.getLong(0) > 0, s"$op: empty corpus")
+    (r.getLong(0), r.getInt(1))
+  }
+
+  /** [[cosinePairsLsh]] over a unit frame `u` (`id`, `v`) that is cheap to
+    * re-read (see [[ivfPairs]]). */
+  private def lshPairs(u: DataFrame, threshold: Double, bands: Int, rowsPerBand: Int,
+      seed: Long, pairBudget: Long, autoSharpen: Boolean): DataFrame = {
+    val (rows, dim) = unitShape(u, "cosinePairsLsh")
     // per-band bucket keys: rowsPerBand sign bits packed into a long, then
     // mixed with the band ordinal so bands never collide with each other —
     // ONE codegen'd sign_band_keys expression (the plane matrix travels as
@@ -1068,7 +1107,7 @@ object Similarity {
     // the in-memory id→vector map. Past the gate (100 TB corpora) the
     // shuffle join is the only correct shape and AQE picks the strategy
     // from runtime sizes.
-    val corpusBytes = u.count() * dim * 8L * 2L
+    val corpusBytes = rows * dim * 8L * 2L
     def sized(df: DataFrame) = if (corpusBytes <= (64L << 20)) broadcast(df) else df
     val va = sized(u.select(col("id").as("doc_a"), col("v").as("va")))
     val vb = sized(u.select(col("id").as("doc_b"), col("v").as("vb")))
@@ -1110,17 +1149,16 @@ object Similarity {
    * `dedup_cosine_lsh_sharpen` gate emits a violation row when the
    * caller-shape estimate no longer exceeds the budget it was sized to
    * blow — without this, a fixture drift would leave the ladder
-   * unexercised and the gate silently vacuous).
+   * unexercised and the gate silently vacuous). Like the operator, it runs
+   * `emb`'s lineage once, into the checkpointed unit frame.
    */
   def lshCandidateEstimate(emb: DataFrame, idCol: String, vecCol: String,
       bands: Int = 12, rowsPerBand: Int = 12, seed: Long = 42L): Long = {
     require(bands > 0 && rowsPerBand > 0 && rowsPerBand <= 62,
       s"bands/rowsPerBand must be positive (rowsPerBand <= 62): $bands x $rowsPerBand")
-    val firstRow = emb.select(col(vecCol)).limit(1).collect()
-    require(firstRow.nonEmpty, "lshCandidateEstimate: empty corpus")
-    val dim = firstRow(0).getSeq[Float](0).length
-    estBucketPairs(signBandKeyed(
-      unitized(emb, idCol, vecCol, "id", "v"), dim, bands, rowsPerBand, seed))
+    val u = unitFrame(emb, idCol, vecCol)
+    val (_, dim) = unitShape(u, "lshCandidateEstimate")
+    estBucketPairs(signBandKeyed(u, dim, bands, rowsPerBand, seed))
   }
 
   /**
@@ -1141,13 +1179,26 @@ object Similarity {
    *
    * One `count()` job decides the size regime (skipped for tight
    * thresholds). Returns `(id_a < id_b)` pairs in every regime.
+   *
+   * EAGER in its input: `emb`'s lineage runs exactly ONCE per call, into
+   * the checkpointed `(id, unit vector)` frame of [[cosinePairs]]; the
+   * regime count and whichever pair search it picks read that frame.
    */
   def cosinePairsRouted(emb: DataFrame, idCol: String, vecCol: String, threshold: Double,
       nlist: Int = 16, exactMaxRows: Long = 20000L, tightThreshold: Double = 0.8,
       bands: Int = 12, rowsPerBand: Int = 12, seed: Long = 42L): DataFrame =
-    if (threshold >= tightThreshold || emb.count() <= exactMaxRows)
-      cosinePairs(emb, idCol, vecCol, threshold, nlist, seed = seed)
-    else cosinePairsLsh(emb, idCol, vecCol, threshold, bands, rowsPerBand, seed)
+    routedPairs(unitFrame(emb, idCol, vecCol), threshold, nlist, exactMaxRows,
+      tightThreshold, bands, rowsPerBand, seed)
+
+  /** [[cosinePairsRouted]] over a unit frame `u` (`id`, `v`) that is cheap
+    * to re-read (see [[ivfPairs]]). */
+  private def routedPairs(u: DataFrame, threshold: Double, nlist: Int, exactMaxRows: Long,
+      tightThreshold: Double = 0.8, bands: Int = 12, rowsPerBand: Int = 12,
+      seed: Long = 42L): DataFrame =
+    if (threshold >= tightThreshold || u.count() <= exactMaxRows)
+      ivfPairs(u, threshold, nlist, seed = seed)
+    else lshPairs(u, threshold, bands, rowsPerBand, seed, graft.ext.Dedup.DefaultPairBudget,
+      autoSharpen = true)
 
   /**
    * Semantic dedup (the SemDeDup shape, Abbas et al. 2023,
@@ -1172,21 +1223,37 @@ object Similarity {
    * `emb` with its full schema.
    *
    * EAGER like [[graft.ext.Dedup.connectedComponents]] (convergence
-   * detection runs jobs at call time); compute once and reuse.
+   * detection runs jobs at call time); compute once and reuse. `emb`'s
+   * lineage runs exactly ONCE per call: `emb` — every column of it — is
+   * checkpointed once ([[Caches]]-tracked, released by
+   * `Dedup.unpersistAll`), and the quantizer sample, the unit vectors and
+   * their angles, and the keep-best survivors all read that one frame.
    *
    * Scale: pair formation is IVF-blocked (near-dup thresholds probe ~1–2
    * lists), components contract in O(log) rounds, and keep-best
    * broadcasts only cluster MEMBERS — at 100 TB the corpus-sized frames
    * move through exactly one keyed shuffle (the pair join), never a
-   * window over the full corpus. For wide thresholds at scale route the
-   * pair step through [[cosinePairsRouted]] yourself and feed the pairs
-   * to `connectedComponents`/`keepBest` directly.
+   * window over the full corpus. The price of the single input run is
+   * one materialization of `emb`, in place of four runs of the caller's
+   * corpus-wide upstream (dimension probe, quantizer sample, angle cache,
+   * survivors). For
+   * wide thresholds at scale route the pair step through
+   * [[cosinePairsRouted]] yourself and feed the pairs to
+   * `connectedComponents`/`keepBest` directly.
    */
   def semanticDedup(emb: DataFrame, idCol: String, vecCol: String, threshold: Double,
-      ordering: Seq[Column], nlist: Int = 16): DataFrame = {
-    val pairs = cosinePairs(emb, idCol, vecCol, threshold, nlist)
-    val clusters = Dedup.connectedComponents(pairs, "id_a", "id_b")
-    Dedup.keepBest(emb, clusters, idCol, ordering)
+      ordering: Seq[Column], nlist: Int = 16): DataFrame =
+    dedupOnce(emb, idCol, vecCol, ordering)(ivfPairs(_, threshold, nlist))
+
+  /** The semantic-dedup composition over ONE materialization of `emb`:
+    * `pairsOf` searches the unit projection of the checkpoint (a cheap
+    * map over its blocks), and keep-best selects survivors from the same
+    * checkpoint. */
+  private def dedupOnce(emb: DataFrame, idCol: String, vecCol: String,
+      ordering: Seq[Column])(pairsOf: DataFrame => DataFrame): DataFrame = {
+    val m = Caches.trackCheckpoint(emb)
+    val pairs = pairsOf(unitized(m, idCol, vecCol, "id", "v"))
+    Dedup.keepBest(m, Dedup.connectedComponents(pairs, "id_a", "id_b"), idCol, ordering)
   }
 
   /**
@@ -1197,15 +1264,16 @@ object Similarity {
    * pair for pair; past it the near-dup pairs come from the banded LSH
    * path (zero false positives, band-curve recall — see
    * [[cosinePairsLsh]]) and the components/keep-best stages are unchanged.
+   *
+   * EAGER, and like [[semanticDedup]] runs `emb`'s lineage exactly ONCE per
+   * call: the router's count, the dimension, the quantizer sample, the unit
+   * vectors and angles (or LSH band keys) and the keep-best survivors all
+   * read the one checkpoint of `emb`.
    */
   def semanticDedupRouted(emb: DataFrame, idCol: String, vecCol: String,
       threshold: Double, ordering: Seq[Column], nlist: Int = 16,
-      exactMaxRows: Long = 20000L): DataFrame = {
-    val pairs = cosinePairsRouted(emb, idCol, vecCol, threshold, nlist,
-      exactMaxRows = exactMaxRows)
-    val clusters = Dedup.connectedComponents(pairs, "id_a", "id_b")
-    Dedup.keepBest(emb, clusters, idCol, ordering)
-  }
+      exactMaxRows: Long = 20000L): DataFrame =
+    dedupOnce(emb, idCol, vecCol, ordering)(routedPairs(_, threshold, nlist, exactMaxRows))
 
   /**
    * Hard-negative mining — the contrastive-retrieval training shape (DPR,
@@ -1221,12 +1289,15 @@ object Similarity {
    * components → the cluster-mate pair set (membership² within clusters —
    * tiny, size-gated broadcast); the scored query×corpus frame anti-joins
    * the mates and ranks what's left via the bounded map-side
-   * [[topKPerQuery]]. EAGER like every components consumer.
+   * [[topKPerQuery]]. EAGER like every components consumer, and the
+   * corpus lineage runs exactly ONCE per call: the checkpointed
+   * `(id, unit vector)` frame of [[cosinePairs]] feeds both the pair search
+   * and the scored grid.
    */
   def hardNegatives(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, k: Int, dupThreshold: Double, nlist: Int = 16): DataFrame = {
-    val pairs = cosinePairs(corpus, idCol, vecCol, dupThreshold, nlist)
-    negativesFromPairs(pairs, corpus, queries, idCol, vecCol, k)
+    val u = unitFrame(corpus, idCol, vecCol)
+    negativesFromPairs(ivfPairs(u, dupThreshold, nlist), u, queries, idCol, vecCol, k)
   }
 
   /**
@@ -1238,23 +1309,25 @@ object Similarity {
    * exact crossover this is bit-identical to [[hardNegatives]]; past it
    * the excluded cluster-mates come from the banded LSH path (zero false
    * positives; a band-curve-missed moderate-similarity mate can re-enter
-   * the negative pool — the documented trade).
+   * the negative pool — the documented trade). Reads the corpus lineage
+   * once, as [[hardNegatives]] does.
    */
   def hardNegativesRouted(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, k: Int, dupThreshold: Double, nlist: Int = 16,
       exactMaxRows: Long = 20000L): DataFrame = {
-    val pairs = cosinePairsRouted(corpus, idCol, vecCol, dupThreshold, nlist,
-      exactMaxRows = exactMaxRows)
-    negativesFromPairs(pairs, corpus, queries, idCol, vecCol, k)
+    val u = unitFrame(corpus, idCol, vecCol)
+    negativesFromPairs(routedPairs(u, dupThreshold, nlist, exactMaxRows), u, queries,
+      idCol, vecCol, k)
   }
 
-  private def negativesFromPairs(pairs: DataFrame, corpus: DataFrame,
+  /** Hard negatives from dup `pairs` over the materialized unit corpus `u`. */
+  private def negativesFromPairs(pairs: DataFrame, u: DataFrame,
       queries: DataFrame, idCol: String, vecCol: String, k: Int): DataFrame = {
     val clusters = Dedup.connectedComponents(pairs, "id_a", "id_b")
     val mates = graft.ops.Ops.hintIfSmall(
       clusters.as("a").join(clusters.as("b"), col("a.cluster") === col("b.cluster"))
         .select(col("a.node").as("query_id"), col("b.node").as("neighbor_id")))
-    topKPerQuery("hardNegatives", scoredGrid(corpus, queries, idCol, vecCol)
+    topKPerQuery("hardNegatives", unitGrid(u, queries, idCol, vecCol)
         .join(mates, Seq("query_id", "neighbor_id"), "left_anti"), k, keepIdType = false)
       .select("query_id", "neighbor_id")
   }

@@ -664,7 +664,7 @@ object TextAnalysis {
   /** The corpus token-count table `(__w, <countCol>)`: one row per distinct
     * whitespace token of `df`'s `textCol` with its occurrence count — one
     * explode and one token-keyed grouped count (vocab-sized output). */
-  private def tokenCounts(df: DataFrame, textCol: String, countCol: String): DataFrame =
+  private[ext] def tokenCounts(df: DataFrame, textCol: String, countCol: String): DataFrame =
     df.select(explode(tokens(col(textCol))).as("__w"))
       .groupBy("__w").agg(count(lit(1)).as(countCol))
 
@@ -1506,18 +1506,16 @@ object TextAnalysis {
     import org.apache.spark.sql.graftx.TextFunctions.bpe_merge_adjacent
     // corpus scan happens exactly once: word types + frequencies, seeded as
     // char symbols + terminal marker
-    var types = docs.select(explode(tokens(col(textCol))).as("__word"))
-      .groupBy(col("__word")).agg(count(lit(1)).as("__freq"))
-      .select(concat(split(col("__word"), ""), array(lit("</w>"))).as("__syms"),
-        col("__freq"))
-      .localCheckpoint()
+    var types = Caches.checkpoint(tokenCounts(docs, textCol, "__freq")
+      .select(concat(split(col("__w"), ""), array(lit("</w>"))).as("__syms"),
+        col("__freq")))
     // merges not yet folded into `types`, applied lazily as an expression
     // chain on every reference until the next collapse
     var chain: Column = col("__syms")
     var chainDepth = 0
     def collapse(): Unit = if (chainDepth > 0) {
       val prev = types
-      types = types.select(chain.as("__syms"), col("__freq")).localCheckpoint()
+      types = Caches.checkpoint(types.select(chain.as("__syms"), col("__freq")))
       // NOT prev.unpersist: Dataset.unpersist on a localCheckpointed frame
       // is a silent no-op (CacheManager path; the blocks are RDD-level) —
       // release the checkpoint's RDD or every collapse leaks one

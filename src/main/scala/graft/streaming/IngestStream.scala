@@ -57,7 +57,8 @@ object IngestStream {
     val writer = stream.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         // survivors feed the sink append AND (under grow) the index append —
-        // localCheckpoint so the LSH probe pipeline runs once per batch,
+        // checkpointed so the LSH probe pipeline runs once per batch (durable
+        // under a session checkpoint dir, see Caches.checkpoint),
         // tracked so the per-batch release below actually frees the blocks
         // (Dataset.unpersist on a checkpointed frame is a silent no-op)
         val survivors = graft.ext.Caches.trackCheckpoint(

@@ -201,51 +201,11 @@ class DedupSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterEach {
     assert(kept.nonEmpty)
   }
 
-  /** Runs `body` and returns (jobs run, jobs in which some task read files
-    * under `path`). A job reads `path` when one of its tasks reports a
-    * metric of a file scan located there: the scan nodes come from the
-    * SQL execution events, a cached plan's scan included, so a job served
-    * from a cache or a checkpoint does not count, while one that
-    * recomputes a refreshed cache does. Needs static plans (adaptive
-    * execution off): an adaptive cached plan re-plans its scans into
-    * nodes no execution event names. */
-  private def jobsScanning(path: String)(body: => Unit): (Int, Int) = {
-    import org.apache.spark.scheduler._
-    import org.apache.spark.sql.execution.SparkPlanInfo
-    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
-    val scanMetrics = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
-    val jobOfStage = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val scanning = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    def note(p: SparkPlanInfo): Unit = {
-      if (p.metadata.get("Location").exists(_.contains(path)))
-        p.metrics.foreach(m => scanMetrics.add(m.accumulatorId))
-      p.children.foreach(note)
-    }
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet()
-        e.stageIds.foreach(jobOfStage.put(_, e.jobId))
-      }
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        if (e.taskInfo.accumulables.exists(a => scanMetrics.contains(a.id)))
-          scanning.add(jobOfStage.get(e.stageId))
-      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case s: SparkListenerSQLExecutionStart => note(s.sparkPlanInfo)
-        case _ =>
-      }
-    }
-    TestSpark.drainListenerBus()
-    spark.sparkContext.addSparkListener(listener)
-    try { body; TestSpark.drainListenerBus() } finally spark.sparkContext.removeSparkListener(listener)
-    (jobs.get(), scanning.size)
-  }
-
   test("appendToLshIndex runs the dedup probe at most once") {
     // a plain rename-mode append writes into the live index dir, so Spark
     // refreshes every cached plan reading it: a cached input would make the
     // second append re-run the whole probe that produced it
-    val ns = spark.newSession() // the shared cache manager, static plans (see jobsScanning)
+    val ns = spark.newSession() // the shared cache manager, static plans (see TestSpark.jobsScanning)
     ns.conf.set("spark.sql.adaptive.enabled", "false")
     val store = new graft.store.TableStore(ns, TestSpark.tempDir("graft-lsh-once").toString,
       graft.store.CommitMode.Rename)
@@ -263,13 +223,13 @@ class DedupSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterEach {
     // is what runs the probe
     val survivors = Dedup.dedupeAgainstLshIndex(store, idx, batch, "doc_id", "text", 0.8)
     val buckets = store.tablePath("once_lsh_buckets")
-    val (_, probes) = jobsScanning(buckets)(
+    val (_, probes) = TestSpark.jobsScanning(buckets)(
       Dedup.appendToLshIndex(store, idx, survivors, "doc_id", "text"))
     assert(probes <= 1, s"the append scanned $buckets in $probes jobs")
     // a keyed replay whose two appends both committed materializes nothing
     val keyed = nsDocs.filter(col("doc_id") >= 400)
     Dedup.appendToLshIndex(store, idx, keyed, "doc_id", "text", Some("b2"))
-    val (replayJobs, _) = jobsScanning(buckets)(
+    val (replayJobs, _) = TestSpark.jobsScanning(buckets)(
       Dedup.appendToLshIndex(store, idx, keyed, "doc_id", "text", Some("b2")))
     assert(replayJobs == 0, s"a committed replay ran $replayJobs jobs")
     Dedup.unpersistAll()

@@ -608,4 +608,83 @@ class SimilaritySpec extends AnyFunSuite with org.scalatest.BeforeAndAfterEach {
     assert(search(4) == partial, "compaction changed partial-probe results")
     assert(search(16) == exact)
   }
+
+  test("eager similarity operators run their input's lineage once per call; results equal brute force") {
+    // every operator reads a parquet file under a shuffle, so each re-read of
+    // its input re-runs the scan, and TestSpark.jobsScanning counts it
+    // (static plans, in a session sharing the cache manager)
+    val ns = spark.newSession()
+    ns.conf.set("spark.sql.adaptive.enabled", "false")
+    val path = TestSpark.tempDir("graft-sim-once").resolve("emb").toString
+    Similarity.plantNearDups(emb, "vec_id", "embedding")
+      .withColumn("quality", pmod(col("vec_id") * 7919L, lit(101L)))
+      .write.parquet(path)
+    val input = ns.read.parquet(path).repartition(3, col("vec_id"))
+
+    // brute force over all pairs, with the operators' own unit-vector and
+    // dot-product expressions
+    val unit = ns.read.parquet(path).select(col("vec_id").as("id"), col("quality"),
+      org.apache.spark.sql.graftx.VectorFunctions.vec_normalize(col("embedding")).as("v"))
+    val quality = unit.select("id", "quality").as[(Long, Long)].collect().toMap
+    val allPairs = unit.select(col("id").as("a"), col("v").as("va"))
+      .join(unit.select(col("id").as("b"), col("v").as("vb")), col("a") < col("b"))
+      .select(col("a"), col("b"), Similarity.dot(col("va"), col("vb")).as("cos"))
+      .as[(Long, Long, Double)].collect()
+    def exact(t: Double): Set[(Long, Long)] =
+      allPairs.collect { case (a, b, c) if c >= t => (a, b) }.toSet
+    def clusterOf(t: Double): Map[Long, Long] = {
+      val parent = scala.collection.mutable.Map.empty[Long, Long]
+      def find(x: Long): Long = parent.get(x).filter(_ != x).map(find).getOrElse(x)
+      exact(t).foreach { case (a, b) =>
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+      }
+      quality.keys.map(id => id -> find(id)).toMap
+    }
+    val t = 0.45
+    val survivors = clusterOf(t).groupBy(_._2).values
+      .map(_.keys.minBy(id => (-quality(id), id))).toSet
+    assert(exact(t).nonEmpty && survivors.size < quality.size, "the fixtures carry pairs above t")
+
+    val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    def once[A](op: String)(run: => A): A = {
+      var out: Option[A] = None
+      val (_, scans) = TestSpark.jobsScanning(path) { out = Some(run) }
+      Dedup.unpersistAll()
+      assert(scans <= 1, s"$op scanned its input in $scans jobs")
+      assert((spark.sparkContext.getPersistentRDDs.keySet -- persistedBefore).isEmpty,
+        s"$op left persisted RDDs after unpersistAll")
+      out.get
+    }
+    val order = Seq(col("quality").desc, col("vec_id").asc)
+    assert(once("semanticDedup")(Similarity.semanticDedup(input, "vec_id", "embedding", t, order)
+      .select("vec_id").as[Long].collect().toSet) == survivors)
+    assert(once("semanticDedupRouted")(Similarity.semanticDedupRouted(input, "vec_id",
+      "embedding", t, order).select("vec_id").as[Long].collect().toSet) == survivors)
+    assert(once("cosinePairs")(Similarity.cosinePairs(input, "vec_id", "embedding", t)
+      .as[(Long, Long)].collect().toSet) == exact(t))
+    val lsh = once("cosinePairsLsh")(Similarity.cosinePairsLsh(input, "vec_id", "embedding", t)
+      .as[(Long, Long)].collect().toSet)
+    assert(lsh.subsetOf(exact(t)) && exact(0.99).subsetOf(lsh) && exact(0.99).nonEmpty,
+      "LSH pairs: zero false positives, every planted near-dup")
+
+    // hard negatives: per query, the k best by (cos DESC, id ASC) outside the
+    // query's own near-dup cluster; the queries are a driver-local frame, so
+    // only the corpus reads the file
+    val queryIds = Seq(0L, 50L, 100L, 7L, 13L)
+    val queries = ns.read.parquet(path).filter(col("vec_id").isin(queryIds: _*))
+      .select("vec_id", "embedding").as[(Long, Array[Float])].collect().toSeq
+      .toDF("vec_id", "embedding")
+    val k = 3
+    val dupCluster = clusterOf(0.9)
+    val cosTo = allPairs.flatMap { case (a, b, c) => Seq((a, b) -> c, (b, a) -> c) }.toMap
+    val expectNegatives = queryIds.flatMap { q =>
+      quality.keys.filter(n => dupCluster(n) != dupCluster(q)).toSeq
+        .sortBy(n => (-cosTo((q, n)), n)).take(k).map(q -> _)
+    }.toSet
+    assert(queryIds.exists(q => dupCluster.count(_._2 == dupCluster(q)) > 1),
+      "some query has a planted near-dup to exclude")
+    assert(once("hardNegativesRouted")(Similarity.hardNegativesRouted(input, queries, "vec_id",
+      "embedding", k, 0.9).as[(Long, Long)].collect().toSet) == expectNegatives)
+  }
 }
