@@ -47,10 +47,9 @@ private[graft] object Caches {
       case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
     }
 
-  /** Eagerly release a frame produced by [[checkpoint]] — the release path
-    * iterative builders use when they collapse lineage round over round. A
-    * durable checkpoint holds no blocks, so this is a no-op for it. */
-  def releaseCheckpoint(df: DataFrame): Unit =
+  /** Release a frame produced by [[checkpoint]]. A durable checkpoint
+    * holds no blocks, so this is a no-op for it. */
+  private def releaseCheckpoint(df: DataFrame): Unit =
     checkpointRdd(df).foreach(_.unpersist(blocking = false))
 
   /** The one checkpoint rule of `graft.ext`: an eager checkpoint that
@@ -62,7 +61,7 @@ private[graft] object Caches {
     * =true`; clean the dir periodically otherwise). Without one it is a
     * `localCheckpoint`: blocks on the executors, fastest, and the accepted
     * single-box trade (executor loss = rerun the operator). */
-  def checkpoint(df: DataFrame): DataFrame =
+  private def checkpoint(df: DataFrame): DataFrame =
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(true)
     else df.localCheckpoint(true)
 
@@ -72,14 +71,51 @@ private[graft] object Caches {
     * re-running and re-analysing the full build lineage. */
   def trackCheckpoint(df: DataFrame): DataFrame = registerCheckpoint(checkpoint(df))
 
-  /** Record an ALREADY-checkpointed frame for release by [[unpersistAll]] —
-    * for iterative builders that truncate lineage round over round, release
-    * dead rounds eagerly themselves, and need only the surviving final
-    * round covered ([[releaseCheckpoint]] is idempotent, so a frame both
-    * released manually and registered here is safe). */
-  def registerCheckpoint(df: DataFrame): DataFrame = {
+  private def registerCheckpoint(df: DataFrame): DataFrame = {
     onRelease(() => releaseCheckpoint(df))
     df
+  }
+
+  /** One round of [[iterate]]: its 1-based `index`, and `scratch`, which
+    * checkpoints a frame the round reads several times on the way to its
+    * result (HITS' authorities, a large-star phase) and releases it once
+    * the result is materialized. */
+  final class Round private[Caches] (val index: Int) {
+    private val frames = ArrayBuffer.empty[DataFrame]
+    def scratch(df: DataFrame): DataFrame = {
+      val c = checkpoint(df)
+      frames += c
+      c
+    }
+    private[Caches] def release(): Unit = frames.foreach(releaseCheckpoint)
+  }
+
+  /** The one round loop of `graft.ext`'s iterative builders (graph ranks,
+    * label propagation, BFS, k-core, star contraction, BPE merges). From
+    * `init`, runs `step` on the latest round for at most `rounds` rounds,
+    * stopping early when `step` returns None (a fixpoint: the latest round
+    * is the result). Every round is [[checkpoint]]ed — each round reads
+    * the one before, so an untruncated plan would grow per round and
+    * Catalyst analysis go exponential — and the round it replaces is
+    * released once the new one is materialized, so a run holds one round
+    * (plus the current round's scratch) at a time. The survivor is
+    * registered for [[unpersistAll]]; if `step` throws, every round still
+    * live is released before the exception propagates. */
+  def iterate(init: DataFrame, rounds: Int)(
+      step: (DataFrame, Round) => Option[DataFrame]): DataFrame = {
+    var cur = checkpoint(init)
+    try {
+      var more = true
+      var i = 1
+      while (more && i <= rounds) {
+        val round = new Round(i)
+        val next = try step(cur, round).map(checkpoint) finally round.release()
+        next.foreach { n => releaseCheckpoint(cur); cur = n }
+        more = next.isDefined
+        i += 1
+      }
+    } catch { case e: Throwable => releaseCheckpoint(cur); throw e }
+    registerCheckpoint(cur)
   }
 
   private def release(thread: Long): Unit = {

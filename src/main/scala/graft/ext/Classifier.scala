@@ -233,7 +233,7 @@ object Classifier {
     // re-plans re-analyzes the full feature-build lineage — bounded here,
     // but it grows with whatever pipeline feeds `data`. The checkpoint swaps
     // that tree for a leaf LogicalRDD (steps analyze a 4-node plan) and has
-    // a REAL release path (Caches.releaseCheckpoint; Dataset.unpersist on
+    // a REAL release path (Caches.unpersistAll; Dataset.unpersist on
     // checkpointed frames is a silent no-op).
     val full = Caches.trackCheckpoint(data.select(col("features"),
       col(labelCol).cast("double").as("__y")))

@@ -384,9 +384,11 @@ object Dedup {
    *    on ANY topology, where plain min-label propagation needs
    *    O(diameter) rounds (a 1 M-link chain = a million rounds vs ~20).
    *    Each alternation is two grouped-min shuffles + a distinct; edges are
-   *    persisted per round and lineage stays flat, so the plan does not
-   *    grow with iterations. `maxIter` bounds the alternations — the
-   *    operator THROWS rather than returning wrong labels.
+   *    checkpointed per round through [[Caches.iterate]] (the dead round
+   *    released as the next materializes), so lineage stays flat and the
+   *    plan does not grow with iterations. `maxIter` bounds the
+   *    alternations — the operator THROWS rather than returning wrong
+   *    labels, releasing every round first.
    *
    * Output: `(node, cluster)` for every node that appears in some pair
    * (singletons are their own implicit clusters and are not emitted).
@@ -401,10 +403,6 @@ object Dedup {
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
       maxIter: Int = 25, localEdgeLimit: Long = 1000000L): DataFrame = {
     val level = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // per-round caches are released EAGERLY the moment the next round is
-    // materialized — leaving O(rounds) entries in the cache registry makes
-    // Spark's cache-plan matching (every new plan is canonicalize-compared
-    // against every cached plan) quadratically slow across a long session
     // both pair columns must carry ONE id type: the local fast path takes its
     // output schema (and its comparator) from the pair type, and an int-vs-
     // long pair would label-compare inconsistently in either path. Null ids
@@ -432,20 +430,6 @@ object Dedup {
       p.unpersist(blocking = false)
       return localComponents(rows, dtA, pairs.sparkSession)
     }
-    // canonical child>parent edge list; self-pairs drop here (their nodes
-    // are re-attached as singletons from the node set at the end).
-    // Lineage truncation (NOT persist): each star phase references its input
-    // several times, so without truncation the logical plan grows ~5× per
-    // round and Catalyst analysis goes exponential across rounds (persist
-    // only short-circuits execution, not plan analysis — the same reason
-    // GraphFrames checkpoints its CC loop). Two modes, per
-    // [[Caches.checkpoint]]: localCheckpoint on a single box, durable
-    // checkpoint when the session has a checkpoint dir configured — the
-    // cluster toggle that makes a 21-round job survive executor loss
-    // instead of dying with one.
-    var cur = Caches.checkpoint(p.select(greatest(col("a"), col("b")).as("child"),
-        least(col("a"), col("b")).as("parent"))
-      .filter(col("child") =!= col("parent")).distinct())
     // one aggregation doubles as the round's materialization AND its
     // convergence signature: (cardinality, order-free hash sum). Both edge
     // sets are distinct, so equal signatures mean equal sets up to a 2^-64
@@ -459,7 +443,6 @@ object Dedup {
         sum(xxhash64(col("child"), col("parent")).cast("decimal(38,0)"))).head()
       (r.getLong(0), String.valueOf(r.get(1)))
     }
-    var sig = signature(cur)
     // one star phase: hang each node's LARGER (large-star) or SMALLER-plus-
     // self (small-star) neighbors off its neighborhood minimum. The new
     // edge set is the union of every node's emissions — connectivity is
@@ -479,27 +462,30 @@ object Dedup {
           .union(m.select(col("u").as("child"), col("m").as("parent")))
       emitted.filter(col("child") =!= col("parent")).distinct()
     }
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
-      // the large-star output feeds small-star's neighborhood build through
-      // several plan references — truncate its lineage too, or the round's
-      // plan squares before the next truncation
-      val ls = Caches.checkpoint(starPhase(cur, large = true))
-      val next = Caches.checkpoint(starPhase(ls, large = false))
-      val nsig = signature(next) // cheap: the plan is a checkpoint scan
-      converged = nsig == sig
-      sig = nsig
-      cur = next
-      i += 1
-    }
-    lastDistributedRounds.set(i)
-    if (!converged) {
-      p.unpersist(blocking = false)
-      cur.unpersist(blocking = false)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIter star rounds — " +
-          "pathological id topology; raise maxIter")
+    // canonical child>parent edge list; self-pairs drop here (their nodes
+    // are re-attached as singletons from the node set at the end). Round
+    // k + 1 first signs round k's edges (a plain checkpoint scan) and stops
+    // at the fixpoint; the step itself bounds the rounds, throwing once
+    // `maxIter` alternations have not converged.
+    var sig = (-1L, "")
+    val cur = Caches.iterate(p.select(greatest(col("a"), col("b")).as("child"),
+        least(col("a"), col("b")).as("parent"))
+      .filter(col("child") =!= col("parent")).distinct(), Int.MaxValue) { (edges, round) =>
+      val nsig = signature(edges)
+      lastDistributedRounds.set(round.index - 1)
+      if (nsig == sig) None
+      else if (round.index > maxIter) {
+        p.unpersist(blocking = false)
+        throw new IllegalStateException(
+          s"connectedComponents did not converge in $maxIter star rounds — " +
+            "pathological id topology; raise maxIter")
+      } else {
+        sig = nsig
+        // the large-star output feeds small-star's neighborhood build through
+        // several plan references — truncate its lineage too, or the round's
+        // plan squares before the next truncation
+        Some(starPhase(round.scratch(starPhase(edges, large = true)), large = false))
+      }
     }
     // at the fixpoint `cur` is a star forest: child → component minimum.
     // Label every node that appeared in the input (roots and self-pair
@@ -511,8 +497,6 @@ object Dedup {
       .persist(level)
     labels.count()
     p.unpersist(blocking = false)
-    cur.unpersist(blocking = false)
-    // only the final (materialized) labels survive, released by unpersistAll
     Caches.register(labels).select(col("node"), col("label").as("cluster"))
   }
 
@@ -543,22 +527,13 @@ object Dedup {
       }
       x
     }
-    // String labels must order the way Spark's min/least orders StringType —
-    // UTF-8 binary — NOT java String.compareTo (UTF-16 code units): the two
-    // diverge for supplementary characters (surrogates sort before U+E000..
-    // U+FFFF in UTF-16 but after in UTF-8), and the fast path must pick the
-    // SAME canonical label the distributed path would.
-    def lt(x: Any, y: Any): Boolean = (x, y) match {
-      case (a: String, b: String) =>
-        org.apache.spark.unsafe.types.UTF8String.fromString(a)
-          .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(b)) < 0
-      case _ => x.asInstanceOf[Comparable[Any]].compareTo(y) < 0
-    }
+    // labels order the way Spark's min/least does, so the fast path picks
+    // the SAME canonical label the distributed path would
     rows.foreach { r =>
       val ra = find(r.get(0))
       val rb = find(r.get(1))
       if (ra != rb) {
-        if (lt(ra, rb)) parent.put(rb, ra) else parent.put(ra, rb)
+        if (Graphs.idOrder.lt(ra, rb)) parent.put(rb, ra) else parent.put(ra, rb)
       }
     }
     val nodes = parent.keySet().toArray
@@ -720,7 +695,7 @@ object Dedup {
    * they travel in the meta table and are never re-specified here).
    *
    * Scale shape: the batch's shingle sets are materialized ONCE (a
-   * tracked [[Caches.checkpoint]], released by [[unpersistAll]]) and both
+   * [[Caches.trackCheckpoint]], released by [[unpersistAll]]) and both
    * appends read that checkpoint. A cached frame would not do: a plain
    * rename-mode append into the index refreshes every cached plan that
    * reads it — [[dedupeAgainstLshIndex]]'s survivors read both segment

@@ -1,8 +1,12 @@
 package graft.ext
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.mutable.{ArrayBuffer, LinkedHashMap}
+
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /**
  * Edge-list graph analytics. The crawl-curation use case: host-graph
@@ -45,13 +49,13 @@ object Graphs {
    * per-round job is skipped entirely). Embedding them as literals
    * instead of broadcast one-row frames costs per-round broadcast
    * exchanges measured at ~3× the whole round's useful work on small
-   * graphs. Ranks are lineage-truncated every round (localCheckpoint, or
-   * a durable checkpoint when the session configures a checkpoint dir —
-   * the same toggle as [[Dedup.connectedComponents]]): each round
-   * references the previous ranks again, so an untruncated plan doubles
-   * per round and Catalyst analysis goes exponential. The transition
-   * matrix, node spine, and dangling set materialize ONCE
-   * ([[Caches]]-tracked, released by `unpersistAll`).
+   * graphs. Rounds run through the [[Caches.iterate]] round loop: ranks
+   * are checkpointed every round (local, or durable when the session
+   * configures a checkpoint dir) — each round references the previous
+   * ranks again, so an untruncated plan doubles per round and Catalyst
+   * analysis goes exponential — and the dead round is released as the
+   * next materializes. The transition matrix, node spine, and dangling set
+   * materialize ONCE ([[Caches]]-tracked, released by `unpersistAll`).
    *
    * Edges with NULL endpoints or non-positive weight are dropped;
    * parallel edges merge additively (their weights sum before
@@ -68,47 +72,8 @@ object Graphs {
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
       iterations: Int = 20, damping: Double = 0.85,
       weightCol: Option[String] = None,
-      localEdgeLimit: Long = 1000000L): DataFrame = {
-    require(iterations >= 0, s"iterations must be non-negative: $iterations")
-    require(damping >= 0.0 && damping <= 1.0, s"damping out of [0,1]: $damping")
-    val trans = transitions(edges, srcCol, dstCol, weightCol)
-    // small-graph fast path (the [[Dedup.connectedComponents]] gate, same
-    // rationale): when the MERGED edge list fits driver memory, 10–20
-    // distributed rounds of checkpoint + broadcast machinery cost ~5× the
-    // arithmetic they schedule (measured 7.9 s vs 1.6 s on the 25-edge
-    // gate graph). The count runs over the already-cached `trans`, and the
-    // node spine / dangling set derive locally from the collected edges
-    // (every node appears in `trans` — dropped-edge endpoints are not
-    // nodes). Above the gate — real host graphs — the distributed loop
-    // below runs unchanged. `localEdgeLimit = 0` forces it (the spec pins
-    // both paths to the same ranks).
-    if (trans.count() <= localEdgeLimit)
-      return localPageRank(trans, iterations, damping)
-    val nodes = nodeSpine(trans)
-    // nodes without out-edges: their rank teleports uniformly each round
-    val dangling = Caches.track(
-      nodes.join(trans.select(col("__src").as("node")), Seq("node"), "left_anti"))
-    val n: Long = nodes.count() // ONE driver scalar: the node count
-    val hasDangling = !dangling.isEmpty
-    var ranks = Caches.checkpoint(nodes.select(col("node"), lit(1.0 / n).as("rank")))
-    for (_ <- 1 to iterations) {
-      val dm: Double =
-        if (!hasDangling) 0.0
-        else ranks.join(dangling, Seq("node"), "left_semi")
-          .agg(coalesce(sum("rank"), lit(0.0))).head().getDouble(0)
-      val contrib = ranks.join(trans, col("node") === col("__src"))
-        .groupBy(col("__dst").as("node"))
-        .agg(sum(col("rank") * col("__p")).as("__c"))
-      val next = Caches.checkpoint(nodes.join(contrib, Seq("node"), "left_outer")
-        .select(col("node"),
-          (lit((1.0 - damping) / n) +
-            lit(damping) * (coalesce(col("__c"), lit(0.0)) + lit(dm / n)))
-            .as("rank")))
-      Caches.releaseCheckpoint(ranks) // the round before is dead the moment
-      ranks = next                    // `next` materialized above
-    }
-    Caches.registerCheckpoint(ranks) // the survivor releases with unpersistAll
-  }
+      localEdgeLimit: Long = 1000000L): DataFrame =
+    rankLoop(edges, srcCol, dstCol, None, iterations, damping, weightCol, localEdgeLimit)
 
   /**
    * TrustRank (Gyöngyi, Garcia-Molina & Pedersen 2004): PageRank with the
@@ -133,33 +98,61 @@ object Graphs {
       seeds: DataFrame, seedCol: String, iterations: Int = 20,
       damping: Double = 0.85, weightCol: Option[String] = None,
       localEdgeLimit: Long = 1000000L): DataFrame = {
-    require(iterations >= 0, s"iterations must be non-negative: $iterations")
-    require(damping >= 0.0 && damping <= 1.0, s"damping out of [0,1]: $damping")
     val seedSet = Caches.track(seeds.select(col(seedCol).as("node"))
       .filter(col("node").isNotNull).distinct())
+    rankLoop(edges, srcCol, dstCol, Some(seedSet), iterations, damping, weightCol, localEdgeLimit)
+  }
+
+  /** The one rank loop of [[pageRank]] (`seeds` None: uniform teleport)
+    * and [[trustRank]] (teleport onto the seed nodes in the graph). They
+    * differ only in `share(m)`, the part of a mass `m` that teleports to a
+    * node: `m/n` uniform — a division, as the local loop spells it;
+    * multiplying by `1/n` instead differs in ulps and the gate hashes ride
+    * on parity — or `m·tp(v)` seeded. */
+  private def rankLoop(edges: DataFrame, srcCol: String, dstCol: String,
+      seeds: Option[DataFrame], iterations: Int, damping: Double,
+      weightCol: Option[String], localEdgeLimit: Long): DataFrame = {
+    require(iterations >= 0, s"iterations must be non-negative: $iterations")
+    require(damping >= 0.0 && damping <= 1.0, s"damping out of [0,1]: $damping")
     val trans = transitions(edges, srcCol, dstCol, weightCol)
+    // small-graph fast path (the [[Dedup.connectedComponents]] gate, same
+    // rationale): when the MERGED edge list fits driver memory, 10–20
+    // distributed rounds of checkpoint + broadcast machinery cost ~5× the
+    // arithmetic they schedule (measured 7.9 s vs 1.6 s on the 25-edge
+    // gate graph). The count runs over the already-cached `trans`, and the
+    // node spine / dangling set derive locally from the collected edges
+    // (every node appears in `trans` — dropped-edge endpoints are not
+    // nodes). Above the gate — real host graphs — the distributed loop
+    // below runs unchanged. `localEdgeLimit = 0` forces it (the spec pins
+    // both paths to the same ranks).
     if (trans.count() <= localEdgeLimit) {
       // collect only seeds ∩ graph BEFORE the driver hop: the graph being
       // small says nothing about the seed LIST's size (a million-host trust
       // file against a toy graph must not land on the driver)
-      val members = nodeSpine(trans)
-      val localSeeds = seedSet.join(members, Seq("node"), "left_semi")
-        .collect().map(_.get(0)).toSet
-      return localRankLoop(trans, iterations, damping, Some(localSeeds))
+      val localSeeds = seeds.map(_.join(nodeSpine(trans), Seq("node"), "left_semi")
+        .collect().map(_.get(0)).toSet)
+      return localRanks(trans, iterations, damping, localSeeds)
     }
     val nodes = nodeSpine(trans)
+    // nodes without out-edges: their rank teleports each round
     val dangling = Caches.track(
       nodes.join(trans.select(col("__src").as("node")), Seq("node"), "left_anti"))
-    val sN: Long = nodes.join(seedSet, Seq("node"), "left_semi").count()
-    require(sN > 0, "trustRank: no seed is a node of the graph — nothing to teleport to")
-    // the teleport column rides the cached spine: 1/|S∩V| on seeds, 0 off
-    val spine = Caches.track(nodes
-      .join(seedSet.select(col("node"), lit(1).as("__isSeed")), Seq("node"), "left_outer")
-      .select(col("node"),
-        when(col("__isSeed").isNotNull, lit(1.0 / sN)).otherwise(lit(0.0)).as("__tp")))
+    val (spine, share) = seeds match {
+      case None =>
+        val n: Long = nodes.count() // ONE driver scalar: the node count
+        (nodes, (m: Double) => lit(m / n))
+      case Some(seedSet) =>
+        val sN: Long = nodes.join(seedSet, Seq("node"), "left_semi").count()
+        require(sN > 0, "trustRank: no seed is a node of the graph — nothing to teleport to")
+        // the teleport column rides the cached spine: 1/|S∩V| on seeds, 0 off
+        (Caches.track(nodes
+          .join(seedSet.select(col("node"), lit(1).as("__isSeed")), Seq("node"), "left_outer")
+          .select(col("node"),
+            when(col("__isSeed").isNotNull, lit(1.0 / sN)).otherwise(lit(0.0)).as("__tp"))),
+          (m: Double) => lit(m) * col("__tp"))
+    }
     val hasDangling = !dangling.isEmpty
-    var ranks = Caches.checkpoint(spine.select(col("node"), col("__tp").as("rank")))
-    for (_ <- 1 to iterations) {
+    Caches.iterate(spine.select(col("node"), share(1.0).as("rank")), iterations) { (ranks, _) =>
       val dm: Double =
         if (!hasDangling) 0.0
         else ranks.join(dangling, Seq("node"), "left_semi")
@@ -167,15 +160,11 @@ object Graphs {
       val contrib = ranks.join(trans, col("node") === col("__src"))
         .groupBy(col("__dst").as("node"))
         .agg(sum(col("rank") * col("__p")).as("__c"))
-      val next = Caches.checkpoint(spine.join(contrib, Seq("node"), "left_outer")
+      Some(spine.join(contrib, Seq("node"), "left_outer")
         .select(col("node"),
-          (lit(1.0 - damping) * col("__tp") +
-            lit(damping) * (coalesce(col("__c"), lit(0.0)) + lit(dm) * col("__tp")))
-            .as("rank")))
-      Caches.releaseCheckpoint(ranks)
-      ranks = next
+          (share(1.0 - damping) +
+            lit(damping) * (coalesce(col("__c"), lit(0.0)) + share(dm))).as("rank")))
     }
-    Caches.registerCheckpoint(ranks)
   }
 
   /**
@@ -222,31 +211,22 @@ object Graphs {
       return localHits(merged, iterations)
     val nodes = nodeSpine(merged)
     val n: Long = nodes.count()
-    var hub = Caches.checkpoint(nodes.select(col("node"), lit(1.0 / n).as("hub")))
-    var auth = Caches.checkpoint(nodes.select(col("node"), lit(0.0).as("authority")))
-    for (_ <- 1 to iterations) {
-      val aRaw = hub.join(merged, col("node") === col("__src"))
-        .groupBy(col("__dst").as("node")).agg(sum(col("hub") * col("__w")).as("__c"))
-      val aSum = aRaw.agg(coalesce(sum("__c"), lit(0.0))).head().getDouble(0)
-      val aNext = Caches.checkpoint(nodes.join(aRaw, Seq("node"), "left_outer")
-        .select(col("node"),
-          (if (aSum == 0.0) lit(0.0)
-           else coalesce(col("__c"), lit(0.0)) / lit(aSum)).as("authority")))
-      Caches.releaseCheckpoint(auth)
-      auth = aNext
-      val hRaw = auth.join(merged, col("node") === col("__dst"))
-        .groupBy(col("__src").as("node")).agg(sum(col("authority") * col("__w")).as("__c"))
-      val hSum = hRaw.agg(coalesce(sum("__c"), lit(0.0))).head().getDouble(0)
-      val hNext = Caches.checkpoint(nodes.join(hRaw, Seq("node"), "left_outer")
-        .select(col("node"),
-          (if (hSum == 0.0) lit(0.0)
-           else coalesce(col("__c"), lit(0.0)) / lit(hSum)).as("hub")))
-      Caches.releaseCheckpoint(hub)
-      hub = hNext
+    // one half-round: each node's L1-normalized sum of `score` over its
+    // edges `from` → `to`, replacing column `out` of `base` (every node)
+    def propagate(base: DataFrame, score: String, from: String, to: String,
+        out: String): DataFrame = {
+      val raw = base.join(merged, col("node") === col(from))
+        .groupBy(col(to).as("node")).agg(sum(col(score) * col("__w")).as("__c"))
+      val total = raw.agg(coalesce(sum("__c"), lit(0.0))).head().getDouble(0)
+      val norm = if (total == 0.0) lit(0.0) else coalesce(col("__c"), lit(0.0)) / lit(total)
+      base.join(raw, Seq("node"), "left_outer")
+        .select(base.columns.toSeq.map(c => if (c == out) norm.as(out) else col(c)): _*)
     }
-    Caches.registerCheckpoint(hub)
-    Caches.registerCheckpoint(auth)
-    hub.join(auth, Seq("node"))
+    Caches.iterate(nodes.select(col("node"), lit(1.0 / n).as("hub"),
+        lit(0.0).as("authority")), iterations) { (scores, round) =>
+      val auth = round.scratch(propagate(scores, "hub", "__src", "__dst", "authority"))
+      Some(propagate(auth, "authority", "__dst", "__src", "hub"))
+    }
   }
 
   /**
@@ -292,11 +272,7 @@ object Graphs {
    * Returns `(node, community)`; `community` keeps the node-id type.
    *
    * Small-graph fast path below `localEdgeLimit` UNDIRECTED edges (the
-   * [[pageRank]] gate, same rationale); tie-breaks there compare labels
-   * via their natural `Comparable` order, which for strings is UTF-16
-   * code-unit order — identical to the engines' UTF-8 binary order on
-   * BMP text, divergent only for supplementary-plane ids (same caveat
-   * class as [[localPageRank]]'s sorted collect).
+   * [[pageRank]] gate, same rationale).
    */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
       iterations: Int = 5, weightCol: Option[String] = None,
@@ -315,68 +291,42 @@ object Graphs {
       return localLabelPropagation(und, iterations)
     // every node has ≥1 undirected edge (dropped-edge endpoints are not
     // nodes), so the per-round argmax already covers the whole spine
-    var labels = Caches.checkpoint(und.select(col("node")).distinct()
-      .select(col("node"), col("node").as("__label")))
-    for (_ <- 1 to iterations) {
+    Caches.iterate(und.select(col("node")).distinct()
+        .select(col("node"), col("node").as("__label")), iterations) { (labels, _) =>
       val votes = und.join(labels.select(col("node").as("__ln"), col("__label")),
           col("__nbr") === col("__ln"))
         .groupBy(col("node"), col("__label")).agg(sum("__w").as("__wsum"))
       val pick = Window.partitionBy("node")
         .orderBy(col("__wsum").desc, col("__label").asc)
-      val next = Caches.checkpoint(votes
+      Some(votes
         .withColumn("__rn", row_number().over(pick))
         .filter(col("__rn") === 1).select(col("node"), col("__label")))
-      Caches.releaseCheckpoint(labels)
-      labels = next
-    }
-    Caches.registerCheckpoint(labels)
-    labels.select(col("node"), col("__label").as("community"))
+    }.select(col("node"), col("__label").as("community"))
   }
 
   /** Driver-side LPA loop (the small-graph fast path of
     * [[labelPropagation]]): same synchronous update and max-weight /
-    * min-label tie-break, edges iterated in sorted order so the
-    * per-label sums never depend on collect order. */
-  private def localLabelPropagation(und: DataFrame, iterations: Int): DataFrame = {
-    import org.apache.spark.sql.Row
-    val spark = und.sparkSession
-    val idType = und.schema("node").dataType
-    val outSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("node", idType),
-      org.apache.spark.sql.types.StructField("community", idType)))
-    val collected = und.collect()
-    val nodeArr: Array[Any] = collected.map(_.get(0)).distinct.sortBy(_.toString)
-    if (nodeArr.isEmpty)
-      return spark.createDataFrame(new java.util.ArrayList[Row](), outSchema)
-    val idx = nodeArr.zipWithIndex.toMap
-    val edges = collected
-      .map(r => (idx(r.get(0)), idx(r.get(1)), r.getDouble(2)))
-      .sortBy(e => (e._1, e._2))
-    @inline def labelLt(a: Any, b: Any): Boolean =
-      a.asInstanceOf[Comparable[Any]].compareTo(b) < 0
-    var labels: Array[Any] = nodeArr.clone()
-    for (_ <- 1 to iterations) {
-      val votes = Array.fill(nodeArr.length)(
-        scala.collection.mutable.LinkedHashMap.empty[Any, Double])
-      edges.foreach { case (v, nbr, w) =>
-        val m = votes(v)
-        m.update(labels(nbr), m.getOrElse(labels(nbr), 0.0) + w)
+    * min-label tie-break in Spark's id order, edges iterated in sorted
+    * order so the per-label sums never depend on collect order. */
+  private def localLabelPropagation(und: DataFrame, iterations: Int): DataFrame =
+    onDriver(und, StructField("community", und.schema("node").dataType)) { g =>
+      var labels: Array[Any] = g.nodes.clone()
+      for (_ <- 1 to iterations) {
+        val votes = Array.fill(g.nodes.length)(LinkedHashMap.empty[Any, Double])
+        g.edges.foreach { case (v, nbr, w) =>
+          val m = votes(v)
+          m.update(labels(nbr), m.getOrElse(labels(nbr), 0.0) + w)
+        }
+        labels = Array.tabulate(g.nodes.length) { v =>
+          // max weight, then min label — votes is never empty (≥1 edge/node)
+          votes(v).reduceLeft { (a, b) =>
+            if (b._2 > a._2 || (b._2 == a._2 && idOrder.lt(b._1, a._1))) b else a
+          }._1
+        }
       }
-      labels = Array.tabulate(nodeArr.length) { v =>
-        // max weight, then min label — votes is never empty (≥1 edge/node)
-        votes(v).reduceLeft { (a, b) =>
-          if (b._2 > a._2 || (b._2 == a._2 && labelLt(b._1, a._1))) b else a
-        }._1
-      }
+      g.nodes.indices.map(i => Row(g.nodes(i), labels(i)))
     }
-    val rows: java.util.List[Row] = java.util.Arrays.asList(
-      nodeArr.indices.map(i => Row(nodeArr(i), labels(i))): _*)
-    spark.createDataFrame(rows, outSchema)
-  }
 
-  /** Shared edge hygiene: NULL endpoints and non-positive weights dropped,
-    * endpoint types required to match, the cleaned frame cached (an
-    * expensive upstream edge derivation computes once, not per consumer). */
   /**
    * Per-node triangle participation counts over an undirected simple graph
    * — the local clustering signal behind link-farm/spam-cluster priors
@@ -411,19 +361,12 @@ object Graphs {
    */
   def triangleCounts(edges: DataFrame, srcCol: String, dstCol: String,
       localEdgeLimit: Long = 1000000L): DataFrame = {
-    val e0 = cleanedEdges(edges, srcCol, dstCol, None)
-      .filter(col("__src") =!= col("__dst"))
     // cached: the canonical edge set feeds the degree pass, the orientation
     // attach, and (reoriented) the closure probe — without it the caller's
     // possibly-expensive edge derivation would re-run three times
-    val und = Caches.track(e0.select(least(col("__src"), col("__dst")).as("a"),
-      greatest(col("__src"), col("__dst")).as("b")).distinct())
+    val und = Caches.track(simpleEdges(edges, srcCol, dstCol))
     if (und.count() <= localEdgeLimit) return localTriangles(und)
-    val deg = Caches.track(und.select(col("a").as("node")).unionAll(und.select(col("b")))
-      .groupBy("node").agg(count(lit(1)).as("dg")))
-    val withDeg = und
-      .join(deg.select(col("node").as("a"), col("dg").as("da")), "a")
-      .join(deg.select(col("node").as("b"), col("dg").as("db")), "b")
+    val withDeg = withDegrees(und, Caches.track(degrees(und)), "a", "b")
     val aFirst = col("da") < col("db") || (col("da") === col("db") && col("a") < col("b"))
     // oriented edge u→v with v's (deg, id) kept for the wedge total order
     // cached: referenced three times (both wedge sides + the closure probe)
@@ -474,43 +417,25 @@ object Graphs {
       val localSeeds = inGraph.collect().map(_.get(0)).toSet
       return localDistances(merged, localSeeds, rounds)
     }
-    var dist = Caches.checkpoint(inGraph.select(col("node"), lit(0).as("dist")))
-    for (_ <- 1 to rounds) {
+    Caches.iterate(inGraph.select(col("node"), lit(0).as("dist")), rounds) { (dist, _) =>
       val step = dist.join(merged, col("node") === col("__src"))
         .select(col("__dst").as("node"), (col("dist") + 1).as("dist"))
-      dist = Caches.checkpoint(dist.unionAll(step).groupBy("node").agg(min("dist").as("dist")))
+      Some(dist.unionAll(step).groupBy("node").agg(min("dist").as("dist")))
     }
-    dist
   }
 
-  /** Driver-side BFS for [[seededDistances]] under `localEdgeLimit`. */
+  /** Driver-side BFS for [[seededDistances]] under `localEdgeLimit`: in
+    * round `r`, every edge out of a node first reached in round `r − 1`
+    * reaches its unreached target. */
   private def localDistances(merged: DataFrame, seeds: Set[Any],
-      rounds: Int): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
-    val spark = merged.sparkSession
-    val outSchema = StructType(Seq(
-      StructField("node", merged.schema("__src").dataType),
-      StructField("dist", IntegerType, nullable = false)))
-    val adj = merged.collect().groupBy(_.get(0))
-      .view.mapValues(_.map(_.get(1))).toMap
-    val dist = scala.collection.mutable.Map.empty[Any, Int]
-    seeds.foreach(s => dist(s) = 0)
-    var frontier: Set[Any] = seeds
-    var r = 1
-    while (r <= rounds && frontier.nonEmpty) {
-      val next = for {
-        u <- frontier; v <- adj.getOrElse(u, Array.empty[Any])
-        if !dist.contains(v)
-      } yield v
-      next.foreach(v => dist(v) = r)
-      frontier = next
-      r += 1
+      rounds: Int): DataFrame =
+    onDriver(merged, StructField("dist", IntegerType, nullable = false)) { g =>
+      val dist = Array.fill(g.nodes.length)(-1)
+      seeds.foreach(s => dist(g.index(s)) = 0)
+      for (r <- 1 to rounds; (s, d, _) <- g.edges if dist(s) == r - 1 && dist(d) < 0)
+        dist(d) = r
+      g.nodes.indices.filter(dist(_) >= 0).map(i => Row(g.nodes(i), dist(i)))
     }
-    val rows: java.util.List[Row] = java.util.Arrays.asList(
-      dist.toSeq.map { case (n, d) => Row(n, d) }: _*)
-    spark.createDataFrame(rows, outSchema)
-  }
 
   /**
    * Common-neighbor link prediction over an undirected simple graph: for
@@ -538,10 +463,7 @@ object Graphs {
   def linkPrediction(edges: DataFrame, srcCol: String, dstCol: String,
       minCommon: Int = 2): DataFrame = {
     require(minCommon >= 1, s"minCommon must be >= 1: $minCommon")
-    val e0 = cleanedEdges(edges, srcCol, dstCol, None)
-      .filter(col("__src") =!= col("__dst"))
-    val und = Caches.track(e0.select(least(col("__src"), col("__dst")).as("a"),
-      greatest(col("__src"), col("__dst")).as("b")).distinct())
+    val und = Caches.track(simpleEdges(edges, srcCol, dstCol))
     val adj = und.select(col("a").as("x"), col("b").as("y"))
       .unionAll(und.select(col("b"), col("a")))
     val cn = adj.select(col("x"), col("y").as("v"))
@@ -550,11 +472,7 @@ object Graphs {
       .groupBy("v", "w").agg(count(lit(1)).as("cn"))
       .filter(col("cn") >= minCommon)
     val cand = cn.join(und, cn("v") === und("a") && cn("w") === und("b"), "left_anti")
-    val deg = und.select(col("a").as("node")).unionAll(und.select(col("b")))
-      .groupBy("node").agg(count(lit(1)).as("dg"))
-    cand
-      .join(deg.select(col("node").as("v"), col("dg").as("dv")), "v")
-      .join(deg.select(col("node").as("w"), col("dg").as("dw")), "w")
+    withDegrees(cand, degrees(und), "v", "w")
       .select(col("v").as("node_a"), col("w").as("node_b"), col("cn"),
         (col("cn").cast("double") / (col("dv") + col("dw") - col("cn"))).as("jaccard"))
   }
@@ -584,16 +502,9 @@ object Graphs {
    */
   def degreeAssortativity(edges: DataFrame, srcCol: String,
       dstCol: String): DataFrame = {
-    val e0 = cleanedEdges(edges, srcCol, dstCol, None)
-      .filter(col("__src") =!= col("__dst"))
-    val und = Caches.track(e0.select(least(col("__src"), col("__dst")).as("a"),
-      greatest(col("__src"), col("__dst")).as("b")).distinct())
-    val deg = und.select(col("a").as("node")).unionAll(und.select(col("b")))
-      .groupBy("node").agg(count(lit(1)).as("dg"))
+    val und = Caches.track(simpleEdges(edges, srcCol, dstCol))
     val dec = "decimal(38,0)"
-    val sums = und
-      .join(deg.select(col("node").as("a"), col("dg").as("da")), "a")
-      .join(deg.select(col("node").as("b"), col("dg").as("db")), "b")
+    val sums = withDegrees(und, degrees(und), "a", "b")
       .agg((count(lit(1)) * 2).cast(dec).as("__m2"),
         sum((col("da") + col("db")).cast(dec)).as("__sj"),
         sum(lit(2).cast(dec) * col("da") * col("db")).as("__sjk"),
@@ -629,23 +540,13 @@ object Graphs {
       rounds: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
     require(rounds >= 1 && rounds <= 64, s"rounds must be in [1,64]: $rounds")
-    val e0 = cleanedEdges(edges, srcCol, dstCol, None)
-      .filter(col("__src") =!= col("__dst"))
-    var cur = Caches.checkpoint(e0.select(least(col("__src"), col("__dst")).as("a"),
-      greatest(col("__src"), col("__dst")).as("b")).distinct())
-    def degrees(e: DataFrame): DataFrame =
-      e.select(col("a").as("node")).unionAll(e.select(col("b")))
-        .groupBy("node").agg(count(lit(1)).as("dg"))
-    for (_ <- 1 to rounds) {
+    val core = Caches.iterate(simpleEdges(edges, srcCol, dstCol), rounds) { (cur, _) =>
       val keep = degrees(cur).filter(col("dg") >= k).select("node")
-      val next = Caches.checkpoint(cur
+      Some(cur
         .join(keep.withColumnRenamed("node", "a"), Seq("a"), "left_semi")
         .join(keep.withColumnRenamed("node", "b"), Seq("b"), "left_semi"))
-      Caches.releaseCheckpoint(cur)
-      cur = next
     }
-    Caches.registerCheckpoint(cur)
-    degrees(cur).select(col("node"), col("dg").as("degree"))
+    degrees(core).select(col("node"), col("dg").as("degree"))
   }
 
   /** Small-graph fast path for [[triangleCounts]]: sorted-adjacency
@@ -653,43 +554,30 @@ object Graphs {
     * to dense indices, so no ordering is required of the id type —
     * triangle membership is orientation-free). O(Σ deg(u)·deg(v)) over
     * edges, bounded by the caller's `localEdgeLimit`. */
-  private def localTriangles(und: DataFrame): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val spark = und.sparkSession
-    val outSchema = StructType(Seq(
-      StructField("node", und.schema("a").dataType),
-      StructField("triangles", LongType, nullable = false)))
-    val collected = und.collect()
-    val nodeArr: Array[Any] = collected.flatMap(r => Seq(r.get(0), r.get(1))).distinct
-    if (nodeArr.isEmpty)
-      return spark.createDataFrame(new java.util.ArrayList[Row](), outSchema)
-    val idx = nodeArr.zipWithIndex.toMap
-    val adjB = Array.fill(nodeArr.length)(scala.collection.mutable.ArrayBuffer.empty[Int])
-    collected.foreach { r =>
-      val (i, j) = (idx(r.get(0)), idx(r.get(1)))
-      adjB(i) += j; adjB(j) += i
-    }
-    val adj = adjB.map(_.sorted.toArray)
-    val tri = new Array[Long](nodeArr.length)
-    // enumerate each triangle once as i < j < k (dense-index order): for
-    // every edge (i, j) walk the sorted intersection of their adjacencies
-    collected.foreach { r =>
-      val (a, b) = (idx(r.get(0)), idx(r.get(1)))
-      val (i, j) = if (a < b) (a, b) else (b, a)
-      var (p, q) = (0, 0)
-      val (ai, aj) = (adj(i), adj(j))
-      while (p < ai.length && q < aj.length) {
-        if (ai(p) < aj(q)) p += 1
-        else if (ai(p) > aj(q)) q += 1
-        else { val k = ai(p); if (k > j) { tri(i) += 1; tri(j) += 1; tri(k) += 1 }; p += 1; q += 1 }
+  private def localTriangles(und: DataFrame): DataFrame =
+    onDriver(und, StructField("triangles", LongType, nullable = false)) { g =>
+      val adjB = Array.fill(g.nodes.length)(ArrayBuffer.empty[Int])
+      g.edges.foreach { case (i, j, _) => adjB(i) += j; adjB(j) += i }
+      val adj = adjB.map(_.sorted.toArray)
+      val tri = new Array[Long](g.nodes.length)
+      // enumerate each triangle once as i < j < k (dense-index order): for
+      // every edge (i, j) walk the sorted intersection of their adjacencies
+      g.edges.foreach { case (a, b, _) =>
+        val (i, j) = if (a < b) (a, b) else (b, a)
+        var (p, q) = (0, 0)
+        val (ai, aj) = (adj(i), adj(j))
+        while (p < ai.length && q < aj.length) {
+          if (ai(p) < aj(q)) p += 1
+          else if (ai(p) > aj(q)) q += 1
+          else { val k = ai(p); if (k > j) { tri(i) += 1; tri(j) += 1; tri(k) += 1 }; p += 1; q += 1 }
+        }
       }
+      g.nodes.indices.filter(tri(_) > 0).map(i => Row(g.nodes(i), tri(i)))
     }
-    val rows: java.util.List[Row] = java.util.Arrays.asList(
-      nodeArr.indices.filter(tri(_) > 0).map(i => Row(nodeArr(i), tri(i))): _*)
-    spark.createDataFrame(rows, outSchema)
-  }
 
+  /** Shared edge hygiene: NULL endpoints and non-positive weights dropped,
+    * endpoint types required to match, the cleaned frame cached (an
+    * expensive upstream edge derivation computes once, not per consumer). */
   private def cleanedEdges(edges: DataFrame, srcCol: String, dstCol: String,
       weightCol: Option[String]): DataFrame = {
     val dtS = edges.schema(edges.schema.fieldIndex(srcCol)).dataType
@@ -730,106 +618,120 @@ object Graphs {
     trans.select(col("__src").as("node"))
       .union(trans.select(col("__dst").as("node"))).distinct())
 
-  /** Driver-side rank loop over a collected transition list (the
-    * small-graph fast path of [[pageRank]]). Same update formula, same
-    * IEEE double operations; edges iterate in a SORTED order so the
+  /** The canonical undirected simple edge set `(a, b)` with `a < b`:
+    * [[cleanedEdges]] minus self-loops, parallel and reverse edges
+    * collapsed — the graph [[triangleCounts]], [[linkPrediction]],
+    * [[degreeAssortativity]] and [[kCore]] read. */
+  private def simpleEdges(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
+    cleanedEdges(edges, srcCol, dstCol, None).filter(col("__src") =!= col("__dst"))
+      .select(least(col("__src"), col("__dst")).as("a"),
+        greatest(col("__src"), col("__dst")).as("b"))
+      .distinct()
+
+  /** Node degrees `(node, dg)` of a [[simpleEdges]] frame. */
+  private def degrees(und: DataFrame): DataFrame =
+    und.select(col("a").as("node")).unionAll(und.select(col("b")))
+      .groupBy("node").agg(count(lit(1)).as("dg"))
+
+  /** `df` with the degree of each endpoint column `e` attached as `d<e>`. */
+  private def withDegrees(df: DataFrame, deg: DataFrame, ends: String*): DataFrame =
+    ends.foldLeft(df)((f, e) => f.join(deg.select(col("node").as(e), col("dg").as("d" + e)), e))
+
+  /** Driver-side [[rankLoop]] (the small-graph fast path): same update,
+    * same IEEE double operations; edges iterate in a SORTED order so the
     * floating sums never depend on collect order (the distributed path's
     * partial-agg order can still differ by ulps — callers gating ranks
     * across engines round them, as the update's own compounding demands
     * anyway). */
-  private def localPageRank(trans: DataFrame,
-      iterations: Int, damping: Double): DataFrame =
-    localRankLoop(trans, iterations, damping, None)
-
-  /** The shared driver loop: uniform teleport when `seeds` is None —
-    * arithmetic kept EXACTLY as the distributed uniform loop spells it
-    * (`(1−d)/n` and `dm/n` as divisions; multiplying by a reciprocal
-    * instead differs in ulps and the gate hashes ride on parity) —
-    * seed-set teleport ([[trustRank]] semantics) when Some. */
-  private def localRankLoop(trans: DataFrame, iterations: Int,
-      damping: Double, seeds: Option[Set[Any]]): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
-    val spark = trans.sparkSession
-    val outSchema = StructType(Seq(
-      StructField("node", trans.schema("__src").dataType),
-      StructField("rank", DoubleType, nullable = false)))
-    val collected = trans.collect()
-    val nodeArr: Array[Any] =
-      collected.flatMap(r => Seq(r.get(0), r.get(1))).distinct
-        .sortBy(_.toString) // any consistent total order does
-    val n = nodeArr.length
-    if (n == 0)
-      return spark.createDataFrame(new java.util.ArrayList[Row](), outSchema)
-    val idx = nodeArr.zipWithIndex.toMap
-    val edges = collected
-      .map(r => (idx(r.get(0)), idx(r.get(1)), r.getDouble(2)))
-      .sortBy(e => (e._1, e._2))
-    val hasOut = edges.map(_._1).toSet
-    val danglingIdx = (0 until n).filterNot(hasOut).toArray
-    val tp: Array[Double] = seeds match {
-      case None => Array.fill(n)(1.0 / n) // uniform init doubles as teleport
-      case Some(s) =>
-        val inGraph = nodeArr.count(s.contains)
-        require(inGraph > 0,
-          "trustRank: no seed is a node of the graph — nothing to teleport to")
-        nodeArr.map(nd => if (s.contains(nd)) 1.0 / inGraph else 0.0)
-    }
-    var rank = tp.clone()
-    for (_ <- 1 to iterations) {
-      var dm = 0.0
-      danglingIdx.foreach(i => dm += rank(i))
-      val contrib = new Array[Double](n)
-      edges.foreach { case (s, d, p) => contrib(d) += rank(s) * p }
-      rank = seeds match {
-        case None => Array.tabulate(n)(i =>
-          (1.0 - damping) / n + damping * (contrib(i) + dm / n))
-        case Some(_) => Array.tabulate(n)(i =>
-          (1.0 - damping) * tp(i) + damping * (contrib(i) + dm * tp(i)))
+  private def localRanks(trans: DataFrame, iterations: Int, damping: Double,
+      seeds: Option[Set[Any]]): DataFrame =
+    onDriver(trans, StructField("rank", DoubleType, nullable = false)) { g =>
+      val n = g.nodes.length
+      val share: (Double, Int) => Double = seeds match {
+        case None => (m, _) => m / n
+        case Some(s) =>
+          val inGraph = g.nodes.count(s.contains)
+          require(inGraph > 0,
+            "trustRank: no seed is a node of the graph — nothing to teleport to")
+          val tp = g.nodes.map(nd => if (s.contains(nd)) 1.0 / inGraph else 0.0)
+          (m, i) => m * tp(i)
       }
+      val hasOut = g.edges.map(_._1).toSet
+      val danglingIdx = (0 until n).filterNot(hasOut).toArray
+      var rank = Array.tabulate(n)(share(1.0, _))
+      for (_ <- 1 to iterations) {
+        var dm = 0.0
+        danglingIdx.foreach(i => dm += rank(i))
+        val contrib = new Array[Double](n)
+        g.edges.foreach { case (s, d, p) => contrib(d) += rank(s) * p }
+        rank = Array.tabulate(n)(i =>
+          share(1.0 - damping, i) + damping * (contrib(i) + share(dm, i)))
+      }
+      g.nodes.indices.map(i => Row(g.nodes(i), rank(i)))
     }
-    val rows: java.util.List[Row] = java.util.Arrays.asList(
-      nodeArr.zip(rank).map { case (nd, r) => Row(nd, r) }: _*)
-    spark.createDataFrame(rows, outSchema)
-  }
 
   /** Driver-side HITS loop (the small-graph fast path of [[hits]]): same
     * update and L1 normalization, edges iterated in sorted order so the
     * floating sums never depend on collect order. */
-  private def localHits(merged: DataFrame, iterations: Int): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
-    val spark = merged.sparkSession
-    val outSchema = StructType(Seq(
-      StructField("node", merged.schema("__src").dataType),
-      StructField("hub", DoubleType, nullable = false),
-      StructField("authority", DoubleType, nullable = false)))
-    val collected = merged.collect()
-    val nodeArr: Array[Any] =
-      collected.flatMap(r => Seq(r.get(0), r.get(1))).distinct.sortBy(_.toString)
-    val n = nodeArr.length
-    if (n == 0)
-      return spark.createDataFrame(new java.util.ArrayList[Row](), outSchema)
-    val idx = nodeArr.zipWithIndex.toMap
-    val edges = collected
-      .map(r => (idx(r.get(0)), idx(r.get(1)), r.getDouble(2)))
-      .sortBy(e => (e._1, e._2))
-    var hub = Array.fill(n)(1.0 / n)
-    var auth = new Array[Double](n)
-    for (_ <- 1 to iterations) {
-      val aRaw = new Array[Double](n)
-      edges.foreach { case (s, d, w) => aRaw(d) += hub(s) * w }
-      var aSum = 0.0
-      aRaw.foreach(aSum += _)
-      auth = if (aSum == 0.0) new Array[Double](n) else aRaw.map(_ / aSum)
-      val hRaw = new Array[Double](n)
-      edges.foreach { case (s, d, w) => hRaw(s) += auth(d) * w }
-      var hSum = 0.0
-      hRaw.foreach(hSum += _)
-      hub = if (hSum == 0.0) new Array[Double](n) else hRaw.map(_ / hSum)
+  private def localHits(merged: DataFrame, iterations: Int): DataFrame =
+    onDriver(merged, StructField("hub", DoubleType, nullable = false),
+        StructField("authority", DoubleType, nullable = false)) { g =>
+      val n = g.nodes.length
+      // one half-round: L1-normalized sums of `score` along the edges,
+      // forward (src → dst) or backward
+      def propagate(score: Array[Double], forward: Boolean): Array[Double] = {
+        val raw = new Array[Double](n)
+        g.edges.foreach { case (s, d, w) =>
+          if (forward) raw(d) += score(s) * w else raw(s) += score(d) * w
+        }
+        var total = 0.0
+        raw.foreach(total += _)
+        if (total == 0.0) new Array[Double](n) else raw.map(_ / total)
+      }
+      var hub = Array.fill(n)(1.0 / n)
+      var auth = new Array[Double](n)
+      for (_ <- 1 to iterations) {
+        auth = propagate(hub, forward = true)
+        hub = propagate(auth, forward = false)
+      }
+      g.nodes.indices.map(i => Row(g.nodes(i), hub(i), auth(i)))
     }
-    val rows: java.util.List[Row] = java.util.Arrays.asList(
-      nodeArr.indices.map(i => Row(nodeArr(i), hub(i), auth(i))): _*)
-    spark.createDataFrame(rows, outSchema)
+
+  /** The id order Spark sorts by (`min`, `least`, `ORDER BY`): UTF-8 binary
+    * for strings — NOT `String.compareTo`'s UTF-16 code units, which sort
+    * supplementary characters (surrogates) before U+E000..U+FFFF — and the
+    * natural order otherwise. The driver-side fast paths order and
+    * tie-break ids by it, so they pick the labels the distributed paths do. */
+  private[ext] val idOrder: Ordering[Any] = new Ordering[Any] {
+    def compare(x: Any, y: Any): Int = (x, y) match {
+      case (a: String, b: String) => UTF8String.fromString(a).compareTo(UTF8String.fromString(b))
+      case _ => x.asInstanceOf[Comparable[Any]].compareTo(y)
+    }
+  }
+
+  /** An edge frame collected to the driver — the shared prologue of the
+    * small-graph fast paths: the node ids in [[idOrder]], and the edges as
+    * dense `(src, dst, weight)` index triples sorted by `(src, dst)`, so no
+    * loop over them depends on collect order. Columns 0 and 1 are the
+    * endpoints, column 2 (when present) the weight, else 1.0. */
+  private final class LocalGraph(frame: DataFrame) {
+    private val rows = frame.collect()
+    val nodes: Array[Any] = rows.flatMap(r => Seq(r.get(0), r.get(1))).distinct.sorted(idOrder)
+    val index: Map[Any, Int] = nodes.zipWithIndex.toMap
+    val edges: Array[(Int, Int, Double)] = rows
+      .map(r => (index(r.get(0)), index(r.get(1)), if (r.length > 2) r.getDouble(2) else 1.0))
+      .sortBy(e => (e._1, e._2))
+  }
+
+  /** Runs a small-graph fast path over `edges` collected as a
+    * [[LocalGraph]]; `body`'s rows become a frame of `node` (the edges' id
+    * type) plus `fields` — empty, without running `body`, when the graph
+    * is. */
+  private def onDriver(edges: DataFrame, fields: StructField*)(
+      body: LocalGraph => Seq[Row]): DataFrame = {
+    val g = new LocalGraph(edges)
+    val rows = if (g.nodes.isEmpty) Seq.empty[Row] else body(g)
+    edges.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
+      StructType(StructField("node", edges.schema(0).dataType) +: fields))
   }
 }

@@ -1486,8 +1486,8 @@ object TextAnalysis {
    * scan side applies the merges so far as a chain of codegen'd
    * [[org.apache.spark.sql.graftx.BpeMergeAdjacent]] rewrites. The chain
    * is collapsed into a materialized word-type frame every
-   * `checkpointEvery` rounds (lineage truncation, the
-   * [[graft.ext.Dedup.connectedComponents]] discipline) — so per-round
+   * `checkpointEvery` rounds (lineage truncation through the
+   * [[graft.ext.Caches.iterate]] round loop) — so per-round
    * work carries at most `checkpointEvery` extra narrow expression evals
    * per word type, and job count amortizes to `1 + 1/checkpointEvery` per
    * round instead of the naive 2 (measured ~2× wall-clock on small
@@ -1504,51 +1504,41 @@ object TextAnalysis {
     require(checkpointEvery > 0, s"checkpointEvery must be positive: $checkpointEvery")
     val spark = docs.sparkSession
     import org.apache.spark.sql.graftx.TextFunctions.bpe_merge_adjacent
-    // corpus scan happens exactly once: word types + frequencies, seeded as
-    // char symbols + terminal marker
-    var types = Caches.checkpoint(tokenCounts(docs, textCol, "__freq")
-      .select(concat(split(col("__w"), ""), array(lit("</w>"))).as("__syms"),
-        col("__freq")))
-    // merges not yet folded into `types`, applied lazily as an expression
-    // chain on every reference until the next collapse
-    var chain: Column = col("__syms")
-    var chainDepth = 0
-    def collapse(): Unit = if (chainDepth > 0) {
-      val prev = types
-      types = Caches.checkpoint(types.select(chain.as("__syms"), col("__freq")))
-      // NOT prev.unpersist: Dataset.unpersist on a localCheckpointed frame
-      // is a silent no-op (CacheManager path; the blocks are RDD-level) —
-      // release the checkpoint's RDD or every collapse leaks one
-      Caches.releaseCheckpoint(prev)
-      chain = col("__syms")
-      chainDepth = 0
-    }
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
-    var rank = 0
     var exhausted = false
-    while (rank < numMerges && !exhausted) {
-      // adjacent-pair histogram over word TYPES weighted by word frequency;
-      // zip of the two shifted slices forms the pairs without a HOF lambda
-      val best = types.select(chain.as("__syms"), col("__freq"))
-        .filter(size(col("__syms")) >= 2)
-        .select(explode(arrays_zip(
-          slice(col("__syms"), lit(1), size(col("__syms")) - 1),
-          slice(col("__syms"), lit(2), size(col("__syms")) - 1))).as("__p"), col("__freq"))
-        .groupBy(col("__p.0").as("__l"), col("__p.1").as("__r"))
-        .agg(sum(col("__freq")).as("__c"))
-        .orderBy(col("__c").desc, col("__l").asc, col("__r").asc)
-        .limit(1).collect()
-      if (best.isEmpty || best(0).getLong(2) < minPairCount) exhausted = true
-      else {
-        val (l, r, c) = (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
-        merges += ((rank, l, r, c))
-        chain = bpe_merge_adjacent(chain, lit(l), lit(r))
-        chainDepth += 1
-        if (chainDepth >= checkpointEvery) collapse()
-        rank += 1
+    // corpus scan happens exactly once: word types + frequencies, seeded as
+    // char symbols + terminal marker. One round = up to `checkpointEvery`
+    // merges, applied lazily as an expression chain over the round's word
+    // types and folded into the next round's; the last round's merges are
+    // never folded (nothing reads them).
+    Caches.iterate(tokenCounts(docs, textCol, "__freq")
+        .select(concat(split(col("__w"), ""), array(lit("</w>"))).as("__syms"),
+          col("__freq")), numMerges) { (types, _) =>
+      var chain: Column = col("__syms")
+      var chainDepth = 0
+      while (chainDepth < checkpointEvery && merges.length < numMerges && !exhausted) {
+        // adjacent-pair histogram over word TYPES weighted by word frequency;
+        // zip of the two shifted slices forms the pairs without a HOF lambda
+        val best = types.select(chain.as("__syms"), col("__freq"))
+          .filter(size(col("__syms")) >= 2)
+          .select(explode(arrays_zip(
+            slice(col("__syms"), lit(1), size(col("__syms")) - 1),
+            slice(col("__syms"), lit(2), size(col("__syms")) - 1))).as("__p"), col("__freq"))
+          .groupBy(col("__p.0").as("__l"), col("__p.1").as("__r"))
+          .agg(sum(col("__freq")).as("__c"))
+          .orderBy(col("__c").desc, col("__l").asc, col("__r").asc)
+          .limit(1).collect()
+        if (best.isEmpty || best(0).getLong(2) < minPairCount) exhausted = true
+        else {
+          val (l, r, c) = (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
+          merges += ((merges.length, l, r, c))
+          chain = bpe_merge_adjacent(chain, lit(l), lit(r))
+          chainDepth += 1
+        }
       }
+      if (exhausted || merges.length == numMerges) None
+      else Some(types.select(chain.as("__syms"), col("__freq")))
     }
-    Caches.releaseCheckpoint(types) // see collapse(): plain unpersist is a no-op here
     import spark.implicits._
     merges.toSeq.toDF("rank", "left", "right", "pair_count")
   }

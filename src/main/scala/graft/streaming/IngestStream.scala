@@ -58,7 +58,7 @@ object IngestStream {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         // survivors feed the sink append AND (under grow) the index append —
         // checkpointed so the LSH probe pipeline runs once per batch (durable
-        // under a session checkpoint dir, see Caches.checkpoint),
+        // under a session checkpoint dir, see Caches.trackCheckpoint),
         // tracked so the per-batch release below actually frees the blocks
         // (Dataset.unpersist on a checkpointed frame is a silent no-op)
         val survivors = graft.ext.Caches.trackCheckpoint(

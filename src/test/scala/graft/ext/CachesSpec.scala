@@ -42,4 +42,41 @@ class CachesSpec extends AnyFunSuite {
     Dedup.unpersistAll()
     assert(!sc.getPersistentRDDs.contains(rdd.id), "unpersistAll kept the local checkpoint")
   }
+
+  test("no iterative operator leaks a round: unpersistAll leaves nothing the call persisted") {
+    val sc = spark.sparkContext
+    // RDDs the operator persisted that survive its consumption + unpersistAll
+    def leftover(run: => Unit): Int = {
+      val before = sc.getPersistentRDDs.keySet
+      run
+      Dedup.unpersistAll()
+      (sc.getPersistentRDDs.keySet -- before).size
+    }
+    // c is dangling (the rank loops run their mass job); d reaches a, b, c
+    val edges = Seq(("a", "b", 3.0), ("a", "c", 1.0), ("b", "a", 1.0),
+      ("b", "c", 1.0), ("d", "a", 2.0)).toDF("s", "t", "w")
+    val seeds = Seq("d").toDF("id")
+    val chain = (0L until 64L).map(i => (i, i + 1)).toDF("a", "b")
+    val docs = Seq((1, "low lower lowest slow"), (2, "newer newest wider low"))
+      .toDF("id", "text")
+    val counts = Seq[(String, () => Unit)](
+      "pageRank" -> (() => Graphs.pageRank(edges, "s", "t", 5, weightCol = Some("w"),
+        localEdgeLimit = 0L).collect()),
+      "trustRank" -> (() => Graphs.trustRank(edges, "s", "t", seeds, "id", 5,
+        weightCol = Some("w"), localEdgeLimit = 0L).collect()),
+      "hits" -> (() => Graphs.hits(edges, "s", "t", 5, Some("w"), localEdgeLimit = 0L).collect()),
+      "labelPropagation" -> (() => Graphs.labelPropagation(edges, "s", "t", 3, Some("w"),
+        localEdgeLimit = 0L).collect()),
+      "seededDistances" -> (() => Graphs.seededDistances(edges, "s", "t", seeds, "id", 4,
+        localEdgeLimit = 0L).collect()),
+      "kCore" -> (() => Graphs.kCore(edges, "s", "t", k = 2, rounds = 3).collect()),
+      "connectedComponents" -> (() => Dedup.connectedComponents(chain, "a", "b",
+        localEdgeLimit = 0L).collect()),
+      "connectedComponents throwing" -> (() => intercept[IllegalStateException](
+        Dedup.connectedComponents(chain, "a", "b", maxIter = 1, localEdgeLimit = 0L))),
+      "bpeTrain" -> (() => TextAnalysis.bpeTrain(docs, "id", "text", 6,
+        checkpointEvery = 2).collect())
+    ).map { case (name, run) => name -> leftover(run()) }
+    assert(counts.forall(_._2 == 0), s"persisted RDDs left per operator: ${counts.mkString(", ")}")
+  }
 }

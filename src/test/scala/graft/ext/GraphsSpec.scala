@@ -292,6 +292,16 @@ class GraphsSpec extends AnyFunSuite {
     assert(runLpa(base, 3) == runLpa(both, 3))
   }
 
+  test("labelPropagation: ties break in Spark's UTF-8 binary id order on both paths") {
+    // x's two weight-1 neighbours tie. UTF-8 sorts U+E000 (EE 80 80) before
+    // U+1F600 (F0 9F 98 80); UTF-16 sorts the emoji's surrogates (D83D DE00)
+    // before E000
+    val (bmp, emoji) = ("\uE000", "\uD83D\uDE00")
+    val edges = Seq(("x", bmp, 1.0), ("x", emoji, 1.0))
+    for (limit <- Seq(1000000L, 0L))
+      assert(runLpa(edges, 1, localLimit = limit)("x") == bmp, s"localEdgeLimit = $limit")
+  }
+
   test("labelPropagation: edge hygiene drops NULLs and non-positive weights; invalid iterations error") {
     val dirty = Seq((null, "b", 1.0), ("a", null, 1.0), ("a", "b", 0.0),
       ("x", "y", 1.0)).toDF("s", "t", "w")
