@@ -44,7 +44,7 @@ object Clustering {
       s
     }
     val dots = org.apache.spark.sql.graftx.VectorFunctions.centroid_dots(v, cents)
-    zip_with(dots, array(cc.map(lit(_)): _*),
+    zip_with(dots, array(cc.toSeq.map(lit(_)): _*),
       (d, q) => round(q - d * lit(2.0), scale))
   }
 
@@ -98,7 +98,7 @@ object Clustering {
     means.foreach(r => cents(lidx(r.getLong(0)))(r.getInt(1)) = r.getDouble(2))
     base.withColumn("pidx", assignment(col("v"), cents, scale))
       .select(col("vec_id"), col("label"),
-        element_at(array(labels.map(lit(_)): _*), col("pidx") + 1).as("predicted"))
+        element_at(array(labels.toSeq.map(lit(_)): _*), col("pidx") + 1).as("predicted"))
   }
 
   /** The shared Lloyd fit: project + cache the `(vec_id, v)` frame, seed

@@ -62,7 +62,7 @@ object Events {
       acc = acc.join(typed.filter(col("__t") === steps(i)).select("user", "__e"),
           Seq("user"), "left_outer")
         .groupBy("user")
-        .agg(carried.head, carried.tail :+
+        .agg(carried.head, carried.tail.toSeq :+
           min(when(col("__e") > col(prev) && col("__e") <= col("__deadline"),
             col("__e"))).as(cur): _*)
     }

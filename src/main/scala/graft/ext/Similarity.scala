@@ -23,14 +23,6 @@ object Similarity {
     * `aggregate(zip_with(...))` equivalent is ~40× slower on pair scans. */
   def dot(a: Column, b: Column): Column = vec_dot(a, b)
 
-  /** Persist `df` into the per-thread tracked-cache registry that
-    * [[graft.ext.Dedup.unpersistAll]] releases — for callers composing
-    * SEVERAL pair searches into one result frame: a pair-search DataFrame
-    * referenced by more than one downstream branch (e.g. both sides of a
-    * contract check) otherwise re-executes its whole blocking+verify
-    * pipeline once per reference. */
-  def trackedPersist(df: DataFrame): DataFrame = Caches.track(df)
-
   def norm(v: Column): Column = sqrt(dot(v, v))
 
   /** Cosine similarity of two raw (unnormalized) double vectors. */

@@ -2,7 +2,7 @@ package graft
 package gates
 
 import graft.Queries._
-import graft.ext.{Dedup, Similarity}
+import graft.ext.{Caches, Dedup, Similarity}
 import graft.io.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -569,7 +569,7 @@ object DedupGates {
       val nearDup = s.createDataFrame(nearRows.asJava, pairSchema)
       // the OPERATOR under certification — the escalated LSH search runs
       // fresh on every invocation
-      val lsh = Similarity.trackedPersist(
+      val lsh = Caches.track(
         Similarity.cosinePairsLsh(e, "vec_id", "embedding", 0.45,
           pairBudget = 12000L))
       val fp = lsh.exceptAll(exact)
@@ -617,7 +617,7 @@ object DedupGates {
       // refusal remains the designed behavior). The routed LSH search is
       // the OPERATOR and runs fresh; it feeds two contract branches, so
       // it persists (this query is one pair search, not two)
-      val lsh = Similarity.trackedPersist(
+      val lsh = Caches.track(
         Similarity.cosinePairsLsh(e, "vec_id", "embedding", 0.45, autoSharpen = false))
       val fp = lsh.exceptAll(exact)
         .select(lit("false_positive").as("kind"), col("id_a"), col("id_b"))

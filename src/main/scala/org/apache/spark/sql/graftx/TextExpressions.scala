@@ -1,6 +1,10 @@
 // Lives under org.apache.spark.sql so it can see the private[sql] pieces a
 // native expression needs (AbstractDataType, classic.ExpressionUtils) — the
 // standard packaging for out-of-tree Catalyst expressions.
+//
+// Same one-kernel shape as VectorExpressions.scala: the arithmetic lives in
+// one static method on the companion, called by `nullSafeEval` and emitted
+// as one call by `doGenCode`.
 package org.apache.spark.sql.graftx
 
 import org.apache.spark.sql.Column
@@ -23,7 +27,8 @@ import org.apache.spark.unsafe.types.UTF8String
  * `[aa aa]`. A higher-order-function equivalent does not exist (the scan
  * is stateful — consuming a pair advances two positions), and a Scala UDF
  * here would box every symbol of every word type per merge round; this
- * expression stays inside whole-stage codegen as a tight UTF8String loop.
+ * expression stays inside whole-stage codegen, calling the tight
+ * UTF8String loop of [[BpeMergeAdjacent.merge]].
  */
 case class BpeMergeAdjacent(first: Expression, second: Expression, third: Expression)
     extends TernaryExpression with ExpectsInputTypes {
@@ -33,17 +38,26 @@ case class BpeMergeAdjacent(first: Expression, second: Expression, third: Expres
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "bpe_merge_adjacent"
 
-  override def nullSafeEval(arr: Any, l: Any, r: Any): Any = {
-    val xs = arr.asInstanceOf[ArrayData]
-    val lv = l.asInstanceOf[UTF8String]
-    val rv = r.asInstanceOf[UTF8String]
+  override def nullSafeEval(arr: Any, l: Any, r: Any): Any = BpeMergeAdjacent.merge(
+    arr.asInstanceOf[ArrayData], l.asInstanceOf[UTF8String], r.asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (arr, l, r) => s"${classOf[BpeMergeAdjacent].getName}.merge($arr, $l, $r)")
+
+  override protected def withNewChildrenInternal(
+      newFirst: Expression, newSecond: Expression, newThird: Expression): Expression =
+    copy(first = newFirst, second = newSecond, third = newThird)
+}
+
+object BpeMergeAdjacent {
+  def merge(xs: ArrayData, l: UTF8String, r: UTF8String): ArrayData = {
     val n = xs.numElements()
     val out = new java.util.ArrayList[UTF8String](n)
     var i = 0
     while (i < n) {
       val cur = xs.getUTF8String(i)
-      if (i + 1 < n && cur.equals(lv) && xs.getUTF8String(i + 1).equals(rv)) {
-        out.add(UTF8String.concat(lv, rv))
+      if (i + 1 < n && cur.equals(l) && xs.getUTF8String(i + 1).equals(r)) {
+        out.add(UTF8String.concat(l, r))
         i += 2
       } else {
         out.add(cur)
@@ -52,35 +66,6 @@ case class BpeMergeAdjacent(first: Expression, second: Expression, third: Expres
     }
     new GenericArrayData(out.toArray)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (arr, l, r) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val out = ctx.freshName("out")
-      val cur = ctx.freshName("cur")
-      val u = "org.apache.spark.unsafe.types.UTF8String"
-      s"""
-         |int $n = $arr.numElements();
-         |java.util.ArrayList<$u> $out = new java.util.ArrayList<$u>($n);
-         |int $i = 0;
-         |while ($i < $n) {
-         |  $u $cur = $arr.getUTF8String($i);
-         |  if ($i + 1 < $n && $cur.equals($l) && $arr.getUTF8String($i + 1).equals($r)) {
-         |    $out.add($u.concat($l, $r));
-         |    $i += 2;
-         |  } else {
-         |    $out.add($cur);
-         |    $i += 1;
-         |  }
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out.toArray(new $u[0]));
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression, newThird: Expression): Expression =
-    copy(first = newFirst, second = newSecond, third = newThird)
 }
 
 /**
@@ -90,12 +75,13 @@ case class BpeMergeAdjacent(first: Expression, second: Expression, third: Expres
  * same), so that `café` typed precomposed (U+00E9) and decomposed
  * (`e` + U+0301) hash identically. Spark has NO built-in for this; a Scala
  * UDF would pay serialization per row. The JDK's `java.text.Normalizer` is
- * the reference implementation surface, called directly from codegen'd
- * Java with two fast paths: pure-ASCII input (one byte per code point —
- * and ASCII is invariant under every normal form) returns the INPUT
- * UTF8String without even decoding to UTF-16, and already-normal
- * non-ASCII text returns it after one `isNormalized` check, so only rows
- * that actually change pay the normalize allocation.
+ * the reference implementation surface, called from the static
+ * [[UnicodeNormalize.normalize]] kernel with two fast paths: pure-ASCII
+ * input (one byte per code point — and ASCII is invariant under every
+ * normal form) returns the INPUT UTF8String without even decoding to
+ * UTF-16, and already-normal non-ASCII text returns it after one
+ * `isNormalized` check, so only rows that actually change pay the
+ * normalize allocation.
  *
  * `form` is a plan-time constant (validated at construction), not a child
  * expression, so codegen inlines the enum constant.
@@ -111,35 +97,12 @@ case class UnicodeNormalize(child: Expression, form: String)
 
   @transient private lazy val resolvedForm = java.text.Normalizer.Form.valueOf(form)
 
-  override def nullSafeEval(input: Any): Any = {
-    val u = input.asInstanceOf[UTF8String]
-    // pure-ASCII fast path with NO decode at all: one byte per code point
-    // means ASCII, and ASCII is invariant under all four normal forms —
-    // the corpus majority never leaves UTF8String
-    if (u.numBytes == u.numChars) u
-    else {
-      val s = u.toString
-      if (java.text.Normalizer.isNormalized(s, resolvedForm)) u
-      else UTF8String.fromString(java.text.Normalizer.normalize(s, resolvedForm))
-    }
-  }
+  override def nullSafeEval(input: Any): Any =
+    UnicodeNormalize.normalize(input.asInstanceOf[UTF8String], resolvedForm)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val s = ctx.freshName("s")
-      val f = s"java.text.Normalizer.Form.$form"
-      s"""
-         |if ($c.numBytes() == $c.numChars()) {
-         |  ${ev.value} = $c;
-         |} else {
-         |  java.lang.String $s = $c.toString();
-         |  ${ev.value} = java.text.Normalizer.isNormalized($s, $f)
-         |    ? $c
-         |    : org.apache.spark.unsafe.types.UTF8String.fromString(
-         |        java.text.Normalizer.normalize($s, $f));
-         |}
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, c =>
+      s"${classOf[UnicodeNormalize].getName}.normalize($c, java.text.Normalizer.Form.$form)")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -147,6 +110,17 @@ case class UnicodeNormalize(child: Expression, form: String)
 
 object UnicodeNormalize {
   val Forms: Set[String] = Set("NFC", "NFD", "NFKC", "NFKD")
+
+  def normalize(u: UTF8String, form: java.text.Normalizer.Form): UTF8String =
+    // pure-ASCII fast path with NO decode at all: one byte per code point
+    // means ASCII, and ASCII is invariant under all four normal forms —
+    // the corpus majority never leaves UTF8String
+    if (u.numBytes == u.numChars) u
+    else {
+      val s = u.toString
+      if (java.text.Normalizer.isNormalized(s, form)) u
+      else UTF8String.fromString(java.text.Normalizer.normalize(s, form))
+    }
 }
 
 /**
@@ -188,8 +162,7 @@ case class JaroWinkler(left: Expression, right: Expression)
     JaroWinkler.score(a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = org.apache.spark.sql.graftx.JaroWinkler.score($a, $b);")
+    defineCodeGen(ctx, ev, (a, b) => s"${classOf[JaroWinkler].getName}.score($a, $b)")
 
   override protected def withNewChildrenInternal(newLeft: Expression,
       newRight: Expression): Expression = copy(left = newLeft, right = newRight)

@@ -1,10 +1,20 @@
 // Lives under org.apache.spark.sql so it can see the private[sql] pieces a
 // native expression needs (AbstractDataType, classic.ExpressionUtils) — the
 // standard packaging for out-of-tree Catalyst expressions.
+//
+// One kernel per expression: each expression's arithmetic lives in ONE
+// static method on its companion object. `nullSafeEval` calls it and
+// `doGenCode` emits one call to it (`defineCodeGen` over
+// `classOf[X].getName`, plan constants such as seed tables and matrices
+// passed through `ctx.addReferenceObj`), so the interpreted and the
+// generated path cannot drift apart, and the JIT compiles each loop once
+// (the shape of Spark's own `levenshtein`). Kernels read `ArrayData` and
+// never assume one array class: Unsafe, Generic and Columnar arrays all
+// arrive. A primitive array result is `UnsafeArrayData.fromPrimitiveArray`.
 package org.apache.spark.sql.graftx
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.classic.ExpressionUtils
@@ -16,9 +26,10 @@ import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, Double
  * The built-in route (`aggregate(zip_with(a, b, _*_), 0d, _+_)`) allocates an
  * intermediate array and evaluates an interpreted lambda per element — on an
  * O(n²) similarity-pair scan that is the entire runtime. This expression
- * participates in whole-stage codegen: the generated Java is a tight primitive
- * loop over the two `ArrayData`s (no allocation, no virtual lambda calls),
- * which benchmarked ~40× faster on the embedding near-dup pair scan.
+ * participates in whole-stage codegen: the generated Java is one call to the
+ * static [[VectorDot.dot]] kernel, a tight primitive loop over the two
+ * `ArrayData`s (no allocation, no virtual lambda calls), which benchmarked
+ * ~40× faster on the embedding near-dup pair scan.
  *
  * Inputs are dense `array<double>` (cast `array<float>` embeddings first);
  * null elements are not expected (dense embeddings) and are treated as
@@ -31,9 +42,19 @@ case class VectorDot(left: Expression, right: Expression)
   override def dataType: DataType = DoubleType
   override def prettyName: String = "vector_dot"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any, b: Any): Any =
+    VectorDot.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) => s"${classOf[VectorDot].getName}.dot($a, $b)")
+
+  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+object VectorDot {
+  /** Σ xᵢ·yᵢ over the shorter length, summed in element order. */
+  def dot(x: ArrayData, y: ArrayData): Double = {
     val n = math.min(x.numElements(), y.numElements())
     var s = 0.0
     var i = 0
@@ -44,23 +65,15 @@ case class VectorDot(left: Expression, right: Expression)
     s
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $s = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $s += $a.getDouble($i) * $b.getDouble($i);
-         |}
-         |${ev.value} = $s;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
+  /** The same sum against a plan-constant matrix row (bit-identical to
+    * [[dot]] on that row as an array). */
+  def dot(row: Array[Double], v: ArrayData): Double = {
+    val n = math.min(row.length, v.numElements())
+    var s = 0.0
+    var i = 0
+    while (i < n) { s += row(i) * v.getDouble(i); i += 1 }
+    s
+  }
 }
 
 /**
@@ -78,9 +91,18 @@ case class SortedIntersectCount(left: Expression, right: Expression)
   override def dataType: DataType = IntegerType
   override def prettyName: String = "sorted_intersect_count"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any, b: Any): Any =
+    SortedIntersectCount.count(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) => s"${classOf[SortedIntersectCount].getName}.count($a, $b)")
+
+  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+object SortedIntersectCount {
+  def count(x: ArrayData, y: ArrayData): Int = {
     var i = 0
     var j = 0
     var c = 0
@@ -93,28 +115,6 @@ case class SortedIntersectCount(left: Expression, right: Expression)
     }
     c
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val c = ctx.freshName("c")
-      val xv = ctx.freshName("xv")
-      val yv = ctx.freshName("yv")
-      s"""
-         |int $i = 0; int $j = 0; int $c = 0;
-         |while ($i < $a.numElements() && $j < $b.numElements()) {
-         |  long $xv = $a.getLong($i);
-         |  long $yv = $b.getLong($j);
-         |  if ($xv == $yv) { $c++; $i++; $j++; }
-         |  else if ($xv < $yv) { $i++; } else { $j++; }
-         |}
-         |${ev.value} = $c;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }
 
 /**
@@ -129,8 +129,16 @@ case class SimHash64(child: Expression) extends UnaryExpression with ExpectsInpu
   override def dataType: DataType = LongType
   override def prettyName: String = "simhash64"
 
-  override def nullSafeEval(a: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any): Any = SimHash64.fingerprint(a.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, a => s"${classOf[SimHash64].getName}.fingerprint($a)")
+
+  override protected def withNewChildInternal(newChild: Expression): Expression = copy(child = newChild)
+}
+
+object SimHash64 {
+  def fingerprint(x: ArrayData): Long = {
     val votes = new Array[Int](64)
     var i = 0
     while (i < x.numElements()) {
@@ -150,31 +158,6 @@ case class SimHash64(child: Expression) extends UnaryExpression with ExpectsInpu
     }
     fp
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val votes = ctx.freshName("votes")
-      val i = ctx.freshName("i")
-      val b = ctx.freshName("b")
-      val h = ctx.freshName("h")
-      val fp = ctx.freshName("fp")
-      s"""
-         |int[] $votes = new int[64];
-         |for (int $i = 0; $i < $a.numElements(); $i++) {
-         |  long $h = $a.getLong($i);
-         |  for (int $b = 0; $b < 64; $b++) {
-         |    $votes[$b] += (((($h >>> $b) & 1L) == 1L) ? 1 : -1);
-         |  }
-         |}
-         |long $fp = 0L;
-         |for (int $b = 0; $b < 64; $b++) {
-         |  if ($votes[$b] > 0) $fp |= (1L << $b);
-         |}
-         |${ev.value} = $fp;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression = copy(child = newChild)
 }
 
 /**
@@ -182,7 +165,8 @@ case class SimHash64(child: Expression) extends UnaryExpression with ExpectsInpu
  * `numHashes` independent min-hashes, hash family `mix(h ^ seed_i)` with a
  * splitmix64-style finalizer (public-domain mixing constants). One per-row
  * pass replacing an explode + N-min-aggregate shuffle; the signature array
- * feeds LSH banding downstream.
+ * feeds LSH banding downstream. The seed table travels into generated code
+ * as one plan reference.
  */
 case class MinHashSignature(child: Expression, numHashes: Int)
     extends UnaryExpression with ExpectsInputTypes {
@@ -192,57 +176,15 @@ case class MinHashSignature(child: Expression, numHashes: Int)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "minhash_signature"
 
-  /** splitmix64 seeds, one per hash function (deterministic). */
-  private lazy val seeds: Array[Long] = {
-    val out = new Array[Long](numHashes)
-    var x = 0x9E3779B97F4A7C15L
-    var i = 0
-    while (i < numHashes) {
-      x += 0x9E3779B97F4A7C15L
-      out(i) = MinHashSignature.mix(x)
-      i += 1
-    }
-    out
-  }
+  private lazy val seeds: Array[Long] = MinHashSignature.seedTable(numHashes)
 
-  override def nullSafeEval(a: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val sig = Array.fill(numHashes)(Long.MaxValue)
-    var i = 0
-    while (i < x.numElements()) {
-      val h = x.getLong(i)
-      var k = 0
-      while (k < numHashes) {
-        val v = MinHashSignature.mix(h ^ seeds(k))
-        if (v < sig(k)) sig(k) = v
-        k += 1
-      }
-      i += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(sig)
-  }
+  override def nullSafeEval(a: Any): Any =
+    MinHashSignature.signature(a.asInstanceOf[ArrayData], seeds)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val seedsRef = ctx.addReferenceObj("seeds", seeds, "long[]")
-      val sig = ctx.freshName("sig")
-      val i = ctx.freshName("i")
-      val k = ctx.freshName("k")
-      val h = ctx.freshName("h")
-      val v = ctx.freshName("v")
-      s"""
-         |long[] $sig = new long[$numHashes];
-         |java.util.Arrays.fill($sig, Long.MAX_VALUE);
-         |for (int $i = 0; $i < $a.numElements(); $i++) {
-         |  long $h = $a.getLong($i);
-         |  for (int $k = 0; $k < $numHashes; $k++) {
-         |    long $v = org.apache.spark.sql.graftx.MinHashSignature.mix($h ^ $seedsRef[$k]);
-         |    if ($v < $sig[$k]) $sig[$k] = $v;
-         |  }
-         |}
-         |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray($sig);
-       """.stripMargin
-    })
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val seedsRef = ctx.addReferenceObj("seeds", seeds, "long[]")
+    defineCodeGen(ctx, ev, a => s"${classOf[MinHashSignature].getName}.signature($a, $seedsRef)")
+  }
 
   override protected def withNewChildInternal(newChild: Expression): Expression = copy(child = newChild)
 }
@@ -254,6 +196,36 @@ object MinHashSignature {
     z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
     z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
     z ^ (z >>> 31)
+  }
+
+  /** splitmix64 seeds, one per hash function (deterministic). */
+  def seedTable(numHashes: Int): Array[Long] = {
+    val out = new Array[Long](numHashes)
+    var x = 0x9E3779B97F4A7C15L
+    var i = 0
+    while (i < numHashes) {
+      x += 0x9E3779B97F4A7C15L
+      out(i) = mix(x)
+      i += 1
+    }
+    out
+  }
+
+  /** Per seed, the least `mix(h ^ seed)` over the element hashes. */
+  def signature(x: ArrayData, seeds: Array[Long]): ArrayData = {
+    val sig = Array.fill(seeds.length)(Long.MaxValue)
+    var i = 0
+    while (i < x.numElements()) {
+      val h = x.getLong(i)
+      var k = 0
+      while (k < seeds.length) {
+        val v = mix(h ^ seeds(k))
+        if (v < sig(k)) sig(k) = v
+        k += 1
+      }
+      i += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(sig)
   }
 }
 
@@ -287,8 +259,17 @@ case class VectorNormalize(child: Expression)
   private def isFloat: Boolean =
     child.dataType.asInstanceOf[ArrayType].elementType == FloatType
 
-  override def nullSafeEval(a: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any): Any = VectorNormalize.unit(a.asInstanceOf[ArrayData], isFloat)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, a => s"${classOf[VectorNormalize].getName}.unit($a, $isFloat)")
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object VectorNormalize {
+  def unit(x: ArrayData, isFloat: Boolean): ArrayData = {
     val n = x.numElements()
     val out = new Array[Double](n)
     var s = 0.0
@@ -304,36 +285,8 @@ case class VectorNormalize(child: Expression)
       var j = 0
       while (j < n) { out(j) /= norm; j += 1 }
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+    UnsafeArrayData.fromPrimitiveArray(out)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val n = ctx.freshName("n")
-      val out = ctx.freshName("out")
-      val s = ctx.freshName("s")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val norm = ctx.freshName("norm")
-      val read = if (isFloat) s"(double) $a.getFloat($i)" else s"$a.getDouble($i)"
-      s"""
-         |int $n = $a.numElements();
-         |double[] $out = new double[$n];
-         |double $s = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $out[$i] = $read;
-         |  $s += $out[$i] * $out[$i];
-         |}
-         |double $norm = java.lang.Math.sqrt($s);
-         |if ($norm > 0.0) {
-         |  for (int $j = 0; $j < $n; $j++) { $out[$j] /= $norm; }
-         |}
-         |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray($out);
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }
 
 /**
@@ -348,8 +301,8 @@ case class VectorNormalize(child: Expression)
  * nlist=16 × dim=1024 blows janino's 64 KB method limit, silently dropping
  * the WHOLE stage (the entire pair-scan dot-product loop included) to
  * interpreted eval. Here the matrix travels as ONE plan reference
- * (`double[][]`) and the generated code is a fixed ~10-line nested loop
- * regardless of `nlist × dim`.
+ * (`double[][]`) and the generated code is one kernel call regardless of
+ * `nlist × dim`.
  */
 case class CentroidSims(child: Expression, matrix: Array[Array[Double]], asAngles: Boolean)
     extends UnaryExpression with ExpectsInputTypes {
@@ -359,48 +312,28 @@ case class CentroidSims(child: Expression, matrix: Array[Array[Double]], asAngle
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def prettyName: String = if (asAngles) "centroid_angles" else "centroid_dots"
 
-  override def nullSafeEval(a: Any): Any = {
-    val v = a.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any): Any =
+    CentroidSims.sims(a.asInstanceOf[ArrayData], matrix, asAngles)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val m = ctx.addReferenceObj("centroids", matrix, "double[][]")
+    defineCodeGen(ctx, ev, a => s"${classOf[CentroidSims].getName}.sims($a, $m, $asAngles)")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression = copy(child = newChild)
+}
+
+object CentroidSims {
+  def sims(v: ArrayData, matrix: Array[Array[Double]], asAngles: Boolean): ArrayData = {
     val out = new Array[Double](matrix.length)
     var c = 0
     while (c < matrix.length) {
-      val row = matrix(c)
-      val n = math.min(row.length, v.numElements())
-      var s = 0.0
-      var i = 0
-      while (i < n) { s += row(i) * v.getDouble(i); i += 1 }
+      val s = VectorDot.dot(matrix(c), v)
       out(c) = if (asAngles) math.acos(math.max(-1.0, math.min(1.0, s))) else s
       c += 1
     }
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(out)
+    UnsafeArrayData.fromPrimitiveArray(out)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val m = ctx.addReferenceObj("centroids", matrix, "double[][]")
-      val out = ctx.freshName("out")
-      val c = ctx.freshName("c")
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      val row = ctx.freshName("row")
-      val store = if (asAngles)
-        s"$out[$c] = java.lang.Math.acos(java.lang.Math.max(-1.0, java.lang.Math.min(1.0, $s)));"
-      else s"$out[$c] = $s;"
-      s"""
-         |double[] $out = new double[${matrix.length}];
-         |for (int $c = 0; $c < ${matrix.length}; $c++) {
-         |  double[] $row = $m[$c];
-         |  int $n = java.lang.Math.min($row.length, $a.numElements());
-         |  double $s = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) { $s += $row[$i] * $a.getDouble($i); }
-         |  $store
-         |}
-         |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray($out);
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression = copy(child = newChild)
 }
 
 /**
@@ -416,7 +349,7 @@ case class CentroidSims(child: Expression, matrix: Array[Array[Double]], asAngle
  * surrounding-projection) Java and overflows janino's 64 KB method limit
  * at production widths (144 planes × dim ≥ 128), silently dropping the
  * whole band-projection stage to interpreted eval. Here the plane matrix
- * is ONE plan reference and the loop is fixed-size.
+ * is ONE plan reference and the generated code is one kernel call.
  *
  * Vectors colliding in a band collide under ANY key mixing (equal packed
  * signs ⇒ equal key), so the LSH recall contract is a function of the
@@ -435,58 +368,34 @@ case class SignBandKeys(child: Expression, planes: Array[Array[Double]],
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "sign_band_keys"
 
-  override def nullSafeEval(a: Any): Any = {
-    val v = a.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any): Any =
+    SignBandKeys.keys(a.asInstanceOf[ArrayData], planes, bands, rowsPerBand)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val m = ctx.addReferenceObj("planes", planes, "double[][]")
+    defineCodeGen(ctx, ev,
+      a => s"${classOf[SignBandKeys].getName}.keys($a, $m, $bands, $rowsPerBand)")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression = copy(child = newChild)
+}
+
+object SignBandKeys {
+  def keys(v: ArrayData, planes: Array[Array[Double]], bands: Int, rowsPerBand: Int): ArrayData = {
     val out = new Array[Long](bands)
     var b = 0
     while (b < bands) {
       var packed = 0L
       var j = 0
       while (j < rowsPerBand) {
-        val row = planes(b * rowsPerBand + j)
-        val n = math.min(row.length, v.numElements())
-        var s = 0.0
-        var i = 0
-        while (i < n) { s += row(i) * v.getDouble(i); i += 1 }
-        if (s >= 0) packed |= (1L << j)
+        if (VectorDot.dot(planes(b * rowsPerBand + j), v) >= 0) packed |= (1L << j)
         j += 1
       }
       out(b) = MinHashSignature.mix(packed ^ (b * 0x9E3779B97F4A7C15L))
       b += 1
     }
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(out)
+    UnsafeArrayData.fromPrimitiveArray(out)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val m = ctx.addReferenceObj("planes", planes, "double[][]")
-      val out = ctx.freshName("out")
-      val b = ctx.freshName("b")
-      val j = ctx.freshName("j")
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      val row = ctx.freshName("row")
-      val packed = ctx.freshName("packed")
-      s"""
-         |long[] $out = new long[$bands];
-         |for (int $b = 0; $b < $bands; $b++) {
-         |  long $packed = 0L;
-         |  for (int $j = 0; $j < $rowsPerBand; $j++) {
-         |    double[] $row = $m[$b * $rowsPerBand + $j];
-         |    int $n = java.lang.Math.min($row.length, $a.numElements());
-         |    double $s = 0.0;
-         |    for (int $i = 0; $i < $n; $i++) { $s += $row[$i] * $a.getDouble($i); }
-         |    if ($s >= 0) $packed |= (1L << $j);
-         |  }
-         |  $out[$b] = org.apache.spark.sql.graftx.MinHashSignature.mix(
-         |    $packed ^ ($b * 0x9E3779B97F4A7C15L));
-         |}
-         |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray($out);
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression = copy(child = newChild)
 }
 
 object VectorFunctions {

@@ -10,10 +10,16 @@ import org.scalatest.funsuite.AnyFunSuite
  * Every native expression must COMPILE under projection codegen — not just
  * produce correct results through the interpreted `nullSafeEval` fallback.
  * `GenerateUnsafeProjection.generate` throws if janino rejects the generated
- * Java (a wrong FQCN in `MinHashSignature.doGenCode` once compiled fine in
- * Scala but failed at janino time on every run, silently degrading to
- * interpreted eval), so each test pins compilability AND codegen ==
- * interpreted output.
+ * Java, so each test pins compilability AND codegen == interpreted output.
+ * A wrong FQCN inside a hand-written `doGenCode` string once compiled fine
+ * in Scala but failed at janino time on every run, silently degrading to
+ * interpreted eval; that hazard is gone by construction now that every
+ * `doGenCode` emits one call to its companion's kernel through
+ * `classOf[X].getName`, but a kernel signature janino cannot resolve would
+ * still fail only here. The last test runs every expression inside a real
+ * whole-stage-codegen plan against the same query run interpreted, over
+ * the array classes real plans pass (Columnar from parquet, Unsafe and
+ * Generic built in the same stage) and null rows.
  */
 class CodegenSpec extends AnyFunSuite {
 
@@ -212,5 +218,85 @@ class CodegenSpec extends AnyFunSuite {
     // NULL propagation
     assert(e.eval(row(null, u("x"))) == null)
     assert(e.eval(row(u("x"), null)) == null)
+  }
+
+  test("every native expression: whole-stage codegen == interpreted over parquet, same-stage and null arrays") {
+    import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+    import org.apache.spark.sql.execution.{ProjectExec, WholeStageCodegenExec}
+    import org.apache.spark.sql.functions._
+    import TextFunctions._
+    import VectorFunctions._
+    val spark = graft.TestSpark.spark
+    import spark.implicits._
+    val path = graft.TestSpark.tempDir("graftx-parity").resolve("in").toString
+    Seq(
+      (1L, Some(Seq(0.6, 0.8, 0.0)), Some(Seq(1.0, -2.0, 3.0)), Some(Seq(3.0f, 4.0f)),
+        Some(Seq(1L, 3L, 5L, 9L)), Some(Seq(2L, 3L, 9L)), Some(Seq("l", "o", "w", "</w>")),
+        Some("l"), Some("o")),
+      (2L, Some(Seq(-0.1, 0.2, -0.3)), Some(Seq(0.0, 0.0, 0.0)), Some(Seq(0.0f, 0.0f)),
+        Some(Seq(-7L, 15L, 240L)), Some(Seq(-7L, 240L)), Some(Seq("a", "a", "a")),
+        Some("cafe\u0301"), Some("caf\u00E9")),
+      (3L, Some(Seq.empty[Double]), Some(Seq(1.0)), Some(Seq.empty[Float]),
+        Some(Seq.empty[Long]), Some(Seq(4L)), Some(Seq.empty[String]), Some(""), Some("martha")),
+      (4L, Some(Seq(1.0, 1.0, 1.0)), None, None, Some(Seq(8L)), None, Some(Seq("x")), None,
+        Some("marhta")),
+      (5L, None, None, None, None, None, None, None, None)
+    ).toDF("id", "a", "b", "f", "h1", "h2", "syms", "s1", "s2").write.parquet(path)
+
+    val m = Array(Array(1.0, 0.0, 0.0), Array(0.6, 0.8, 0.0))
+    val planes = Array.tabulate(6, 3)((p, i) => ((p * 3 + i) % 5 - 2) / 2.0)
+    def kernels(tag: String, a: Column, b: Column, f: Column, h1: Column, h2: Column,
+        syms: Column, s1: Column, s2: Column): Seq[Column] = Seq(
+      vec_dot(a, b), vec_normalize(a), vec_normalize(f), centroid_dots(a, m),
+      centroid_angles(a, m), sign_band_keys(a, planes, 2, 3), sorted_intersect_count(h1, h2),
+      simhash64(h1), minhash_signature(h1, 16), bpe_merge_adjacent(syms, s1, s2),
+      unicode_normalize(s1, "NFC"), jaro_winkler(s1, s2)
+    ).zipWithIndex.map { case (c, i) => c.as(s"${tag}_$i") }
+    def in(c: String) = col(c)
+    // arrays as parquet hands them over, and arrays built in the same
+    // codegen stage (`array`; `when` keeps a null input row null)
+    def sameStage(c: String, elems: Column*) = when(col(c).isNotNull, array(elems: _*))
+    def direct(s: SparkSession): DataFrame = s.read.parquet(path).select(col("id") +:
+      (kernels("pq", in("a"), in("b"), in("f"), in("h1"), in("h2"), in("syms"), in("s1"), in("s2")) ++
+        kernels("built",
+          sameStage("a", size(col("a")).cast("double"), lit(-0.5), lit(0.25)),
+          sameStage("b", lit(2.0), size(col("b")).cast("double"), lit(-1.0)),
+          sameStage("f", size(col("f")).cast("float"), lit(1.5f)),
+          sameStage("h1", size(col("h1")).cast("long"), lit(100L)),
+          sameStage("h2", lit(-3L), size(col("h2")).cast("long")),
+          sameStage("syms", coalesce(col("s1"), lit("a")), coalesce(col("s2"), lit("b")), lit("a")),
+          col("s1"), col("s2"))): _*)
+    // arrays a higher-order function builds (GenericArrayData on both paths)
+    def lambdas(s: SparkSession): DataFrame = s.read.parquet(path).select(col("id") +:
+      kernels("hof", transform(col("a"), x => x * 2.0), transform(col("b"), x => x - 1.0),
+        transform(col("f"), x => x * 2.0f), transform(col("h1"), x => x + 1L),
+        transform(col("h2"), x => x + 1L), transform(col("syms"), x => upper(x)),
+        upper(col("s1")), upper(col("s2"))): _*)
+
+    val codegen = spark.newSession()
+    codegen.conf.set("spark.sql.codegen.wholeStage", "true")
+    codegen.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
+    codegen.conf.set("spark.sql.codegen.fallback", "false") // a janino failure fails the query
+    val interpreted = spark.newSession()
+    interpreted.conf.set("spark.sql.codegen.wholeStage", "false")
+    interpreted.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+
+    val staged = direct(codegen)
+    val inStage = staged.queryExecution.executedPlan.collect { case w: WholeStageCodegenExec =>
+      w.child.collect { case p: ProjectExec => p.projectList }.flatten
+    }.flatten.flatMap(_.collect {
+      case e if e.getClass.getPackage.getName == "org.apache.spark.sql.graftx" =>
+        e.getClass.getSimpleName
+    }).toSet
+    assert(inStage == Set("VectorDot", "VectorNormalize", "CentroidSims", "SignBandKeys",
+      "SortedIntersectCount", "SimHash64", "MinHashSignature", "BpeMergeAdjacent",
+      "UnicodeNormalize", "JaroWinkler"), staged.queryExecution.executedPlan)
+    for ((label, q) <- Seq("parquet/array" -> direct _, "transform" -> lambdas _)) {
+      val got = q(codegen).collect().toSeq.sortBy(_.getLong(0))
+      val want = q(interpreted).collect().toSeq.sortBy(_.getLong(0))
+      assert(got.size == 5 && got == want, s"$label: codegen $got != interpreted $want")
+      // a null input row yields null from every kernel
+      assert(got.last.toSeq.tail.forall(_ == null), s"$label: ${got.last}")
+    }
   }
 }
