@@ -352,15 +352,14 @@ object Dedup {
   /** Default SimHash token hash: `xxhash64` — the fast production choice. */
   val xxTokenHash: Column => Column = tk => xxhash64(tk)
 
-  /** Oracle-portable 60-bit token hash: first 15 hex chars of md5, parsed as
-    * an integer — computable bit-identically in DuckDB
-    * (`CAST('0x' || substr(md5(tok), 1, 15) AS BIGINT)`), which makes the
-    * whole SimHash pipeline hash-checkable against a SQL oracle. Bits 60–63
-    * are always 0 (the fingerprint has 60 effective bits); the pigeonhole
-    * banding guarantee is unaffected. ~3× slower than xxhash64 — use for
-    * verification, not production. */
-  val md5TokenHash: Column => Column = tk =>
-    conv(substring(md5(tk), 1, 15), 16, 10).cast("long")
+  /** Oracle-portable 60-bit token hash: [[Sampling.idHash]], the first 15
+    * hex chars of md5 parsed as an integer — computable bit-identically in
+    * DuckDB (`CAST('0x' || substr(md5(tok), 1, 15) AS BIGINT)`), which makes
+    * the whole SimHash pipeline hash-checkable against a SQL oracle. Bits
+    * 60–63 are always 0 (the fingerprint has 60 effective bits); the
+    * pigeonhole banding guarantee is unaffected. ~3× slower than xxhash64 —
+    * use for verification, not production. */
+  val md5TokenHash: Column => Column = Sampling.idHash
 
   /**
    * Connected components over an undirected duplicate-pair set: every node

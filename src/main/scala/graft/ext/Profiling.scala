@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /**
@@ -18,7 +18,7 @@ object Profiling {
     * doubled, so names containing dots, quotes, or backticks resolve as the
     * single column the existence check validated — never as a parsed path or
     * a malformed expression. */
-  private def exact(c: String): org.apache.spark.sql.Column =
+  private def exact(c: String): Column =
     col("`" + c.replace("`", "``") + "`")
 
   /** Per-column profile: `(col_name, n_rows, n_nulls, n_distinct)` — one row
@@ -65,15 +65,10 @@ object Profiling {
       s"histogram: $valueCol must be numeric, is ${df.schema(valueCol).dataType}")
     val v = exact(valueCol).cast("double")
     val clean = df.filter(v.isNotNull && !isnan(v))
-    val mm = clean.agg(min(v), max(v)).head()
-    // all-null / empty input: no observed range, no buckets
-    val base = clean
-    val nonEmpty = if (mm.isNullAt(0)) base.filter(lit(false)) else base
-    val lo = if (mm.isNullAt(0)) 0.0 else mm.getDouble(0)
-    val hi = if (mm.isNullAt(1)) 0.0 else mm.getDouble(1)
-    val w = if (hi > lo) (hi - lo) / bins else 1.0
-    nonEmpty
-      .select(least(lit(bins - 1), floor((v - lit(lo)) / lit(w))).cast("int").as("bin"))
+    // all-null / empty input: no rows to bin, no buckets
+    val (lo, w) = equiWidth(clean, v, bins).getOrElse((0.0, 1.0))
+    clean
+      .select(equiWidthBin(v, lo, w, bins).as("bin"))
       .groupBy("bin").agg(count(lit(1)).as("n"))
       .select(col("bin"), (lit(lo) + col("bin") * lit(w)).as("bin_lo"),
         (lit(lo) + (col("bin") + 1) * lit(w)).as("bin_hi"), col("n"))
@@ -114,14 +109,11 @@ object Profiling {
         .select(v.as("__v"))
     }
     val (r, c) = (clean(ref), clean(cur))
-    val mm = r.agg(min(col("__v")), max(col("__v"))).head()
-    require(!mm.isNullAt(0), s"psiDrift: reference has no non-null '$valueCol' values")
-    val lo = mm.getDouble(0)
-    val hi = mm.getDouble(1)
-    val w = if (hi > lo) (hi - lo) / bins else 1.0
+    val edges = equiWidth(r, col("__v"), bins)
+    require(edges.nonEmpty, s"psiDrift: reference has no non-null '$valueCol' values")
+    val (lo, w) = edges.get
     def counts(df: DataFrame, name: String) = df
-      .select(greatest(lit(0), least(lit(bins - 1),
-        floor((col("__v") - lit(lo)) / lit(w)))).cast("int").as("bin"))
+      .select(equiWidthBin(col("__v"), lo, w, bins).as("bin"))
       .groupBy("bin").agg(count(lit(1)).as(name))
     val spine = ref.sparkSession.range(bins).select(col("id").cast("int").as("bin"))
     val nr = r.agg(count(lit(1)).as("__nr"))
@@ -135,6 +127,26 @@ object Profiling {
       .select(col("bin"), p.as("p_ref"), q.as("p_cur"),
         ((p - q) * log(p / q)).as("psi_contrib"))
   }
+
+  /** Equi-width bin edges of [[histogram]] and [[psiDrift]]: `(lo, w)`
+    * over the observed `[min, max]` of `v` in `df`, with width
+    * `(hi − lo)/bins` (a degenerate range ⇒ width 1); `None` when `df` has
+    * no non-null `v`. The min/max runs EAGERLY: literal edges keep the
+    * grouped count one codegen'd pass. */
+  private def equiWidth(df: DataFrame, v: Column, bins: Int): Option[(Double, Double)] = {
+    val mm = df.agg(min(v), max(v)).head()
+    if (mm.isNullAt(0)) None else {
+      val (lo, hi) = (mm.getDouble(0), mm.getDouble(1))
+      Some((lo, if (hi > lo) (hi - lo) / bins else 1.0))
+    }
+  }
+
+  /** The equi-width bin of `x`: `floor((x − lo)/w)` clamped into
+    * `[0, bins−1]` — the top edge closes (`x = max` lands in the last bin)
+    * and out-of-range values land in the edge bins. [[histogram]] bins the
+    * frame its edges came from, so only its upper clamp can bind. */
+  private def equiWidthBin(x: Column, lo: Double, w: Double, bins: Int): Column =
+    greatest(lit(0), least(lit(bins - 1), floor((x - lit(lo)) / lit(w)))).cast("int")
 
   /**
    * Robust outlier detection via the modified z-score (Iglewicz & Hoaglin
@@ -169,11 +181,11 @@ object Profiling {
     val v = exact(valueCol).cast("double")
     val keys = keyCols.map(exact)
     val med = df.groupBy(keys: _*)
-      .agg(expr(s"percentile(`${valueCol.replace("`", "``")}`, 0.5)").as("__med"))
+      .agg(Sampling.percentileOf(exact(valueCol), lit(0.5)).as("__med"))
     val dev = df.join(broadcast(med), keyCols)
       .withColumn("__dev", abs(v - col("__med")))
     val mad = dev.groupBy(keys: _*)
-      .agg(expr("percentile(__dev, 0.5)").as("__mad"))
+      .agg(Sampling.percentileOf(col("__dev"), lit(0.5)).as("__mad"))
     val z = lit(0.6745) * (v - col("__med")) / col("__mad")
     dev.join(broadcast(mad.filter(col("__mad") > 0.0)), keyCols)
       .withColumn("__z", z)
@@ -249,14 +261,21 @@ object Profiling {
       depth: Int = 4, width: Int = 1024): DataFrame = {
     require(depth >= 1, s"depth must be >= 1: $depth")
     require(width >= 2, s"width must be >= 2: $width")
-    tokens.select(col(tokenCol).as("__t"))
-      .filter(col("__t").isNotNull)
-      .select((Sampling.idHash(col("__t")) % 2147483647L).as("__h"))
-      .select(col("__h"), explode(sequence(lit(0), lit(depth - 1))).as("row"))
-      .groupBy(col("row"),
-        ((col("__h") * (col("row") * 2 + 1) + col("row")) % width).as("bucket"))
+    cmsCells(tokens.select(col(tokenCol).as("__t")).filter(col("__t").isNotNull),
+        depth, width)
+      .groupBy(col("row"), col("bucket"))
       .agg(count(lit(1)).as("cnt"))
   }
+
+  /** The `depth` count-min cells of each `__t` token in `df`: one row per
+    * (token, sketch row) carrying `df`'s columns plus `row` and
+    * `bucket = ((h mod 2^31−1) · (2·row+1) + row) mod width` — the cell rule
+    * [[cmsSketch]] counts and [[probeTop]] looks up. The hash is projected
+    * BEFORE the row explode, so each token pays one md5. */
+  private def cmsCells(df: DataFrame, depth: Int, width: Int): DataFrame =
+    df.withColumn("__h", Sampling.idHash(col("__t")) % 2147483647L)
+      .withColumn("row", explode(sequence(lit(0), lit(depth - 1))))
+      .withColumn("bucket", (col("__h") * (col("row") * 2 + 1) + col("row")) % width)
 
   /**
    * The CMS accuracy probe: exact top-`topK` terms by `(count desc, term)`
@@ -295,11 +314,7 @@ object Profiling {
     // probed term the sketched corpus never saw must estimate 0 over its
     // empty cells — an inner join would drop it (all cells empty) or min
     // over only the collision-occupied subset (a wrong overestimate)
-    top.select(col("__t"), col("exact_count"),
-        (Sampling.idHash(col("__t")) % 2147483647L).as("__h"),
-        explode(sequence(lit(0), lit(depth - 1))).as("row"))
-      .withColumn("bucket",
-        (col("__h") * (col("row") * 2 + 1) + col("row")) % width)
+    cmsCells(top, depth, width)
       .join(sketch, Seq("row", "bucket"), "left_outer")
       .groupBy(col("__t").as("token"), col("exact_count"))
       .agg(min(coalesce(col("cnt"), lit(0L))).as("cms_estimate"))

@@ -7,26 +7,61 @@ import org.apache.spark.sql.functions._
 import graft.ops.Ops.freshName
 
 /**
- * Deterministic sampling operators for training-data pipelines
- * (SURVEY.md §2.12): hash-based fraction sampling and per-group stratified
- * sampling. Unlike `df.sample()` (seeded per-partition RNG — the selection
- * changes with the partitioning, so two runs over differently-split inputs
- * disagree), these select on a content hash of a stable id: the same row set
- * comes back on any cluster, any partitioning, any engine — which is what a
- * reproducible training-data pipeline needs, and what lets the DuckDB oracle
- * verify the selection bit-for-bit.
+ * Deterministic sampling, splitting and quantile operators for
+ * training-data pipelines (SURVEY.md §2.12). Unlike `df.sample()` (seeded
+ * per-partition RNG — the selection changes with the partitioning, so two
+ * runs over differently-split inputs disagree), every selection here keys
+ * on a content hash of a stable id ([[idHash]]): the same rows come back on
+ * any cluster, any partitioning, any engine — which is what a reproducible
+ * training-data pipeline needs, and what lets the DuckDB oracles verify the
+ * selections bit-for-bit.
  *
- * Both are pure per-row maps (fraction) or one window shuffle (stratified);
- * no driver-side state — the plan is identical at 10^3 or 10^9 rows.
+ * The operators share a few formulas, each derived once in this object:
+ *  - the id hash and its parts-per-million draw ([[idHash]], `ppm`) drive
+ *    the per-row selectors — [[hashFraction]], [[weightedFraction]],
+ *    [[assignSplits]], [[temperatureSample]], [[weightedSampleK]] — and the
+ *    `(idHash, id)` order of [[budgetSelect]], [[negativePairs]] and
+ *    [[shuffleToShards]];
+ *  - one two-phase per-stratum top-n serves [[stratified]] and
+ *    [[stratifiedQuotas]];
+ *  - one percentile aggregate (`percentileOf`, exact or sketch) serves
+ *    every quantile operator — [[groupQuantileFilter]], [[winsorize]],
+ *    [[quantileBins]], [[quantileNormalize]], [[groupQuantileBins]] — and
+ *    the medians of [[Profiling.madOutliers]] and
+ *    [[TimeSeries.theilSenTrend]].
+ *
+ * Most operators only build a plan: per-row maps, broadcast joins of
+ * group-cardinality tables and key-partitioned windows, with no driver-side
+ * state, so the plan is the same at 10^3 or 10^9 rows. Four run jobs at
+ * CALL time: [[budgetSelect]] (one small per-bucket weight aggregate),
+ * [[repeatToBudget]] (per-domain totals, then one [[budgetSelect]] per
+ * domain), and [[negativePairs]] and [[shuffleToShards]] (the two ordinal
+ * jobs of [[graft.ops.Ops.globalOrdinals]]).
  */
 object Sampling {
 
   /** 60-bit portable id hash: first 15 hex chars of `md5(CAST(id AS STRING))`
-    * — the same construction as [[Dedup.md5TokenHash]], computable
+    * — the one md5 hash of the package (SimHash's [[Dedup.md5TokenHash]],
+    * the winnowing gram hash, the count-min sketch rows), computable
     * bit-identically in any engine with md5 (DuckDB:
     * `CAST('0x' || substr(md5(CAST(id AS VARCHAR)), 1, 15) AS BIGINT)`). */
   def idHash(id: Column): Column =
     conv(substring(md5(id.cast("string")), 1, 15), 16, 10).cast("long")
+
+  /** The parts-per-million draw `idHash(id) mod 10^6` — the per-row
+    * uniform integer in `[0, 10^6)` that the weighted selectors compare
+    * against a rate, the splits against cumulative ppm thresholds. */
+  private def ppm(id: Column): Column = idHash(id) % 1000000L
+
+  /** The one percentile aggregate of the quantile operators, and the only
+    * reader of their `approx` flag: exact interpolated `percentile`
+    * (≡ DuckDB `quantile_cont`, the form every oracle mirrors) or, with
+    * `approx`, the constant-memory mergeable `percentile_approx` sketch at
+    * accuracy 10000 — the only feasible form when one group holds billions
+    * of rows. `probs` is one probability or an array of them; the result is
+    * a value or an array to match. */
+  private[ext] def percentileOf(c: Column, probs: Column, approx: Boolean = false): Column =
+    if (approx) percentile_approx(c, probs, lit(10000)) else percentile(c, probs)
 
   /** Keep ~`permille`/1000 of rows: `idHash(id) % 1000 < permille`.
     * Deterministic, engine-portable, and composable — the selection of one
@@ -45,7 +80,7 @@ object Sampling {
     * the identical selection. */
   def weightedFraction(df: DataFrame, idCol: String, weightCol: String): DataFrame = {
     val w = least(greatest(col(weightCol).cast("double"), lit(0.0)), lit(1.0))
-    df.filter((idHash(col(idCol)) % 1000000).cast("double") < w * 1000000.0)
+    df.filter(ppm(col(idCol)).cast("double") < w * 1000000.0)
   }
 
   /**
@@ -75,7 +110,7 @@ object Sampling {
       s"assignSplits: column '$splitCol' already exists — pass a free splitCol")
     val cumPpm = splits.map(_._2).scanLeft(0.0)(_ + _).tail
       .map(f => math.round(f * 1000000.0))
-    val b = idHash(col(idCol)) % 1000000L
+    val b = ppm(col(idCol))
     val base = when(col(idCol).isNull, lit(null).cast("string"))
     val chained = splits.map(_._1).zip(cumPpm).init.foldLeft(base) {
       case (acc, (name, hi)) => acc.when(b < hi, lit(name))
@@ -128,15 +163,28 @@ object Sampling {
     * single-window result (pinned by `SamplingSpec`). */
   def stratified(df: DataFrame, groupCol: String, idCol: String, n: Int): DataFrame = {
     require(n > 0, s"sample size must be positive: $n")
+    topPerStratum(df, groupCol, idCol, n, lit(n), df.columns.toIndexedSeq)
+  }
+
+  /** The two-phase per-stratum top-n of [[stratified]] and
+    * [[stratifiedQuotas]]: keep each row whose `(idHash, id)` rank within
+    * its `groupCol` stratum is at most its `quota` (a column, or `lit(n)`
+    * for one quota everywhere), then project `cols`. Phase 1 ranks within
+    * `(stratum, spark_partition_id())` and also caps the rank at the
+    * literal `n` ≥ every quota; phase 2 ranks the phase-1 survivors (the
+    * [[stratified]] contract). */
+  private def topPerStratum(df: DataFrame, groupCol: String, idCol: String, n: Int,
+      quota: Column, cols: Seq[String]): DataFrame = {
     val h = idHash(col(idCol))
     val rn = freshName(df.columns.toSet, "__rn")
     val pid = freshName(df.columns.toSet, "__pid")
     val wLocal = Window.partitionBy(col(groupCol), col(pid)).orderBy(h, col(idCol))
     val pruned = df.withColumn(pid, spark_partition_id())
       .withColumn(rn, row_number().over(wLocal))
-      .filter(col(rn) <= n).drop(pid, rn)
+      .filter(col(rn) <= n && col(rn) <= quota).drop(pid, rn)
     val wGlobal = Window.partitionBy(col(groupCol)).orderBy(h, col(idCol))
-    pruned.withColumn(rn, row_number().over(wGlobal)).filter(col(rn) <= n).drop(rn)
+    pruned.withColumn(rn, row_number().over(wGlobal)).filter(col(rn) <= quota)
+      .select(cols.map(col): _*)
   }
 
   /** Domain mixing: per-stratum quotas (e.g. `Map("en" -> 3_000_000,
@@ -154,21 +202,10 @@ object Sampling {
     quotas.foreach { case (k, v) => require(v > 0, s"quota for stratum '$k' must be positive: $v") }
     val spark = df.sparkSession
     import spark.implicits._
-    val maxQ = quotas.values.max
     val q = freshName(df.columns.toSet, "__quota")
     val qdf = quotas.toSeq.toDF(groupCol, q)
-    val joined = df.join(broadcast(qdf), groupCol)
-    val h = idHash(col(idCol))
-    val rn = freshName(joined.columns.toSet, "__rn")
-    val pid = freshName(joined.columns.toSet, "__pid")
-    val wLocal = Window.partitionBy(col(groupCol), col(pid)).orderBy(h, col(idCol))
-    val pruned = joined.withColumn(pid, spark_partition_id())
-      .withColumn(rn, row_number().over(wLocal))
-      .filter(col(rn) <= lit(maxQ) && col(rn) <= col(q)).drop(pid, rn)
-    val wGlobal = Window.partitionBy(col(groupCol)).orderBy(h, col(idCol))
-    pruned.withColumn(rn, row_number().over(wGlobal))
-      .filter(col(rn) <= col(q))
-      .select(df.columns.toIndexedSeq.map(col): _*) // original schema & order
+    topPerStratum(df.join(broadcast(qdf), groupCol), groupCol, idCol,
+      quotas.values.max, col(q), df.columns.toIndexedSeq) // original schema & order
   }
 
   /** Budget-capped selection — THE training-corpus assembly primitive: walk
@@ -295,10 +332,9 @@ object Sampling {
   def groupQuantileFilter(df: DataFrame, groupCol: String, scoreCol: String,
       q: Double, approx: Boolean = false): DataFrame = {
     require(q >= 0.0 && q <= 1.0, s"quantile out of range: $q")
-    val thrFn = if (approx) s"percentile_approx(`$scoreCol`, $q, 10000)"
-                else s"percentile(`$scoreCol`, $q)"
     val thr = freshName(df.columns.toSet, "__thr")
-    val thresholds = df.groupBy(col(groupCol)).agg(expr(thrFn).as(thr))
+    val thresholds = df.groupBy(col(groupCol))
+      .agg(percentileOf(col(scoreCol), lit(q), approx).as(thr))
     df.join(broadcast(thresholds), Seq(groupCol))
       .filter(col(scoreCol) >= col(thr))
       .select(df.columns.toIndexedSeq.map(col): _*)
@@ -316,10 +352,12 @@ object Sampling {
    *
    * Scale shape: one exact-percentile aggregation per group (the
    * [[groupQuantileFilter]] contract — group-cardinality output) broadcast
-   * back onto the rows; the clamp itself is a pure codegen'd projection.
-   * NULL values pass through unclamped (`NULL` in, `NULL` out, not
-   * clipped); `approx` switches to `percentile_approx` for the
-   * constant-memory path at extreme group cardinalities.
+   * back onto the rows by a LEFT join; the clamp itself is a pure
+   * codegen'd projection. NULL values pass through unclamped (`NULL` in,
+   * `NULL` out, not clipped). A row with no band — its group is NULL, or
+   * every value of its group is NULL — is kept with `<outCol>` NULL and
+   * `<outCol>_clipped` false. `approx` switches to `percentile_approx` for
+   * the constant-memory path at extreme group cardinalities.
    */
   def winsorize(df: DataFrame, groupCol: String, valueCol: String,
       loQ: Double = 0.01, hiQ: Double = 0.99, approx: Boolean = false,
@@ -328,22 +366,21 @@ object Sampling {
       s"need 0 <= loQ < hiQ <= 1: [$loQ, $hiQ]")
     require(!df.columns.contains(outCol) && !df.columns.contains(outCol + "_clipped"),
       s"output column '$outCol'(_clipped) already exists on the input frame")
-    def thrFn(q: Double) = if (approx)
-      s"percentile_approx(`$valueCol`, $q, 10000)"
-    else s"percentile(`$valueCol`, $q)"
     val lo = freshName(df.columns.toSet, "__wlo")
     val hi = freshName(df.columns.toSet, "__whi")
     val thresholds = df.filter(col(valueCol).isNotNull)
       .groupBy(col(groupCol))
-      .agg(expr(thrFn(loQ)).as(lo), expr(thrFn(hiQ)).as(hi))
+      .agg(percentileOf(col(valueCol), lit(loQ), approx).as(lo),
+        percentileOf(col(valueCol), lit(hiQ), approx).as(hi))
     val v = col(valueCol).cast("double")
-    df.join(broadcast(thresholds), Seq(groupCol))
-      // explicit NULL guard: least/greatest SKIP nulls in both engines, so
-      // without it a NULL value would silently "clamp" to the lo threshold
-      .withColumn(outCol,
-        when(v.isNotNull, round(least(greatest(v, col(lo)), col(hi)), 6)))
+    // explicit guard: least/greatest SKIP nulls in both engines, so without
+    // it a NULL value would silently "clamp" to the lo threshold, and a row
+    // without a band would pass through as if clamped
+    val banded = v.isNotNull && col(lo).isNotNull
+    df.join(broadcast(thresholds), Seq(groupCol), "left")
+      .withColumn(outCol, when(banded, round(least(greatest(v, col(lo)), col(hi)), 6)))
       .withColumn(outCol + "_clipped",
-        when(v.isNotNull, v < col(lo) || v > col(hi)).otherwise(lit(false)))
+        when(banded, v < col(lo) || v > col(hi)).otherwise(lit(false)))
       .drop(lo, hi)
   }
 
@@ -409,19 +446,26 @@ object Sampling {
    */
   def quantileBins(df: DataFrame, valueCol: String, k: Int, binCol: String = "bin",
       approx: Boolean = false): DataFrame = {
-    require(k >= 2, s"need at least 2 bins: $k")
-    val probs = (1 until k).map(i => i.toDouble / k)
-    val thrFn = if (approx)
-      s"percentile_approx(`$valueCol`, array(${probs.mkString(",")}), 10000)"
-    else s"percentile(`$valueCol`, array(${probs.mkString(",")}))"
     val thr = freshName(df.columns.toSet, "__qthr")
-    val thresholds = df.agg(expr(thrFn).as(thr))
-    val binExpr = probs.indices
-      .map(i => when(col(valueCol) > element_at(col(thr), i + 1), 1).otherwise(0))
-      .reduce(_ + _) + lit(1)
-    df.crossJoin(broadcast(thresholds))
-      .withColumn(binCol, when(col(valueCol).isNull, lit(null)).otherwise(binExpr))
+    val (thresholds, bin) = thresholdBin(col(valueCol), k, thr, approx)
+    df.crossJoin(broadcast(df.agg(thresholds)))
+      .withColumn(binCol, bin)
       .drop(thr)
+  }
+
+  /** The equal-frequency bin rule of [[quantileBins]] and
+    * [[groupQuantileBins]]: the threshold aggregate (named `thr`: the
+    * `k−1` percentiles `i/k` of `v` in one array) and the bin over it,
+    * `1 + #{thresholds strictly below v}` as a codegen-friendly sum of
+    * `when`s — NULL when `v` or the thresholds are NULL. */
+  private def thresholdBin(v: Column, k: Int, thr: String,
+      approx: Boolean): (Column, Column) = {
+    require(k >= 2, s"need at least 2 bins: $k")
+    val probs = (1 until k).map(i => lit(i.toDouble / k))
+    val bin = (1 until k).map(i => when(v > element_at(col(thr), i), 1).otherwise(0))
+      .reduce(_ + _) + lit(1)
+    (percentileOf(v, array(probs: _*), approx).as(thr),
+      when(v.isNull || col(thr).isNull, lit(null)).otherwise(bin))
   }
 
   /**
@@ -459,17 +503,14 @@ object Sampling {
     require(gridK >= 2, s"need at least 2 grid intervals: $gridK")
     require(!df.columns.contains(outCol),
       s"input already has a '$outCol' column — pass a free outCol")
-    val probs = (0 to gridK).map(i => i.toDouble / gridK)
-    val gridFn = if (approx)
-      s"percentile_approx(`$valueCol`, array(${probs.mkString(",")}), 10000)"
-    else s"percentile(`$valueCol`, array(${probs.mkString(",")}))"
+    val probs = (0 to gridK).map(i => lit(i.toDouble / gridK))
     // cached: the filtered corpus is consumed three times (grid
     // aggregation, the (group, value) count aggregation, and the join-back
     // probe side) — the bigramSurprisal multi-consumer convention
     val base = Caches.track(
       df.filter(col(groupCol).isNotNull && col(valueCol).isNotNull))
     val grid = freshName(df.columns.toSet, "__qngrid")
-    val gridRow = base.agg(expr(gridFn).as(grid))
+    val gridRow = base.agg(percentileOf(col(valueCol), array(probs: _*), approx).as(grid))
     val c = freshName(df.columns.toSet, "__qnc")
     val cum = freshName(df.columns.toSet, "__qncum")
     val n = freshName(df.columns.toSet, "__qnn")
@@ -516,19 +557,10 @@ object Sampling {
    */
   def groupQuantileBins(df: DataFrame, groupCol: String, valueCol: String, k: Int,
       binCol: String = "bin", approx: Boolean = false): DataFrame = {
-    require(k >= 2, s"need at least 2 bins: $k")
-    val probs = (1 until k).map(i => i.toDouble / k)
-    val thrFn = if (approx)
-      s"percentile_approx(`$valueCol`, array(${probs.mkString(",")}), 10000)"
-    else s"percentile(`$valueCol`, array(${probs.mkString(",")}))"
     val thr = freshName(df.columns.toSet, "__gqthr")
-    val thresholds = df.groupBy(col(groupCol)).agg(expr(thrFn).as(thr))
-    val binExpr = probs.indices
-      .map(i => when(col(valueCol) > element_at(col(thr), i + 1), 1).otherwise(0))
-      .reduce(_ + _) + lit(1)
-    df.join(broadcast(thresholds), Seq(groupCol), "left")
-      .withColumn(binCol,
-        when(col(valueCol).isNull || col(thr).isNull, lit(null)).otherwise(binExpr))
+    val (thresholds, bin) = thresholdBin(col(valueCol), k, thr, approx)
+    df.join(broadcast(df.groupBy(col(groupCol)).agg(thresholds)), Seq(groupCol), "left")
+      .withColumn(binCol, bin)
       .drop(thr)
   }
 
@@ -571,7 +603,7 @@ object Sampling {
         least(lit(1.0), (lit(budget.toDouble) * col("__w")) / (col("__s") * nD))
           .as(rate))
     df.join(broadcast(rates), Seq(domainCol))
-      .filter((idHash(col(idCol)) % 1000000L).cast("double") < col(rate) * 1000000.0)
+      .filter(ppm(col(idCol)).cast("double") < col(rate) * 1000000.0)
       .select(df.columns.toIndexedSeq.map(col): _*)
   }
 
@@ -605,7 +637,7 @@ object Sampling {
       k: Int): DataFrame = {
     require(k > 0, s"k must be positive: $k")
     val key = freshName(df.columns.toSet, "__eskey")
-    val u = (idHash(col(idCol)) % 1000000L + lit(0.5)) / lit(1000000.0)
+    val u = (ppm(col(idCol)) + lit(0.5)) / lit(1000000.0)
     df.filter(col(idCol).isNotNull && col(weightCol).cast("double") > 0.0 &&
         !isnan(col(weightCol).cast("double")))
       .withColumn(key, round(log(u) / col(weightCol).cast("double"), 9))

@@ -773,7 +773,7 @@ object TextAnalysis {
    * whole-doc signature ([[fingerprint]]).
    *
    * Portability contract: the gram hash is the 60-bit md5 form
-   * ([[Dedup.md5TokenHash]] applied to the ``-joined gram string),
+   * ([[Sampling.idHash]] applied to the ``-joined gram string),
    * and tie-breaking rides a `(hash, −pos)` struct min — both
    * reproducible bit-identically in SQL, so the gate hashes the full
    * selection. Docs with fewer than `k` tokens (including NULL text)
@@ -791,9 +791,8 @@ object TextAnalysis {
     require(window >= 1, s"winnowing window must be positive: $window")
     import org.apache.spark.sql.expressions.Window
     val t = tokens(col(textCol))
-    val gram = (i: Column) => conv(substring(md5(concat_ws("\u0001",
-      (0 until k).map(j => element_at(col("__tk"), i + lit(j + 1))): _*)), 1, 15), 16, 10)
-      .cast("long")
+    val gram = (i: Column) => Sampling.idHash(concat_ws("\u0001",
+      (0 until k).map(j => element_at(col("__tk"), i + lit(j + 1))): _*))
     // materialized BEFORE the explode: Generate re-evaluates its child per
     // emitted element, so an inline HOF-built array re-runs every gram's md5
     // per output row (the decontaminate/IVF deferred-eval trap)

@@ -165,23 +165,18 @@ object TimeSeries {
     require(minBaseline >= 2 && minBaseline <= windowDays,
       s"minBaseline must be in [2, windowDays]: $minBaseline")
     require(zThreshold > 0, s"zThreshold must be positive: $zThreshold")
-    val daily = events.groupBy(col(keyCol),
-        date_trunc("DAY", col(tsCol)).cast("timestamp_ntz").as("day"))
-      .agg(count(lit(1)).as("__c"))
-    val dense = dailyGridFill(daily, keyCol, "day", Nil)
-      .withColumn("__c", coalesce(col("__c"), lit(0L)))
     val w = Window.partitionBy(keyCol).orderBy(col("day"))
       .rowsBetween(-windowDays, -1)
-    val staged = dense
+    val staged = zeroFilledDailyCounts(events, keyCol, tsCol)
       .withColumn("__n", count(lit(1)).over(w))
-      .withColumn("__sx", sum(col("__c")).over(w))
-      .withColumn("__sxx", sum(col("__c") * col("__c")).over(w))
+      .withColumn("__sx", sum(col("__x")).over(w))
+      .withColumn("__sxx", sum(col("__x") * col("__x")).over(w))
     val mean = col("__sx").cast("double") / col("__n").cast("double")
     val varN = (col("__n") * col("__sxx") - col("__sx") * col("__sx"))
       .cast("double") / (col("__n") * col("__n")).cast("double")
-    val z = (col("__c").cast("double") - mean) / sqrt(varN)
+    val z = (col("__x").cast("double") - mean) / sqrt(varN)
     val ok = col("__n") >= minBaseline && varN > 0.0
-    staged.select(col(keyCol), col("day"), col("__c").as("n_events"),
+    staged.select(col(keyCol), col("day"), col("__x").as("n_events"),
       col("__n").as("baseline_days"),
       when(col("__n") > 0, round(mean, 6)).as("baseline_mean"),
       when(ok, round(sqrt(varN), 6)).as("baseline_std"),
@@ -191,7 +186,8 @@ object TimeSeries {
 
   /** Per-key daily event counts on the dense day grid with gap days as
     * REAL zero-count days — the shared prelude of every volume-series
-    * operator here ([[cusumShift]], [[theilSenTrend]]): a dead feed must
+    * operator here ([[rollingVolumeAnomaly]], [[cusumShift]],
+    * [[theilSenTrend]]): a dead feed must
     * DRAIN a chart, not freeze it. Day keys are day-truncated
     * micros-NTZ (the gate representation contract). */
   private def zeroFilledDailyCounts(events: DataFrame, keyCol: String,
@@ -243,7 +239,7 @@ object TimeSeries {
           (col("__dj") - col("__di")).cast("double")).as("__s"))
       .groupBy(keyCol)
       .agg(count(lit(1)).as("n_pairs"),
-        round(expr("percentile(__s, 0.5)"), 6).as("slope"))
+        round(Sampling.percentileOf(col("__s"), lit(0.5)), 6).as("slope"))
   }
 
   /**

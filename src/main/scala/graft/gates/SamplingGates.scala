@@ -366,18 +366,20 @@ object SamplingGates {
         .select(col("doc_id"), col("lang"), col("n_chars"),
           col("winsorized"), col("winsorized_clipped"))),
       // same per-group quantile_cont thresholds, same clamp and clipped flag
-      // (the raw comparison, not the rounded value); NULL values pass through
+      // (the raw comparison, not the rounded value); NULL values pass through,
+      // and a row with no band (NULL lang, or no non-NULL value in its lang)
+      // is kept unclamped-NULL and not clipped
       """WITH thr AS (SELECT lang, quantile_cont(n_chars, 0.05) AS lo,
         |                    quantile_cont(n_chars, 0.95) AS hi
         |               FROM documents WHERE n_chars IS NOT NULL GROUP BY lang)
         |SELECT doc_id, d.lang, n_chars,
-        |       CASE WHEN n_chars IS NOT NULL
+        |       CASE WHEN n_chars IS NOT NULL AND lo IS NOT NULL
         |            THEN round(least(greatest(CAST(n_chars AS DOUBLE), lo), hi), 6)
         |       END AS winsorized,
-        |       CASE WHEN n_chars IS NOT NULL
+        |       CASE WHEN n_chars IS NOT NULL AND lo IS NOT NULL
         |            THEN CAST(n_chars AS DOUBLE) < lo OR CAST(n_chars AS DOUBLE) > hi
         |            ELSE FALSE END AS winsorized_clipped
-        |  FROM documents d JOIN thr ON d.lang = thr.lang""".stripMargin),
+        |  FROM documents d LEFT JOIN thr ON d.lang = thr.lang""".stripMargin),
     // UniMax budget waterfall (Chung et al. 2023): budget 700 docs, 2-epoch
     // cap — at the sf0.01 distribution the two smallest languages take full
     // capacity and the rest sit at the common waterline, so both branches

@@ -50,7 +50,7 @@ class CachesSpec extends AnyFunSuite {
       val before = sc.getPersistentRDDs.keySet
       run
       Dedup.unpersistAll()
-      (sc.getPersistentRDDs.keySet -- before).size
+      (sc.getPersistentRDDs.keySet.toSet -- before).size
     }
     // c is dangling (the rank loops run their mass job); d reaches a, b, c
     val edges = Seq(("a", "b", 3.0), ("a", "c", 1.0), ("b", "a", 1.0),

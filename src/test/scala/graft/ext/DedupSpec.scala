@@ -233,7 +233,7 @@ class DedupSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterEach {
       Dedup.appendToLshIndex(store, idx, keyed, "doc_id", "text", Some("b2")))
     assert(replayJobs == 0, s"a committed replay ran $replayJobs jobs")
     Dedup.unpersistAll()
-    assert((spark.sparkContext.getPersistentRDDs.keySet -- persistedBefore).isEmpty,
+    assert((spark.sparkContext.getPersistentRDDs.keySet.toSet -- persistedBefore).isEmpty,
       "the append's checkpoint outlived unpersistAll")
     // the grown index holds exactly what a fresh build over its inputs does
     val fresh = new graft.store.TableStore(ns, TestSpark.tempDir("graft-lsh-once-ref").toString)

@@ -420,4 +420,51 @@ class SamplingSpec extends AnyFunSuite {
       Sampling.winsorize(df.withColumnRenamed("v", "winsorized"),
         "grp", "winsorized"))
   }
+
+  test("winsorize keeps rows without a band: NULL group, all-NULL group") {
+    // group "n" holds only NULL values (no threshold row), and one row has a
+    // NULL group (it matches no threshold row): both are kept, unclamped
+    // NULL and not clipped, beside the banded group's clamped rows
+    val df = Seq((Some("g"), Some(1.0)), (Some("g"), Some(5.0)), (Some("g"), Some(9.0)),
+        (Some("n"), None), (Some("n"), None), (None, Some(3.0)))
+      .toDF("grp", "v")
+    val out = Sampling.winsorize(df, "grp", "v", loQ = 0.25, hiQ = 0.75)
+      .as[(Option[String], Option[Double], Option[Double], Boolean)].collect()
+      .sortBy(r => (r._1.getOrElse(""), r._2.getOrElse(-1.0))).toSeq
+    assert(out == Seq(
+      (None, Some(3.0), None, false),
+      (Some("g"), Some(1.0), Some(3.0), true),
+      (Some("g"), Some(5.0), Some(5.0), false),
+      (Some("g"), Some(9.0), Some(7.0), true),
+      (Some("n"), None, None, false),
+      (Some("n"), None, None, false)))
+  }
+
+  test("approx quantile operators equal the exact ones when every quantile is observed") {
+    // two groups of the 11 distinct values 0..10: every per-group quantile
+    // i/10 is (n−1)·q = i, an observed value, and so is every global one
+    // (position 2.1·i over the 22 sorted values falls between two equal
+    // values) — the sketch then has no error to show
+    val df = (for (g <- Seq("a", "b"); v <- 0 to 10) yield (g, v.toDouble, s"$g$v"))
+      .toDF("g", "v", "id")
+    def rows(f: Boolean => org.apache.spark.sql.DataFrame) = {
+      val Seq(exact, approx) = Seq(false, true).map(a =>
+        f(a).orderBy("id").collect().toSeq)
+      assert(exact.nonEmpty)
+      assert(approx == exact)
+    }
+    rows(a => Sampling.winsorize(df, "g", "v", loQ = 0.1, hiQ = 0.9, approx = a))
+    rows(a => Sampling.quantileNormalize(df, "g", "v", gridK = 10, approx = a))
+    rows(a => Sampling.groupQuantileBins(df, "g", "v", 10, approx = a))
+    // and the exact answers are the observed values themselves
+    assert(Sampling.winsorize(df, "g", "v", loQ = 0.1, hiQ = 0.9, approx = true)
+      .filter($"g" === "a").orderBy("v").select("winsorized").as[Double].collect().toSeq ==
+      Seq(1.0, 1.0, 2.0, 3.0, 4.0, 5.0, 6.0, 7.0, 8.0, 9.0, 9.0))
+    assert(Sampling.groupQuantileBins(df, "g", "v", 10, approx = true)
+      .filter($"g" === "b").orderBy("v").select("bin").as[Int].collect().toSeq ==
+      Seq(1, 1, 2, 3, 4, 5, 6, 7, 8, 9, 10))
+    assert(Sampling.quantileNormalize(df, "g", "v", gridK = 10, approx = true)
+      .filter($"g" === "a").orderBy("v").select("calibrated").as[Double].collect().toSeq ==
+      (0 to 10).map(_.toDouble))
+  }
 }

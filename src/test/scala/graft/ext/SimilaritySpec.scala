@@ -652,7 +652,7 @@ class SimilaritySpec extends AnyFunSuite with org.scalatest.BeforeAndAfterEach {
       val (_, scans) = TestSpark.jobsScanning(path) { out = Some(run) }
       Dedup.unpersistAll()
       assert(scans <= 1, s"$op scanned its input in $scans jobs")
-      assert((spark.sparkContext.getPersistentRDDs.keySet -- persistedBefore).isEmpty,
+      assert((spark.sparkContext.getPersistentRDDs.keySet.toSet -- persistedBefore).isEmpty,
         s"$op left persisted RDDs after unpersistAll")
       out.get
     }

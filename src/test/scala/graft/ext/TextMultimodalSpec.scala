@@ -336,6 +336,37 @@ class TextMultimodalSpec extends AnyFunSuite {
     assert(viaInf == 0.0, s"non-finite rows must drop out cleanly: $viaInf")
   }
 
+  test("Profiling.histogram and psiDrift: bins pinned on NaN and ±Infinity input") {
+    def hist(xs: Double*) = Profiling.histogram(xs.toDF("x"), "x", 4)
+      .as[(Int, Double, Double, Long)].collect().sortBy(_._1).toSeq
+    // NaN rows drop out; an infinite bound makes the width infinite, so
+    // every value floors to bin 0 (∞/∞ is NaN, which floors to 0) and the
+    // edges lo + 0·∞ come out NaN
+    val pos = hist(0.0, 5.0, 10.0, Double.PositiveInfinity, Double.NaN)
+    assert(pos.map(h => (h._1, h._4)) == Seq((0, 4L)))
+    assert(pos.head._2.isNaN && pos.head._3 == Double.PositiveInfinity)
+    val neg = hist(Double.NegativeInfinity, 0.0, 5.0, 10.0, Double.NaN)
+    assert(neg.map(h => (h._1, h._4)) == Seq((0, 4L)))
+    assert(neg.head._2.isNaN && neg.head._3.isNaN)
+    // finite values below zero bin from their own minimum: the lower clamp
+    // never binds on the frame the edges came from
+    assert(hist(-7.5, -2.5, 0.0, 2.5, Double.NaN) ==
+      Seq((0, -7.5, -5.0, 1L), (2, -2.5, 0.0, 1L), (3, 0.0, 2.5, 2L)))
+    // psiDrift: non-finite values on either side move neither the edges
+    // nor any count; out-of-range current values clamp into the edge bins
+    val nonFinite = Seq(Double.PositiveInfinity, Double.NegativeInfinity, Double.NaN)
+    val ref = ((0 until 10).map(_.toDouble) ++ nonFinite).toDF("value")
+    val cur = (Seq(0.0, 4.5, 9.0, 20.0, -5.0) ++ nonFinite).toDF("value")
+    val got = Profiling.psiDrift(ref, cur, "value", 3)
+      .as[(Int, Double, Double, Double)].collect().sortBy(_._1).toSeq
+    // ref edges [0, 9], width 3: ref counts 3/3/4 (9 closes the top bin);
+    // cur 0 and −5 → bin 0, 4.5 → bin 1, 9 and 20 → bin 2
+    val pRef = Seq(3L, 3L, 4L).map(c => (c + 0.5) / (10 + 0.5 * 3))
+    val pCur = Seq(2L, 1L, 2L).map(c => (c + 0.5) / (5 + 0.5 * 3))
+    assert(got.map(_._1) == Seq(0, 1, 2))
+    assert(got.map(_._2) == pRef && got.map(_._3) == pCur)
+  }
+
   test("Profiling.madOutliers: flags by modified z-score; stddev masking resisted; mad=0 groups drop") {
     // group g: 19 values tightly around 10 plus one wild point. Interpolated
     // med = 11, MAD = 1 -> the 100 scores 0.6745*89/1 = 60.0, everything
